@@ -52,9 +52,8 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
   def versions(): Seq[Long] = {
     val p = new Path(s"$basePath/manifests")
     if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-      .sorted.toSeq
+    else fs.listStatus(p).toSeq.flatMap(s => SnapshotStore.versionOf(s.getPath.getName))
+      .sorted
   }
 
   def manifest(version: Long): DataFrame =

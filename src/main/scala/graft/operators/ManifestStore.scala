@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetSchemas
 
 /** Manifest-based versioned snapshot store — the 100 TB scale path for
   * version publication, next to [[SnapshotStore]]'s dir-per-version
@@ -59,7 +60,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   private def statsFor(names: Seq[String], cols: Seq[String] = statsCols): DataFrame = {
     val paths = names.map(n => new Path(poolDir, n).toString)
     val aggs = statAggs(cols)
-    val base = spark.read.parquet(paths: _*)
+    val base = ParquetSchemas.readFiles(spark, paths)
       .select((input_file_name().as("__f") +: col(keyCol) +: cols.map(col)): _*)
       .groupBy("__f").agg(aggs.head, aggs.tail: _*)
       // manifests store bare pool file NAMES (relocatable repository —
@@ -282,8 +283,8 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
       evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
       op = "replaceWhere")
-    val nShared = shared.count().toInt
-    (nShared, man.count().toInt - nShared, stats.fold(0L)(_.count()).toInt)
+    val nShared = manifestFiles(shared).size
+    (nShared, manifestFiles(man).size - nShared, stats.fold(0)(manifestFiles(_).size))
   }
 
   /** METADATA-ONLY partition drop — the retention verb a date-
@@ -315,7 +316,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       else evolvedSchema(fromVersion)
     publish(toVersion, shared, commitTs, schema, dv = carryDv(fromVersion, shared),
       op = "dropPartitions", opParams = SnapshotStore.predSql(pred))
-    (shared.count().toInt, dropped.count().toInt, rowsDropped)
+    (manifestFiles(shared).size, dropped.count().toInt, rowsDropped)
   }
 
   /** Publish `version` as an EMPTY table of `schema` — zero pool
@@ -377,12 +378,21 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val names = landInPool(sc.map(SnapshotStore.toPhysical(df, _)).getOrElse(df))
     if (names.isEmpty) None
     else {
-      val stats = statsFor(names, cols).materialize()
-      val live = stats.select("file").collect().map(_.getString(0)).toSet
+      val stats = localFrame(statsFor(names, cols))
+      val live = manifestFiles(stats).toSet
       names.filterNot(live).foreach(n => fs.delete(new Path(poolDir, n), false))
       if (live.isEmpty) None else Some(stats)
     }
   }
+
+  /** A metadata-sized frame collected once and served as a local
+    * relation (filters and collects over it run no job). */
+  private def localFrame(df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** The pool file names a manifest-shaped frame lists. */
+  private def manifestFiles(man: DataFrame): Seq[String] =
+    man.select("file").collect().map(_.getString(0)).toSeq
 
   /** Write a frame's part-files into the shared pool under fresh
     * unique names; returns the pool names.
@@ -519,13 +529,20 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       metrics: Map[String, Long] = Map.empty): Unit = {
     ensureStoreMeta()
     val tmp = new Path(s"$basePath/.tmp-man-${java.util.UUID.randomUUID()}")
-    manifest.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    // the manifest is metadata-sized: collected ONCE, its rows write
+    // the version, seed the manifest cache and build the history entry
+    // (no re-read of what was just written)
+    val rows = manifest.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), manifest.schema)
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val written = fs.listStatus(tmp).toSeq
     // the deletion vector publishes atomically WITH the version — a
     // version dir can never exist whose mask is missing or stale
     dv.foreach(_.select(col("file"), col("pos")).coalesce(1)
       .write.mode("overwrite").parquet(new Path(tmp, "_dv").toString))
+    val ts = commitTs.getOrElse(System.currentTimeMillis())
     val out = fs.create(new Path(tmp, "_commit_ts"), true)
-    try out.write(commitTs.getOrElse(System.currentTimeMillis()).toString.getBytes("UTF-8"))
+    try out.write(ts.toString.getBytes("UTF-8"))
     finally out.close()
     schema.foreach { sc =>
       val o = fs.create(new Path(tmp, "_schema.json"), true)
@@ -541,7 +558,8 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val token = CommitProtocol.writeToken(fs, tmp)
     CommitProtocol.publish(fs, tmp, manifestDir(version), token,
       s"publish of v$version on $basePath")
-    noteCommit(version, op, opParams, statsFrom, metrics)
+    ManifestCache.seed(basePath, version, written, manifest.schema, rows)
+    noteCommit(version, ts, rows, op, opParams, statsFrom, metrics)
   }
 
   /** Persist the construction contract (key column) in `_store.json`
@@ -806,18 +824,21 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     historyEntries().map { case (v, e) => (v, e.bytes, e.nRows, e.op) }
 
   /** One version's checkpoint row rebuilt from its manifest — the
-    * self-heal / publish-time unit (see [[SnapshotStore]]'s
-    * version-log checkpoint notes; the manifest is metadata-sized, so
-    * the agg is one tiny single-file job). */
+    * self-heal unit (see [[SnapshotStore]]'s version-log checkpoint
+    * notes). The manifest is metadata-sized and cache-served, so the
+    * counts come from its collected rows. */
   private def computeHistoryEntry(v: Long): SnapshotStore.HistoryEntry = {
-    // coalesce: an empty version ([[createEmpty]], all-row delete)
-    // sums a zero-row manifest — 0 rows, not a null
-    val m = manifest(v).agg(count(lit(1)).as("f"),
-      coalesce(sum(col("n_rows")), lit(0L)).as("r")).head()
     val (op, params, metrics) = SnapshotStore.readOpSidecar(fs, manifestDir(v))
-    SnapshotStore.HistoryEntry(commitTsOf(v), m.getLong(0), m.getLong(1),
-      commitBytesRaw(v), op, params, metrics)
+    historyEntryOf(v, commitTsOf(v), manifest(v).collect(), op, params, metrics)
   }
+
+  /** A version's checkpoint row from its manifest rows; an empty
+    * version ([[createEmpty]], all-row delete) counts 0 rows. */
+  private def historyEntryOf(v: Long, ts: Long, rows: Array[org.apache.spark.sql.Row],
+      op: String, params: String, metrics: Map[String, Long]): SnapshotStore.HistoryEntry =
+    SnapshotStore.HistoryEntry(ts, rows.length.toLong,
+      rows.map(r => Option(r.getAs[java.lang.Long]("n_rows")).fold(0L)(_.longValue)).sum,
+      commitBytesOf(v, rows.map(_.getAs[String]("file")).toSet), op, params, metrics)
 
   /** The VERSION-LOG CHECKPOINT, served and self-healed —
     * [[SnapshotStore.historyEntries]]'s linked twin: warm path = ONE
@@ -830,26 +851,31 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     if (missing.isEmpty) vs.map(v => v -> live(v))
     else {
       val merged = live ++ missing.map(v => v -> computeHistoryEntry(v))
-      SnapshotStore.writeHistoryCkpt(fs, basePath, merged)
+      SnapshotStore.rewriteHistoryCkpt("ManifestStore", fs, basePath, merged)
       vs.map(v => v -> merged(v))
     }
   }
 
-  private def noteCommit(v: Long, op: String = "unknown",
-      opParams: String = "", statsFrom: Option[Long] = None,
-      metrics: Map[String, Long] = Map.empty): Unit =
+  /** Incremental checkpoint maintenance, one entry per publish, built
+    * from the rows the publish just wrote. Best-effort: the checkpoint
+    * is derived, so a failed update is logged and self-heals on the
+    * next read; the commit stays published. */
+  private def noteCommit(v: Long, ts: Long, rows: Array[org.apache.spark.sql.Row],
+      op: String, opParams: String, statsFrom: Option[Long],
+      metrics: Map[String, Long]): Unit =
     try {
       val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
       // metadata-only commits (rename/widen/branch/restore — manifest
       // carried verbatim) reuse the predecessor's checkpoint stats:
-      // no manifest agg job, bytes_added = 0 (no new pool basenames)
+      // bytes_added = 0 (no new pool basenames)
       val entry = statsFrom.flatMap(ckpt.get) match {
-        case Some(prev) => prev.copy(commitTs = commitTsOf(v),
+        case Some(prev) => prev.copy(commitTs = ts,
           bytes = 0L, op = op, opParams = opParams, metrics = metrics)
-        case None => computeHistoryEntry(v)
+        case None => historyEntryOf(v, ts, rows, op, opParams, metrics)
       }
       SnapshotStore.writeHistoryCkpt(fs, basePath, ckpt + (v -> entry))
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) =>
+      SnapshotStore.checkpointUpdateFailed("ManifestStore", basePath, v, e) }
 
   private def invalidateHistoryCkpt(): Unit =
     try fs.delete(new Path(basePath, "_history.json"), false): Unit
@@ -890,7 +916,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         val df = SnapshotStore.toLogical(
           spark.read.schema(SnapshotStore.physicalSchema(sc)).parquet(paths: _*), sc)
         if (fills.isEmpty) df else df.na.fill(fills)
-      case None => spark.read.parquet(paths: _*)
+      case None => ParquetSchemas.readFiles(spark, paths)
     }
 
   private def dvDir(v: Long) = new Path(manifestDir(v), "_dv")
@@ -903,7 +929,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   def dvFrame(version: Long): Option[DataFrame] = {
     val p = dvDir(version)
     if (!fs.exists(new Path(p, "_SUCCESS"))) None
-    else Some(spark.read.parquet(p.toString))
+    else Some(spark.read.schema(SnapshotStore.dvSchema).parquet(p.toString))
   }
 
   /** Rows `version` SERVES after its mask — [[SnapshotStore
@@ -948,7 +974,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         val sc = evolvedSchema(version)
         val raw = sc.map(x =>
             spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-          .getOrElse(spark.read.parquet(paths: _*))
+          .getOrElse(ParquetSchemas.readFiles(spark, paths))
         val masked0 = raw
           .withColumn("__dv_file",
             element_at(split(col("_metadata.file_path"), "/"), -1))
@@ -990,8 +1016,8 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   def versions(): Seq[Long] = {
     val root = new Path(s"$basePath/_manifests")
     if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.drop(2).toLong).sorted.toIndexedSeq
+    else fs.listStatus(root).toIndexedSeq
+      .flatMap(s => SnapshotStore.versionOf(s.getPath.getName)).sorted
   }
 
   /** Pre-check half of the commit CAS: refuse a commit whose target
@@ -1069,17 +1095,16 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     * change feed's byte-based admission control paces on it. */
   def commitBytes(version: Long): Long =
     SnapshotStore.readHistoryCkpt(fs, basePath).get(version).map(_.bytes)
-      .getOrElse(commitBytesRaw(version))
+      .getOrElse(commitBytesOf(version, manifestFiles(manifest(version)).toSet))
 
-  private def commitBytesRaw(version: Long): Long = {
+  /** Pool bytes of the files in `cur` (version `version`'s manifest)
+    * that its retained predecessor does not reference. */
+  private def commitBytesOf(version: Long, cur: Set[String]): Long = {
     val prev = versions().filter(_ < version).lastOption
-    val cur = manifest(version).select("file").collect().map(_.getString(0)).toSet
-    val old = prev.map(p =>
-      manifest(p).select("file").collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty[String])
+    val old = prev.map(p => manifestFiles(manifest(p)).toSet).getOrElse(Set.empty[String])
     (cur diff old).toSeq.map { n =>
-      val p = new Path(poolDir, n)
-      if (fs.exists(p)) fs.getFileStatus(p).getLen else 0L
+      try fs.getFileStatus(new Path(poolDir, n)).getLen
+      catch { case _: java.io.FileNotFoundException => 0L }
     }.sum
   }
 
@@ -1188,7 +1213,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       case None =>
         val paths = resolve(version)
         if (paths.isEmpty) read(version).limit(0)
-        else spark.read.parquet(paths.head).limit(0)
+        else ParquetSchemas.readFiles(spark, paths.take(1)).limit(0)
     }
 
   /** Secondary-column range read pruned at the MANIFEST level, for a
@@ -1365,7 +1390,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   /** The stats [[analyzeColumns]] stored for `version`, if any. */
   def columnStats(version: Long): Option[DataFrame] =
     if (!fs.exists(new Path(colstatsDir(version), "_SUCCESS"))) None
-    else Some(spark.read.parquet(colstatsDir(version).toString))
+    else Some(ParquetSchemas.read(spark, colstatsDir(version).toString))
 
   private def bloomDir(v: Long, column: String) =
     new Path(manifestDir(v), s"_bloom_$column")
@@ -1431,7 +1456,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       s"extendBloomIndex: version $fromVersion has no bloom index on '$column'")
     val toMan = manifest(toVersion).select("file", "n_rows").collect()
       .map(r => r.getString(0) -> math.max(r.getLong(1), 1L)).toMap
-    val old = spark.read.parquet(from.toString).materialize()
+    val old = ParquetSchemas.read(spark, from.toString).materialize()
     val oldNames = old.select("file").collect().map(_.getString(0)).toSet
     val carried = old.join(nameFrame(toMan.keys), Seq("file"), "left_semi")
     val fresh = toMan.keys.filterNot(oldNames).toSeq.sorted
@@ -1465,7 +1490,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
     val p = bloomDir(version, column)
     if (!fs.exists(new Path(p, "_SUCCESS"))) None
-    else Some(spark.read.parquet(p.toString).collect().map { r =>
+    else Some(ParquetSchemas.read(spark, p.toString).collect().map { r =>
       r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
     }.toMap)
@@ -1556,15 +1581,14 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         (acc, del) => acc.unionByName(del.withColumn("__del", lit(true))))
       .groupBy(keyCol).agg(max(col("__del")).as("__del")).materialize()
     // |manifest| rows broadcast into a range probe over the key set
-    val touched = touchKeys.join(broadcast(man),
-        col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
+    val (touched, nUpserts) = SnapshotStore.touchedFiles(touchKeys, man, keyCol)
     val shared = man.filter(!col("file").isin(touched.toSeq: _*))
+    val nShared = manifestFiles(man).count(f => !touched(f))
     // operationMetrics (SnapshotStore.mergeDelta's contract): matched
     // counts come from ONE key-column-pruned pass over the touched
     // files — a small fraction of the full-row double-read (range
     // sampling + shuffle) the rewrite below already pays — and the
-    // upsert count reads off the checkpointed key frame; the user's
+    // upsert count was observed on the key frame above; the user's
     // delta pipeline never re-executes for metrics.
     val (nMatched, nMatchedDel) =
       if (touched.isEmpty) (0L, 0L)
@@ -1576,7 +1600,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
             coalesce(sum(when(col("__del"), 1L)), lit(0L)).as("d")).head()
         (r.getLong(0), r.getLong(1))
       }
-    val nUpserts = touchKeys.filter(col("__del") === false).count()
     val survivors =
       if (touched.isEmpty) align(delta).limit(0)
       else align(readFiles(fromVersion,
@@ -1598,7 +1621,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     // just the shared entries — and a version that could end up with
     // ZERO pool files records its schema sidecar so readers (incl. the
     // SQL catalog) can still plan an empty scan over it
-    val nRewritten = stats.fold(0L)(_.count()).toInt
+    val nRewritten = stats.fold(0)(manifestFiles(_).size)
     publish(toVersion,
       stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
       if (evolved || stats.isEmpty) Some(unionSchema) else None,
@@ -1612,7 +1635,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     // an indexed predecessor extends its Bloom sidecars: carried files
     // keep their filters verbatim, only the landed files scan
     autoExtendBloomIndexes(fromVersion, toVersion)
-    (shared.count().toInt, nRewritten)
+    (nShared, nRewritten)
   }
 
   /** Predicate delete (GDPR erasure) — linked twin of
@@ -1635,7 +1658,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val paths = resolve(fromVersion)
     val raw = sc.map(x =>
         spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-      .getOrElse(spark.read.parquet(paths: _*))
+      .getOrElse(ParquetSchemas.readFiles(spark, paths))
     val withPos0 = raw.select(col("*"),
       element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
       col("_metadata.row_index").as("__p"))
@@ -1656,7 +1679,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         opParams = SnapshotStore.predSql(pred),
         metrics = Map("numDeletedRows" -> 0L,
           "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L))
-      return (shared.count().toInt, 0, 0L)
+      return (manifestFiles(shared).size, 0, 0L)
     }
     // strategy: MERGE-ON-READ (deletion vector) when the match is
     // sparse relative to the files it touches — rewriting a 1 GB file
@@ -1665,7 +1688,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     // being metadata-sized and every read would pay it forever)
     val nMatched = matching.values.sum
     val touchedPhysRows = man.filter(col("file").isin(matching.keys.toSeq: _*))
-      .agg(sum("n_rows")).collect()(0).getLong(0)
+      .select("n_rows").collect().map(_.getLong(0)).sum
     val useDv = mode == "dv" ||
       (mode == "auto" && nMatched * 5 <= touchedPhysRows)
     if (useDv) {
@@ -1677,7 +1700,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         metrics = Map("numDeletedRows" -> nMatched,
           "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L,
           "numDeletionVectorsUpdated" -> matching.size.toLong))
-      return (man.count().toInt, 0, nMatched)
+      return (manifestFiles(man).size, 0, nMatched)
     }
     val kept = readFiles(fromVersion,
         matching.keys.map(n => new Path(poolDir, n).toString).toSeq)
@@ -1686,7 +1709,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       manifestStatsCols(man), evolvedSchema(fromVersion))
     // a delete that empties the table records the schema sidecar so
     // the zero-file version still plans (see mergeDelta)
-    val nRewritten = stats.fold(0L)(_.count()).toInt
+    val nRewritten = stats.fold(0)(manifestFiles(_).size)
     publish(toVersion,
       stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
       if (stats.isEmpty && shared.isEmpty)
@@ -1697,7 +1720,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       metrics = Map("numDeletedRows" -> nMatched,
         "numAddedFiles" -> nRewritten.toLong,
         "numRemovedFiles" -> matching.size.toLong))
-    (shared.count().toInt, nRewritten, nMatched)
+    (manifestFiles(shared).size, nRewritten, nMatched)
   }
 
   /** MERGE-ON-READ MERGE — [[mergeDelta]]'s MoR alternative
@@ -1744,7 +1767,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       else {
         val paths = touched.map(n => new Path(poolDir, n).toString).toSeq
         val raw = sc.map(x => spark.read.schema(x).parquet(paths: _*))
-          .getOrElse(spark.read.parquet(paths: _*))
+          .getOrElse(ParquetSchemas.readFiles(spark, paths))
         val withPos = raw.select(col(keyCol),
           element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
           col("_metadata.row_index").as("__p"))
@@ -1762,7 +1785,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val nMasked = matchRows.count()
     val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
       .materialize()
-    val nNew = stats.fold(0L)(_.count()).toInt
+    val nNew = stats.fold(0)(manifestFiles(_).size)
     publish(toVersion, stats.fold(man)(man.unionByName(_, allowMissingColumns = true)), commitTs, sc,
       dv = if (mask.limit(1).count() == 0) None else Some(mask),
       op = "mergeDeltaMor", metrics = Map(
@@ -1810,7 +1833,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     // the predicate would silently match nothing (deleteWhere's rule)
     val raw = sc.map(x =>
         spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-      .getOrElse(spark.read.parquet(paths: _*))
+      .getOrElse(ParquetSchemas.readFiles(spark, paths))
     val withPos0 = raw.select(col("*"),
       element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
       col("_metadata.row_index").as("__p"))
@@ -1831,13 +1854,13 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         op = "updateWhere", opParams = updateOpParams(set, pred),
         metrics = Map("numUpdatedRows" -> 0L,
           "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L))
-      return (man.count().toInt, 0, 0L)
+      return (manifestFiles(man).size, 0, 0L)
     }
     val nMatched = matching.values.sum
     def applySet(df: DataFrame): DataFrame =
       set.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
     val touchedPhysRows = man.filter(col("file").isin(matching.keys.toSeq: _*))
-      .agg(sum("n_rows")).collect()(0).getLong(0)
+      .select("n_rows").collect().map(_.getLong(0)).sum
     val useMor = mode == "mor" ||
       (mode == "auto" && nMatched * 5 <= touchedPhysRows)
     if (useMor) {
@@ -1846,13 +1869,13 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       val stats = landWithStats(arrange(updated, numNewFiles),
         manifestStatsCols(man), sc)
       val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-      val nNew = stats.fold(0L)(_.count()).toInt
+      val nNew = stats.fold(0)(manifestFiles(_).size)
       publish(toVersion, stats.fold(man)(man.unionByName(_, allowMissingColumns = true)), commitTs, sc,
         dv = Some(mask), op = "updateWhere",
         opParams = updateOpParams(set, pred),
         metrics = Map("numUpdatedRows" -> nMatched,
           "numAddedFiles" -> nNew.toLong, "numRemovedFiles" -> 0L))
-      (man.count().toInt, nNew, nMatched)
+      (manifestFiles(man).size, nNew, nMatched)
     } else {
       val shared = man.filter(!col("file").isin(matching.keys.toSeq: _*))
       val touched = readFiles(fromVersion,
@@ -1862,14 +1885,14 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       enforceConstraints(rewritten, "updateWhere")
       val stats = landWithStats(arrange(rewritten, numNewFiles),
         manifestStatsCols(man), sc)
-      val nNew = stats.fold(0L)(_.count()).toInt
+      val nNew = stats.fold(0)(manifestFiles(_).size)
       publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs, sc,
         dv = carryDv(fromVersion, shared), op = "updateWhere",
         opParams = updateOpParams(set, pred),
         metrics = Map("numUpdatedRows" -> nMatched,
           "numAddedFiles" -> nNew.toLong,
           "numRemovedFiles" -> matching.size.toLong))
-      (shared.count().toInt, nNew, nMatched)
+      (manifestFiles(shared).size, nNew, nMatched)
     }
   }
 
@@ -1888,7 +1911,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       case None =>
         publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
           op = "foldDv", statsFrom = Some(fromVersion))
-        (man.count().toInt, 0, 0L)
+        (manifestFiles(man).size, 0, 0L)
       case Some(dv) =>
         val masked = dv.select("file").distinct().collect().map(_.getString(0)).toSet
         val nDropped = dv.count()
@@ -1899,7 +1922,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
           manifestStatsCols(man), evolvedSchema(fromVersion))
         publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
           evolvedSchema(fromVersion), op = "foldDv")
-        (shared.count().toInt, stats.fold(0L)(_.count()).toInt, nDropped)
+        (manifestFiles(shared).size, stats.fold(0)(manifestFiles(_).size), nDropped)
     }
   }
 
@@ -2133,7 +2156,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         // deleted row's CONTENT by contract
         val raw = sc.map(x =>
             spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-          .getOrElse(spark.read.parquet(paths: _*))
+          .getOrElse(ParquetSchemas.readFiles(spark, paths))
         val withPos0 = raw.select(col("*"),
           element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
           col("_metadata.row_index").as("__p"))
@@ -2315,7 +2338,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
         dv = dvFrame(fromVersion), op = "compact",
         opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
-      return (man.count().toInt, 0)
+      return (manifestFiles(man).size, 0)
     }
     val shared = man.join(nameFrame(small), Seq("file"), "left_anti")
     // the fold reads MASKED (DV entries for rewritten files retire) and
@@ -2333,7 +2356,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       op = "compact", opParams = SnapshotStore.predSql(pred),
       metrics = Map("numAddedFiles" -> names.size.toLong,
         "numRemovedFiles" -> small.length.toLong))
-    (man.count().toInt - small.length, names.size)
+    (manifestFiles(man).size - small.length, names.size)
   }
 
   /** PARTITION-SCOPED Z-ORDER — Iceberg's rewrite_data_files with a
@@ -2360,7 +2383,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
         dv = dvFrame(fromVersion), op = "zorder",
         opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
-      return (man.count().toInt, 0)
+      return (manifestFiles(man).size, 0)
     }
     val shared = man.join(nameFrame(matched), Seq("file"), "left_anti")
     val rows = readFiles(fromVersion,
@@ -2377,7 +2400,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       allowMissingColumns = true),
       commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
       op = "zorder", opParams = SnapshotStore.predSql(pred))
-    (man.count().toInt - matched.size, names.size)
+    (manifestFiles(man).size - matched.size, names.size)
   }
 
   /** PARTITION-SCOPED DV fold — [[foldDv]] restricted to the masked
@@ -2396,7 +2419,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
           op = "foldDv", opParams = SnapshotStore.predSql(pred),
           statsFrom = Some(fromVersion))
-        (man.count().toInt, 0, 0L)
+        (manifestFiles(man).size, 0, 0L)
       case Some(dv0) =>
         val dv = dv0.materialize()
         val matched = partitionEntries(man, pcs).filter(coalesce(pred, lit(false)))
@@ -2407,7 +2430,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
           publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
             dv = Some(dv), op = "foldDv",
             opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
-          return (man.count().toInt, 0, 0L)
+          return (manifestFiles(man).size, 0, 0L)
         }
         val maskedDf = nameFrame(masked)
         val nDropped = dv.join(maskedDf, Seq("file"), "left_semi").count()
@@ -2421,7 +2444,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
           evolvedSchema(fromVersion),
           dv = if (keep.limit(1).count() == 0) None else Some(keep),
           op = "foldDv", opParams = SnapshotStore.predSql(pred))
-        (shared.count().toInt, stats.fold(0L)(_.count()).toInt, nDropped)
+        (manifestFiles(shared).size, stats.fold(0)(manifestFiles(_).size), nDropped)
     }
   }
 

@@ -10,8 +10,8 @@ import graft.sources.Tables
   * payloads ride as opaque `binary` columns with a typed metadata
   * struct. IMAGE decode is REAL — the JDK's own codec stack
   * (`javax.imageio`: PNG, JPEG, GIF, BMP ship with every JRE) decodes
-  * actual encoded bytes headlessly — and so is AUDIO
-  * (`javax.sound.sampled`: the JDK's WAV/PCM codec); only video
+  * actual encoded bytes headlessly — and so is AUDIO (a direct
+  * RIFF/WAVE PCM codec, byte-identical to the JDK's); only video
   * decode remains out of scope for this container (frame sampling
   * models the fan-out shape over opaque bytes).
   *
@@ -127,7 +127,7 @@ object Multimodal {
     bos.toByteArray
   }
 
-  // ---- audio (javax.sound.sampled — the JDK's real WAV codec) ------
+  // ---- audio (direct RIFF/WAVE PCM codec, JDK-byte-identical) ------
 
   case class AudioMeta(sampleRate: Int, channels: Int, bitsPerSample: Int,
       frames: Long)
@@ -1439,9 +1439,9 @@ object Multimodal {
     "mm_audio_meta" -> { (s, d) =>
       // REAL audio decode, HASH-CHECKED — the mm_decode playbook in
       // the sample domain: every doc gets a genuine RIFF/WAVE payload
-      // (JDK encoder, 16-bit PCM) whose rate/channels/frame-count are
-      // closed-form in the id, and javax.sound.sampled decodes them
-      // back — the DuckDB oracle recomputes all of it declaratively,
+      // (16-bit PCM, JDK-encoder-identical) whose rate/channels/frame-
+      // count are closed-form in the id, and the RIFF/WAVE codec decodes
+      // them back — the DuckDB oracle recomputes all of it declaratively,
       // so any header mis-parse hash-fails. The one-pass metadata
       // attach over the media table's wav column; bytes never shuffle.
       val payloads = mediaFor(s, d, "wav").select(col("doc_id"), col("wav").as("payload"))

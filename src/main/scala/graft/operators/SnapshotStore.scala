@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetSchemas
 
 import graft.functions.Fx
 
@@ -217,6 +218,55 @@ object SnapshotStore {
       op: String = "unknown", opParams: String = "",
       metrics: Map[String, Long] = Map.empty)
 
+  /** The deletion-vector layout both stores publish: (file basename,
+    * parquet row index). */
+  private[graft] val dvSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
+
+  /** The version a `v=<n>` directory name denotes; None for any other
+    * name (a stray or parked entry never disables the store's APIs). */
+  private[operators] def versionOf(name: String): Option[Long] =
+    if (name.startsWith("v=")) name.drop(2).toLongOption else None
+
+  private[operators] val log = org.slf4j.LoggerFactory.getLogger("graft.operators.store")
+
+  /** Both layouts' merge probe: the files whose [min_key, max_key]
+    * envelope (a manifest or zone map, broadcast) holds a key of
+    * `touchKeys` (`keyCol`, `__del`), and the number of upserted keys —
+    * one pass over the key frame, the count riding it as an observed
+    * metric. */
+  private[operators] def touchedFiles(touchKeys: DataFrame, envelopes: DataFrame,
+      keyCol: String): (Set[String], Long) = {
+    val upserts = org.apache.spark.sql.Observation("graft_merge_upserts")
+    val touched = touchKeys
+      .observe(upserts, count(when(!col("__del"), 1)).as("n"))
+      .join(broadcast(envelopes),
+        col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
+      .select("file").distinct().collect().map(_.getString(0)).toSet
+    // an empty range join lets adaptive execution drop the observing
+    // node from the final plan: the metric is then absent, and counted
+    val n = upserts.get.get("n").map(_.asInstanceOf[Long])
+      .getOrElse(touchKeys.filter(!col("__del")).count())
+    (touched, n)
+  }
+
+  /** A publish-time checkpoint update that failed: the commit itself
+    * is already live and the checkpoint self-heals on the next read,
+    * so the failure is logged, not raised. */
+  private[operators] def checkpointUpdateFailed(store: String, basePath: String,
+      version: Long, e: Throwable): Unit =
+    log.warn(s"$store $basePath: history checkpoint update for published " +
+      s"version $version failed ($e); the checkpoint rebuilds on next read", e)
+
+  /** The self-heal rewrite of the checkpoint: the entries are already
+    * rebuilt and served, so a failed write is logged, not raised. */
+  private[operators] def rewriteHistoryCkpt(store: String, fs: org.apache.hadoop.fs.FileSystem,
+      basePath: String, entries: Map[Long, HistoryEntry]): Unit =
+    try writeHistoryCkpt(fs, basePath, entries)
+    catch { case scala.util.control.NonFatal(e) =>
+      log.warn(s"$store $basePath: history checkpoint rewrite failed ($e); " +
+        "served from the rebuilt entries", e) }
+
   /** Canonical (sorted-key) JSON object for a metrics map — metric
     * names are fixed identifiers, values are counts. */
   private def metricsJson(m: Map[String, Long]): String =
@@ -336,25 +386,28 @@ object SnapshotStore {
       }
     } catch { case scala.util.control.NonFatal(_) => ("unknown", "", Map.empty) }
 
-  /** Best-effort atomic rewrite (tmp + rename): a crash or a lost
-    * concurrent-rename race leaves a stale/absent checkpoint, which
-    * the self-heal path rebuilds — never corrupt answers. */
+  /** Atomic rewrite (tmp + rename): a crash or a lost concurrent-rename
+    * race leaves a stale/absent checkpoint, which the self-heal path
+    * rebuilds — never corrupt answers. A failed write raises; the
+    * callers log it. */
   private[operators] def writeHistoryCkpt(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String, entries: Map[Long, HistoryEntry]): Unit =
-    try {
-      val body = entries.toSeq.sortBy(_._1).map { case (v, e) =>
-        s"""{"v": $v, "ts": ${e.commitTs}, "f": ${e.nFiles}, "r": ${e.nRows}, """ +
-          s""""b": ${e.bytes}, "op": "${jesc(e.op)}", "p": "${jesc(e.opParams)}", """ +
-          s""""m": ${metricsJson(e.metrics)}}"""
-      }.mkString("{\"history\": [", ", ", "]}")
-      val tmp = new org.apache.hadoop.fs.Path(basePath,
-        s".tmp-hist-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      val dest = new org.apache.hadoop.fs.Path(basePath, "_history.json")
-      fs.delete(dest, false): Unit
-      if (!fs.rename(tmp, dest)) fs.delete(tmp, false): Unit
-    } catch { case scala.util.control.NonFatal(_) => () }
+      basePath: String, entries: Map[Long, HistoryEntry]): Unit = {
+    val body = entries.toSeq.sortBy(_._1).map { case (v, e) =>
+      s"""{"v": $v, "ts": ${e.commitTs}, "f": ${e.nFiles}, "r": ${e.nRows}, """ +
+        s""""b": ${e.bytes}, "op": "${jesc(e.op)}", "p": "${jesc(e.opParams)}", """ +
+        s""""m": ${metricsJson(e.metrics)}}"""
+    }.mkString("{\"history\": [", ", ", "]}")
+    val tmp = new org.apache.hadoop.fs.Path(basePath,
+      s".tmp-hist-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    val dest = new org.apache.hadoop.fs.Path(basePath, "_history.json")
+    fs.delete(dest, false): Unit
+    if (!fs.rename(tmp, dest)) {
+      fs.delete(tmp, false): Unit
+      throw new java.io.IOException(s"rename of $tmp onto $dest failed")
+    }
+  }
 
   /** Parse the `_store.json` sidecar's keyCol — shared by both store
     * layouts and the SQL catalog (which lives under Spark's package
@@ -756,7 +809,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     // re-home each entry onto the clone's v=1 by basename, or pruned
     // reads on the clone would open the SOURCE's files
     if (fs.exists(new Path(zmapDir(fromVersion), "_SUCCESS"))) {
-      spark.read.parquet(zmapDir(fromVersion)).withColumn("file",
+      ParquetSchemas.read(spark, zmapDir(fromVersion)).withColumn("file",
           concat(lit(s"$dstBase/v=1/"), element_at(split(col("file"), "/"), -1)))
         .coalesce(1).write.mode("overwrite")
         .parquet(new Path(tmp, "_zonemap").toString)
@@ -1047,7 +1100,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
   /** The stats [[analyzeColumns]] stored for `version`, if any. */
   def columnStats(version: Long): Option[DataFrame] =
     if (!fs.exists(new Path(colstatsDir(version), "_SUCCESS"))) None
-    else Some(spark.read.parquet(colstatsDir(version).toString))
+    else Some(ParquetSchemas.read(spark, colstatsDir(version).toString))
 
   private def bloomDir(v: Long, column: String) =
     new Path(dir(v), s"_bloom_$column")
@@ -1073,7 +1126,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     val sc0 = evolvedSchema(version)
     val raw0 = sc0.map(x => spark.read.schema(SnapshotStore.physicalSchema(x))
         .parquet(parts.map(_.toString): _*))
-      .getOrElse(spark.read.parquet(parts.map(_.toString): _*))
+      .getOrElse(ParquetSchemas.readFiles(spark, parts.map(_.toString).toSeq))
     val raw = sc0.map(SnapshotStore.toLogical(raw0, _)).getOrElse(raw0)
     require(raw.columns.contains(column), s"buildBloomIndex: no column '$column'")
     import org.apache.spark.sql.Encoders
@@ -1101,7 +1154,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
     val p = bloomDir(version, column)
     if (!fs.exists(new Path(p, "_SUCCESS"))) None
-    else Some(spark.read.parquet(p.toString).collect().map { r =>
+    else Some(ParquetSchemas.read(spark, p.toString).collect().map { r =>
       r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
     }.toMap)
@@ -1158,7 +1211,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
   /** The version's zone map, if one was built. */
   def zoneMap(version: Long): Option[DataFrame] =
     if (fs.exists(new Path(zmapDir(version), "_SUCCESS")))
-      Some(spark.read.parquet(zmapDir(version)))
+      Some(ParquetSchemas.read(spark, zmapDir(version)))
     else None
 
   /** Files whose stats range for `column` overlaps [lo, hi] — None
@@ -1195,7 +1248,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       case None =>
         val parts = dataFiles(version)
         if (parts.isEmpty) read(version).limit(0)
-        else spark.read.parquet(parts.head.toString).limit(0)
+        else ParquetSchemas.readFiles(spark, Seq(parts.head.toString)).limit(0)
     }
 
   /** Restore filtered on ANY stats-mapped column: rows of `version`
@@ -1729,8 +1782,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     val base = new Path(basePath)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
+      .flatMap(s => SnapshotStore.versionOf(s.getPath.getName))
       .filter(v => fs.exists(new Path(dir(v), "_SUCCESS")))
       .sorted
   }
@@ -1812,7 +1864,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     * atomically with the version. */
   def dvFrame(version: Long): Option[DataFrame] =
     if (!fs.exists(new Path(dvPath(version), "_SUCCESS"))) None
-    else Some(spark.read.parquet(dvPath(version).toString))
+    else Some(spark.read.schema(SnapshotStore.dvSchema).parquet(dvPath(version).toString))
 
   /** Rows `version` SERVES after its deletion-vector mask — the
     * PLANNING statistic behind the masked-route relation's
@@ -1858,7 +1910,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     // the column-mapping read contract, a zero-cost alias projection
     val raw = schema.map(x =>
         spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-      .getOrElse(spark.read.parquet(paths: _*))
+      .getOrElse(ParquetSchemas.read(spark, paths: _*))
     val withPos = raw.select(col("*"),
       element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
       col("_metadata.row_index").as("__p"))
@@ -1873,7 +1925,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     if (dvFrame(version).isEmpty)
       schema.map(x => SnapshotStore.toLogical(
           spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*), x))
-        .getOrElse(spark.read.parquet(paths: _*))
+        .getOrElse(ParquetSchemas.read(spark, paths: _*))
     else maskedScanWithPos(version, paths, schema).drop("__f", "__p")
 
   /** Write the surviving DV entries (those naming files in `keep` —
@@ -1950,7 +2002,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     if (missing.isEmpty) vs.map(v => v -> live(v))
     else {
       val merged = live ++ missing.map(v => v -> computeHistoryEntry(v))
-      SnapshotStore.writeHistoryCkpt(fs, basePath, merged)
+      SnapshotStore.rewriteHistoryCkpt("SnapshotStore", fs, basePath, merged)
       vs.map(v => v -> merged(v))
     }
   }
@@ -1983,7 +2035,8 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         case None => computeHistoryEntry(v)
       }
       SnapshotStore.writeHistoryCkpt(fs, basePath, ckpt + (v -> entry))
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case scala.util.control.NonFatal(e) =>
+      SnapshotStore.checkpointUpdateFailed("SnapshotStore", basePath, v, e) }
 
   /** Drop the checkpoint wholesale — used by verbs that change
     * EXISTING versions' stats (compact swaps a version's files in
@@ -2086,7 +2139,8 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       partCols: Seq[String], fp: DataFrame => Column): DataFrame = {
     val src = read(version)
     src.write.mode("overwrite").parquet(targetPath)
-    val dst = spark.read.parquet(targetPath)
+    // read back under the schema it was just written with
+    val dst = spark.read.schema(ParquetSchemas.asRead(src.schema)).parquet(targetPath)
     Snapshot.validateCopy(src, dst, partCols, col(keyCol), fp)
   }
 
@@ -2136,7 +2190,12 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       commitTs: Option[Long] = None,
       fill: Map[String, Any] = Map.empty): (Int, Int) = {
     ensureStoreMeta()
+    // one listing serves the base schema's footer pick and the file
+    // split below; a missing version falls to Spark's own error
+    val srcDir = new Path(dir(fromVersion))
+    val srcListing = if (fs.exists(srcDir)) fs.listStatus(srcDir).toSeq else Seq.empty
     val baseSchema = evolvedSchema(fromVersion)
+      .orElse(ParquetSchemas.ofFiles(spark, srcListing))
       .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
     val baseNames = baseSchema.fieldNames.toSet
     delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
@@ -2185,12 +2244,8 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     // file is touched iff its key envelope contains a touched key: the
     // zone map is |files| rows — broadcast it into a range join over
     // the key set, one narrow pass, collect only file paths
-    val touched = touchKeys.join(broadcast(zm),
-        col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
-    val srcDir = new Path(dir(fromVersion))
-    val allParts = fs.listStatus(srcDir).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
+    val (touched, nUpserts) = SnapshotStore.touchedFiles(touchKeys, zm, keyCol)
+    val allParts = srcListing.map(_.getPath).filter(_.getName.startsWith("part-"))
     // zone-map paths are input_file_name URIs; compare by basename
     val touchedNames = touched.map(p => p.substring(p.lastIndexOf('/') + 1))
     val (touchedParts, untouchedParts) = allParts.partition(p => touchedNames(p.getName))
@@ -2199,7 +2254,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     // ONE key-column-pruned pass over the touched files (the rewrite
     // below re-reads them in full twice — range-sampling + shuffle —
     // so the narrow count is a small fraction of work already paid);
-    // the upsert count reads off the checkpointed key frame.
+    // the upsert count was observed on the key frame above.
     val (nMatched, nMatchedDel) =
       if (touchedParts.isEmpty) (0L, 0L)
       else {
@@ -2210,7 +2265,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
             coalesce(sum(when(col("__del"), 1L)), lit(0L)).as("d")).head()
         (r.getLong(0), r.getLong(1))
       }
-    val nUpserts = touchKeys.filter(col("__del") === false).count()
     val survivors =
       if (touchedParts.isEmpty) align(delta.limit(0))
       else maskedScanWithPos(fromVersion,
@@ -2296,7 +2350,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         s"dropColumns '$c': it is a declared partition column (or a transform's " +
           "source) — the table's physical layout keys on it"))
     val cur = evolvedSchema(fromVersion)
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
+      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
     val missing = cols.filterNot(cur.fieldNames.contains)
     require(missing.isEmpty, s"dropColumns: not in the schema: ${missing.mkString(", ")}")
     require(cur.fields.length > cols.size, "dropColumns: cannot drop every column")
@@ -2360,7 +2414,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       s"widenColumn '$column': it is a declared partition column (or a " +
         "transform's source) — its min==max stats are typed in the zone map")
     val cur = evolvedSchema(fromVersion)
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
+      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
     val f = cur.fields.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(s"widenColumn: no column '$column'"))
     require(SnapshotStore.canWiden(f.dataType, newType),
@@ -2402,7 +2456,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       s"renameColumn '$from': it is a declared partition column (or a transform's " +
         "source) — the table's physical layout keys on it")
     val cur = evolvedSchema(fromVersion)
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
+      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
     require(cur.fieldNames.contains(from), s"renameColumn: no column '$from'")
     require(!cur.fieldNames.contains(to), s"renameColumn: '$to' already exists")
     val otherPhys = cur.fields.filterNot(_.name == from)
@@ -2481,7 +2535,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     require(versions().contains(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     val unionSchema = evolvedSchema(fromVersion)
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
+      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
     val matches = coalesce(pred, lit(false))
     val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
       .filter(_.getName.startsWith("part-")).toSeq
@@ -2609,7 +2663,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     require(versions().contains(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     val unionSchema = evolvedSchema(fromVersion)
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
+      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
     require(delta.schema.fieldNames.sorted.sameElements(unionSchema.fieldNames.sorted),
       s"mergeDeltaMor is same-schema only — an evolving merge takes mergeDelta's " +
         "copy-on-write path")
@@ -2682,7 +2736,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     require(versions().contains(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     val unionSchema = evolvedSchema(fromVersion)
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
+      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
     val missing = set.keys.filterNot(unionSchema.fieldNames.contains)
     require(missing.isEmpty, s"updateWhere: not in the schema: ${missing.mkString(", ")}")
     val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
@@ -2892,7 +2946,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
         count(lit(1)).as("n_rows")) ++
         statsCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      val df = spark.read.parquet(paths: _*)
+      val df = ParquetSchemas.readFiles(spark, paths)
         .select((input_file_name().as("file") +: col(keyCol) +: statsCols.map(col)): _*)
         .groupBy("file").agg(aggs.head, aggs.tail: _*)
       Some(if (hist.size <= 1) df else df.withColumn("spec_id", lit(cur)))
@@ -2920,7 +2974,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       .foreach { sp =>
         latestVersion().foreach { v =>
           require(priorDerived(sp.name) ||
-              !spark.read.parquet(dir(v)).columns.contains(sp.name),
+              !ParquetSchemas.schema(spark, dir(v)).fieldNames.contains(sp.name),
             s"evolvePartitionSpec: derived column name '${sp.name}' collides " +
               "with a data column")
         }

@@ -33,9 +33,15 @@ package object operators {
       // a frame that IS a bare pinned-RDD scan (the product of a prior
       // materialize) would re-pin into an identical block copy — skip;
       // composed operators stop paying a full copy per layer when an
-      // already-materialized frame crosses an API boundary
-      if (ds.queryExecution.analyzed
-          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) ds
+      // already-materialized frame crosses an API boundary. A bare
+      // LocalRelation (collected rows, e.g. a cached manifest) is
+      // already as pinned as a frame gets: pinning it spends a job to
+      // copy local rows into blocks
+      if (ds.queryExecution.analyzed match {
+            case _: org.apache.spark.sql.execution.LogicalRDD => true
+            case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+            case _ => false
+          }) ds
       else ds.sparkSession.conf.get("spark.graft.materialize", "local") match {
         case "reliable" => ds.checkpoint(eager)
         case "persist" =>

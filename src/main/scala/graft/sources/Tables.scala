@@ -1,15 +1,18 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ParquetSchemas
 
 /** Schema-aware readers for the lake tables.
   *
   * All graft operators read through here so that a future move from
   * local parquet to a real lake layout (partitioned dirs, Delta-style
   * manifests, ADLS URIs) is a one-file change. Readers are plain
-  * `spark.read.parquet` so Catalyst keeps full pushdown/pruning:
-  * `.explain` on any graft query shows PushedFilters + a ReadSchema
-  * restricted to the referenced columns.
+  * parquet scans so Catalyst keeps full pushdown/pruning: `.explain`
+  * on any graft query shows PushedFilters + a ReadSchema restricted to
+  * the referenced columns. Every read carries a declared schema (one
+  * footer read in this process, [[ParquetSchemas]]) — no inference
+  * job.
   */
 object Tables {
   val tpch: Seq[String] =
@@ -18,7 +21,7 @@ object Tables {
 
   /** Load one table from a scale-factor directory. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSchemas.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

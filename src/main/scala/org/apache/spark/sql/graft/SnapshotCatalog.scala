@@ -177,7 +177,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // evolved, so its files are schema-uniform by construction —
         // a mergeSchema inference over every path here would read
         // thousands of footers on every loadTable
-        else Some(hide(spark.read.parquet(paths.head).schema)))
+        else Some(hide(ParquetSchemas.schema(spark, paths.head))))
     // a linked version whose manifest lists ZERO pool files (an
     // all-row deleteWhere / mergeDelta) plans an EMPTY scan over the
     // recorded schema — absent that record there is nothing to infer
@@ -436,7 +436,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           .limit(1).collect().headOption
           .map(r => s"${poolDirOf(base)}/${r.getString(0)}")
         else storeFor(ident).dataFiles(version).headOption.map(_.toString)
-      first.map(p => hide(spark.read.parquet(p).schema)).getOrElse(
+      first.map(p => hide(ParquetSchemas.schema(spark, p))).getOrElse(
         throw new IllegalStateException(
           s"$catalogName.${ident.name()} version $version has no files and no " +
             "schema sidecar — cannot plan a scan"))
@@ -1924,7 +1924,7 @@ private[graft] case class BucketedRoute(col: String, n: Int, paths: Seq[String])
     * sort-merge join needs neither Exchange NOR Sort. */
   def relation(spark: SparkSession)
       : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
-    val schema = spark.read.parquet(paths.head).schema
+    val schema = ParquetSchemas.schema(spark, paths.head)
     val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
       spark, paths.map(new org.apache.hadoop.fs.Path(_)),
       Map.empty[String, String], Some(schema))
