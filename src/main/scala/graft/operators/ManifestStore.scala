@@ -33,20 +33,27 @@ import org.apache.spark.sql.graft.ParquetSchemas
   * files (reclaimed by [[vacuum]]) but never a manifest naming a
   * missing file. Prune deletes manifests first; vacuum is restartable.
   */
-class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
-    statsCols: Seq[String] = Nil, parityFilesPerGroup: Int = 64) {
+class ManifestStore(protected val spark: SparkSession, val basePath: String,
+    val keyCol: String, statsCols: Seq[String] = Nil, parityFilesPerGroup: Int = 64)
+    extends VersionedStore {
   require(parityFilesPerGroup > 0,
     s"parityFilesPerGroup must be positive, got $parityFilesPerGroup")
 
-  private def fs =
-    new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def layout: String = "linked"
+
+  def withKeyCol(key: String): ManifestStore =
+    new ManifestStore(spark, basePath, key, statsCols, parityFilesPerGroup)
+
   // A shallow clone records the pool OWNER's pool dir in _store.json
   // (written once by cloneTo before any publish — read once here).
   private lazy val storedPool: Option[String] =
     SnapshotStore.readStoredPool(fs, basePath)
-  private def poolDir =
+  /** The shared file pool this store's manifests name files in: its own
+    * `files/`, or the pool owner's on a shallow clone. */
+  def poolDir: Path =
     storedPool.map(new Path(_)).getOrElse(new Path(s"$basePath/files"))
   private def manifestDir(v: Long) = new Path(s"$basePath/_manifests/v=$v")
+  protected def versionDir(v: Long): Path = manifestDir(v)
 
   private def statAggs(cols: Seq[String]): Seq[Column] =
     Seq(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
@@ -75,18 +82,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     if (hist.size <= 1) base else base.withColumn("spec_id", lit(cur))
   }
 
-  /** The `_partition.json` spec history + current id (see
-    * [[SnapshotStore.readPartitionSpecHistory]]). */
-  private def specHistory: (Seq[Seq[String]], Int) =
-    SnapshotStore.readPartitionSpecHistory(fs, basePath)
-
-  /** A manifest row's spec id: the recorded column, or 0 — every file
-    * landed before evolution existed (or before this store evolved)
-    * belongs to the original spec by construction. */
-  private def specIdCol(man: DataFrame): Column =
-    if (man.columns.contains("spec_id")) coalesce(col("spec_id"), lit(0))
-    else lit(0)
-
   /** EVOLVE this store's partition spec (metadata-only —
     * [[SnapshotStore.evolvePartitionSpec]]); returns the new current
     * spec id. */
@@ -98,7 +93,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       .foreach { sp =>
         latestVersion().foreach { v =>
           require(priorDerived(sp.name) ||
-              !readFilesRaw(v, resolve(v).take(1)).columns.contains(sp.name),
+              !readFilesRaw(v, dataPaths(v).take(1)).columns.contains(sp.name),
             s"evolvePartitionSpec: derived column name '${sp.name}' collides " +
               "with a data column")
         }
@@ -312,7 +307,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val schema =
       if (shared.limit(1).count() == 0L)
         evolvedSchema(fromVersion).orElse(
-          Some(readFilesRaw(fromVersion, resolve(fromVersion).take(1)).schema))
+          Some(readFilesRaw(fromVersion, dataPaths(fromVersion).take(1)).schema))
       else evolvedSchema(fromVersion)
     publish(toVersion, shared, commitTs, schema, dv = carryDv(fromVersion, shared),
       op = "dropPartitions", opParams = SnapshotStore.predSql(pred))
@@ -433,84 +428,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     names
   }
 
-  /** Declared partition COLUMN NAMES — for a temporal transform spec
-    * (`days(ts)` / `months(ts)`) this is the DERIVED identity column
-    * every landing materializes (see [[SnapshotStore.PartSpec]]).
-    * Empty on an unpartitioned store. */
-  def storedPartitionBy(): Seq[String] = storedPartitionSpecs().map(_.name)
-
-  /** The raw PARTITIONED BY declaration as recorded in the sidecar. */
-  def storedPartitionSpecs(): Seq[SnapshotStore.PartSpec] =
-    SnapshotStore.readStoredPartitionBy(fs, basePath)
-      .map(SnapshotStore.parsePartitionSpec)
-
-  private def deriveParts(df: DataFrame): DataFrame =
-    SnapshotStore.derivePartitionCols(df, storedPartitionSpecs())
-
-  /** Declared CHECK constraints / ADD / DROP / enforcement — the
-    * linked twins of [[SnapshotStore]]'s (same `_constraints.json`
-    * sidecar contract; see there for semantics: FALSE violates, NULL
-    * passes, write-time only). */
-  def constraints(): Seq[(String, String)] =
-    SnapshotStore.readConstraints(fs, basePath)
-
-  def addConstraint(name: String, exprSql: String): Unit = {
-    require(name.matches("[A-Za-z0-9_]+"),
-      s"constraint name must be [A-Za-z0-9_]+, got '$name'")
-    val cur = constraints()
-    require(!cur.exists(_._1 == name), s"constraint '$name' already exists")
-    latestVersion().foreach { v =>
-      val bad = read(v).filter(coalesce(expr(exprSql), lit(true)) === lit(false))
-        .limit(1).count()
-      if (bad > 0) throw new ConstraintViolationException(
-        s"ADD CONSTRAINT '$name': existing rows of version $v violate ($exprSql)")
-    }
-    SnapshotStore.writeConstraints(fs, basePath, cur :+ ((name, exprSql)))
-  }
-
-  def dropConstraint(name: String): Unit = {
-    val cur = constraints()
-    require(cur.exists(_._1 == name),
-      s"no constraint named '$name' (have: ${cur.map(_._1).mkString(", ")})")
-    SnapshotStore.writeConstraints(fs, basePath, cur.filterNot(_._1 == name))
-  }
-
-  private def enforceConstraints(df: DataFrame, what: String): Unit =
-    constraints().foreach { case (n, e) =>
-      val hit = df.filter(coalesce(expr(e), lit(true)) === lit(false))
-        .select(to_json(struct(df.columns.map(col): _*)).as("row"))
-        .limit(1).collect()
-      if (hit.nonEmpty) throw new ConstraintViolationException(
-        s"CHECK constraint '$n' (($e)) rejected $what: ${hit.head.getString(0)}")
-    }
-
-  private def requireNoConstraintOn(colName: String, op: String): Unit =
-    constraints().find(c =>
-        ("""\b""" + java.util.regex.Pattern.quote(colName) + """\b""").r
-          .findFirstIn(c._2).isDefined)
-      .foreach { case (n, e) => throw new UnsupportedOperationException(
-        s"$op '$colName': CHECK constraint '$n' (($e)) references it — " +
-          s"drop the constraint first") }
-
-  /** Physical arrangement every landing goes through. Unpartitioned:
-    * key-range files, key-sorted (manifest key envelopes disjoint —
-    * perfect key pruning). Partitioned: cluster by partition tuple
-    * plus a key-hash salt bounding files per partition at `numFiles`,
-    * key-sorted within — [[landInPool]]'s hive split then keeps the
-    * one-tuple-per-file invariant that version-to-version rewrites
-    * (mergeDelta, deleteWhere CoW, compact, foldDv) must preserve for
-    * [[dropPartitions]] to stay metadata-only. */
-  private def arrange(df: DataFrame, numFiles: Int): DataFrame =
-    storedPartitionBy() match {
-      case Seq() =>
-        df.repartitionByRange(numFiles, col(keyCol)).sortWithinPartitions(keyCol)
-      case pcs =>
-        val d = deriveParts(df) // temporal transforms land derived identity cols
-        val exprs = pcs.map(col) :+ pmod(hash(col(keyCol)), lit(math.max(numFiles, 1)))
-        d.repartition(exprs: _*)
-          .sortWithinPartitions((pcs :+ keyCol).map(col): _*)
-    }
-
   /** Stats columns a FIRST write records: the construction `statsCols`
     * plus every declared partition column (partition pruning rides the
     * same manifest min/max machinery — min==max per file by the
@@ -544,10 +461,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val out = fs.create(new Path(tmp, "_commit_ts"), true)
     try out.write(ts.toString.getBytes("UTF-8"))
     finally out.close()
-    schema.foreach { sc =>
-      val o = fs.create(new Path(tmp, "_schema.json"), true)
-      try o.write(sc.json.getBytes("UTF-8")) finally o.close()
-    }
+    schema.foreach(Sidecars.writeSchema(fs, tmp, _))
     // the commit's verb rides inside the manifest dir (atomic with the
     // version) — DESCRIBE HISTORY's operation column, self-heal-safe
     SnapshotStore.writeOpSidecar(fs, tmp, op, opParams, metrics)
@@ -561,23 +475,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     ManifestCache.seed(basePath, version, written, manifest.schema, rows)
     noteCommit(version, ts, rows, op, opParams, statsFrom, metrics)
   }
-
-  /** Persist the construction contract (key column) in `_store.json`
-    * at the base — [[SnapshotStore.ensureStoreMeta]]'s linked twin,
-    * consumed by SnapshotCatalog's SQL `DELETE FROM`. Idempotent. */
-  private def ensureStoreMeta(): Unit =
-    if (keyCol.nonEmpty) {
-      val p = new Path(basePath, "_store.json")
-      if (!fs.exists(p)) {
-        fs.mkdirs(new Path(basePath))
-        val esc = keyCol.replace("\\", "\\\\").replace("\"", "\\\"")
-        val out = fs.create(p, true)
-        try out.write(s"""{"keyCol": "$esc"}""".getBytes("UTF-8")) finally out.close()
-      }
-    }
-
-  /** The key column recorded by [[ensureStoreMeta]], when present. */
-  def storedKeyCol(): Option[String] = SnapshotStore.readStoredKeyCol(fs, basePath)
 
   /** ZERO-COPY BRANCH — the Iceberg/Delta "shallow clone" primitive:
     * publish `newVersion` with the SAME manifest rows (and evolved
@@ -631,13 +528,10 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     require(!dfs.exists(new Path(dstBase, "_manifests")),
       s"clone target $dstBase already has versions")
     registerClone(poolOwnerBase, dstBase)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     dfs.mkdirs(new Path(dstBase))
     val pool = new Path(poolOwnerBase, "files").toString
-    val out = dfs.create(new Path(dstBase, "_store.json"), true)
-    try out.write(
-      s"""{"keyCol": "${esc(keyCol)}", "pool": "${esc(pool)}"}""".getBytes("UTF-8"))
-    finally out.close()
+    Sidecars.write(dfs, new Path(dstBase, "_store.json"), Sidecars.obj(
+      "keyCol" -> Sidecars.str(keyCol), "pool" -> Sidecars.str(pool)))
     val dst = new ManifestStore(spark, dstBase, keyCol, statsCols, parityFilesPerGroup)
     dst.publish(1L, manifest(fromVersion).materialize(), commitTs,
       evolvedSchema(fromVersion), dv = dvFrame(fromVersion),
@@ -674,11 +568,8 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     writeCloneRegistry(ownerBase, (registeredClones(ownerBase) :+ cloneBase).distinct)
 
   private def writeCloneRegistry(ownerBase: String, all: Seq[String]): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val body = s"""{"clones": [${all.map(b => "\"" + esc(b) + "\"").mkString(", ")}]}"""
     val tmp = new Path(ownerBase, s".tmp-clones-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    Sidecars.write(fs, tmp, Sidecars.obj("clones" -> Sidecars.arr(all.map(Sidecars.str))))
     if (fs.exists(clonesAside(ownerBase))) fs.delete(clonesAside(ownerBase), false)
     if (fs.exists(clonesPath(ownerBase))
         && !fs.rename(clonesPath(ownerBase), clonesAside(ownerBase)))
@@ -805,24 +696,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       opParams = s"$from -> $to", statsFrom = Some(fromVersion))
   }
 
-  /** Commit history — the `DESCRIBE HISTORY` surface: one row per
-    * version with its commit timestamp and manifest-recorded file/row
-    * totals. Metadata-only (manifests, no pool reads); |versions|
-    * rows. */
-  def history(): DataFrame = {
-    val spark0 = spark
-    import spark0.implicits._
-    historyEntries().map { case (v, e) =>
-        (v, e.commitTs, e.nFiles, e.nRows, e.op, e.opParams, e.metrics) }
-      .toDF("version", "commit_ts", "n_files", "n_rows",
-        "operation", "operation_params", "operation_metrics")
-  }
-
-  /** Per-version (version, bytes_added, n_rows, operation) ascending —
-    * [[SnapshotStore.commitStats]]'s linked twin, ONE checkpoint read. */
-  def commitStats(): Seq[(Long, Long, Long, String)] =
-    historyEntries().map { case (v, e) => (v, e.bytes, e.nRows, e.op) }
-
   /** One version's checkpoint row rebuilt from its manifest — the
     * self-heal unit (see [[SnapshotStore]]'s version-log checkpoint
     * notes). The manifest is metadata-sized and cache-served, so the
@@ -843,7 +716,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   /** The VERSION-LOG CHECKPOINT, served and self-healed —
     * [[SnapshotStore.historyEntries]]'s linked twin: warm path = ONE
     * `_history.json` read; missing entries rebuild from manifests. */
-  private def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
+  protected def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
     val vs = versions()
     val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
     val live = ckpt.filter { case (v, _) => vs.contains(v) }
@@ -876,25 +749,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       SnapshotStore.writeHistoryCkpt(fs, basePath, ckpt + (v -> entry))
     } catch { case scala.util.control.NonFatal(e) =>
       SnapshotStore.checkpointUpdateFailed("ManifestStore", basePath, v, e) }
-
-  private def invalidateHistoryCkpt(): Unit =
-    try fs.delete(new Path(basePath, "_history.json"), false): Unit
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Union schema of an evolved version (column adds ride a
-    * `_schema.json` sidecar published atomically with the manifest;
-    * absent for never-evolved versions). */
-  def evolvedSchema(version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val p = new Path(manifestDir(version), "_schema.json")
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(buf) finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(new String(buf, "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-  }
 
   /** Read a file subset under `version`'s schema contract: evolved
     * versions read with the union schema (old files yield null for
@@ -931,17 +785,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     if (!fs.exists(new Path(p, "_SUCCESS"))) None
     else Some(spark.read.schema(SnapshotStore.dvSchema).parquet(p.toString))
   }
-
-  /** Rows `version` SERVES after its mask — [[SnapshotStore
-    * .visibleRowsOf]]'s linked twin, the `sizeInBytes` planning
-    * statistic for the masked SQL route. Checkpoint row total minus
-    * DV footer record counts; metadata-only, no job. */
-  def visibleRowsOf(version: Long): Long =
-    math.max(0L, rowCountOf(version) - dvRowCount(version))
-
-  /** Stored (pre-mask) row total, checkpoint-served. */
-  def rowCountOf(version: Long): Long =
-    historyEntries().find(_._1 == version).map(_._2.nRows).getOrElse(0L)
 
   /** Mask entry count from the DV parquet footers — driver-side, one
     * footer open per DV part file (the DV lands coalesce(1)). */
@@ -987,21 +830,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         if (fills.isEmpty) masked else masked.na.fill(fills)
     })
 
-  /** Post-evolution reads RECOMPUTE every historical spec's derived
-    * column from its source (a pure function): files of different
-    * specs physically carry different derived columns, and a mixed
-    * scan would otherwise read NULL for the ones a file predates —
-    * turning content-invariant rewrites (compact) into spurious diff
-    * updates. Never-evolved stores skip this entirely (files are
-    * derived-column-uniform by construction — zero behavior change). */
-  private def recomputeDerived(df: DataFrame): DataFrame = {
-    val (hist, _) = specHistory
-    if (hist.size <= 1) df
-    else hist.flatten.distinct.map(SnapshotStore.parsePartitionSpec)
-      .filter(sp => sp.transform.isDefined && df.columns.contains(sp.source))
-      .foldLeft(df)((d, sp) => d.withColumn(sp.name, SnapshotStore.deriveColumn(sp)))
-  }
-
   def manifest(version: Long): DataFrame = {
     require(versions().contains(version), s"version $version does not exist")
     // served from the fingerprint-validated metadata cache: one
@@ -1011,74 +839,11 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     ManifestCache.read(spark, fs, basePath, version, manifestDir(version))
   }
 
-  def latestVersion(): Option[Long] = versions().lastOption
-
   def versions(): Seq[Long] = {
     val root = new Path(s"$basePath/_manifests")
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toIndexedSeq
       .flatMap(s => SnapshotStore.versionOf(s.getPath.getName)).sorted
-  }
-
-  /** Pre-check half of the commit CAS: refuse a commit whose target
-    * version already exists. The authoritative check is the token
-    * verify inside [[publish]] — this one just fails BEFORE the work. */
-  private def requireFreeVersion(v: Long): Unit =
-    if (versions().contains(v))
-      throw new VersionConflictException(
-        s"$basePath: version $v already exists")
-
-  /** OPTIMISTIC-CONCURRENCY merge — the multi-writer front door over
-    * [[mergeDelta]] (Delta/Iceberg's commit-retry contract):
-    *
-    *   1. read the tip, attempt `mergeDelta(tip, tip+1, …)`;
-    *   2. on a lost commit race ([[VersionConflictException]] — a
-    *      concurrent writer published tip+1 first), re-diff: if the
-    *      keys OUR commit touches are DISJOINT from every key the
-    *      interleaved commits changed, the two commits commute — rebase
-    *      onto the new tip and retry;
-    *   3. overlapping keys abort with
-    *      [[ConcurrentWriteConflictException]] — retrying would
-    *      silently pick a winner between causally-unordered updates.
-    *
-    * The conflict check is the store's own manifest-pruned [[diff]]
-    * (O(|changed files|), not O(snapshot)) semi-joined against the
-    * commit's key set — metadata-plus-changed-rows work per retry.
-    * Returns the version this commit published as. */
-  def mergeAtTip(delta: DataFrame, deleteKeys: Option[DataFrame] = None,
-      numNewFiles: Int = 4, commitTs: Option[Long] = None,
-      maxRetries: Int = 5, readVersion: Option[Long] = None): Long = {
-    val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    val mine = delK.foldLeft(delta.select(keyCol))(_ unionByName _)
-      .distinct().materialize()
-    // the conflict check runs against the version the delta was DERIVED
-    // from (Delta's OptimisticTransaction.readVersion): pass it when the
-    // delta was computed from an earlier read; default = current tip
-    var base = readVersion.orElse(latestVersion()).getOrElse(
-      throw new IllegalStateException(
-        s"mergeAtTip on $basePath: store has no committed versions"))
-    var attempt = 0
-    while (true) {
-      try {
-        mergeDelta(base, base + 1, delta, deleteKeys, numNewFiles, commitTs)
-        return base + 1
-      } catch {
-        case e: VersionConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          val tip = latestVersion().getOrElse(base)
-          if (tip > base) {
-            val theirs = diff(base, tip).select(keyCol)
-            if (mine.join(theirs, Seq(keyCol), "left_semi").limit(1).count() > 0)
-              throw new ConcurrentWriteConflictException(
-                s"mergeAtTip on $basePath: concurrent commit(s) v${base + 1}..v$tip " +
-                  "changed keys this merge also touches — rebasing would drop one " +
-                  "writer's update; re-read the tip and re-derive the delta")
-            base = tip
-          }
-      }
-    }
-    -1L // unreachable: the loop returns or throws
   }
 
   private def commitTsOf(v: Long): Long = {
@@ -1120,12 +885,12 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   def readAsOf(ts: Long): DataFrame = read(versionAsOf(ts).getOrElse(
     throw new IllegalStateException(s"no version committed at or before $ts")))
 
-  private def resolve(version: Long): Seq[String] =
+  def dataPaths(version: Long): Seq[String] =
     manifest(version).select("file").collect()
       .map(r => new Path(poolDir, r.getString(0)).toString).toIndexedSeq
 
   def read(version: Long): DataFrame = {
-    val files = resolve(version)
+    val files = dataPaths(version)
     if (files.isEmpty)
       // a legitimate empty version ([[createEmpty]], an all-row
       // delete) records its schema sidecar — serve the empty frame it
@@ -1211,7 +976,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
       case Some(sc) => spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
       case None =>
-        val paths = resolve(version)
+        val paths = dataPaths(version)
         if (paths.isEmpty) read(version).limit(0)
         else ParquetSchemas.readFiles(spark, paths.take(1)).limit(0)
     }
@@ -1336,62 +1101,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
   }
 
 
-  private def colstatsDir(v: Long) = new Path(manifestDir(v), "_colstats")
-
-  /** ANALYZE — per-column statistics of `version`, persisted as a
-    * `_colstats` sidecar inside the version's manifest dir (the
-    * post-publish companion of the zone map: versions stay immutable,
-    * sidecars are derived metadata). Default NDV is
-    * approx_count_distinct (HLL — ONE fused pass over every column,
-    * no expand, the 100 TB mode); `exactNdv` runs one count_distinct
-    * job per column instead (exact, k extra passes — the fused
-    * multi-distinct EXPAND would multiply the stream k-fold, the
-    * q_approx_gate lesson). min/max land as strings so the stats
-    * frame has one uniform schema across column types. */
-  def analyzeColumns(version: Long, cols: Seq[String] = Nil,
-      exactNdv: Boolean = false): DataFrame = {
-    val df = read(version)
-    val supported: org.apache.spark.sql.types.DataType => Boolean = {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.DateType => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case org.apache.spark.sql.types.BooleanType => true
-      case _ => false
-    }
-    val target =
-      if (cols.nonEmpty) cols
-      else df.schema.fields.filter(f => supported(f.dataType)).map(_.name).toSeq
-    val missing = target.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"analyzeColumns: not in the schema: ${missing.mkString(", ")}")
-    val aggs = target.flatMap { c => Seq(
-      count(col(c)).as(s"__cnt_$c"),
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c")) ++
-      (if (exactNdv) Nil else Seq(approx_count_distinct(col(c)).as(s"__ndv_$c")))
-    } :+ count(lit(1)).as("__rows")
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val nRows = row.getAs[Long]("__rows")
-    val ndvs: Map[String, Long] =
-      if (!exactNdv) target.map(c => c -> row.getAs[Long](s"__ndv_$c")).toMap
-      else target.map(c =>
-        c -> df.agg(count_distinct(col(c)).as("d")).head().getLong(0)).toMap
-    val out = target.map { c =>
-      (c, nRows, nRows - row.getAs[Long](s"__cnt_$c"), ndvs(c),
-        Option(row.getAs[String](s"__min_$c")).orNull,
-        Option(row.getAs[String](s"__max_$c")).orNull)
-    }
-    val stats = spark.createDataFrame(out)
-      .toDF("col_name", "n_rows", "n_nulls", "ndv", "min_str", "max_str")
-    stats.coalesce(1).write.mode("overwrite").parquet(colstatsDir(version).toString)
-    stats
-  }
-
-  /** The stats [[analyzeColumns]] stored for `version`, if any. */
-  def columnStats(version: Long): Option[DataFrame] =
-    if (!fs.exists(new Path(colstatsDir(version), "_SUCCESS"))) None
-    else Some(ParquetSchemas.read(spark, colstatsDir(version).toString))
-
   private def bloomDir(v: Long, column: String) =
     new Path(manifestDir(v), s"_bloom_$column")
 
@@ -1410,7 +1119,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val man = manifest(version)
     val expected = man.select("file", "n_rows").collect()
       .map(r => r.getString(0) -> math.max(r.getLong(1), 1L)).toMap
-    val paths = resolve(version)
+    val paths = dataPaths(version)
     require(paths.nonEmpty, s"buildBloomIndex: version $version has no files")
     bloomsFor(version, paths, expected, column, fpp)
       .coalesce(1).write.mode("overwrite")
@@ -1507,7 +1216,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val pred = col(column) === lit(value)
     bloomIndex(version, column) match {
       case None =>
-        val files = resolve(version)
+        val files = dataPaths(version)
         (readFiles(version, files).filter(pred), files.size)
       case Some(idx) =>
         val v = String.valueOf(value)
@@ -1545,7 +1254,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     // column reads null on new rows; a same-name TYPE change fails
     // fast (silent coercion at 100 TB is a corrupted lake).
     val baseSchema = evolvedSchema(fromVersion).getOrElse(
-      readFiles(fromVersion, resolve(fromVersion).take(1)).schema)
+      readFiles(fromVersion, dataPaths(fromVersion).take(1)).schema)
     val baseNames = baseSchema.fieldNames.toSet
     delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
       val bt = baseSchema(f.name).dataType
@@ -1655,7 +1364,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     // pred's columns + the metadata struct; emits (file, row position)
     // per matching VISIBLE row (already-masked rows can't re-match)
     val sc = evolvedSchema(fromVersion)
-    val paths = resolve(fromVersion)
+    val paths = dataPaths(fromVersion)
     val raw = sc.map(x =>
         spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
       .getOrElse(ParquetSchemas.readFiles(spark, paths))
@@ -1723,6 +1432,9 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     (manifestFiles(shared).size, nRewritten, nMatched)
   }
 
+  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column): (Int, Int, Long) =
+    deleteWhere(fromVersion, toVersion, pred, mode = "auto")
+
   /** MERGE-ON-READ MERGE — [[mergeDelta]]'s MoR alternative
     * (Iceberg's merge-on-read MERGE): superseded rows (existing rows
     * whose key the delta upserts or deletes) join the DELETION VECTOR
@@ -1743,7 +1455,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     val man = manifest(fromVersion).materialize()
     val sc = evolvedSchema(fromVersion)
     val baseSchema = sc.getOrElse(
-      readFilesRaw(fromVersion, resolve(fromVersion).take(1)).schema)
+      readFilesRaw(fromVersion, dataPaths(fromVersion).take(1)).schema)
     require(delta.schema.fieldNames.sorted.sameElements(baseSchema.fieldNames.sorted),
       s"mergeDeltaMor is same-schema only (have ${baseSchema.fieldNames.mkString(",")}, " +
         s"delta ${delta.schema.fieldNames.mkString(",")}) — an evolving merge " +
@@ -1825,7 +1537,7 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     requireFreeVersion(toVersion)
     val man = manifest(fromVersion).materialize()
     val sc = evolvedSchema(fromVersion)
-    val paths = resolve(fromVersion)
+    val paths = dataPaths(fromVersion)
     // the match scan asks for PHYSICAL names (what the bytes answer to
     // under a metadata-only rename) and projects to logical BEFORE the
     // predicate — reading the logical schema directly over
@@ -2469,6 +2181,8 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
     else { compact(tip, tip + 1, minBytes, targetFiles); Some(tip + 1) }
   }
 
+  def maybeCompact(maxFiles: Int): Option[Long] = maybeCompact(maxFiles, targetFiles = 4)
+
   /** AUTO-RETENTION hook (`maxVersionsToKeep`): prune to the newest
     * `maxVersions` when the chain outgrows them — the streaming sink's
     * one-version-per-micro-batch growth bound. Returns versions
@@ -2512,30 +2226,6 @@ class ManifestStore(spark: SparkSession, basePath: String, val keyCol: String,
         "contract as success")
     if (toDrop.isEmpty) return (Seq.empty, 0L)
     (toDrop, prune(vs.filterNot(toDrop.contains)))
-  }
-
-  /** Legal hold — [[SnapshotStore.hold]]'s linked twin (same
-    * `_holds/<version>` marker contract): count-based [[prune]] is
-    * caller-driven here, but [[pruneOlderThan]] and the catalog's
-    * retention procedures honor holds. Idempotent. */
-  def hold(version: Long): Unit = {
-    require(versions().contains(version), s"version $version does not exist")
-    val p = new Path(s"$basePath/_holds/$version")
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-  }
-
-  /** Release a [[hold]]; idempotent. */
-  def release(version: Long): Unit =
-    fs.delete(new Path(s"$basePath/_holds/$version"), false): Unit
-
-  /** Versions currently under a legal hold. */
-  def holds(): Seq[Long] = {
-    val dir0 = new Path(s"$basePath/_holds")
-    if (!fs.exists(dir0)) Seq.empty
-    else fs.listStatus(dir0).map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
   }
 
   /** Orphan audit — [[vacuum]]'s report-only twin: pool files
@@ -3131,17 +2821,7 @@ object ManifestStore {
     * live clone's pool). */
   def registeredClonesAt(fs: FileSystem, base: String): Seq[String] = {
     val p = if (fs.exists(clonesPath(base))) clonesPath(base) else clonesAside(base)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      // fixed-shape sidecar written only by registerClone: the quoted
-      // strings inside the [...] list are the clone bases
-      val list = txt.substring(txt.indexOf('[') + 1, txt.lastIndexOf(']'))
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(list)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-    }
+    Sidecars.read(fs, p).fold(Seq.empty[String])(j => Sidecars.strings(j \ "clones"))
   }
 
   /** Registered clones that still exist on disk. A dropped clone needs

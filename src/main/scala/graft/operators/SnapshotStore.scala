@@ -267,99 +267,43 @@ object SnapshotStore {
       log.warn(s"$store $basePath: history checkpoint rewrite failed ($e); " +
         "served from the rebuilt entries", e) }
 
-  /** Canonical (sorted-key) JSON object for a metrics map — metric
-    * names are fixed identifiers, values are counts. */
-  private def metricsJson(m: Map[String, Long]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => s""""${jesc(k)}": $v""" }
-      .mkString("{", ", ", "}")
-
-  private def parseMetrics(body: String): Map[String, Long] =
-    "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(-?\\d+)".r.findAllMatchIn(body)
-      .map(m => junesc(m.group(1)) -> m.group(2).toLong).toMap
-
-
-  /** Minimal JSON string escape/unescape for the checkpoint's
-    * operation fields (verbs are fixed identifiers; params may carry
-    * predicate SQL with quotes/backslashes). */
-  private def jesc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def junesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => b += '"'; i += 2
-          case '\\' => b += '\\'; i += 2
-          case 'n' => b += '\n'; i += 2
-          case 'r' => b += '\r'; i += 2
-          case 't' => b += '\t'; i += 2
-          case 'u' if i + 5 < s.length + 1 && i + 6 <= s.length =>
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case o => b += o; i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.toString
-  }
-
   private[operators] def readHistoryCkpt(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String): Map[Long, HistoryEntry] = {
-    val p = new org.apache.hadoop.fs.Path(basePath, "_history.json")
+      basePath: String): Map[Long, HistoryEntry] =
     try {
-      if (!fs.exists(p)) Map.empty
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        // op/params/metrics are OPTIONAL so a pre-upgrade checkpoint
-        // still parses — its entries report operation "unknown" and
-        // empty metrics honestly
-        ("\\{\\s*\"v\"\\s*:\\s*(-?\\d+)\\s*,\\s*\"ts\"\\s*:\\s*(-?\\d+)\\s*,\\s*" +
-          "\"f\"\\s*:\\s*(-?\\d+)\\s*,\\s*\"r\"\\s*:\\s*(-?\\d+)\\s*,\\s*" +
-          "\"b\"\\s*:\\s*(-?\\d+)" +
-          "(?:\\s*,\\s*\"op\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"" +
-          "\\s*,\\s*\"p\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\")?" +
-          "(?:\\s*,\\s*\"m\"\\s*:\\s*\\{([^}]*)\\})?\\s*\\}").r
-          .findAllMatchIn(txt).map(m => m.group(1).toLong -> HistoryEntry(
-            m.group(2).toLong, m.group(3).toLong, m.group(4).toLong,
-            m.group(5).toLong,
-            Option(m.group(6)).map(junesc).getOrElse("unknown"),
-            Option(m.group(7)).map(junesc).getOrElse(""),
-            Option(m.group(8)).map(parseMetrics).getOrElse(Map.empty))).toMap
-      }
+      Sidecars.read(fs, new org.apache.hadoop.fs.Path(basePath, "_history.json"))
+        .fold(Map.empty[Long, HistoryEntry]) { j =>
+          (j \ "history").children.flatMap { e =>
+            def n(f: String) = Sidecars.long(e \ f)
+            // op/params/metrics are OPTIONAL so a pre-upgrade checkpoint
+            // still parses — its entries report operation "unknown" and
+            // empty metrics honestly
+            val op = for (o <- Sidecars.string(e \ "op"); p <- Sidecars.string(e \ "p"))
+              yield (o, p)
+            for (v <- n("v"); ts <- n("ts"); f <- n("f"); r <- n("r"); b <- n("b"))
+              yield v -> HistoryEntry(ts, f, r, b, op.fold("unknown")(_._1),
+                op.fold("")(_._2), Sidecars.longs(e \ "m"))
+          }.toMap
+        }
     } catch { case scala.util.control.NonFatal(_) => Map.empty } // derived: rebuild
-  }
 
   /** Per-version OPERATION sidecar (`_op.json` inside the version /
     * manifest dir): the commit's verb + parameters, written into the
     * tmp dir BEFORE publish so it lands atomically with the version.
     * The checkpoint caches it; the self-heal rebuild re-reads it, so
-    * "what did commit 37 DO" survives checkpoint invalidation.
+    * "what did commit 37 DO" survives checkpoint invalidation. A
+    * failed write raises: the version is not live yet, so the commit
+    * aborts instead of publishing without its audit record.
     * Absent (pre-upgrade commits) → ("unknown", ""). */
   private[operators] def writeOpSidecar(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, op: String, params: String,
       metrics: Map[String, Long] = Map.empty): Unit =
-    try {
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_op.json"), true)
-      // metrics — Delta's operationMetrics: the row/file counts the
-      // verb ALREADY materialized while executing (numInsertedRows,
-      // numUpdatedRows, numDeletedRows, numAddedFiles,
-      // numRemovedFiles), recorded, never recomputed from history
-      try out.write(
-        (s"""{"op": "${jesc(op)}", "params": "${jesc(params)}"""" +
-          s""", "metrics": ${metricsJson(metrics)}}""").getBytes("UTF-8"))
-      finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    // metrics — Delta's operationMetrics: the row/file counts the
+    // verb ALREADY materialized while executing (numInsertedRows,
+    // numUpdatedRows, numDeletedRows, numAddedFiles,
+    // numRemovedFiles), recorded, never recomputed from history
+    Sidecars.write(fs, new org.apache.hadoop.fs.Path(dir, "_op.json"), Sidecars.obj(
+      "op" -> Sidecars.str(op), "params" -> Sidecars.str(params),
+      "metrics" -> Sidecars.longsJson(metrics)))
 
   /** Render a predicate for the operation-parameters stamp —
     * best-effort, bounded (an audit label, not a replayable plan). */
@@ -369,21 +313,11 @@ object SnapshotStore {
   private[operators] def readOpSidecar(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): (String, String, Map[String, Long]) =
     try {
-      val p = new org.apache.hadoop.fs.Path(dir, "_op.json")
-      if (!fs.exists(p)) ("unknown", "", Map.empty)
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        // metrics object optional: pre-metrics sidecars still parse
-        ("\\{\\s*\"op\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-          "\"params\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"" +
-          "(?:\\s*,\\s*\"metrics\"\\s*:\\s*\\{([^}]*)\\})?\\s*\\}").r
-          .findFirstMatchIn(txt)
-          .map(m => (junesc(m.group(1)), junesc(m.group(2)),
-            Option(m.group(3)).map(parseMetrics).getOrElse(Map.empty[String, Long])))
-          .getOrElse(("unknown", "", Map.empty))
-      }
+      // metrics object optional: pre-metrics sidecars still parse
+      Sidecars.read(fs, new org.apache.hadoop.fs.Path(dir, "_op.json")).flatMap { j =>
+        for (op <- Sidecars.string(j \ "op"); params <- Sidecars.string(j \ "params"))
+          yield (op, params, Sidecars.longs(j \ "metrics"))
+      }.getOrElse(("unknown", "", Map.empty))
     } catch { case scala.util.control.NonFatal(_) => ("unknown", "", Map.empty) }
 
   /** Atomic rewrite (tmp + rename): a crash or a lost concurrent-rename
@@ -392,15 +326,15 @@ object SnapshotStore {
     * callers log it. */
   private[operators] def writeHistoryCkpt(fs: org.apache.hadoop.fs.FileSystem,
       basePath: String, entries: Map[Long, HistoryEntry]): Unit = {
-    val body = entries.toSeq.sortBy(_._1).map { case (v, e) =>
-      s"""{"v": $v, "ts": ${e.commitTs}, "f": ${e.nFiles}, "r": ${e.nRows}, """ +
-        s""""b": ${e.bytes}, "op": "${jesc(e.op)}", "p": "${jesc(e.opParams)}", """ +
-        s""""m": ${metricsJson(e.metrics)}}"""
-    }.mkString("{\"history\": [", ", ", "]}")
+    val body = Sidecars.obj("history" -> Sidecars.arr(entries.toSeq.sortBy(_._1).map {
+      case (v, e) => Sidecars.obj("v" -> v.toString, "ts" -> e.commitTs.toString,
+        "f" -> e.nFiles.toString, "r" -> e.nRows.toString, "b" -> e.bytes.toString,
+        "op" -> Sidecars.str(e.op), "p" -> Sidecars.str(e.opParams),
+        "m" -> Sidecars.longsJson(e.metrics))
+    }))
     val tmp = new org.apache.hadoop.fs.Path(basePath,
       s".tmp-hist-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    Sidecars.write(fs, tmp, body)
     val dest = new org.apache.hadoop.fs.Path(basePath, "_history.json")
     fs.delete(dest, false): Unit
     if (!fs.rename(tmp, dest)) {
@@ -423,17 +357,9 @@ object SnapshotStore {
       basePath: String): Option[String] = readStoredField(fs, basePath, "pool")
 
   private def readStoredField(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String, field: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(basePath, "_store.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      ("\"" + field + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(txt)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    }
-  }
+      basePath: String, field: String): Option[String] =
+    Sidecars.read(fs, new org.apache.hadoop.fs.Path(basePath, "_store.json"))
+      .flatMap(j => Sidecars.string(j \ field))
 
   /** Declared partition columns, recorded in a `_partition.json`
     * sidecar at the store base by the first partitioned write — the
@@ -457,44 +383,25 @@ object SnapshotStore {
     * pre-evolution file belongs to spec 0 by construction and absent
     * per-file spec ids decode as 0 honestly. */
   def readPartitionSpecHistory(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String): (Seq[Seq[String]], Int) = {
-    val p = new org.apache.hadoop.fs.Path(basePath, "_partition.json")
-    if (!fs.exists(p)) return (Seq.empty, 0)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def strs(s: String): Seq[String] =
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(s)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-    if (!txt.contains("\"specs\"")) {
-      val cols = strs(txt.dropWhile(_ != '[').takeWhile(_ != ']'))
-      (if (cols.isEmpty) Seq.empty else Seq(cols), 0)
-    } else {
-      // the specs value is a depth-2 array: walk to the outer ']' by
-      // bracket depth, then each inner [...] is one spec's columns
-      val start = txt.indexOf('[', txt.indexOf("\"specs\""))
-      var i = start; var depth = 0
-      while (i < txt.length && (depth != 0 || i == start)) {
-        if (txt(i) == '[') depth += 1 else if (txt(i) == ']') depth -= 1
-        i += 1
+      basePath: String): (Seq[Seq[String]], Int) =
+    Sidecars.read(fs, new org.apache.hadoop.fs.Path(basePath, "_partition.json"))
+      .fold((Seq.empty[Seq[String]], 0)) { j =>
+        j \ "specs" match {
+          case org.json4s.JArray(specs) =>
+            val hist = specs.map(Sidecars.strings)
+            val cur = Sidecars.long(j \ "current").fold(0)(_.toInt)
+            (hist, math.min(math.max(cur, 0), math.max(hist.size - 1, 0)))
+          case _ =>
+            val cols = Sidecars.strings(j \ "partitionBy")
+            (if (cols.isEmpty) Seq.empty else Seq(cols), 0)
+        }
       }
-      val block = txt.substring(start + 1, i - 1)
-      val specs = "\\[[^\\]]*\\]".r.findAllIn(block).map(strs).toSeq
-      val cur = "\"current\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
-        .map(_.group(1).toInt).getOrElse(0)
-      (specs, math.min(math.max(cur, 0), math.max(specs.size - 1, 0)))
-    }
-  }
 
   private def writePartitionSpecsV2(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String, hist: Seq[Seq[String]], current: Int): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val specs = hist.map(_.map(c => "\"" + esc(c) + "\"").mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")
-    val out = fs.create(new org.apache.hadoop.fs.Path(basePath, "_partition.json"), true)
-    try out.write(s"""{"specs": $specs, "current": $current}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+      basePath: String, hist: Seq[Seq[String]], current: Int): Unit =
+    Sidecars.write(fs, new org.apache.hadoop.fs.Path(basePath, "_partition.json"),
+      Sidecars.obj("specs" -> Sidecars.arr(hist.map(h => Sidecars.arr(h.map(Sidecars.str)))),
+        "current" -> current.toString))
 
   /** EVOLVE the partition spec — `ALTER TABLE ... SET PARTITION SPEC`
     * as ONE metadata write: the new spec appends to the history (or
@@ -551,32 +458,18 @@ object SnapshotStore {
     * `c IS NOT NULL` explicitly for NOT NULL semantics). Write-time
     * guards: pinned history is never re-judged. */
   def readConstraints(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String): Seq[(String, String)] = {
-    val p = new org.apache.hadoop.fs.Path(basePath, "_constraints.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      ("\\{\\s*\"name\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*,\\s*" +
-        "\"expr\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"\\s*\\}").r
-        .findAllMatchIn(txt).map { m =>
-          def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-          (un(m.group(1)), un(m.group(2)))
-        }.toSeq
-    }
-  }
+      basePath: String): Seq[(String, String)] =
+    Sidecars.read(fs, new org.apache.hadoop.fs.Path(basePath, "_constraints.json"))
+      .fold(Seq.empty[(String, String)])(j => (j \ "constraints").children.flatMap { c =>
+        for (n <- Sidecars.string(c \ "name"); e <- Sidecars.string(c \ "expr")) yield (n, e)
+      })
 
   def writeConstraints(fs: org.apache.hadoop.fs.FileSystem,
       basePath: String, all: Seq[(String, String)]): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     fs.mkdirs(new org.apache.hadoop.fs.Path(basePath))
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(basePath, "_constraints.json"), true)
-    try out.write(all.map { case (n, e) =>
-      s"""{"name": "${esc(n)}", "expr": "${esc(e)}"}"""
-    }.mkString("{\"constraints\": [", ", ", "]}").getBytes("UTF-8"))
-    finally out.close()
+    Sidecars.write(fs, new org.apache.hadoop.fs.Path(basePath, "_constraints.json"),
+      Sidecars.obj("constraints" -> Sidecars.arr(all.map { case (n, e) =>
+        Sidecars.obj("name" -> Sidecars.str(n), "expr" -> Sidecars.str(e)) })))
   }
 
   /** Declared hash-bucket layout, recorded in a `_bucket.json` sidecar
@@ -589,20 +482,10 @@ object SnapshotStore {
     * HashPartitioning — and a store⋈store join on the bucket column
     * shuffles NEITHER side. None = unbucketed. */
   def readStoredBucketBy(fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String): Option[(String, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(basePath, "_bucket.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      for {
-        c <- "\"col\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        n <- "\"n\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-      } yield (c, n)
+      basePath: String): Option[(String, Int)] =
+    Sidecars.read(fs, new org.apache.hadoop.fs.Path(basePath, "_bucket.json")).flatMap { j =>
+      for (c <- Sidecars.string(j \ "col"); n <- Sidecars.long(j \ "n")) yield (c, n.toInt)
     }
-  }
 
   /** Persist the bucket declaration — [[writeStoredPartitionBy]]'s
     * contract (idempotent; redeclaration must match while versions
@@ -618,10 +501,8 @@ object SnapshotStore {
           s"as ($col, $n)")
     } else {
       fs.mkdirs(new org.apache.hadoop.fs.Path(basePath))
-      val esc = col.replace("\\", "\\\\").replace("\"", "\\\"")
-      val out = fs.create(new org.apache.hadoop.fs.Path(basePath, "_bucket.json"), true)
-      try out.write(s"""{"col": "$esc", "n": $n}""".getBytes("UTF-8"))
-      finally out.close()
+      Sidecars.write(fs, new org.apache.hadoop.fs.Path(basePath, "_bucket.json"),
+        Sidecars.obj("col" -> Sidecars.str(col), "n" -> n.toString))
     }
   }
 
@@ -660,11 +541,8 @@ object SnapshotStore {
         s"store at $basePath is already partitioned by $existing; cannot redeclare as $cols")
     } else {
       fs.mkdirs(new org.apache.hadoop.fs.Path(basePath))
-      def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      val out = fs.create(new org.apache.hadoop.fs.Path(basePath, "_partition.json"), true)
-      try out.write(cols.map(c => "\"" + esc(c) + "\"")
-        .mkString("{\"partitionBy\": [", ", ", "]}").getBytes("UTF-8"))
-      finally out.close()
+      Sidecars.write(fs, new org.apache.hadoop.fs.Path(basePath, "_partition.json"),
+        Sidecars.obj("partitionBy" -> Sidecars.arr(cols.map(Sidecars.str))))
     }
   }
 }
@@ -709,11 +587,15 @@ private[operators] object ZOrder {
   }
 }
 
-class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
+class SnapshotStore(protected val spark: SparkSession, val basePath: String,
+    val keyCol: String) extends VersionedStore {
 
   private def dir(version: Long): String = s"$basePath/v=$version"
+  protected def versionDir(v: Long): Path = new Path(dir(v))
 
-  private def fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def layout: String = "snapshot"
+
+  def withKeyCol(key: String): SnapshotStore = new SnapshotStore(spark, basePath, key)
 
   /** Atomic snapshot publish: write to a temp sibling, then a single
     * rename onto `v=<version>` once the write (and its `_SUCCESS`
@@ -763,27 +645,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     val out = fs.create(new Path(versionDir, "_commit_ts"), true)
     try out.writeUTF(ts.toString) finally out.close()
   }
-
-  /** Persist the store's construction contract (the key column) in a
-    * `_store.json` sidecar at the base — so a METADATA-ONLY consumer
-    * (SnapshotCatalog's SQL `DELETE FROM`, which must drive a
-    * key-ordered rewrite) can recover it without the caller
-    * re-supplying what the store was built with. Idempotent, written
-    * on first publish; advisory (the store API itself never reads
-    * it back). */
-  private def ensureStoreMeta(): Unit =
-    if (keyCol.nonEmpty) {
-      val p = new Path(basePath, "_store.json")
-      if (!fs.exists(p)) {
-        fs.mkdirs(new Path(basePath))
-        val esc = keyCol.replace("\\", "\\\\").replace("\"", "\\\"")
-        val out = fs.create(p, true)
-        try out.write(s"""{"keyCol": "$esc"}""".getBytes("UTF-8")) finally out.close()
-      }
-    }
-
-  /** The key column recorded by [[ensureStoreMeta]], when present. */
-  def storedKeyCol(): Option[String] = SnapshotStore.readStoredKeyCol(fs, basePath)
 
   /** DEEP CLONE to a new table at `dstBase`, this layout's way: each
     * version is a self-contained directory, so the clone's version 1
@@ -1046,62 +907,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
   }
 
 
-  private def colstatsDir(v: Long) = new Path(dir(v), "_colstats")
-
-  /** ANALYZE — per-column statistics of `version`, persisted as a
-    * `_colstats` sidecar inside the version dir (the
-    * post-publish companion of the zone map: versions stay immutable,
-    * sidecars are derived metadata). Default NDV is
-    * approx_count_distinct (HLL — ONE fused pass over every column,
-    * no expand, the 100 TB mode); `exactNdv` runs one count_distinct
-    * job per column instead (exact, k extra passes — the fused
-    * multi-distinct EXPAND would multiply the stream k-fold, the
-    * q_approx_gate lesson). min/max land as strings so the stats
-    * frame has one uniform schema across column types. */
-  def analyzeColumns(version: Long, cols: Seq[String] = Nil,
-      exactNdv: Boolean = false): DataFrame = {
-    val df = read(version)
-    val supported: org.apache.spark.sql.types.DataType => Boolean = {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.DateType => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case org.apache.spark.sql.types.BooleanType => true
-      case _ => false
-    }
-    val target =
-      if (cols.nonEmpty) cols
-      else df.schema.fields.filter(f => supported(f.dataType)).map(_.name).toSeq
-    val missing = target.filterNot(df.columns.contains)
-    require(missing.isEmpty, s"analyzeColumns: not in the schema: ${missing.mkString(", ")}")
-    val aggs = target.flatMap { c => Seq(
-      count(col(c)).as(s"__cnt_$c"),
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c")) ++
-      (if (exactNdv) Nil else Seq(approx_count_distinct(col(c)).as(s"__ndv_$c")))
-    } :+ count(lit(1)).as("__rows")
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val nRows = row.getAs[Long]("__rows")
-    val ndvs: Map[String, Long] =
-      if (!exactNdv) target.map(c => c -> row.getAs[Long](s"__ndv_$c")).toMap
-      else target.map(c =>
-        c -> df.agg(count_distinct(col(c)).as("d")).head().getLong(0)).toMap
-    val out = target.map { c =>
-      (c, nRows, nRows - row.getAs[Long](s"__cnt_$c"), ndvs(c),
-        Option(row.getAs[String](s"__min_$c")).orNull,
-        Option(row.getAs[String](s"__max_$c")).orNull)
-    }
-    val stats = spark.createDataFrame(out)
-      .toDF("col_name", "n_rows", "n_nulls", "ndv", "min_str", "max_str")
-    stats.coalesce(1).write.mode("overwrite").parquet(colstatsDir(version).toString)
-    stats
-  }
-
-  /** The stats [[analyzeColumns]] stored for `version`, if any. */
-  def columnStats(version: Long): Option[DataFrame] =
-    if (!fs.exists(new Path(colstatsDir(version), "_SUCCESS"))) None
-    else Some(ParquetSchemas.read(spark, colstatsDir(version).toString))
-
   private def bloomDir(v: Long, column: String) =
     new Path(dir(v), s"_bloom_$column")
 
@@ -1271,94 +1076,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
   def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame =
     readWhere(version, keyCol, lo, hi)
 
-  /** Declared partition COLUMN NAMES — for a temporal transform spec
-    * (`days(ts)` / `months(ts)`) this is the DERIVED identity column
-    * (`ts__day` / `ts__month`) every landing materializes and all
-    * pruning/drop machinery keys on. Empty on an unpartitioned store. */
-  def storedPartitionBy(): Seq[String] = storedPartitionSpecs().map(_.name)
-
-  /** The raw PARTITIONED BY declaration as recorded in the sidecar
-    * (identity names and transform specs). */
-  def storedPartitionSpecs(): Seq[SnapshotStore.PartSpec] =
-    SnapshotStore.readStoredPartitionBy(fs, basePath)
-      .map(SnapshotStore.parsePartitionSpec)
-
-  private def deriveParts(df: DataFrame): DataFrame =
-    SnapshotStore.derivePartitionCols(df, storedPartitionSpecs())
-
-  /** Declared CHECK constraints ([[SnapshotStore.readConstraints]]). */
-  def constraints(): Seq[(String, String)] =
-    SnapshotStore.readConstraints(fs, basePath)
-
-  /** ADD CONSTRAINT — Delta's contract: the TIP is scanned ONCE for
-    * existing violations (fail = nothing recorded), then every later
-    * landing validates its new rows. Write-time only: pinned history
-    * is never re-judged. */
-  def addConstraint(name: String, exprSql: String): Unit = {
-    require(name.matches("[A-Za-z0-9_]+"),
-      s"constraint name must be [A-Za-z0-9_]+, got '$name'")
-    val cur = constraints()
-    require(!cur.exists(_._1 == name), s"constraint '$name' already exists")
-    latestVersion().foreach { v =>
-      val bad = read(v).filter(coalesce(expr(exprSql), lit(true)) === lit(false))
-        .limit(1).count()
-      if (bad > 0) throw new ConstraintViolationException(
-        s"ADD CONSTRAINT '$name': existing rows of version $v violate ($exprSql)")
-    }
-    SnapshotStore.writeConstraints(fs, basePath, cur :+ ((name, exprSql)))
-  }
-
-  def dropConstraint(name: String): Unit = {
-    val cur = constraints()
-    require(cur.exists(_._1 == name),
-      s"no constraint named '$name' (have: ${cur.map(_._1).mkString(", ")})")
-    SnapshotStore.writeConstraints(fs, basePath, cur.filterNot(_._1 == name))
-  }
-
-  /** Validate `df` against every declared constraint — one short-
-    * circuiting probe job per constraint (first violating row lands in
-    * the error as JSON). Runs BEFORE any landing I/O, so a rejected
-    * commit publishes nothing. A deliberate extra pass over the
-    * incoming rows: an inline raise_error filter would be free but can
-    * fire spuriously under Catalyst filter reordering (the assert_true
-    * pushdown hazard) — correctness wins. */
-  private def enforceConstraints(df: DataFrame, what: String): Unit =
-    constraints().foreach { case (n, e) =>
-      val hit = df.filter(coalesce(expr(e), lit(true)) === lit(false))
-        .select(to_json(struct(df.columns.map(col): _*)).as("row"))
-        .limit(1).collect()
-      if (hit.nonEmpty) throw new ConstraintViolationException(
-        s"CHECK constraint '$n' (($e)) rejected $what: ${hit.head.getString(0)}")
-    }
-
-  /** A schema verb may not orphan a constraint: renaming/dropping a
-    * column a CHECK expression references would leave the guard
-    * unevaluable (or silently wrong). Refuse until it is dropped. */
-  private def requireNoConstraintOn(colName: String, op: String): Unit =
-    constraints().find(c =>
-        ("""\b""" + java.util.regex.Pattern.quote(colName) + """\b""").r
-          .findFirstIn(c._2).isDefined)
-      .foreach { case (n, e) => throw new UnsupportedOperationException(
-        s"$op '$colName': CHECK constraint '$n' (($e)) references it — " +
-          s"drop the constraint first") }
-
-  /** Physical arrangement every landing goes through —
-    * [[ManifestStore]]'s twin: key-range + key-sort when
-    * unpartitioned; partition-tuple clustering (≤ `numFiles` files per
-    * tuple via a key-hash salt, key-sorted within) when partitioned,
-    * so [[landFlat]]'s hive split keeps one partition tuple per file
-    * and the zone map records exact (min==max) partition stats. */
-  private def arrange(df: DataFrame, numFiles: Int): DataFrame =
-    storedPartitionBy() match {
-      case Seq() =>
-        df.repartitionByRange(numFiles, col(keyCol)).sortWithinPartitions(keyCol)
-      case pcs =>
-        val d = deriveParts(df) // temporal transforms land derived identity cols
-        val exprs = pcs.map(col) :+ pmod(hash(col(keyCol)), lit(math.max(numFiles, 1)))
-        d.repartition(exprs: _*)
-          .sortWithinPartitions((pcs :+ keyCol).map(col): _*)
-    }
-
   /** Land `df`'s part files FLAT into `tmp` (the version dir under
     * construction) and return their names. Partitioned stores stage
     * hive-style on duplicated `__gp_<col>` directory columns (the
@@ -1517,10 +1234,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     }
     carryDvInto(fromVersion, tmp, carriedParts.map(_.getName).toSet)
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    evolvedSchema(fromVersion).foreach { sc =>
-      val out = fs.create(new Path(tmp, "_schema.json"), true)
-      try out.write(sc.json.getBytes("UTF-8")) finally out.close()
-    }
+    evolvedSchema(fromVersion).foreach(Sidecars.writeSchema(fs, tmp, _))
     // zone map: carried entries re-home; only the new files scan —
     // staged INSIDE tmp so version + map publish in one rename
     val zmStatsCols = zm.columns.toSeq
@@ -1570,10 +1284,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       if (survivors.isEmpty)
         evolvedSchema(fromVersion).orElse(Some(read(fromVersion).schema))
       else evolvedSchema(fromVersion)
-    schema.foreach { sc =>
-      val out = fs.create(new Path(tmp, "_schema.json"), true)
-      try out.write(sc.json.getBytes("UTF-8")) finally out.close()
-    }
+    schema.foreach(Sidecars.writeSchema(fs, tmp, _))
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
     stageZoneMap(tmp, toVersion,
       zm.filter(!regexp_extract(col("file"), "[^/]+$", 0).isin(droppedNames.toSeq: _*))
@@ -1615,10 +1326,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       sc.map(SnapshotStore.toPhysical(rewrite, _)).getOrElse(rewrite), tmp)
     carryDvInto(fromVersion, tmp, carried.map(_.getName).toSet)
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    sc.foreach { x =>
-      val out = fs.create(new Path(tmp, "_schema.json"), true)
-      try out.write(x.json.getBytes("UTF-8")) finally out.close()
-    }
+    sc.foreach(Sidecars.writeSchema(fs, tmp, _))
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
     val carriedNames = carried.map(_.getName).toSet
     val droppedNames = zm
@@ -1787,14 +1495,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       .sorted
   }
 
-  /** Pre-check half of the commit CAS ([[CommitProtocol]]): refuse a
-    * commit whose target version already exists before doing the
-    * work; the authoritative check is the token verify at publish. */
-  private def requireFreeVersion(v: Long): Unit =
-    if (versions().contains(v))
-      throw new VersionConflictException(
-        s"$basePath: version $v already exists")
-
   /** CAS publication of a fully-built version dir — the layout's
     * [[CommitProtocol]] hookup. Exactly one concurrent publisher of
     * `toVersion` wins; the rest throw [[VersionConflictException]]
@@ -1812,49 +1512,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     noteCommit(toVersion, what, opParams, statsFrom, metrics)
   }
 
-  /** OPTIMISTIC-CONCURRENCY merge — [[ManifestStore.mergeAtTip]]'s
-    * dir-per-version twin: attempt `mergeDelta(tip, tip+1, …)`; on a
-    * lost commit race, re-diff against the new tip — commits touching
-    * DISJOINT key sets commute, so rebase and retry; overlapping keys
-    * abort with [[ConcurrentWriteConflictException]] (retrying would
-    * silently drop one writer's update). Returns the published
-    * version. */
-  def mergeAtTip(delta: DataFrame, deleteKeys: Option[DataFrame] = None,
-      numNewFiles: Int = 4, commitTs: Option[Long] = None,
-      maxRetries: Int = 5, readVersion: Option[Long] = None): Long = {
-    val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    val mine = delK.foldLeft(delta.select(keyCol))(_ unionByName _)
-      .distinct().materialize()
-    // the conflict check runs against the version the delta was DERIVED
-    // from (Delta's OptimisticTransaction.readVersion): pass it when the
-    // delta was computed from an earlier read; default = current tip
-    var base = readVersion.orElse(latestVersion()).getOrElse(
-      throw new IllegalStateException(
-        s"mergeAtTip on $basePath: store has no committed versions"))
-    var attempt = 0
-    while (true) {
-      try {
-        mergeDelta(base, base + 1, delta, deleteKeys, numNewFiles, commitTs)
-        return base + 1
-      } catch {
-        case e: VersionConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          val tip = latestVersion().getOrElse(base)
-          if (tip > base) {
-            val theirs = diff(base, tip).select(keyCol)
-            if (mine.join(theirs, Seq(keyCol), "left_semi").limit(1).count() > 0)
-              throw new ConcurrentWriteConflictException(
-                s"mergeAtTip on $basePath: concurrent commit(s) v${base + 1}..v$tip " +
-                  "changed keys this merge also touches — rebasing would drop one " +
-                  "writer's update; re-read the tip and re-derive the delta")
-            base = tip
-          }
-      }
-    }
-    -1L // unreachable: the loop returns or throws
-  }
-
   private def dvPath(version: Long) = new Path(dir(version), "_dv")
 
   /** The version's DELETION VECTOR — (file basename, row position)
@@ -1865,20 +1522,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
   def dvFrame(version: Long): Option[DataFrame] =
     if (!fs.exists(new Path(dvPath(version), "_SUCCESS"))) None
     else Some(spark.read.schema(SnapshotStore.dvSchema).parquet(dvPath(version).toString))
-
-  /** Rows `version` SERVES after its deletion-vector mask — the
-    * PLANNING statistic behind the masked-route relation's
-    * `sizeInBytes` (a small DV-masked dimension table must still
-    * broadcast in SQL joins). Metadata-only: the row total comes from
-    * the version-log checkpoint (O(1) warm) and the mask size from
-    * the DV sidecar's parquet FOOTER record counts (the mask is
-    * metadata-sized by the auto policies) — no data pages, no job. */
-  def visibleRowsOf(version: Long): Long =
-    math.max(0L, rowCountOf(version) - dvRowCount(version))
-
-  /** Stored (pre-mask) row total, checkpoint-served. */
-  def rowCountOf(version: Long): Long =
-    historyEntries().find(_._1 == version).map(_._2.nRows).getOrElse(0L)
 
   /** Mask entry count from the DV parquet footers — driver-side, one
     * footer open per DV part file (the DV lands coalesce(1)). */
@@ -1946,28 +1589,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     case None => masked(version, Seq(dir(version)), None)
   })
 
-  /** Commit history — the `DESCRIBE HISTORY` surface (ManifestStore
-    * .history's twin for this layout): one row per version with its
-    * commit timestamp and file/row totals. Metadata-only — an FS
-    * listing plus each file's parquet FOOTER record count, no data
-    * pages read; |versions| rows. Served in SQL as the
-    * `<cat>.<store>.history` metadata table. */
-  def history(): DataFrame = {
-    val spark0 = spark
-    import spark0.implicits._
-    historyEntries().map { case (v, e) =>
-        (v, e.commitTs, e.nFiles, e.nRows, e.op, e.opParams, e.metrics) }
-      .toDF("version", "commit_ts", "n_files", "n_rows",
-        "operation", "operation_params", "operation_metrics")
-  }
-
-  /** Per-version (version, bytes_added, n_rows, operation) ascending —
-    * ONE checkpoint read serves every version (the change feed's
-    * size-estimate input; calling [[commitBytes]] per version would
-    * re-read the checkpoint |versions| times). */
-  def commitStats(): Seq[(Long, Long, Long, String)] =
-    historyEntries().map { case (v, e) => (v, e.bytes, e.nRows, e.op) }
-
   /** One version's checkpoint row REBUILT from its dir — the
     * self-heal / publish-time unit: commit ts from the sidecar (or
     * the `_SUCCESS` mtime for pre-sidecar dirs), file/row counts from
@@ -1994,7 +1615,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     * version count; entries missing from the checkpoint (crash,
     * concurrent publisher, external writer, invalidation) rebuild
     * from the dirs and the checkpoint rewrites. */
-  private def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
+  protected def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
     val vs = versions()
     val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
     val live = ckpt.filter { case (v, _) => vs.contains(v) }
@@ -2038,35 +1659,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     } catch { case scala.util.control.NonFatal(e) =>
       SnapshotStore.checkpointUpdateFailed("SnapshotStore", basePath, v, e) }
 
-  /** Drop the checkpoint wholesale — used by verbs that change
-    * EXISTING versions' stats (compact swaps a version's files in
-    * place; prune changes which commit counts "whole" for bytes):
-    * the next read rebuilds from truth. */
-  private def invalidateHistoryCkpt(): Unit =
-    try fs.delete(new Path(basePath, "_history.json"), false): Unit
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  private def schemaSidecar(version: Long) = new Path(dir(version), "_schema.json")
-
-  /** The version's EVOLVED read schema, when a [[mergeDelta]] schema
-    * evolution recorded one: the union of every column the version's
-    * files collectively hold (old carried files simply lack the newer
-    * columns — the parquet reader yields null there), with each
-    * evolution-introduced column's fill default riding in its field
-    * metadata (`graft.fill`). The `_schema.json` name starts with '_'
-    * so file listings hide it from data scans, like `_zonemap`. */
-  def evolvedSchema(version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val p = schemaSidecar(version)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(txt)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-  }
-
   /** Fill defaults recorded in an evolved schema's field metadata,
     * typed for `na.fill`. Applied uniformly at READ time, so a row
     * reads identically whether its file was rewritten by the evolving
@@ -2100,7 +1692,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     fs.listStatus(new Path(dir(version))).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("part-"))
 
-  def latestVersion(): Option[Long] = versions().lastOption
+  def dataPaths(version: Long): Seq[String] = dataFiles(version).map(_.toString)
 
   /** Bytes a commit ADDED: sizes of the part files whose basename is
     * NEW vs the retained predecessor (byte-carried files share their
@@ -2299,8 +1891,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       // the evolved union schema publishes atomically WITH the version
       // (inside tmp before the rename) — a version dir can never hold
       // mixed-schema files without the sidecar naming their union
-      val out = fs.create(new Path(tmp, "_schema.json"), true)
-      try out.write(unionSchema.json.getBytes("UTF-8")) finally out.close()
+      Sidecars.writeSchema(fs, tmp, unionSchema)
     }
     // incremental zone map: untouched rows carry over with the version
     // prefix remapped; only the new files are scanned — staged inside
@@ -2368,8 +1959,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     dvFrame(fromVersion).foreach(_.coalesce(1).write.mode("overwrite")
       .parquet(new Path(tmp, "_dv").toString))
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    val out = fs.create(new Path(tmp, "_schema.json"), true)
-    try out.write(newSchema.json.getBytes("UTF-8")) finally out.close()
+    Sidecars.writeSchema(fs, tmp, newSchema)
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
     zoneMap(fromVersion).foreach { zm =>
       val keep = zm.columns.toSeq.filterNot(c =>
@@ -2434,8 +2024,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     dvFrame(fromVersion).foreach(_.coalesce(1).write.mode("overwrite")
       .parquet(new Path(tmp, "_dv").toString))
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    val out = fs.create(new Path(tmp, "_schema.json"), true)
-    try out.write(newSchema.json.getBytes("UTF-8")) finally out.close()
+    Sidecars.writeSchema(fs, tmp, newSchema)
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
     stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
     casPublish(tmp, toVersion, "widenColumn",
@@ -2485,8 +2074,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     dvFrame(fromVersion).foreach(_.coalesce(1).write.mode("overwrite")
       .parquet(new Path(tmp, "_dv").toString))
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    val out = fs.create(new Path(tmp, "_schema.json"), true)
-    try out.write(newSchema.json.getBytes("UTF-8")) finally out.close()
+    Sidecars.writeSchema(fs, tmp, newSchema)
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
     stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
     casPublish(tmp, toVersion, "renameColumn",
@@ -2593,10 +2181,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         .parquet(new Path(tmp, "_dv").toString)
       fs.create(new Path(tmp, "_SUCCESS"), true).close()
       writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-      if (evolvedSchema(fromVersion).isDefined) {
-        val out = fs.create(new Path(tmp, "_schema.json"), true)
-        try out.write(unionSchema.json.getBytes("UTF-8")) finally out.close()
-      }
+      if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
       // no file changed identity: the zone map carries verbatim (its
       // envelopes stay CONSERVATIVE over masked rows — pruning may
       // open a file whose matches are all masked, never skip a live row)
@@ -2622,10 +2207,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     }
     carryDvInto(fromVersion, tmp, untouchedParts.map(_.getName).toSet)
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    if (evolvedSchema(fromVersion).isDefined) {
-      val out = fs.create(new Path(tmp, "_schema.json"), true)
-      try out.write(unionSchema.json.getBytes("UTF-8")) finally out.close()
-    }
+    if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
     // zone map: untouched rows carry with the version remapped, only
     // the rewritten files rescan (same incremental shape as
     // mergeDelta) — staged inside tmp
@@ -2649,6 +2231,9 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         "numRemovedFiles" -> touchedParts.length.toLong))
     (untouchedParts.length, newNames.size, deleted)
   }
+
+  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column): (Int, Int, Long) =
+    deleteWhere(fromVersion, toVersion, pred, mode = "auto")
 
   /** MERGE-ON-READ MERGE — [[ManifestStore.mergeDeltaMor]]'s
     * dir-per-version twin: superseded rows mask into the deletion
@@ -2693,10 +2278,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       mask.select("file", "pos").coalesce(1).write.mode("overwrite")
         .parquet(new Path(tmp, "_dv").toString)
     writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    evolvedSchema(fromVersion).foreach { x =>
-      val out = fs.create(new Path(tmp, "_schema.json"), true)
-      try out.write(x.json.getBytes("UTF-8")) finally out.close()
-    }
+    evolvedSchema(fromVersion).foreach(Sidecars.writeSchema(fs, tmp, _))
     fs.create(new Path(tmp, "_SUCCESS"), true).close()
     zoneMap(fromVersion).foreach { zm =>
       val zmStatsCols = zm.columns.toSeq
@@ -2752,10 +2334,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       dv.foreach(_.coalesce(1).write.mode("overwrite")
         .parquet(new Path(tmp, "_dv").toString))
       writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-      if (evolvedSchema(fromVersion).isDefined) {
-        val out = fs.create(new Path(tmp, "_schema.json"), true)
-        try out.write(unionSchema.json.getBytes("UTF-8")) finally out.close()
-      }
+      if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
       fs.create(new Path(tmp, "_SUCCESS"), true).close()
     }
     def applySet(df: DataFrame): DataFrame =
@@ -2828,10 +2407,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       }
       carryDvInto(fromVersion, tmp, untouchedParts.map(_.getName).toSet)
       writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-      if (evolvedSchema(fromVersion).isDefined) {
-        val out = fs.create(new Path(tmp, "_schema.json"), true)
-        try out.write(unionSchema.json.getBytes("UTF-8")) finally out.close()
-      }
+      if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
       zm.foreach { z =>
         val touchedNames = touchedParts.map(_.getName).toSet
         val carried = z.filter(!regexp_extract(col("file"), "[^/]+$", 0)
@@ -2869,10 +2445,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         }
         fs.create(new Path(tmp, "_SUCCESS"), true).close()
         writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-        evolvedSchema(fromVersion).foreach { sc =>
-          val out = fs.create(new Path(tmp, "_schema.json"), true)
-          try out.write(sc.json.getBytes("UTF-8")) finally out.close()
-        }
+        evolvedSchema(fromVersion).foreach(Sidecars.writeSchema(fs, tmp, _))
         stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
         casPublish(tmp, toVersion, "foldDv")
         (allParts.length, 0, 0L)
@@ -2892,10 +2465,7 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
           org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
         }
         writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-        sc.foreach { x =>
-          val out = fs.create(new Path(tmp, "_schema.json"), true)
-          try out.write(x.json.getBytes("UTF-8")) finally out.close()
-        }
+        sc.foreach(Sidecars.writeSchema(fs, tmp, _))
         // zone map rebuilds with one narrow stats scan over the staged
         // files (file names changed for the rewritten minority; a
         // carry+rescan hybrid buys little at fold cadence); the fold
@@ -2952,17 +2522,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       Some(if (hist.size <= 1) df else df.withColumn("spec_id", lit(cur)))
     }
 
-  /** The `_partition.json` spec history + current id (see
-    * [[SnapshotStore.readPartitionSpecHistory]]). */
-  private def specHistory: (Seq[Seq[String]], Int) =
-    SnapshotStore.readPartitionSpecHistory(fs, basePath)
-
-  /** A zone-map row's spec id (absent column ≡ spec 0 — pre-evolution
-    * files all belong to the original spec by construction). */
-  private def specIdCol(zm: DataFrame): org.apache.spark.sql.Column =
-    if (zm.columns.contains("spec_id")) coalesce(col("spec_id"), lit(0))
-    else lit(0)
-
   /** EVOLVE this store's partition spec (metadata-only —
     * [[SnapshotStore.evolvePartitionSpec]]); returns the new current
     * spec id. */
@@ -2980,19 +2539,6 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
         }
       }
     SnapshotStore.evolvePartitionSpec(fs, basePath, cols)
-  }
-
-  /** Post-evolution reads RECOMPUTE every historical spec's derived
-    * column from its source — [[ManifestStore.recomputeDerived]]'s
-    * twin (mixed-spec files physically carry different derived
-    * columns; recomputation keeps diffs/compaction content-invariant).
-    * No-op for never-evolved stores. */
-  private def recomputeDerived(df: DataFrame): DataFrame = {
-    val (hist, _) = specHistory
-    if (hist.size <= 1) df
-    else hist.flatten.distinct.map(SnapshotStore.parsePartitionSpec)
-      .filter(sp => sp.transform.isDefined && df.columns.contains(sp.source))
-      .foldLeft(df)((d, sp) => d.withColumn(sp.name, SnapshotStore.deriveColumn(sp)))
   }
 
   /** SOURCE-column time-range read over an EVOLVED partition spec —
@@ -3072,6 +2618,9 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
       if (opParams.isEmpty) s"of v$fromVersion" else opParams,
       statsFrom = Some(fromVersion))
   }
+
+  def restoreVersion(fromVersion: Long, toVersion: Long, commitTs: Option[Long]): Unit =
+    restoreVersion(fromVersion, toVersion, commitTs, op = "restoreVersion")
 
   def diff(fromVersion: Long, toVersion: Long): DataFrame =
     diffFrames(read(fromVersion), read(toVersion))
@@ -3285,6 +2834,9 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     else { compact(tip, targetBytes): Unit; Some(tip) }
   }
 
+  def maybeCompact(maxFiles: Int): Option[Long] =
+    maybeCompact(maxFiles, targetBytes = 128L << 20)
+
   /** AUTO-RETENTION hook — prune to the newest `maxVersions`; the
     * streaming sink's one-version-per-micro-batch growth bound.
     * Returns versions dropped. */
@@ -3339,28 +2891,4 @@ class SnapshotStore(spark: SparkSession, basePath: String, keyCol: String) {
     toDrop
   }
 
-  /** Legal hold — [[ChunkStore.hold]]'s snapshot-store twin: [[prune]]
-    * keeps a held version no matter what `keepLast` says, until
-    * [[release]]. Retention is automation; holds are human compliance
-    * decisions automation must not override. One `_holds/<version>`
-    * marker file, idempotent. */
-  def hold(version: Long): Unit = {
-    require(versions().contains(version), s"version $version does not exist")
-    val p = new Path(s"$basePath/_holds/$version")
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-  }
-
-  /** Release a [[hold]]; idempotent. */
-  def release(version: Long): Unit =
-    fs.delete(new Path(s"$basePath/_holds/$version"), false): Unit
-
-  /** Versions currently under a legal hold. */
-  def holds(): Seq[Long] = {
-    val dir0 = new Path(s"$basePath/_holds")
-    if (!fs.exists(dir0)) Seq.empty
-    else fs.listStatus(dir0).map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
-  }
 }

@@ -516,10 +516,12 @@ object StreamOps {
     * needs. Without `seqCol` there is no order to collapse by, so the
     * batch is REQUIRED to hold at most one change per key (fail-fast —
     * a duplicate key would otherwise land twice in the new version).
-    * The store must already hold `initialBase` written
-    * range-partitioned (the zone map drives touched-file detection).
+    * The store must already hold `initialBase` (on the snapshot layout
+    * written range-partitioned: the zone map drives touched-file
+    * detection). Either layout: [[linkedMergeStream]] is this verb
+    * under the name the linked layout's callers use.
     * Returns the started query. */
-  def continuousMerge(changes: DataFrame, store: graft.operators.SnapshotStore,
+  def continuousMerge(changes: DataFrame, store: graft.operators.VersionedStore,
       keyCol: String, checkpointDir: String,
       changeTypeCol: String = "change_type",
       seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
@@ -544,19 +546,7 @@ object StreamOps {
       keyCol: String, checkpointDir: String,
       changeTypeCol: String = "change_type",
       seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    versionChainStream(changes, checkpointDir, () =>
-      store.latestVersion().getOrElse(throw new IllegalStateException(
-        "the linked merge stream needs a base version (ManifestStore.write) in the store"))
-    ) { (batch, from, to) =>
-      if (!store.versions().contains(to)) {
-        val lastPerKey = collapseLastPerKey(batch, keyCol, seqCol)
-        val ups = lastPerKey.filter(col(changeTypeCol).isin("insert", "update"))
-          .drop(changeTypeCol)
-        val dels = lastPerKey.filter(col(changeTypeCol) === "delete").select(keyCol)
-        store.mergeDelta(from, to, ups, Some(dels))
-        ()
-      }
-    }
+    continuousMerge(changes, store, keyCol, checkpointDir, changeTypeCol, seqCol)
 
   /** STREAMING MATERIALIZED VIEW — [[graft.operators.Snapshot
     * .maintainAggregate]] run continuously: consume a CDF feed stream
@@ -621,13 +611,13 @@ object StreamOps {
     * version already committed (replay after restart — publish was
     * atomic, so an existing version is complete), and hands
     * `(batch, to-1, to)` to the merge body. */
-  private def mergeStream(changes: DataFrame, store: graft.operators.SnapshotStore,
+  private def mergeStream(changes: DataFrame, store: graft.operators.VersionedStore,
       checkpointDir: String, skipCommitted: Boolean = true)(
       mergeBatch: (Dataset[org.apache.spark.sql.Row], Long, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     versionChainStream(changes, checkpointDir, () =>
       store.latestVersion().getOrElse(throw new IllegalStateException(
-        "the merge stream needs a base snapshot (writeRangePartitioned) in the store"))
+        s"the merge stream needs a base version in the store at ${store.basePath}"))
     ) { (batch, from, to) =>
       if (!skipCommitted || !store.versions().contains(to)) mergeBatch(batch, from, to)
     }
@@ -691,9 +681,11 @@ object StreamOps {
     * (per-component skip, as [[annIndexStream]] does), the rest merge,
     * the marker lands. A batch with no rows for some table still
     * advances that table (CoW carry of every file), so a committed
-    * group version always has every table present. */
+    * group version always has every table present. Either layout:
+    * [[lakeLinkedMergeStream]] is this verb under the linked layout's
+    * name. */
   def lakeMergeStream(changes: DataFrame,
-      stores: Map[String, graft.operators.SnapshotStore],
+      stores: Map[String, graft.operators.VersionedStore],
       groupCommitDir: String, keyCol: String, checkpointDir: String,
       tableCol: String = "table", changeTypeCol: String = "change_type",
       seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -703,7 +695,7 @@ object StreamOps {
     versionChainStream(changes, checkpointDir, () => {
       val bases = stores.map { case (n, st) =>
         n -> st.latestVersion().getOrElse(throw new IllegalStateException(
-          s"table '$n' needs a base snapshot (writeRangePartitioned) in its store"))
+          s"table '$n' needs a base version in its store"))
       }
       require(bases.values.toSet.size == 1,
         s"all stores must share a base version, got $bases")
@@ -745,47 +737,15 @@ object StreamOps {
       stores: Map[String, graft.operators.ManifestStore],
       groupCommitDir: String, keyCol: String, checkpointDir: String,
       tableCol: String = "table", changeTypeCol: String = "change_type",
-      seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(stores.nonEmpty, "empty table group")
-    val hconf = changes.sparkSession.sparkContext.hadoopConfiguration
-    val names = stores.keys.toSeq.sorted
-    versionChainStream(changes, checkpointDir, () => {
-      val bases = stores.map { case (n, st) =>
-        n -> st.latestVersion().getOrElse(throw new IllegalStateException(
-          s"table '$n' needs a base version (ManifestStore.write) in its store"))
-      }
-      require(bases.values.toSet.size == 1,
-        s"all stores must share a base version, got $bases")
-      val b = bases.values.head
-      writeGroupMarker(hconf, groupCommitDir, b, names)
-      b
-    }) { (batch, from, to) =>
-      names.foreach { name =>
-        val store = stores(name)
-        if (!store.versions().contains(to)) {
-          val slice = collapseLastPerKey(
-            batch.filter(col(tableCol) === name).drop(tableCol), keyCol, seqCol)
-          // project the union-schema feed down to THIS table's columns
-          // (its evolved schema if a sidecar exists)
-          val cols = store.read(from).schema.fieldNames.toSet
-          val ups = slice.filter(col(changeTypeCol).isin("insert", "update"))
-            .select(slice.columns.filter(cols.contains).toIndexedSeq.map(col): _*)
-          val dels = slice.filter(col(changeTypeCol) === "delete").select(keyCol)
-          store.mergeDelta(from, to, ups, Some(dels))
-        }
-      }
-      writeGroupMarker(hconf, groupCommitDir, to, names)
-    }
-  }
+      seqCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+    lakeMergeStream(changes, stores, groupCommitDir, keyCol, checkpointDir,
+      tableCol, changeTypeCol, seqCol)
 
   /** [[restoreGroup]] for a linked-store lake. */
   def restoreLinkedGroup(spark: SparkSession, groupCommitDir: String,
       stores: Map[String, graft.operators.ManifestStore],
-      version: Long): Map[String, DataFrame] = {
-    require(groupVersions(spark, groupCommitDir).contains(version),
-      s"group version $version is not committed")
-    stores.map { case (n, st) => n -> st.read(version) }
-  }
+      version: Long): Map[String, DataFrame] =
+    restoreGroup(spark, groupCommitDir, stores, version)
 
   /** Continuous encrypted dedup backup into the content-addressed
     * repository — [[graft.operators.ChunkStore]] fed by a CDC stream
@@ -1001,7 +961,7 @@ object StreamOps {
     * on a version no marker covers (e.g. the crash window between a
     * partial merge and its completing replay). */
   def restoreGroup(spark: SparkSession, groupCommitDir: String,
-      stores: Map[String, graft.operators.SnapshotStore],
+      stores: Map[String, graft.operators.VersionedStore],
       version: Long): Map[String, DataFrame] = {
     require(groupVersions(spark, groupCommitDir).contains(version),
       s"group version $version is not committed")

@@ -13,6 +13,8 @@ import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThan,
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.operators.VersionedStore
+
 /** The catalog-level CHANGE FEED — Delta/Iceberg's CDC-as-a-table UX
   * over the stores' own row-level `diff`:
   *
@@ -63,43 +65,11 @@ private[graft] object ChangeFeed {
       StructField("change_type", StringType, nullable = true),
       StructField("_commit_version", LongType, nullable = true)))
 
-  private def handles(spark: SparkSession, base: String, linked: Boolean,
-      keyCol: String) =
-    if (linked) Left(new graft.operators.ManifestStore(spark, base, keyCol))
-    else Right(new graft.operators.SnapshotStore(spark, base, keyCol))
-
-  def versionsOf(spark: SparkSession, base: String, linked: Boolean): Seq[Long] =
-    handles(spark, base, linked, "") match {
-      case Left(m) => m.versions()
-      case Right(s) => s.versions()
-    }
-
   /** (version, commit-ts millis) per retained version, ascending —
-    * resolved from the stores' own history (metadata-only). */
-  def commitTimesOf(spark: SparkSession, base: String,
-      linked: Boolean): Seq[(Long, Long)] =
-    handles(spark, base, linked, "").fold(_.history(), _.history())
-      .select("version", "commit_ts").collect()
+    * resolved from the store's own history (metadata-only). */
+  def commitTimesOf(store: VersionedStore): Seq[(Long, Long)] =
+    store.history().select("version", "commit_ts").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
-
-  /** Bytes commit `v` added — the byte-admission unit. */
-  def commitBytesOf(spark: SparkSession, base: String, linked: Boolean,
-      v: Long): Long =
-    handles(spark, base, linked, "").fold(_.commitBytes(v), _.commitBytes(v))
-
-  /** Per-version (version, bytes_added, n_rows, operation) ascending —
-    * ONE checkpoint read for the whole history (the feed-size
-    * estimate's input; per-version [[commitBytesOf]] calls would
-    * re-read the checkpoint |versions| times). */
-  def commitStatsOf(spark: SparkSession, base: String, linked: Boolean)
-      : Seq[(Long, Long, Long, String)] =
-    handles(spark, base, linked, "").fold(_.commitStats(), _.commitStats())
-
-  /** Deletion-vector entry count at `v` (0 without a mask) — footer
-    * metadata only; the feed-size estimate's delete-row term. */
-  def dvRowsOf(spark: SparkSession, base: String, linked: Boolean,
-      v: Long): Long =
-    handles(spark, base, linked, "").fold(_.dvRowCount(v), _.dvRowCount(v))
 
   /** Parse a user timestamp: epoch MILLIS (digits) or an ISO date /
     * datetime read in UTC (the session timezone both the specs and the
@@ -117,32 +87,27 @@ private[graft] object ChangeFeed {
 
   /** Resolve the stream start from `startingVersion` /
     * `startingTimestamp` (mutually exclusive). */
-  def resolveStart(spark: SparkSession, base: String, linked: Boolean,
+  def resolveStart(store: VersionedStore,
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap): Option[Long] = {
     val sv = Option(options.get("startingVersion")).map(_.toLong)
     val st = Option(options.get("startingTimestamp"))
     require(sv.isEmpty || st.isEmpty,
       "set either startingVersion or startingTimestamp, not both")
     sv.orElse(st.map(t =>
-      firstVersionAtOrAfter(spark, base, linked, parseTsMillis(t))))
+      firstVersionAtOrAfter(store, parseTsMillis(t))))
   }
 
   /** First retained version committed AT-OR-AFTER `ms` — the
     * `startingTimestamp` / since-ts resolution (at-or-after, so "since
     * Tuesday" never replays Monday's commit). A timestamp past the tip
     * resolves to tip+1: the stream serves only FUTURE commits. */
-  def firstVersionAtOrAfter(spark: SparkSession, base: String, linked: Boolean,
-      ms: Long): Long = {
-    val times = commitTimesOf(spark, base, linked)
+  def firstVersionAtOrAfter(store: VersionedStore, ms: Long): Long = {
+    val times = commitTimesOf(store)
     times.find(_._2 >= ms).map(_._1).getOrElse(times.last._1 + 1)
   }
 
-  def tipDataSchema(spark: SparkSession, base: String, linked: Boolean,
-      keyCol: String): StructType = {
-    val h = handles(spark, base, linked, keyCol)
-    val vs = h.fold(_.versions(), _.versions())
-    h.fold(_.read(vs.max), _.read(vs.max)).schema
-  }
+  def tipDataSchema(store: VersionedStore): StructType =
+    store.read(store.versions().max).schema
 
   /** Union of per-commit change frames for commits in [fromCommit,
     * toCommit], aligned to `target` ([[changesSchema]] of the serving
@@ -154,25 +119,23 @@ private[graft] object ChangeFeed {
     * serving relation re-applies the exact predicate above (V1
     * contract), so a conservative range here can never change
     * results. */
-  def changesBetween(spark: SparkSession, base: String, linked: Boolean,
-      keyCol: String, fromCommit: Long, toCommit: Long,
+  def changesBetween(spark: SparkSession, store: VersionedStore,
+      fromCommit: Long, toCommit: Long,
       target: StructType, allowInitialSnapshot: Boolean = true,
       preImages: Boolean = false,
       keyRange: Option[(Any, Any)] = None): DataFrame = {
-    val h = handles(spark, base, linked, keyCol)
-    val all = h.fold(_.versions(), _.versions())
+    val keyCol = store.keyCol
+    val all = store.versions()
     val inRange = all.filter(v => v >= fromCommit && v <= toCommit).sorted
     val kr = keyRange
     val steps = inRange.map { b =>
       all.filter(_ < b).lastOption match {
         case Some(a) =>
           val step = (preImages, kr) match {
-            case (true, Some((lo, hi))) =>
-              h.fold(_.diffCdfKeyRange(a, b, lo, hi), _.diffCdfKeyRange(a, b, lo, hi))
-            case (true, None) => h.fold(_.diffCdf(a, b), _.diffCdf(a, b))
-            case (false, Some((lo, hi))) =>
-              h.fold(_.diffKeyRange(a, b, lo, hi), _.diffKeyRange(a, b, lo, hi))
-            case (false, None) => h.fold(_.diff(a, b), _.diff(a, b))
+            case (true, Some((lo, hi))) => store.diffCdfKeyRange(a, b, lo, hi)
+            case (true, None) => store.diffCdf(a, b)
+            case (false, Some((lo, hi))) => store.diffKeyRange(a, b, lo, hi)
+            case (false, None) => store.diff(a, b)
           }
           align(step, keyCol, target, b, nullDeletes = !preImages)
         case None =>
@@ -185,15 +148,14 @@ private[graft] object ChangeFeed {
           // at commit b, so the read fails instead (Delta's
           // table_changes contract).
           if (!allowInitialSnapshot && b != 1L) throw new IllegalStateException(
-            s"change feed on $base: commit $b's predecessor has been pruned by " +
+            s"change feed on ${store.basePath}: commit $b's predecessor has been pruned by " +
               "retention, so a bounded VERSION AS OF range can no longer " +
               "reconstruct its exact change set (rows from older commits would " +
               s"be mis-attributed as inserts at $b). Stream with startingVersion " +
               "for initial-snapshot bootstrap semantics, or widen retention.")
           val state = kr match {
-            case Some((lo, hi)) =>
-              h.fold(_.readKeyRange(b, lo, hi), _.readKeyRange(b, lo, hi))
-            case None => h.fold(_.read(b), _.read(b))
+            case Some((lo, hi)) => store.readKeyRange(b, lo, hi)
+            case None => store.read(b)
           }
           align(state.withColumn("change_type", lit("insert")),
             keyCol, target, b)
@@ -240,8 +202,8 @@ private[graft] case class VersionOffset(v: Long) extends Offset {
   * (refusing deletes unless `ignoreDeletes`); otherwise the full
   * change-feed schema. See [[ChangeFeed]] for the materialize-and-
   * serve design. */
-private[graft] class ChangesMicroBatchStream(spark: SparkSession, base: String,
-    linked: Boolean, keyCol: String, schema: StructType, rowsOnly: Boolean,
+private[graft] class ChangesMicroBatchStream(spark: SparkSession, store: VersionedStore,
+    schema: StructType, rowsOnly: Boolean,
     ignoreDeletes: Boolean, startingVersion: Option[Long],
     checkpointLocation: String, maxVersionsPerTrigger: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None, preImages: Boolean = false)
@@ -276,13 +238,13 @@ private[graft] class ChangesMicroBatchStream(spark: SparkSession, base: String,
   @volatile private var pinnedTip: Option[Long] = None
   @volatile private var pinned: Boolean = false
   override def prepareForTriggerAvailableNow(): Unit = {
-    pinnedTip = ChangeFeed.versionsOf(spark, base, linked).maxOption
+    pinnedTip = store.versions().maxOption
     pinned = true
   }
 
   override def latestOffset(start: Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
-    val vs0 = ChangeFeed.versionsOf(spark, base, linked)
+    val vs0 = store.versions()
     if (pinned && pinnedTip.isEmpty) return start // prepared on an empty store
     val vs = pinnedTip.fold(vs0)(p => vs0.filter(_ <= p))
     if (vs.isEmpty) return start // pinned tip pruned mid-run: no progress
@@ -301,7 +263,7 @@ private[graft] class ChangesMicroBatchStream(spark: SparkSession, base: String,
       var broke = false
       pending.foreach { v =>
         if (!broke) {
-          acc += ChangeFeed.commitBytesOf(spark, base, linked, v)
+          acc += store.commitBytes(v)
           if (end == s || acc <= budget) end = v
           if (acc > budget) broke = true
         }
@@ -317,14 +279,14 @@ private[graft] class ChangesMicroBatchStream(spark: SparkSession, base: String,
     if (rowsOnly) ChangeFeed.changesSchema(schema) else schema
 
   override def initialOffset(): Offset = {
-    val vs = ChangeFeed.versionsOf(spark, base, linked)
-    require(vs.nonEmpty, s"change feed on $base: store has no committed versions")
+    val vs = store.versions()
+    require(vs.nonEmpty, s"change feed on ${store.basePath}: store has no committed versions")
     // offset = startingVersion - 1, so the starting commit itself replays
     VersionOffset(startingVersion.getOrElse(vs.min) - 1)
   }
 
   override def latestOffset(): Offset =
-    VersionOffset(ChangeFeed.versionsOf(spark, base, linked).max)
+    VersionOffset(store.versions().max)
 
   override def deserializeOffset(json: String): Offset = VersionOffset(json.toLong)
 
@@ -350,8 +312,7 @@ private[graft] class ChangesMicroBatchStream(spark: SparkSession, base: String,
       // (distributed write); a restart replay reuses it verbatim, so
       // a batch's content is frozen at first planning — the replay
       // contract Spark's offset log expects
-      ChangeFeed.changesBetween(spark, base, linked, keyCol, s + 1, e, cdfSchema,
-          preImages = preImages)
+      ChangeFeed.changesBetween(spark, store, s + 1, e, cdfSchema, preImages = preImages)
         .write.mode("overwrite").parquet(dir.toString)
     }
     val serveDir =
@@ -361,7 +322,7 @@ private[graft] class ChangesMicroBatchStream(spark: SparkSession, base: String,
         val hasDeletes = spill.filter(col("change_type") === "delete")
           .limit(1).count() > 0
         if (hasDeletes && !ignoreDeletes) throw new IllegalStateException(
-          s"streaming read of $base hit a commit in ($s, $e] containing DELETES: a " +
+          s"streaming read of ${store.basePath} hit a commit in ($s, $e] containing DELETES: a " +
             "plain-table stream carries row state only, so skipping them would " +
             "silently desync downstream state. Stream `<table>.changes` for the " +
             "full feed, or set .option(\"ignoreDeletes\", true) to drop them.")
@@ -491,12 +452,11 @@ private[graft] class StreamCapableScan(val d: Scan,
   * commit range — served as a [[V1Scan]], so the distributed diff
   * plan IS the scan) + MICRO_BATCH streaming. */
 private[graft] class ChangesTable(tableName: String, spark: SparkSession,
-    base: String, linked: Boolean, keyCol: String,
-    range: Option[(Long, Long)], preImages: Boolean = false)
+    store: VersionedStore, range: Option[(Long, Long)], preImages: Boolean = false)
     extends Table with SupportsRead {
 
-  private val feedSchema =
-    ChangeFeed.changesSchema(ChangeFeed.tipDataSchema(spark, base, linked, keyCol))
+  private val keyCol = store.keyCol
+  private val feedSchema = ChangeFeed.changesSchema(ChangeFeed.tipDataSchema(store))
 
   override def name(): String = tableName
   override def schema(): StructType = feedSchema
@@ -553,7 +513,7 @@ private[graft] class ChangesTable(tableName: String, spark: SparkSession,
             // overestimating only costs a shuffle. Preimage feeds
             // double-count updates, so double the bound.
             private lazy val sizeEstimate: Long = {
-              val stats = ChangeFeed.commitStatsOf(spark, base, linked)
+              val stats = store.commitStats()
               val width = 8L + feedSchema.fields.map(_.dataType.defaultSize.toLong).sum
               val rowsByV = stats.map { case (v, _, r, _) => v -> r }.toMap
               val ordered = stats.map(_._1)
@@ -568,8 +528,7 @@ private[graft] class ChangesTable(tableName: String, spark: SparkSession,
               }.sum
               // MoR deletes add ~no bytes AND keep physical row counts
               // flat: bound their contribution by the tip mask size
-              val dvRows = sel.map(_._1).lastOption.fold(0L)(v =>
-                ChangeFeed.dvRowsOf(spark, base, linked, v))
+              val dvRows = sel.map(_._1).lastOption.fold(0L)(store.dvRowCount)
               val bound = added + dvRows * width
               math.max(1L, if (preImages) 2L * bound else bound)
             }
@@ -618,16 +577,16 @@ private[graft] class ChangesTable(tableName: String, spark: SparkSession,
               // an EXPLICIT `a..b` range is a contract about those exact
               // commits: a pruned predecessor fails the read instead of
               // silently replaying full state as inserts
-              ChangeFeed.changesBetween(spark, base, linked, keyCol,
+              ChangeFeed.changesBetween(spark, store,
                 vLo, vHi, feedSchema, allowInitialSnapshot = range.isEmpty,
                 preImages = preImages, keyRange = keyRange).rdd
             }
           }
         }
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new ChangesMicroBatchStream(spark, base, linked, keyCol, feedSchema,
+          new ChangesMicroBatchStream(spark, store, feedSchema,
             rowsOnly = false, ignoreDeletes = false,
-            startingVersion = ChangeFeed.resolveStart(spark, base, linked, options),
+            startingVersion = ChangeFeed.resolveStart(store, options),
             checkpointLocation,
             maxVersionsPerTrigger =
               Option(options.get("maxVersionsPerTrigger")).map(_.toLong),

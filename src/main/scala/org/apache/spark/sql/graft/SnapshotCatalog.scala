@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.SnapshotStore
+import graft.operators.{ManifestStore, SnapshotStore, VersionedStore}
 
 /** SQL time travel over [[graft.operators.SnapshotStore]] lineages —
   * the `VERSION AS OF` / `TIMESTAMP AS OF` surface a lake engine
@@ -87,19 +87,11 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
   private def storePath(ident: Identifier): String =
     (ident.namespace() :+ ident.name()).mkString(s"$root/", "/", "")
 
-  // keyCol is irrelevant to the read-side metadata calls used here
-  private def storeFor(ident: Identifier) =
-    new SnapshotStore(spark, storePath(ident), keyCol = "")
-
-  /** A linked (manifest-over-shared-pool) lineage carries its versions
-    * under `_manifests/`; a snapshot lineage as `v=<n>` data dirs. */
-  private def isLinked(ident: Identifier): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${storePath(ident)}/_manifests")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def linkedFor(ident: Identifier) =
-    new graft.operators.ManifestStore(spark, storePath(ident), keyCol = "")
+  /** The store at `ident` under the layout it was written in; keyCol
+    * is irrelevant to the read-side metadata calls (the DML hooks and
+    * procedures re-key it with the recorded key column). */
+  private def storeFor(ident: Identifier): VersionedStore =
+    VersionedStore.open(spark, storePath(ident), keyCol = "")
 
   /** `graft.fill` field metadata → the SQL literal Spark's
     * existence-default machinery evaluates at scan time. CAST keeps
@@ -135,33 +127,20 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       }
     })
 
-  /** A linked store's pool dir: its own `files/` unless `_store.json`
-    * records a pool override (a SHALLOW CLONE reading the owner's
-    * shared pool — CALL clone). */
-  private def poolDirOf(base: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.SnapshotStore.readStoredPool(fs, base).getOrElse(s"$base/files")
-  }
-
-  private def tableFor(ident: Identifier, linked: Boolean, version: Long): Table = {
-    val base = storePath(ident)
-    // paths: a snapshot version is its data dir; a LINKED version is
-    // the manifest-resolved pool file list (shared files read in place
-    // — the zero-copy property carries straight into SQL). Schema: the
-    // evolved union sidecar when present (with fills projected as
-    // existence defaults — old pool files then yield the FILL for
-    // columns they predate, null absent a policy), else mergeSchema
-    // infers across footers.
-    val (paths, evolved0) =
-      if (linked) {
-        val st = linkedFor(ident)
-        val pool = poolDirOf(base)
-        (st.manifest(version).select("file").collect()
-          .map(r => s"$pool/${r.getString(0)}").toSeq,
-          st.evolvedSchema(version).map(projectFills))
-      } else
-        (Seq(s"$base/v=$version"), storeFor(ident).evolvedSchema(version).map(projectFills))
+  private def tableFor(ident: Identifier, st: VersionedStore, version: Long): Table = {
+    val base = st.basePath
+    // paths: a snapshot version is its data dir (one listing by the
+    // scan's own file index); a LINKED version is the manifest-resolved
+    // pool file list (shared files read in place — the zero-copy
+    // property carries straight into SQL). Schema: the evolved union
+    // sidecar when present (with fills projected as existence defaults
+    // — old pool files then yield the FILL for columns they predate,
+    // null absent a policy), else mergeSchema infers across footers.
+    val paths = st match {
+      case _: SnapshotStore => Seq(s"$base/v=$version")
+      case _ => st.dataPaths(version)
+    }
+    val evolved0 = st.evolvedSchema(version).map(projectFills)
     // temporal partition transforms land a DERIVED identity column in
     // the files — HIDDEN from SQL (SELECT * serves the declared
     // columns only; Iceberg's hidden-partitioning UX). Identity
@@ -221,30 +200,19 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     graft.operators.SnapshotStore.readPartitionSpecHistory(fs, base)._1.size
   }
 
-  private def maskedReadFor(ident: Identifier, linked: Boolean,
+  private def maskedReadFor(st: VersionedStore,
       version: Long): Option[() => org.apache.spark.sql.DataFrame] = {
-    val (hasDv, evolved) =
-      if (linked) {
-        val st = linkedFor(ident)
-        (st.dvFrame(version).isDefined, st.evolvedSchema(version))
-      } else {
-        val st = storeFor(ident)
-        (st.dvFrame(version).isDefined, st.evolvedSchema(version))
-      }
+    val (hasDv, evolved) = (st.dvFrame(version).isDefined, st.evolvedSchema(version))
     // temporal-partitioned tables also serve through the store read:
     // the V1 relation pushes timestamp predicates into the inner
     // parquet scan (the V2 parquet path cannot translate TIMESTAMP_NTZ
     // predicates at all), hides the derived column, and gains the
     // derived-range FILE pruning below
-    val temporal = temporalSpecs(storePath(ident))
+    val temporal = temporalSpecs(st.basePath)
     val has = hasDv || evolved.exists(graft.operators.SnapshotStore.hasMapping) ||
       temporal.nonEmpty
     if (!has) None
-    else Some { () =>
-      val df = if (linked) linkedFor(ident).read(version)
-        else storeFor(ident).read(version)
-      temporal.map(_.name).foldLeft(df)(_.drop(_))
-    }
+    else Some(() => temporal.map(_.name).foldLeft(st.read(version))(_.drop(_)))
   }
 
   /** Transform-aware FILE pruning for a temporal-partitioned table:
@@ -254,17 +222,17 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     * stores' own readWhereAll — manifest-envelope / zone-map pruned,
     * the metadata prune the exact filters then re-apply on top of.
     * None when no pushed filter bounds a source column. */
-  private def temporalPrunedReadFor(ident: Identifier, linked: Boolean,
+  private def temporalPrunedReadFor(st: VersionedStore,
       version: Long): Option[Array[org.apache.spark.sql.sources.Filter] =>
         Option[org.apache.spark.sql.DataFrame]] = {
-    val specs = temporalSpecs(storePath(ident))
+    val specs = temporalSpecs(st.basePath)
     if (specs.isEmpty) return None
     // an EVOLVED store prunes per-file by each file's OWN spec: route
     // source-column bounds through readSourceRange (the store-side
     // interval translation), instead of the single-spec derived-range
     // path below — which would consult only the current spec's stats
     // and read NULL for files that predate it
-    if (specHistorySize(storePath(ident)) > 1) {
+    if (specHistorySize(st.basePath) > 1) {
       return Some { filters =>
         import org.apache.spark.sql.sources._
         val sources = specs.map(_.source).distinct
@@ -284,9 +252,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         bounded.headOption.map { case (src, lo, hi) =>
           val loV = lo.getOrElse(java.sql.Timestamp.valueOf("0001-01-01 00:00:00"))
           val hiV = hi.getOrElse(java.sql.Timestamp.valueOf("9999-12-31 23:59:59"))
-          val df = if (linked) linkedFor(ident).readSourceRange(version, src, loV, hiV)
-            else storeFor(ident).readSourceRange(version, src, loV, hiV)
-          specs.map(_.name).distinct.foldLeft(df)(_.drop(_))
+          specs.map(_.name).distinct
+            .foldLeft(st.readSourceRange(version, src, loV, hiV))(_.drop(_))
         }
       }
     }
@@ -339,31 +306,27 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         }
       }
       if (preds.isEmpty) None
-      else {
-        val df = if (linked) linkedFor(ident).readWhereAll(version, preds)
-          else storeFor(ident).readWhereAll(version, preds)
-        Some(specs.map(_.name).foldLeft(df)(_.drop(_)))
-      }
+      else Some(specs.map(_.name).foldLeft(st.readWhereAll(version, preds))(_.drop(_)))
     }
   }
 
   /** Version-pinned table: native parquet when unmasked; the
     * DV-masked V1 relation (column-pruned + filter-pushed through the
     * inner plan) when the version carries a mask. */
-  private def pinnedTable(ident: Identifier, linked: Boolean, v: Long): Table =
-    maskedReadFor(ident, linked, v) match {
+  private def pinnedTable(ident: Identifier, st: VersionedStore, v: Long): Table =
+    maskedReadFor(st, v) match {
       case None =>
-        bucketedRouteFor(ident, linked, v) match {
-          case None => tableFor(ident, linked, v)
+        bucketedRouteFor(st, v) match {
+          case None => tableFor(ident, st, v)
           case route => new SnapshotTable(
-            tableForMasked(ident, linked, v),
+            tableForMasked(ident, st, v),
             None, None, None, bucketedRoute = route)
         }
       case some => new SnapshotTable(
-        tableForMasked(ident, linked, v),
+        tableForMasked(ident, st, v),
         None, None, None, maskedRead = some,
-        prunedRead = temporalPrunedReadFor(ident, linked, v),
-        visibleRows = Some(visibleRowsFor(ident, linked, v)))
+        prunedRead = temporalPrunedReadFor(st, v),
+        visibleRows = Some(() => st.visibleRowsOf(v)))
     }
 
   /** STORAGE-PARTITIONED JOIN route — the catalog half of
@@ -380,23 +343,16 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     * back to the plain route: correct, just shuffling, until a fresh
     * writeBucketed re-buckets. Evolved/masked versions never take this
     * route (the store read owns their semantics). */
-  private def bucketedRouteFor(ident: Identifier, linked: Boolean,
+  private def bucketedRouteFor(st: VersionedStore,
       version: Long): Option[BucketedRoute] = {
-    val base = storePath(ident)
+    val base = st.basePath
     val fsB = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.operators.SnapshotStore.readStoredBucketBy(fsB, base).flatMap {
       case (bCol, n) =>
-        val evolved = if (linked) linkedFor(ident).evolvedSchema(version)
-          else storeFor(ident).evolvedSchema(version)
-        if (evolved.isDefined) None
+        if (st.evolvedSchema(version).isDefined) None
         else {
-          val paths: Seq[String] =
-            if (linked) {
-              val pool = poolDirOf(base)
-              linkedFor(ident).manifest(version).select("file").collect()
-                .map(r => s"$pool/${r.getString(0)}").toSeq
-            } else storeFor(ident).dataFiles(version).map(_.toString)
+          val paths = st.dataPaths(version)
           val allBucketed = paths.nonEmpty && paths.forall { p =>
             val name = p.substring(p.lastIndexOf('/') + 1)
             graft.operators.SnapshotStore.bucketIdOf(name).exists(_ < n)
@@ -406,37 +362,21 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  /** Checkpoint-served visible-row statistic for the store-read SQL
-    * route — lazy (evaluated at plan time, once per relation), so
-    * loadTable itself stays metadata-free. */
-  private def visibleRowsFor(ident: Identifier, linked: Boolean,
-      v: Long): () => Long =
-    () => if (linked) linkedFor(ident).visibleRowsOf(v)
-      else storeFor(ident).visibleRowsOf(v)
-
   /** The DELEGATE for a table whose scan is served by the store read
     * (DV-masked / column-mapped / temporal-partitioned): only its
     * name/schema/partitioning are consulted, so it carries NO paths —
     * the plain delegate would stat every pool file (thousands of
     * driver-side opens per loadTable) for a file index nothing reads. */
-  private def tableForMasked(ident: Identifier, linked: Boolean,
+  private def tableForMasked(ident: Identifier, st: VersionedStore,
       version: Long): ParquetTable = {
-    val base = storePath(ident)
-    val evolved0 =
-      (if (linked) linkedFor(ident).evolvedSchema(version)
-       else storeFor(ident).evolvedSchema(version)).map(projectFills)
-    val hiddenCols = temporalSpecs(base).map(_.name).toSet
+    val evolved0 = st.evolvedSchema(version).map(projectFills)
+    val hiddenCols = temporalSpecs(st.basePath).map(_.name).toSet
     def hide(sc: StructType): StructType =
       StructType(sc.fields.filterNot(f => hiddenCols.contains(f.name)))
     val schema = evolved0.map(hide).getOrElse {
       // one footer: absent a sidecar the version never evolved, so
       // its files are schema-uniform by construction
-      val first =
-        if (linked) linkedFor(ident).manifest(version).select("file")
-          .limit(1).collect().headOption
-          .map(r => s"${poolDirOf(base)}/${r.getString(0)}")
-        else storeFor(ident).dataFiles(version).headOption.map(_.toString)
-      first.map(p => hide(ParquetSchemas.schema(spark, p))).getOrElse(
+      st.dataPaths(version).headOption.map(p => hide(ParquetSchemas.schema(spark, p))).getOrElse(
         throw new IllegalStateException(
           s"$catalogName.${ident.name()} version $version has no files and no " +
             "schema sidecar — cannot plan a scan"))
@@ -453,11 +393,11 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     * errors (permissions, corruption, timeouts) PROPAGATE — reporting
     * them as "table not found" would send the operator debugging the
     * wrong problem. */
-  private def resolve(ident: Identifier): (Boolean, Seq[Long]) = {
-    val linked = isLinked(ident)
-    val vs = if (linked) linkedFor(ident).versions() else storeFor(ident).versions()
+  private def resolve(ident: Identifier): (VersionedStore, Seq[Long]) = {
+    val st = storeFor(ident)
+    val vs = st.versions()
     if (vs.isEmpty) throw new NoSuchTableException(ident)
-    (linked, vs)
+    (st, vs)
   }
 
   /** `SELECT * FROM <cat>.<store>.history` / `<cat>.<store>.files` —
@@ -479,29 +419,19 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       || ident.namespace().isEmpty) return None
     val parent = Identifier.of(ident.namespace().dropRight(1), ident.namespace().last)
     try {
-      if (kind == "changes") return changesTableFor(parent, range = None)
+      if (kind == "changes") return changesTableFor(parent, storeFor(parent), range = None)
       // `.changes_cdf` — the same feed in Delta's CDF shape: updates
       // arrive as update_preimage/update_postimage row pairs
       if (kind == "changes_cdf")
-        return changesTableFor(parent, range = None, preImages = true)
+        return changesTableFor(parent, storeFor(parent), range = None, preImages = true)
+      val (st, vs) = resolve(parent)
       val df = kind match {
-        case "history" =>
-          if (isLinked(parent)) linkedFor(parent).history()
-          else {
-            val st = storeFor(parent)
-            if (st.versions().isEmpty) return None
-            st.history()
-          }
+        case "history" => st.history()
         case "dv" =>
           // the TIP's deletion vector as a table — (file, pos), empty
           // when unmasked: the observability half of merge-on-read
           // (what `CALL fold_dv` will rewrite, row by row)
-          val (linked0, vs0) = resolve(parent)
-          if (vs0.isEmpty) return None
-          val tip0 = vs0.max
-          val mask = if (linked0) linkedFor(parent).dvFrame(tip0)
-            else storeFor(parent).dvFrame(tip0)
-          mask.getOrElse(spark.createDataFrame(
+          st.dvFrame(vs.max).getOrElse(spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](),
             org.apache.spark.sql.types.StructType(Seq(
               org.apache.spark.sql.types.StructField("file",
@@ -514,23 +444,14 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           // transforms), constraint count, version count, and the
           // tip's commit ts + file/row totals served from the
           // version-log checkpoint (no data-file opens)
-          val (linkedD, vsD) = resolve(parent)
-          if (vsD.isEmpty) return None
-          val baseD = storePath(parent)
-          val fsD = new org.apache.hadoop.fs.Path(baseD)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val keyD = graft.operators.SnapshotStore.readStoredKeyCol(fsD, baseD)
-            .getOrElse("")
-          val pcsD = graft.operators.SnapshotStore.readStoredPartitionBy(fsD, baseD)
-          val consD = graft.operators.SnapshotStore.readConstraints(fsD, baseD)
-          val tipRow = (if (linkedD) linkedFor(parent).history()
-            else storeFor(parent).history())
-            .filter(org.apache.spark.sql.functions.col("version") === vsD.max)
+          val tipRow = st.history()
+            .filter(org.apache.spark.sql.functions.col("version") === vs.max)
             .head()
           val row = new java.util.ArrayList[org.apache.spark.sql.Row]()
           row.add(org.apache.spark.sql.Row(
-            if (linkedD) "linked" else "snapshot", keyD, pcsD.mkString(","),
-            consD.size.toLong, vsD.size.toLong, vsD.max,
+            st.layout, st.storedKeyCol().getOrElse(""),
+            st.storedPartitionSpecs().map(_.raw).mkString(","),
+            st.constraints().size.toLong, vs.size.toLong, vs.max,
             tipRow.getLong(1), tipRow.getLong(2), tipRow.getLong(3)))
           spark.createDataFrame(row, org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("layout",
@@ -554,19 +475,12 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         case "stats" =>
           // the tip's ANALYZE result as a table — only an analyzed
           // version has one (CALL analyze writes it)
-          val (linkedS, vsS) = resolve(parent)
-          val st = if (linkedS) linkedFor(parent).columnStats(vsS.max)
-            else storeFor(parent).columnStats(vsS.max)
-          st.getOrElse(return None)
+          st.columnStats(vs.max).getOrElse(return None)
         case "constraints" =>
           // the declared CHECK constraints as a table — (name, expr),
           // empty when none: the observability half of write-time
           // validation
-          val baseC = storePath(parent)
-          val fsC = new org.apache.hadoop.fs.Path(baseC)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          resolve(parent): Unit // store must exist
-          val cs = graft.operators.SnapshotStore.readConstraints(fsC, baseC)
+          val cs = st.constraints()
           if (cs.isEmpty)
             spark.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -580,15 +494,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           // SHOW PARTITIONS as a table — (partition cols…, n_files,
           // n_rows) off the tip's manifest / zone map, zero data-file
           // opens; only a PARTITIONED BY table has one
-          val base0 = storePath(parent)
-          val fs0 = new org.apache.hadoop.fs.Path(base0)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (graft.operators.SnapshotStore
-            .readStoredPartitionBy(fs0, base0).isEmpty) return None
-          val (linked1, vs1) = resolve(parent)
-          if (linked1) linkedFor(parent).partitions(vs1.max)
-          else storeFor(parent).partitions(vs1.max)
-        case _ => filesDf(parent).getOrElse(return None)
+          if (st.storedPartitionSpecs().isEmpty) return None
+          st.partitions(vs.max)
+        case _ => filesDf(st, vs.max)
       }
       Some(new HistoryTable(
         (parent.namespace() :+ parent.name()).mkString(".") + s".$kind", df))
@@ -600,143 +508,87 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     * the micro-batch streaming source. The store's recorded key column
     * drives the row-level diff, so a pre-metadata store has no change
     * feed (None → the standard not-found error). */
-  private def changesTableFor(parent: Identifier,
+  private def changesTableFor(parent: Identifier, st: VersionedStore,
       range: Option[(Long, Long)], preImages: Boolean = false): Option[Table] = {
-    val base = storePath(parent)
-    val linked = isLinked(parent)
-    val vs = if (linked) linkedFor(parent).versions() else storeFor(parent).versions()
-    if (vs.isEmpty) return None
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.SnapshotStore.readStoredKeyCol(fs, base).map { key =>
+    if (st.versions().isEmpty) return None
+    st.storedKeyCol().map { key =>
       val kindNm = if (preImages) "changes_cdf" else "changes"
       val nm = (parent.namespace() :+ parent.name()).mkString(".") +
         range.fold(s".$kindNm") { case (a, b) => s".$kindNm@$a..$b" }
-      new ChangesTable(nm, spark, base, linked, key, range, preImages)
+      new ChangesTable(nm, spark, st.withKeyCol(key), range, preImages)
     }
   }
 
   /** The `files` metadata frame: tip per-file stats + FS byte sizes.
     * The size frame is |files| rows built from one directory listing
     * and joined by name — broadcast-tiny next to any data scan. */
-  private def filesDf(parent: Identifier): Option[org.apache.spark.sql.DataFrame] = {
+  private def filesDf(st: VersionedStore, tip: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, lit, split}
-    val base = storePath(parent)
-    val conf = spark.sparkContext.hadoopConfiguration
     def sizesOf(dir: org.apache.hadoop.fs.Path): org.apache.spark.sql.DataFrame = {
-      val fs = dir.getFileSystem(conf)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val rows =
         if (!fs.exists(dir)) Seq.empty[(String, Long)]
         else fs.listStatus(dir).toSeq.filter(_.isFile)
           .map(st => (st.getPath.getName, st.getLen))
       spark.createDataFrame(rows).toDF("file", "bytes")
     }
-    if (isLinked(parent)) {
-      val st = linkedFor(parent)
-      val vs = st.versions()
-      if (vs.isEmpty) return None
-      Some(st.manifest(vs.max)
-        .select("file", "min_key", "max_key", "n_rows")
-        .join(sizesOf(new org.apache.hadoop.fs.Path(poolDirOf(base))), Seq("file"), "left")
-        .orderBy("file"))
-    } else {
-      val st = storeFor(parent)
-      val vs = st.versions()
-      if (vs.isEmpty) return None
-      val tip = vs.max
-      val sizes = sizesOf(new org.apache.hadoop.fs.Path(s"$base/v=$tip"))
-        .filter(col("file").startsWith("part-"))
-      Some(st.zoneMap(tip) match {
-        case Some(zm) =>
-          zm.withColumn("file", element_at(split(col("file"), "/"), -1))
-            .select("file", "min_key", "max_key", "n_rows")
-            .join(sizes, Seq("file"), "left").orderBy("file")
-        case None => // no zone map: names+bytes, stats honestly unknown
-          sizes.select(col("file"), lit(null).as("min_key"),
-            lit(null).as("max_key"), lit(null).cast("long").as("n_rows"),
-            col("bytes")).orderBy("file")
-      })
+    st match {
+      case m: ManifestStore =>
+        m.manifest(tip)
+          .select("file", "min_key", "max_key", "n_rows")
+          .join(sizesOf(m.poolDir), Seq("file"), "left")
+          .orderBy("file")
+      case s: SnapshotStore =>
+        val sizes = sizesOf(new org.apache.hadoop.fs.Path(s"${s.basePath}/v=$tip"))
+          .filter(col("file").startsWith("part-"))
+        s.zoneMap(tip) match {
+          case Some(zm) =>
+            zm.withColumn("file", element_at(split(col("file"), "/"), -1))
+              .select("file", "min_key", "max_key", "n_rows")
+              .join(sizes, Seq("file"), "left").orderBy("file")
+          case None => // no zone map: names+bytes, stats honestly unknown
+            sizes.select(col("file"), lit(null).as("min_key"),
+              lit(null).as("max_key"), lit(null).cast("long").as("n_rows"),
+              col("bytes")).orderBy("file")
+        }
     }
   }
 
   override def loadTable(ident: Identifier): Table = {
-    val (linked, vs) = try resolve(ident) catch {
+    val (st, vs) = try resolve(ident) catch {
       case e: NoSuchTableException =>
         return historyFallback(ident).getOrElse(throw e)
     }
     val tip = vs.max
-    // a DML hook recovers the key column the store recorded at first
-    // publish — the metadata that lets SQL drive a key-ordered rewrite
-    def storedKey(verb: String): String = {
-      val base = storePath(ident)
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.operators.SnapshotStore.readStoredKeyCol(fs, base)
-        .getOrElse(throw new UnsupportedOperationException(
-          s"$verb needs the store's key column: $base/_store.json is absent " +
-            s"(published by a pre-metadata build?) — $verb through the store API"))
-    }
+    def keyed(verb: String): VersionedStore = st.withKeyCol(recordedKey(st, verb))
     // only the TIP load carries the DML hooks: history is immutable,
     // and a delete/merge appends version tip+1 through the store API.
     // When the store read serves the scan (DV/mapped/temporal), the
     // delegate is the path-free variant — no pool-wide file stat.
-    val tipMasked = maskedReadFor(ident, linked, tip)
+    val tipMasked = maskedReadFor(st, tip)
     val tipBucketed =
-      if (tipMasked.isDefined) None else bucketedRouteFor(ident, linked, tip)
+      if (tipMasked.isDefined) None else bucketedRouteFor(st, tip)
     new SnapshotTable(
       (if (tipMasked.isDefined || tipBucketed.isDefined)
-         tableForMasked(ident, linked, tip)
-       else tableFor(ident, linked, tip).asInstanceOf[ParquetTable]),
-      Some(StreamInfo(storePath(ident), linked, () => storedKey("streaming read"))),
-      Some { pred =>
-        val key = storedKey("DELETE")
-        if (linked)
-          new graft.operators.ManifestStore(spark, storePath(ident), key)
-            .deleteWhere(tip, tip + 1, pred): Unit
-        else
-          new SnapshotStore(spark, storePath(ident), key)
-            .deleteWhere(tip, tip + 1, pred): Unit
-      },
+         tableForMasked(ident, st, tip)
+       else tableFor(ident, st, tip).asInstanceOf[ParquetTable]),
+      Some(StreamInfo(() => keyed("streaming read"))),
+      Some(pred => keyed("DELETE").deleteWhere(tip, tip + 1, pred): Unit),
       Some(StoreMergeHook(
-        () => storedKey("MERGE"),
-        (delta, deleteKeys) => {
-          val key = storedKey("MERGE")
-          // optimistic-concurrency front door: the delta was computed
-          // FROM the plan-time tip's scan, so readVersion = tip gives
-          // the exact conflict check — a concurrent commit touching
-          // disjoint keys rebases, an overlapping one aborts loudly
-          if (linked)
-            new graft.operators.ManifestStore(spark, storePath(ident), key)
-              .mergeAtTip(delta, deleteKeys, readVersion = Some(tip)): Unit
-          else
-            new SnapshotStore(spark, storePath(ident), key)
-              .mergeAtTip(delta, deleteKeys, readVersion = Some(tip)): Unit
-        },
-        () => {
-          val key = storedKey("INSERT")
-          if (linked)
-            new graft.operators.ManifestStore(spark, storePath(ident), key).read(tip)
-          else new SnapshotStore(spark, storePath(ident), key).read(tip)
-        },
-        replacePartitions = {
-          val baseP = storePath(ident)
-          val fsP = new org.apache.hadoop.fs.Path(baseP)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (graft.operators.SnapshotStore
-            .readStoredPartitionBy(fsP, baseP).isEmpty) None
-          else Some { data =>
-            val key = storedKey("INSERT OVERWRITE")
-            if (linked)
-              new graft.operators.ManifestStore(spark, baseP, key)
-                .replaceWhere(tip, tip + 1, data): Unit
-            else
-              new SnapshotStore(spark, baseP, key)
-                .replaceWhere(tip, tip + 1, data): Unit
-          }
-        })),
+        () => keyed("MERGE").keyCol,
+        // optimistic-concurrency front door: the delta was computed
+        // FROM the plan-time tip's scan, so readVersion = tip gives
+        // the exact conflict check — a concurrent commit touching
+        // disjoint keys rebases, an overlapping one aborts loudly
+        (delta, deleteKeys) => keyed("MERGE")
+          .mergeAtTip(delta, deleteKeys, readVersion = Some(tip)): Unit,
+        () => keyed("INSERT").read(tip),
+        replacePartitions =
+          if (st.storedPartitionSpecs().isEmpty) None
+          else Some(data => keyed("INSERT OVERWRITE").replaceWhere(tip, tip + 1, data): Unit))),
       maskedRead = tipMasked,
-      prunedRead = temporalPrunedReadFor(ident, linked, tip),
-      visibleRows = Some(visibleRowsFor(ident, linked, tip)),
+      prunedRead = temporalPrunedReadFor(st, tip),
+      visibleRows = Some(() => st.visibleRowsOf(tip)),
       bucketedRoute = tipBucketed)
   }
 
@@ -750,6 +602,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           if ident.namespace().nonEmpty && !tableExists(ident) =>
         val parent = Identifier.of(ident.namespace().dropRight(1),
           ident.namespace().last)
+        val st = storeFor(parent)
         // pure digits = store VERSIONS (the original contract);
         // anything else parses as ISO date/datetime or epoch-millis
         // BOUNDS resolved against the stored per-version commit
@@ -762,13 +615,12 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           else {
             val (t1, t2) = (ChangeFeed.parseTsMillis(a), ChangeFeed.parseTsMillis(b))
             require(t1 <= t2, s"timestamp range is inverted: '$version'")
-            val times = ChangeFeed.commitTimesOf(spark, storePath(parent),
-              isLinked(parent))
+            val times = ChangeFeed.commitTimesOf(st)
             val lo = times.find(_._2 >= t1).map(_._1).getOrElse(Long.MaxValue)
             val hi = times.reverse.find(_._2 <= t2).map(_._1).getOrElse(Long.MinValue)
             (lo, hi)
           }
-        return changesTableFor(parent, Some(range),
+        return changesTableFor(parent, st, Some(range),
             preImages = ident.name() == "changes_cdf")
           .getOrElse(throw new NoSuchTableException(ident))
       case _ =>
@@ -778,9 +630,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         s"snapshot versions are numeric, got '$version' (a 'a..b' commit range " +
           "is only valid on a <store>.changes table)")
     }
-    val (linked, vs) = resolve(ident)
+    val (st, vs) = resolve(ident)
     if (!vs.contains(v)) throw new NoSuchTableException(ident)
-    pinnedTable(ident, linked, v)
+    pinnedTable(ident, st, v)
   }
 
   /** `TIMESTAMP AS OF <ts>` — micros in, commit-millis resolved. On a
@@ -794,23 +646,18 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         && !tableExists(ident)) {
       val parent = Identifier.of(ident.namespace().dropRight(1),
         ident.namespace().last)
-      if (tableExists(parent)) {
-        val ms = Math.floorDiv(timestampMicros, 1000L)
-        val base = storePath(parent)
-        val lo = ChangeFeed.firstVersionAtOrAfter(spark, base, isLinked(parent), ms)
-        val hi = ChangeFeed.versionsOf(spark, base, isLinked(parent)).max
-        return changesTableFor(parent, Some((lo, hi)),
+      val st = storeFor(parent)
+      val vs = st.versions()
+      if (vs.nonEmpty) {
+        val lo = ChangeFeed.firstVersionAtOrAfter(st, Math.floorDiv(timestampMicros, 1000L))
+        return changesTableFor(parent, st, Some((lo, vs.max)),
             preImages = ident.name() == "changes_cdf")
           .getOrElse(throw new NoSuchTableException(ident))
       }
     }
-    val (linked, _) = resolve(ident)
-    val ms = Math.floorDiv(timestampMicros, 1000L)
-    val resolved =
-      if (linked) linkedFor(ident).versionAsOf(ms)
-      else storeFor(ident).versionAsOf(ms)
-    resolved match {
-      case Some(v) => pinnedTable(ident, linked, v)
+    val (st, _) = resolve(ident)
+    st.versionAsOf(Math.floorDiv(timestampMicros, 1000L)) match {
+      case Some(v) => pinnedTable(ident, st, v)
       case None => throw new NoSuchTableException(ident)
     }
   }
@@ -946,27 +793,30 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     Identifier.of(parts.init, parts.last)
   }
 
-  private def procKey(base: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.SnapshotStore.readStoredKeyCol(fs, base)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"this procedure needs the store's key column: $base/_store.json is " +
-          "absent — run the maintenance through the store API"))
+  /** The key column `st` recorded at first publish — the metadata that
+    * lets a DML verb or procedure drive a key-ordered rewrite. */
+  private def recordedKey(st: VersionedStore, verb: String): String =
+    st.storedKeyCol().getOrElse(throw new UnsupportedOperationException(
+      s"$verb needs the store's key column: ${st.basePath}/_store.json is absent " +
+        s"(published by a pre-metadata build?) — run $verb through the store API"))
+
+  /** The store at `t` re-keyed with its recorded key column. */
+  private def keyedStore(t: Identifier): VersionedStore = {
+    val st = storeFor(t)
+    st.withKeyCol(recordedKey(st, "this procedure"))
   }
 
   /** The durability-ladder procedures are shared-pool machinery: the
     * linked layout only (a snapshot layout's self-contained version
     * dirs replicate by plain directory copy — clone covers that). */
-  private def linkedProcStore(t: Identifier,
-      proc: String): graft.operators.ManifestStore = {
-    if (!isLinked(t)) throw new UnsupportedOperationException(
-      s"CALL $proc: '${t.name()}' is a snapshot-layout store — the pool " +
-        "durability ladder (parity/replicate/repair) is the linked layout's; " +
-        "deep-copy a snapshot table with CALL clone")
-    val base = storePath(t)
-    new graft.operators.ManifestStore(spark, base, procKey(base))
-  }
+  private def linkedProcStore(t: Identifier, proc: String): ManifestStore =
+    storeFor(t) match {
+      case m: ManifestStore => m.withKeyCol(recordedKey(m, s"CALL $proc"))
+      case _ => throw new UnsupportedOperationException(
+        s"CALL $proc: '${t.name()}' is a snapshot-layout store — the pool " +
+          "durability ladder (parity/replicate/repair) is the linked layout's; " +
+          "deep-copy a snapshot table with CALL clone")
+    }
 
   private def procResult(schema: StructType,
       values: Array[Any]): java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
@@ -1020,30 +870,25 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // a non-empty `where` restricts the fold to the partitions the
         // predicate selects — everything else carries untouched
         val whereSql = in.getUTF8String(3).toString.trim
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val before = st.manifest(tip).count()
-          val (kept, rewritten) =
-            if (whereSql.isEmpty) st.compact(tip, tip + 1, minBytes, targetFiles)
-            else st.compactWhere(tip, tip + 1,
-              org.apache.spark.sql.functions.expr(whereSql), minBytes, targetFiles)
-          Array(utf8("linked"), tip + 1, before, (kept + rewritten).toLong)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          if (whereSql.isEmpty) {
-            val bytes = st.stats(tip)._3
+        val st = keyedStore(t)
+        val tip = st.versions().max
+        lazy val where = org.apache.spark.sql.functions.expr(whereSql)
+        st match {
+          case m: ManifestStore =>
+            val before = m.manifest(tip).count()
+            val (kept, rewritten) =
+              if (whereSql.isEmpty) m.compact(tip, tip + 1, minBytes, targetFiles)
+              else m.compactWhere(tip, tip + 1, where, minBytes, targetFiles)
+            Array(utf8(st.layout), tip + 1, before, (kept + rewritten).toLong)
+          case s: SnapshotStore if whereSql.isEmpty =>
+            val bytes = s.stats(tip)._3
             val targetBytes = math.max(1L, (bytes + targetFiles - 1) / targetFiles)
-            val (before, after) = st.compact(tip, targetBytes)
-            Array(utf8("snapshot"), tip, before.toLong, after.toLong)
-          } else {
-            val before = st.dataFiles(tip).count(_.getName.startsWith("part-"))
-            val (kept, rewritten) = st.compactWhere(tip, tip + 1,
-              org.apache.spark.sql.functions.expr(whereSql), minBytes)
-            Array(utf8("snapshot"), tip + 1, before.toLong, (kept + rewritten).toLong)
-          }
+            val (before, after) = s.compact(tip, targetBytes)
+            Array(utf8(st.layout), tip, before.toLong, after.toLong)
+          case s: SnapshotStore =>
+            val before = s.dataFiles(tip).count(_.getName.startsWith("part-"))
+            val (kept, rewritten) = s.compactWhere(tip, tip + 1, where, minBytes)
+            Array(utf8(st.layout), tip + 1, before.toLong, (kept + rewritten).toLong)
         }
       }
       case "drop_partitions" => bound("drop_partitions",
@@ -1064,19 +909,11 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val t = tableIdentOf(in.getUTF8String(0).toString)
         val c = in.getUTF8String(1).toString
         val v = in.getUTF8String(2).toString
-        val base = storePath(t)
-        val pred = org.apache.spark.sql.functions.col(c) === v
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val (_, dropped, rows) = st.dropPartitions(tip, tip + 1, pred)
-          Array(utf8("linked"), tip + 1, dropped.toLong, rows)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val (_, dropped, rows) = st.dropPartitions(tip, tip + 1, pred)
-          Array(utf8("snapshot"), tip + 1, dropped.toLong, rows)
-        }
+        val st = keyedStore(t)
+        val tip = st.versions().max
+        val (_, dropped, rows) =
+          st.dropPartitions(tip, tip + 1, org.apache.spark.sql.functions.col(c) === v)
+        Array(utf8(st.layout), tip + 1, dropped.toLong, rows)
       }
       case "analyze" => bound("analyze",
         Array(tableParam,
@@ -1090,20 +927,10 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // by the <store>.stats metadata table. Default NDV is the
         // one-pass HLL estimate (the 100 TB mode); exact_ndv=true runs
         // one count_distinct per column instead.
-        val t = tableIdentOf(in.getUTF8String(0).toString)
-        val exact = in.getBoolean(1)
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val n = st.analyzeColumns(tip, exactNdv = exact).count()
-          Array(utf8("linked"), tip, n)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val n = st.analyzeColumns(tip, exactNdv = exact).count()
-          Array(utf8("snapshot"), tip, n)
-        }
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
+        val tip = st.versions().max
+        val n = st.analyzeColumns(tip, exactNdv = in.getBoolean(1)).count()
+        Array(utf8(st.layout), tip, n)
       }
       case "add_constraint" => bound("add_constraint",
         Array(tableParam,
@@ -1115,36 +942,18 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // once for existing violations (fails = nothing recorded),
         // then every commit validates its new rows; FALSE violates,
         // NULL passes (declare `c IS NOT NULL` for NOT NULL).
-        val t = tableIdentOf(in.getUTF8String(0).toString)
-        val base = storePath(t)
-        val (nm, ex) = (in.getUTF8String(1).toString, in.getUTF8String(2).toString)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          st.addConstraint(nm, ex)
-          Array(utf8("linked"), st.constraints().size.toLong)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          st.addConstraint(nm, ex)
-          Array(utf8("snapshot"), st.constraints().size.toLong)
-        }
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
+        st.addConstraint(in.getUTF8String(1).toString, in.getUTF8String(2).toString)
+        Array(utf8(st.layout), st.constraints().size.toLong)
       }
       case "drop_constraint" => bound("drop_constraint",
         Array(tableParam,
           ProcedureParameter.in("name", StringType).build()),
         StructType(Seq(StructField("layout", StringType),
           StructField("n_constraints", LongType)))) { in =>
-        val t = tableIdentOf(in.getUTF8String(0).toString)
-        val base = storePath(t)
-        val nm = in.getUTF8String(1).toString
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          st.dropConstraint(nm)
-          Array(utf8("linked"), st.constraints().size.toLong)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          st.dropConstraint(nm)
-          Array(utf8("snapshot"), st.constraints().size.toLong)
-        }
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
+        st.dropConstraint(in.getUTF8String(1).toString)
+        Array(utf8(st.layout), st.constraints().size.toLong)
       }
       case "restore" => bound("restore",
         Array(tableParam,
@@ -1157,20 +966,11 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // reads every intermediate version. Zero-copy on the linked
         // layout (manifest branch); a dir byte-copy on the snapshot
         // layout (its versions are self-contained by design).
-        val t = tableIdentOf(in.getUTF8String(0).toString)
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
         val v = in.getLong(1)
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          st.restoreVersion(v, tip + 1)
-          Array(utf8("linked"), v, tip + 1)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          st.restoreVersion(v, tip + 1)
-          Array(utf8("snapshot"), v, tip + 1)
-        }
+        val tip = st.versions().max
+        st.restoreVersion(v, tip + 1, None)
+        Array(utf8(st.layout), v, tip + 1)
       }
       case "restore_ts" => bound("restore_ts",
         Array(tableParam,
@@ -1182,24 +982,13 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // to the newest version committed at-or-before it through the
         // stores' versionAsOf — ONE version-log checkpoint read, then
         // the same restore-as-a-commit semantics as CALL restore
-        val t = tableIdentOf(in.getUTF8String(0).toString)
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
         val ms = ChangeFeed.parseTsMillis(in.getUTF8String(1).toString)
-        val base = storePath(t)
-        def noVersion = throw new IllegalArgumentException(
-          s"restore_ts: no version committed at or before $ms")
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          val v = st.versionAsOf(ms).getOrElse(noVersion)
-          val tip = st.versions().max
-          st.restoreVersion(v, tip + 1)
-          Array(utf8("linked"), v, tip + 1)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          val v = st.versionAsOf(ms).getOrElse(noVersion)
-          val tip = st.versions().max
-          st.restoreVersion(v, tip + 1)
-          Array(utf8("snapshot"), v, tip + 1)
-        }
+        val v = st.versionAsOf(ms).getOrElse(throw new IllegalArgumentException(
+          s"restore_ts: no version committed at or before $ms"))
+        val tip = st.versions().max
+        st.restoreVersion(v, tip + 1, None)
+        Array(utf8(st.layout), v, tip + 1)
       }
       case "fold_dv" => bound("fold_dv",
         Array(tableParam,
@@ -1214,27 +1003,17 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // mask from taxing every read (compact folds only small files).
         // A non-empty `where` scopes the fold to the partitions the
         // predicate selects; out-of-scope masks carry intact.
-        val t = tableIdentOf(in.getUTF8String(0).toString)
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
         val n = in.getInt(1)
         val whereSql = in.getUTF8String(2).toString.trim
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val (_, rewritten, dropped) =
-            if (whereSql.isEmpty) st.foldDv(tip, tip + 1, n)
-            else st.foldDvWhere(tip, tip + 1,
-              org.apache.spark.sql.functions.expr(whereSql), n)
-          Array(utf8("linked"), tip + 1, rewritten.toLong, dropped)
-        } else {
-          val st = new SnapshotStore(spark, base, procKey(base))
-          val tip = st.versions().max
-          val (_, rewritten, dropped) =
-            if (whereSql.isEmpty) st.foldDv(tip, tip + 1, n)
-            else st.foldDvWhere(tip, tip + 1,
-              org.apache.spark.sql.functions.expr(whereSql))
-          Array(utf8("snapshot"), tip + 1, rewritten.toLong, dropped)
+        lazy val where = org.apache.spark.sql.functions.expr(whereSql)
+        val tip = st.versions().max
+        val (_, rewritten, dropped) = st match {
+          case _ if whereSql.isEmpty => st.foldDv(tip, tip + 1, n)
+          case m: ManifestStore => m.foldDvWhere(tip, tip + 1, where, n)
+          case s: SnapshotStore => s.foldDvWhere(tip, tip + 1, where)
         }
+        Array(utf8(st.layout), tip + 1, rewritten.toLong, dropped)
       }
       case "vacuum" => bound("vacuum",
         Array(tableParam,
@@ -1242,26 +1021,24 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           ProcedureParameter.in("dry_run", BooleanType).defaultValue("false").build()),
         StructType(Seq(StructField("layout", StringType),
           StructField("reclaimed", LongType), StructField("unit", StringType)))) { in =>
-        val t = tableIdentOf(in.getUTF8String(0).toString)
+        val st = storeFor(tableIdentOf(in.getUTF8String(0).toString))
         val ttlMs = in.getInt(1).toLong * 3600L * 1000L
         val dry = in.getBoolean(2)
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, "")
-          // dry run: the ref-count audit's answer WITHOUT deleting —
-          // what an operator runs before trusting a retention policy
-          val bytes =
-            if (dry) st.orphans().agg(org.apache.spark.sql.functions
-                .coalesce(org.apache.spark.sql.functions.sum("bytes"),
-                  org.apache.spark.sql.functions.lit(0L)))
-              .head().getLong(0)
-            else st.vacuum(ttlMs)
-          Array(utf8("linked"), bytes, utf8(if (dry) "bytes_dry" else "bytes"))
-        } else {
-          val st = new SnapshotStore(spark, base, "")
-          val n = if (dry) st.vacuumDryRun(ttlMs).size.toLong
-            else st.vacuum(ttlMs).size.toLong
-          Array(utf8("snapshot"), n, utf8(if (dry) "paths_dry" else "paths"))
+        st match {
+          case m: ManifestStore =>
+            // dry run: the ref-count audit's answer WITHOUT deleting —
+            // what an operator runs before trusting a retention policy
+            val bytes =
+              if (dry) m.orphans().agg(org.apache.spark.sql.functions
+                  .coalesce(org.apache.spark.sql.functions.sum("bytes"),
+                    org.apache.spark.sql.functions.lit(0L)))
+                .head().getLong(0)
+              else m.vacuum(ttlMs)
+            Array(utf8(st.layout), bytes, utf8(if (dry) "bytes_dry" else "bytes"))
+          case s: SnapshotStore =>
+            val n = if (dry) s.vacuumDryRun(ttlMs).size.toLong
+              else s.vacuum(ttlMs).size.toLong
+            Array(utf8(st.layout), n, utf8(if (dry) "paths_dry" else "paths"))
         }
       }
       case "retention" => bound("retention",
@@ -1271,17 +1048,16 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val t = tableIdentOf(in.getUTF8String(0).toString)
         val keepLast = in.getInt(1)
         require(keepLast >= 1, s"retention: keep_last must be >= 1, got $keepLast")
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, "")
-          val vs = st.versions()
-          val keep = vs.takeRight(keepLast)
-          st.prune(keep): Unit
-          Array(utf8("linked"), (vs.size - keep.size).toLong)
-        } else {
-          val n = new SnapshotStore(spark, base, "").prune(keepLast).size.toLong
-          Array(utf8("snapshot"), n)
+        val st = storeFor(t)
+        val n = st match {
+          case m: ManifestStore =>
+            val vs = m.versions()
+            val keep = vs.takeRight(keepLast)
+            m.prune(keep): Unit
+            vs.size - keep.size
+          case s: SnapshotStore => s.prune(keepLast).size
         }
+        Array(utf8(st.layout), n.toLong)
       }
       // Iceberg's partition spec evolution as ONE metadata write:
       // `CALL set_partition_spec('t', 'months(ts)')` appends the new
@@ -1299,13 +1075,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val cols = in.getUTF8String(1).toString.split(',')
           .map(_.trim).filter(_.nonEmpty).toSeq
         require(cols.nonEmpty, "set_partition_spec: empty spec")
-        val base = storePath(t)
-        val id =
-          if (isLinked(t))
-            new graft.operators.ManifestStore(spark, base, "").evolvePartitionSpec(cols)
-          else new SnapshotStore(spark, base, "").evolvePartitionSpec(cols)
-        Array(utf8(if (isLinked(t)) "linked" else "snapshot"), id.toLong,
-          utf8(cols.mkString(",")))
+        val st = storeFor(t)
+        val id = st.evolvePartitionSpec(cols)
+        Array(utf8(st.layout), id.toLong, utf8(cols.mkString(",")))
       }
       // Delta's `RETAIN n HOURS` contract: expire versions whose
       // commit ts is STRICTLY older than as_of - retain_hours (the
@@ -1327,15 +1099,12 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val asOf0 = in.getLong(2)
         val asOf = if (asOf0 <= 0) System.currentTimeMillis() else asOf0
         val horizon = asOf - hours.toLong * 3600L * 1000L
-        val base = storePath(t)
-        if (isLinked(t)) {
-          val st = new graft.operators.ManifestStore(spark, base, "")
-          val (dropped, _) = st.pruneOlderThan(horizon)
-          Array(utf8("linked"), dropped.size.toLong, horizon)
-        } else {
-          val st = new SnapshotStore(spark, base, "")
-          Array(utf8("snapshot"), st.pruneOlderThan(horizon).size.toLong, horizon)
+        val st = storeFor(t)
+        val dropped = st match {
+          case m: ManifestStore => m.pruneOlderThan(horizon)._1
+          case s: SnapshotStore => s.pruneOlderThan(horizon)
         }
+        Array(utf8(st.layout), dropped.size.toLong, horizon)
       }
       case "zorder" => bound("zorder",
         Array(tableParam,
@@ -1353,40 +1122,26 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           s"zorder interleaves MULTIPLE dimensions — got ${zc.mkString(",")}; " +
             "a single clustering column is plain range layout (write via the store API)")
         require(numFiles >= 1, s"zorder: num_files must be >= 1, got $numFiles")
-        val base = storePath(t)
-        val key = procKey(base)
-        // PARTITION-SCOPED re-cluster: only the matching partitions'
-        // files rewrite; n_files reports the NEW files
-        if (whereSql.nonEmpty) {
-          val pred = org.apache.spark.sql.functions.expr(whereSql)
-          if (isLinked(t)) {
-            val st = new graft.operators.ManifestStore(spark, base, key)
-            val tip = st.versions().max
-            val (_, rewritten) = st.zorderWhere(tip, tip + 1, pred, zc, numFiles)
-            Array(utf8("linked"), tip + 1, rewritten.toLong, utf8(zc.mkString(",")))
-          } else {
-            val st = new SnapshotStore(spark, base, key)
-            val tip = st.versions().max
-            val (_, rewritten) = st.zorderWhere(tip, tip + 1, pred, zc, numFiles)
-            Array(utf8("snapshot"), tip + 1, rewritten.toLong, utf8(zc.mkString(",")))
-          }
-        } else if (isLinked(t)) {
-          // construction statsCols drive the new manifest's per-file
-          // envelopes; later catalog DML derives them back from the
-          // manifest itself, so the CALL is self-contained
-          val st = new graft.operators.ManifestStore(spark, base, key,
-            statsCols = zc.filterNot(_ == key))
-          val tip = st.versions().max
-          st.writeZOrdered(st.read(tip), tip + 1, numFiles, zc)
-          Array(utf8("linked"), tip + 1, st.manifest(tip + 1).count(),
-            utf8(zc.mkString(",")))
-        } else {
-          val st = new SnapshotStore(spark, base, key)
-          val tip = st.versions().max
-          st.writeZOrdered(st.read(tip), tip + 1, numFiles, zc)
-          Array(utf8("snapshot"), tip + 1, st.stats(tip + 1)._1,
-            utf8(zc.mkString(",")))
+        val st = keyedStore(t)
+        val tip = st.versions().max
+        val nFiles: Long = st match {
+          // PARTITION-SCOPED re-cluster: only the matching partitions'
+          // files rewrite; n_files reports the NEW files
+          case _ if whereSql.nonEmpty => st.zorderWhere(tip, tip + 1,
+            org.apache.spark.sql.functions.expr(whereSql), zc, numFiles)._2.toLong
+          case m: ManifestStore =>
+            // construction statsCols drive the new manifest's per-file
+            // envelopes; later catalog DML derives them back from the
+            // manifest itself, so the CALL is self-contained
+            val z = new ManifestStore(spark, m.basePath, m.keyCol,
+              statsCols = zc.filterNot(_ == m.keyCol))
+            z.writeZOrdered(z.read(tip), tip + 1, numFiles, zc)
+            z.manifest(tip + 1).count()
+          case s: SnapshotStore =>
+            s.writeZOrdered(s.read(tip), tip + 1, numFiles, zc)
+            s.stats(tip + 1)._1
         }
+        Array(utf8(st.layout), tip + 1, nFiles, utf8(zc.mkString(",")))
       }
       case "clone" => bound("clone",
         Array(tableParam,
@@ -1395,28 +1150,20 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         StructType(Seq(StructField("layout", StringType),
           StructField("mode", StringType), StructField("src_version", LongType),
           StructField("n_rows", LongType)))) { in =>
-        val srcT = tableIdentOf(in.getUTF8String(0).toString)
-        val dstT = tableIdentOf(in.getUTF8String(1).toString)
+        val st = keyedStore(tableIdentOf(in.getUTF8String(0).toString))
+        val dstBase = storePath(tableIdentOf(in.getUTF8String(1).toString))
         val cts = if (in.getLong(2) == 0L) None else Some(in.getLong(2))
-        val srcBase = storePath(srcT)
-        val dstBase = storePath(dstT)
-        val key = procKey(srcBase)
-        if (isLinked(srcT)) {
-          val st = new graft.operators.ManifestStore(spark, srcBase, key)
-          val tip = st.versions().max
-          val dst = st.cloneTo(dstBase, tip, cts)
-          // metadata-only row total off the cloned manifest
-          val n = dst.manifest(1L).agg(
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.sum("n_rows"),
-              org.apache.spark.sql.functions.lit(0L))).head().getLong(0)
-          Array(utf8("linked"), utf8("shallow"), tip, n)
-        } else {
-          val st = new SnapshotStore(spark, srcBase, key)
-          val tip = st.versions().max
-          val dst = st.cloneTo(dstBase, tip, cts)
-          Array(utf8("snapshot"), utf8("deep"), tip, dst.stats(1L)._2)
+        val tip = st.versions().max
+        val (mode, n) = st match {
+          case m: ManifestStore =>
+            // metadata-only row total off the cloned manifest
+            ("shallow", m.cloneTo(dstBase, tip, cts).manifest(1L).agg(
+              org.apache.spark.sql.functions.coalesce(
+                org.apache.spark.sql.functions.sum("n_rows"),
+                org.apache.spark.sql.functions.lit(0L))).head().getLong(0))
+          case s: SnapshotStore => ("deep", s.cloneTo(dstBase, tip, cts).stats(1L)._2)
         }
+        Array(utf8(st.layout), utf8(mode), tip, n)
       }
       case "replicate" => bound("replicate",
         Array(tableParam, ProcedureParameter.in("target", StringType).build()),
@@ -1585,20 +1332,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           s"ALTER TABLE ADD COLUMN: NOT NULL column '${a.fieldNames()(0)}' needs " +
             "a DEFAULT — files that predate the column must read something")
     }
-    val (linked, vs) = resolve(ident)
-    val tip = vs.max
-    val base = storePath(ident)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val key = graft.operators.SnapshotStore.readStoredKeyCol(fs, base)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"ALTER needs the store's key column: $base/_store.json is absent — " +
-          "evolve through the store API's mergeDelta"))
+    val (st, tip) = keyedTip(ident, "ALTER TABLE ADD COLUMN")
     import org.apache.spark.sql.functions.lit
-    val cur =
-      if (linked) new graft.operators.ManifestStore(spark, base, key).read(tip)
-      else new SnapshotStore(spark, base, key).read(tip)
-    var delta = cur.limit(0)
+    var delta = st.read(tip).limit(0)
     val fills = scala.collection.mutable.Map.empty[String, Any]
     adds.foreach { a =>
       val colName = a.fieldNames()(0)
@@ -1614,11 +1350,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         }
       }
     }
-    if (linked)
-      new graft.operators.ManifestStore(spark, base, key)
-        .mergeDelta(tip, tip + 1, delta, fill = fills.toMap): Unit
-    else new SnapshotStore(spark, base, key)
-      .mergeDelta(tip, tip + 1, delta, fill = fills.toMap): Unit
+    st.mergeDelta(tip, tip + 1, delta, fill = fills.toMap): Unit
     loadTable(ident)
   }
   /** `ALTER TABLE cat.store DROP COLUMN c [, ...]` — onto the stores'
@@ -1638,13 +1370,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           "is not supported — stores evolve flat columns")
     }
     val cols = drops.map(_.fieldNames()(0))
-    val (linked, vs) = resolve(ident)
-    val tip = vs.max
-    val base = storePath(ident)
-    val key = keyFromMeta(base, "ALTER TABLE DROP COLUMN")
-    if (linked)
-      new graft.operators.ManifestStore(spark, base, key).dropColumns(tip, tip + 1, cols)
-    else new SnapshotStore(spark, base, key).dropColumns(tip, tip + 1, cols)
+    val (st, tip) = keyedTip(ident, "ALTER TABLE DROP COLUMN")
+    st.dropColumns(tip, tip + 1, cols)
     loadTable(ident)
   }
 
@@ -1665,15 +1392,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     if (uc.fieldNames().length != 1) throw new UnsupportedOperationException(
       s"ALTER TABLE ALTER COLUMN: nested column '${uc.fieldNames().mkString(".")}' " +
         "is not supported — stores evolve flat columns")
-    val (linked, vs) = resolve(ident)
-    val tip = vs.max
-    val base = storePath(ident)
-    val key = keyFromMeta(base, "ALTER TABLE ALTER COLUMN TYPE")
-    if (linked)
-      new graft.operators.ManifestStore(spark, base, key)
-        .widenColumn(tip, tip + 1, uc.fieldNames()(0), uc.newDataType())
-    else new SnapshotStore(spark, base, key)
-      .widenColumn(tip, tip + 1, uc.fieldNames()(0), uc.newDataType())
+    val (st, tip) = keyedTip(ident, "ALTER TABLE ALTER COLUMN TYPE")
+    st.widenColumn(tip, tip + 1, uc.fieldNames()(0), uc.newDataType())
     loadTable(ident)
   }
 
@@ -1682,25 +1402,15 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     if (rn.fieldNames().length != 1) throw new UnsupportedOperationException(
       s"ALTER TABLE RENAME COLUMN: nested column '${rn.fieldNames().mkString(".")}' " +
         "is not supported — stores evolve flat columns")
-    val (linked, vs) = resolve(ident)
-    val tip = vs.max
-    val base = storePath(ident)
-    val key = keyFromMeta(base, "ALTER TABLE RENAME COLUMN")
-    if (linked)
-      new graft.operators.ManifestStore(spark, base, key)
-        .renameColumn(tip, tip + 1, rn.fieldNames()(0), rn.newName())
-    else new SnapshotStore(spark, base, key)
-      .renameColumn(tip, tip + 1, rn.fieldNames()(0), rn.newName())
+    val (st, tip) = keyedTip(ident, "ALTER TABLE RENAME COLUMN")
+    st.renameColumn(tip, tip + 1, rn.fieldNames()(0), rn.newName())
     loadTable(ident)
   }
 
-  private def keyFromMeta(base: String, verb: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.SnapshotStore.readStoredKeyCol(fs, base)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"$verb needs the store's key column: $base/_store.json is absent — " +
-          "evolve through the store API"))
+  /** The store re-keyed with its recorded key column, and its tip. */
+  private def keyedTip(ident: Identifier, verb: String): (VersionedStore, Long) = {
+    val (st, vs) = resolve(ident)
+    (st.withKeyCol(recordedKey(st, verb)), vs.max)
   }
 
   /** `DROP TABLE <cat>.<store>` — removes the store base recursively:
@@ -1800,11 +1510,10 @@ private[graft] case class StoreMergeHook(
     // the incoming data touches, through the store's replaceWhere
     replacePartitions: Option[org.apache.spark.sql.DataFrame => Unit] = None)
 
-/** What a tip table needs to serve `spark.readStream.table(...)`:
-  * the store location/layout plus a lazy key-column resolve (one
+/** What a tip table needs to serve `spark.readStream.table(...)`: the
+  * store re-keyed with its recorded key column, resolved lazily (one
   * sidecar read, only paid when a stream actually starts). */
-private[graft] case class StreamInfo(base: String, linked: Boolean,
-    key: () => String)
+private[graft] case class StreamInfo(store: () => graft.operators.VersionedStore)
 
 /** The table SnapshotCatalog serves: reads delegate verbatim to the
   * resolved [[ParquetTable]] (full native scan stack), and — on tip
@@ -2034,54 +1743,31 @@ private[graft] class SnapshotTable(delegate: ParquetTable,
     // columns and translatable filters push into the INNER plan, so
     // the parquet scan under the broadcast anti-join still prunes.
     // Streaming is unaffected (the change feed reads via the store).
+    val mkStream = streamInfo.map(info => (loc: String) => {
+      val store = info.store()
+      new ChangesMicroBatchStream(SparkSession.active, store, delegate.schema,
+        rowsOnly = true,
+        ignoreDeletes = options.getBoolean("ignoreDeletes", false),
+        startingVersion = ChangeFeed.resolveStart(store, options),
+        checkpointLocation = loc,
+        maxVersionsPerTrigger =
+          Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
+        maxBytesPerTrigger =
+          Option(options.get("maxBytesPerTrigger")).map(_.toLong))
+    })
     maskedRead.foreach { read =>
       return new MaskedStoreScanBuilder(delegate.name, read,
-        prunedRead = prunedRead,
-        visibleRows = visibleRows,
-        mkStream = streamInfo.map(info => (loc: String) =>
-          new ChangesMicroBatchStream(SparkSession.active, info.base,
-            info.linked, info.key(), delegate.schema, rowsOnly = true,
-            ignoreDeletes = options.getBoolean("ignoreDeletes", false),
-            startingVersion = ChangeFeed.resolveStart(SparkSession.active,
-              info.base, info.linked, options),
-            checkpointLocation = loc,
-            maxVersionsPerTrigger =
-              Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
-            maxBytesPerTrigger =
-              Option(options.get("maxBytesPerTrigger")).map(_.toLong))))
+        prunedRead = prunedRead, visibleRows = visibleRows, mkStream = mkStream)
     }
     // a fully-BUCKETED version serves the V1 bucketed relation: its
     // FileSourceScanExec reports HashPartitioning(col, n), so key
     // joins between co-bucketed stores plan with zero Exchange.
     // Streaming still rides the change feed, exactly as masked.
     bucketedRoute.foreach { route =>
-      return new BucketedScanBuilder(delegate.name, route,
-        mkStream = streamInfo.map(info => (loc: String) =>
-          new ChangesMicroBatchStream(SparkSession.active, info.base,
-            info.linked, info.key(), delegate.schema, rowsOnly = true,
-            ignoreDeletes = options.getBoolean("ignoreDeletes", false),
-            startingVersion = ChangeFeed.resolveStart(SparkSession.active,
-              info.base, info.linked, options),
-            checkpointLocation = loc,
-            maxVersionsPerTrigger =
-              Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
-            maxBytesPerTrigger =
-              Option(options.get("maxBytesPerTrigger")).map(_.toLong))))
+      return new BucketedScanBuilder(delegate.name, route, mkStream = mkStream)
     }
-    streamInfo match {
-      case Some(info) =>
-        val tableSchema = delegate.schema
-        new StreamCapableScanBuilder(delegate.newScanBuilder(options),
-          loc => new ChangesMicroBatchStream(SparkSession.active, info.base,
-            info.linked, info.key(), tableSchema, rowsOnly = true,
-            ignoreDeletes = options.getBoolean("ignoreDeletes", false),
-            startingVersion = ChangeFeed.resolveStart(SparkSession.active,
-              info.base, info.linked, options),
-            checkpointLocation = loc,
-            maxVersionsPerTrigger =
-              Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
-            maxBytesPerTrigger =
-              Option(options.get("maxBytesPerTrigger")).map(_.toLong)))
+    mkStream match {
+      case Some(mk) => new StreamCapableScanBuilder(delegate.newScanBuilder(options), mk)
       case None => delegate.newScanBuilder(options)
     }
   }
@@ -2131,8 +1817,8 @@ private[graft] class SnapshotTable(delegate: ParquetTable,
             val si = streamInfo.getOrElse(throw new UnsupportedOperationException(
               "writeStream.toTable is only supported on the table tip"))
             val opts = info.options()
-            new StoreStreamingWrite(SparkSession.active, si.base, si.linked,
-              si.key(), info.schema(), info.queryId(),
+            new StoreStreamingWrite(SparkSession.active, si.store(),
+              info.schema(), info.queryId(),
               maxFilesPerCommit =
                 Option(opts.get("maxFilesPerCommit")).map(_.toInt),
               maxVersionsToKeep =

@@ -49,12 +49,14 @@ import org.apache.spark.util.SerializableConfiguration
   * documented rather than hidden. Abandoned staging (a killed query)
   * lives under `.tmp-stream-*`, which the stores' vacuum TTL pass
   * already reclaims. */
-private[graft] class StoreStreamingWrite(spark: SparkSession, base: String,
-    linked: Boolean, key: String, schema: StructType, queryId: String,
+private[graft] class StoreStreamingWrite(spark: SparkSession,
+    store: graft.operators.VersionedStore, schema: StructType, queryId: String,
     maxFilesPerCommit: Option[Int] = None,
     maxVersionsToKeep: Option[Int] = None)
     extends StreamingWrite {
 
+  private val base = store.basePath
+  private val key = store.keyCol
   private val stagingRoot = s"$base/.tmp-stream-$queryId"
 
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
@@ -123,21 +125,13 @@ private[graft] class StoreStreamingWrite(spark: SparkSession, base: String,
       // a concurrent batch INSERT or second stream racing the tip
       // rebases (disjoint keys) or fails loudly with a conflict error
       // — never an undefined rename-onto-existing outcome
-      if (linked) {
-        val st = new graft.operators.ManifestStore(spark, base, key)
-        st.mergeAtTip(staged): Unit
-        // AUTO-MAINTENANCE per micro-batch (opt-in writeStream
-        // options): fold fragment growth and bound the version chain
-        // — a sink committing one version per batch otherwise grows
-        // both without bound until a manual CALL compact/retention
-        maxFilesPerCommit.foreach(st.maybeCompact(_): Unit)
-        maxVersionsToKeep.foreach(st.maybeRetain(_): Unit)
-      } else {
-        val st = new graft.operators.SnapshotStore(spark, base, key)
-        st.mergeAtTip(staged): Unit
-        maxFilesPerCommit.foreach(st.maybeCompact(_): Unit)
-        maxVersionsToKeep.foreach(st.maybeRetain(_): Unit)
-      }
+      store.mergeAtTip(staged): Unit
+      // AUTO-MAINTENANCE per micro-batch (opt-in writeStream
+      // options): fold fragment growth and bound the version chain
+      // — a sink committing one version per batch otherwise grows
+      // both without bound until a manual CALL compact/retention
+      maxFilesPerCommit.foreach(store.maybeCompact(_): Unit)
+      maxVersionsToKeep.foreach(store.maybeRetain(_): Unit)
     }
     recordEpoch(epochId)
     if (fs.exists(epochDir)) fs.delete(epochDir, true): Unit

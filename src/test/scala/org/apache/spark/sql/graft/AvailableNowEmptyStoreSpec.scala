@@ -16,8 +16,9 @@ class AvailableNowEmptyStoreSpec extends AnyFunSuite {
     new java.io.File(base).mkdirs()
     val ckpt = java.nio.file.Files.createTempDirectory("graft_an_ck").toString
     val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
-    val stream = new ChangesMicroBatchStream(spark, base, linked = true,
-      keyCol = "k", schema = schema, rowsOnly = false, ignoreDeletes = false,
+    val stream = new ChangesMicroBatchStream(spark,
+      new graft.operators.ManifestStore(spark, base, "k"),
+      schema = schema, rowsOnly = false, ignoreDeletes = false,
       startingVersion = None, checkpointLocation = ckpt)
     stream.prepareForTriggerAvailableNow() // must not throw on zero versions
     val start = VersionOffset(0L)
