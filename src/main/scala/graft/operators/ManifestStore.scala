@@ -82,25 +82,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     if (hist.size <= 1) base else base.withColumn("spec_id", lit(cur))
   }
 
-  /** EVOLVE this store's partition spec (metadata-only —
-    * [[SnapshotStore.evolvePartitionSpec]]); returns the new current
-    * spec id. */
-  def evolvePartitionSpec(cols: Seq[String]): Int = {
-    val priorDerived = specHistory._1.flatten
-      .map(SnapshotStore.parsePartitionSpec)
-      .filter(_.transform.isDefined).map(_.name).toSet
-    cols.map(SnapshotStore.parsePartitionSpec).filter(_.transform.isDefined)
-      .foreach { sp =>
-        latestVersion().foreach { v =>
-          require(priorDerived(sp.name) ||
-              !readFilesRaw(v, dataPaths(v).take(1)).columns.contains(sp.name),
-            s"evolvePartitionSpec: derived column name '${sp.name}' collides " +
-              "with a data column")
-        }
-      }
-    SnapshotStore.evolvePartitionSpec(fs, basePath, cols)
-  }
-
   /** The stats columns an EXISTING manifest actually carries — the
     * ground truth a version-to-version rewrite (mergeDelta /
     * deleteWhere / compact) must reproduce for its new entries, or the
@@ -473,7 +454,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     CommitProtocol.publish(fs, tmp, manifestDir(version), token,
       s"publish of v$version on $basePath")
     ManifestCache.seed(basePath, version, written, manifest.schema, rows)
-    noteCommit(version, ts, rows, op, opParams, statsFrom, metrics)
+    // metadata-only commits (rename/widen/branch/restore — manifest
+    // carried verbatim) reuse the predecessor's checkpoint stats:
+    // bytes_added = 0 (no new pool basenames)
+    noteCommit(version, statsFrom,
+      _.copy(commitTs = ts, bytes = 0L, op = op, opParams = opParams, metrics = metrics),
+      historyEntryOf(version, ts, rows, op, opParams, metrics))
   }
 
   /** ZERO-COPY BRANCH — the Iceberg/Delta "shallow clone" primitive:
@@ -488,10 +474,28 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   def branch(fromVersion: Long, newVersion: Long,
       commitTs: Option[Long] = None, op: String = "branch"): Unit = {
     requireFreeVersion(newVersion)
-    publish(newVersion, manifest(fromVersion).materialize(), commitTs,
-      evolvedSchema(fromVersion), dv = dvFrame(fromVersion),
-      op = op, opParams = s"of v$fromVersion", statsFrom = Some(fromVersion))
+    publishCarry(fromVersion, newVersion, None, Nil, commitTs, op, s"of v$fromVersion")
   }
+
+  /** The carry publish as a [[branch]]: `fromVersion`'s manifest rows
+    * (minus the `dropStats` columns' min/max) and deletion vector,
+    * not one pool byte moved. */
+  protected def publishCarry(fromVersion: Long, toVersion: Long,
+      schema: Option[org.apache.spark.sql.types.StructType], dropStats: Seq[String],
+      commitTs: Option[Long], op: String, opParams: String): Unit = {
+    val man = manifest(fromVersion)
+    val kept =
+      if (dropStats.isEmpty) man
+      else man.select(man.columns.toSeq.filterNot(c =>
+        dropStats.exists(dc => c == s"min_$dc" || c == s"max_$dc")).map(col): _*)
+    publish(toVersion, kept.materialize(), commitTs,
+      schema.orElse(evolvedSchema(fromVersion)), dv = dvFrame(fromVersion),
+      op = op, opParams = opParams, statsFrom = Some(fromVersion))
+  }
+
+  protected def storedSchema(version: Long): org.apache.spark.sql.types.StructType =
+    evolvedSchema(version).getOrElse(
+      readDataFiles(version, dataPaths(version).take(1)).schema)
 
   /** True when this store OWNS its pool dir — false on a shallow
     * clone reading a foreign pool. Pool reclamation ([[vacuum]],
@@ -579,128 +583,11 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     fs.delete(clonesAside(ownerBase), false): Unit
   }
 
-  /** Schema-evolution DROP COLUMN, this layout's way: ZERO data I/O.
-    * `toVersion` carries the SAME manifest rows (every pool file by
-    * reference — the branch() economics) with any dropped stats
-    * column's min/max pruned, plus a `_schema.json` sidecar that
-    * EXCLUDES `cols`; the evolved-schema reader then projects only
-    * recorded fields, so stored bytes for the dropped column are
-    * never read while pinned history keeps them. The key column is
-    * the store's identity and cannot drop. */
-  def dropColumns(fromVersion: Long, toVersion: Long, cols: Seq[String],
-      commitTs: Option[Long] = None): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    require(!cols.contains(keyCol),
-      s"dropColumns: '$keyCol' is the store's key column — its identity, not droppable")
-    cols.foreach(requireNoConstraintOn(_, "dropColumns"))
-    cols.filter(c => storedPartitionBy().contains(c)
-        || storedPartitionSpecs().exists(_.source == c)).foreach(c =>
-      throw new UnsupportedOperationException(
-        s"dropColumns '$c': it is a declared partition column (or a transform's " +
-          "source) — the table's physical layout keys on it"))
-    // the sidecar verbatim when present, so surviving columns keep
-    // their recorded fill metadata through the narrowing
-    val cur = evolvedSchema(fromVersion).getOrElse(read(fromVersion).schema)
-    val missing = cols.filterNot(cur.fieldNames.contains)
-    require(missing.isEmpty, s"dropColumns: not in the schema: ${missing.mkString(", ")}")
-    require(cur.fields.length > cols.size, "dropColumns: cannot drop every column")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      cur.fields.filterNot(f => cols.contains(f.name)))
-    val man = manifest(fromVersion)
-    val keep = man.columns.toSeq.filterNot(c =>
-      cols.exists(dc => c == s"min_$dc" || c == s"max_$dc"))
-    publish(toVersion, man.select(keep.map(col): _*).materialize(),
-      commitTs, Some(newSchema), dv = dvFrame(fromVersion),
-      op = "dropColumns", opParams = cols.mkString(","),
-      statsFrom = Some(fromVersion))
-  }
-
-  /** METADATA-ONLY TYPE WIDENING — Delta's type-widening feature:
-    * publish `toVersion` whose `_schema.json` re-types `column` to the
-    * WIDER `newType` ([[SnapshotStore.canWiden]] — integral chain,
-    * float→double, integral→decimal); the manifest carries VERBATIM
-    * (zero pool writes) and every read decodes the stored narrow
-    * physical values into the wider logical type (parquet's
-    * vectorized-reader promotion — spec-verified). Pinned history
-    * keeps the narrow type. The key column is the stats-typed store
-    * identity and refuses; partition columns refuse (their min==max
-    * stats are typed in the manifest); a NON-widening change keeps
-    * refusing (it would corrupt old files' meaning). */
-  def widenColumn(fromVersion: Long, toVersion: Long, column: String,
-      newType: org.apache.spark.sql.types.DataType,
-      commitTs: Option[Long] = None): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    require(column != keyCol,
-      s"widenColumn: '$keyCol' is the store's key column — its manifest envelope " +
-        "stats are typed; widening the identity is a store-level migration")
-    require(!storedPartitionBy().contains(column)
-        && !storedPartitionSpecs().exists(_.source == column),
-      s"widenColumn '$column': it is a declared partition column (or a " +
-        "transform's source) — its min==max stats are typed in the manifest")
-    val cur = evolvedSchema(fromVersion).getOrElse(read(fromVersion).schema)
-    val f = cur.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(s"widenColumn: no column '$column'"))
-    require(SnapshotStore.canWiden(f.dataType, newType),
-      s"widenColumn: ${f.dataType.simpleString} -> ${newType.simpleString} is not " +
-        "a supported widening (integral chain, float->double, integral->decimal) " +
-        "— any other type change would corrupt old files' meaning")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      cur.fields.map(x => if (x.name == column) x.copy(dataType = newType) else x))
-    publish(toVersion, manifest(fromVersion).materialize(), commitTs,
-      Some(newSchema), dv = dvFrame(fromVersion), op = "widenColumn",
-      opParams = s"$column -> ${newType.simpleString}",
-      statsFrom = Some(fromVersion))
-  }
-
-  /** METADATA-ONLY RENAME COLUMN — Delta's column-mapping mode on the
-    * `_schema.json` sidecar: the published schema renames the field
-    * while `graft.physical` metadata pins the name the pool bytes
-    * answer to; every read resolves physical → logical with a
-    * zero-cost alias projection, later merges LAND new files under
-    * the physical name (one name-uniform file set), and a full
-    * rewrite (compact / plain write) folds the mapping away — exactly
-    * how a DV mask folds. NOT ONE POOL BYTE moves here: the manifest
-    * carries VERBATIM (its min/max stats keep describing the stored,
-    * physical columns). Pinned history keeps the old name. The key
-    * column is recorded store identity and cannot rename; constrained
-    * and partition columns refuse (their declarations name the
-    * column); the new name must not shadow a stored physical name
-    * (old bytes would answer to two logical columns). */
-  def renameColumn(fromVersion: Long, toVersion: Long, from: String, to: String,
-      numFiles: Int = 4, commitTs: Option[Long] = None): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    require(from != keyCol,
-      s"renameColumn: '$keyCol' is the store's recorded key column — renaming the " +
-        "identity is a store-level migration, not schema evolution")
-    requireNoConstraintOn(from, "renameColumn")
-    require(!storedPartitionBy().contains(from)
-        && !storedPartitionSpecs().exists(_.source == from),
-      s"renameColumn '$from': it is a declared partition column (or a transform's " +
-        "source) — the table's physical layout keys on it")
-    val cur = evolvedSchema(fromVersion).getOrElse(read(fromVersion).schema)
-    require(cur.fieldNames.contains(from), s"renameColumn: no column '$from'")
-    require(!cur.fieldNames.contains(to), s"renameColumn: '$to' already exists")
-    val otherPhys = cur.fields.filterNot(_.name == from)
-      .map(SnapshotStore.physicalName).toSet
-    require(!otherPhys.contains(to),
-      s"renameColumn: '$to' is a stored PHYSICAL column name (a prior rename maps " +
-        "it) — old bytes would answer to two logical columns; compact first to " +
-        "fold the mapping")
-    val newSchema = org.apache.spark.sql.types.StructType(cur.fields.map(f =>
-      if (f.name == from) SnapshotStore.renamedField(f, to) else f))
-    publish(toVersion, manifest(fromVersion).materialize(), commitTs,
-      Some(newSchema), dv = dvFrame(fromVersion), op = "renameColumn",
-      opParams = s"$from -> $to", statsFrom = Some(fromVersion))
-  }
-
   /** One version's checkpoint row rebuilt from its manifest — the
     * self-heal unit (see [[SnapshotStore]]'s version-log checkpoint
     * notes). The manifest is metadata-sized and cache-served, so the
     * counts come from its collected rows. */
-  private def computeHistoryEntry(v: Long): SnapshotStore.HistoryEntry = {
+  protected def computeHistoryEntry(v: Long): SnapshotStore.HistoryEntry = {
     val (op, params, metrics) = SnapshotStore.readOpSidecar(fs, manifestDir(v))
     historyEntryOf(v, commitTsOf(v), manifest(v).collect(), op, params, metrics)
   }
@@ -713,46 +600,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       rows.map(r => Option(r.getAs[java.lang.Long]("n_rows")).fold(0L)(_.longValue)).sum,
       commitBytesOf(v, rows.map(_.getAs[String]("file")).toSet), op, params, metrics)
 
-  /** The VERSION-LOG CHECKPOINT, served and self-healed —
-    * [[SnapshotStore.historyEntries]]'s linked twin: warm path = ONE
-    * `_history.json` read; missing entries rebuild from manifests. */
-  protected def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
-    val vs = versions()
-    val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
-    val live = ckpt.filter { case (v, _) => vs.contains(v) }
-    val missing = vs.filterNot(live.contains)
-    if (missing.isEmpty) vs.map(v => v -> live(v))
-    else {
-      val merged = live ++ missing.map(v => v -> computeHistoryEntry(v))
-      SnapshotStore.rewriteHistoryCkpt("ManifestStore", fs, basePath, merged)
-      vs.map(v => v -> merged(v))
-    }
-  }
-
-  /** Incremental checkpoint maintenance, one entry per publish, built
-    * from the rows the publish just wrote. Best-effort: the checkpoint
-    * is derived, so a failed update is logged and self-heals on the
-    * next read; the commit stays published. */
-  private def noteCommit(v: Long, ts: Long, rows: Array[org.apache.spark.sql.Row],
-      op: String, opParams: String, statsFrom: Option[Long],
-      metrics: Map[String, Long]): Unit =
-    try {
-      val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
-      // metadata-only commits (rename/widen/branch/restore — manifest
-      // carried verbatim) reuse the predecessor's checkpoint stats:
-      // bytes_added = 0 (no new pool basenames)
-      val entry = statsFrom.flatMap(ckpt.get) match {
-        case Some(prev) => prev.copy(commitTs = ts,
-          bytes = 0L, op = op, opParams = opParams, metrics = metrics)
-        case None => historyEntryOf(v, ts, rows, op, opParams, metrics)
-      }
-      SnapshotStore.writeHistoryCkpt(fs, basePath, ckpt + (v -> entry))
-    } catch { case scala.util.control.NonFatal(e) =>
-      SnapshotStore.checkpointUpdateFailed("ManifestStore", basePath, v, e) }
-
-  /** Read a file subset under `version`'s schema contract: evolved
-    * versions read with the union schema (old files yield null for
-    * columns they predate). */
   /** Physical read — every stored row, INCLUDING rows the version's
     * deletion vector marks deleted. Integrity audits ([[validate]])
     * check file physics, so they read here; everything semantic goes
@@ -773,36 +620,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       case None => ParquetSchemas.readFiles(spark, paths)
     }
 
-  private def dvDir(v: Long) = new Path(manifestDir(v), "_dv")
-
-  /** The version's DELETION VECTOR, when a merge-on-read delete
-    * published one: (file basename, row position) pairs masked out of
-    * every semantic read — Delta/Iceberg's deletion-vector design at
-    * parquet row-index granularity. Lives INSIDE the manifest dir, so
-    * it publishes atomically with the version and prunes with it. */
-  def dvFrame(version: Long): Option[DataFrame] = {
-    val p = dvDir(version)
-    if (!fs.exists(new Path(p, "_SUCCESS"))) None
-    else Some(spark.read.schema(SnapshotStore.dvSchema).parquet(p.toString))
-  }
-
-  /** Mask entry count from the DV parquet footers — driver-side, one
-    * footer open per DV part file (the DV lands coalesce(1)). */
-  def dvRowCount(version: Long): Long = {
-    val p = dvDir(version)
-    if (!fs.exists(new Path(p, "_SUCCESS"))) 0L
-    else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      fs.listStatus(p)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-    }
-  }
-
   /** Semantic read: physical rows minus the deletion vector. The DV
     * is kept metadata-sized by [[deleteWhere]]'s auto policy, so the
     * mask is one BROADCAST anti-join on (file, row position) — no
@@ -810,7 +627,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * nothing. Positions come from the parquet reader's own
     * `_metadata.row_index`, which is stable because pool files are
     * immutable. */
-  private def readFiles(version: Long, paths: Seq[String]): DataFrame =
+  protected def readDataFiles(version: Long, paths: Seq[String]): DataFrame =
     recomputeDerived(dvFrame(version) match {
       case None => readFilesRaw(version, paths)
       case Some(dv) =>
@@ -873,18 +690,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     }.sum
   }
 
-  /** Newest version committed at-or-before `ts` — served from the
-    * version-log checkpoint: ONE sidecar read warm, not O(versions)
-    * per-version `_commit_ts` opens. */
-  def versionAsOf(ts: Long): Option[Long] = {
-    val committed = historyEntries().filter(_._2.commitTs <= ts)
-    if (committed.isEmpty) None
-    else Some(committed.maxBy { case (v, e) => (e.commitTs, v) }._1)
-  }
-
-  def readAsOf(ts: Long): DataFrame = read(versionAsOf(ts).getOrElse(
-    throw new IllegalStateException(s"no version committed at or before $ts")))
-
   def dataPaths(version: Long): Seq[String] =
     manifest(version).select("file").collect()
       .map(r => new Path(poolDir, r.getString(0)).toString).toIndexedSeq
@@ -901,7 +706,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         case None => throw new IllegalStateException(
           s"version $version has no files and no schema sidecar")
       }
-    else readFiles(version, files)
+    else readDataFiles(version, files)
   }
 
   /** SOURCE-column time-range read over an EVOLVED partition spec:
@@ -930,26 +735,9 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val cond = if (conds.isEmpty) lit(true) else conds.reduce(_ || _)
     val hit = man.filter(cond).select("file").collect()
       .map(r => new Path(poolDir, r.getString(0)).toString)
-    val base = if (hit.isEmpty) emptyRead(version) else readFiles(version, hit.toIndexedSeq)
+    val base = if (hit.isEmpty) emptyRead(version) else readDataFiles(version, hit.toIndexedSeq)
     base.filter(col(source).cast("timestamp") >= lit(lo).cast("timestamp") &&
       col(source).cast("timestamp") <= lit(hi).cast("timestamp"))
-  }
-
-  /** Refuse a whole-partition verb on a version holding files written
-    * under an EARLIER spec: a predicate over the current spec's
-    * columns cannot guarantee whole-file alignment for them (a month
-    * predicate does not select exact day files), and silently
-    * skipping them would turn "drop everything before March" into a
-    * partial drop. Rewrite the stragglers (compact) first. */
-  private def requireUniformSpec(man: DataFrame, op: String): Unit = {
-    val (hist, cur) = specHistory
-    if (hist.size <= 1) return
-    val foreign = man.filter(specIdCol(man) =!= cur).limit(1).count()
-    require(foreign == 0L,
-      s"$op: this version still holds files written under an earlier partition " +
-        s"spec (current spec id $cur) — a predicate over the current spec cannot " +
-        "select them whole-file-exactly; compact/rewrite them first, or read " +
-        "through readSourceRange")
   }
 
   /** Key-range read pruned at the MANIFEST level: only files whose
@@ -960,26 +748,10 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .select("file").collect().map(r => new Path(poolDir, r.getString(0)).toString)
     val base =
       if (hit.isEmpty) emptyRead(version)
-      else readFiles(version, hit.toIndexedSeq)
+      else readDataFiles(version, hit.toIndexedSeq)
     base.filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
   }
 
-
-  /** A ZERO-ROW frame in `version`'s logical read schema, built
-    * WITHOUT listing or planning the version's data files — the
-    * prune-to-nothing result. `read(version).limit(0)` here would
-    * stand up a scan over every pool path just to return nothing; at
-    * 100 TB an empty answer must be metadata-cheap. One pool file
-    * opens for schema inference only when no schema sidecar exists. */
-  private def emptyRead(version: Long): DataFrame =
-    evolvedSchema(version) match {
-      case Some(sc) => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
-      case None =>
-        val paths = dataPaths(version)
-        if (paths.isEmpty) read(version).limit(0)
-        else ParquetSchemas.readFiles(spark, paths.take(1)).limit(0)
-    }
 
   /** Secondary-column range read pruned at the MANIFEST level, for a
     * column named in `statsCols` at construction: only files whose
@@ -997,7 +769,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .select("file").collect().map(r => new Path(poolDir, r.getString(0)).toString)
     val base =
       if (hit.isEmpty) emptyRead(version)
-      else readFiles(version, hit.toIndexedSeq)
+      else readDataFiles(version, hit.toIndexedSeq)
     base.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
   }
 
@@ -1067,7 +839,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .map(r => new Path(poolDir, r.getString(0)).toString)
     val base =
       if (hit.isEmpty) emptyRead(version)
-      else readFiles(version, hit.toIndexedSeq)
+      else readDataFiles(version, hit.toIndexedSeq)
     // a DERIVED temporal column (ts__day/…) may be hidden by the
     // version's evolved read schema even though the files carry it:
     // recompute it from its source (a pure function) for the residual
@@ -1097,12 +869,9 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .select("file").distinct().collect()
       .map(r => new Path(poolDir, r.getString(0)).toString)
     if (hit.isEmpty) emptyRead(version)
-    else readFiles(version, hit.toIndexedSeq).join(k, Seq(keyCol), "left_semi")
+    else readDataFiles(version, hit.toIndexedSeq).join(k, Seq(keyCol), "left_semi")
   }
 
-
-  private def bloomDir(v: Long, column: String) =
-    new Path(manifestDir(v), s"_bloom_$column")
 
   /** BLOOM FILTER INDEX (Delta's bloom index): one Bloom filter PER
     * POOL FILE over `column`'s values (as strings — type-uniform at
@@ -1160,12 +929,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * that left the manifest drop their entries. */
   def extendBloomIndex(fromVersion: Long, toVersion: Long, column: String,
       fpp: Double = 0.01): Unit = {
-    val from = bloomDir(fromVersion, column)
-    require(fs.exists(new Path(from, "_SUCCESS")),
+    val from = sidecar(bloomDir(fromVersion, column))
+    require(from.isDefined,
       s"extendBloomIndex: version $fromVersion has no bloom index on '$column'")
     val toMan = manifest(toVersion).select("file", "n_rows").collect()
       .map(r => r.getString(0) -> math.max(r.getLong(1), 1L)).toMap
-    val old = ParquetSchemas.read(spark, from.toString).materialize()
+    val old = from.get.materialize()
     val oldNames = old.select("file").collect().map(_.getString(0)).toSet
     val carried = old.join(nameFrame(toMan.keys), Seq("file"), "left_semi")
     val fresh = toMan.keys.filterNot(oldNames).toSeq.sorted
@@ -1187,48 +956,15 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * the predecessor extends onto the child (carry + index-new-only).
     * Best-effort — the index is a derived artifact and a stale/absent
     * one stays CORRECT (unindexed files always open), so a failure
-    * here never fails the commit. */
+    * never fails the published commit; it is logged. */
   private def autoExtendBloomIndexes(fromVersion: Long, toVersion: Long): Unit =
     bloomColumns(fromVersion).foreach { c =>
       try extendBloomIndex(fromVersion, toVersion, c)
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        SnapshotStore.log.warn(s"ManifestStore $basePath: Bloom index on '$c' did not " +
+          s"extend onto published version $toVersion ($e); its reads open every file " +
+          "until the index is rebuilt", e) }
     }
-
-  /** The stored per-file Bloom filters for `column`, when built. */
-  def bloomIndex(version: Long, column: String)
-      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val p = bloomDir(version, column)
-    if (!fs.exists(new Path(p, "_SUCCESS"))) None
-    else Some(ParquetSchemas.read(spark, p.toString).collect().map { r =>
-      r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-    }.toMap)
-  }
-
-  /** Point lookup on a bloom-indexed column: open ONLY the files whose
-    * filter might contain the value (a file ABSENT from the index —
-    * landed after the build — always opens: a stale index stays
-    * CORRECT, it just skips less), then filter exactly. Falls back to
-    * a full scan + filter with no index. Returns (frame,
-    * filesOpened) — the caller-visible skip accounting. */
-  def readWhereEquals(version: Long, column: String, value: Any)
-      : (DataFrame, Int) = {
-    val pred = col(column) === lit(value)
-    bloomIndex(version, column) match {
-      case None =>
-        val files = dataPaths(version)
-        (readFiles(version, files).filter(pred), files.size)
-      case Some(idx) =>
-        val v = String.valueOf(value)
-        val names = manifest(version).select("file").collect().map(_.getString(0))
-        val hit = names.filter(n => idx.get(n).forall(_.mightContainString(v)))
-        val base =
-          if (hit.isEmpty) emptyRead(version)
-          else readFiles(version,
-            hit.map(n => new Path(poolDir, n).toString).toIndexedSeq)
-        (base.filter(pred), hit.length)
-    }
-  }
 
   /** Metadata-only stats (never opens a data file). */
   def stats(version: Long): DataFrame =
@@ -1253,8 +989,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // are NOT rewritten — old files read null for it); a dropped delta
     // column reads null on new rows; a same-name TYPE change fails
     // fast (silent coercion at 100 TB is a corrupted lake).
-    val baseSchema = evolvedSchema(fromVersion).getOrElse(
-      readFiles(fromVersion, dataPaths(fromVersion).take(1)).schema)
+    val baseSchema = storedSchema(fromVersion)
     val baseNames = baseSchema.fieldNames.toSet
     delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
       val bt = baseSchema(f.name).dataType
@@ -1302,7 +1037,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val (nMatched, nMatchedDel) =
       if (touched.isEmpty) (0L, 0L)
       else {
-        val r = readFiles(fromVersion,
+        val r = readDataFiles(fromVersion,
             touched.map(n => new Path(poolDir, n).toString).toSeq)
           .select(col(keyCol)).join(touchKeys, Seq(keyCol))
           .agg(count(lit(1)).as("m"),
@@ -1311,7 +1046,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       }
     val survivors =
       if (touched.isEmpty) align(delta).limit(0)
-      else align(readFiles(fromVersion,
+      else align(readDataFiles(fromVersion,
           touched.map(n => new Path(poolDir, n).toString).toSeq))
         .join(touchKeys, Seq(keyCol), "left_anti")
     val upserts = align(
@@ -1411,7 +1146,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
           "numDeletionVectorsUpdated" -> matching.size.toLong))
       return (manifestFiles(man).size, 0, nMatched)
     }
-    val kept = readFiles(fromVersion,
+    val kept = readDataFiles(fromVersion,
         matching.keys.map(n => new Path(poolDir, n).toString).toSeq)
       .filter(!coalesce(pred, lit(false)))
     val stats = landWithStats(arrange(kept, numNewFiles),
@@ -1590,7 +1325,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       (manifestFiles(man).size, nNew, nMatched)
     } else {
       val shared = man.filter(!col("file").isin(matching.keys.toSeq: _*))
-      val touched = readFiles(fromVersion,
+      val touched = readDataFiles(fromVersion,
         matching.keys.map(n => new Path(poolDir, n).toString).toSeq)
       val rewritten = applySet(touched.filter(coalesce(pred, lit(false))))
         .unionByName(touched.filter(!coalesce(pred, lit(false))))
@@ -1628,7 +1363,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         val masked = dv.select("file").distinct().collect().map(_.getString(0)).toSet
         val nDropped = dv.count()
         val shared = man.filter(!col("file").isin(masked.toSeq: _*))
-        val survivors = readFiles(fromVersion,
+        val survivors = readDataFiles(fromVersion,
           masked.map(n => new Path(poolDir, n).toString).toSeq)
         val stats = landWithStats(arrange(survivors, numNewFiles),
           manifestStatsCols(man), evolvedSchema(fromVersion))
@@ -1637,14 +1372,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         (manifestFiles(shared).size, stats.fold(0)(manifestFiles(_).size), nDropped)
     }
   }
-
-  /** RESTORE — Delta's `RESTORE TABLE t TO VERSION AS OF v`: publish a
-    * NEW version whose content equals `fromVersion`, leaving history
-    * intact (a restore is a commit, not a rewrite of the past). On
-    * this layout it is [[branch]] — zero data bytes move. */
-  def restoreVersion(fromVersion: Long, toVersion: Long,
-      commitTs: Option[Long] = None): Unit =
-    branch(fromVersion, toVersion, commitTs, op = "restoreVersion")
 
   /** DV entries that survive into a child version: only those naming
     * files the child still SHARES (a rewritten file materialized its
@@ -1765,7 +1492,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
           .select("file").collect().map(_.getString(0)).toSet intersect exclusive
       }
       if (chosen.isEmpty) emptyRead(version)
-      else inRange(readFiles(version,
+      else inRange(readDataFiles(version,
         chosen.toSeq.sorted.map(n => new Path(poolDir, n).toString)))
     }
     val a = side(fromVersion, fromFiles diff toFiles)
@@ -2011,7 +1738,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // masked view, so folded files shed their DV entries for good.
     // Folded files land under PHYSICAL names (column mapping): the
     // pool stays name-uniform with the carried files.
-    val folded = readFiles(fromVersion,
+    val folded = readDataFiles(fromVersion,
       small.map(n => new Path(poolDir, n).toString).toIndexedSeq)
     val names = landInPool(arrange(
       evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(folded, _))
@@ -2056,7 +1783,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // the fold reads MASKED (DV entries for rewritten files retire) and
     // lands physical-named (column mapping) — [[compact]]'s contract,
     // scoped; arrange keeps one partition tuple per file
-    val folded = readFiles(fromVersion,
+    val folded = readDataFiles(fromVersion,
       small.map(n => new Path(poolDir, n).toString))
     val names = landInPool(arrange(
       evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(folded, _))
@@ -2098,7 +1825,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       return (manifestFiles(man).size, 0)
     }
     val shared = man.join(nameFrame(matched), Seq("file"), "left_anti")
-    val rows = readFiles(fromVersion,
+    val rows = readDataFiles(fromVersion,
       matched.toSeq.sorted.map(n => new Path(poolDir, n).toString))
     val zc = ZOrder.zColumn(rows, zCols)
     val arranged = rows.withColumn("__z", zc)
@@ -2147,7 +1874,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         val maskedDf = nameFrame(masked)
         val nDropped = dv.join(maskedDf, Seq("file"), "left_semi").count()
         val shared = man.join(maskedDf, Seq("file"), "left_anti")
-        val survivors = readFiles(fromVersion,
+        val survivors = readDataFiles(fromVersion,
           masked.toSeq.sorted.map(n => new Path(poolDir, n).toString))
         val stats = landWithStats(arrange(survivors, numNewFiles),
           manifestStatsCols(man), evolvedSchema(fromVersion))

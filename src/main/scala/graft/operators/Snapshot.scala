@@ -298,6 +298,15 @@ object Snapshot {
   // ---- snapshot modeling over the shared testdata ----
 
   /** orders with a canonical per-row md5 fingerprint. */
+  /** Version 1 of an orders-keyed driver fixture at `path`, landed the
+    * way each layout's callers land it: 8 key-range files with a zone
+    * map on the snapshot layout, 8 pool files on the linked layout. */
+  private def writeV1(s: SparkSession, path: String, snapshot: Boolean, df: DataFrame,
+      commitTs: Option[Long] = Some(1000L)): Unit =
+    if (snapshot)
+      new SnapshotStore(s, path, "o_orderkey").writeRangePartitioned(df, 1L, 8, commitTs = commitTs)
+    else new ManifestStore(s, path, "o_orderkey").write(df, 1L, 8, commitTs = commitTs)
+
   private def ordersFp(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d)
     o.withColumn("fp", fingerprint(
@@ -427,37 +436,29 @@ object Snapshot {
         classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.root", base)
       Seq("rt_snap", "rt_linked").map { t =>
-        val isSnap = t == "rt_snap"
-        def snapSt = new SnapshotStore(s, s"$base/$t", "o_orderkey")
-        def linkSt = new ManifestStore(s, s"$base/$t", "o_orderkey")
-        def vs(): Seq[Long] = if (isSnap) snapSt.versions() else linkSt.versions()
-        if (vs().isEmpty) {
+        def st = VersionedStore.open(s, s"$base/$t", "o_orderkey")
+        if (st.versions().isEmpty) {
           val d2 = ord.filter(k % 10 === 0)
             .select(k, (col("o_totalprice") + 1.0).as("o_totalprice"))
           val d3 = ord.filter(k % 20 === 0)
             .select(k, (col("o_totalprice") + 2.0).as("o_totalprice"))
-          if (isSnap) {
-            val st = snapSt
-            st.writeRangePartitioned(ord.filter(k % 2 === 0), 1L, 8,
-              commitTs = Some(1000L))
-            st.mergeDelta(1L, 2L, d2, commitTs = Some(2000L)): Unit
-            st.mergeDelta(2L, 3L, d3, commitTs = Some(3000L)): Unit
-            st.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
-          } else {
-            val st = linkSt
-            st.write(ord.filter(k % 2 === 0), 1L, 8, commitTs = Some(1000L))
-            st.mergeDelta(1L, 2L, d2, commitTs = Some(2000L)): Unit
-            st.mergeDelta(2L, 3L, d3, commitTs = Some(3000L)): Unit
-            st.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
+          writeV1(s, s"$base/$t", t.endsWith("_snap"), ord.filter(k % 2 === 0))
+          st.mergeDelta(1L, 2L, d2, commitTs = Some(2000L)): Unit
+          st.mergeDelta(2L, 3L, d3, commitTs = Some(3000L)): Unit
+          st match {
+            case sn: SnapshotStore =>
+              sn.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
+            case lk: ManifestStore =>
+              lk.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
           }
         }
         val call = s"CALL $cat.retention_hours('$t', 1, ${3000L + hour})"
         val (refused, nPruned) =
-          if (vs().contains(1L)) {
-            if (isSnap) snapSt.hold(1L) else linkSt.hold(1L)
+          if (st.versions().contains(1L)) {
+            st.hold(1L)
             val r = try { s.sql(call).collect(); false }
-              catch { case _: Exception => vs().size == 4 } // AND nothing dropped
-            if (isSnap) snapSt.release(1L) else linkSt.release(1L)
+              catch { case _: Exception => st.versions().size == 4 } // AND nothing dropped
+            st.release(1L)
             (r, s.sql(call).collect().head.getLong(1))
           } else (true, 2L) // landed by a prior pass
         val hist = s.sql(s"SELECT version, commit_ts FROM $cat.$t.history")
@@ -920,29 +921,20 @@ object Snapshot {
             (col("o_totalprice") + 3.0).as("o_totalprice")))
       val delKeys = ord.filter(k % 18 === 0).select(k)
       for (layout <- Seq("ma_snap", "ma_linked")) {
-        if (layout == "ma_snap") {
-          val st = new SnapshotStore(s, s"$base/$layout", "o_orderkey")
-          if (!st.versions().contains(1L))
-            st.writeRangePartitioned(v1, 1L, 8, commitTs = Some(1000L))
-          if (!st.versions().contains(2L))
-            st.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
-          if (!st.versions().contains(3L))
-            st.mergeDelta(2L, 3L, cowDelta, commitTs = Some(3000L)): Unit
-          if (!st.versions().contains(4L))
-            st.mergeDelta(3L, 4L, cowDelta.limit(0), Some(delKeys),
-              commitTs = Some(4000L)): Unit
-        } else {
-          val st = new ManifestStore(s, s"$base/$layout", "o_orderkey")
-          if (!st.versions().contains(1L))
-            st.write(v1, 1L, 8, commitTs = Some(1000L))
-          if (!st.versions().contains(2L))
-            st.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
-          if (!st.versions().contains(3L))
-            st.mergeDelta(2L, 3L, cowDelta, commitTs = Some(3000L)): Unit
-          if (!st.versions().contains(4L))
-            st.mergeDelta(3L, 4L, cowDelta.limit(0), Some(delKeys),
-              commitTs = Some(4000L)): Unit
+        def st = VersionedStore.open(s, s"$base/$layout", "o_orderkey")
+        if (!st.versions().contains(1L))
+          writeV1(s, s"$base/$layout", layout == "ma_snap", v1)
+        if (!st.versions().contains(2L)) st match {
+          case sn: SnapshotStore =>
+            sn.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
+          case lk: ManifestStore =>
+            lk.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
         }
+        if (!st.versions().contains(3L))
+          st.mergeDelta(2L, 3L, cowDelta, commitTs = Some(3000L)): Unit
+        if (!st.versions().contains(4L))
+          st.mergeDelta(3L, 4L, cowDelta.limit(0), Some(delKeys),
+            commitTs = Some(4000L)): Unit
       }
       def bucketed(df: DataFrame) =
         df.withColumn("bucket", col("o_custkey") % 20)
@@ -1090,9 +1082,7 @@ object Snapshot {
         classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.root", base)
       for (t <- Seq("oa_snap", "oa_linked")) {
-        val landed =
-          (if (t == "oa_snap") new SnapshotStore(s, s"$base/$t", "o_orderkey").versions()
-           else new ManifestStore(s, s"$base/$t", "o_orderkey").versions()).contains(2L)
+        val landed = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions().contains(2L)
         if (!landed)
           s.sql(s"ALTER TABLE $cat.$t ADD COLUMN bonus DOUBLE DEFAULT 2.5")
       }
@@ -1417,9 +1407,7 @@ object Snapshot {
         classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.root", base)
       for (t <- Seq("oe_snap", "oe_linked")) {
-        val vs =
-          if (t == "oe_snap") new SnapshotStore(s, s"$base/$t", "o_orderkey").versions()
-          else new ManifestStore(s, s"$base/$t", "o_orderkey").versions()
+        val vs = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions()
         if (!vs.contains(2L))
           s.sql(s"ALTER TABLE $cat.$t DROP COLUMN o_orderpriority")
         if (!vs.contains(3L))
@@ -1514,9 +1502,7 @@ object Snapshot {
         ord.filter(k % 60 === 30).orderBy("o_orderkey").limit(2000)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       for ((t, layout) <- Seq(("sw_snap", "snapshot"), ("sw_linked", "linked"))) {
-        def vs(): Seq[Long] =
-          if (layout == "snapshot") new SnapshotStore(s, s"$base/$t", "o_orderkey").versions()
-          else new ManifestStore(s, s"$base/$t", "o_orderkey").versions()
+        def vs(): Seq[Long] = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions()
         if (vs().isEmpty) s.sql(
           s"""CREATE TABLE $cat.$t (o_orderkey BIGINT, o_totalprice DOUBLE)
              |TBLPROPERTIES('key'='o_orderkey', 'layout'='$layout')""".stripMargin)
@@ -1605,26 +1591,21 @@ object Snapshot {
       val delta = ord.filter(k % 10 === 0)
         .select(k, (col("o_totalprice") + 1.0).as("o_totalprice"))
       for (layout <- Seq("ho_snap", "ho_linked")) {
-        if (layout == "ho_snap") {
-          val st = new SnapshotStore(s, s"$base/$layout", "o_orderkey")
-          if (!st.versions().contains(1L))
-            st.writeRangePartitioned(v1, 1L, 8, commitTs = Some(1000L))
-          if (!st.versions().contains(2L))
-            st.mergeDelta(1L, 2L, delta, commitTs = Some(2000L)): Unit
-          if (!st.versions().contains(3L))
-            st.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
-          if (!st.versions().contains(4L))
-            st.restoreVersion(3L, 4L, commitTs = Some(4000L))
-        } else {
-          val st = new ManifestStore(s, s"$base/$layout", "o_orderkey")
-          if (!st.versions().contains(1L))
-            st.write(v1, 1L, 8, commitTs = Some(1000L))
-          if (!st.versions().contains(2L))
-            st.mergeDelta(1L, 2L, delta, commitTs = Some(2000L)): Unit
-          if (!st.versions().contains(3L))
-            st.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
-          if (!st.versions().contains(4L))
-            st.compact(3L, 4L, minBytes = 1L << 30, commitTs = Some(4000L)): Unit
+        def st = VersionedStore.open(s, s"$base/$layout", "o_orderkey")
+        if (!st.versions().contains(1L))
+          writeV1(s, s"$base/$layout", layout == "ho_snap", v1)
+        if (!st.versions().contains(2L))
+          st.mergeDelta(1L, 2L, delta, commitTs = Some(2000L)): Unit
+        if (!st.versions().contains(3L)) st match {
+          case sn: SnapshotStore =>
+            sn.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
+          case lk: ManifestStore =>
+            lk.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
+        }
+        if (!st.versions().contains(4L)) st match {
+          case sn: SnapshotStore => sn.restoreVersion(3L, 4L, commitTs = Some(4000L))
+          case lk: ManifestStore =>
+            lk.compact(3L, 4L, minBytes = 1L << 30, commitTs = Some(4000L)): Unit
         }
       }
       val cat = s"snapho_$fp"
@@ -1693,9 +1674,7 @@ object Snapshot {
         .select(k, (col("o_totalprice") + 5.0).as("o_totalprice"))
         .createOrReplaceTempView(s"ovr_src_$fp")
       for (t <- Seq("oi_snap", "oi_linked")) {
-        def vs(): Seq[Long] =
-          if (t == "oi_snap") new SnapshotStore(s, s"$base/$t", "o_orderkey").versions()
-          else new ManifestStore(s, s"$base/$t", "o_orderkey").versions()
+        def vs(): Seq[Long] = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions()
         if (!vs().contains(2L)) s.sql(s"INSERT INTO $cat.$t SELECT * FROM ins_src_$fp")
         if (!vs().contains(3L)) s.sql(s"INSERT OVERWRITE $cat.$t SELECT * FROM ovr_src_$fp")
       }
@@ -1733,10 +1712,7 @@ object Snapshot {
         .filter(col("o_orderkey") % 3 === 0)
         .createOrReplaceTempView(s"ctas_src_$fp")
       for ((t, layout) <- Seq(("ct_snap", "snapshot"), ("ct_linked", "linked"))) {
-        val exists =
-          if (layout == "snapshot")
-            new SnapshotStore(s, s"$base/$t", "o_orderkey").versions().contains(2L)
-          else new ManifestStore(s, s"$base/$t", "o_orderkey").versions().contains(2L)
+        val exists = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions().contains(2L)
         if (!exists) s.sql(
           s"""CREATE TABLE $cat.$t
              |TBLPROPERTIES('key'='o_orderkey', 'layout'='$layout')
@@ -1778,10 +1754,7 @@ object Snapshot {
       src.createOrReplaceTempView(s"part_src_$fp")
       val total = src.count()
       for ((t, layout) <- Seq(("pt_snap", "snapshot"), ("pt_linked", "linked"))) {
-        val exists =
-          if (layout == "snapshot")
-            new SnapshotStore(s, s"$base/$t", "o_orderkey").versions().contains(3L)
-          else new ManifestStore(s, s"$base/$t", "o_orderkey").versions().contains(3L)
+        val exists = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions().contains(3L)
         if (!exists) {
           s.sql(
             s"""CREATE TABLE $cat.$t
@@ -1824,10 +1797,7 @@ object Snapshot {
         .select("o_orderkey", "o_orderdate", "o_totalprice")
         .createOrReplaceTempView(s"tpart_src_$fp")
       for ((t, layout) <- Seq(("tp_snap", "snapshot"), ("tp_linked", "linked"))) {
-        val exists =
-          if (layout == "snapshot")
-            new SnapshotStore(s, s"$base/$t", "o_orderkey").versions().nonEmpty
-          else new ManifestStore(s, s"$base/$t", "o_orderkey").versions().nonEmpty
+        val exists = VersionedStore.open(s, s"$base/$t", "o_orderkey").versions().nonEmpty
         if (!exists) s.sql(
           s"""CREATE TABLE $cat.$t
              |PARTITIONED BY (months(o_orderdate))
@@ -1883,20 +1853,10 @@ object Snapshot {
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
         .createOrReplaceTempView(s"stats_src_$fp")
       for ((t, layout) <- Seq(("st_snap", "snapshot"), ("st_linked", "linked"))) {
-        val analyzed =
-          if (layout == "snapshot") {
-            val st = new SnapshotStore(s, s"$base/$t", "o_orderkey")
-            st.versions().contains(2L) && st.columnStats(2L).isDefined
-          } else {
-            val st = new ManifestStore(s, s"$base/$t", "o_orderkey")
-            st.versions().contains(2L) && st.columnStats(2L).isDefined
-          }
+        val st = VersionedStore.open(s, s"$base/$t", "o_orderkey")
+        val analyzed = st.versions().contains(2L) && st.columnStats(2L).isDefined
         if (!analyzed) {
-          val exists =
-            if (layout == "snapshot")
-              new SnapshotStore(s, s"$base/$t", "o_orderkey").versions().nonEmpty
-            else new ManifestStore(s, s"$base/$t", "o_orderkey").versions().nonEmpty
-          if (!exists) s.sql(
+          if (st.versions().isEmpty) s.sql(
             s"""CREATE TABLE $cat.$t
                |TBLPROPERTIES('key'='o_orderkey', 'layout'='$layout')
                |AS SELECT * FROM stats_src_$fp""".stripMargin)
@@ -2136,10 +2096,7 @@ object Snapshot {
       val src = Tables.region(s, d).select(col("r_regionkey"), col("r_name"))
       for ((t, path, layout) <- Seq(("sh_snap", "sh_snap", "snapshot"),
           ("ns1.sh_linked", "ns1/sh_linked", "linked"))) {
-        val exists =
-          if (layout == "snapshot")
-            new SnapshotStore(s, s"$base/$path", "r_regionkey").versions().nonEmpty
-          else new ManifestStore(s, s"$base/$path", "r_regionkey").versions().nonEmpty
+        val exists = VersionedStore.open(s, s"$base/$path", "r_regionkey").versions().nonEmpty
         if (!exists) {
           src.createOrReplaceTempView(s"show_src_$fp")
           s.sql(s"""CREATE TABLE $cat.$t
@@ -2375,17 +2332,12 @@ object Snapshot {
             .select(lit(layout).as("layout"), col("n"), col("sum_price"),
               col("violations"), lit(blocked && stillV2).as("blocked"))
         }
-        if (layout == "linked") {
-          val st = new ManifestStore(s, s"$base/lk", "o_orderkey")
-          if (st.versions().isEmpty) st.write(ord, 1L, numFiles = 8)
-          tipOf(st.read, st.versions, st.addConstraint, st.constraints,
-            (a, b, df) => { st.mergeDelta(a, b, df): Unit })
-        } else {
-          val st = new SnapshotStore(s, s"$base/sn", "o_orderkey")
-          if (st.versions().isEmpty) st.writeRangePartitioned(ord, 1L, 8)
-          tipOf(st.read, st.versions, st.addConstraint, st.constraints,
-            (a, b, df) => { st.mergeDelta(a, b, df): Unit })
-        }
+        val path = s"$base/${if (layout == "linked") "lk" else "sn"}"
+        if (VersionedStore.open(s, path, "o_orderkey").versions().isEmpty)
+          writeV1(s, path, layout != "linked", ord, None)
+        val st = VersionedStore.open(s, path, "o_orderkey")
+        tipOf(st.read, st.versions, st.addConstraint, st.constraints,
+          (a, b, df) => { st.mergeDelta(a, b, df): Unit })
       }
       side("linked").unionByName(side("snapshot")).orderBy("layout")
     },
@@ -2498,34 +2450,26 @@ object Snapshot {
       val lo = java.sql.Timestamp.valueOf("1995-01-01 00:00:00")
       val hi = java.sql.Timestamp.valueOf("1995-12-31 23:59:59")
       Seq("pe_snap", "pe_linked").map { t =>
-        val isSnap = t == "pe_snap"
-        def snapSt = new SnapshotStore(s, s"$base/$t", "o_orderkey")
-        def linkSt = new ManifestStore(s, s"$base/$t", "o_orderkey")
-        def vs(): Seq[Long] = if (isSnap) snapSt.versions() else linkSt.versions()
-        if (!vs().contains(1L)) {
-          if (isSnap) snapSt.writePartitioned(old, 1L, Seq("months(o_orderdate)"))
-          else linkSt.writePartitioned(old, 1L, Seq("months(o_orderdate)"))
+        def st = VersionedStore.open(s, s"$base/$t", "o_orderkey")
+        if (!st.versions().contains(1L)) {
+          if (t == "pe_snap")
+            new SnapshotStore(s, s"$base/$t", "o_orderkey")
+              .writePartitioned(old, 1L, Seq("months(o_orderdate)"))
+          else new ManifestStore(s, s"$base/$t", "o_orderkey")
+            .writePartitioned(old, 1L, Seq("months(o_orderdate)"))
         }
-        (if (isSnap) snapSt.evolvePartitionSpec(Seq("years(o_orderdate)"))
-         else linkSt.evolvePartitionSpec(Seq("years(o_orderdate)"))): Unit
-        if (!vs().contains(2L)) {
-          if (isSnap) snapSt.mergeDelta(1L, 2L, delta): Unit
-          else linkSt.mergeDelta(1L, 2L, delta): Unit
-        }
-        val q = if (isSnap) snapSt.readSourceRange(2L, "o_orderdate", lo, hi)
-          else linkSt.readSourceRange(2L, "o_orderdate", lo, hi)
+        st.evolvePartitionSpec(Seq("years(o_orderdate)")): Unit
+        if (!st.versions().contains(2L)) st.mergeDelta(1L, 2L, delta): Unit
+        val q = st.readSourceRange(2L, "o_orderdate", lo, hi)
         val opened = q.inputFiles.length
-        val total = (if (isSnap) snapSt.read(2L) else linkSt.read(2L))
-          .inputFiles.length
+        val total = st.read(2L).inputFiles.length
         // bound: ≤12 month files + ≤4 year files (merge's key-hash
         // salt caps files per partition tuple at numNewFiles=4; AQE
         // coalesces to 1/year at small SF), and a strict subset
         val pruneOk = opened < total && opened <= 16
         val dropRefused =
           try {
-            if (isSnap) snapSt.dropPartitions(2L, 99L,
-              col("o_orderdate__year") === to_date(lit("1995-01-01"))): Unit
-            else linkSt.dropPartitions(2L, 99L,
+            st.dropPartitions(2L, 99L,
               col("o_orderdate__year") === to_date(lit("1995-01-01"))): Unit
             false
           } catch { case _: IllegalArgumentException => true }
@@ -2623,24 +2567,21 @@ object Snapshot {
         .orderBy(col("__c"), col("o_custkey")).limit(1)
         .head().getLong(0)
       def side(layout: String): DataFrame = {
-        val (df, opened, total) =
+        val path = s"$base/${if (layout == "linked") "lk" else "sn"}"
+        if (!VersionedStore.open(s, path, "o_orderkey").versions().contains(1L)) {
           if (layout == "linked") {
-            val st = new ManifestStore(s, s"$base/lk", "o_orderkey")
-            if (!st.versions().contains(1L)) {
-              st.write(ord, 1L, numFiles = 16)
-              st.buildBloomIndex(1L, "o_custkey")
-            }
-            val (r, n) = st.readWhereEquals(1L, "o_custkey", target)
-            (r, n, st.manifest(1L).count().toInt)
+            val st = new ManifestStore(s, path, "o_orderkey")
+            st.write(ord, 1L, numFiles = 16)
+            st.buildBloomIndex(1L, "o_custkey")
           } else {
-            val st = new SnapshotStore(s, s"$base/sn", "o_orderkey")
-            if (!st.versions().contains(1L)) {
-              st.writeRangePartitioned(ord, 1L, 16)
-              st.buildBloomIndex(1L, "o_custkey")
-            }
-            val (r, n) = st.readWhereEquals(1L, "o_custkey", target)
-            (r, n, 16)
+            val st = new SnapshotStore(s, path, "o_orderkey")
+            st.writeRangePartitioned(ord, 1L, 16)
+            st.buildBloomIndex(1L, "o_custkey")
           }
+        }
+        val st = VersionedStore.open(s, path, "o_orderkey")
+        val (df, opened) = st.readWhereEquals(1L, "o_custkey", target)
+        val total = st.dataPaths(1L).size
         df.agg(count(lit(1)).as("n"), moneySum(col("o_totalprice")).as("sum_price"))
           .select(lit(layout).as("layout"), col("n"), col("sum_price"),
             lit(opened < total).as("skipped"))

@@ -597,14 +597,14 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
 
   def withKeyCol(key: String): SnapshotStore = new SnapshotStore(spark, basePath, key)
 
-  /** Atomic snapshot publish: write to a temp sibling, then a single
-    * rename onto `v=<version>` once the write (and its `_SUCCESS`
-    * marker) completed. A crash mid-write leaves only a `.tmp-` dir,
-    * which `versions()` never lists, so readers can never observe a
-    * partial snapshot as a valid version.
+  /** Atomic snapshot publish through [[publish]]: the frame lands in a
+    * staging sibling, which one rename makes `v=<version>`. A crash
+    * mid-write leaves only a `.tmp-` dir, which `versions()` never
+    * lists, so readers can never observe a partial snapshot as a valid
+    * version.
     *
     * `commitTs` (epoch millis, default now) is recorded in a
-    * `_commit_ts` sidecar INSIDE the tmp dir, so it publishes
+    * `_commit_ts` sidecar inside the staged version, so it publishes
     * atomically with the data — the timestamp [[readAsOf]] resolves
     * against. Pass it explicitly to backdate reproducible stores
     * (tests, replays); production writers take the default. */
@@ -616,34 +616,158 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * the landing [[writeRangePartitioned]]/[[writeZOrdered]] use. */
   private def write(df: DataFrame, version: Long, commitTs: Option[Long],
       zmCols: Option[Seq[String]]): Unit = {
-    ensureStoreMeta()
-    val tmp = new Path(s"$basePath/.tmp-v=$version-${java.util.UUID.randomUUID()}")
+    val tmp = stage(version)
     enforceConstraints(df, "write")
     // a partitioned store splits ANY landing one-tuple-per-file (the
     // caller's row arrangement is preserved within each tuple); an
     // unpartitioned store lands the frame's files verbatim
     val names = landFlat(df, tmp)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
     // a PARTITIONED store's version must always carry its zone map
     // (the partition verbs' contract) — a plain full-replace write on
     // one stages the partition stats even when the caller asked for
     // no extra zmCols
     val effectiveZm = zmCols.orElse(
       Option(storedPartitionBy()).filter(_.nonEmpty))
-    effectiveZm.foreach { cols =>
-      zmNewStats(names.toSeq.sorted.map(n => new Path(tmp, n).toString),
-          (cols ++ storedPartitionBy()).distinct.filterNot(_ == keyCol))
-        .foreach(stageZoneMap(tmp, version, _))
-    }
     // numOutputRows is the history row's own n_rows (footer-counted
     // at noteCommit) — recording it again here would be a recompute
-    casPublish(tmp, version, "write",
+    publish(version, tmp, Some(names),
+      zmCols = effectiveZm.map(cols =>
+        (cols ++ storedPartitionBy()).distinct.filterNot(_ == keyCol)),
+      commitTs = commitTs, op = "write",
       metrics = Map("numFiles" -> names.size.toLong))
+  }
+
+  /** A fresh staging directory for `version`, the one [[publish]]
+    * turns into `v=<version>`. */
+  private def stage(version: Long): Path =
+    new Path(s"$basePath/.tmp-v=$version-${java.util.UUID.randomUUID()}")
+
+  /** Publish the version staged in `tmp` as `toVersion` — this
+    * layout's one commit path, [[ManifestStore.publish]]'s twin. Beside
+    * the part files a landing wrote into `tmp` (`landed`; None when
+    * nothing landed, so the directory and its `_SUCCESS` marker are
+    * made here), the `carried` files (and a `_dv` directory) of the
+    * source version byte-copy in under their basenames. The zone map
+    * stages inside: the source's `zm` rows for the carried files (see
+    * [[carriedZoneMap]]) plus fresh stats over the landed files under
+    * `zmCols` (default: `zm`'s stats columns). So do the deletion
+    * vector, the commit timestamp, the evolved schema and the
+    * operation stamp, and one CAS rename makes the whole version live
+    * ([[CommitProtocol]]: exactly one concurrent publisher of
+    * `toVersion` wins; the rest throw [[VersionConflictException]]).
+    * `statsFrom`: the history entry reuses that version's statistics.
+    *
+    * `inPlace` (compaction: it rewrites a version's layout, not its
+    * identity) swaps `tmp` for the existing `toVersion` instead: move
+    * the live dir aside, move `tmp` in, drop the old dir. A crash
+    * before the final step leaves either the original version live or
+    * (between the two renames) the `.old-` dir intact for manual
+    * recovery; `versions()` never lists a partial dir. */
+  private def publish(toVersion: Long, tmp: Path, landed: Option[Set[String]],
+      carried: Seq[Path] = Nil, zm: Option[DataFrame] = None,
+      zmCols: Option[Seq[String]] = None, dv: Option[DataFrame] = None,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      commitTs: Option[Long] = None, op: String = "unknown", opParams: String = "",
+      statsFrom: Option[Long] = None, metrics: Map[String, Long] = Map.empty,
+      inPlace: Boolean = false): Unit = {
+    if (landed.isEmpty) {
+      fs.mkdirs(tmp)
+      fs.create(new Path(tmp, "_SUCCESS"), true).close()
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    carried.foreach(p =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf))
+    dv.foreach(_.select("file", "pos").coalesce(1).write.mode("overwrite")
+      .parquet(new Path(tmp, "_dv").toString))
+    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
+    schema.foreach(Sidecars.writeSchema(fs, tmp, _))
+    val fresh = for {
+      names <- landed.filter(_.nonEmpty)
+      cols <- zmCols.orElse(zm.map(zmStatsColsOf))
+      rows <- zmNewStats(names.toSeq.sorted.map(n => new Path(tmp, n).toString), cols)
+    } yield rows
+    (zm ++ fresh).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .foreach(stageZoneMap(tmp, toVersion, _))
+    val dest = new Path(dir(toVersion))
+    if (inPlace) {
+      val old = new Path(s"$basePath/.old-v=$toVersion-${java.util.UUID.randomUUID()}")
+      if (!fs.rename(dest, old))
+        throw new java.io.IOException(s"$op: move-aside failed: $dest -> $old")
+      if (!fs.rename(tmp, dest)) {
+        fs.rename(old, dest) // roll back to the original version
+        throw new java.io.IOException(s"$op: publish failed: $tmp -> $dest")
+      }
+      fs.delete(old, true)
+      // the version's files changed in place: its checkpoint row (and
+      // the successor's bytes-added diff) are stale
+      invalidateHistoryCkpt()
+    } else {
+      ensureStoreMeta()
+      // the operation stamp lands atomically WITH the version —
+      // DESCRIBE HISTORY's verb and the verb's own row/file counts
+      SnapshotStore.writeOpSidecar(fs, tmp, op, opParams, metrics)
+      val token = CommitProtocol.writeToken(fs, tmp)
+      CommitProtocol.publish(fs, tmp, dest, token, s"$op to v$toVersion on $basePath")
+      // a stats-carry commit shares the source's file CONTENT, so
+      // counts/rows reuse its checkpoint entry instead of re-opening
+      // every footer. Bytes are not carried: they come from the
+      // basename diff against the predecessor (a restore physically
+      // lands its files again; rename/widen keep the basenames, 0)
+      noteCommit(toVersion, statsFrom,
+        _.copy(commitTs = commitTimestampRaw(toVersion),
+          bytes = commitBytesRaw(toVersion), op = op, opParams = opParams,
+          metrics = metrics),
+        computeHistoryEntry(toVersion))
+    }
   }
 
   private def writeCommitTs(versionDir: Path, ts: Long): Unit = {
     val out = fs.create(new Path(versionDir, "_commit_ts"), true)
     try out.writeUTF(ts.toString) finally out.close()
+  }
+
+  /** `zm`'s rows (a source version's zone map) for the files named in
+    * `keep`, re-homed from `fromVersion` onto `toVersion` — the
+    * carried half of every incremental zone map. */
+  private def carriedZoneMap(zm: DataFrame, fromVersion: Long, toVersion: Long,
+      keep: Set[String]): DataFrame =
+    zm.filter(regexp_extract(col("file"), "[^/]+$", 0).isin(keep.toSeq: _*))
+      .withColumn("file",
+        regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
+
+  /** The part files directly inside `dir`, by name. */
+  private def partNames(dir: Path): Set[String] =
+    fs.listStatus(dir).map(_.getPath.getName).filter(_.startsWith("part-")).toSet
+
+  /** The source's DV entries that survive into a child carrying the
+    * files named in `keep` (a rewritten file materialized its
+    * survivors, so its entries drop); None when none survive. */
+  private def carryDv(fromVersion: Long, keep: Set[String]): Option[DataFrame] =
+    dvFrame(fromVersion)
+      .map(_.filter(col("file").isin(keep.toSeq: _*)).materialize())
+      .filter(_.limit(1).count() > 0)
+
+  protected def storedSchema(version: Long): org.apache.spark.sql.types.StructType =
+    evolvedSchema(version).getOrElse(ParquetSchemas.schema(spark, dir(version)))
+
+  /** The carry publish as a byte-carry: every data file, the deletion
+    * vector's directory and the zone map's rows copy into `toVersion`
+    * under their own names. */
+  protected def publishCarry(fromVersion: Long, toVersion: Long,
+      schema: Option[org.apache.spark.sql.types.StructType], dropStats: Seq[String],
+      commitTs: Option[Long], op: String, opParams: String): Unit = {
+    val listing = fs.listStatus(new Path(dir(fromVersion))).toSeq.map(_.getPath)
+    val files = listing.filter(_.getName.startsWith("part-"))
+    val zm = zoneMap(fromVersion).map { z =>
+      val keep = z.columns.toSeq.filterNot(c =>
+        dropStats.exists(dc => c == s"min_$dc" || c == s"max_$dc"))
+      carriedZoneMap(z.select(keep.map(col): _*), fromVersion, toVersion,
+        files.map(_.getName).toSet)
+    }
+    publish(toVersion, stage(toVersion), None,
+      carried = files ++ listing.filter(_.getName == "_dv"), zm = zm,
+      schema = schema.orElse(evolvedSchema(fromVersion)), commitTs = commitTs,
+      op = op, opParams = opParams, statsFrom = Some(fromVersion))
   }
 
   /** DEEP CLONE to a new table at `dstBase`, this layout's way: each
@@ -669,12 +793,10 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     // the zone map stores ABSOLUTE file URIs (readWhere opens them):
     // re-home each entry onto the clone's v=1 by basename, or pruned
     // reads on the clone would open the SOURCE's files
-    if (fs.exists(new Path(zmapDir(fromVersion), "_SUCCESS"))) {
-      ParquetSchemas.read(spark, zmapDir(fromVersion)).withColumn("file",
-          concat(lit(s"$dstBase/v=1/"), element_at(split(col("file"), "/"), -1)))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new Path(tmp, "_zonemap").toString)
-    }
+    zoneMap(fromVersion).foreach(_.withColumn("file",
+        concat(lit(s"$dstBase/v=1/"), element_at(split(col("file"), "/"), -1)))
+      .coalesce(1).write.mode("overwrite")
+      .parquet(new Path(tmp, "_zonemap").toString))
     commitTs.foreach { ts =>
       val out = dfs.create(new Path(tmp, "_commit_ts"), true)
       try out.writeUTF(ts.toString) finally out.close()
@@ -700,32 +822,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       val in = fs.open(sidecar)
       try in.readUTF().toLong finally in.close()
     } else fs.getFileStatus(new Path(dir(version), "_SUCCESS")).getModificationTime
-  }
-
-  /** The newest version committed at or before `ts`, if any. Resolves
-    * by commit timestamp, not version id order, so out-of-order
-    * backfills still answer "what was live at ts" correctly. */
-  def versionAsOf(ts: Long): Option[Long] = {
-    // served from the version-log checkpoint: ONE sidecar read on the
-    // warm path, not O(versions) per-version opens
-    val committed = historyEntries().map { case (v, e) => v -> e.commitTs }
-      .filter(_._2 <= ts)
-    if (committed.isEmpty) None
-    else Some(committed.maxBy { case (v, t) => (t, v) }._1)
-  }
-
-  /** Time-travel read — the "restore yesterday 14:00" UX every backup
-    * tool exposes: read the newest version committed at or before
-    * `ts`. Metadata-only resolution (version listing + KB sidecars),
-    * then a plain single-version read. */
-  def readAsOf(ts: Long): DataFrame = readAsOfResolved(ts)._2
-
-  /** [[readAsOf]] returning the resolved version id alongside. */
-  def readAsOfResolved(ts: Long): (Long, DataFrame) = versionAsOf(ts) match {
-    case Some(v) => (v, read(v))
-    case None => throw new IllegalArgumentException(
-      s"no version committed at or before $ts" + (versions().headOption.map(v =>
-        s" (earliest is v=$v at ${commitTimestamp(v)})").getOrElse(" (store is empty)")))
   }
 
   /** Timestamp-resolved [[restoreAndValidate]]: restore the snapshot
@@ -774,11 +870,10 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       "writeBucketed: this store declares partition columns — bucket and " +
         "partition layouts are exclusive per store")
     requireFreeVersion(version)
-    ensureStoreMeta()
     SnapshotStore.writeStoredBucketBy(fs, basePath, keyCol, buckets,
       canRedeclare = versions().isEmpty)
     enforceConstraints(df, "writeBucketed")
-    val tmp = new Path(s"$basePath/.tmp-v=$version-${java.util.UUID.randomUUID()}")
+    val tmp = stage(version)
     df.repartition(buckets, col(keyCol)).sortWithinPartitions(keyCol)
       .write.mode("overwrite").parquet(tmp.toString)
     // the writer names files part-<partitionId>-<uuid>...: the leading
@@ -794,13 +889,10 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         if (!fs.rename(p, new Path(tmp, renamed)))
           throw new java.io.IOException(s"bucketed landing rename failed for $p")
         renamed
-      }.toSeq
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    if (statsCols.nonEmpty)
-      zmNewStats(names.sorted.map(n => new Path(tmp, n).toString),
-          statsCols.distinct.filterNot(_ == keyCol))
-        .foreach(stageZoneMap(tmp, version, _))
-    casPublish(tmp, version, "writeBucketed", s"$buckets buckets by $keyCol")
+      }.toSet
+    publish(version, tmp, Some(names),
+      zmCols = Some(statsCols.distinct.filterNot(_ == keyCol)).filter(_ => statsCols.nonEmpty),
+      commitTs = commitTs, op = "writeBucketed", opParams = s"$buckets buckets by $keyCol")
   }
 
   /** Publish `version` as an EMPTY table of `schema` — SQL `CREATE
@@ -907,9 +999,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   }
 
 
-  private def bloomDir(v: Long, column: String) =
-    new Path(dir(v), s"_bloom_$column")
-
   /** BLOOM FILTER INDEX — [[ManifestStore.buildBloomIndex]]'s
     * dir-per-version twin: one filter per data file over `column`
     * (string-uniform), sized by each file's parquet footer row count,
@@ -954,43 +1043,10 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .parquet(bloomDir(version, column).toString)
   }
 
-  /** The stored per-file Bloom filters for `column`, when built. */
-  def bloomIndex(version: Long, column: String)
-      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val p = bloomDir(version, column)
-    if (!fs.exists(new Path(p, "_SUCCESS"))) None
-    else Some(ParquetSchemas.read(spark, p.toString).collect().map { r =>
-      r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-    }.toMap)
-  }
-
-  /** Point lookup on a bloom-indexed column — see
-    * [[ManifestStore.readWhereEquals]]: files the index rules out
-    * never open; files it does not cover always open (stale-safe);
-    * exact re-filter on top. Returns (frame, filesOpened). */
-  def readWhereEquals(version: Long, column: String, value: Any)
-      : (DataFrame, Int) = {
-    val pred = col(column) === lit(value)
-    val parts = fs.listStatus(new Path(dir(version))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
-    bloomIndex(version, column) match {
-      case None => (readDataFiles(version, parts.map(_.toString)).filter(pred),
-        parts.size)
-      case Some(idx) =>
-        val v = String.valueOf(value)
-        val hit = parts.filter(p => idx.get(p.getName).forall(_.mightContainString(v)))
-        val base =
-          if (hit.isEmpty) emptyRead(version)
-          else readDataFiles(version, hit.map(_.toString))
-        (base.filter(pred), hit.length)
-    }
-  }
-
   /** `_zonemap` starts with '_' so Spark's file listing hides it from
     * plain `read(version)` scans — the zone map rides inside the
     * version dir without polluting it. */
-  private def zmapDir(version: Long): String = s"${dir(version)}/_zonemap"
+  private def zmapDir(version: Long): Path = new Path(dir(version), "_zonemap")
 
   /** (Re)build the per-file zone map of a committed version: one scan
     * of the stat'd columns only (pruned read), output |files| tiny
@@ -1010,14 +1066,11 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         statsCols.filterNot(_ == keyCol).map(col)): _*)
       .groupBy("file")
       .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1).write.mode("overwrite").parquet(zmapDir(version))
+      .coalesce(1).write.mode("overwrite").parquet(zmapDir(version).toString)
   }
 
   /** The version's zone map, if one was built. */
-  def zoneMap(version: Long): Option[DataFrame] =
-    if (fs.exists(new Path(zmapDir(version), "_SUCCESS")))
-      Some(ParquetSchemas.read(spark, zmapDir(version)))
-    else None
+  def zoneMap(version: Long): Option[DataFrame] = sidecar(zmapDir(version))
 
   /** Files whose stats range for `column` overlaps [lo, hi] — None
     * when the version has no zone map or no stats for that column.
@@ -1041,20 +1094,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   /** Files whose key range overlaps [lo, hi] — see [[prunedFilesBy]]. */
   def prunedFiles(version: Long, lo: Any, hi: Any): Option[Seq[String]] =
     prunedFilesBy(version, keyCol, lo, hi)
-
-
-  /** [[ManifestStore.emptyRead]]'s dir-per-version twin: a zero-row
-    * frame in the version's logical schema without standing up a scan
-    * over the version's files. */
-  private def emptyRead(version: Long): DataFrame =
-    evolvedSchema(version) match {
-      case Some(sc) => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
-      case None =>
-        val parts = dataFiles(version)
-        if (parts.isEmpty) read(version).limit(0)
-        else ParquetSchemas.readFiles(spark, Seq(parts.head.toString)).limit(0)
-    }
 
   /** Restore filtered on ANY stats-mapped column: rows of `version`
     * with `column` in [lo, hi], reading only zone-map-overlapping
@@ -1086,7 +1125,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     val pcs = storedPartitionBy()
     if (pcs.isEmpty) {
       df0.write.mode("overwrite").parquet(tmp.toString)
-      fs.listStatus(tmp).map(_.getPath.getName).filter(_.startsWith("part-")).toSet
+      partNames(tmp)
     } else {
       val df = deriveParts(df0)
       val stage = new Path(s"$basePath/.tmp-stage-${java.util.UUID.randomUUID()}")
@@ -1148,18 +1187,15 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .foreach(n => throw new IllegalArgumentException(
         s"writePartitioned: derived partition column name '$n' collides with a " +
           "data column"))
-    ensureStoreMeta()
     SnapshotStore.writeStoredPartitionBy(fs, basePath, partCols,
       canRedeclare = versions().isEmpty)
     enforceConstraints(df, "writePartitioned")
-    val tmp = new Path(s"$basePath/.tmp-v=$version-${java.util.UUID.randomUUID()}")
+    val tmp = stage(version)
     val names = landFlat(arrange(df, filesPerPartition), tmp)
     require(names.nonEmpty, "writePartitioned: empty input frame")
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    zmNewStats(names.toSeq.sorted.map(n => new Path(tmp, n).toString),
-        (statsCols ++ specs.map(_.name)).distinct.filterNot(_ == keyCol))
-      .foreach(stageZoneMap(tmp, version, _))
-    casPublish(tmp, version, "writePartitioned")
+    publish(version, tmp, Some(names),
+      zmCols = Some((statsCols ++ specs.map(_.name)).distinct.filterNot(_ == keyCol)),
+      commitTs = commitTs, op = "writePartitioned")
   }
 
   /** Zone-map rows with the partition tuple as plain value columns
@@ -1222,32 +1258,17 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         pcs.map(c => pe(c) <=> touched(c)).reduce(_ && _), "left_anti")
       .select("file").collect()
       .map(f => { val p = f.getString(0); p.substring(p.lastIndexOf('/') + 1) }).toSet
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    val newNames = landFlat(arrange(evolvedSchema(fromVersion)
-      .map(SnapshotStore.toPhysical(data2, _)).getOrElse(data2), filesPerPartition), tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val allParts = dataFiles(fromVersion)
+    val tmp = stage(toVersion)
+    val sc = evolvedSchema(fromVersion)
+    val newNames = landFlat(arrange(
+      sc.map(SnapshotStore.toPhysical(data2, _)).getOrElse(data2), filesPerPartition), tmp)
     val carriedParts = allParts.filter(p => sharedNames(p.getName))
-    carriedParts.foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-    }
-    carryDvInto(fromVersion, tmp, carriedParts.map(_.getName).toSet)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    evolvedSchema(fromVersion).foreach(Sidecars.writeSchema(fs, tmp, _))
-    // zone map: carried entries re-home; only the new files scan —
-    // staged INSIDE tmp so version + map publish in one rename
-    val zmStatsCols = zm.columns.toSeq
-      .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
-    val carried = zm
-      .filter(regexp_extract(col("file"), "[^/]+$", 0).isin(sharedNames.toSeq: _*))
-      .withColumn("file",
-        regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-    val withNew = zmNewStats(
-        newNames.toSeq.sorted.map(n => new Path(tmp, n).toString), zmStatsCols)
-      .fold(carried)(carried.unionByName(_, allowMissingColumns = true))
-    stageZoneMap(tmp, toVersion, withNew)
-    casPublish(tmp, toVersion, "replaceWhere")
+    // zone map: carried entries re-home; only the new files scan
+    publish(toVersion, tmp, Some(newNames), carriedParts,
+      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, sharedNames)),
+      dv = carryDv(fromVersion, sharedNames), schema = sc, commitTs = commitTs,
+      op = "replaceWhere")
     (carriedParts.length, allParts.length - carriedParts.length, newNames.size)
   }
 
@@ -1267,30 +1288,19 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .materialize()
     val droppedNames = dropped.select("name").collect().map(_.getString(0)).toSet
     val rowsDropped = dropped.agg(coalesce(sum("n_rows"), lit(0L))).head().getLong(0)
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
+    val allParts = dataFiles(fromVersion)
     val survivors = allParts.filterNot(p => droppedNames(p.getName))
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    survivors.foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-    }
-    carryDvInto(fromVersion, tmp, survivors.map(_.getName).toSet)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
+    val kept = survivors.map(_.getName).toSet
     // dropping every partition legitimately empties the table: record
     // the schema sidecar so the zero-file version still plans
     val schema =
       if (survivors.isEmpty)
         evolvedSchema(fromVersion).orElse(Some(read(fromVersion).schema))
       else evolvedSchema(fromVersion)
-    schema.foreach(Sidecars.writeSchema(fs, tmp, _))
-    fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    stageZoneMap(tmp, toVersion,
-      zm.filter(!regexp_extract(col("file"), "[^/]+$", 0).isin(droppedNames.toSeq: _*))
-        .withColumn("file",
-          regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/")))
-    casPublish(tmp, toVersion, "dropPartitions")
+    publish(toVersion, stage(toVersion), None, survivors,
+      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, kept)),
+      dv = carryDv(fromVersion, kept), schema = schema, commitTs = commitTs,
+      op = "dropPartitions")
     (survivors.length, droppedNames.size, rowsDropped)
   }
 
@@ -1308,36 +1318,27 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .select(regexp_extract(col("file"), "[^/]+$", 0).as("name"))
       .collect().map(_.getString(0)).toSet
 
-  /** Shared landing for the scoped maintenance verbs: byte-copy
-    * `carried` into a tmp dir, land `rewrite` (physical-named, hive
-    * split one-tuple-per-file), carry the DV for carried files, stage
-    * carried+new zone-map rows, CAS-publish. Returns new file names. */
+  /** Shared landing for the scoped maintenance verbs: land `rewrite`
+    * (physical-named, hive split one-tuple-per-file) beside the
+    * byte-carried `carried` files, their DV entries and zone-map rows.
+    * Returns new file names. */
   private def publishScopedRewrite(fromVersion: Long, toVersion: Long,
       carried: Seq[Path], rewrite: DataFrame, zm: DataFrame,
       commitTs: Option[Long], op: String, opParams: String): Set[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    carried.foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-    }
+    val tmp = stage(toVersion)
     val sc = evolvedSchema(fromVersion)
     val newNames = landFlat(
       sc.map(SnapshotStore.toPhysical(rewrite, _)).getOrElse(rewrite), tmp)
-    carryDvInto(fromVersion, tmp, carried.map(_.getName).toSet)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    sc.foreach(Sidecars.writeSchema(fs, tmp, _))
-    fs.create(new Path(tmp, "_SUCCESS"), true).close()
     val carriedNames = carried.map(_.getName).toSet
-    val droppedNames = zm
+    val nDropped = zm
       .select(regexp_extract(col("file"), "[^/]+$", 0).as("name"))
-      .collect().map(_.getString(0)).filterNot(carriedNames).toSet
-    stageCarriedZoneMap(tmp, fromVersion, toVersion, droppedNames,
-      extra = zmNewStats(newNames.toSeq.sorted.map(n => new Path(tmp, n).toString),
-        zmStatsColsOf(zm)))
-    casPublish(tmp, toVersion, op, opParams, metrics = Map(
-      "numAddedFiles" -> newNames.size.toLong,
-      "numRemovedFiles" -> droppedNames.size.toLong))
+      .collect().map(_.getString(0)).count(n => !carriedNames(n))
+    publish(toVersion, tmp, Some(newNames), carried,
+      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, carriedNames)),
+      dv = carryDv(fromVersion, carriedNames), schema = sc, commitTs = commitTs,
+      op = op, opParams = opParams, metrics = Map(
+        "numAddedFiles" -> newNames.size.toLong,
+        "numRemovedFiles" -> nDropped.toLong))
     newNames
   }
 
@@ -1396,8 +1397,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         "within every file already; z-order the finer dimensions instead")
     val zm = zm0.materialize()
     val matched = matchedPartitionFiles(zm, pcs, pred)
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
+    val allParts = dataFiles(fromVersion)
     if (matched.isEmpty) {
       restoreVersion(fromVersion, toVersion, commitTs,
         op = "zorder", opParams = SnapshotStore.predSql(pred))
@@ -1430,8 +1430,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     val (pcs, zm0) = requirePartitionedZm("foldDvWhere", fromVersion)
     requireFreeVersion(toVersion)
     val zm = zm0.materialize()
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
+    val allParts = dataFiles(fromVersion)
     dvFrame(fromVersion) match {
       case None =>
         restoreVersion(fromVersion, toVersion, commitTs,
@@ -1495,51 +1494,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .sorted
   }
 
-  /** CAS publication of a fully-built version dir — the layout's
-    * [[CommitProtocol]] hookup. Exactly one concurrent publisher of
-    * `toVersion` wins; the rest throw [[VersionConflictException]]
-    * with their leftovers removed. */
-  private def casPublish(tmp: Path, toVersion: Long, what: String,
-      opParams: String = "", statsFrom: Option[Long] = None,
-      metrics: Map[String, Long] = Map.empty): Unit = {
-    // the operation stamp lands atomically WITH the version (inside
-    // the tmp dir, before the CAS rename) — DESCRIBE HISTORY's verb
-    // and the verb's own row/file counts (operationMetrics)
-    SnapshotStore.writeOpSidecar(fs, tmp, what, opParams, metrics)
-    val token = CommitProtocol.writeToken(fs, tmp)
-    CommitProtocol.publish(fs, tmp, new Path(dir(toVersion)), token,
-      s"$what to v$toVersion on $basePath")
-    noteCommit(toVersion, what, opParams, statsFrom, metrics)
-  }
-
-  private def dvPath(version: Long) = new Path(dir(version), "_dv")
-
-  /** The version's DELETION VECTOR — (file basename, row position)
-    * pairs masked out of every semantic read, when a merge-on-read
-    * [[deleteWhere]] published one. Lives inside the version dir
-    * (underscore-prefixed, like `_zonemap`), so it publishes
-    * atomically with the version. */
-  def dvFrame(version: Long): Option[DataFrame] =
-    if (!fs.exists(new Path(dvPath(version), "_SUCCESS"))) None
-    else Some(spark.read.schema(SnapshotStore.dvSchema).parquet(dvPath(version).toString))
-
-  /** Mask entry count from the DV parquet footers — driver-side, one
-    * footer open per DV part file (the DV lands coalesce(1)). */
-  def dvRowCount(version: Long): Long = {
-    val p = dvPath(version)
-    if (!fs.exists(new Path(p, "_SUCCESS"))) 0L
-    else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      fs.listStatus(p)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-    }
-  }
-
   /** Read `paths` (files or the version dir) with (file, position)
     * captured as regular columns `__f`/`__p` and the version's DV
     * applied — the masked-scan building block under every semantic
@@ -1571,19 +1525,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         .getOrElse(ParquetSchemas.read(spark, paths: _*))
     else maskedScanWithPos(version, paths, schema).drop("__f", "__p")
 
-  /** Write the surviving DV entries (those naming files in `keep` —
-    * byte-carried under the same basename) into the tmp dir BEFORE
-    * publish, so the mask lands atomically with the version. A
-    * rewritten file materialized its survivors; its entries drop. */
-  private def carryDvInto(fromVersion: Long, tmp: Path,
-      keep: Set[String]): Unit =
-    dvFrame(fromVersion).foreach { dv =>
-      val kept = dv.filter(col("file").isin(keep.toSeq: _*)).materialize()
-      if (kept.limit(1).count() > 0)
-        kept.coalesce(1).write.mode("overwrite")
-          .parquet(new Path(tmp, "_dv").toString)
-    }
-
   def read(version: Long): DataFrame = recomputeDerived(evolvedSchema(version) match {
     case Some(sc) => applyFills(masked(version, Seq(dir(version)), Some(sc)), sc)
     case None => masked(version, Seq(dir(version)), None)
@@ -1594,7 +1535,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * the `_SUCCESS` mtime for pre-sidecar dirs), file/row counts from
     * one listing + the files' parquet footers (driver-only, no job),
     * bytes = what the commit ADDED (new basenames vs predecessor). */
-  private def computeHistoryEntry(v: Long): SnapshotStore.HistoryEntry = {
+  protected def computeHistoryEntry(v: Long): SnapshotStore.HistoryEntry = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = fs.listStatus(new Path(dir(v)))
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
@@ -1608,56 +1549,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     SnapshotStore.HistoryEntry(commitTimestampRaw(v), files.length.toLong, rows,
       commitBytesRaw(v), op, params, metrics)
   }
-
-  /** The VERSION-LOG CHECKPOINT, served and self-healed: retained
-    * versions ascending with their consolidated stats. Warm path =
-    * ONE `_history.json` read, O(1) file opens regardless of the
-    * version count; entries missing from the checkpoint (crash,
-    * concurrent publisher, external writer, invalidation) rebuild
-    * from the dirs and the checkpoint rewrites. */
-  protected def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
-    val vs = versions()
-    val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
-    val live = ckpt.filter { case (v, _) => vs.contains(v) }
-    val missing = vs.filterNot(live.contains)
-    if (missing.isEmpty) vs.map(v => v -> live(v))
-    else {
-      val merged = live ++ missing.map(v => v -> computeHistoryEntry(v))
-      SnapshotStore.rewriteHistoryCkpt("SnapshotStore", fs, basePath, merged)
-      vs.map(v => v -> merged(v))
-    }
-  }
-
-  /** Incremental checkpoint maintenance — one entry appended per
-    * publish. Best-effort: the checkpoint is derived, so losing this
-    * write (crash, a concurrent publisher's rewrite racing ours)
-    * self-heals on the next read. */
-  private def noteCommit(v: Long, op: String = "unknown",
-      opParams: String = "", statsFrom: Option[Long] = None,
-      metrics: Map[String, Long] = Map.empty): Unit =
-    try {
-      val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
-      // STATS-CARRY commits (renameColumn / widenColumn /
-      // restoreVersion) share the source version's file CONTENT, so
-      // counts/rows reuse its checkpoint entry instead of re-opening
-      // every data file's footer — O(1), not O(N files). Bytes are NOT
-      // carried: on this layout a carry verb may still physically land
-      // files under new basenames (restoreVersion copies the whole
-      // dir), so bytes come from the two-listing basename diff —
-      // rename/widen (same basenames) stay 0, restore reports what it
-      // actually copied, and byte-paced change-feed admission never
-      // treats a large restore commit as free. Falls back to the full
-      // rebuild when the source entry is cold (self-heal covers it
-      // either way).
-      val entry = statsFrom.flatMap(ckpt.get) match {
-        case Some(prev) => prev.copy(commitTs = commitTimestampRaw(v),
-          bytes = commitBytesRaw(v), op = op, opParams = opParams,
-          metrics = metrics)
-        case None => computeHistoryEntry(v)
-      }
-      SnapshotStore.writeHistoryCkpt(fs, basePath, ckpt + (v -> entry))
-    } catch { case scala.util.control.NonFatal(e) =>
-      SnapshotStore.checkpointUpdateFailed("SnapshotStore", basePath, v, e) }
 
   /** Fill defaults recorded in an evolved schema's field metadata,
     * typed for `na.fill`. Applied uniformly at READ time, so a row
@@ -1676,7 +1567,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   /** Read specific data files of a version through its evolved schema
     * (if any) — the shared reader under every pruned-file path, so a
     * zone-map-pruned restore sees the same columns a full read does. */
-  private def readDataFiles(version: Long, files: Seq[String]): DataFrame =
+  protected def readDataFiles(version: Long, files: Seq[String]): DataFrame =
     recomputeDerived(evolvedSchema(version) match {
       case Some(sc) => applyFills(masked(version, files, Some(sc)), sc)
       case None => masked(version, files, None)
@@ -1781,7 +1672,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 4,
       commitTs: Option[Long] = None,
       fill: Map[String, Any] = Map.empty): (Int, Int) = {
-    ensureStoreMeta()
     // one listing serves the base schema's footer pick and the file
     // split below; a missing version falls to Spark's own error
     val srcDir = new Path(dir(fromVersion))
@@ -1822,8 +1712,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     val zm = zoneMap(fromVersion).getOrElse(throw new IllegalStateException(
       s"mergeDelta needs a zone map on version $fromVersion (use writeRangePartitioned)"))
       .materialize()
-    val statsCols = zm.columns.toSeq
-      .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
     val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
     // every key the merge touches: upserted + deleted, deduped; the
     // __del flag (delete wins over a same-key upsert, matching the
@@ -1876,38 +1764,25 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     // publish: spark writes the rewritten files (+_SUCCESS) to tmp
     // (partition-aware arrangement on a partitioned store), untouched
     // bytes copy in beside them, one rename goes live
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
+    val tmp = stage(toVersion)
     // mapped stores land new files under PHYSICAL names (name-uniform
     // with the byte-carried files; a no-op without a mapping)
     val newNames = landFlat(
       arrange(SnapshotStore.toPhysical(rewritten, unionSchema), numNewFiles), tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    untouchedParts.foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-    }
-    carryDvInto(fromVersion, tmp, untouchedParts.map(_.getName).toSet)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    if (evolved) {
-      // the evolved union schema publishes atomically WITH the version
-      // (inside tmp before the rename) — a version dir can never hold
-      // mixed-schema files without the sidecar naming their union
-      Sidecars.writeSchema(fs, tmp, unionSchema)
-    }
+    val untouchedNames = untouchedParts.map(_.getName).toSet
     // incremental zone map: untouched rows carry over with the version
-    // prefix remapped; only the new files are scanned — staged inside
-    // tmp so version + map publish in one rename
-    val carried = zm.filter(!col("file").isin(touched.toSeq: _*))
-      .withColumn("file",
-        regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-    val withNew = zmNewStats(
-        newNames.toSeq.sorted.map(n => new Path(tmp, n).toString), statsCols)
-      .fold(carried)(carried.unionByName(_, allowMissingColumns = true))
-    stageZoneMap(tmp, toVersion, withNew)
-    // Delta's MERGE operationMetrics: matched = touched-file rows
-    // whose key the merge addressed (updated + deleted), split by the
-    // __del flag; inserted = upsert keys minus the updated ones
+    // prefix remapped; only the new files are scanned. The evolved
+    // union schema publishes WITH the version — a version dir can
+    // never hold mixed-schema files without the sidecar naming their
+    // union. Delta's MERGE operationMetrics: matched = touched-file
+    // rows whose key the merge addressed (updated + deleted), split by
+    // the __del flag; inserted = upsert keys minus the updated ones
     // (keys are store-unique)
-    casPublish(tmp, toVersion, "mergeDelta", metrics = Map(
+    publish(toVersion, tmp, Some(newNames), untouchedParts,
+      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, untouchedNames)),
+      dv = carryDv(fromVersion, untouchedNames),
+      schema = Some(unionSchema).filter(_ => evolved), commitTs = commitTs,
+      op = "mergeDelta", metrics = Map(
       "numTargetRowsInserted" -> math.max(0L, nUpserts - (nMatched - nMatchedDel)),
       "numTargetRowsUpdated" -> (nMatched - nMatchedDel),
       "numTargetRowsDeleted" -> nMatchedDel,
@@ -1916,181 +1791,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     (untouchedParts.length, newNames.size)
   }
 
-  /** Schema-evolution DROP COLUMN — the sidecar-narrowing twin of
-    * [[mergeDelta]]'s column ADD: publish `toVersion` whose recorded
-    * `_schema.json` EXCLUDES `cols`, with every data file byte-copied
-    * under the same basename (this layout's carry contract — no
-    * parquet decode/encode). The narrowed sidecar hides the columns at
-    * read time (the evolved-schema reader projects only recorded
-    * fields; stored bytes for the dropped column are simply never
-    * read), while pinned reads of prior versions keep seeing them —
-    * exactly Delta/Iceberg's metadata-only drop. Zone-map rows carry
-    * over with any dropped stats column's min/max removed. The key
-    * column is the store's identity and cannot drop. */
-  def dropColumns(fromVersion: Long, toVersion: Long, cols: Seq[String],
-      commitTs: Option[Long] = None): Unit = {
-    ensureStoreMeta()
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    require(!cols.contains(keyCol),
-      s"dropColumns: '$keyCol' is the store's key column — its identity, not droppable")
-    cols.foreach(requireNoConstraintOn(_, "dropColumns"))
-    cols.filter(c => storedPartitionBy().contains(c)
-        || storedPartitionSpecs().exists(_.source == c)).foreach(c =>
-      throw new UnsupportedOperationException(
-        s"dropColumns '$c': it is a declared partition column (or a transform's " +
-          "source) — the table's physical layout keys on it"))
-    val cur = evolvedSchema(fromVersion)
-      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
-    val missing = cols.filterNot(cur.fieldNames.contains)
-    require(missing.isEmpty, s"dropColumns: not in the schema: ${missing.mkString(", ")}")
-    require(cur.fields.length > cols.size, "dropColumns: cannot drop every column")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      cur.fields.filterNot(f => cols.contains(f.name)))
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-      .foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-      }
-    // every file byte-carries under its basename → the DV carries whole
-    dvFrame(fromVersion).foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(new Path(tmp, "_dv").toString))
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    Sidecars.writeSchema(fs, tmp, newSchema)
-    fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    zoneMap(fromVersion).foreach { zm =>
-      val keep = zm.columns.toSeq.filterNot(c =>
-        cols.exists(dc => c == s"min_$dc" || c == s"max_$dc"))
-      stageZoneMap(tmp, toVersion,
-        zm.select(keep.map(col): _*)
-          .withColumn("file",
-            regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/")))
-    }
-    casPublish(tmp, toVersion, "dropColumns")
-  }
-
-  /** Schema-evolution RENAME COLUMN. Parquet resolves columns BY NAME
-    * (this store writes no field ids), so a rename cannot be
-    * metadata-only — old bytes answer to the old name — and Delta
-    * draws the same line (rename requires column-mapping mode or a
-    * rewrite). The honest translation is a ONE-TIME copy-on-write
-    * rewrite of the tip into `toVersion` under the new name: pinned
-    * history keeps the old name untouched, fills materialize in the
-    * rewrite (so no sidecar is needed after it), and the zone map
-    * rebuilds with any renamed stats column followed. The key column
-    * is recorded store identity (`_store.json`) and cannot rename. */
-  /** METADATA-ONLY TYPE WIDENING — [[ManifestStore.widenColumn]]'s
-    * dir-per-version twin: data files byte-copy under the same
-    * basenames (this layout's carry contract, no parquet decode), the
-    * DV and zone map carry verbatim, and only the `_schema.json`
-    * sidecar re-types `column` to the wider `newType`
-    * ([[SnapshotStore.canWiden]]). Pinned history keeps the narrow
-    * type; key/partition columns refuse; non-widening changes keep
-    * refusing. */
-  def widenColumn(fromVersion: Long, toVersion: Long, column: String,
-      newType: org.apache.spark.sql.types.DataType,
-      commitTs: Option[Long] = None): Unit = {
-    ensureStoreMeta()
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    require(column != keyCol,
-      s"widenColumn: '$keyCol' is the store's key column — its zone-map envelope " +
-        "stats are typed; widening the identity is a store-level migration")
-    require(!storedPartitionBy().contains(column)
-        && !storedPartitionSpecs().exists(_.source == column),
-      s"widenColumn '$column': it is a declared partition column (or a " +
-        "transform's source) — its min==max stats are typed in the zone map")
-    val cur = evolvedSchema(fromVersion)
-      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
-    val f = cur.fields.find(_.name == column).getOrElse(
-      throw new IllegalArgumentException(s"widenColumn: no column '$column'"))
-    require(SnapshotStore.canWiden(f.dataType, newType),
-      s"widenColumn: ${f.dataType.simpleString} -> ${newType.simpleString} is not " +
-        "a supported widening (integral chain, float->double, integral->decimal) " +
-        "— any other type change would corrupt old files' meaning")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      cur.fields.map(x => if (x.name == column) x.copy(dataType = newType) else x))
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-      .foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-      }
-    dvFrame(fromVersion).foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(new Path(tmp, "_dv").toString))
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    Sidecars.writeSchema(fs, tmp, newSchema)
-    fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
-    casPublish(tmp, toVersion, "widenColumn",
-      s"$column -> ${newType.simpleString}", statsFrom = Some(fromVersion))
-  }
-
-  def renameColumn(fromVersion: Long, toVersion: Long, from: String, to: String,
-      numFiles: Int = 4, commitTs: Option[Long] = None): Unit = {
-    ensureStoreMeta()
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    require(from != keyCol,
-      s"renameColumn: '$keyCol' is the store's recorded key column — renaming the " +
-        "identity is a store-level migration, not schema evolution")
-    requireNoConstraintOn(from, "renameColumn")
-    require(!storedPartitionBy().contains(from)
-        && !storedPartitionSpecs().exists(_.source == from),
-      s"renameColumn '$from': it is a declared partition column (or a transform's " +
-        "source) — the table's physical layout keys on it")
-    val cur = evolvedSchema(fromVersion)
-      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
-    require(cur.fieldNames.contains(from), s"renameColumn: no column '$from'")
-    require(!cur.fieldNames.contains(to), s"renameColumn: '$to' already exists")
-    val otherPhys = cur.fields.filterNot(_.name == from)
-      .map(SnapshotStore.physicalName).toSet
-    require(!otherPhys.contains(to),
-      s"renameColumn: '$to' is a stored PHYSICAL column name (a prior rename maps " +
-        "it) — old bytes would answer to two logical columns; compact first to " +
-        "fold the mapping")
-    val newSchema = org.apache.spark.sql.types.StructType(cur.fields.map(f =>
-      if (f.name == from) SnapshotStore.renamedField(f, to) else f))
-    // METADATA-ONLY rename (column mapping): files byte-carry under the
-    // same basename — this layout's carry contract, no parquet decode —
-    // the DV and zone map carry verbatim (their entries describe the
-    // stored, physical columns), and only the `_schema.json` sidecar
-    // changes: the field takes the new LOGICAL name while
-    // `graft.physical` pins the stored one. Folds at the next full
-    // rewrite (compact / plain write), like a DV mask.
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-      .foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-      }
-    dvFrame(fromVersion).foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(new Path(tmp, "_dv").toString))
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    Sidecars.writeSchema(fs, tmp, newSchema)
-    fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
-    casPublish(tmp, toVersion, "renameColumn",
-      s"$from -> $to", statsFrom = Some(fromVersion))
-  }
-
-  /** Row-level change classification between two versions:
-    * `insert` (key only in `to`), `delete` (key only in `from`),
-    * `update` (key in both, content fingerprint differs).
-    * Unchanged rows are not emitted.
-    *
-    * Schema-evolution aware: fingerprints cover the COMMON non-key
-    * columns of the two versions, so adding or dropping a column does
-    * not flag every row as updated (it would, if each side hashed its
-    * own full row). Column-level changes are reported separately by
-    * [[schemaDiff]]. */
   /** Predicate delete (the GDPR erasure primitive): copy-on-write
     * rewrite of `fromVersion` into `toVersion` with every row matching
     * `pred` removed. Only the files that actually CONTAIN a matching
@@ -2119,14 +1819,11 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       mode: String = "auto"): (Int, Int, Long) = {
     require(Set("auto", "cow", "dv")(mode),
       s"deleteWhere mode must be auto|cow|dv, got '$mode'")
-    ensureStoreMeta()
     require(versions().contains(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
-    val unionSchema = evolvedSchema(fromVersion)
-      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
+    val unionSchema = storedSchema(fromVersion)
     val matches = coalesce(pred, lit(false))
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
+    val allParts = dataFiles(fromVersion)
     def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
     val candidates = pruneHint.flatMap { case (c, lo, hi) =>
       prunedFilesBy(fromVersion, c, lo, hi).map { files =>
@@ -2169,30 +1866,22 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     }.sum
     val useDv = deleted > 0 &&
       (mode == "dv" || (mode == "auto" && deleted * 5 <= touchedPhys))
-    val conf = spark.sparkContext.hadoopConfiguration
     if (useDv) {
-      val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-      fs.mkdirs(tmp)
-      allParts.foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-      }
       val merged = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(new Path(tmp, "_dv").toString)
-      fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-      if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
       // no file changed identity: the zone map carries verbatim (its
       // envelopes stay CONSERVATIVE over masked rows — pruning may
       // open a file whose matches are all masked, never skip a live row)
-      stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
-      casPublish(tmp, toVersion, "deleteWhere", SnapshotStore.predSql(pred),
+      publish(toVersion, stage(toVersion), None, allParts,
+        zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion,
+          allParts.map(_.getName).toSet)),
+        dv = Some(merged), schema = evolvedSchema(fromVersion), commitTs = commitTs,
+        op = "deleteWhere", opParams = SnapshotStore.predSql(pred),
         metrics = Map("numDeletedRows" -> deleted,
           "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L,
           "numDeletionVectorsUpdated" -> matchStats.size.toLong))
       return (allParts.length, 0, deleted)
     }
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
+    val tmp = stage(toVersion)
     val rewritten =
       if (touchedParts.isEmpty)
         spark.read.schema(unionSchema).parquet(dir(fromVersion)).limit(0)
@@ -2202,30 +1891,13 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
             .filter(!matches), unionSchema), // fills materialize on rewrite (see mergeDelta)
         numNewFiles)
     val newNames = landFlat(SnapshotStore.toPhysical(rewritten, unionSchema), tmp)
-    untouchedParts.foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-    }
-    carryDvInto(fromVersion, tmp, untouchedParts.map(_.getName).toSet)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
+    val untouchedNames = untouchedParts.map(_.getName).toSet
     // zone map: untouched rows carry with the version remapped, only
-    // the rewritten files rescan (same incremental shape as
-    // mergeDelta) — staged inside tmp
-    zoneMap(fromVersion).foreach { zm =>
-      val statsCols = zm.columns.toSeq
-        .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
-      val touchedNames = touchedParts.map(_.getName).toSet
-      val carried = zm
-        .filter(!regexp_extract(col("file"), "[^/]+$", 0)
-          .isin(touchedNames.toSeq: _*))
-        .withColumn("file",
-          regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-      val withNew = zmNewStats(
-          newNames.toSeq.sorted.map(n => new Path(tmp, n).toString), statsCols)
-        .fold(carried)(carried.unionByName(_, allowMissingColumns = true))
-      stageZoneMap(tmp, toVersion, withNew)
-    }
-    casPublish(tmp, toVersion, "deleteWhere", SnapshotStore.predSql(pred),
+    // the rewritten files rescan (same incremental shape as mergeDelta)
+    publish(toVersion, tmp, Some(newNames), untouchedParts,
+      zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion, untouchedNames)),
+      dv = carryDv(fromVersion, untouchedNames), schema = evolvedSchema(fromVersion),
+      commitTs = commitTs, op = "deleteWhere", opParams = SnapshotStore.predSql(pred),
       metrics = Map("numDeletedRows" -> deleted,
         "numAddedFiles" -> newNames.size.toLong,
         "numRemovedFiles" -> touchedParts.length.toLong))
@@ -2244,19 +1916,16 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   def mergeDeltaMor(fromVersion: Long, toVersion: Long, delta: DataFrame,
       deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 2,
       commitTs: Option[Long] = None): (Int, Long) = {
-    ensureStoreMeta()
     require(versions().contains(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
-    val unionSchema = evolvedSchema(fromVersion)
-      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
+    val unionSchema = storedSchema(fromVersion)
     require(delta.schema.fieldNames.sorted.sameElements(unionSchema.fieldNames.sorted),
       s"mergeDeltaMor is same-schema only — an evolving merge takes mergeDelta's " +
         "copy-on-write path")
     val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
     val touchKeys = delK.foldLeft(delta.select(keyCol))(_ unionByName _)
       .distinct().materialize()
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
+    val allParts = dataFiles(fromVersion)
     val matchRows = maskedScanWithPos(fromVersion, allParts.map(_.toString),
         Some(unionSchema))
       .join(touchKeys, Seq(keyCol), "left_semi")
@@ -2264,33 +1933,17 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     val upserts = delK.foldLeft(delta)((d, del) =>
       d.join(del, Seq(keyCol), "left_anti"))
     enforceConstraints(upserts, "mergeDeltaMor")
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
+    val tmp = stage(toVersion)
     val newNames = landFlat(
       arrange(SnapshotStore.toPhysical(upserts, unionSchema), numNewFiles), tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    allParts.foreach { p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-    }
     val nMasked = matchRows.count()
     val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
       .materialize()
-    if (mask.limit(1).count() > 0)
-      mask.select("file", "pos").coalesce(1).write.mode("overwrite")
-        .parquet(new Path(tmp, "_dv").toString)
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    evolvedSchema(fromVersion).foreach(Sidecars.writeSchema(fs, tmp, _))
-    fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    zoneMap(fromVersion).foreach { zm =>
-      val zmStatsCols = zm.columns.toSeq
-        .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
-      val carried = zm.withColumn("file",
-        regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-      val withNew = zmNewStats(
-          newNames.toSeq.sorted.map(n => new Path(tmp, n).toString), zmStatsCols)
-        .fold(carried)(carried.unionByName(_, allowMissingColumns = true))
-      stageZoneMap(tmp, toVersion, withNew)
-    }
-    casPublish(tmp, toVersion, "mergeDeltaMor", metrics = Map(
+    publish(toVersion, tmp, Some(newNames), allParts,
+      zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion,
+        allParts.map(_.getName).toSet)),
+      dv = Some(mask).filter(_.limit(1).count() > 0), schema = evolvedSchema(fromVersion),
+      commitTs = commitTs, op = "mergeDeltaMor", metrics = Map(
       "numTargetRowsMasked" -> nMasked,
       "numTargetFilesAdded" -> newNames.size.toLong,
       "numTargetFilesRemoved" -> 0L))
@@ -2314,46 +1967,35 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     require(!set.contains(keyCol),
       s"updateWhere: SET may not touch the key column '$keyCol' — a key change " +
         "is a delete+insert, route it through mergeDelta")
-    ensureStoreMeta()
     require(versions().contains(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
-    val unionSchema = evolvedSchema(fromVersion)
-      .getOrElse(ParquetSchemas.schema(spark, dir(fromVersion)))
+    val unionSchema = storedSchema(fromVersion)
     val missing = set.keys.filterNot(unionSchema.fieldNames.contains)
     require(missing.isEmpty, s"updateWhere: not in the schema: ${missing.mkString(", ")}")
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
+    val allParts = dataFiles(fromVersion)
     val matched = maskedScanWithPos(fromVersion, allParts.map(_.toString),
         Some(unionSchema))
       .filter(coalesce(pred, lit(false))).materialize()
     val matchRows = matched.select(col("__f").as("file"), col("__p").as("pos"))
     val matching = matchRows.groupBy("file").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sidecars(tmp: Path, dv: Option[DataFrame]): Unit = {
-      dv.foreach(_.coalesce(1).write.mode("overwrite")
-        .parquet(new Path(tmp, "_dv").toString))
-      writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-      if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
-      fs.create(new Path(tmp, "_SUCCESS"), true).close()
-    }
+    val opParams =
+      s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}"
+    val sc = evolvedSchema(fromVersion)
+    val zm = zoneMap(fromVersion)
     def applySet(df: DataFrame): DataFrame =
       set.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
     if (matching.isEmpty) {
-      val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-      fs.mkdirs(tmp)
-      allParts.foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-      }
-      sidecars(tmp, dvFrame(fromVersion))
-      stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
-      casPublish(tmp, toVersion, "updateWhere",
-        s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}",
+      publish(toVersion, stage(toVersion), None, allParts,
+        zm = zm.map(carriedZoneMap(_, fromVersion, toVersion, allParts.map(_.getName).toSet)),
+        dv = dvFrame(fromVersion), schema = sc, commitTs = commitTs,
+        op = "updateWhere", opParams = opParams,
         metrics = Map("numUpdatedRows" -> 0L,
           "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L))
       return (allParts.length, 0, 0L)
     }
     val nMatched = matching.values.sum
+    val conf = spark.sparkContext.hadoopConfiguration
     val touchedPhys = allParts.filter(p => matching.contains(p.getName)).map { p =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
@@ -2361,70 +2003,34 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     }.sum
     val useMor = mode == "mor" ||
       (mode == "auto" && nMatched * 5 <= touchedPhys)
-    val zm = zoneMap(fromVersion)
-    val zmStatsCols = zm.map(_.columns.toSeq
-      .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4)))
-      .getOrElse(Nil)
-    def statsOf(newFiles: Seq[String]): Option[DataFrame] =
-      zmNewStats(newFiles, zmStatsCols) // spec-evolution-aware stats
-    if (useMor) {
-      val updated = applySet(matched).drop("__f", "__p")
-      enforceConstraints(updated, "updateWhere")
-      val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-      val newNames = landFlat(
-        arrange(SnapshotStore.toPhysical(updated, unionSchema), numNewFiles), tmp)
-      allParts.foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
+    // mor lands only the updated copies and masks their old positions;
+    // cow rewrites the touched files whole
+    val (carried, rewritten, dv) =
+      if (useMor)
+        (allParts, applySet(matched).drop("__f", "__p"),
+          Some(dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
+            .select("file", "pos").materialize()))
+      else {
+        val (touchedParts, untouchedParts) =
+          allParts.partition(p => matching.contains(p.getName))
+        val touched = maskedScanWithPos(fromVersion,
+          touchedParts.map(_.toString), Some(unionSchema)).drop("__f", "__p")
+        (untouchedParts, applySet(touched.filter(coalesce(pred, lit(false))))
+          .unionByName(touched.filter(!coalesce(pred, lit(false)))),
+          carryDv(fromVersion, untouchedParts.map(_.getName).toSet))
       }
-      val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-        .select("file", "pos").materialize()
-      sidecars(tmp, Some(mask))
-      zm.foreach { z =>
-        val carried = z.withColumn("file",
-          regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-        val withNew = statsOf(newNames.toSeq.sorted.map(n => new Path(tmp, n).toString))
-          .fold(carried)(carried.unionByName(_, allowMissingColumns = true))
-        stageZoneMap(tmp, toVersion, withNew)
-      }
-      casPublish(tmp, toVersion, "updateWhere",
-        s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}",
-        metrics = Map("numUpdatedRows" -> nMatched,
-          "numAddedFiles" -> newNames.size.toLong, "numRemovedFiles" -> 0L))
-      (allParts.length, newNames.size, nMatched)
-    } else {
-      val (touchedParts, untouchedParts) =
-        allParts.partition(p => matching.contains(p.getName))
-      val touched = maskedScanWithPos(fromVersion,
-        touchedParts.map(_.toString), Some(unionSchema)).drop("__f", "__p")
-      val rewritten = applySet(touched.filter(coalesce(pred, lit(false))))
-        .unionByName(touched.filter(!coalesce(pred, lit(false))))
-      enforceConstraints(rewritten, "updateWhere")
-      val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-      val newNames = landFlat(
-        arrange(SnapshotStore.toPhysical(rewritten, unionSchema), numNewFiles), tmp)
-      untouchedParts.foreach { p =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-      }
-      carryDvInto(fromVersion, tmp, untouchedParts.map(_.getName).toSet)
-      writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-      if (evolvedSchema(fromVersion).isDefined) Sidecars.writeSchema(fs, tmp, unionSchema)
-      zm.foreach { z =>
-        val touchedNames = touchedParts.map(_.getName).toSet
-        val carried = z.filter(!regexp_extract(col("file"), "[^/]+$", 0)
-            .isin(touchedNames.toSeq: _*))
-          .withColumn("file",
-            regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-        val withNew = statsOf(newNames.toSeq.sorted.map(n => new Path(tmp, n).toString))
-          .fold(carried)(carried.unionByName(_, allowMissingColumns = true))
-        stageZoneMap(tmp, toVersion, withNew)
-      }
-      casPublish(tmp, toVersion, "updateWhere",
-        s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}",
-        metrics = Map("numUpdatedRows" -> nMatched,
-          "numAddedFiles" -> newNames.size.toLong,
-          "numRemovedFiles" -> touchedParts.length.toLong))
-      (untouchedParts.length, newNames.size, nMatched)
-    }
+    enforceConstraints(rewritten, "updateWhere")
+    val tmp = stage(toVersion)
+    val newNames = landFlat(
+      arrange(SnapshotStore.toPhysical(rewritten, unionSchema), numNewFiles), tmp)
+    val carriedNames = carried.map(_.getName).toSet
+    publish(toVersion, tmp, Some(newNames), carried,
+      zm = zm.map(carriedZoneMap(_, fromVersion, toVersion, carriedNames)),
+      dv = dv, schema = sc, commitTs = commitTs, op = "updateWhere", opParams = opParams,
+      metrics = Map("numUpdatedRows" -> nMatched,
+        "numAddedFiles" -> newNames.size.toLong,
+        "numRemovedFiles" -> (allParts.length - carried.length).toLong))
+    (carried.length, newNames.size, nMatched)
   }
 
   /** FOLD the deletion vector ([[ManifestStore.foldDv]]'s twin):
@@ -2433,57 +2039,33 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   def foldDv(fromVersion: Long, toVersion: Long, numNewFiles: Int = 2,
       commitTs: Option[Long] = None): (Int, Int, Long) = {
     requireFreeVersion(toVersion)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val allParts = fs.listStatus(new Path(dir(fromVersion))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
     dvFrame(fromVersion) match {
       case None =>
-        val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-        fs.mkdirs(tmp)
-        allParts.foreach { p =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-        }
-        fs.create(new Path(tmp, "_SUCCESS"), true).close()
-        writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-        evolvedSchema(fromVersion).foreach(Sidecars.writeSchema(fs, tmp, _))
-        stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
-        casPublish(tmp, toVersion, "foldDv")
-        (allParts.length, 0, 0L)
+        publishCarry(fromVersion, toVersion, None, Nil, commitTs, "foldDv", "")
+        (dataFiles(fromVersion).length, 0, 0L)
       case Some(dv) =>
         val masked = dv.select("file").distinct().collect().map(_.getString(0)).toSet
         val nDropped = dv.count()
-        val (touched, untouched) = allParts.partition(p => masked(p.getName))
+        val (touched, untouched) = dataFiles(fromVersion).partition(p => masked(p.getName))
         val sc = evolvedSchema(fromVersion)
-        val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-        val folded0 = maskedScanWithPos(fromVersion, touched.map(_.toString),
-            sc.orElse(None)).drop("__f", "__p")
+        val tmp = stage(toVersion)
+        val folded0 = maskedScanWithPos(fromVersion, touched.map(_.toString), sc)
+          .drop("__f", "__p")
         sc.map(SnapshotStore.toPhysical(folded0, _)).getOrElse(folded0)
           .repartitionByRange(numNewFiles, col(keyCol)).sortWithinPartitions(keyCol)
           .write.mode("overwrite").parquet(tmp.toString)
-        val newN = fs.listStatus(tmp).count(_.getPath.getName.startsWith("part-"))
-        untouched.foreach { p =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf)
-        }
-        writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-        sc.foreach(Sidecars.writeSchema(fs, tmp, _))
-        // zone map rebuilds with one narrow stats scan over the staged
-        // files (file names changed for the rewritten minority; a
-        // carry+rescan hybrid buys little at fold cadence); the fold
-        // leaves no DV, so the raw scan equals the semantic read
-        zoneMap(fromVersion).foreach { zm =>
-          val statsCols = zm.columns.toSeq
-            .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
-          val staged = fs.listStatus(tmp).map(_.getPath)
-            .filter(_.getName.startsWith("part-")).map(_.toString)
-            .sorted.toIndexedSeq
-          zmNewStats(staged, statsCols).foreach(stageZoneMap(tmp, toVersion, _))
-        }
-        casPublish(tmp, toVersion, "foldDv")
-        (untouched.length, newN, nDropped)
+        val newNames = partNames(tmp)
+        // the fold leaves no DV: the untouched files' zone-map rows
+        // carry, the rewritten minority's new files scan
+        publish(toVersion, tmp, Some(newNames), untouched,
+          zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion,
+            untouched.map(_.getName).toSet)),
+          schema = sc, commitTs = commitTs, op = "foldDv")
+        (untouched.length, newNames.size, nDropped)
     }
   }
 
-  /** Stage `rows` as `tmp/_zonemap` BEFORE [[casPublish]], re-homing
+  /** Stage `rows` as `tmp/_zonemap` before [[publish]]'s rename, re-homing
     * any file path recorded under the tmp dir name to the final `v=N`
     * dir: the version and its zone map then go live in ONE rename, so
     * a crash between publish and map-write can no longer leave a live
@@ -2522,25 +2104,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       Some(if (hist.size <= 1) df else df.withColumn("spec_id", lit(cur)))
     }
 
-  /** EVOLVE this store's partition spec (metadata-only —
-    * [[SnapshotStore.evolvePartitionSpec]]); returns the new current
-    * spec id. */
-  def evolvePartitionSpec(cols: Seq[String]): Int = {
-    val priorDerived = specHistory._1.flatten
-      .map(SnapshotStore.parsePartitionSpec)
-      .filter(_.transform.isDefined).map(_.name).toSet
-    cols.map(SnapshotStore.parsePartitionSpec).filter(_.transform.isDefined)
-      .foreach { sp =>
-        latestVersion().foreach { v =>
-          require(priorDerived(sp.name) ||
-              !ParquetSchemas.schema(spark, dir(v)).fieldNames.contains(sp.name),
-            s"evolvePartitionSpec: derived column name '${sp.name}' collides " +
-              "with a data column")
-        }
-      }
-    SnapshotStore.evolvePartitionSpec(fs, basePath, cols)
-  }
-
   /** SOURCE-column time-range read over an EVOLVED partition spec —
     * [[ManifestStore.readSourceRange]]'s zone-map twin: every file
     * prunes through the spec IT was written under, by translating its
@@ -2569,59 +2132,16 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       col(source).cast("timestamp") <= lit(hi).cast("timestamp"))
   }
 
-  /** Refuse a whole-partition verb on a version holding files written
-    * under an earlier spec — [[ManifestStore.requireUniformSpec]]'s
-    * twin (a month predicate does not select exact day files). */
-  private def requireUniformSpec(zm: DataFrame, op: String): Unit = {
-    val (hist, cur) = specHistory
-    if (hist.size <= 1) return
-    val foreign = zm.filter(specIdCol(zm) =!= cur).limit(1).count()
-    require(foreign == 0L,
-      s"$op: this version still holds files written under an earlier partition " +
-        s"spec (current spec id $cur) — a predicate over the current spec cannot " +
-        "select them whole-file-exactly; compact/rewrite them first, or read " +
-        "through readSourceRange")
-  }
-
-  /** Carry-only staging: the from-version's map rows (re-homed,
-    * optionally pruned) land inside tmp pre-publish. */
-  private def stageCarriedZoneMap(tmp: Path, fromVersion: Long, toVersion: Long,
-      dropped: Set[String], extra: Option[DataFrame] = None): Unit =
-    zoneMap(fromVersion).foreach { zm =>
-      val carried = zm
-        .filter(!regexp_extract(col("file"), "[^/]+$", 0).isin(dropped.toSeq: _*))
-        .withColumn("file",
-          regexp_replace(col("file"), s"/v=$fromVersion/", s"/v=$toVersion/"))
-      stageZoneMap(tmp, toVersion, extra.fold(carried)(carried.unionByName(_, allowMissingColumns = true)))
-    }
-
-  /** RESTORE — Delta's `RESTORE TABLE t TO VERSION AS OF v` on this
-    * layout: byte-copy `fromVersion`'s dir (data + `_dv` + schema
-    * sidecar) as a NEW version with a fresh commit timestamp; the zone
-    * map carries with its version prefix remapped. History intact —
-    * a restore is a commit, not a rewrite of the past. */
-  def restoreVersion(fromVersion: Long, toVersion: Long,
-      commitTs: Option[Long] = None, op: String = "restoreVersion",
-      opParams: String = ""): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new Path(s"$basePath/.tmp-v=$toVersion-${java.util.UUID.randomUUID()}")
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(dir(fromVersion)), fs, tmp,
-      false, conf)
-    // the copy carried the SOURCE's commit ts and zone map: re-stamp
-    // the restore's own commit time; re-home the zone map below
-    fs.delete(new Path(tmp, "_zonemap"), true): Unit
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
-    stageCarriedZoneMap(tmp, fromVersion, toVersion, Set.empty)
-    casPublish(tmp, toVersion, op,
-      if (opParams.isEmpty) s"of v$fromVersion" else opParams,
-      statsFrom = Some(fromVersion))
-  }
-
-  def restoreVersion(fromVersion: Long, toVersion: Long, commitTs: Option[Long]): Unit =
-    restoreVersion(fromVersion, toVersion, commitTs, op = "restoreVersion")
-
+  /** Row-level change classification between two versions:
+    * `insert` (key only in `to`), `delete` (key only in `from`),
+    * `update` (key in both, content fingerprint differs).
+    * Unchanged rows are not emitted.
+    *
+    * Schema-evolution aware: fingerprints cover the COMMON non-key
+    * columns of the two versions, so adding or dropping a column does
+    * not flag every row as updated (it would, if each side hashed its
+    * own full row). Column-level changes are reported separately by
+    * [[schemaDiff]]. */
   def diff(fromVersion: Long, toVersion: Long): DataFrame =
     diffFrames(read(fromVersion), read(toVersion))
 
@@ -2744,31 +2264,15 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
       .map(p => preSc.flatMap(_.fields.find(f =>
         SnapshotStore.physicalName(f) == p)).map(_.name).getOrElse(p)))
-    val tmp = new Path(s"$basePath/.tmp-compact-v=$version-${java.util.UUID.randomUUID()}")
+    val tmp = stage(version)
     read(version).coalesce(nOut).write.parquet(tmp.toString)
     // compaction rewrites the layout, not the version's identity: the
-    // original commit time carries over so readAsOf keeps resolving it
-    writeCommitTs(tmp, commitTimestamp(version))
-    // the rebuilt zone map stages with the rewritten files (the
+    // original commit time carries over so readAsOf keeps resolving
+    // it, and the rebuilt zone map scans the rewritten files (the
     // compacted layout folds any DV, so the raw scan is the semantic
-    // read) — the swap below then publishes data + map together
-    zmapStatsCols.foreach { cols =>
-      val staged = fs.listStatus(tmp).map(_.getPath)
-        .filter(_.getName.startsWith("part-")).map(_.toString)
-        .sorted.toIndexedSeq
-      zmNewStats(staged, cols).foreach(stageZoneMap(tmp, version, _))
-    }
-    val old = new Path(s"$basePath/.old-v=$version-${java.util.UUID.randomUUID()}")
-    if (!fs.rename(dest, old))
-      throw new java.io.IOException(s"compact: move-aside failed: $dest -> $old")
-    if (!fs.rename(tmp, dest)) {
-      fs.rename(old, dest) // roll back to the original version
-      throw new java.io.IOException(s"compact: publish failed: $tmp -> $dest")
-    }
-    fs.delete(old, true)
-    // compact swapped this version's files in place: its checkpoint
-    // row (and the successor's bytes-added diff) are stale
-    invalidateHistoryCkpt()
+    // read)
+    publish(version, tmp, Some(partNames(tmp)), zmCols = zmapStatsCols,
+      commitTs = Some(commitTimestamp(version)), op = "compact", inPlace = true)
     val after = fs.listStatus(dest).count(_.getPath.getName.startsWith("part-"))
     (dataFiles.length, after)
   }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetSchemas
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The one interface over both version layouts: [[SnapshotStore]]
   * (one self-contained directory per version) and [[ManifestStore]]
@@ -16,9 +16,15 @@ import org.apache.spark.sql.types.StructType
   * callers match on the store's type.
   *
   * The members declared here without a body are the verbs each layout
-  * implements its own way; the bodies here (constraints, holds,
-  * column statistics, the history checkpoint, the optimistic-
-  * concurrency merge, partition-spec helpers) are layout-free. */
+  * implements its own way, plus five layout primitives: where a
+  * version's sidecars live ([[versionDir]]), its stored schema
+  * ([[storedSchema]]), a masked read of a file subset
+  * ([[readDataFiles]]), a carry publish ([[publishCarry]]) and a
+  * history entry rebuilt from the files ([[computeHistoryEntry]]).
+  * Every body here (time travel, the deletion-vector and Bloom
+  * sidecars, the schema verbs, restore, constraints, holds, column
+  * statistics, the history checkpoint, the optimistic-concurrency
+  * merge, partition-spec helpers) is written once over those. */
 trait VersionedStore {
   val basePath: String
   val keyCol: String
@@ -35,22 +41,40 @@ trait VersionedStore {
   /** The same store opened with `key` as its key column. */
   def withKeyCol(key: String): VersionedStore
 
+  // ---- LAYOUT PRIMITIVES ----
+
   /** The directory holding `version`'s sidecars: the version directory
     * or the manifest directory. */
   protected def versionDir(version: Long): Path
 
-  /** Retained versions ascending with their checkpointed statistics. */
-  protected def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)]
+  /** `version`'s stored read schema: its `_schema.json` sidecar when a
+    * schema verb recorded one, else one data file's footer. */
+  protected def storedSchema(version: Long): StructType
+
+  /** `files` (a subset of `version`'s data files) read the way a full
+    * read of the version reads them: deletion vector applied, evolved
+    * schema, fills and column mapping supplied. */
+  protected def readDataFiles(version: Long, files: Seq[String]): DataFrame
+
+  /** Publish `toVersion` holding exactly `fromVersion`'s files and
+    * deletion vector under `schema` (None: `fromVersion`'s own), minus
+    * the file statistics of the `dropStats` columns: a branch on the
+    * linked layout, a byte-carry on the snapshot layout. The history
+    * entry reuses `fromVersion`'s statistics. */
+  protected def publishCarry(fromVersion: Long, toVersion: Long,
+      schema: Option[StructType], dropStats: Seq[String], commitTs: Option[Long],
+      op: String, opParams: String): Unit
+
+  /** One version's history entry rebuilt from its files and sidecars:
+    * the unit the checkpoint self-heals with. */
+  protected def computeHistoryEntry(version: Long): SnapshotStore.HistoryEntry
 
   def versions(): Seq[Long]
   def read(version: Long): DataFrame
   def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame
   def readSourceRange(version: Long, source: String, lo: Any, hi: Any): DataFrame
   def readWhereAll(version: Long, preds: Seq[(String, Any, Any)]): DataFrame
-  def versionAsOf(ts: Long): Option[Long]
   def commitBytes(version: Long): Long
-  def dvFrame(version: Long): Option[DataFrame]
-  def dvRowCount(version: Long): Long
   def partitions(version: Long): DataFrame
 
   def diff(fromVersion: Long, toVersion: Long): DataFrame
@@ -68,19 +92,11 @@ trait VersionedStore {
       filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int)
   def dropPartitions(fromVersion: Long, toVersion: Long, pred: Column,
       commitTs: Option[Long] = None): (Int, Int, Long)
-  def dropColumns(fromVersion: Long, toVersion: Long, cols: Seq[String],
-      commitTs: Option[Long] = None): Unit
-  def widenColumn(fromVersion: Long, toVersion: Long, column: String,
-      newType: org.apache.spark.sql.types.DataType, commitTs: Option[Long] = None): Unit
-  def renameColumn(fromVersion: Long, toVersion: Long, from: String, to: String,
-      numFiles: Int = 4, commitTs: Option[Long] = None): Unit
-  def restoreVersion(fromVersion: Long, toVersion: Long, commitTs: Option[Long]): Unit
   def foldDv(fromVersion: Long, toVersion: Long, numNewFiles: Int = 2,
       commitTs: Option[Long] = None): (Int, Int, Long)
   def zorderWhere(fromVersion: Long, toVersion: Long, pred: Column,
       zCols: Seq[String], numFiles: Int = 4,
       commitTs: Option[Long] = None): (Int, Int)
-  def evolvePartitionSpec(cols: Seq[String]): Int
   /** `maybeCompact` with the layout's default sizing. */
   def maybeCompact(maxFiles: Int): Option[Long]
   def maybeRetain(maxVersions: Int): Int
@@ -104,6 +120,169 @@ trait VersionedStore {
     if (versions().contains(v))
       throw new VersionConflictException(
         s"$basePath: version $v already exists")
+
+  // ---- TIME TRAVEL ----
+
+  /** The newest version committed at or before `ts`, if any. Resolves
+    * by commit timestamp, not version id order, so out-of-order
+    * backfills still answer "what was live at ts" correctly; served
+    * from the version-log checkpoint (one sidecar read warm, not
+    * O(versions) per-version opens). */
+  def versionAsOf(ts: Long): Option[Long] = {
+    val committed = historyEntries().filter(_._2.commitTs <= ts)
+    if (committed.isEmpty) None
+    else Some(committed.maxBy { case (v, e) => (e.commitTs, v) }._1)
+  }
+
+  /** Time-travel read — the "restore yesterday 14:00" UX every backup
+    * tool exposes: read the newest version committed at or before
+    * `ts`. Metadata-only resolution, then a plain single-version read. */
+  def readAsOf(ts: Long): DataFrame = readAsOfResolved(ts)._2
+
+  /** [[readAsOf]] returning the resolved version id alongside. */
+  def readAsOfResolved(ts: Long): (Long, DataFrame) = versionAsOf(ts) match {
+    case Some(v) => (v, read(v))
+    case None => throw new IllegalArgumentException(
+      s"no version committed at or before $ts" + historyEntries().headOption.map {
+        case (v, e) => s" (earliest is v=$v at ${e.commitTs})" }.getOrElse(" (store is empty)"))
+  }
+
+  /** A zero-row frame in `version`'s logical read schema without
+    * standing up a scan over its files — the prune-to-nothing result.
+    * One data file's footer opens only when no schema sidecar exists. */
+  protected def emptyRead(version: Long): DataFrame =
+    evolvedSchema(version) match {
+      case Some(sc) => spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
+      case None =>
+        val paths = dataPaths(version)
+        if (paths.isEmpty) read(version).limit(0)
+        else ParquetSchemas.readFiles(spark, paths.take(1)).limit(0)
+    }
+
+  // ---- SCHEMA VERBS AND RESTORE ----
+  // Metadata-only on both layouts: the new version carries the old
+  // one's files (by reference or by byte-copy) under a new recorded
+  // schema, so pinned history keeps the old shape.
+
+  /** Schema-evolution DROP COLUMN: publish `toVersion` whose recorded
+    * schema EXCLUDES `cols`, every file carried and any dropped stats
+    * column's min/max removed from the file metadata. The evolved-schema
+    * reader projects only recorded fields, so stored bytes for the
+    * dropped column are never read while pinned history keeps them.
+    * The key column is the store's identity and cannot drop. */
+  def dropColumns(fromVersion: Long, toVersion: Long, cols: Seq[String],
+      commitTs: Option[Long] = None): Unit = {
+    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    requireFreeVersion(toVersion)
+    require(!cols.contains(keyCol),
+      s"dropColumns: '$keyCol' is the store's key column — its identity, not droppable")
+    cols.foreach(requireNoConstraintOn(_, "dropColumns"))
+    cols.filter(isPartitionSource).foreach(c =>
+      throw new UnsupportedOperationException(
+        s"dropColumns '$c': it is a declared partition column (or a transform's " +
+          "source) — the table's physical layout keys on it"))
+    // the sidecar verbatim when present, so surviving columns keep
+    // their recorded fill metadata through the narrowing
+    val cur = storedSchema(fromVersion)
+    val missing = cols.filterNot(cur.fieldNames.contains)
+    require(missing.isEmpty, s"dropColumns: not in the schema: ${missing.mkString(", ")}")
+    require(cur.fields.length > cols.size, "dropColumns: cannot drop every column")
+    publishCarry(fromVersion, toVersion,
+      Some(StructType(cur.fields.filterNot(f => cols.contains(f.name)))), cols, commitTs,
+      "dropColumns", cols.mkString(","))
+  }
+
+  /** METADATA-ONLY TYPE WIDENING — Delta's type-widening feature:
+    * publish `toVersion` whose recorded schema re-types `column` to
+    * the WIDER `newType` ([[SnapshotStore.canWiden]] — integral chain,
+    * float→double, integral→decimal), every file carried; reads decode
+    * the stored narrow values into the wider type (parquet's
+    * vectorized-reader promotion). Pinned history keeps the narrow
+    * type. The key column and partition columns refuse (their file
+    * statistics are typed); a non-widening change keeps refusing. */
+  def widenColumn(fromVersion: Long, toVersion: Long, column: String,
+      newType: DataType, commitTs: Option[Long] = None): Unit = {
+    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    requireFreeVersion(toVersion)
+    require(column != keyCol,
+      s"widenColumn: '$keyCol' is the store's key column — its key-envelope " +
+        "stats are typed; widening the identity is a store-level migration")
+    require(!isPartitionSource(column),
+      s"widenColumn '$column': it is a declared partition column (or a " +
+        "transform's source) — its min==max file stats are typed")
+    val cur = storedSchema(fromVersion)
+    val f = cur.fields.find(_.name == column).getOrElse(
+      throw new IllegalArgumentException(s"widenColumn: no column '$column'"))
+    require(SnapshotStore.canWiden(f.dataType, newType),
+      s"widenColumn: ${f.dataType.simpleString} -> ${newType.simpleString} is not " +
+        "a supported widening (integral chain, float->double, integral->decimal) " +
+        "— any other type change would corrupt old files' meaning")
+    publishCarry(fromVersion, toVersion,
+      Some(StructType(cur.fields.map(x => if (x.name == column) x.copy(dataType = newType) else x))),
+      Nil, commitTs, "widenColumn", s"$column -> ${newType.simpleString}")
+  }
+
+  /** METADATA-ONLY RENAME COLUMN — Delta's column-mapping mode on the
+    * `_schema.json` sidecar: the published schema renames the field
+    * while `graft.physical` metadata pins the name the stored bytes
+    * answer to; every read resolves physical → logical with a
+    * zero-cost alias projection, later landings write new files under
+    * the physical name (one name-uniform file set), and a full rewrite
+    * (compact / plain write) folds the mapping away, as a DV mask
+    * folds. Every file carries and its statistics keep describing the
+    * stored, physical columns. Pinned history keeps the old name. The
+    * key column is recorded store identity and cannot rename;
+    * constrained and partition columns refuse; the new name must not
+    * shadow a stored physical name (old bytes would answer to two
+    * logical columns). `numFiles` is unused: nothing is rewritten. */
+  def renameColumn(fromVersion: Long, toVersion: Long, from: String, to: String,
+      numFiles: Int = 4, commitTs: Option[Long] = None): Unit = {
+    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    requireFreeVersion(toVersion)
+    require(from != keyCol,
+      s"renameColumn: '$keyCol' is the store's recorded key column — renaming the " +
+        "identity is a store-level migration, not schema evolution")
+    requireNoConstraintOn(from, "renameColumn")
+    require(!isPartitionSource(from),
+      s"renameColumn '$from': it is a declared partition column (or a transform's " +
+        "source) — the table's physical layout keys on it")
+    val cur = storedSchema(fromVersion)
+    require(cur.fieldNames.contains(from), s"renameColumn: no column '$from'")
+    require(!cur.fieldNames.contains(to), s"renameColumn: '$to' already exists")
+    val otherPhys = cur.fields.filterNot(_.name == from)
+      .map(SnapshotStore.physicalName).toSet
+    require(!otherPhys.contains(to),
+      s"renameColumn: '$to' is a stored PHYSICAL column name (a prior rename maps " +
+        "it) — old bytes would answer to two logical columns; compact first to " +
+        "fold the mapping")
+    publishCarry(fromVersion, toVersion,
+      Some(StructType(cur.fields.map(f =>
+        if (f.name == from) SnapshotStore.renamedField(f, to) else f))),
+      Nil, commitTs, "renameColumn", s"$from -> $to")
+  }
+
+  /** RESTORE — Delta's `RESTORE TABLE t TO VERSION AS OF v`: publish a
+    * NEW version whose content equals `fromVersion`, with a fresh
+    * commit timestamp. History intact: a restore is a commit, not a
+    * rewrite of the past. */
+  def restoreVersion(fromVersion: Long, toVersion: Long, commitTs: Option[Long]): Unit =
+    restoreVersion(fromVersion, toVersion, commitTs, op = "restoreVersion")
+
+  /** [[restoreVersion]] stamped as `op` with `opParams` (default: the
+    * source version) — also the scoped maintenance verbs' no-op
+    * publish. */
+  def restoreVersion(fromVersion: Long, toVersion: Long,
+      commitTs: Option[Long] = None, op: String = "restoreVersion",
+      opParams: String = ""): Unit = {
+    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    requireFreeVersion(toVersion)
+    publishCarry(fromVersion, toVersion, None, Nil, commitTs, op,
+      if (opParams.isEmpty) s"of v$fromVersion" else opParams)
+  }
+
+  private def isPartitionSource(c: String): Boolean =
+    storedPartitionBy().contains(c) || storedPartitionSpecs().exists(_.source == c)
 
   /** OPTIMISTIC-CONCURRENCY merge — the multi-writer front door over
     * [[mergeDelta]] (Delta/Iceberg's commit-retry contract):
@@ -215,6 +394,43 @@ trait VersionedStore {
     else hist.flatten.distinct.map(SnapshotStore.parsePartitionSpec)
       .filter(sp => sp.transform.isDefined && df.columns.contains(sp.source))
       .foldLeft(df)((d, sp) => d.withColumn(sp.name, SnapshotStore.deriveColumn(sp)))
+  }
+
+  /** EVOLVE this store's partition spec (metadata-only —
+    * [[SnapshotStore.evolvePartitionSpec]]); returns the new current
+    * spec id. A new transform's derived column may not collide with a
+    * data column of the tip. */
+  def evolvePartitionSpec(cols: Seq[String]): Int = {
+    val priorDerived = specHistory._1.flatten
+      .map(SnapshotStore.parsePartitionSpec)
+      .filter(_.transform.isDefined).map(_.name).toSet
+    cols.map(SnapshotStore.parsePartitionSpec).filter(_.transform.isDefined)
+      .foreach { sp =>
+        latestVersion().foreach { v =>
+          require(priorDerived(sp.name) || !storedSchema(v).fieldNames.contains(sp.name),
+            s"evolvePartitionSpec: derived column name '${sp.name}' collides " +
+              "with a data column")
+        }
+      }
+    SnapshotStore.evolvePartitionSpec(fs, basePath, cols)
+  }
+
+  /** Refuse a whole-partition verb on a version holding files written
+    * under an EARLIER spec (`entries`: the version's manifest or zone
+    * map): a predicate over the current spec's columns cannot
+    * guarantee whole-file alignment for them (a month predicate does
+    * not select exact day files), and silently skipping them would
+    * turn "drop everything before March" into a partial drop. */
+  protected def requireUniformSpec(entries: DataFrame, op: String): Unit = {
+    val (hist, cur) = specHistory
+    if (hist.size > 1) {
+      val foreign = entries.filter(specIdCol(entries) =!= cur).limit(1).count()
+      require(foreign == 0L,
+        s"$op: this version still holds files written under an earlier partition " +
+          s"spec (current spec id $cur) — a predicate over the current spec cannot " +
+          "select them whole-file-exactly; compact/rewrite them first, or read " +
+          "through readSourceRange")
+    }
   }
 
   /** Physical arrangement every landing goes through: key-range +
@@ -345,11 +561,109 @@ trait VersionedStore {
   }
 
   /** The stats [[analyzeColumns]] stored for `version`, if any. */
-  def columnStats(version: Long): Option[DataFrame] =
-    if (!fs.exists(new Path(colstatsDir(version), "_SUCCESS"))) None
-    else Some(ParquetSchemas.read(spark, colstatsDir(version).toString))
+  def columnStats(version: Long): Option[DataFrame] = sidecar(colstatsDir(version))
+
+  // ---- SIDECARS ----
+
+  /** The visible files of a published sidecar directory, or None while
+    * it holds no `_SUCCESS` marker. */
+  private def sidecarFiles(dir: Path): Option[Seq[FileStatus]] =
+    if (!fs.exists(new Path(dir, "_SUCCESS"))) None
+    else Some(fs.listStatus(dir).toSeq)
+
+  /** A parquet sidecar directory (`_dv`, `_zonemap`, `_colstats`,
+    * `_bloom_<c>`) as a frame, or None while unpublished. Read from its
+    * own listing, so Spark never resolves the `_`-prefixed directory as
+    * a data-source path (which it reports as an ignored hidden path).
+    * `schema` None: the schema of the listing's first file footer. */
+  protected def sidecar(dir: Path, schema: Option[StructType] = None): Option[DataFrame] =
+    sidecarFiles(dir).map(ParquetSchemas.readListed(spark, dir, _, schema))
+
+  /** The version's DELETION VECTOR — (file basename, parquet row
+    * position) pairs masked out of every semantic read, when a
+    * merge-on-read verb published one. Lives inside the version's
+    * directory, so it publishes atomically with the version. */
+  def dvFrame(version: Long): Option[DataFrame] =
+    sidecar(new Path(versionDir(version), "_dv"), Some(SnapshotStore.dvSchema))
+
+  /** Mask entry count from the DV parquet footers — driver-side, one
+    * footer open per DV part file (the DV lands coalesce(1)). */
+  def dvRowCount(version: Long): Long =
+    sidecarFiles(new Path(versionDir(version), "_dv")).fold(0L) { files =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      files.filter(f => f.isFile && f.getPath.getName.startsWith("part-")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
+
+  protected def bloomDir(version: Long, column: String): Path =
+    new Path(versionDir(version), s"_bloom_$column")
+
+  /** The stored per-file Bloom filters for `column`, when built. */
+  def bloomIndex(version: Long, column: String)
+      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] =
+    sidecar(bloomDir(version, column)).map(_.collect().map { r =>
+      r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+    }.toMap)
+
+  /** Point lookup on a Bloom-indexed column: open ONLY the files whose
+    * filter might contain the value (a file ABSENT from the index —
+    * landed after the build — always opens: a stale index stays
+    * CORRECT, it just skips less), then filter exactly. Falls back to a
+    * full scan + filter with no index. Returns (frame, filesOpened) —
+    * the caller-visible skip accounting. */
+  def readWhereEquals(version: Long, column: String, value: Any): (DataFrame, Int) = {
+    val pred = col(column) === lit(value)
+    val paths = dataPaths(version)
+    bloomIndex(version, column) match {
+      case None => (readDataFiles(version, paths).filter(pred), paths.size)
+      case Some(idx) =>
+        val v = String.valueOf(value)
+        val hit = paths.filter(p => idx.get(new Path(p).getName).forall(_.mightContainString(v)))
+        val base = if (hit.isEmpty) emptyRead(version) else readDataFiles(version, hit)
+        (base.filter(pred), hit.length)
+    }
+  }
 
   // ---- HISTORY ----
+
+  /** The VERSION-LOG CHECKPOINT, served and self-healed: retained
+    * versions ascending with their consolidated stats. Warm path = ONE
+    * `_history.json` read, O(1) file opens regardless of the version
+    * count; entries missing from the checkpoint (crash, concurrent
+    * publisher, external writer, invalidation) rebuild from the
+    * versions and the checkpoint rewrites. */
+  protected def historyEntries(): Seq[(Long, SnapshotStore.HistoryEntry)] = {
+    val vs = versions()
+    val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
+    val live = ckpt.filter { case (v, _) => vs.contains(v) }
+    val missing = vs.filterNot(live.contains)
+    if (missing.isEmpty) vs.map(v => v -> live(v))
+    else {
+      val merged = live ++ missing.map(v => v -> computeHistoryEntry(v))
+      SnapshotStore.rewriteHistoryCkpt(getClass.getSimpleName, fs, basePath, merged)
+      vs.map(v => v -> merged(v))
+    }
+  }
+
+  /** Incremental checkpoint maintenance — one entry per publish: a
+    * STATS-CARRY commit (`statsFrom`, whose files are the source's)
+    * derives its entry from the source's with `carry`, any other
+    * builds a `fresh` one. Best-effort: the checkpoint is derived, so
+    * a failed update is logged and self-heals on the next read; the
+    * commit stays published. */
+  protected def noteCommit(version: Long, statsFrom: Option[Long],
+      carry: SnapshotStore.HistoryEntry => SnapshotStore.HistoryEntry,
+      fresh: => SnapshotStore.HistoryEntry): Unit =
+    try {
+      val ckpt = SnapshotStore.readHistoryCkpt(fs, basePath)
+      val entry = statsFrom.flatMap(ckpt.get).fold(fresh)(carry)
+      SnapshotStore.writeHistoryCkpt(fs, basePath, ckpt + (version -> entry))
+    } catch { case scala.util.control.NonFatal(e) =>
+      SnapshotStore.checkpointUpdateFailed(getClass.getSimpleName, basePath, version, e) }
 
   /** Commit history — the `DESCRIBE HISTORY` surface: one row per
     * retained version with its commit timestamp, file/row totals and

@@ -6,7 +6,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec, PartitioningUtils}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -87,6 +87,32 @@ object ParquetSchemas {
       .flatMap(f => footerSchema(spark, f))
       .map(_.asNullable)
   }
+
+  /** `spark.read.parquet(dir)` over the caller's own `listing` of
+    * `dir`: Spark's file index is seeded with the listing (no second
+    * listing, no path resolution), so a `_`-prefixed directory, which
+    * Spark's path check reports as an ignored hidden path, reads like
+    * any other. `schema` None: the listing's footer pick ([[ofFiles]]);
+    * where that cannot answer, Spark's own read. */
+  def readListed(spark: SparkSession, dir: Path, listing: Seq[FileStatus],
+      schema: Option[StructType]): DataFrame =
+    schema.orElse(ofFiles(spark, listing)) match {
+      case None => spark.read.parquet(dir.toString)
+      case Some(sc) =>
+        val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val files = listing.filter(s =>
+          s.isFile && !HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName)).toArray
+        val listed = new FileStatusCache {
+          override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+            if (path == dir) Some(files) else None
+          override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }
+        val index = new InMemoryFileIndex(session, Seq(dir), Map.empty, Some(sc), listed,
+          Some(PartitionSpec.emptySpec))
+        session.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+          sc.asNullable, None, new ParquetFileFormat, Map.empty)(session))
+    }
 
   /** A schema as a parquet read of a frame written with it reports it
     * (file-source relations are nullable). */

@@ -45,6 +45,17 @@ class AuditSidecarFailureSpec extends SparkSpec {
       assert(st.history().filter($"version" === 2L).select("operation").as[String]
         .collect().toSeq == Seq("mergeDelta"))
       assert(st.read(2L).filter($"k" === 3L).select("v").as[String].collect().toSeq == Seq("u"))
+      // a metadata-only commit goes through the same publish
+      FailOpSidecarFs.armed = true
+      val err2 = try intercept[java.io.IOException](st.renameColumn(2L, 3L, "v", "w"))
+        finally FailOpSidecarFs.armed = false
+      assert(err2.getMessage.contains("_op.json"), err2.getMessage)
+      assert(st.versions() == Seq(1L, 2L), s"${st.layout}: a rename without its audit record published")
+      st.renameColumn(2L, 3L, "v", "w")
+      assert(st.versions() == Seq(1L, 2L, 3L))
+      assert(st.history().filter($"version" === 3L).select("operation").as[String]
+        .collect().toSeq == Seq("renameColumn"))
+      assert(st.read(3L).filter($"k" === 3L).select("w").as[String].collect().toSeq == Seq("u"))
     }
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.LongType
 import graft.operators.{ConstraintViolationException, ManifestStore, SnapshotStore, VersionedStore}
 
 /** One script over both layouts through the [[VersionedStore]] trait:
@@ -84,7 +85,65 @@ class VersionedStoreSpec extends SparkSpec {
 
     out += st.mergeAtTip(Seq((2L, "t")).toDF("k", "v"))
     out += content(st, 4L)
+
+    // the metadata verbs, from a state both layouts hold as the same
+    // two files (v1 restored): an evolving merge adds an int column,
+    // which widens, a rename, a drop; every commit's history row
+    // (verb, parameters, file and row counts) matches across layouts
+    st.restoreVersion(1L, 5L, None)
+    st.mergeDelta(5L, 6L, Seq((1L, "a-1", 7)).toDF("k", "v", "q"))
+    st.widenColumn(6L, 7L, "q", LongType)
+    st.renameColumn(7L, 8L, "v", "w")
+    st.dropColumns(8L, 9L, Seq("q"))
+    intercept[IllegalArgumentException](st.renameColumn(9L, 10L, "w", "k"))
+    intercept[IllegalArgumentException](st.widenColumn(9L, 10L, "w", LongType))
+    intercept[IllegalArgumentException](st.dropColumns(9L, 10L, Seq("k")))
+    assert(st.latestVersion().contains(9L))
+    out += st.read(6L).schema.map(f => f.name -> f.dataType.simpleString)
+    out += st.read(7L).filter($"k" === 1L).select("q").as[Long].collect().toSeq
+    out += st.read(8L).columns.toSeq
+    out += st.read(9L).select("k", "w").as[(Long, String)].collect().toSet
+    out += st.read(9L).columns.toSeq
+    out += st.read(5L).select("k", "v").as[(Long, String)].collect().toSet == content(st, 1L)
+    out += st.history().filter($"version" >= 5L)
+      .select("version", "operation", "operation_params", "n_files", "n_rows")
+      .as[(Long, String, String, Long, Long)].collect().toSeq
+
+    // a Bloom index (built the layout's way) serves the trait's point
+    // lookup with exact rows
+    st match {
+      case s: SnapshotStore => s.buildBloomIndex(9L, "w")
+      case m: ManifestStore => m.buildBloomIndex(9L, "w")
+    }
+    val (hit, opened) = st.readWhereEquals(9L, "w", "a-12")
+    out += hit.select("k").as[Long].collect().toSeq
+    assert(st.bloomIndex(9L, "w").isDefined && opened <= st.dataPaths(9L).size)
     out.result()
+  }
+
+  /** Partition-spec evolution through the trait: months → years, a
+    * merge landing under the new spec, a source-range read pruned per
+    * file by its own spec, and a whole-partition drop that refuses on
+    * the mixed version. */
+  private def evolution(st: VersionedStore): Seq[Any] = {
+    val day = java.sql.Date.valueOf("1995-01-01")
+    val df = (1 to 24).map(i => (i.toLong, java.sql.Date.valueOf(
+      java.time.LocalDate.of(1994 + i / 12, 1 + i % 12, 1)), i.toDouble)).toDF("k", "d", "x")
+    st match {
+      case s: SnapshotStore => s.writePartitioned(df, 1L, Seq("months(d)"))
+      case m: ManifestStore => m.writePartitioned(df, 1L, Seq("months(d)"))
+    }
+    val id = st.evolvePartitionSpec(Seq("years(d)"))
+    assert(st.evolvePartitionSpec(Seq("years(d)")) == id) // idempotent
+    st.mergeDelta(1L, 2L, Seq((100L, day, 1.5)).toDF("k", "d", "x"))
+    val lo = java.sql.Timestamp.valueOf("1995-01-01 00:00:00")
+    val hi = java.sql.Timestamp.valueOf("1995-12-31 23:59:59")
+    val refused = intercept[IllegalArgumentException](
+      st.dropPartitions(2L, 3L, $"d__year" === day)).getMessage
+    Seq(id,
+      st.readSourceRange(2L, "d", lo, hi).select("k").as[Long].collect().toSet,
+      refused.contains("earlier partition spec"),
+      st.history().select("version", "operation").as[(Long, String)].collect().toSeq)
   }
 
   test("the same script gives the same answers on both layouts") {
@@ -97,6 +156,13 @@ class VersionedStoreSpec extends SparkSpec {
     }
     assert(content(linked, 3L) == ((1 to 17).filterNot(_ == 5).map(k =>
       k.toLong -> (if (k == 3) "u" else s"a-$k")).toSet))
+  }
+
+  test("partition-spec evolution gives the same answers on both layouts") {
+    val a = evolution(new ManifestStore(spark, tmpBase("graft-vs-evo-linked"), "k"))
+    val b = evolution(new SnapshotStore(spark, tmpBase("graft-vs-evo-snap"), "k"))
+    assert(a == b, s"linked $a vs snapshot $b")
+    assert(a(1) == Set(12L, 13L, 14L, 15L, 16L, 17L, 18L, 19L, 20L, 21L, 22L, 23L, 100L))
   }
 
   test("VersionedStore.open picks the layout an existing base was written in") {
