@@ -27,10 +27,13 @@ import org.apache.spark.sql.types.StructType
   * as a local relation: joins against it broadcast naturally and
   * collect() needs no file I/O. A publishing store SEEDS the entry
   * with the rows it just wrote, so a fresh version's first read costs
-  * only the listing. A miss reads under the schema of the footer the
-  * listing already found (no inference job). The cache is LRU-capped
+  * only the listing. A miss reads the listed files under the schema of
+  * the footer the listing already found (no inference job, no second
+  * listing). The cache is LRU-capped
   * by the estimated size of the collected rows, [[MaxBytes]]; a
-  * manifest larger than the whole cap is served uncached. */
+  * manifest larger than the whole cap is served uncached. The
+  * snapshot layout's zone maps (its per-file manifest) are cached the
+  * same way, keyed by their directory. */
 object ManifestCache {
   /** Cap on the estimated JVM size of all cached rows. */
   val MaxBytes: Long = 64L << 20
@@ -93,8 +96,7 @@ private[graft] final class ManifestCache(maxBytes: Long) {
         val key = (base, version)
         val entry = synchronized(Option(cache.get(key))).filter(_.fingerprint == fp)
           .getOrElse {
-            val df = ParquetSchemas.ofFiles(spark, files)
-              .fold(spark.read.parquet(dir.toString))(spark.read.schema(_).parquet(dir.toString))
+            val df = ParquetSchemas.readListed(spark, dir, files, None)
             val e = entryOf(fp, df.schema, df.collect())
             put(key, e)
             e

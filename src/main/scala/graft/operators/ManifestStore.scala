@@ -55,31 +55,30 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   private def manifestDir(v: Long) = new Path(s"$basePath/_manifests/v=$v")
   protected def versionDir(v: Long): Path = manifestDir(v)
 
-  private def statAggs(cols: Seq[String]): Seq[Column] =
-    Seq(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
-      count(lit(1)).as("n_rows")) ++
-      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-
-  /** File-level stats frame for a set of freshly written pool files.
-    * `cols` defaults to the construction statsCols (first write); the
+  /** File-level stats frame (a local frame) for a set of freshly
+    * written pool files, from their footers ([[landedStats]]). `cols`
+    * defaults to the construction statsCols (first write); the
     * version-to-version operators pass [[manifestStatsCols]] instead —
-    * see its rationale. */
-  private def statsFor(names: Seq[String], cols: Seq[String] = statsCols): DataFrame = {
-    val paths = names.map(n => new Path(poolDir, n).toString)
+    * see its rationale. Partition-spec evolution stamps WHICH spec the
+    * files landed under (`spec_id`), so pruning can consult each file's
+    * OWN spec forever; never-evolved stores keep their exact manifest
+    * schema (absent column ≡ spec 0 — the only spec they have). */
+  private def statsFor(names: Seq[String], cols: Seq[String] = statsCols): DataFrame =
+    landedStats(names.map(n => new Path(poolDir, n)), cols)
+
+  protected def statsQuery(files: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = statAggs(cols)
-    val base = ParquetSchemas.readFiles(spark, paths)
-      .select((input_file_name().as("__f") +: col(keyCol) +: cols.map(col)): _*)
+    files.select((input_file_name().as("__f") +: col(keyCol) +: cols.map(col)): _*)
       .groupBy("__f").agg(aggs.head, aggs.tail: _*)
       // manifests store bare pool file NAMES (relocatable repository —
       // a copied/mirrored store keeps working at its new root)
       .withColumn("file", element_at(split(col("__f"), "/"), -1))
       .drop("__f")
-    // partition-spec evolution: stamp WHICH spec these files landed
-    // under, so pruning can consult each file's OWN spec forever.
-    // Never-evolved stores keep their exact manifest schema (absent
-    // column ≡ spec 0 — the only spec they have).
-    val (hist, cur) = specHistory
-    if (hist.size <= 1) base else base.withColumn("spec_id", lit(cur))
+  }
+
+  protected def statsFileName(p: Path): String = {
+    val s = p.toUri.toString
+    s.substring(s.lastIndexOf('/') + 1)
   }
 
   /** The stats columns an EXISTING manifest actually carries — the
@@ -256,7 +255,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val shared = man.join(sharedFiles, Seq("file"), "left_semi").materialize()
     val stats = landWithStats(arrange(data2, filesPerPartition),
       manifestStatsCols(man), evolvedSchema(fromVersion))
-    publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
+    publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
       evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
       op = "replaceWhere")
     val nShared = manifestFiles(shared).size
@@ -354,17 +353,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val names = landInPool(sc.map(SnapshotStore.toPhysical(df, _)).getOrElse(df))
     if (names.isEmpty) None
     else {
-      val stats = localFrame(statsFor(names, cols))
+      val stats = statsFor(names, cols)
       val live = manifestFiles(stats).toSet
       names.filterNot(live).foreach(n => fs.delete(new Path(poolDir, n), false))
       if (live.isEmpty) None else Some(stats)
     }
   }
-
-  /** A metadata-sized frame collected once and served as a local
-    * relation (filters and collects over it run no job). */
-  private def localFrame(df: DataFrame): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** The pool file names a manifest-shaped frame lists. */
   private def manifestFiles(man: DataFrame): Seq[String] =
@@ -416,10 +410,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   private def effectiveStatsCols: Seq[String] =
     statsCols ++ storedPartitionBy().filterNot(c => c == keyCol || statsCols.contains(c))
 
-  /** Publish a manifest frame as `version`: parquet to a tmp dir,
-    * commit-ts (and, for evolved versions, the union schema) sidecar
-    * inside, ONE rename goes live — a version can never exist without
-    * the metadata that makes its mixed-schema files readable. */
+  /** Publish a manifest frame as `version`: parquet to a tmp dir
+    * (written on the driver from the collected rows — a local frame
+    * collects without a job), commit-ts (and, for evolved versions, the
+    * union schema) sidecar inside, ONE rename goes live — a version can
+    * never exist without the metadata that makes its mixed-schema files
+    * readable. */
   private def publish(version: Long, manifest: DataFrame, commitTs: Option[Long],
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       dv: Option[DataFrame] = None, op: String = "unknown",
@@ -431,8 +427,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // the version, seed the manifest cache and build the history entry
     // (no re-read of what was just written)
     val rows = manifest.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), manifest.schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    ParquetSchemas.writeRows(spark, tmp, manifest.schema, rows.toSeq)
     val written = fs.listStatus(tmp).toSeq
     // the deletion vector publishes atomically WITH the version — a
     // version dir can never exist whose mask is missing or stale
@@ -857,9 +852,8 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   }
 
   /** Point-read for a key set: manifest key envelopes prune the file
-    * list (one broadcast range probe over |manifest| rows — the same
-    * device mergeDelta's touched-file scan uses), then one semi-join
-    * restricts to exactly the requested keys. The linked twin of
+    * list (one broadcast range probe over |manifest| rows), then one
+    * semi-join restricts to exactly the requested keys. The linked twin of
     * SnapshotStore.readForKeys' zone-map stage. */
   def readForKeys(version: Long, keys: DataFrame): DataFrame = {
     val k = keys.select(keys.columns.head).toDF(keyCol).distinct().materialize()
@@ -1016,34 +1010,13 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         if (have(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)): _*)
     }
+    val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
+    // |manifest| key envelopes probed by one pass over the key set
+    val touch = VersionedStore.touchedFiles(touchKeys, man, keyCol)
+    val touched = touch.files
     val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    // __del flag (delete wins, matching the upserts' left_anti)
-    // drives operationMetrics' updated vs deleted split without a
-    // second look at the caller's frames
-    val touchKeys = delK.foldLeft(
-        delta.select(col(keyCol)).withColumn("__del", lit(false)))(
-        (acc, del) => acc.unionByName(del.withColumn("__del", lit(true))))
-      .groupBy(keyCol).agg(max(col("__del")).as("__del")).materialize()
-    // |manifest| rows broadcast into a range probe over the key set
-    val (touched, nUpserts) = SnapshotStore.touchedFiles(touchKeys, man, keyCol)
     val shared = man.filter(!col("file").isin(touched.toSeq: _*))
     val nShared = manifestFiles(man).count(f => !touched(f))
-    // operationMetrics (SnapshotStore.mergeDelta's contract): matched
-    // counts come from ONE key-column-pruned pass over the touched
-    // files — a small fraction of the full-row double-read (range
-    // sampling + shuffle) the rewrite below already pays — and the
-    // upsert count was observed on the key frame above; the user's
-    // delta pipeline never re-executes for metrics.
-    val (nMatched, nMatchedDel) =
-      if (touched.isEmpty) (0L, 0L)
-      else {
-        val r = readDataFiles(fromVersion,
-            touched.map(n => new Path(poolDir, n).toString).toSeq)
-          .select(col(keyCol)).join(touchKeys, Seq(keyCol))
-          .agg(count(lit(1)).as("m"),
-            coalesce(sum(when(col("__del"), 1L)), lit(0L)).as("d")).head()
-        (r.getLong(0), r.getLong(1))
-      }
     val survivors =
       if (touched.isEmpty) align(delta).limit(0)
       else align(readDataFiles(fromVersion,
@@ -1061,17 +1034,27 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val stats = landWithStats(
       arrange(materialize(survivors.unionByName(upserts)), numNewFiles),
       manifestStatsCols(man), Some(unionSchema))
+    // operationMetrics (SnapshotStore.mergeDelta's contract): the
+    // matched counts from the rewrite's own counts where they decide
+    // them, else one key-column pass over the touched files; the
+    // upsert count came from the key probe above, so the user's
+    // delta pipeline never re-executes for metrics
+    val (nMatched, nMatchedDel) = mergeMatched(fromVersion, touch,
+      rowTotal(man.filter(col("file").isin(touched.toSeq: _*))),
+      stats.fold(0L)(rowTotal),
+      readDataFiles(fromVersion, touched.map(n => new Path(poolDir, n).toString).toSeq)
+        .select(col(keyCol)))
     // an all-delete merge can rewrite to nothing: the manifest is then
     // just the shared entries — and a version that could end up with
     // ZERO pool files records its schema sidecar so readers (incl. the
     // SQL catalog) can still plan an empty scan over it
     val nRewritten = stats.fold(0)(manifestFiles(_).size)
     publish(toVersion,
-      stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
+      stats.fold(shared)(unionLocal(shared, _)), commitTs,
       if (evolved || stats.isEmpty) Some(unionSchema) else None,
       dv = carryDv(fromVersion, shared), op = "mergeDelta",
       metrics = Map(
-        "numTargetRowsInserted" -> math.max(0L, nUpserts - (nMatched - nMatchedDel)),
+        "numTargetRowsInserted" -> math.max(0L, touch.upsertKeys - (nMatched - nMatchedDel)),
         "numTargetRowsUpdated" -> (nMatched - nMatchedDel),
         "numTargetRowsDeleted" -> nMatchedDel,
         "numTargetFilesAdded" -> nRewritten.toLong,
@@ -1114,8 +1097,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .getOrElse(filled)
     val matchRows = visible.filter(coalesce(pred, lit(false)))
       .select(col("__f").as("file"), col("__p").as("pos")).materialize()
-    val matching = matchRows.groupBy("file").agg(count(lit(1)).as("__hits"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val matching = matchCounts(matchRows)
     val shared = man.filter(!col("file").isin(matching.keys.toSeq: _*))
     if (matching.isEmpty) {
       publish(toVersion, shared, commitTs, evolvedSchema(fromVersion),
@@ -1131,8 +1113,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // COPY-ON-WRITE when the delete is dense (the mask would stop
     // being metadata-sized and every read would pay it forever)
     val nMatched = matching.values.sum
-    val touchedPhysRows = man.filter(col("file").isin(matching.keys.toSeq: _*))
-      .select("n_rows").collect().map(_.getLong(0)).sum
+    val touchedPhysRows = rowTotal(man.filter(col("file").isin(matching.keys.toSeq: _*)))
     val useDv = mode == "dv" ||
       (mode == "auto" && nMatched * 5 <= touchedPhysRows)
     if (useDv) {
@@ -1155,7 +1136,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // the zero-file version still plans (see mergeDelta)
     val nRewritten = stats.fold(0)(manifestFiles(_).size)
     publish(toVersion,
-      stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
+      stats.fold(shared)(unionLocal(shared, _)), commitTs,
       if (stats.isEmpty && shared.isEmpty)
         evolvedSchema(fromVersion).orElse(Some(kept.schema))
       else evolvedSchema(fromVersion),
@@ -1233,7 +1214,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
       .materialize()
     val nNew = stats.fold(0)(manifestFiles(_).size)
-    publish(toVersion, stats.fold(man)(man.unionByName(_, allowMissingColumns = true)), commitTs, sc,
+    publish(toVersion, stats.fold(man)(unionLocal(man, _)), commitTs, sc,
       dv = if (mask.limit(1).count() == 0) None else Some(mask),
       op = "mergeDeltaMor", metrics = Map(
         "numTargetRowsMasked" -> nMasked,
@@ -1294,8 +1275,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .getOrElse(filled)
     val matched = visible.filter(coalesce(pred, lit(false))).materialize()
     val matchRows = matched.select(col("__f").as("file"), col("__p").as("pos"))
-    val matching = matchRows.groupBy("file").agg(count(lit(1)).as("__hits"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val matching = matchCounts(matchRows)
     if (matching.isEmpty) {
       publish(toVersion, man, commitTs, sc, dv = dvFrame(fromVersion),
         op = "updateWhere", opParams = updateOpParams(set, pred),
@@ -1306,8 +1286,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val nMatched = matching.values.sum
     def applySet(df: DataFrame): DataFrame =
       set.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
-    val touchedPhysRows = man.filter(col("file").isin(matching.keys.toSeq: _*))
-      .select("n_rows").collect().map(_.getLong(0)).sum
+    val touchedPhysRows = rowTotal(man.filter(col("file").isin(matching.keys.toSeq: _*)))
     val useMor = mode == "mor" ||
       (mode == "auto" && nMatched * 5 <= touchedPhysRows)
     if (useMor) {
@@ -1317,7 +1296,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         manifestStatsCols(man), sc)
       val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
       val nNew = stats.fold(0)(manifestFiles(_).size)
-      publish(toVersion, stats.fold(man)(man.unionByName(_, allowMissingColumns = true)), commitTs, sc,
+      publish(toVersion, stats.fold(man)(unionLocal(man, _)), commitTs, sc,
         dv = Some(mask), op = "updateWhere",
         opParams = updateOpParams(set, pred),
         metrics = Map("numUpdatedRows" -> nMatched,
@@ -1333,7 +1312,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       val stats = landWithStats(arrange(rewritten, numNewFiles),
         manifestStatsCols(man), sc)
       val nNew = stats.fold(0)(manifestFiles(_).size)
-      publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs, sc,
+      publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs, sc,
         dv = carryDv(fromVersion, shared), op = "updateWhere",
         opParams = updateOpParams(set, pred),
         metrics = Map("numUpdatedRows" -> nMatched,
@@ -1367,7 +1346,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
           masked.map(n => new Path(poolDir, n).toString).toSeq)
         val stats = landWithStats(arrange(survivors, numNewFiles),
           manifestStatsCols(man), evolvedSchema(fromVersion))
-        publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
+        publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
           evolvedSchema(fromVersion), op = "foldDv")
         (manifestFiles(shared).size, stats.fold(0)(manifestFiles(_).size), nDropped)
     }
@@ -1733,7 +1712,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         statsFrom = Some(fromVersion))
       return (sizes.length, 0)
     }
-    val shared = man.join(nameFrame(small), Seq("file"), "left_anti")
+    val shared = man.filter(!col("file").isin(small.toSeq: _*))
     // compaction FOLDS the deletion vector in: the rewrite reads the
     // masked view, so folded files shed their DV entries for good.
     // Folded files land under PHYSICAL names (column mapping): the
@@ -1744,8 +1723,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(folded, _))
         .getOrElse(folded),
       targetFiles))
-    publish(toVersion, shared.unionByName(statsFor(names, manifestStatsCols(man)),
-      allowMissingColumns = true),
+    publish(toVersion, unionLocal(shared, statsFor(names, manifestStatsCols(man))),
       commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
       op = "compact", metrics = Map("numAddedFiles" -> names.size.toLong,
         "numRemovedFiles" -> small.length.toLong))
@@ -1779,7 +1757,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
       return (manifestFiles(man).size, 0)
     }
-    val shared = man.join(nameFrame(small), Seq("file"), "left_anti")
+    val shared = man.filter(!col("file").isin(small.toSeq: _*))
     // the fold reads MASKED (DV entries for rewritten files retire) and
     // lands physical-named (column mapping) — [[compact]]'s contract,
     // scoped; arrange keeps one partition tuple per file
@@ -1789,8 +1767,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(folded, _))
         .getOrElse(folded),
       targetFiles))
-    publish(toVersion, shared.unionByName(statsFor(names, manifestStatsCols(man)),
-      allowMissingColumns = true),
+    publish(toVersion, unionLocal(shared, statsFor(names, manifestStatsCols(man))),
       commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
       op = "compact", opParams = SnapshotStore.predSql(pred),
       metrics = Map("numAddedFiles" -> names.size.toLong,
@@ -1824,7 +1801,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
       return (manifestFiles(man).size, 0)
     }
-    val shared = man.join(nameFrame(matched), Seq("file"), "left_anti")
+    val shared = man.filter(!col("file").isin(matched.toSeq: _*))
     val rows = readDataFiles(fromVersion,
       matched.toSeq.sorted.map(n => new Path(poolDir, n).toString))
     val zc = ZOrder.zColumn(rows, zCols)
@@ -1835,8 +1812,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val names = landInPool(
       evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(arranged, _))
         .getOrElse(arranged))
-    publish(toVersion, shared.unionByName(statsFor(names, manifestStatsCols(man)),
-      allowMissingColumns = true),
+    publish(toVersion, unionLocal(shared, statsFor(names, manifestStatsCols(man))),
       commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
       op = "zorder", opParams = SnapshotStore.predSql(pred))
     (manifestFiles(man).size - matched.size, names.size)
@@ -1879,7 +1855,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         val stats = landWithStats(arrange(survivors, numNewFiles),
           manifestStatsCols(man), evolvedSchema(fromVersion))
         val keep = dv.join(maskedDf, Seq("file"), "left_anti").materialize()
-        publish(toVersion, stats.fold(shared)(shared.unionByName(_, allowMissingColumns = true)), commitTs,
+        publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
           evolvedSchema(fromVersion),
           dv = if (keep.limit(1).count() == 0) None else Some(keep),
           op = "foldDv", opParams = SnapshotStore.predSql(pred))

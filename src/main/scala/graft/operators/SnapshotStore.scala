@@ -230,26 +230,6 @@ object SnapshotStore {
 
   private[operators] val log = org.slf4j.LoggerFactory.getLogger("graft.operators.store")
 
-  /** Both layouts' merge probe: the files whose [min_key, max_key]
-    * envelope (a manifest or zone map, broadcast) holds a key of
-    * `touchKeys` (`keyCol`, `__del`), and the number of upserted keys —
-    * one pass over the key frame, the count riding it as an observed
-    * metric. */
-  private[operators] def touchedFiles(touchKeys: DataFrame, envelopes: DataFrame,
-      keyCol: String): (Set[String], Long) = {
-    val upserts = org.apache.spark.sql.Observation("graft_merge_upserts")
-    val touched = touchKeys
-      .observe(upserts, count(when(!col("__del"), 1)).as("n"))
-      .join(broadcast(envelopes),
-        col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
-    // an empty range join lets adaptive execution drop the observing
-    // node from the final plan: the metric is then absent, and counted
-    val n = upserts.get.get("n").map(_.asInstanceOf[Long])
-      .getOrElse(touchKeys.filter(!col("__del")).count())
-    (touched, n)
-  }
-
   /** A publish-time checkpoint update that failed: the commit itself
     * is already live and the checkpoint self-heals on the next read,
     * so the failure is logged, not raised. */
@@ -655,7 +635,12 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * operation stamp, and one CAS rename makes the whole version live
     * ([[CommitProtocol]]: exactly one concurrent publisher of
     * `toVersion` wins; the rest throw [[VersionConflictException]]).
-    * `statsFrom`: the history entry reuses that version's statistics.
+    * `fresh`: the landed files' stats rows when the caller already
+    * computed them. `statsFrom`: the history entry reuses that
+    * version's statistics; otherwise a version publishing a zone map
+    * over every one of its files takes its file and row counts from
+    * the zone-map rows in hand (zone maps count stored rows, as the
+    * footers do), any other rebuilds from the files.
     *
     * `inPlace` (compaction: it rewrites a version's layout, not its
     * identity) swaps `tmp` for the existing `toVersion` instead: move
@@ -669,7 +654,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       commitTs: Option[Long] = None, op: String = "unknown", opParams: String = "",
       statsFrom: Option[Long] = None, metrics: Map[String, Long] = Map.empty,
-      inPlace: Boolean = false): Unit = {
+      inPlace: Boolean = false, fresh: Option[DataFrame] = None): Unit = {
     if (landed.isEmpty) {
       fs.mkdirs(tmp)
       fs.create(new Path(tmp, "_SUCCESS"), true).close()
@@ -679,15 +664,21 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf))
     dv.foreach(_.select("file", "pos").coalesce(1).write.mode("overwrite")
       .parquet(new Path(tmp, "_dv").toString))
-    writeCommitTs(tmp, commitTs.getOrElse(System.currentTimeMillis()))
+    val ts = commitTs.getOrElse(System.currentTimeMillis())
+    writeCommitTs(tmp, ts)
     schema.foreach(Sidecars.writeSchema(fs, tmp, _))
-    val fresh = for {
+    val landedZm = fresh.orElse(for {
       names <- landed.filter(_.nonEmpty)
       cols <- zmCols.orElse(zm.map(zmStatsColsOf))
-      rows <- zmNewStats(names.toSeq.sorted.map(n => new Path(tmp, n).toString), cols)
-    } yield rows
-    (zm ++ fresh).reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .foreach(stageZoneMap(tmp, toVersion, _))
+    } yield zmNewStats(tmp, names, cols))
+    val staged = (zm ++ landedZm).reduceOption(unionLocal)
+      .map(z => z.schema -> stageZoneMap(tmp, toVersion, z))
+    val zmRows = staged.map(_._2)
+    // the published zone map's rows seed the cache its reads go through
+    def seedZoneMap(): Unit = staged.foreach { case (sc, rows) =>
+      val d = zmapDir(toVersion)
+      ManifestCache.seed(d.toString, toVersion, fs.listStatus(d).toSeq, sc, rows)
+    }
     val dest = new Path(dir(toVersion))
     if (inPlace) {
       val old = new Path(s"$basePath/.old-v=$toVersion-${java.util.UUID.randomUUID()}")
@@ -698,6 +689,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         throw new java.io.IOException(s"$op: publish failed: $tmp -> $dest")
       }
       fs.delete(old, true)
+      seedZoneMap()
       // the version's files changed in place: its checkpoint row (and
       // the successor's bytes-added diff) are stale
       invalidateHistoryCkpt()
@@ -708,16 +700,24 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       SnapshotStore.writeOpSidecar(fs, tmp, op, opParams, metrics)
       val token = CommitProtocol.writeToken(fs, tmp)
       CommitProtocol.publish(fs, tmp, dest, token, s"$op to v$toVersion on $basePath")
+      seedZoneMap()
       // a stats-carry commit shares the source's file CONTENT, so
       // counts/rows reuse its checkpoint entry instead of re-opening
       // every footer. Bytes are not carried: they come from the
       // basename diff against the predecessor (a restore physically
       // lands its files again; rename/widen keep the basenames, 0)
+      val files = landed.getOrElse(Set.empty[String]) ++
+        carried.map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
       noteCommit(toVersion, statsFrom,
-        _.copy(commitTs = commitTimestampRaw(toVersion),
-          bytes = commitBytesRaw(toVersion), op = op, opParams = opParams,
-          metrics = metrics),
-        computeHistoryEntry(toVersion))
+        _.copy(commitTs = ts, bytes = commitBytesRaw(toVersion), op = op,
+          opParams = opParams, metrics = metrics),
+        zmRows.filter(rows => rows.length == files.size && rows.map { r =>
+            val f = r.getAs[String]("file")
+            f.substring(f.lastIndexOf('/') + 1)
+          }.toSet == files)
+          .fold(computeHistoryEntry(toVersion))(rows => SnapshotStore.HistoryEntry(ts,
+            files.size.toLong, rows.map(_.getAs[Long]("n_rows")).sum,
+            commitBytesRaw(toVersion), op, opParams, metrics)))
     }
   }
 
@@ -1054,23 +1054,23 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * (`min_<c>`/`max_<c>`), so restores filtered on a NON-key column
     * can still skip files ([[readWhere]]) — worthwhile exactly when
     * the column correlates with the key order (timestamps vs
-    * monotonically assigned ids, the common lake case). */
-  def buildZoneMap(version: Long, statsCols: Seq[String] = Nil): Unit = {
-    val aggs = Seq(
-      min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
-      count(lit(1)).as("n_rows")) ++
-      statsCols.filterNot(_ == keyCol).flatMap(c =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    read(version)
-      .select((input_file_name().as("file") +: col(keyCol) +:
-        statsCols.filterNot(_ == keyCol).map(col)): _*)
-      .groupBy("file")
-      .agg(aggs.head, aggs.tail: _*)
+    * monotonically assigned ids, the common lake case). Stats cover
+    * the STORED rows, as every commit's zone map does: a deletion
+    * vector masks rows, not the files' counts and bounds. */
+  def buildZoneMap(version: Long, statsCols: Seq[String] = Nil): Unit =
+    statsQuery(recomputeDerived(unmasked(Seq(dir(version)), evolvedSchema(version))),
+      statsCols.filterNot(_ == keyCol))
       .coalesce(1).write.mode("overwrite").parquet(zmapDir(version).toString)
-  }
 
-  /** The version's zone map, if one was built. */
-  def zoneMap(version: Long): Option[DataFrame] = sidecar(zmapDir(version))
+  /** The version's zone map, if one was built: |files| rows served
+    * through [[ManifestCache]] (self-validating by listing; a publish
+    * seeds it with the rows it staged), so the next commit's probe and
+    * carry and the readers' pruning run no job over it. */
+  def zoneMap(version: Long): Option[DataFrame] = {
+    val d = zmapDir(version)
+    if (!fs.exists(new Path(d, "_SUCCESS"))) None
+    else Some(ManifestCache.read(spark, fs, d.toString, version, d))
+  }
 
   /** Files whose stats range for `column` overlaps [lo, hi] — None
     * when the version has no zone map or no stats for that column.
@@ -1517,12 +1517,17 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     schema.map(SnapshotStore.toLogical(masked0, _)).getOrElse(masked0)
   }
 
+  /** `paths` as stored, without the version's DV: read under the
+    * physical names and projected to logical. */
+  private def unmasked(paths: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    schema.map(x => SnapshotStore.toLogical(
+        spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*), x))
+      .getOrElse(ParquetSchemas.read(spark, paths: _*))
+
   private def masked(version: Long, paths: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    if (dvFrame(version).isEmpty)
-      schema.map(x => SnapshotStore.toLogical(
-          spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*), x))
-        .getOrElse(ParquetSchemas.read(spark, paths: _*))
+    if (dvFrame(version).isEmpty) unmasked(paths, schema)
     else maskedScanWithPos(version, paths, schema).drop("__f", "__p")
 
   def read(version: Long): DataFrame = recomputeDerived(evolvedSchema(version) match {
@@ -1642,7 +1647,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * Mechanics:
     *  1. touched = files whose zone-map [min,max] contains any
     *     upserted/deleted key — ONE pass over the (small) key set
-    *     range-joined against the broadcast zone map;
+    *     probing the zone map's envelopes ([[VersionedStore.touchedFiles]]);
     *  2. rewritten content = touched files' rows minus replaced/deleted
     *     keys, plus the delta upserts (minus deletes) — delta keys
     *     landing outside every existing file range (appends) are
@@ -1709,42 +1714,19 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         if (have(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)): _*)
     }
+    // the zone map is |files| rows on the driver: the probe ships its
+    // envelopes and the carried half of the new map filters it there
     val zm = zoneMap(fromVersion).getOrElse(throw new IllegalStateException(
       s"mergeDelta needs a zone map on version $fromVersion (use writeRangePartitioned)"))
-      .materialize()
     val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    // every key the merge touches: upserted + deleted, deduped; the
-    // __del flag (delete wins over a same-key upsert, matching the
-    // upserts' left_anti below) drives operationMetrics' updated vs
-    // deleted split without a second look at the caller's frames
-    val touchKeys = delK.foldLeft(
-        delta.select(col(keyCol)).withColumn("__del", lit(false)))(
-        (acc, del) => acc.unionByName(del.withColumn("__del", lit(true))))
-      .groupBy(keyCol).agg(max(col("__del")).as("__del")).materialize()
-    // file is touched iff its key envelope contains a touched key: the
-    // zone map is |files| rows — broadcast it into a range join over
-    // the key set, one narrow pass, collect only file paths
-    val (touched, nUpserts) = SnapshotStore.touchedFiles(touchKeys, zm, keyCol)
+    val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
+    // file is touched iff its key envelope contains a touched key: one
+    // narrow pass over the key set, collect only file paths
+    val touch = VersionedStore.touchedFiles(touchKeys, zm, keyCol)
     val allParts = srcListing.map(_.getPath).filter(_.getName.startsWith("part-"))
     // zone-map paths are input_file_name URIs; compare by basename
-    val touchedNames = touched.map(p => p.substring(p.lastIndexOf('/') + 1))
+    val touchedNames = touch.files.map(p => p.substring(p.lastIndexOf('/') + 1))
     val (touchedParts, untouchedParts) = allParts.partition(p => touchedNames(p.getName))
-    // operationMetrics, computed without touching the user's delta
-    // pipeline again: the matched (updated|deleted) counts come from
-    // ONE key-column-pruned pass over the touched files (the rewrite
-    // below re-reads them in full twice — range-sampling + shuffle —
-    // so the narrow count is a small fraction of work already paid);
-    // the upsert count was observed on the key frame above.
-    val (nMatched, nMatchedDel) =
-      if (touchedParts.isEmpty) (0L, 0L)
-      else {
-        val r = maskedScanWithPos(fromVersion,
-            touchedParts.map(_.toString).toIndexedSeq, Some(unionSchema))
-          .select(col(keyCol)).join(touchKeys, Seq(keyCol))
-          .agg(count(lit(1)).as("m"),
-            coalesce(sum(when(col("__del"), 1L)), lit(0L)).as("d")).head()
-        (r.getLong(0), r.getLong(1))
-      }
     val survivors =
       if (touchedParts.isEmpty) align(delta.limit(0))
       else maskedScanWithPos(fromVersion,
@@ -1771,19 +1753,30 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       arrange(SnapshotStore.toPhysical(rewritten, unionSchema), numNewFiles), tmp)
     val untouchedNames = untouchedParts.map(_.getName).toSet
     // incremental zone map: untouched rows carry over with the version
-    // prefix remapped; only the new files are scanned. The evolved
-    // union schema publishes WITH the version — a version dir can
-    // never hold mixed-schema files without the sidecar naming their
-    // union. Delta's MERGE operationMetrics: matched = touched-file
-    // rows whose key the merge addressed (updated + deleted), split by
-    // the __del flag; inserted = upsert keys minus the updated ones
-    // (keys are store-unique)
+    // prefix remapped; only the new files' footers are read
+    val landedZm = zmNewStats(tmp, newNames, zmStatsColsOf(zm))
+    // Delta's MERGE operationMetrics: matched = touched-file rows whose
+    // key the merge addressed (updated + deleted), from the rewrite's
+    // own counts where they decide it (see mergeMatched), split by the
+    // __del flag; inserted = upsert keys minus the updated ones (keys
+    // are store-unique); the upsert count came from the probe,
+    // so the user's delta pipeline never re-executes for metrics
+    val (nMatched, nMatchedDel) = mergeMatched(fromVersion, touch,
+      rowTotal(zm.filter(regexp_extract(col("file"), "[^/]+$", 0)
+        .isin(touchedParts.map(_.getName): _*))),
+      rowTotal(landedZm),
+      maskedScanWithPos(fromVersion, touchedParts.map(_.toString).toIndexedSeq,
+        Some(unionSchema)).select(col(keyCol)))
+    // The evolved union schema publishes WITH the version — a version
+    // dir can never hold mixed-schema files without the sidecar naming
+    // their union
     publish(toVersion, tmp, Some(newNames), untouchedParts,
       zm = Some(carriedZoneMap(zm, fromVersion, toVersion, untouchedNames)),
       dv = carryDv(fromVersion, untouchedNames),
       schema = Some(unionSchema).filter(_ => evolved), commitTs = commitTs,
+      fresh = Some(landedZm),
       op = "mergeDelta", metrics = Map(
-      "numTargetRowsInserted" -> math.max(0L, nUpserts - (nMatched - nMatchedDel)),
+      "numTargetRowsInserted" -> math.max(0L, touch.upsertKeys - (nMatched - nMatchedDel)),
       "numTargetRowsUpdated" -> (nMatched - nMatchedDel),
       "numTargetRowsDeleted" -> nMatchedDel,
       "numTargetFilesAdded" -> newNames.size.toLong,
@@ -1848,8 +1841,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       else maskedScanWithPos(fromVersion, candidates.map(_.toString), Some(unionSchema))
         .filter(pred)
         .select(col("__f").as("file"), col("__p").as("pos")).materialize()
-    val matchStats = matchRows.groupBy("file").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val matchStats = matchCounts(matchRows)
     val deleted = matchStats.values.sum
     val (touchedParts, untouchedParts) =
       allParts.partition(p => matchStats.contains(p.getName))
@@ -1977,8 +1969,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
         Some(unionSchema))
       .filter(coalesce(pred, lit(false))).materialize()
     val matchRows = matched.select(col("__f").as("file"), col("__p").as("pos"))
-    val matching = matchRows.groupBy("file").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val matching = matchCounts(matchRows)
     val opParams =
       s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}"
     val sc = evolvedSchema(fromVersion)
@@ -2065,44 +2056,46 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     }
   }
 
-  /** Stage `rows` as `tmp/_zonemap` before [[publish]]'s rename, re-homing
-    * any file path recorded under the tmp dir name to the final `v=N`
-    * dir: the version and its zone map then go live in ONE rename, so
-    * a crash between publish and map-write can no longer leave a live
-    * partitioned version whose readers ([[requirePartitionedZm]],
-    * pruning) throw until repaired. */
-  private def stageZoneMap(tmp: Path, toVersion: Long, rows: DataFrame): Unit =
-    rows.withColumn("file",
-        regexp_replace(col("file"),
-          java.util.regex.Pattern.quote(s"/${tmp.getName}/"), s"/v=$toVersion/"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new Path(tmp, "_zonemap").toString)
+  /** Stage `zm` as `tmp/_zonemap` before [[publish]]'s rename — written
+    * on the driver from its rows ([[ParquetSchemas.writeRows]]),
+    * re-homing any file path recorded under the tmp dir name to the
+    * final `v=N` dir: the version and its zone map then go live in ONE
+    * rename, so a crash between publish and map-write can no longer
+    * leave a live partitioned version whose readers
+    * ([[requirePartitionedZm]], pruning) throw until repaired. Returns
+    * the staged rows. */
+  private def stageZoneMap(tmp: Path, toVersion: Long, zm: DataFrame): Array[org.apache.spark.sql.Row] = {
+    val at = zm.schema.fieldIndex("file")
+    val (from, to) = (s"/${tmp.getName}/", s"/v=$toVersion/")
+    val rows = zm.collect().map(r => new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      r.toSeq.updated(at, Option(r.getString(at)).map(_.replace(from, to)).orNull).toArray,
+      zm.schema): org.apache.spark.sql.Row)
+    ParquetSchemas.writeRows(spark, new Path(tmp, "_zonemap"), zm.schema, rows.toSeq)
+    rows
+  }
 
   /** Per-file zone-map stats for NEW files still inside a
-    * not-yet-published tmp dir — one narrow scan of key + stats
-    * columns (the incremental half every maintenance verb pairs with
-    * carried-by-reference entries). */
-  private def zmNewStats(paths: Seq[String],
-      statsCols0: Seq[String]): Option[DataFrame] =
-    if (paths.isEmpty) None
-    else {
-      // partition-spec evolution: new files ALSO stat the CURRENT
-      // spec's derived column (their prune axis) and stamp which spec
-      // they landed under; never-evolved stores keep their exact zone
-      // map schema (absent spec_id ≡ spec 0)
-      val (hist, cur) = specHistory
-      val statsCols =
-        if (hist.size <= 1) statsCols0
-        else (statsCols0 ++ storedPartitionBy().filterNot(_ == keyCol)).distinct
-      val aggs = Seq(
-        min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
-        count(lit(1)).as("n_rows")) ++
-        statsCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      val df = ParquetSchemas.readFiles(spark, paths)
-        .select((input_file_name().as("file") +: col(keyCol) +: statsCols.map(col)): _*)
-        .groupBy("file").agg(aggs.head, aggs.tail: _*)
-      Some(if (hist.size <= 1) df else df.withColumn("spec_id", lit(cur)))
-    }
+    * not-yet-published tmp dir, from their footers ([[landedStats]] —
+    * the incremental half every maintenance verb pairs with carried
+    * entries). Partition-spec evolution: new files ALSO stat the
+    * CURRENT spec's derived column (their prune axis) and stamp which
+    * spec they landed under; never-evolved stores keep their exact
+    * zone map schema (absent spec_id ≡ spec 0). */
+  private def zmNewStats(tmp: Path, names: Set[String], statsCols0: Seq[String]): DataFrame = {
+    val (hist, _) = specHistory
+    val statsCols =
+      if (hist.size <= 1) statsCols0
+      else (statsCols0 ++ storedPartitionBy().filterNot(_ == keyCol)).distinct
+    landedStats(names.toSeq.sorted.map(new Path(tmp, _)), statsCols)
+  }
+
+  protected def statsQuery(files: DataFrame, cols: Seq[String]): DataFrame = {
+    val aggs = statAggs(cols)
+    files.select((input_file_name().as("file") +: col(keyCol) +: cols.map(col)): _*)
+      .groupBy("file").agg(aggs.head, aggs.tail: _*)
+  }
+
+  protected def statsFileName(p: Path): String = p.toUri.toString
 
   /** SOURCE-column time-range read over an EVOLVED partition spec —
     * [[ManifestStore.readSourceRange]]'s zone-map twin: every file

@@ -563,6 +563,129 @@ trait VersionedStore {
   /** The stats [[analyzeColumns]] stored for `version`, if any. */
   def columnStats(version: Long): Option[DataFrame] = sidecar(colstatsDir(version))
 
+  // ---- FILE STATISTICS ----
+  // A commit's metadata sidecar (the manifest, the zone map) holds one
+  // row per data file: the key envelope, the row count and the min/max
+  // of the stats columns. Landing verbs take those rows from the
+  // landed files' footers and write the sidecar on the driver, so
+  // neither the statistics nor the sidecar costs a Spark job.
+
+  /** The per-file aggregates of a manifest entry or zone-map row. */
+  protected def statAggs(cols: Seq[String]): Seq[Column] =
+    Seq(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
+      count(lit(1)).as("n_rows")) ++
+      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+
+  /** This layout's per-file statistics query over a frame of data
+    * files: [[statAggs]] grouped by file, the file named from
+    * `input_file_name()` in a `file` column as [[statsFileName]] names
+    * it. */
+  protected def statsQuery(files: DataFrame, cols: Seq[String]): DataFrame
+
+  /** The `file` value [[statsQuery]] records for the data file at the
+    * qualified path `p`. */
+  protected def statsFileName(p: Path): String
+
+  /** The rows [[statsQuery]] computes over the freshly landed data
+    * `files` (stamped with the current `spec_id` on an evolved store),
+    * as a local frame. Each file's row comes from its footer
+    * ([[ParquetSchemas.footerStats]]): its row count, and Spark's own
+    * footer aggregate for the min/max where the footer proves them.
+    * Only files with an unproven column are scanned, by the query
+    * itself. Files holding no rows get no row, as in the scan. */
+  protected def landedStats(files: Seq[Path], cols: Seq[String]): DataFrame = {
+    val (hist, cur) = specHistory
+    def query(df: DataFrame): DataFrame = {
+      val q = statsQuery(df, cols)
+      if (hist.size <= 1) q else q.withColumn("spec_id", lit(cur))
+    }
+    def scan(paths: Seq[Path]): DataFrame =
+      query(ParquetSchemas.readFiles(spark, paths.map(_.toString)))
+    val statCols = (keyCol +: cols).distinct
+    val footers = ParquetSchemas.footerStats(spark, files, statCols)
+    // the schema a scan of `files` reads: the least path's, as Spark picks
+    footers.sortBy(_.path.toString).headOption.flatMap(_.schema) match {
+      case None =>
+        val df = scan(files)
+        spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      case Some(sc) =>
+        val schema = query(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), ParquetSchemas.asRead(sc))).schema
+        val (proven, unproven) = footers.partition(f => f.minMax.isDefined &&
+          f.schema.exists(fsc => statCols.forall(c => fsc.find(_.name == c) == sc.find(_.name == c))))
+        val rows = proven.filter(_.rows > 0).map { f =>
+          val mm = f.minMax.get
+          org.apache.spark.sql.Row.fromSeq(schema.fieldNames.toSeq.map {
+            case "file" => statsFileName(f.path)
+            case "n_rows" => f.rows
+            case "spec_id" => cur
+            case "min_key" => mm(keyCol)._1
+            case "max_key" => mm(keyCol)._2
+            case n if n.startsWith("min_") => mm(n.drop(4))._1
+            case n => mm(n.drop(4))._2
+          })
+        } ++ (if (unproven.isEmpty) Nil else scan(unproven.map(_.path)).collect().toSeq)
+        val fileIdx = schema.fieldIndex("file")
+        spark.createDataFrame(
+          java.util.Arrays.asList(rows.sortBy(_.getString(fileIdx)): _*), schema)
+    }
+  }
+
+  /** `a.unionByName(b, allowMissingColumns = true)` of two
+    * metadata-sized frames as a local frame: the rows are matched by
+    * name on the driver under the union's own schema. Where the union
+    * would coerce a column's type (or match names by case), Spark's
+    * union is returned instead. */
+  protected def unionLocal(a: DataFrame, b: DataFrame): DataFrame = {
+    val u = a.unionByName(b, allowMissingColumns = true)
+    val exact = b.schema.forall(f => a.schema.filter(_.name.equalsIgnoreCase(f.name))
+      .forall(g => g.name == f.name && g.dataType == f.dataType))
+    if (!exact) u
+    else {
+      val names = u.schema.fieldNames.toSeq
+      def aligned(df: DataFrame): Seq[org.apache.spark.sql.Row] = {
+        val idx = names.map(n => df.schema.fieldNames.indexOf(n))
+        df.collect().toSeq.map(r =>
+          org.apache.spark.sql.Row.fromSeq(idx.map(i => if (i < 0) null else r.get(i))))
+      }
+      spark.createDataFrame(java.util.Arrays.asList(aligned(a) ++ aligned(b): _*), u.schema)
+    }
+  }
+
+  /** The rows of a (`file`, `pos`) match frame per file — one job, each
+    * partition tallying its own files (a grouped count would shuffle). */
+  protected def matchCounts(matchRows: DataFrame): Map[String, Long] =
+    matchRows.select("file").rdd.mapPartitions { rows =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+      rows.foreach(r => n(r.getString(0)) += 1)
+      Iterator(n.toMap)
+    }.collect().toSeq.flatten.groupMapReduce(_._1)(_._2)(_ + _)
+
+  /** The stored rows a manifest- or zone-map-shaped local frame counts. */
+  protected def rowTotal(entries: DataFrame): Long =
+    entries.select("n_rows").collect().map(_.getLong(0)).sum
+
+  /** A copy-on-write merge's matched row counts (updated + deleted,
+    * deleted) for Delta's MERGE operationMetrics. Every visible row of
+    * a touched file either matches a merged key or survives into the
+    * landing beside the upsert rows, so when the merge deletes no key
+    * and `fromVersion` has no deletion vector (visible = stored rows)
+    * the counts follow from the rewrite's own: matched = `touchedRows`
+    * (the touched files' stored rows) − (`landedRows` − the upsert
+    * rows counted by the probe), deleted 0. Otherwise one pass joins
+    * `touchedKeys` (the touched files' masked key column) to the key
+    * frame. */
+  protected def mergeMatched(fromVersion: Long, touch: VersionedStore.Touch,
+      touchedRows: => Long, landedRows: => Long, touchedKeys: => DataFrame): (Long, Long) =
+    if (touch.files.isEmpty) (0L, 0L)
+    else if (touch.deleteKeys == 0L && dvFrame(fromVersion).isEmpty)
+      (touchedRows - (landedRows - touch.upsertRows), 0L)
+    else {
+      val r = touchedKeys.join(touch.keys, Seq(keyCol))
+        .agg(count(lit(1)), coalesce(sum(when(col("__del"), 1L)), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+
   // ---- SIDECARS ----
 
   /** The visible files of a published sidecar directory, or None while
@@ -747,5 +870,79 @@ object VersionedStore {
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       new ManifestStore(spark, base, keyCol)
     else new SnapshotStore(spark, base, keyCol)
+  }
+
+  /** Every key a merge touches, deduped: `__del` marks a deleted key
+    * (delete wins over a same-key upsert, matching the upserts'
+    * left_anti) and `__n` counts the delta rows carrying the key — the
+    * rows the merge lands for it. Materialized: the probe, the rewrite
+    * and the metrics read it. */
+  private[operators] def mergeKeys(delta: DataFrame, deleteKeys: Option[DataFrame],
+      keyCol: String): DataFrame =
+    deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol)).foldLeft(
+        delta.select(col(keyCol)).withColumn("__del", lit(false)))(
+        (acc, del) => acc.unionByName(del.withColumn("__del", lit(true))))
+      .groupBy(keyCol).agg(max(col("__del")).as("__del"),
+        count(when(!col("__del"), 1)).as("__n"))
+      .materialize()
+
+  /** A merge's probe result: the touched `files`, the merge's key
+    * frame ([[mergeKeys]]), its upserted and deleted key counts and its
+    * upsert row count. */
+  private[operators] final case class Touch(files: Set[String], keys: DataFrame,
+      upsertKeys: Long, deleteKeys: Long, upsertRows: Long)
+
+  /** Both layouts' merge probe: the files whose [min_key, max_key]
+    * envelope (a manifest or zone map — metadata-sized, collected on
+    * the driver and shipped with the tasks) holds a key of `touchKeys`
+    * ([[mergeKeys]]), and the key and row counts — ONE job over the key
+    * frame, each partition answering its distinct files and its counts.
+    * Bounds compare under Spark's ordering of the key type, as a range
+    * join on them does: envelopes sort by lower bound, a key's
+    * candidates are those whose lower bound it reaches, scanned back
+    * while the running maximum of the upper bounds still reaches it. */
+  private[operators] def touchedFiles(touchKeys: DataFrame, envelopes: DataFrame,
+      keyCol: String): Touch = {
+    val keyType = touchKeys.schema(keyCol).dataType
+    // the key frame's type is the union of the delta's and the delete
+    // keys' types, never narrower than the stored key: cast the bounds
+    val env = envelopes.select(col("file"), col("min_key").cast(keyType),
+        col("max_key").cast(keyType)).collect()
+      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .map(r => (r.getString(0), r.get(1), r.get(2)))
+    val parts = touchKeys.select(col(keyCol), col("__del"), col("__n")).rdd
+      .mapPartitions { rows =>
+        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(keyType)
+        val internal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(keyType)
+        val sorted = env.map { case (f, lo, hi) => (f, internal(lo), internal(hi)) }
+          .sortWith((a, b) => ord.lt(a._2, b._2))
+        val reach = new Array[Any](sorted.length) // running max of the upper bounds
+        sorted.indices.foreach(i => reach(i) =
+          if (i > 0 && ord.gt(reach(i - 1), sorted(i)._3)) reach(i - 1) else sorted(i)._3)
+        val files = scala.collection.mutable.HashSet.empty[String]
+        var n, d, r = 0L
+        rows.foreach { row =>
+          if (row.getBoolean(1)) d += 1 else n += 1
+          r += row.getLong(2)
+          if (!row.isNullAt(0)) {
+            val k = internal(row.get(0))
+            var lo = 0 // binary search: lo ends on the first envelope starting above k
+            var hi = sorted.length
+            while (lo < hi) {
+              val mid = (lo + hi) >>> 1
+              if (ord.lteq(sorted(mid)._2, k)) lo = mid + 1 else hi = mid
+            }
+            var i = lo - 1
+            while (i >= 0 && ord.gteq(reach(i), k)) {
+              if (ord.gteq(sorted(i)._3, k)) files += sorted(i)._1
+              i -= 1
+            }
+          }
+        }
+        Iterator((files.toSet, n, d, r))
+      }.collect()
+    Touch(parts.flatMap(_._1).toSet, touchKeys, parts.map(_._2).sum, parts.map(_._3).sum,
+      parts.map(_._4).sum)
   }
 }

@@ -1,16 +1,26 @@
 package org.apache.spark.sql.graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData, FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec, PartitioningUtils}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.HadoopFSUtils
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.connector.expressions.{Expression, FieldReference}
+import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Max, Min}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec, PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter, ParquetUtils}
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
+import org.apache.spark.sql.types._
+import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
 
 /** Declared-schema parquet reads: the schema `spark.read.parquet(paths)`
   * would infer, computed in-process from ONE footer instead of by
@@ -130,10 +140,163 @@ object ParquetSchemas {
       val conf: Configuration = spark.sparkContext.hadoopConfiguration
       val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
-      Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
-        new ParquetToSparkSchemaConverter(sqlConf)))
+      Some(schemaOf(spark, f.getPath, meta))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The Spark schema of one footer: the Spark row schema stored in it
+    * wins, as in `readSchemaFromFooter`. */
+  private def schemaOf(spark: SparkSession, path: Path, meta: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, meta),
+      new ParquetToSparkSchemaConverter(sqlConf(spark)))
+
+  private def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  // ---- FOOTER STATISTICS ----
+
+  /** One parquet file's statistics as its footer states them. `path`
+    * is the file's qualified path as a file listing returns it (the
+    * path a scan reports through `input_file_name()`), `schema` its
+    * Spark schema (None: the footer did not read), `rows` its row
+    * count, and `minMax` Spark's `min`/`max` of each requested column
+    * in external (Row) form — None where the footer cannot prove them
+    * for some column, so the caller scans this file instead. */
+  final case class FooterStats(path: Path, schema: Option[StructType], rows: Long,
+      minMax: Option[Map[String, (Any, Any)]])
+
+  /** Footer statistics of `files` for the top-level columns `cols`,
+    * read on the driver, in parallel over at most eight threads. A
+    * column's pair comes from Spark's own footer aggregate
+    * (`ParquetUtils.createAggInternalRowFromFooter`, the code behind
+    * parquet aggregate pushdown) where the footer provably holds
+    * Spark's `min`/`max`: every row group carries min/max statistics
+    * and the column is integral (signed INT32/INT64) or a date without
+    * a legacy calendar rebase — the key and stats types the stores
+    * commit. A column null in every row (row-group null counts equal
+    * to the row counts) gets (null, null). Anything else — strings
+    * (truncated bounds), decimals, timestamps, booleans, floating
+    * point, complex types, a missing statistic — is not proven here,
+    * and the file is left to a scan. */
+  def footerStats(spark: SparkSession, files: Seq[Path], cols: Seq[String]): Seq[FooterStats] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sql = sqlConf(spark)
+    def one(p: Path): FooterStats =
+      try {
+        val st = p.getFileSystem(conf).getFileStatus(p)
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
+          ParquetMetadataConverter.NO_FILTER)
+        val sc = schemaOf(spark, st.getPath, meta)
+        FooterStats(st.getPath, Some(sc), meta.getBlocks.asScala.map(_.getRowCount).sum,
+          footerMinMax(meta, st.getPath.toString, sc, cols, sql))
+      } catch { case scala.util.control.NonFatal(_) => FooterStats(p, None, 0L, None) }
+    if (files.size <= 1) files.map(one)
+    else ThreadUtils.parmap(files, "graft-footer-stats", math.min(8, files.size))(one)
+  }
+
+  private def footerMinMax(meta: ParquetMetadata, path: String, sc: StructType,
+      cols: Seq[String], sql: SQLConf): Option[Map[String, (Any, Any)]] = {
+    val fm = meta.getFileMetaData
+    val blocks = meta.getBlocks.asScala.toSeq
+    val kv = fm.getKeyValueMetaData
+    val rebase = DataSourceUtils.datetimeRebaseSpec(k => kv.get(k),
+      sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString)
+    def chunk(b: BlockMetaData, c: String): Option[ColumnChunkMetaData] =
+      b.getColumns.asScala.find(m => m.getPath.size == 1 && m.getPath.toArray.head == c)
+    def allNull(c: String): Boolean = blocks.forall(b => chunk(b, c).exists { m =>
+      val s = m.getStatistics
+      s != null && !s.hasNonNullValue && s.isNumNullsSet && s.getNumNulls == b.getRowCount
+    })
+    def withValues(c: String): Boolean = blocks.forall(b =>
+      chunk(b, c).exists(m => m.getStatistics != null && m.getStatistics.hasNonNullValue))
+    def exactOrder(c: String): Boolean = sc.find(_.name == c).exists { f =>
+      val msg = fm.getSchema
+      msg.containsField(c) && msg.getType(msg.getFieldIndex(c)).isPrimitive && {
+        val pt = msg.getType(msg.getFieldIndex(c)).asPrimitiveType
+        val ann = pt.getLogicalTypeAnnotation
+        f.dataType match {
+          case ByteType | ShortType | IntegerType =>
+            pt.getPrimitiveTypeName == PrimitiveTypeName.INT32 && signed(ann)
+          case LongType => pt.getPrimitiveTypeName == PrimitiveTypeName.INT64 && signed(ann)
+          case DateType => pt.getPrimitiveTypeName == PrimitiveTypeName.INT32 &&
+            ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] &&
+            rebase.mode == LegacyBehaviorPolicy.CORRECTED
+          case _ => false
+        }
+      }
+    }
+    val (nulls, rest) = cols.distinct.partition(allNull)
+    if (!rest.forall(c => withValues(c) && exactOrder(c))) None
+    else if (rest.isEmpty) Some(nulls.map(_ -> ((null, null))).toMap)
+    else {
+      val agg = new Aggregation(rest.flatMap(c => Seq[AggregateFunc](
+        new Min(FieldReference.column(c)), new Max(FieldReference.column(c)))).toArray,
+        Array.empty[Expression])
+      val fields = rest.map(c => sc(c))
+      val aggSchema = StructType(fields.flatMap(f => Seq(
+        StructField(s"min(${f.name})", f.dataType), StructField(s"max(${f.name})", f.dataType))))
+      val projected = new ParquetMetadata(
+        new FileMetaData(new MessageType(fm.getSchema.getName,
+          rest.map(c => fm.getSchema.getType(fm.getSchema.getFieldIndex(c))).asJava),
+          kv, fm.getCreatedBy),
+        blocks.map { b =>
+          val nb = new BlockMetaData()
+          nb.setRowCount(b.getRowCount)
+          rest.foreach(c => nb.addColumn(chunk(b, c).get))
+          nb
+        }.asJava)
+      val row = CatalystTypeConverters.createToScalaConverter(aggSchema)(
+        ParquetUtils.createAggInternalRowFromFooter(projected, path, StructType(fields),
+          new StructType(), agg, aggSchema, InternalRow.empty, rebase)).asInstanceOf[Row]
+      Some((rest.zipWithIndex.map { case (c, i) => c -> ((row.get(2 * i), row.get(2 * i + 1))) } ++
+        nulls.map(_ -> ((null, null)))).toMap)
+    }
+  }
+
+  private def signed(ann: LogicalTypeAnnotation): Boolean = ann match {
+    case null => true
+    case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+    case _ => false
+  }
+
+  // ---- DRIVER-SIDE SIDECAR WRITES ----
+
+  /** `spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)`
+    * without the job: `rows` go through Spark's own parquet writer
+    * factory (`ParquetUtils.prepareWrite`, the session's codec and
+    * writer settings, Spark's row-metadata footer) into ONE uniquely
+    * named `part-` file, then the `_SUCCESS` marker — the layout a
+    * single-task write leaves, zero rows included (a footer-only file).
+    * For metadata-sized sidecars written into a private staging
+    * directory. */
+  def writeRows(spark: SparkSession, dir: Path, schema: StructType, rows: Seq[Row]): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sql = session.sessionState.conf
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    val factory = ParquetUtils.prepareWrite(sql, job, schema,
+      new ParquetOptions(Map.empty[String, String], sql))
+    val conf = job.getConfiguration
+    val jobId = new JobID(
+      new java.text.SimpleDateFormat("yyyyMMddHHmmss", java.util.Locale.US)
+        .format(new java.util.Date), 0)
+    val attempt = new TaskAttemptID(new TaskID(jobId, TaskType.MAP, 0), 0)
+    conf.set("mapreduce.job.id", jobId.toString)
+    conf.set("mapreduce.task.id", attempt.getTaskID.toString)
+    conf.set("mapreduce.task.attempt.id", attempt.toString)
+    conf.setBoolean("mapreduce.task.ismap", true)
+    conf.setInt("mapreduce.task.partition", 0)
+    val ctx = new TaskAttemptContextImpl(conf, attempt)
+    val fs = dir.getFileSystem(conf)
+    fs.mkdirs(dir)
+    val file = new Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+    val writer = factory.newInstance(file.toString, schema, ctx)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    fs.create(new Path(dir, "_SUCCESS"), true).close()
+  }
 
   /** Hive-partitioned directories: Spark's own file index supplies the
     * leaf files and the inferred partition columns (no job below its

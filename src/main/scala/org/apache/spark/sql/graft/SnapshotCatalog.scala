@@ -165,9 +165,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       val sc = evolved.getOrElse(throw new IllegalStateException(
         s"$catalogName.${ident.name()} version $version references no data files " +
           "and records no schema sidecar — cannot plan a scan"))
-      val opts = new CaseInsensitiveStringMap(java.util.Map.of("mergeSchema", "true"))
-      ParquetTable(s"$catalogName.${ident.name()}@v$version", spark, opts,
-        Nil, Some(sc), classOf[ParquetFileFormat])
+      pathFreeTable(s"$catalogName.${ident.name()}@v$version",
+        new CaseInsensitiveStringMap(java.util.Map.of("mergeSchema", "true")), sc)
     } else {
       val opts = new CaseInsensitiveStringMap(
         java.util.Map.of("path", paths.head, "mergeSchema", "true"))
@@ -381,10 +380,24 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           s"$catalogName.${ident.name()} version $version has no files and no " +
             "schema sidecar — cannot plan a scan"))
     }
-    val opts = new CaseInsensitiveStringMap(java.util.Map.of())
-    ParquetTable(s"$catalogName.${ident.name()}@v$version", spark, opts,
-      Nil, Some(schema), classOf[ParquetFileFormat])
+    pathFreeTable(s"$catalogName.${ident.name()}@v$version",
+      new CaseInsensitiveStringMap(java.util.Map.of()), schema)
   }
+
+  /** A delegate over NO files under the declared `schema`. Its file
+    * index is the empty one Spark would build, made without resolving
+    * the empty path list (Spark's path check reports an empty list as
+    * "All paths were ignored" — a WARN on every load of such a table). */
+  private def pathFreeTable(name: String, opts: CaseInsensitiveStringMap,
+      schema: StructType): ParquetTable =
+    new ParquetTable(name, spark, opts, Nil, Some(schema), classOf[ParquetFileFormat]) {
+      override lazy val fileIndex: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
+        import scala.jdk.CollectionConverters._
+        new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(sparkSession, Nil,
+          options.asCaseSensitiveMap.asScala.toMap, userSpecifiedSchema,
+          org.apache.spark.sql.execution.datasources.FileStatusCache.getOrCreate(sparkSession))
+      }
+    }
 
   /** One metadata resolution per loadTable: layout sniff + version
     * listing, threaded to every downstream step (each exists/list is

@@ -74,6 +74,44 @@ class StoreWarningsSpec extends SparkSpec {
     assert(answers.distinct.size == 1 && !answers.head.contains(7L))
   }
 
+  test("conflicting mergeAtTip on both layouts, and tables served from no files, log no ignored-path WARN") {
+    val stores: Seq[VersionedStore] = Seq(
+      new ManifestStore(spark, tmpBase("graft-warn-oc-linked"), "k"),
+      new SnapshotStore(spark, tmpBase("graft-warn-oc-snap"), "k"))
+    val root = java.nio.file.Files.createTempDirectory("graft-warn-cat").toString
+    val cat = "warncat"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val masked = new ManifestStore(spark, s"$root/masked", "k")
+    masked.write((1 to 40).map(k => (k.toLong, s"v$k")).toDF("k", "v"), 1L, numFiles = 4)
+    masked.deleteWhere(1L, 2L, col("k") === 7L, mode = "dv")
+    val logged = warnings(DataSourceLog) {
+      stores.foreach { st =>
+        st match {
+          case m: ManifestStore =>
+            m.write((1 to 40).map(k => (k.toLong, s"base-$k")).toDF("k", "v"), 1L, numFiles = 4)
+          case s: SnapshotStore =>
+            s.writeRangePartitioned((1 to 40).map(k => (k.toLong, s"base-$k")).toDF("k", "v"), 1L, 4)
+        }
+        assert(st.mergeAtTip(Seq((5L, "A"), (6L, "A")).toDF("k", "v")) == 2L)
+        intercept[graft.operators.ConcurrentWriteConflictException](
+          st.mergeAtTip(Seq((5L, "B"), (9L, "B")).toDF("k", "v"), readVersion = Some(1L)))
+        assert(st.versions() == Seq(1L, 2L))
+      }
+      // a table whose version lists no data files, and one whose scan
+      // the store's masked read serves: both plan over a delegate
+      // holding no paths
+      for (layout <- Seq("linked", "snapshot")) {
+        spark.sql(s"CREATE TABLE $cat.empty_$layout (k BIGINT, v STRING) " +
+          s"TBLPROPERTIES('key'='k', 'layout'='$layout')")
+        assert(spark.table(s"$cat.empty_$layout").count() == 0L)
+      }
+      assert(spark.table(s"$cat.masked").count() == 39L)
+    }
+    assert(!logged.exists(_.contains("All paths were ignored")), logged)
+  }
+
   test("a Bloom index that fails to extend onto a merge logs a WARN; the merge publishes and point reads stay exact") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.blockpath.impl", classOf[BlockPathFs].getName)

@@ -46,6 +46,37 @@ class MetadataJobBudgetSpec extends SparkSpec {
     (counter.jobs.get, counter.inference.get)
   }
 
+  /** The physical plan of the SQL execution each job `body` runs
+    * belongs to ("" for a job outside SQL). */
+  private def jobPlans(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    sc.listenerBus.waitUntilEmpty()
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[Long]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)): Unit
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId, s.physicalPlanDescription): Unit
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try { body; sc.listenerBus.waitUntilEmpty() }
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.map(_.flatMap(id => Option(plans.get(id))).getOrElse(""))
+  }
+
+  /** A per-file statistics scan (the aggregation names each file by
+    * `input_file_name()`) and a metadata-sidecar write (into a staged
+    * manifest or a zone map). */
+  private def statsScan(plan: String) = plan.contains("input_file_name")
+  private def sidecarWrite(plan: String) = plan.contains("InsertIntoHadoopFsRelationCommand") &&
+    (plan.contains(".tmp-man-") || plan.contains("/_zonemap"))
+
   private def lineitem(n: Int, tag: String) =
     (1 to n).map(k => (k.toLong, k % 7L, s"$tag-$k", k * 0.5)).toDF("k", "g", "v", "x")
 
@@ -80,5 +111,44 @@ class MetadataJobBudgetSpec extends SparkSpec {
     val delta = (1 to 2000 by 97).map(k => (k.toLong, 0L, s"u-$k", 0.0)).toDF("k", "g", "v", "x")
     assert(jobsOf(st.mergeDelta(1L, 2L, delta): Unit)._2 == 0)
     assert(st.read(2L).filter($"v".startsWith("u-")).count() == 21L)
+  }
+
+  test("landing verbs run no stats-scan or sidecar-write job on either layout; a linked merge runs at most 11 jobs") {
+    // control: the detectors see a stats scan and a sidecar write
+    val probe = java.nio.file.Files.createTempDirectory("graft-budget-ctl").toString
+    lineitem(10, "c").write.parquet(s"$probe/d")
+    val control = jobPlans {
+      spark.read.parquet(s"$probe/d").groupBy(input_file_name().as("file"))
+        .agg(min("k")).coalesce(1).write.parquet(s"$probe/v=1/_zonemap")
+    }
+    assert(control.exists(statsScan) && control.exists(sidecarWrite), control)
+
+    val delta = (1 to 2000 by 97).map(k => (k.toLong, 0L, s"u-$k", 0.0)).toDF("k", "g", "v", "x")
+    val linked = new ManifestStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-budget-meta-l").toString + "/t", "k")
+    val snap = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-budget-meta-s").toString + "/t", "k")
+    val verbs: Seq[(String, () => Unit)] = Seq(
+      "linked write" -> (() => linked.write(lineitem(2000, "a"), 1L, numFiles = 4)),
+      "linked mergeDelta" -> (() => linked.mergeDelta(1L, 2L, delta): Unit),
+      "linked deleteWhere" -> (() =>
+        linked.deleteWhere(2L, 3L, col("k").between(100L, 900L), mode = "cow"): Unit),
+      "linked compact" -> (() => linked.compact(3L, 4L): Unit),
+      "snapshot write" -> (() => snap.writeRangePartitioned(lineitem(2000, "a"), 1L, 4)),
+      "snapshot mergeDelta" -> (() => snap.mergeDelta(1L, 2L, delta): Unit),
+      "snapshot deleteWhere" -> (() =>
+        snap.deleteWhere(2L, 3L, col("k").between(100L, 900L), mode = "cow"): Unit),
+      "snapshot compact" -> (() => snap.compact(3L): Unit))
+    val runs = verbs.map { case (name, verb) => name -> jobPlans(verb()) }.toMap
+    runs.foreach { case (name, plans) =>
+      assert(!plans.exists(statsScan), s"$name ran a stats-scan job")
+      assert(!plans.exists(sidecarWrite), s"$name ran a sidecar-write job")
+    }
+    assert(runs("linked mergeDelta").size <= 11,
+      s"ManifestStore.mergeDelta ran ${runs("linked mergeDelta").size} jobs")
+    // the zone map a publish (here compaction's in-place swap) staged is
+    // served from its rows: the next commit's probe reads it jobless
+    assert(jobPlans(snap.zoneMap(3L).get.collect(): Unit).isEmpty)
+    assert(linked.read(4L).count() == 2000L - 801L && snap.read(3L).count() == 2000L - 801L)
   }
 }
