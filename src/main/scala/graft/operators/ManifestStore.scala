@@ -58,11 +58,15 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   /** File-level stats frame (a local frame) for a set of freshly
     * written pool files, from their footers ([[landedStats]]). `cols`
     * defaults to the construction statsCols (first write); the
-    * version-to-version operators pass [[manifestStatsCols]] instead —
-    * see its rationale. Partition-spec evolution stamps WHICH spec the
-    * files landed under (`spec_id`), so pruning can consult each file's
-    * OWN spec forever; never-evolved stores keep their exact manifest
-    * schema (absent column ≡ spec 0 — the only spec they have). */
+    * version-to-version operators pass [[rewriteStatsCols]] instead:
+    * the stats an EXISTING manifest carries, which the union with its
+    * carried entries needs — correct on a store handle reconstructed
+    * without the original statsCols (the SQL catalog's DML hooks know
+    * only the recorded key column). Partition-spec evolution stamps
+    * WHICH spec the files landed under (`spec_id`), so pruning can
+    * consult each file's OWN spec forever; never-evolved stores keep
+    * their exact manifest schema (absent column ≡ spec 0 — the only
+    * spec they have). */
   private def statsFor(names: Seq[String], cols: Seq[String] = statsCols): DataFrame =
     landedStats(names.map(n => new Path(poolDir, n)), cols)
 
@@ -79,25 +83,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   protected def statsFileName(p: Path): String = {
     val s = p.toUri.toString
     s.substring(s.lastIndexOf('/') + 1)
-  }
-
-  /** The stats columns an EXISTING manifest actually carries — the
-    * ground truth a version-to-version rewrite (mergeDelta /
-    * deleteWhere / compact) must reproduce for its new entries, or the
-    * union with carried-by-reference entries breaks. Deriving from the
-    * manifest (not the construction `statsCols`) makes those operators
-    * correct on a store handle reconstructed WITHOUT the original
-    * statsCols — the SQL catalog's DML hooks, which only know the
-    * keyCol recorded in `_store.json`. */
-  private def manifestStatsCols(man: DataFrame): Seq[String] = {
-    val fromMan = man.columns.toSeq
-      .filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
-    // an EVOLVED store's rewrites must also stat the CURRENT spec's
-    // derived column (new files prune through it) even when the
-    // predecessor manifest predates the evolution
-    val (hist, _) = specHistory
-    if (hist.size <= 1) fromMan
-    else (fromMan ++ storedPartitionBy().filterNot(_ == keyCol)).distinct
   }
 
   /** Write `df` into the pool and publish it as `version`. Files are
@@ -190,43 +175,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       op = "writePartitioned")
   }
 
-  /** Every manifest row's partition tuple as plain value columns
-    * (min==max per the layout invariant, asserted) plus the rest of
-    * the entry — the shared base for the partition verbs. */
-  private def partitionEntries(man: DataFrame, pcs: Seq[String]): DataFrame = {
-    val absent = pcs.filterNot(c => man.columns.contains(s"min_$c"))
-    require(absent.isEmpty,
-      s"version records no stats for partition column(s) ${absent.mkString(", ")} — " +
-        "it predates the CURRENT partition spec; compact to rewrite under it, " +
-        "or read through readSourceRange")
-    val straddlers = man.filter(
-        pcs.map(c => !(col(s"min_$c") <=> col(s"max_$c"))).reduce(_ || _))
-      .limit(1).count()
-    require(straddlers == 0L,
-      "partitioned-store invariant violated: a manifest file spans more than one " +
-        "partition tuple (was data landed outside the store's own write paths?)")
-    man.select(man.columns.map(col) ++ pcs.map(c => col(s"min_$c").as(c)): _*)
-  }
-
-  private def requirePartitioned(op: String): Seq[String] = {
-    val pcs = storedPartitionBy()
-    require(pcs.nonEmpty,
-      s"$op needs a partitioned store — declare partition columns with writePartitioned")
-    pcs
-  }
-
-  /** SHOW PARTITIONS, metadata-only: one row per partition tuple with
-    * its file and physical row counts, straight off the manifest — no
-    * data file opens. (Row counts are physical: a deletion vector's
-    * masked rows still count until [[foldDv]]/[[compact]] folds them.) */
-  def partitions(version: Long): DataFrame = {
-    val pcs = requirePartitioned("partitions")
-    requireUniformSpec(manifest(version), "partitions")
-    partitionEntries(manifest(version), pcs)
-      .groupBy(pcs.map(col): _*)
-      .agg(count(lit(1)).as("n_files"), sum(col("n_rows")).as("n_rows"))
-  }
-
   /** DYNAMIC PARTITION OVERWRITE — Delta's `replaceWhere` / classic
     * `INSERT OVERWRITE ... PARTITION`: every partition tuple PRESENT in
     * `data` is replaced wholesale by `data`'s rows for it; untouched
@@ -254,11 +202,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       .select("file")
     val shared = man.join(sharedFiles, Seq("file"), "left_semi").materialize()
     val stats = landWithStats(arrange(data2, filesPerPartition),
-      manifestStatsCols(man), evolvedSchema(fromVersion))
-    publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
-      evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
-      op = "replaceWhere")
+      rewriteStatsCols(man), evolvedSchema(fromVersion))
     val nShared = manifestFiles(shared).size
+    publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
+      evolvedSchema(fromVersion),
+      dv = carryDv(fromVersion, manifestFiles(man).toSet -- manifestFiles(shared), nShared > 0),
+      op = "replaceWhere")
     (nShared, manifestFiles(man).size - nShared, stats.fold(0)(manifestFiles(_).size))
   }
 
@@ -284,12 +233,14 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val rowsDropped = dropped.agg(coalesce(sum("n_rows"), lit(0L))).head().getLong(0)
     // dropping every partition legitimately empties the table: record
     // the schema sidecar so the zero-file version still plans
+    val keepsFiles = shared.limit(1).count() > 0L
     val schema =
-      if (shared.limit(1).count() == 0L)
+      if (!keepsFiles)
         evolvedSchema(fromVersion).orElse(
           Some(readFilesRaw(fromVersion, dataPaths(fromVersion).take(1)).schema))
       else evolvedSchema(fromVersion)
-    publish(toVersion, shared, commitTs, schema, dv = carryDv(fromVersion, shared),
+    publish(toVersion, shared, commitTs, schema,
+      dv = carryDv(fromVersion, manifestFiles(dropped).toSet, keepsFiles),
       op = "dropPartitions", opParams = SnapshotStore.predSql(pred))
     (manifestFiles(shared).size, dropped.count().toInt, rowsDropped)
   }
@@ -488,6 +439,31 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       op = op, opParams = opParams, statsFrom = Some(fromVersion))
   }
 
+  protected def fileEntries(version: Long): DataFrame = manifest(version)
+
+  /** The rewrite commit on this layout: the landing goes into the pool
+    * ([[landWithStats]] — footer statistics, zero-row files dropped),
+    * the carried files' entries carry by reference, one manifest
+    * publishes; the predecessor's Bloom sidecars extend onto the new
+    * version when files landed. */
+  protected def commitRewrite(fromVersion: Long, toVersion: Long, entries: DataFrame,
+      carried: Seq[String], landing: Option[DataFrame], dv: Option[DataFrame],
+      schema: org.apache.spark.sql.types.StructType, sidecar: Boolean,
+      commitTs: Option[Long], op: String, opParams: String,
+      metrics: (Int, Long) => Map[String, Long]): Int = {
+    val keep = carried.map(fileName).toSet
+    val removed = manifestFiles(entries).filterNot(keep)
+    val shared =
+      if (removed.isEmpty) entries else entries.filter(!col("file").isin(removed: _*))
+    val stats = landing.flatMap(landWithStats(_, rewriteStatsCols(entries)))
+    val nLanded = stats.fold(0)(manifestFiles(_).size)
+    publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
+      Some(schema).filter(_ => sidecar || keep.size + nLanded == 0), dv = dv,
+      op = op, opParams = opParams, metrics = metrics(nLanded, stats.fold(0L)(rowTotal)))
+    if (landing.isDefined) autoExtendBloomIndexes(fromVersion, toVersion)
+    nLanded
+  }
+
   protected def storedSchema(version: Long): org.apache.spark.sql.types.StructType =
     evolvedSchema(version).getOrElse(
       readDataFiles(version, dataPaths(version).take(1)).schema)
@@ -522,7 +498,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   def cloneTo(dstBase: String, fromVersion: Long,
       commitTs: Option[Long] = None): ManifestStore = {
     require(keyCol.nonEmpty, "cloneTo needs the source's key column")
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     val dfs = new Path(dstBase).getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!dfs.exists(new Path(dstBase, "_manifests")),
       s"clone target $dstBase already has versions")
@@ -615,41 +591,30 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       case None => ParquetSchemas.readFiles(spark, paths)
     }
 
-  /** Semantic read: physical rows minus the deletion vector. The DV
-    * is kept metadata-sized by [[deleteWhere]]'s auto policy, so the
-    * mask is one BROADCAST anti-join on (file, row position) — no
-    * shuffle lands on the data path, and a version without a DV pays
-    * nothing. Positions come from the parquet reader's own
-    * `_metadata.row_index`, which is stable because pool files are
-    * immutable. */
+  /** Semantic read: physical rows minus the deletion vector
+    * ([[withPositions]]' broadcast anti-join on the row position — the
+    * mask is kept metadata-sized by the deletion-vector policy, and a
+    * version without one pays nothing). */
   protected def readDataFiles(version: Long, paths: Seq[String]): DataFrame =
     recomputeDerived(dvFrame(version) match {
       case None => readFilesRaw(version, paths)
-      case Some(dv) =>
+      case dv =>
         val sc = evolvedSchema(version)
-        val raw = sc.map(x =>
-            spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-          .getOrElse(ParquetSchemas.readFiles(spark, paths))
-        val masked0 = raw
-          .withColumn("__dv_file",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .join(broadcast(dv.toDF("__dv_file", "__dv_pos")),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-          .drop("__dv_file", "__dv_pos")
-        val masked = sc.map(SnapshotStore.toLogical(masked0, _)).getOrElse(masked0)
-        val fills = sc.map(SnapshotStore.fillValues).getOrElse(Map.empty[String, Any])
-        if (fills.isEmpty) masked else masked.na.fill(fills)
+        withPositions(sc.fold(ParquetSchemas.readFiles(spark, paths))(x =>
+          spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*)), dv, sc)
+          .drop("__f", "__p")
     })
 
   def manifest(version: Long): DataFrame = {
-    require(versions().contains(version), s"version $version does not exist")
+    require(hasVersion(version), s"version $version does not exist")
     // served from the fingerprint-validated metadata cache: one
     // directory listing per access instead of a parquet read + footer
     // parse + one-task collect per consumer (guide §6 metadata costs);
     // retention/vacuum/replicate invalidate by changing the listing
     ManifestCache.read(spark, fs, basePath, version, manifestDir(version))
   }
+
+  protected def hasVersion(version: Long): Boolean = fs.exists(manifestDir(version))
 
   def versions(): Seq[Long] = {
     val root = new Path(s"$basePath/_manifests")
@@ -965,401 +930,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     manifest(version).agg(
       count(lit(1)).as("n_files"), sum(col("n_rows")).as("n_rows"),
       min(col("min_key")).as("min_key"), max(col("max_key")).as("max_key"))
-
-  /** SCD1 upsert of `delta` (+ optional `deleteKeys`) from one version
-    * into the next — the linked twin of SnapshotStore.mergeDelta.
-    * Touched files (key envelope overlaps a touched key) are read,
-    * survivors re-written; UNTOUCHED manifest entries carry by
-    * REFERENCE: zero I/O, zero extra storage. Returns
-    * (filesShared, filesRewritten). */
-  def mergeDelta(fromVersion: Long, toVersion: Long, delta: DataFrame,
-      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 4,
-      commitTs: Option[Long] = None,
-      fill: Map[String, Any] = Map.empty): (Int, Int) = {
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    // schema evolution, SnapshotStore.mergeDelta's contract: a column
-    // the delta ADDS joins via the union-schema sidecar (shared files
-    // are NOT rewritten — old files read null for it); a dropped delta
-    // column reads null on new rows; a same-name TYPE change fails
-    // fast (silent coercion at 100 TB is a corrupted lake).
-    val baseSchema = storedSchema(fromVersion)
-    val baseNames = baseSchema.fieldNames.toSet
-    delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
-      val bt = baseSchema(f.name).dataType
-      require(bt.simpleString == f.dataType.simpleString,
-        s"mergeDelta: column '${f.name}' type changed ${bt.simpleString} -> " +
-          s"${f.dataType.simpleString}; evolving a column's TYPE needs an explicit rewrite")
-    }
-    val newFields = delta.schema.fields.filterNot(f => baseNames(f.name))
-    val basePhys = baseSchema.fields.map(SnapshotStore.physicalName).toSet
-    newFields.foreach(f => require(!basePhys(f.name),
-      s"mergeDelta: new column '${f.name}' collides with a stored PHYSICAL " +
-        "column name (a prior RENAME maps it) - old bytes would answer to two " +
-        "logical columns; compact first to fold the mapping"))
-    require(fill.keySet.subsetOf(newFields.map(_.name).toSet),
-      s"fill keys ${fill.keySet} must be columns this delta introduces " +
-        s"(${newFields.map(_.name).toSet})")
-    val unionSchema = org.apache.spark.sql.types.StructType(
-      baseSchema.fields ++ newFields.map(f =>
-        SnapshotStore.fieldWithFill(f, fill.get(f.name))))
-    val evolved = newFields.nonEmpty || evolvedSchema(fromVersion).isDefined
-    def align(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(unionSchema.fields.toIndexedSeq.map(f =>
-        if (have(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)): _*)
-    }
-    val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
-    // |manifest| key envelopes probed by one pass over the key set
-    val touch = VersionedStore.touchedFiles(touchKeys, man, keyCol)
-    val touched = touch.files
-    val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    val shared = man.filter(!col("file").isin(touched.toSeq: _*))
-    val nShared = manifestFiles(man).count(f => !touched(f))
-    val survivors =
-      if (touched.isEmpty) align(delta).limit(0)
-      else align(readDataFiles(fromVersion,
-          touched.map(n => new Path(poolDir, n).toString).toSeq))
-        .join(touchKeys, Seq(keyCol), "left_anti")
-    val upserts = align(
-      delK.foldLeft(delta)((d, del) => d.join(del, Seq(keyCol), "left_anti")))
-    enforceConstraints(upserts, "mergeDelta")
-    // rewritten files MATERIALIZE every recorded fill (SnapshotStore's
-    // r10 contract: no stored null survives in a filled column — an
-    // explicit-null delta row reads as the default either way)
-    val allFills = SnapshotStore.fillValues(unionSchema)
-    def materialize(df: DataFrame): DataFrame =
-      if (allFills.isEmpty) df else df.na.fill(allFills)
-    val stats = landWithStats(
-      arrange(materialize(survivors.unionByName(upserts)), numNewFiles),
-      manifestStatsCols(man), Some(unionSchema))
-    // operationMetrics (SnapshotStore.mergeDelta's contract): the
-    // matched counts from the rewrite's own counts where they decide
-    // them, else one key-column pass over the touched files; the
-    // upsert count came from the key probe above, so the user's
-    // delta pipeline never re-executes for metrics
-    val (nMatched, nMatchedDel) = mergeMatched(fromVersion, touch,
-      rowTotal(man.filter(col("file").isin(touched.toSeq: _*))),
-      stats.fold(0L)(rowTotal),
-      readDataFiles(fromVersion, touched.map(n => new Path(poolDir, n).toString).toSeq)
-        .select(col(keyCol)))
-    // an all-delete merge can rewrite to nothing: the manifest is then
-    // just the shared entries — and a version that could end up with
-    // ZERO pool files records its schema sidecar so readers (incl. the
-    // SQL catalog) can still plan an empty scan over it
-    val nRewritten = stats.fold(0)(manifestFiles(_).size)
-    publish(toVersion,
-      stats.fold(shared)(unionLocal(shared, _)), commitTs,
-      if (evolved || stats.isEmpty) Some(unionSchema) else None,
-      dv = carryDv(fromVersion, shared), op = "mergeDelta",
-      metrics = Map(
-        "numTargetRowsInserted" -> math.max(0L, touch.upsertKeys - (nMatched - nMatchedDel)),
-        "numTargetRowsUpdated" -> (nMatched - nMatchedDel),
-        "numTargetRowsDeleted" -> nMatchedDel,
-        "numTargetFilesAdded" -> nRewritten.toLong,
-        "numTargetFilesRemoved" -> touched.size.toLong))
-    // an indexed predecessor extends its Bloom sidecars: carried files
-    // keep their filters verbatim, only the landed files scan
-    autoExtendBloomIndexes(fromVersion, toVersion)
-    (nShared, nRewritten)
-  }
-
-  /** Predicate delete (GDPR erasure) — linked twin of
-    * SnapshotStore.deleteWhere: only files CONTAINING a matching row
-    * rewrite; the rest carry by reference. Rows where `pred` is NULL
-    * are KEPT (`!coalesce(pred,false)` — dropping them would be data
-    * loss, not deletion). Returns (filesShared, filesRewritten,
-    * rowsDeleted). */
-  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      numNewFiles: Int = 2, commitTs: Option[Long] = None,
-      mode: String = "auto"): (Int, Int, Long) = {
-    require(Set("auto", "cow", "dv")(mode),
-      s"deleteWhere mode must be auto|cow|dv, got '$mode'")
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    // one narrow match scan serves BOTH strategies: Catalyst prunes to
-    // pred's columns + the metadata struct; emits (file, row position)
-    // per matching VISIBLE row (already-masked rows can't re-match)
-    val sc = evolvedSchema(fromVersion)
-    val paths = dataPaths(fromVersion)
-    val raw = sc.map(x =>
-        spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-      .getOrElse(ParquetSchemas.readFiles(spark, paths))
-    val withPos0 = raw.select(col("*"),
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
-      col("_metadata.row_index").as("__p"))
-    val withPos = sc.map(SnapshotStore.toLogical(withPos0, _)).getOrElse(withPos0)
-    val fills = sc.map(SnapshotStore.fillValues).getOrElse(Map.empty[String, Any])
-    val filled = if (fills.isEmpty) withPos else withPos.na.fill(fills)
-    val visible = dvFrame(fromVersion).map(d =>
-      filled.join(broadcast(d.toDF("__f", "__p")), Seq("__f", "__p"), "left_anti"))
-      .getOrElse(filled)
-    val matchRows = visible.filter(coalesce(pred, lit(false)))
-      .select(col("__f").as("file"), col("__p").as("pos")).materialize()
-    val matching = matchCounts(matchRows)
-    val shared = man.filter(!col("file").isin(matching.keys.toSeq: _*))
-    if (matching.isEmpty) {
-      publish(toVersion, shared, commitTs, evolvedSchema(fromVersion),
-        dv = carryDv(fromVersion, shared), op = "deleteWhere",
-        opParams = SnapshotStore.predSql(pred),
-        metrics = Map("numDeletedRows" -> 0L,
-          "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L))
-      return (manifestFiles(shared).size, 0, 0L)
-    }
-    // strategy: MERGE-ON-READ (deletion vector) when the match is
-    // sparse relative to the files it touches — rewriting a 1 GB file
-    // to drop 3 rows is the 100 TB scale-killer DVs exist to avoid —
-    // COPY-ON-WRITE when the delete is dense (the mask would stop
-    // being metadata-sized and every read would pay it forever)
-    val nMatched = matching.values.sum
-    val touchedPhysRows = rowTotal(man.filter(col("file").isin(matching.keys.toSeq: _*)))
-    val useDv = mode == "dv" ||
-      (mode == "auto" && nMatched * 5 <= touchedPhysRows)
-    if (useDv) {
-      val merged = dvFrame(fromVersion).map(_.unionByName(matchRows))
-        .getOrElse(matchRows)
-      publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-        dv = Some(merged), op = "deleteWhere",
-        opParams = SnapshotStore.predSql(pred),
-        metrics = Map("numDeletedRows" -> nMatched,
-          "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L,
-          "numDeletionVectorsUpdated" -> matching.size.toLong))
-      return (manifestFiles(man).size, 0, nMatched)
-    }
-    val kept = readDataFiles(fromVersion,
-        matching.keys.map(n => new Path(poolDir, n).toString).toSeq)
-      .filter(!coalesce(pred, lit(false)))
-    val stats = landWithStats(arrange(kept, numNewFiles),
-      manifestStatsCols(man), evolvedSchema(fromVersion))
-    // a delete that empties the table records the schema sidecar so
-    // the zero-file version still plans (see mergeDelta)
-    val nRewritten = stats.fold(0)(manifestFiles(_).size)
-    publish(toVersion,
-      stats.fold(shared)(unionLocal(shared, _)), commitTs,
-      if (stats.isEmpty && shared.isEmpty)
-        evolvedSchema(fromVersion).orElse(Some(kept.schema))
-      else evolvedSchema(fromVersion),
-      dv = carryDv(fromVersion, shared), op = "deleteWhere",
-      opParams = SnapshotStore.predSql(pred),
-      metrics = Map("numDeletedRows" -> nMatched,
-        "numAddedFiles" -> nRewritten.toLong,
-        "numRemovedFiles" -> matching.size.toLong))
-    (manifestFiles(shared).size, nRewritten, nMatched)
-  }
-
-  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column): (Int, Int, Long) =
-    deleteWhere(fromVersion, toVersion, pred, mode = "auto")
-
-  /** MERGE-ON-READ MERGE — [[mergeDelta]]'s MoR alternative
-    * (Iceberg's merge-on-read MERGE): superseded rows (existing rows
-    * whose key the delta upserts or deletes) join the DELETION VECTOR
-    * by position while the delta's rows land as NEW pool files — ONE
-    * commit, O(|delta| + mask) writes, NOT ONE existing file
-    * rewritten (mergeDelta re-encodes every touched file; at 100 TB a
-    * 100-row merge into 100 touched 1 GB files pays 100 GB there and
-    * ~nothing here). The trade is read-side: the mask grows until
-    * [[compact]]/[[foldDv]] folds it — the same ledger deletion
-    * vectors already keep. Same-schema only (an evolving merge takes
-    * the CoW path — its union-schema machinery needs the rewrite
-    * hooks); constraints gate the delta. Returns (filesNew,
-    * rowsMasked). */
-  def mergeDeltaMor(fromVersion: Long, toVersion: Long, delta: DataFrame,
-      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 2,
-      commitTs: Option[Long] = None): (Int, Long) = {
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    val sc = evolvedSchema(fromVersion)
-    val baseSchema = sc.getOrElse(
-      readFilesRaw(fromVersion, dataPaths(fromVersion).take(1)).schema)
-    require(delta.schema.fieldNames.sorted.sameElements(baseSchema.fieldNames.sorted),
-      s"mergeDeltaMor is same-schema only (have ${baseSchema.fieldNames.mkString(",")}, " +
-        s"delta ${delta.schema.fieldNames.mkString(",")}) — an evolving merge " +
-        "takes mergeDelta's copy-on-write path")
-    val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    val touchKeys = delK.foldLeft(delta.select(keyCol))(_ unionByName _)
-      .distinct().materialize()
-    // manifest-pruned position scan: only files whose key envelope
-    // holds a touched key open, and only for (key, position)
-    val touched = touchKeys.join(broadcast(man),
-        col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
-      .select("file").distinct().collect().map(_.getString(0)).toSet
-    val matchRows =
-      if (touched.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("file",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("pos",
-              org.apache.spark.sql.types.LongType))))
-      else {
-        val paths = touched.map(n => new Path(poolDir, n).toString).toSeq
-        val raw = sc.map(x => spark.read.schema(x).parquet(paths: _*))
-          .getOrElse(ParquetSchemas.readFiles(spark, paths))
-        val withPos = raw.select(col(keyCol),
-          element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
-          col("_metadata.row_index").as("__p"))
-        val visible = dvFrame(fromVersion).map(d =>
-          withPos.join(broadcast(d.toDF("__f", "__p")), Seq("__f", "__p"), "left_anti"))
-          .getOrElse(withPos)
-        visible.join(touchKeys, Seq(keyCol), "left_semi")
-          .select(col("__f").as("file"), col("__p").as("pos")).materialize()
-      }
-    val upserts = delK.foldLeft(delta)((d, del) =>
-      d.join(del, Seq(keyCol), "left_anti"))
-    enforceConstraints(upserts, "mergeDeltaMor")
-    val stats = landWithStats(arrange(upserts, numNewFiles),
-      manifestStatsCols(man), sc)
-    val nMasked = matchRows.count()
-    val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-      .materialize()
-    val nNew = stats.fold(0)(manifestFiles(_).size)
-    publish(toVersion, stats.fold(man)(unionLocal(man, _)), commitTs, sc,
-      dv = if (mask.limit(1).count() == 0) None else Some(mask),
-      op = "mergeDeltaMor", metrics = Map(
-        "numTargetRowsMasked" -> nMasked,
-        "numTargetFilesAdded" -> nNew.toLong,
-        "numTargetFilesRemoved" -> 0L))
-    autoExtendBloomIndexes(fromVersion, toVersion)
-    (nNew, nMasked)
-  }
-
-  /** Operation-parameters stamp for updateWhere commits. */
-  private def updateOpParams(set: Map[String, Column], pred: Column): String =
-    s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}"
-
-  /** Predicate UPDATE with a MERGE-ON-READ path — the update half of
-    * the deletion-vector design (Delta/Iceberg's MoR updates): in
-    * `mor` mode the matched rows' OLD positions join the deletion
-    * vector while their UPDATED copies land as NEW pool files, all in
-    * ONE commit — a sparse update of a 100 TB table costs
-    * O(|matched rows|) writes plus a metadata-sized mask, never a
-    * file rewrite. `cow` rewrites the touched files instead (the
-    * read-optimized trade: no mask to pay on later reads); `auto`
-    * picks mor when the match is sparse relative to the files it
-    * touches (deleteWhere's policy). The SET map may not touch the
-    * key column (that is a delete+insert, not an update). Reads are
-    * oblivious: the mask hides the old rows, the new files carry the
-    * new ones. Returns (filesShared, filesNew, rowsUpdated). */
-  def updateWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      set: Map[String, Column], numNewFiles: Int = 2,
-      commitTs: Option[Long] = None, mode: String = "auto"): (Int, Int, Long) = {
-    require(Set("auto", "cow", "mor")(mode),
-      s"updateWhere mode must be auto|cow|mor, got '$mode'")
-    require(set.nonEmpty, "updateWhere: empty SET")
-    require(!set.contains(keyCol),
-      s"updateWhere: SET may not touch the key column '$keyCol' — a key change " +
-        "is a delete+insert, route it through mergeDelta")
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    val sc = evolvedSchema(fromVersion)
-    val paths = dataPaths(fromVersion)
-    // the match scan asks for PHYSICAL names (what the bytes answer to
-    // under a metadata-only rename) and projects to logical BEFORE the
-    // predicate — reading the logical schema directly over
-    // physical-named files would yield NULL for a mapped column and
-    // the predicate would silently match nothing (deleteWhere's rule)
-    val raw = sc.map(x =>
-        spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-      .getOrElse(ParquetSchemas.readFiles(spark, paths))
-    val withPos0 = raw.select(col("*"),
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
-      col("_metadata.row_index").as("__p"))
-    val withPos = sc.map(SnapshotStore.toLogical(withPos0, _)).getOrElse(withPos0)
-    val missing = set.keys.filterNot(withPos.columns.contains)
-    require(missing.isEmpty, s"updateWhere: not in the schema: ${missing.mkString(", ")}")
-    val fills = sc.map(SnapshotStore.fillValues).getOrElse(Map.empty[String, Any])
-    val filled = if (fills.isEmpty) withPos else withPos.na.fill(fills)
-    val visible = dvFrame(fromVersion).map(d =>
-      filled.join(broadcast(d.toDF("__f", "__p")), Seq("__f", "__p"), "left_anti"))
-      .getOrElse(filled)
-    val matched = visible.filter(coalesce(pred, lit(false))).materialize()
-    val matchRows = matched.select(col("__f").as("file"), col("__p").as("pos"))
-    val matching = matchCounts(matchRows)
-    if (matching.isEmpty) {
-      publish(toVersion, man, commitTs, sc, dv = dvFrame(fromVersion),
-        op = "updateWhere", opParams = updateOpParams(set, pred),
-        metrics = Map("numUpdatedRows" -> 0L,
-          "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L))
-      return (manifestFiles(man).size, 0, 0L)
-    }
-    val nMatched = matching.values.sum
-    def applySet(df: DataFrame): DataFrame =
-      set.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
-    val touchedPhysRows = rowTotal(man.filter(col("file").isin(matching.keys.toSeq: _*)))
-    val useMor = mode == "mor" ||
-      (mode == "auto" && nMatched * 5 <= touchedPhysRows)
-    if (useMor) {
-      val updated = applySet(matched).drop("__f", "__p")
-      enforceConstraints(updated, "updateWhere")
-      val stats = landWithStats(arrange(updated, numNewFiles),
-        manifestStatsCols(man), sc)
-      val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-      val nNew = stats.fold(0)(manifestFiles(_).size)
-      publish(toVersion, stats.fold(man)(unionLocal(man, _)), commitTs, sc,
-        dv = Some(mask), op = "updateWhere",
-        opParams = updateOpParams(set, pred),
-        metrics = Map("numUpdatedRows" -> nMatched,
-          "numAddedFiles" -> nNew.toLong, "numRemovedFiles" -> 0L))
-      (manifestFiles(man).size, nNew, nMatched)
-    } else {
-      val shared = man.filter(!col("file").isin(matching.keys.toSeq: _*))
-      val touched = readDataFiles(fromVersion,
-        matching.keys.map(n => new Path(poolDir, n).toString).toSeq)
-      val rewritten = applySet(touched.filter(coalesce(pred, lit(false))))
-        .unionByName(touched.filter(!coalesce(pred, lit(false))))
-      enforceConstraints(rewritten, "updateWhere")
-      val stats = landWithStats(arrange(rewritten, numNewFiles),
-        manifestStatsCols(man), sc)
-      val nNew = stats.fold(0)(manifestFiles(_).size)
-      publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs, sc,
-        dv = carryDv(fromVersion, shared), op = "updateWhere",
-        opParams = updateOpParams(set, pred),
-        metrics = Map("numUpdatedRows" -> nMatched,
-          "numAddedFiles" -> nNew.toLong,
-          "numRemovedFiles" -> matching.size.toLong))
-      (manifestFiles(shared).size, nNew, nMatched)
-    }
-  }
-
-  /** FOLD the deletion vector: rewrite ONLY the files the mask names
-    * (reading them masked), carry everything else by reference, and
-    * publish without a DV — the targeted companion to [[compact]],
-    * which folds only SMALL files (a 1 GB file with 3 masked rows
-    * would otherwise stay masked forever, paying the anti-join on
-    * every read). I/O = O(|masked files|). Returns (filesShared,
-    * filesRewritten, rowsDropped); no-op publish when no DV. */
-  def foldDv(fromVersion: Long, toVersion: Long, numNewFiles: Int = 2,
-      commitTs: Option[Long] = None): (Int, Int, Long) = {
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    dvFrame(fromVersion) match {
-      case None =>
-        publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-          op = "foldDv", statsFrom = Some(fromVersion))
-        (manifestFiles(man).size, 0, 0L)
-      case Some(dv) =>
-        val masked = dv.select("file").distinct().collect().map(_.getString(0)).toSet
-        val nDropped = dv.count()
-        val shared = man.filter(!col("file").isin(masked.toSeq: _*))
-        val survivors = readDataFiles(fromVersion,
-          masked.map(n => new Path(poolDir, n).toString).toSeq)
-        val stats = landWithStats(arrange(survivors, numNewFiles),
-          manifestStatsCols(man), evolvedSchema(fromVersion))
-        publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
-          evolvedSchema(fromVersion), op = "foldDv")
-        (manifestFiles(shared).size, stats.fold(0)(manifestFiles(_).size), nDropped)
-    }
-  }
-
-  /** DV entries that survive into a child version: only those naming
-    * files the child still SHARES (a rewritten file materialized its
-    * survivors, so its mask is obsolete). None when nothing carries —
-    * a store that stops using DVs stops paying for them. */
-  private def carryDv(fromVersion: Long, shared: DataFrame): Option[DataFrame] =
-    dvFrame(fromVersion)
-      .map(_.join(shared.select("file"), Seq("file"), "left_semi").materialize())
-      .filter(_.limit(1).count() > 0)
 
   /** Adopt a dir-per-version SnapshotStore chain into this (empty)
     * linked store — the migration path that needs no data rewrite
@@ -1712,155 +1282,19 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         statsFrom = Some(fromVersion))
       return (sizes.length, 0)
     }
-    val shared = man.filter(!col("file").isin(small.toSeq: _*))
     // compaction FOLDS the deletion vector in: the rewrite reads the
-    // masked view, so folded files shed their DV entries for good.
-    // Folded files land under PHYSICAL names (column mapping): the
-    // pool stays name-uniform with the carried files.
+    // masked view, so folded files shed their DV entries for good
     val folded = readDataFiles(fromVersion,
       small.map(n => new Path(poolDir, n).toString).toIndexedSeq)
-    val names = landInPool(arrange(
-      evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(folded, _))
-        .getOrElse(folded),
-      targetFiles))
-    publish(toVersion, unionLocal(shared, statsFor(names, manifestStatsCols(man))),
-      commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
-      op = "compact", metrics = Map("numAddedFiles" -> names.size.toLong,
+    val sc = evolvedSchema(fromVersion).getOrElse(folded.schema)
+    val carried = sizes.map(_._1).filterNot(small.toSet).map(n => new Path(poolDir, n).toString)
+    val nLanded = commitRewrite(fromVersion, toVersion, man, carried,
+      Some(SnapshotStore.toPhysical(arrange(folded, targetFiles), sc)),
+      carryDv(fromVersion, small.toSet, carried.nonEmpty), sc,
+      evolvedSchema(fromVersion).isDefined, commitTs, "compact", "",
+      (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
         "numRemovedFiles" -> small.length.toLong))
-    (sizes.length - small.length, names.size)
-  }
-
-  /** PARTITION-SCOPED compaction — Delta's `OPTIMIZE t WHERE part=x`:
-    * fold sub-`minBytes` fragments ONLY inside the partitions `pred`
-    * selects (a predicate over the declared partition columns,
-    * evaluated per file on the manifest's min==max tuples — metadata
-    * only); every other file, matching-partition-or-not, carries by
-    * reference. At 100 TB you never OPTIMIZE a whole table: the
-    * nightly maintenance of ONE hot day costs O(that day's fragments),
-    * and the untouched partitions' pool entries are bit-identical
-    * across the commit (spec-pinned). Returns (filesCarried,
-    * filesRewritten). */
-  def compactWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      minBytes: Long = 8L << 20, targetFiles: Int = 1,
-      commitTs: Option[Long] = None): (Int, Int) = {
-    val pcs = requirePartitioned("compactWhere")
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    val matched = partitionEntries(man, pcs).filter(coalesce(pred, lit(false)))
-      .select("file").collect().map(_.getString(0)).toSet
-    val pool = poolSizes()
-    val small = matched.toSeq.sorted.filter(n =>
-      pool.getOrElse(n, fs.getFileStatus(new Path(poolDir, n)).getLen) < minBytes)
-    if (small.length <= 1) { // nothing to fold inside the scope
-      publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-        dv = dvFrame(fromVersion), op = "compact",
-        opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
-      return (manifestFiles(man).size, 0)
-    }
-    val shared = man.filter(!col("file").isin(small.toSeq: _*))
-    // the fold reads MASKED (DV entries for rewritten files retire) and
-    // lands physical-named (column mapping) — [[compact]]'s contract,
-    // scoped; arrange keeps one partition tuple per file
-    val folded = readDataFiles(fromVersion,
-      small.map(n => new Path(poolDir, n).toString))
-    val names = landInPool(arrange(
-      evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(folded, _))
-        .getOrElse(folded),
-      targetFiles))
-    publish(toVersion, unionLocal(shared, statsFor(names, manifestStatsCols(man))),
-      commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
-      op = "compact", opParams = SnapshotStore.predSql(pred),
-      metrics = Map("numAddedFiles" -> names.size.toLong,
-        "numRemovedFiles" -> small.length.toLong))
-    (manifestFiles(man).size - small.length, names.size)
-  }
-
-  /** PARTITION-SCOPED Z-ORDER — Iceberg's rewrite_data_files with a
-    * row filter: re-cluster ONLY the partitions `pred` selects on
-    * `zCols`' Morton order (one tuple per file preserved, each
-    * partition's files covering contiguous z ranges); everything else
-    * carries by reference. Content-invariant: clustering moves rows
-    * BETWEEN files, never changes them. Returns (filesCarried,
-    * filesRewritten). */
-  def zorderWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      zCols: Seq[String], numFiles: Int = 4,
-      commitTs: Option[Long] = None): (Int, Int) = {
-    val pcs = requirePartitioned("zorderWhere")
-    requireFreeVersion(toVersion)
-    require(zCols.nonEmpty, "zorderWhere: no z columns")
-    val overlap = zCols.filter(pcs.contains)
-    require(overlap.isEmpty,
-      s"zorderWhere: ${overlap.mkString(", ")} are partition columns — constant " +
-        "within every file already; z-order the finer dimensions instead")
-    val man = manifest(fromVersion).materialize()
-    val matched = partitionEntries(man, pcs).filter(coalesce(pred, lit(false)))
-      .select("file").collect().map(_.getString(0)).toSet
-    if (matched.isEmpty) {
-      publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-        dv = dvFrame(fromVersion), op = "zorder",
-        opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
-      return (manifestFiles(man).size, 0)
-    }
-    val shared = man.filter(!col("file").isin(matched.toSeq: _*))
-    val rows = readDataFiles(fromVersion,
-      matched.toSeq.sorted.map(n => new Path(poolDir, n).toString))
-    val zc = ZOrder.zColumn(rows, zCols)
-    val arranged = rows.withColumn("__z", zc)
-      .repartitionByRange(numFiles, (pcs.map(col) :+ col("__z")): _*)
-      .sortWithinPartitions((pcs.map(col) :+ col("__z")): _*)
-      .drop("__z")
-    val names = landInPool(
-      evolvedSchema(fromVersion).map(SnapshotStore.toPhysical(arranged, _))
-        .getOrElse(arranged))
-    publish(toVersion, unionLocal(shared, statsFor(names, manifestStatsCols(man))),
-      commitTs, evolvedSchema(fromVersion), dv = carryDv(fromVersion, shared),
-      op = "zorder", opParams = SnapshotStore.predSql(pred))
-    (manifestFiles(man).size - matched.size, names.size)
-  }
-
-  /** PARTITION-SCOPED DV fold — [[foldDv]] restricted to the masked
-    * files inside the partitions `pred` selects: those rewrite (masked
-    * rows drop for good), every other file carries by reference WITH
-    * its mask intact. The targeted erasure-maintenance verb: folding
-    * one tenant's partition never rewrites — or even lists — the
-    * rest. Returns (filesCarried, filesRewritten, rowsDropped). */
-  def foldDvWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      numNewFiles: Int = 2, commitTs: Option[Long] = None): (Int, Int, Long) = {
-    val pcs = requirePartitioned("foldDvWhere")
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    dvFrame(fromVersion) match {
-      case None =>
-        publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-          op = "foldDv", opParams = SnapshotStore.predSql(pred),
-          statsFrom = Some(fromVersion))
-        (manifestFiles(man).size, 0, 0L)
-      case Some(dv0) =>
-        val dv = dv0.materialize()
-        val matched = partitionEntries(man, pcs).filter(coalesce(pred, lit(false)))
-          .select("file").collect().map(_.getString(0)).toSet
-        val masked = dv.select("file").distinct().collect().map(_.getString(0))
-          .filter(matched).toSet
-        if (masked.isEmpty) {
-          publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-            dv = Some(dv), op = "foldDv",
-            opParams = SnapshotStore.predSql(pred), statsFrom = Some(fromVersion))
-          return (manifestFiles(man).size, 0, 0L)
-        }
-        val maskedDf = nameFrame(masked)
-        val nDropped = dv.join(maskedDf, Seq("file"), "left_semi").count()
-        val shared = man.join(maskedDf, Seq("file"), "left_anti")
-        val survivors = readDataFiles(fromVersion,
-          masked.toSeq.sorted.map(n => new Path(poolDir, n).toString))
-        val stats = landWithStats(arrange(survivors, numNewFiles),
-          manifestStatsCols(man), evolvedSchema(fromVersion))
-        val keep = dv.join(maskedDf, Seq("file"), "left_anti").materialize()
-        publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
-          evolvedSchema(fromVersion),
-          dv = if (keep.limit(1).count() == 0) None else Some(keep),
-          op = "foldDv", opParams = SnapshotStore.predSql(pred))
-        (manifestFiles(shared).size, stats.fold(0)(manifestFiles(_).size), nDropped)
-    }
+    (carried.size, nLanded)
   }
 
   /** AUTO-MAINTENANCE hook — the per-micro-batch guard the streaming

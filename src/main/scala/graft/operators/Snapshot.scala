@@ -445,12 +445,7 @@ object Snapshot {
           writeV1(s, s"$base/$t", t.endsWith("_snap"), ord.filter(k % 2 === 0))
           st.mergeDelta(1L, 2L, d2, commitTs = Some(2000L)): Unit
           st.mergeDelta(2L, 3L, d3, commitTs = Some(3000L)): Unit
-          st match {
-            case sn: SnapshotStore =>
-              sn.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
-            case lk: ManifestStore =>
-              lk.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
-          }
+          st.deleteWhere(3L, 4L, k % 30 === 0, commitTs = Some(4000L)): Unit
         }
         val call = s"CALL $cat.retention_hours('$t', 1, ${3000L + hour})"
         val (refused, nPruned) =
@@ -924,12 +919,8 @@ object Snapshot {
         def st = VersionedStore.open(s, s"$base/$layout", "o_orderkey")
         if (!st.versions().contains(1L))
           writeV1(s, s"$base/$layout", layout == "ma_snap", v1)
-        if (!st.versions().contains(2L)) st match {
-          case sn: SnapshotStore =>
-            sn.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
-          case lk: ManifestStore =>
-            lk.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
-        }
+        if (!st.versions().contains(2L))
+          st.mergeDeltaMor(1L, 2L, morDelta, commitTs = Some(2000L)): Unit
         if (!st.versions().contains(3L))
           st.mergeDelta(2L, 3L, cowDelta, commitTs = Some(3000L)): Unit
         if (!st.versions().contains(4L))
@@ -1596,12 +1587,8 @@ object Snapshot {
           writeV1(s, s"$base/$layout", layout == "ho_snap", v1)
         if (!st.versions().contains(2L))
           st.mergeDelta(1L, 2L, delta, commitTs = Some(2000L)): Unit
-        if (!st.versions().contains(3L)) st match {
-          case sn: SnapshotStore =>
-            sn.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
-          case lk: ManifestStore =>
-            lk.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
-        }
+        if (!st.versions().contains(3L))
+          st.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
         if (!st.versions().contains(4L)) st match {
           case sn: SnapshotStore => sn.restoreVersion(3L, 4L, commitTs = Some(4000L))
           case lk: ManifestStore =>

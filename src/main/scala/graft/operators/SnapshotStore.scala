@@ -669,7 +669,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     schema.foreach(Sidecars.writeSchema(fs, tmp, _))
     val landedZm = fresh.orElse(for {
       names <- landed.filter(_.nonEmpty)
-      cols <- zmCols.orElse(zm.map(zmStatsColsOf))
+      cols <- zmCols.orElse(zm.map(statsColsOf))
     } yield zmNewStats(tmp, names, cols))
     val staged = (zm ++ landedZm).reduceOption(unionLocal)
       .map(z => z.schema -> stageZoneMap(tmp, toVersion, z))
@@ -739,16 +739,38 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   private def partNames(dir: Path): Set[String] =
     fs.listStatus(dir).map(_.getPath.getName).filter(_.startsWith("part-")).toSet
 
-  /** The source's DV entries that survive into a child carrying the
-    * files named in `keep` (a rewritten file materialized its
-    * survivors, so its entries drop); None when none survive. */
-  private def carryDv(fromVersion: Long, keep: Set[String]): Option[DataFrame] =
-    dvFrame(fromVersion)
-      .map(_.filter(col("file").isin(keep.toSeq: _*)).materialize())
-      .filter(_.limit(1).count() > 0)
-
   protected def storedSchema(version: Long): org.apache.spark.sql.types.StructType =
     evolvedSchema(version).getOrElse(ParquetSchemas.schema(spark, dir(version)))
+
+  /** The zone map, or for a version without one its files' footers. */
+  protected def fileEntries(version: Long): DataFrame =
+    zoneMap(version).getOrElse(landedStats(dataFiles(version), Nil))
+
+  /** The rewrite commit on this layout: the landing goes into the
+    * staged version dir ([[landFlat]], which keeps a zero-row file: it
+    * carries the schema) with zone-map rows from its footers, every
+    * carried data file byte-copies in under its own name with its
+    * zone-map row, one rename publishes. A source without a zone map
+    * publishes none. */
+  protected def commitRewrite(fromVersion: Long, toVersion: Long, entries: DataFrame,
+      carried: Seq[String], landing: Option[DataFrame], dv: Option[DataFrame],
+      schema: org.apache.spark.sql.types.StructType, sidecar: Boolean,
+      commitTs: Option[Long], op: String, opParams: String,
+      metrics: (Int, Long) => Map[String, Long]): Int = {
+    val zm = Some(entries).filter(_ => fs.exists(new Path(zmapDir(fromVersion), "_SUCCESS")))
+    val tmp = stage(toVersion)
+    val names = landing.map(landFlat(_, tmp))
+    val landed = names.filter(_.nonEmpty).map(zmNewStats(tmp, _,
+      zm.fold(Seq.empty[String])(statsColsOf)))
+    val nLanded = names.fold(0)(_.size)
+    publish(toVersion, tmp, names, carried.map(new Path(_)),
+      zm = zm.map(carriedZoneMap(_, fromVersion, toVersion, carried.map(fileName).toSet)),
+      dv = dv, schema = Some(schema).filter(_ => sidecar || carried.size + nLanded == 0),
+      commitTs = commitTs, op = op, opParams = opParams,
+      metrics = metrics(nLanded, landed.fold(0L)(rowTotal)),
+      fresh = landed.filter(_ => zm.isDefined))
+    nLanded
+  }
 
   /** The carry publish as a byte-carry: every data file, the deletion
     * vector's directory and the zone map's rows copy into `toVersion`
@@ -781,7 +803,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   def cloneTo(dstBase: String, fromVersion: Long,
       commitTs: Option[Long] = None): SnapshotStore = {
     require(keyCol.nonEmpty, "cloneTo needs the source's key column")
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     val conf = spark.sparkContext.hadoopConfiguration
     val dfs = new Path(dstBase).getFileSystem(conf)
     val dst = new SnapshotStore(spark, dstBase, keyCol)
@@ -1198,23 +1220,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       commitTs = commitTs, op = "writePartitioned")
   }
 
-  /** Zone-map rows with the partition tuple as plain value columns
-    * (min==max per the layout invariant, asserted). */
-  private def partitionEntries(zm: DataFrame, pcs: Seq[String]): DataFrame = {
-    val absent = pcs.filterNot(c => zm.columns.contains(s"min_$c"))
-    require(absent.isEmpty,
-      s"version records no stats for partition column(s) ${absent.mkString(", ")} — " +
-        "it predates the CURRENT partition spec; compact to rewrite under it, " +
-        "or read through readSourceRange")
-    val straddlers = zm.filter(
-        pcs.map(c => !(col(s"min_$c") <=> col(s"max_$c"))).reduce(_ || _))
-      .limit(1).count()
-    require(straddlers == 0L,
-      "partitioned-store invariant violated: a version file spans more than one " +
-        "partition tuple (was data landed outside the store's own write paths?)")
-    zm.select(zm.columns.map(col) ++ pcs.map(c => col(s"min_$c").as(c)): _*)
-  }
-
   private def requirePartitionedZm(op: String, version: Long): (Seq[String], DataFrame) = {
     val pcs = storedPartitionBy()
     require(pcs.nonEmpty,
@@ -1222,17 +1227,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     val zm = zoneMap(version).getOrElse(throw new IllegalStateException(
       s"$op needs version $version's zone map (writePartitioned builds it)"))
     (pcs, zm)
-  }
-
-  /** SHOW PARTITIONS, metadata-only — [[ManifestStore.partitions]]'s
-    * twin off the zone map (physical row counts; DV-masked rows still
-    * count until folded). */
-  def partitions(version: Long): DataFrame = {
-    val (pcs, zm) = requirePartitionedZm("partitions", version)
-    requireUniformSpec(zm, "partitions")
-    partitionEntries(zm, pcs)
-      .groupBy(pcs.map(col): _*)
-      .agg(count(lit(1)).as("n_files"), sum(col("n_rows")).as("n_rows"))
   }
 
   /** DYNAMIC PARTITION OVERWRITE — [[ManifestStore.replaceWhere]]'s
@@ -1267,7 +1261,9 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     // zone map: carried entries re-home; only the new files scan
     publish(toVersion, tmp, Some(newNames), carriedParts,
       zm = Some(carriedZoneMap(zm, fromVersion, toVersion, sharedNames)),
-      dv = carryDv(fromVersion, sharedNames), schema = sc, commitTs = commitTs,
+      dv = carryDv(fromVersion, allParts.map(_.getName).toSet -- sharedNames,
+        carriedParts.nonEmpty),
+      schema = sc, commitTs = commitTs,
       op = "replaceWhere")
     (carriedParts.length, allParts.length - carriedParts.length, newNames.size)
   }
@@ -1299,160 +1295,10 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       else evolvedSchema(fromVersion)
     publish(toVersion, stage(toVersion), None, survivors,
       zm = Some(carriedZoneMap(zm, fromVersion, toVersion, kept)),
-      dv = carryDv(fromVersion, kept), schema = schema, commitTs = commitTs,
+      dv = carryDv(fromVersion, droppedNames, survivors.nonEmpty), schema = schema,
+      commitTs = commitTs,
       op = "dropPartitions")
     (survivors.length, droppedNames.size, rowsDropped)
-  }
-
-  /** Per-file stat columns the version's zone map records (physical
-    * names) — what scoped rewrites must reproduce for new entries. */
-  private def zmStatsColsOf(zm: DataFrame): Seq[String] =
-    zm.columns.toSeq.filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
-
-  /** Names of the version's files inside the partitions `pred`
-    * selects — evaluated on the zone map's min==max partition tuples,
-    * metadata only. */
-  private def matchedPartitionFiles(zm: DataFrame, pcs: Seq[String],
-      pred: Column): Set[String] =
-    partitionEntries(zm, pcs).filter(coalesce(pred, lit(false)))
-      .select(regexp_extract(col("file"), "[^/]+$", 0).as("name"))
-      .collect().map(_.getString(0)).toSet
-
-  /** Shared landing for the scoped maintenance verbs: land `rewrite`
-    * (physical-named, hive split one-tuple-per-file) beside the
-    * byte-carried `carried` files, their DV entries and zone-map rows.
-    * Returns new file names. */
-  private def publishScopedRewrite(fromVersion: Long, toVersion: Long,
-      carried: Seq[Path], rewrite: DataFrame, zm: DataFrame,
-      commitTs: Option[Long], op: String, opParams: String): Set[String] = {
-    val tmp = stage(toVersion)
-    val sc = evolvedSchema(fromVersion)
-    val newNames = landFlat(
-      sc.map(SnapshotStore.toPhysical(rewrite, _)).getOrElse(rewrite), tmp)
-    val carriedNames = carried.map(_.getName).toSet
-    val nDropped = zm
-      .select(regexp_extract(col("file"), "[^/]+$", 0).as("name"))
-      .collect().map(_.getString(0)).count(n => !carriedNames(n))
-    publish(toVersion, tmp, Some(newNames), carried,
-      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, carriedNames)),
-      dv = carryDv(fromVersion, carriedNames), schema = sc, commitTs = commitTs,
-      op = op, opParams = opParams, metrics = Map(
-        "numAddedFiles" -> newNames.size.toLong,
-        "numRemovedFiles" -> nDropped.toLong))
-    newNames
-  }
-
-  /** PARTITION-SCOPED compaction — Delta's `OPTIMIZE t WHERE part=x`
-    * on this layout: fragments under `minBytes` INSIDE the partitions
-    * `pred` selects fold into consolidated files; every other file
-    * byte-carries under its own basename (the layout's carry
-    * contract — names+sizes bit-identical, spec-pinned). Published as
-    * a NEW version; history intact. Returns (filesCarried,
-    * filesRewritten). */
-  def compactWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      minBytes: Long = 8L << 20, commitTs: Option[Long] = None): (Int, Int) = {
-    val (pcs, zm0) = requirePartitionedZm("compactWhere", fromVersion)
-    requireFreeVersion(toVersion)
-    val zm = zm0.materialize()
-    val matched = matchedPartitionFiles(zm, pcs, pred)
-    val allParts = fs.listStatus(new Path(dir(fromVersion)))
-      .filter(_.getPath.getName.startsWith("part-")).toSeq
-    val small = allParts
-      .filter(f => matched(f.getPath.getName) && f.getLen < minBytes)
-      .map(_.getPath)
-    if (small.size <= 1) { // nothing to fold inside the scope
-      restoreVersion(fromVersion, toVersion, commitTs,
-        op = "compact", opParams = SnapshotStore.predSql(pred))
-      return (allParts.size, 0)
-    }
-    val smallNames = small.map(_.getName).toSet
-    val carried = allParts.map(_.getPath).filterNot(p => smallNames(p.getName))
-    // masked read: the fold retires DV entries for rewritten files.
-    // Repartition on the partition tuple so each scoped tuple folds to
-    // ONE file (landFlat's hive split is per task per tuple — without
-    // the shuffle, N input fragments land as N output fragments)
-    val folded0 = readDataFiles(fromVersion, small.map(_.toString))
-    val folded = SnapshotStore.derivePartitionCols(folded0,
-        storedPartitionSpecs().filter(sp =>
-          sp.transform.isDefined && !folded0.columns.contains(sp.name)))
-      .repartition(pcs.map(col): _*)
-    val newNames = publishScopedRewrite(fromVersion, toVersion, carried,
-      folded, zm, commitTs, "compact", SnapshotStore.predSql(pred))
-    (carried.size, newNames.size)
-  }
-
-  /** PARTITION-SCOPED Z-ORDER — re-cluster ONLY the partitions `pred`
-    * selects on `zCols`' Morton order; everything else byte-carries.
-    * Content-invariant (rows move between files, never change).
-    * Returns (filesCarried, filesRewritten). */
-  def zorderWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      zCols: Seq[String], numFiles: Int = 4,
-      commitTs: Option[Long] = None): (Int, Int) = {
-    val (pcs, zm0) = requirePartitionedZm("zorderWhere", fromVersion)
-    requireFreeVersion(toVersion)
-    require(zCols.nonEmpty, "zorderWhere: no z columns")
-    val overlap = zCols.filter(pcs.contains)
-    require(overlap.isEmpty,
-      s"zorderWhere: ${overlap.mkString(", ")} are partition columns — constant " +
-        "within every file already; z-order the finer dimensions instead")
-    val zm = zm0.materialize()
-    val matched = matchedPartitionFiles(zm, pcs, pred)
-    val allParts = dataFiles(fromVersion)
-    if (matched.isEmpty) {
-      restoreVersion(fromVersion, toVersion, commitTs,
-        op = "zorder", opParams = SnapshotStore.predSql(pred))
-      return (allParts.size, 0)
-    }
-    val (touched, carried) = allParts.partition(p => matched(p.getName))
-    val rows0 = readDataFiles(fromVersion, touched.map(_.toString))
-    // a CREATE TABLE chain's evolved schema may hide a derived
-    // temporal column the range split needs — recompute it (pure
-    // function of its source; landFlat re-derives identically)
-    val rows = SnapshotStore.derivePartitionCols(rows0,
-      storedPartitionSpecs().filter(sp =>
-        sp.transform.isDefined && !rows0.columns.contains(sp.name)))
-    val zc = ZOrder.zColumn(rows, zCols)
-    val arranged = rows.withColumn("__z", zc)
-      .repartitionByRange(numFiles, (pcs.map(col) :+ col("__z")): _*)
-      .sortWithinPartitions((pcs.map(col) :+ col("__z")): _*)
-      .drop("__z")
-    val newNames = publishScopedRewrite(fromVersion, toVersion, carried,
-      arranged, zm, commitTs, "zorder", SnapshotStore.predSql(pred))
-    (carried.size, newNames.size)
-  }
-
-  /** PARTITION-SCOPED DV fold — [[foldDv]] restricted to the masked
-    * files inside `pred`'s partitions: those rewrite (masked rows drop
-    * for good); every other file byte-carries WITH its mask intact.
-    * Returns (filesCarried, filesRewritten, rowsDropped). */
-  def foldDvWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      commitTs: Option[Long] = None): (Int, Int, Long) = {
-    val (pcs, zm0) = requirePartitionedZm("foldDvWhere", fromVersion)
-    requireFreeVersion(toVersion)
-    val zm = zm0.materialize()
-    val allParts = dataFiles(fromVersion)
-    dvFrame(fromVersion) match {
-      case None =>
-        restoreVersion(fromVersion, toVersion, commitTs,
-          op = "foldDv", opParams = SnapshotStore.predSql(pred))
-        (allParts.size, 0, 0L)
-      case Some(dv0) =>
-        val dv = dv0.materialize()
-        val matched = matchedPartitionFiles(zm, pcs, pred)
-        val masked = dv.select("file").distinct().collect().map(_.getString(0))
-          .filter(matched).toSet
-        if (masked.isEmpty) {
-          restoreVersion(fromVersion, toVersion, commitTs,
-            op = "foldDv", opParams = SnapshotStore.predSql(pred))
-          return (allParts.size, 0, 0L)
-        }
-        val nDropped = dv.filter(col("file").isin(masked.toSeq: _*)).count()
-        val (touched, carried) = allParts.partition(p => masked(p.getName))
-        val survivors = readDataFiles(fromVersion, touched.map(_.toString))
-        val newNames = publishScopedRewrite(fromVersion, toVersion, carried,
-          survivors, zm, commitTs, "foldDv", SnapshotStore.predSql(pred))
-        (carried.size, newNames.size, nDropped)
-    }
   }
 
   /** Delta-driven restore read: rows of `version` whose key appears in
@@ -1485,6 +1331,9 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   /** Committed versions only: a `v=N` directory counts only if its
     * `_SUCCESS` marker exists (guards against partial dirs created by
     * external writers or pre-atomic layouts). */
+  protected def hasVersion(version: Long): Boolean =
+    fs.exists(new Path(dir(version), "_SUCCESS"))
+
   def versions(): Seq[Long] = {
     val base = new Path(basePath)
     if (!fs.exists(base)) Seq.empty
@@ -1494,46 +1343,32 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .sorted
   }
 
-  /** Read `paths` (files or the version dir) with (file, position)
-    * captured as regular columns `__f`/`__p` and the version's DV
-    * applied — the masked-scan building block under every semantic
-    * read and rewrite. Positions come from the parquet reader's own
-    * `_metadata.row_index`; the DV broadcasts (kept metadata-sized by
-    * deleteWhere's auto policy), so no shuffle lands on the data. */
-  private def maskedScanWithPos(version: Long, paths: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    // the scan asks for PHYSICAL names (what the bytes answer to under
-    // a metadata-only rename) and projects to logical after the mask —
-    // the column-mapping read contract, a zero-cost alias projection
-    val raw = schema.map(x =>
-        spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-      .getOrElse(ParquetSchemas.read(spark, paths: _*))
-    val withPos = raw.select(col("*"),
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
-      col("_metadata.row_index").as("__p"))
-    val masked0 = dvFrame(version).map(d =>
-      withPos.join(broadcast(d.toDF("__f", "__p")), Seq("__f", "__p"), "left_anti"))
-      .getOrElse(withPos)
-    schema.map(SnapshotStore.toLogical(masked0, _)).getOrElse(masked0)
-  }
-
   /** `paths` as stored, without the version's DV: read under the
     * physical names and projected to logical. */
   private def unmasked(paths: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema.map(x => SnapshotStore.toLogical(
-        spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*), x))
-      .getOrElse(ParquetSchemas.read(spark, paths: _*))
+    schema.fold(physical(paths, None))(x => SnapshotStore.toLogical(physical(paths, schema), x))
 
-  private def masked(version: Long, paths: Seq[String],
+  /** `paths` under their stored names: `schema`'s physical names, or
+    * the files' own schema. */
+  private def physical(paths: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    if (dvFrame(version).isEmpty) unmasked(paths, schema)
-    else maskedScanWithPos(version, paths, schema).drop("__f", "__p")
+    schema.fold(ParquetSchemas.read(spark, paths: _*))(x =>
+      spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
 
-  def read(version: Long): DataFrame = recomputeDerived(evolvedSchema(version) match {
-    case Some(sc) => applyFills(masked(version, Seq(dir(version)), Some(sc)), sc)
-    case None => masked(version, Seq(dir(version)), None)
-  })
+  /** `paths` read as `version` reads them under its evolved schema:
+    * [[unmasked]] with the recorded fills, or through
+    * [[withPositions]]' position mask when the version has a deletion
+    * vector. */
+  private def masked(version: Long, paths: Seq[String]): DataFrame = {
+    val schema = evolvedSchema(version)
+    recomputeDerived(dvFrame(version) match {
+      case None => schema.fold(unmasked(paths, None))(sc => applyFills(unmasked(paths, schema), sc))
+      case dv => withPositions(physical(paths, schema), dv, schema).drop("__f", "__p")
+    })
+  }
+
+  def read(version: Long): DataFrame = masked(version, Seq(dir(version)))
 
   /** One version's checkpoint row REBUILT from its dir — the
     * self-heal / publish-time unit: commit ts from the sidecar (or
@@ -1573,10 +1408,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * (if any) — the shared reader under every pruned-file path, so a
     * zone-map-pruned restore sees the same columns a full read does. */
   protected def readDataFiles(version: Long, files: Seq[String]): DataFrame =
-    recomputeDerived(evolvedSchema(version) match {
-      case Some(sc) => applyFills(masked(version, files, Some(sc)), sc)
-      case None => masked(version, files, None)
-    })
+    masked(version, files)
 
   /** The version's data file paths — a metadata-only listing. File
     * identity is the incremental-maintenance contract: [[mergeDelta]]
@@ -1632,430 +1464,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     Snapshot.validateCopy(src, dst, partCols, col(keyCol), fp)
   }
 
-  /** Copy-on-write merge — publish `toVersion` by merging an upsert
-    * `delta` (full-schema rows, replace-by-key) and optional
-    * `deleteKeys` into a range-partitioned `fromVersion`, REWRITING
-    * ONLY the files whose key range the delta actually touches.
-    * Untouched files are copied byte-identical (same basename) into the
-    * new version dir and their zone-map rows carry over with just the
-    * path prefix remapped — no rescan. At 100 TB this is the difference
-    * between "daily merge rewrites the lake" and "daily merge rewrites
-    * the 0.1% of files the delta's keys land in": a full
-    * [[Snapshot.mergeUpsert]]+write costs O(|base|) I/O every day,
-    * this costs O(|touched files| + |delta|).
-    *
-    * Mechanics:
-    *  1. touched = files whose zone-map [min,max] contains any
-    *     upserted/deleted key — ONE pass over the (small) key set
-    *     probing the zone map's envelopes ([[VersionedStore.touchedFiles]]);
-    *  2. rewritten content = touched files' rows minus replaced/deleted
-    *     keys, plus the delta upserts (minus deletes) — delta keys
-    *     landing outside every existing file range (appends) are
-    *     written here too;
-    *  3. publish: Spark writes the rewritten subset to a `.tmp-` dir,
-    *     untouched files are byte-copied in, one atomic rename makes
-    *     it `v=<toVersion>` (crash mid-copy leaves only an unlisted
-    *     `.tmp-` dir — same guarantee as [[write]]);
-    *  4. zone map: untouched rows carried over (path remapped), ONLY
-    *     the new files are scanned for stats — incremental maintenance
-    *     in O(|rewritten|).
-    *
-    * SCHEMA EVOLUTION ([[Snapshot.mergeUpsert]]'s `allowMissingColumns`
-    * semantics, CoW-shaped): a column the delta ADDS joins the
-    * version's schema — carried files are NOT rewritten; the evolved
-    * union schema persists as a `_schema.json` sidecar and every read
-    * path supplies it, so old files yield null (or the recorded `fill`
-    * default) for the new column. A column the delta DROPS keeps its
-    * stored values on survivor rows and reads null on delta rows. A
-    * same-name column with a DIFFERENT type fails fast — silent
-    * coercion at 100 TB is a corrupted lake. `fill` keys must be
-    * columns this delta introduces; defaults apply uniformly at read
-    * time (see [[applyFills]]).
-    *
-    * Returns (filesCopied, filesRewritten). */
-  def mergeDelta(fromVersion: Long, toVersion: Long, delta: DataFrame,
-      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 4,
-      commitTs: Option[Long] = None,
-      fill: Map[String, Any] = Map.empty): (Int, Int) = {
-    // one listing serves the base schema's footer pick and the file
-    // split below; a missing version falls to Spark's own error
-    val srcDir = new Path(dir(fromVersion))
-    val srcListing = if (fs.exists(srcDir)) fs.listStatus(srcDir).toSeq else Seq.empty
-    val baseSchema = evolvedSchema(fromVersion)
-      .orElse(ParquetSchemas.ofFiles(spark, srcListing))
-      .getOrElse(spark.read.parquet(dir(fromVersion)).schema)
-    val baseNames = baseSchema.fieldNames.toSet
-    delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
-      val bt = baseSchema(f.name).dataType
-      // simpleString comparison ignores nullability flags (an
-      // array<float> whose containsNull differs is the same type)
-      require(bt.simpleString == f.dataType.simpleString,
-        s"mergeDelta: column '${f.name}' type changed ${bt.simpleString} -> " +
-          s"${f.dataType.simpleString}; evolving a column's TYPE needs an explicit rewrite")
-    }
-    val newFields = delta.schema.fields.filterNot(f => baseNames(f.name))
-    val basePhys = baseSchema.fields.map(SnapshotStore.physicalName).toSet
-    newFields.foreach(f => require(!basePhys(f.name),
-      s"mergeDelta: new column '${f.name}' collides with a stored PHYSICAL " +
-        "column name (a prior RENAME maps it) - old bytes would answer to two " +
-        "logical columns; compact first to fold the mapping"))
-    require(fill.keySet.subsetOf(newFields.map(_.name).toSet),
-      s"fill keys ${fill.keySet} must be columns this delta introduces " +
-        s"(${newFields.map(_.name).toSet})")
-    val unionSchema = org.apache.spark.sql.types.StructType(
-      baseSchema.fields ++ newFields.map(f =>
-        SnapshotStore.fieldWithFill(f, fill.get(f.name))))
-    val evolved = newFields.nonEmpty || evolvedSchema(fromVersion).isDefined
-    // align any frame to the union schema: present columns pass
-    // through, absent ones read null (old files / dropped delta cols)
-    def align(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(unionSchema.fields.toIndexedSeq.map(f =>
-        if (have(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)): _*)
-    }
-    // the zone map is |files| rows on the driver: the probe ships its
-    // envelopes and the carried half of the new map filters it there
-    val zm = zoneMap(fromVersion).getOrElse(throw new IllegalStateException(
-      s"mergeDelta needs a zone map on version $fromVersion (use writeRangePartitioned)"))
-    val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
-    // file is touched iff its key envelope contains a touched key: one
-    // narrow pass over the key set, collect only file paths
-    val touch = VersionedStore.touchedFiles(touchKeys, zm, keyCol)
-    val allParts = srcListing.map(_.getPath).filter(_.getName.startsWith("part-"))
-    // zone-map paths are input_file_name URIs; compare by basename
-    val touchedNames = touch.files.map(p => p.substring(p.lastIndexOf('/') + 1))
-    val (touchedParts, untouchedParts) = allParts.partition(p => touchedNames(p.getName))
-    val survivors =
-      if (touchedParts.isEmpty) align(delta.limit(0))
-      else maskedScanWithPos(fromVersion,
-          touchedParts.map(_.toString).toIndexedSeq, Some(unionSchema))
-        .drop("__f", "__p") // masked: DV-deleted rows must not resurrect
-        .join(touchKeys, Seq(keyCol), "left_anti")
-    val upserts = align(
-      delK.foldLeft(delta)((d, del) => d.join(del, Seq(keyCol), "left_anti")))
-    enforceConstraints(upserts, "mergeDelta")
-    // fills MATERIALIZE into rewritten files (an explicit null in a
-    // delta row for a filled column lands as the default): stored
-    // rows then need no read-time rewrite, so a plain SQL scan with
-    // the schema's existence defaults (SnapshotCatalog) reads the
-    // same values the store API does; carried pre-evolution files
-    // stay covered by the read-time fill / existence default.
-    val rewritten = applyFills(survivors.unionByName(upserts), unionSchema)
-    // publish: spark writes the rewritten files (+_SUCCESS) to tmp
-    // (partition-aware arrangement on a partitioned store), untouched
-    // bytes copy in beside them, one rename goes live
-    val tmp = stage(toVersion)
-    // mapped stores land new files under PHYSICAL names (name-uniform
-    // with the byte-carried files; a no-op without a mapping)
-    val newNames = landFlat(
-      arrange(SnapshotStore.toPhysical(rewritten, unionSchema), numNewFiles), tmp)
-    val untouchedNames = untouchedParts.map(_.getName).toSet
-    // incremental zone map: untouched rows carry over with the version
-    // prefix remapped; only the new files' footers are read
-    val landedZm = zmNewStats(tmp, newNames, zmStatsColsOf(zm))
-    // Delta's MERGE operationMetrics: matched = touched-file rows whose
-    // key the merge addressed (updated + deleted), from the rewrite's
-    // own counts where they decide it (see mergeMatched), split by the
-    // __del flag; inserted = upsert keys minus the updated ones (keys
-    // are store-unique); the upsert count came from the probe,
-    // so the user's delta pipeline never re-executes for metrics
-    val (nMatched, nMatchedDel) = mergeMatched(fromVersion, touch,
-      rowTotal(zm.filter(regexp_extract(col("file"), "[^/]+$", 0)
-        .isin(touchedParts.map(_.getName): _*))),
-      rowTotal(landedZm),
-      maskedScanWithPos(fromVersion, touchedParts.map(_.toString).toIndexedSeq,
-        Some(unionSchema)).select(col(keyCol)))
-    // The evolved union schema publishes WITH the version — a version
-    // dir can never hold mixed-schema files without the sidecar naming
-    // their union
-    publish(toVersion, tmp, Some(newNames), untouchedParts,
-      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, untouchedNames)),
-      dv = carryDv(fromVersion, untouchedNames),
-      schema = Some(unionSchema).filter(_ => evolved), commitTs = commitTs,
-      fresh = Some(landedZm),
-      op = "mergeDelta", metrics = Map(
-      "numTargetRowsInserted" -> math.max(0L, touch.upsertKeys - (nMatched - nMatchedDel)),
-      "numTargetRowsUpdated" -> (nMatched - nMatchedDel),
-      "numTargetRowsDeleted" -> nMatchedDel,
-      "numTargetFilesAdded" -> newNames.size.toLong,
-      "numTargetFilesRemoved" -> touchedParts.length.toLong))
-    (untouchedParts.length, newNames.size)
-  }
-
-  /** Predicate delete (the GDPR erasure primitive): copy-on-write
-    * rewrite of `fromVersion` into `toVersion` with every row matching
-    * `pred` removed. Only the files that actually CONTAIN a matching
-    * row are rewritten; every other file carries over by copy — the
-    * cost scales with the predicate's file footprint, not the snapshot
-    * size. The match scan is one narrow pass (Catalyst prunes to the
-    * predicate's columns and pushes the filter to the parquet scan);
-    * `pruneHint = (statsColumn, lo, hi)` additionally restricts that
-    * scan to the zone-map files overlapping the range, so a delete
-    * keyed by a clustered column (time, tenant, user-id band) never
-    * reads the rest of a 100 TB snapshot at all.
-    *
-    * Null semantics: a row where `pred` is NULL is KEPT (only rows
-    * that provably match are erased) — the keep-filter is
-    * `!coalesce(pred, false)`, because `filter(!pred)` alone would
-    * silently DROP null-evaluating rows, which is data loss, not
-    * deletion. Returns (filesCarried, filesRewritten, rowsDeleted).
-    *
-    * This erases rows from the NEW version only — prior versions still
-    * hold them (they are immutable snapshots); full-history erasure =
-    * deleteWhere on the tip + [[prune]] of the old versions, or the
-    * chunk-repository twin [[ChunkStore.redact]]. */
-  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      numNewFiles: Int = 4, commitTs: Option[Long] = None,
-      pruneHint: Option[(String, Any, Any)] = None,
-      mode: String = "auto"): (Int, Int, Long) = {
-    require(Set("auto", "cow", "dv")(mode),
-      s"deleteWhere mode must be auto|cow|dv, got '$mode'")
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    val unionSchema = storedSchema(fromVersion)
-    val matches = coalesce(pred, lit(false))
-    val allParts = dataFiles(fromVersion)
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val candidates = pruneHint.flatMap { case (c, lo, hi) =>
-      prunedFilesBy(fromVersion, c, lo, hi).map { files =>
-        val names = files.map(base).toSet
-        allParts.filter(p => names(p.getName))
-      }
-    }.getOrElse(allParts)
-    // which candidate rows match, and where. The match side filters on
-    // the BARE predicate: `filter` keeps only TRUE rows (nulls drop),
-    // identical to coalesce(pred,false), and the untranslatable
-    // coalesce wrapper would block parquet filter pushdown on this —
-    // the one scan whose pushdown matters. The scan is DV-masked, so
-    // an already-deleted row can never re-match.
-    val matchRows =
-      if (candidates.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("file",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("pos",
-              org.apache.spark.sql.types.LongType))))
-      else maskedScanWithPos(fromVersion, candidates.map(_.toString), Some(unionSchema))
-        .filter(pred)
-        .select(col("__f").as("file"), col("__p").as("pos")).materialize()
-    val matchStats = matchCounts(matchRows)
-    val deleted = matchStats.values.sum
-    val (touchedParts, untouchedParts) =
-      allParts.partition(p => matchStats.contains(p.getName))
-    // strategy (ManifestStore.deleteWhere's twin): merge-on-read when
-    // the match is sparse relative to the files it touches — a point
-    // delete then costs one byte-copy pass plus a metadata-sized mask
-    // instead of decoding and re-encoding every touched file — and
-    // copy-on-write when dense
-    val touchedPhys = touchedParts.map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          p, spark.sparkContext.hadoopConfiguration))
-      try r.getRecordCount finally r.close()
-    }.sum
-    val useDv = deleted > 0 &&
-      (mode == "dv" || (mode == "auto" && deleted * 5 <= touchedPhys))
-    if (useDv) {
-      val merged = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-      // no file changed identity: the zone map carries verbatim (its
-      // envelopes stay CONSERVATIVE over masked rows — pruning may
-      // open a file whose matches are all masked, never skip a live row)
-      publish(toVersion, stage(toVersion), None, allParts,
-        zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion,
-          allParts.map(_.getName).toSet)),
-        dv = Some(merged), schema = evolvedSchema(fromVersion), commitTs = commitTs,
-        op = "deleteWhere", opParams = SnapshotStore.predSql(pred),
-        metrics = Map("numDeletedRows" -> deleted,
-          "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L,
-          "numDeletionVectorsUpdated" -> matchStats.size.toLong))
-      return (allParts.length, 0, deleted)
-    }
-    val tmp = stage(toVersion)
-    val rewritten =
-      if (touchedParts.isEmpty)
-        spark.read.schema(unionSchema).parquet(dir(fromVersion)).limit(0)
-      else arrange(applyFills(
-          maskedScanWithPos(fromVersion, touchedParts.map(_.toString), Some(unionSchema))
-            .drop("__f", "__p") // masked: DV-deleted rows must not resurrect
-            .filter(!matches), unionSchema), // fills materialize on rewrite (see mergeDelta)
-        numNewFiles)
-    val newNames = landFlat(SnapshotStore.toPhysical(rewritten, unionSchema), tmp)
-    val untouchedNames = untouchedParts.map(_.getName).toSet
-    // zone map: untouched rows carry with the version remapped, only
-    // the rewritten files rescan (same incremental shape as mergeDelta)
-    publish(toVersion, tmp, Some(newNames), untouchedParts,
-      zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion, untouchedNames)),
-      dv = carryDv(fromVersion, untouchedNames), schema = evolvedSchema(fromVersion),
-      commitTs = commitTs, op = "deleteWhere", opParams = SnapshotStore.predSql(pred),
-      metrics = Map("numDeletedRows" -> deleted,
-        "numAddedFiles" -> newNames.size.toLong,
-        "numRemovedFiles" -> touchedParts.length.toLong))
-    (untouchedParts.length, newNames.size, deleted)
-  }
-
-  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column): (Int, Int, Long) =
-    deleteWhere(fromVersion, toVersion, pred, mode = "auto")
-
-  /** MERGE-ON-READ MERGE — [[ManifestStore.mergeDeltaMor]]'s
-    * dir-per-version twin: superseded rows mask into the deletion
-    * vector, the delta lands as NEW files beside byte-copied
-    * originals (no parquet decode/encode of any existing file).
-    * Same-schema only; constraints gate the delta. Returns
-    * (filesNew, rowsMasked). */
-  def mergeDeltaMor(fromVersion: Long, toVersion: Long, delta: DataFrame,
-      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 2,
-      commitTs: Option[Long] = None): (Int, Long) = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    val unionSchema = storedSchema(fromVersion)
-    require(delta.schema.fieldNames.sorted.sameElements(unionSchema.fieldNames.sorted),
-      s"mergeDeltaMor is same-schema only — an evolving merge takes mergeDelta's " +
-        "copy-on-write path")
-    val delK = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
-    val touchKeys = delK.foldLeft(delta.select(keyCol))(_ unionByName _)
-      .distinct().materialize()
-    val allParts = dataFiles(fromVersion)
-    val matchRows = maskedScanWithPos(fromVersion, allParts.map(_.toString),
-        Some(unionSchema))
-      .join(touchKeys, Seq(keyCol), "left_semi")
-      .select(col("__f").as("file"), col("__p").as("pos")).materialize()
-    val upserts = delK.foldLeft(delta)((d, del) =>
-      d.join(del, Seq(keyCol), "left_anti"))
-    enforceConstraints(upserts, "mergeDeltaMor")
-    val tmp = stage(toVersion)
-    val newNames = landFlat(
-      arrange(SnapshotStore.toPhysical(upserts, unionSchema), numNewFiles), tmp)
-    val nMasked = matchRows.count()
-    val mask = dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-      .materialize()
-    publish(toVersion, tmp, Some(newNames), allParts,
-      zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion,
-        allParts.map(_.getName).toSet)),
-      dv = Some(mask).filter(_.limit(1).count() > 0), schema = evolvedSchema(fromVersion),
-      commitTs = commitTs, op = "mergeDeltaMor", metrics = Map(
-      "numTargetRowsMasked" -> nMasked,
-      "numTargetFilesAdded" -> newNames.size.toLong,
-      "numTargetFilesRemoved" -> 0L))
-    (newNames.size, nMasked)
-  }
-
-  /** Predicate UPDATE with a MERGE-ON-READ path —
-    * [[ManifestStore.updateWhere]]'s dir-per-version twin: `mor`
-    * masks the matched rows' old positions and lands their updated
-    * copies as NEW files beside the byte-copied originals (no parquet
-    * decode/encode of any existing file — this layout's cheapest
-    * possible update); `cow` rewrites the touched files; `auto` picks
-    * mor when sparse. SET may not touch the key column. Returns
-    * (filesShared, filesNew, rowsUpdated). */
-  def updateWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      set: Map[String, Column], numNewFiles: Int = 2,
-      commitTs: Option[Long] = None, mode: String = "auto"): (Int, Int, Long) = {
-    require(Set("auto", "cow", "mor")(mode),
-      s"updateWhere mode must be auto|cow|mor, got '$mode'")
-    require(set.nonEmpty, "updateWhere: empty SET")
-    require(!set.contains(keyCol),
-      s"updateWhere: SET may not touch the key column '$keyCol' — a key change " +
-        "is a delete+insert, route it through mergeDelta")
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
-    val unionSchema = storedSchema(fromVersion)
-    val missing = set.keys.filterNot(unionSchema.fieldNames.contains)
-    require(missing.isEmpty, s"updateWhere: not in the schema: ${missing.mkString(", ")}")
-    val allParts = dataFiles(fromVersion)
-    val matched = maskedScanWithPos(fromVersion, allParts.map(_.toString),
-        Some(unionSchema))
-      .filter(coalesce(pred, lit(false))).materialize()
-    val matchRows = matched.select(col("__f").as("file"), col("__p").as("pos"))
-    val matching = matchCounts(matchRows)
-    val opParams =
-      s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}"
-    val sc = evolvedSchema(fromVersion)
-    val zm = zoneMap(fromVersion)
-    def applySet(df: DataFrame): DataFrame =
-      set.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
-    if (matching.isEmpty) {
-      publish(toVersion, stage(toVersion), None, allParts,
-        zm = zm.map(carriedZoneMap(_, fromVersion, toVersion, allParts.map(_.getName).toSet)),
-        dv = dvFrame(fromVersion), schema = sc, commitTs = commitTs,
-        op = "updateWhere", opParams = opParams,
-        metrics = Map("numUpdatedRows" -> 0L,
-          "numAddedFiles" -> 0L, "numRemovedFiles" -> 0L))
-      return (allParts.length, 0, 0L)
-    }
-    val nMatched = matching.values.sum
-    val conf = spark.sparkContext.hadoopConfiguration
-    val touchedPhys = allParts.filter(p => matching.contains(p.getName)).map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-    val useMor = mode == "mor" ||
-      (mode == "auto" && nMatched * 5 <= touchedPhys)
-    // mor lands only the updated copies and masks their old positions;
-    // cow rewrites the touched files whole
-    val (carried, rewritten, dv) =
-      if (useMor)
-        (allParts, applySet(matched).drop("__f", "__p"),
-          Some(dvFrame(fromVersion).map(_.unionByName(matchRows)).getOrElse(matchRows)
-            .select("file", "pos").materialize()))
-      else {
-        val (touchedParts, untouchedParts) =
-          allParts.partition(p => matching.contains(p.getName))
-        val touched = maskedScanWithPos(fromVersion,
-          touchedParts.map(_.toString), Some(unionSchema)).drop("__f", "__p")
-        (untouchedParts, applySet(touched.filter(coalesce(pred, lit(false))))
-          .unionByName(touched.filter(!coalesce(pred, lit(false)))),
-          carryDv(fromVersion, untouchedParts.map(_.getName).toSet))
-      }
-    enforceConstraints(rewritten, "updateWhere")
-    val tmp = stage(toVersion)
-    val newNames = landFlat(
-      arrange(SnapshotStore.toPhysical(rewritten, unionSchema), numNewFiles), tmp)
-    val carriedNames = carried.map(_.getName).toSet
-    publish(toVersion, tmp, Some(newNames), carried,
-      zm = zm.map(carriedZoneMap(_, fromVersion, toVersion, carriedNames)),
-      dv = dv, schema = sc, commitTs = commitTs, op = "updateWhere", opParams = opParams,
-      metrics = Map("numUpdatedRows" -> nMatched,
-        "numAddedFiles" -> newNames.size.toLong,
-        "numRemovedFiles" -> (allParts.length - carried.length).toLong))
-    (carried.length, newNames.size, nMatched)
-  }
-
-  /** FOLD the deletion vector ([[ManifestStore.foldDv]]'s twin):
-    * rewrite only the masked files, byte-copy the rest, publish with
-    * no `_dv`. Returns (filesCarried, filesRewritten, rowsDropped). */
-  def foldDv(fromVersion: Long, toVersion: Long, numNewFiles: Int = 2,
-      commitTs: Option[Long] = None): (Int, Int, Long) = {
-    requireFreeVersion(toVersion)
-    dvFrame(fromVersion) match {
-      case None =>
-        publishCarry(fromVersion, toVersion, None, Nil, commitTs, "foldDv", "")
-        (dataFiles(fromVersion).length, 0, 0L)
-      case Some(dv) =>
-        val masked = dv.select("file").distinct().collect().map(_.getString(0)).toSet
-        val nDropped = dv.count()
-        val (touched, untouched) = dataFiles(fromVersion).partition(p => masked(p.getName))
-        val sc = evolvedSchema(fromVersion)
-        val tmp = stage(toVersion)
-        val folded0 = maskedScanWithPos(fromVersion, touched.map(_.toString), sc)
-          .drop("__f", "__p")
-        sc.map(SnapshotStore.toPhysical(folded0, _)).getOrElse(folded0)
-          .repartitionByRange(numNewFiles, col(keyCol)).sortWithinPartitions(keyCol)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val newNames = partNames(tmp)
-        // the fold leaves no DV: the untouched files' zone-map rows
-        // carry, the rewritten minority's new files scan
-        publish(toVersion, tmp, Some(newNames), untouched,
-          zm = zoneMap(fromVersion).map(carriedZoneMap(_, fromVersion, toVersion,
-            untouched.map(_.getName).toSet)),
-          schema = sc, commitTs = commitTs, op = "foldDv")
-        (untouched.length, newNames.size, nDropped)
-    }
-  }
-
   /** Stage `zm` as `tmp/_zonemap` before [[publish]]'s rename — written
     * on the driver from its rows ([[ParquetSchemas.writeRows]]),
     * re-homing any file path recorded under the tmp dir name to the
@@ -2081,13 +1489,8 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * CURRENT spec's derived column (their prune axis) and stamp which
     * spec they landed under; never-evolved stores keep their exact
     * zone map schema (absent spec_id ≡ spec 0). */
-  private def zmNewStats(tmp: Path, names: Set[String], statsCols0: Seq[String]): DataFrame = {
-    val (hist, _) = specHistory
-    val statsCols =
-      if (hist.size <= 1) statsCols0
-      else (statsCols0 ++ storedPartitionBy().filterNot(_ == keyCol)).distinct
-    landedStats(names.toSeq.sorted.map(new Path(tmp, _)), statsCols)
-  }
+  private def zmNewStats(tmp: Path, names: Set[String], statsCols: Seq[String]): DataFrame =
+    landedStats(names.toSeq.sorted.map(new Path(tmp, _)), landingStatsCols(statsCols))
 
   protected def statsQuery(files: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = statAggs(cols)

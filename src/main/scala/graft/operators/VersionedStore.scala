@@ -11,20 +11,23 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (the "linked" layout: per-version manifests over a shared file
   * pool). The SQL catalog, the change feed and the streaming sinks
   * hold a `VersionedStore` and call through it; where the layouts
-  * genuinely differ (compaction, retention and vacuum, bucketed and
-  * partition-scoped rewrites, clones, the pool durability ladder)
-  * callers match on the store's type.
+  * genuinely differ (compaction, retention and vacuum, bucketed
+  * writes, clones, the pool durability ladder) callers match on the
+  * store's type.
   *
   * The members declared here without a body are the verbs each layout
-  * implements its own way, plus five layout primitives: where a
-  * version's sidecars live ([[versionDir]]), its stored schema
-  * ([[storedSchema]]), a masked read of a file subset
-  * ([[readDataFiles]]), a carry publish ([[publishCarry]]) and a
-  * history entry rebuilt from the files ([[computeHistoryEntry]]).
+  * implements its own way, plus the layout primitives: where a
+  * version's sidecars live ([[versionDir]]), whether it exists
+  * ([[hasVersion]]), its stored schema ([[storedSchema]]), a masked
+  * read of a file subset ([[readDataFiles]]), a carry publish
+  * ([[publishCarry]]), a history entry rebuilt from the files
+  * ([[computeHistoryEntry]]), a version's per-file entries
+  * ([[fileEntries]]) and one rewrite commit ([[commitRewrite]]).
   * Every body here (time travel, the deletion-vector and Bloom
-  * sidecars, the schema verbs, restore, constraints, holds, column
-  * statistics, the history checkpoint, the optimistic-concurrency
-  * merge, partition-spec helpers) is written once over those. */
+  * sidecars, the schema verbs, restore, the rewrite verbs,
+  * constraints, holds, column statistics, the history checkpoint, the
+  * optimistic-concurrency merge, partition-spec helpers) is written
+  * once over those. */
 trait VersionedStore {
   val basePath: String
   val keyCol: String
@@ -37,6 +40,10 @@ trait VersionedStore {
   /** The data files `version` reads: the version directory's part
     * files, or the manifest's files resolved against the pool. */
   def dataPaths(version: Long): Seq[String]
+
+  /** Whether `version` is committed — `versions().contains(version)`
+    * answered by one existence check instead of a listing. */
+  protected def hasVersion(version: Long): Boolean
 
   /** The same store opened with `key` as its key column. */
   def withKeyCol(key: String): VersionedStore
@@ -69,34 +76,43 @@ trait VersionedStore {
     * the unit the checkpoint self-heals with. */
   protected def computeHistoryEntry(version: Long): SnapshotStore.HistoryEntry
 
+  /** `version`'s per-file entries as a local frame: one row per data
+    * file with `file`, `n_rows`, `min_key`/`max_key` and the stats
+    * columns' `min_<c>`/`max_<c>` — the manifest, or the zone map (a
+    * version without one: its files' footers). `file` ends in the data
+    * file's name. */
+  protected def fileEntries(version: Long): DataFrame
+
+  /** One rewrite commit, the landing half of every rewrite verb:
+    * publish `toVersion` holding the `carried` data files of
+    * `fromVersion` (with their `entries` rows) plus `landing` (an
+    * arranged frame under physical names), landed the layout's way
+    * with its file statistics, under the deletion vector `dv`.
+    * `schema` (the version's read schema) is recorded as the schema
+    * sidecar when `sidecar` is set or the version would hold no file.
+    * `metrics` receives the number of files landed (as the layout
+    * counts them) and their rows. Returns the number of files landed. */
+  protected def commitRewrite(fromVersion: Long, toVersion: Long, entries: DataFrame,
+      carried: Seq[String], landing: Option[DataFrame], dv: Option[DataFrame],
+      schema: StructType, sidecar: Boolean, commitTs: Option[Long], op: String,
+      opParams: String, metrics: (Int, Long) => Map[String, Long]): Int
+
   def versions(): Seq[Long]
   def read(version: Long): DataFrame
   def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame
   def readSourceRange(version: Long, source: String, lo: Any, hi: Any): DataFrame
   def readWhereAll(version: Long, preds: Seq[(String, Any, Any)]): DataFrame
   def commitBytes(version: Long): Long
-  def partitions(version: Long): DataFrame
 
   def diff(fromVersion: Long, toVersion: Long): DataFrame
   def diffCdf(fromVersion: Long, toVersion: Long): DataFrame
   def diffKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame
   def diffCdfKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame
 
-  def mergeDelta(fromVersion: Long, toVersion: Long, delta: DataFrame,
-      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 4,
-      commitTs: Option[Long] = None,
-      fill: Map[String, Any] = Map.empty): (Int, Int)
-  /** `deleteWhere` with the layout's default file count and mode. */
-  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column): (Int, Int, Long)
   def replaceWhere(fromVersion: Long, toVersion: Long, data: DataFrame,
       filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int)
   def dropPartitions(fromVersion: Long, toVersion: Long, pred: Column,
       commitTs: Option[Long] = None): (Int, Int, Long)
-  def foldDv(fromVersion: Long, toVersion: Long, numNewFiles: Int = 2,
-      commitTs: Option[Long] = None): (Int, Int, Long)
-  def zorderWhere(fromVersion: Long, toVersion: Long, pred: Column,
-      zCols: Seq[String], numFiles: Int = 4,
-      commitTs: Option[Long] = None): (Int, Int)
   /** `maybeCompact` with the layout's default sizing. */
   def maybeCompact(maxFiles: Int): Option[Long]
   def maybeRetain(maxVersions: Int): Int
@@ -117,7 +133,7 @@ trait VersionedStore {
     * commit whose target version already exists before doing the
     * work; the authoritative check is the token verify at publish. */
   private[operators] def requireFreeVersion(v: Long): Unit =
-    if (versions().contains(v))
+    if (hasVersion(v))
       throw new VersionConflictException(
         s"$basePath: version $v already exists")
 
@@ -173,7 +189,7 @@ trait VersionedStore {
     * The key column is the store's identity and cannot drop. */
   def dropColumns(fromVersion: Long, toVersion: Long, cols: Seq[String],
       commitTs: Option[Long] = None): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     require(!cols.contains(keyCol),
       s"dropColumns: '$keyCol' is the store's key column — its identity, not droppable")
@@ -203,7 +219,7 @@ trait VersionedStore {
     * statistics are typed); a non-widening change keeps refusing. */
   def widenColumn(fromVersion: Long, toVersion: Long, column: String,
       newType: DataType, commitTs: Option[Long] = None): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     require(column != keyCol,
       s"widenColumn: '$keyCol' is the store's key column — its key-envelope " +
@@ -238,7 +254,7 @@ trait VersionedStore {
     * logical columns). `numFiles` is unused: nothing is rewritten. */
   def renameColumn(fromVersion: Long, toVersion: Long, from: String, to: String,
       numFiles: Int = 4, commitTs: Option[Long] = None): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     require(from != keyCol,
       s"renameColumn: '$keyCol' is the store's recorded key column — renaming the " +
@@ -275,7 +291,7 @@ trait VersionedStore {
   def restoreVersion(fromVersion: Long, toVersion: Long,
       commitTs: Option[Long] = None, op: String = "restoreVersion",
       opParams: String = ""): Unit = {
-    require(versions().contains(fromVersion), s"version $fromVersion does not exist")
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
     publishCarry(fromVersion, toVersion, None, Nil, commitTs, op,
       if (opParams.isEmpty) s"of v$fromVersion" else opParams)
@@ -686,6 +702,555 @@ trait VersionedStore {
       (r.getLong(0), r.getLong(1))
     }
 
+  /** The stats columns a rewrite's landed files record: those the
+    * source's `entries` carry (the union with the carried entries needs
+    * them), plus, on an evolved partition spec, the current spec's
+    * columns (new files prune through them). */
+  protected def rewriteStatsCols(entries: DataFrame): Seq[String] =
+    landingStatsCols(statsColsOf(entries))
+
+  /** The stats columns per-file `entries` record (physical names). */
+  protected def statsColsOf(entries: DataFrame): Seq[String] =
+    entries.columns.toSeq.filter(c => c.startsWith("min_") && c != "min_key").map(_.drop(4))
+
+  /** `cols` plus, on an evolved partition spec, the current spec's
+    * columns: the stats newly landed files record. */
+  protected def landingStatsCols(cols: Seq[String]): Seq[String] =
+    if (specHistory._1.size <= 1) cols
+    else (cols ++ storedPartitionBy().filterNot(_ == keyCol)).distinct
+
+  // ---- REWRITE VERBS ----
+  // Every verb that rewrites part of a version — the merges, the
+  // predicate delete and update, the deletion-vector folds and the
+  // partition-scoped maintenance — is written once here over two
+  // layout primitives: a version's per-file entries ([[fileEntries]])
+  // and one rewrite commit ([[commitRewrite]]). The schema checks, the
+  // touched-file choice, the deletion-vector policy, constraints and
+  // the operation metrics live only here.
+
+  /** The data file name an entry's or a path's `file` ends in. */
+  protected def fileName(f: String): String = f.substring(f.lastIndexOf('/') + 1)
+
+  /** The rows of `entries` naming the files in `names`. */
+  private def entriesOf(entries: DataFrame, names: Set[String]): DataFrame =
+    entries.filter(regexp_extract(col("file"), "[^/]+$", 0).isin(names.toSeq: _*))
+
+  /** The `paths` whose file names are in `names`. */
+  private def named(paths: Seq[String], names: Set[String]): Seq[String] =
+    paths.filter(p => names(fileName(p)))
+
+  /** [[commitRewrite]] of `fromVersion`'s `paths` minus `removed`, the
+    * deletion vector carried with `dvAdd` joining it ([[carryDv]]).
+    * Returns (files carried, files landed). */
+  private def rewrite(fromVersion: Long, toVersion: Long, entries: DataFrame,
+      paths: Seq[String], removed: Set[String], landing: Option[DataFrame],
+      dvAdd: Option[DataFrame], schema: StructType, sidecar: Boolean, commitTs: Option[Long],
+      op: String, opParams: String, metrics: (Int, Long) => Map[String, Long]): (Int, Int) = {
+    val carried = paths.filterNot(p => removed(fileName(p)))
+    (carried.size, commitRewrite(fromVersion, toVersion, entries, carried, landing,
+      carryDv(fromVersion, removed, carried.nonEmpty, dvAdd), schema, sidecar, commitTs, op,
+      opParams, metrics))
+  }
+
+  /** `raw` — a scan of data files under their stored (PHYSICAL) names —
+    * with each row's file name and parquet row position in `__f`/`__p`,
+    * the deletion vector `dv` masked out (one broadcast anti-join on the
+    * position: an already-deleted row can never re-match or resurrect),
+    * then projected to `schema`'s logical names with its recorded
+    * fills. Positions come from the parquet reader's own
+    * `_metadata.row_index`, stable because data files are immutable. */
+  protected def withPositions(raw: DataFrame, dv: Option[DataFrame],
+      schema: Option[StructType]): DataFrame = {
+    val withPos = raw.select(col("*"),
+      element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
+      col("_metadata.row_index").as("__p"))
+    val masked = dv.fold(withPos)(d =>
+      withPos.join(broadcast(d.toDF("__f", "__p")), Seq("__f", "__p"), "left_anti"))
+    schema.fold(masked) { sc =>
+      val logical = SnapshotStore.toLogical(masked, sc)
+      val fills = SnapshotStore.fillValues(sc)
+      if (fills.isEmpty) logical else logical.na.fill(fills)
+    }
+  }
+
+  /** `paths` (files of `version`) read as the version reads them under
+    * `schema`, with positions ([[withPositions]]). */
+  private def scanWithPos(version: Long, paths: Seq[String], schema: StructType): DataFrame =
+    withPositions(spark.read.schema(SnapshotStore.physicalSchema(schema)).parquet(paths: _*),
+      dvFrame(version), Some(schema))
+
+  /** [[scanWithPos]] without the positions, derived partition columns
+    * recomputed: the rows a rewrite of those files carries. */
+  private def scanRows(version: Long, paths: Seq[String], schema: StructType): DataFrame =
+    recomputeDerived(scanWithPos(version, paths, schema).drop("__f", "__p"))
+
+  /** The (`file`, `pos`) pairs of a [[scanWithPos]] frame's rows. */
+  private def positions(scan: DataFrame): DataFrame =
+    scan.select(col("__f").as("file"), col("__p").as("pos"))
+
+  /** An empty (`file`, `pos`) frame: a match over no file. */
+  private def noPositions: DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      SnapshotStore.dvSchema)
+
+  /** `df` as a rewrite lands it: [[arrange]]d into ~`numFiles` files,
+    * under the physical names `schema` maps (the version's file set
+    * stays name-uniform with the carried files). */
+  private def land(df: DataFrame, numFiles: Int, schema: StructType): DataFrame =
+    SnapshotStore.toPhysical(arrange(df, numFiles), schema)
+
+  /** The deletion-vector policy: merge-on-read when the match is sparse
+    * relative to the files it touches — rewriting a 1 GB file to drop
+    * 3 rows is the 100 TB scale-killer deletion vectors exist to avoid
+    * — copy-on-write when dense (the mask would stop being
+    * metadata-sized and every read would pay it forever). */
+  private def sparse(matched: Long, touchedRows: Long): Boolean = matched * 5 <= touchedRows
+
+  /** The deletion vector a commit over `fromVersion`'s files minus
+    * `removed` publishes: the source's entries for the files it keeps
+    * (`keepsFiles`: any; a removed file's survivors were rewritten, so
+    * its entries are obsolete) plus `add`, new mask rows known to be
+    * non-empty. None when nothing remains — a store that stops using
+    * deletion vectors stops paying for them. */
+  protected def carryDv(fromVersion: Long, removed: Set[String], keepsFiles: Boolean,
+      add: Option[DataFrame] = None): Option[DataFrame] = {
+    val kept =
+      if (removed.isEmpty) dvFrame(fromVersion)
+      else if (!keepsFiles) None
+      else dvFrame(fromVersion).map(_.filter(!col("file").isin(removed.toSeq: _*)).materialize())
+        .filter(_.limit(1).count() > 0)
+    add.fold(kept)(a => Some(kept.fold(a)(_.unionByName(a))))
+  }
+
+  /** A rewrite's pre-checks: `fromVersion` exists and `toVersion` does
+    * not ([[requireFreeVersion]]). */
+  private def requireRewrite(fromVersion: Long, toVersion: Long): Unit = {
+    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
+    requireFreeVersion(toVersion)
+  }
+
+  /** SCD1 upsert of `delta` (+ optional `deleteKeys`) from one version
+    * into the next, copy-on-write at the FILE level: only the files
+    * whose key envelope holds an upserted or deleted key
+    * ([[VersionedStore.touchedFiles]] — one pass over the key set
+    * probing the entries' envelopes) are read, their survivors (rows
+    * whose key the merge does not address; the read is DV-masked, so a
+    * deleted row cannot resurrect) rewritten beside the upserts; every
+    * untouched file carries with its entry (by reference on the linked
+    * layout, by byte-copy under the same name on the snapshot layout).
+    * At 100 TB this is the difference between "the daily merge
+    * rewrites the lake" and "it rewrites the 0.1% of files the delta's
+    * keys land in".
+    *
+    * SCHEMA EVOLUTION ([[Snapshot.mergeUpsert]]'s `allowMissingColumns`
+    * semantics, CoW-shaped): a column the delta ADDS joins the
+    * version's schema through the union-schema sidecar — carried files
+    * are not rewritten and read null, or the recorded `fill` default
+    * (`fill` keys must be columns this delta introduces), for it; a
+    * column the delta drops keeps its stored values on survivor rows
+    * and reads null on delta rows; a same-name TYPE change fails fast
+    * (silent coercion at 100 TB is a corrupted lake). Rewritten files
+    * materialize every recorded fill, so a plain SQL scan with the
+    * schema's existence defaults reads what the store API reads.
+    *
+    * operationMetrics are Delta's MERGE counts from the rewrite's own
+    * counts ([[mergeMatched]]); the upsert count comes from the key
+    * probe, so the user's delta pipeline never re-executes for them.
+    * Returns (filesCarried, filesRewritten). */
+  def mergeDelta(fromVersion: Long, toVersion: Long, delta: DataFrame,
+      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 4,
+      commitTs: Option[Long] = None,
+      fill: Map[String, Any] = Map.empty): (Int, Int) = {
+    requireRewrite(fromVersion, toVersion)
+    val entries = fileEntries(fromVersion)
+    val baseSchema = storedSchema(fromVersion)
+    val baseNames = baseSchema.fieldNames.toSet
+    delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
+      val bt = baseSchema(f.name).dataType
+      // simpleString ignores nullability flags (an array<float> whose
+      // containsNull differs is the same type)
+      require(bt.simpleString == f.dataType.simpleString,
+        s"mergeDelta: column '${f.name}' type changed ${bt.simpleString} -> " +
+          s"${f.dataType.simpleString}; evolving a column's TYPE needs an explicit rewrite")
+    }
+    val newFields = delta.schema.fields.filterNot(f => baseNames(f.name))
+    val basePhys = baseSchema.fields.map(SnapshotStore.physicalName).toSet
+    newFields.foreach(f => require(!basePhys(f.name),
+      s"mergeDelta: new column '${f.name}' collides with a stored PHYSICAL " +
+        "column name (a prior RENAME maps it) - old bytes would answer to two " +
+        "logical columns; compact first to fold the mapping"))
+    require(fill.keySet.subsetOf(newFields.map(_.name).toSet),
+      s"fill keys ${fill.keySet} must be columns this delta introduces " +
+        s"(${newFields.map(_.name).toSet})")
+    val unionSchema = StructType(baseSchema.fields ++ newFields.map(f =>
+      SnapshotStore.fieldWithFill(f, fill.get(f.name))))
+    // align a frame to the union schema: absent columns read null
+    def align(df: DataFrame): DataFrame = {
+      val have = df.columns.toSet
+      df.select(unionSchema.fields.toIndexedSeq.map(f =>
+        if (have(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)
+    }
+    val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
+    val touch = VersionedStore.touchedFiles(touchKeys, entries, keyCol)
+    val touched = touch.files.map(fileName)
+    val paths = dataPaths(fromVersion)
+    val touchedPaths = named(paths, touched)
+    val survivors =
+      if (touched.isEmpty) align(delta).limit(0)
+      else align(scanRows(fromVersion, touchedPaths, baseSchema))
+        .join(touchKeys, Seq(keyCol), "left_anti")
+    val upserts = align(deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
+      .foldLeft(delta)((d, del) => d.join(del, Seq(keyCol), "left_anti")))
+    enforceConstraints(upserts, "mergeDelta")
+    val fills = SnapshotStore.fillValues(unionSchema)
+    val rewritten = survivors.unionByName(upserts)
+    rewrite(fromVersion, toVersion, entries, paths, touched,
+      Some(land(if (fills.isEmpty) rewritten else rewritten.na.fill(fills), numNewFiles,
+        unionSchema)),
+      None, unionSchema, newFields.nonEmpty || evolvedSchema(fromVersion).isDefined,
+      commitTs, "mergeDelta", "", { (nLanded, landedRows) =>
+        val (nMatched, nMatchedDel) = mergeMatched(fromVersion, touch,
+          rowTotal(entriesOf(entries, touched)), landedRows,
+          scanRows(fromVersion, touchedPaths, baseSchema).select(col(keyCol)))
+        Map(
+          "numTargetRowsInserted" -> math.max(0L, touch.upsertKeys - (nMatched - nMatchedDel)),
+          "numTargetRowsUpdated" -> (nMatched - nMatchedDel),
+          "numTargetRowsDeleted" -> nMatchedDel,
+          "numTargetFilesAdded" -> nLanded.toLong,
+          "numTargetFilesRemoved" -> touched.size.toLong)
+      })
+  }
+
+  /** MERGE-ON-READ MERGE — [[mergeDelta]]'s alternative (Iceberg's
+    * merge-on-read MERGE): the rows the delta supersedes (existing rows
+    * whose key it upserts or deletes, found by a positional scan of the
+    * envelope-touched files only) join the DELETION VECTOR by position
+    * while the delta's rows land as NEW files — one commit,
+    * O(|delta| + mask) writes, not one existing file rewritten. The
+    * trade is read-side: the mask grows until [[foldDv]] (or a
+    * compaction) folds it. Same-schema only (an evolving merge takes
+    * the copy-on-write path); constraints gate the delta. Returns
+    * (filesNew, rowsMasked). */
+  def mergeDeltaMor(fromVersion: Long, toVersion: Long, delta: DataFrame,
+      deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 2,
+      commitTs: Option[Long] = None): (Int, Long) = {
+    requireRewrite(fromVersion, toVersion)
+    val schema = storedSchema(fromVersion)
+    require(delta.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
+      s"mergeDeltaMor is same-schema only (have ${schema.fieldNames.mkString(",")}, " +
+        s"delta ${delta.schema.fieldNames.mkString(",")}) — an evolving merge " +
+        "takes mergeDelta's copy-on-write path")
+    val entries = fileEntries(fromVersion)
+    val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
+    val touched = VersionedStore.touchedFiles(touchKeys, entries, keyCol).files.map(fileName)
+    val paths = dataPaths(fromVersion)
+    val matchRows =
+      if (touched.isEmpty) noPositions
+      else positions(scanWithPos(fromVersion, named(paths, touched), schema)
+        .join(touchKeys.select(keyCol), Seq(keyCol), "left_semi")).materialize()
+    val upserts = deleteKeys.map(df => df.select(df.columns.head).toDF(keyCol))
+      .foldLeft(delta)((d, del) => d.join(del, Seq(keyCol), "left_anti"))
+    enforceConstraints(upserts, "mergeDeltaMor")
+    val nMasked = matchRows.count()
+    val (_, nNew) = rewrite(fromVersion, toVersion, entries, paths, Set.empty,
+      Some(land(upserts, numNewFiles, schema)), Some(matchRows).filter(_ => nMasked > 0),
+      schema, evolvedSchema(fromVersion).isDefined, commitTs, "mergeDeltaMor", "",
+      (nLanded, _) => Map("numTargetRowsMasked" -> nMasked,
+        "numTargetFilesAdded" -> nLanded.toLong, "numTargetFilesRemoved" -> 0L))
+    (nNew, nMasked)
+  }
+
+  /** Predicate delete (the GDPR erasure primitive): publish `toVersion`
+    * with every row matching `pred` removed. One narrow match scan
+    * (Catalyst prunes it to the predicate's columns and the position,
+    * and pushes the bare predicate to the parquet scan) finds the
+    * matching rows and their files; `pruneHint = (column, lo, hi)`
+    * restricts it to the files whose entry range for that column
+    * overlaps, so a delete keyed by a clustered column (time, tenant,
+    * user-id band) never reads the rest of a 100 TB version. Sparse
+    * matches publish a deletion vector over unchanged files (`mode`
+    * `dv`, or `auto` under the [[sparse]] policy); dense ones rewrite
+    * only the files holding a match (`cow`). Rows where `pred` is NULL
+    * are KEPT (`!coalesce(pred, false)` — dropping them would be data
+    * loss, not deletion). The rows leave the NEW version only: full-
+    * history erasure is this on the tip plus retention of the old
+    * versions. Returns (filesCarried, filesRewritten, rowsDeleted). */
+  def deleteWhere(fromVersion: Long, toVersion: Long, pred: Column,
+      numNewFiles: Int = 4, commitTs: Option[Long] = None,
+      pruneHint: Option[(String, Any, Any)] = None,
+      mode: String = "auto"): (Int, Int, Long) = {
+    require(Set("auto", "cow", "dv")(mode),
+      s"deleteWhere mode must be auto|cow|dv, got '$mode'")
+    requireRewrite(fromVersion, toVersion)
+    val entries = fileEntries(fromVersion)
+    val schema = storedSchema(fromVersion)
+    val paths = dataPaths(fromVersion)
+    val candidates = pruneHint.flatMap { case (c, lo, hi) =>
+      // entry stats describe the STORED (physical) columns
+      val (minC, maxC) =
+        if (c == keyCol) ("min_key", "max_key")
+        else { val p = SnapshotStore.physicalOf(evolvedSchema(fromVersion), c)
+          (s"min_$p", s"max_$p") }
+      // a null bound keeps the file: never prune on missing information
+      if (!entries.columns.contains(minC) || !entries.columns.contains(maxC)) None
+      else Some(entries.filter(!(col(maxC) < lit(lo) || col(minC) > lit(hi)) ||
+          col(minC).isNull || col(maxC).isNull)
+        .select("file").collect().map(r => fileName(r.getString(0))).toSet)
+    }.fold(paths)(named(paths, _))
+    val matchRows =
+      if (candidates.isEmpty) noPositions
+      else positions(scanWithPos(fromVersion, candidates, schema).filter(pred)).materialize()
+    val matching = matchCounts(matchRows)
+    val deleted = matching.values.sum
+    val sidecar = evolvedSchema(fromVersion).isDefined
+    def commit(removed: Set[String], landing: Option[DataFrame], dv: Option[DataFrame],
+        extra: Map[String, Long]): (Int, Int) =
+      rewrite(fromVersion, toVersion, entries, paths, removed, landing, dv, schema, sidecar,
+        commitTs, "deleteWhere", SnapshotStore.predSql(pred), (nLanded, _) =>
+          Map("numDeletedRows" -> deleted, "numAddedFiles" -> nLanded.toLong,
+            "numRemovedFiles" -> removed.size.toLong) ++ extra)
+    if (matching.isEmpty) (commit(Set.empty, None, None, Map.empty)._1, 0, 0L)
+    else if (mode == "dv" || (mode == "auto" &&
+        sparse(deleted, rowTotal(entriesOf(entries, matching.keySet))))) {
+      // no file changes identity: every entry carries (its envelope stays
+      // conservative over the masked rows — pruning may open a file whose
+      // matches are all masked, never skip a live row)
+      (commit(Set.empty, None, Some(matchRows),
+        Map("numDeletionVectorsUpdated" -> matching.size.toLong))._1, 0, deleted)
+    } else {
+      val kept = scanRows(fromVersion, named(paths, matching.keySet), schema)
+        .filter(!coalesce(pred, lit(false)))
+      val (carried, rewritten) =
+        commit(matching.keySet, Some(land(kept, numNewFiles, schema)), None, Map.empty)
+      (carried, rewritten, deleted)
+    }
+  }
+
+  /** Predicate UPDATE with a MERGE-ON-READ path (Delta/Iceberg's MoR
+    * updates): in `mor` mode the matched rows' OLD positions join the
+    * deletion vector while their UPDATED copies land as NEW files, all
+    * in one commit — a sparse update costs O(|matched rows|) writes
+    * plus a metadata-sized mask, never a file rewrite; `cow` rewrites
+    * the touched files instead (the read-optimized trade); `auto`
+    * picks mor under the [[sparse]] policy. The match scan reads the
+    * physical names and projects to logical BEFORE the predicate (a
+    * predicate on a renamed column must see its values). The SET map
+    * may not touch the key column (that is a delete+insert, not an
+    * update). Returns (filesCarried, filesNew, rowsUpdated). */
+  def updateWhere(fromVersion: Long, toVersion: Long, pred: Column,
+      set: Map[String, Column], numNewFiles: Int = 2,
+      commitTs: Option[Long] = None, mode: String = "auto"): (Int, Int, Long) = {
+    require(Set("auto", "cow", "mor")(mode),
+      s"updateWhere mode must be auto|cow|mor, got '$mode'")
+    require(set.nonEmpty, "updateWhere: empty SET")
+    require(!set.contains(keyCol),
+      s"updateWhere: SET may not touch the key column '$keyCol' — a key change " +
+        "is a delete+insert, route it through mergeDelta")
+    requireRewrite(fromVersion, toVersion)
+    val schema = storedSchema(fromVersion)
+    val missing = set.keys.filterNot(schema.fieldNames.contains)
+    require(missing.isEmpty, s"updateWhere: not in the schema: ${missing.mkString(", ")}")
+    val entries = fileEntries(fromVersion)
+    val paths = dataPaths(fromVersion)
+    val matched = scanWithPos(fromVersion, paths, schema)
+      .filter(coalesce(pred, lit(false))).materialize()
+    val matchRows = positions(matched)
+    val matching = matchCounts(matchRows)
+    val updated = matching.values.sum
+    def applySet(df: DataFrame): DataFrame =
+      set.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
+    val (removed, rewritten, dvAdd) =
+      if (matching.isEmpty) (Set.empty[String], None, None)
+      else if (mode == "mor" || (mode == "auto" &&
+          sparse(updated, rowTotal(entriesOf(entries, matching.keySet)))))
+        (Set.empty[String], Some(applySet(matched).drop("__f", "__p")), Some(matchRows))
+      else {
+        val touched = scanRows(fromVersion, named(paths, matching.keySet), schema)
+        (matching.keySet, Some(applySet(touched.filter(coalesce(pred, lit(false))))
+          .unionByName(touched.filter(!coalesce(pred, lit(false))))), None)
+      }
+    rewritten.foreach(enforceConstraints(_, "updateWhere"))
+    val (carried, landed) = rewrite(fromVersion, toVersion, entries, paths, removed,
+      rewritten.map(land(_, numNewFiles, schema)), dvAdd, schema,
+      evolvedSchema(fromVersion).isDefined, commitTs, "updateWhere",
+      s"SET ${set.keys.toSeq.sorted.mkString(",")} WHERE ${SnapshotStore.predSql(pred)}",
+      (nLanded, _) => Map("numUpdatedRows" -> updated, "numAddedFiles" -> nLanded.toLong,
+        "numRemovedFiles" -> removed.size.toLong))
+    (carried, landed, updated)
+  }
+
+  /** FOLD the deletion vector: rewrite ONLY the files the mask names
+    * (reading them masked, so the masked rows drop for good), carry
+    * every other file, publish without a mask — the targeted companion
+    * to compaction, which folds only small files (a 1 GB file with 3
+    * masked rows would otherwise stay masked forever, paying the
+    * anti-join on every read). I/O = O(|masked files|). Returns
+    * (filesCarried, filesRewritten, rowsDropped); a carry publish when
+    * there is no deletion vector. */
+  def foldDv(fromVersion: Long, toVersion: Long, numNewFiles: Int = 2,
+      commitTs: Option[Long] = None): (Int, Int, Long) =
+    foldMasked(fromVersion, toVersion, numNewFiles, commitTs, None)
+
+  /** PARTITION-SCOPED DV fold — [[foldDv]] restricted to the masked
+    * files inside the partitions `pred` selects (a predicate over the
+    * declared partition columns, evaluated on the entries' min==max
+    * tuples — metadata only): those rewrite, every other file carries
+    * WITH its mask intact. Folding one tenant's partition never
+    * rewrites the rest. Returns (filesCarried, filesRewritten,
+    * rowsDropped). */
+  def foldDvWhere(fromVersion: Long, toVersion: Long, pred: Column,
+      numNewFiles: Int = 2, commitTs: Option[Long] = None): (Int, Int, Long) = {
+    requirePartitioned("foldDvWhere")
+    foldMasked(fromVersion, toVersion, numNewFiles, commitTs, Some(pred))
+  }
+
+  /** [[foldDv]] over the masked files inside `scope`'s partitions (all
+    * of them when None). */
+  private def foldMasked(fromVersion: Long, toVersion: Long, numNewFiles: Int,
+      commitTs: Option[Long], scope: Option[Column]): (Int, Int, Long) = {
+    requireRewrite(fromVersion, toVersion)
+    val opParams = scope.fold("")(SnapshotStore.predSql)
+    val entries = fileEntries(fromVersion)
+    val dv = dvFrame(fromVersion).map(_.materialize())
+    val inScope = scope.fold((_: String) => true)(
+      partitionFiles(entries, storedPartitionBy(), _))
+    val masked = dv.fold(Set.empty[String])(
+      _.select("file").distinct().collect().map(_.getString(0)).filter(inScope).toSet)
+    if (masked.isEmpty) {
+      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "foldDv", opParams)
+      return (dataPaths(fromVersion).size, 0, 0L)
+    }
+    val dropped = dv.get.filter(col("file").isin(masked.toSeq: _*)).count()
+    val schema = storedSchema(fromVersion)
+    val paths = dataPaths(fromVersion)
+    val (carried, rewritten) = rewrite(fromVersion, toVersion, entries, paths, masked,
+      Some(land(scanRows(fromVersion, named(paths, masked), schema), numNewFiles,
+        schema)),
+      None, schema, evolvedSchema(fromVersion).isDefined, commitTs, "foldDv", opParams,
+      (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
+        "numRemovedFiles" -> masked.size.toLong))
+    (carried, rewritten, dropped)
+  }
+
+  /** PARTITION-SCOPED compaction — Delta's `OPTIMIZE t WHERE part=x`:
+    * fold the sub-`minBytes` files ONLY inside the partitions `pred`
+    * selects into ~`targetFiles` files per partition tuple (read
+    * masked: their deletion-vector entries retire); every other file
+    * carries. At 100 TB you never OPTIMIZE a whole table: the nightly
+    * maintenance of one hot day costs O(that day's fragments), and the
+    * untouched partitions' files are bit-identical across the commit.
+    * Published as a NEW version. Returns (filesCarried,
+    * filesRewritten). */
+  def compactWhere(fromVersion: Long, toVersion: Long, pred: Column,
+      minBytes: Long = 8L << 20, targetFiles: Int = 1,
+      commitTs: Option[Long] = None): (Int, Int) = {
+    val pcs = requirePartitioned("compactWhere")
+    requireRewrite(fromVersion, toVersion)
+    val entries = fileEntries(fromVersion)
+    val paths = dataPaths(fromVersion)
+    val scope = partitionFiles(entries, pcs, pred)
+    val small = paths.filter(p => scope(fileName(p)) &&
+      fs.getFileStatus(new Path(p)).getLen < minBytes)
+    if (small.size <= 1) { // nothing to fold inside the scope
+      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "compact",
+        SnapshotStore.predSql(pred))
+      return (paths.size, 0)
+    }
+    val schema = storedSchema(fromVersion)
+    val names = small.map(fileName).toSet
+    rewrite(fromVersion, toVersion, entries, paths, names,
+      Some(land(scanRows(fromVersion, small, schema), targetFiles, schema)), None, schema,
+      evolvedSchema(fromVersion).isDefined, commitTs, "compact", SnapshotStore.predSql(pred),
+      (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
+        "numRemovedFiles" -> names.size.toLong))
+  }
+
+  /** PARTITION-SCOPED Z-ORDER — Iceberg's rewrite_data_files with a row
+    * filter: re-cluster ONLY the partitions `pred` selects on `zCols`'
+    * Morton order, the range split running over (partition tuple, z)
+    * so every file keeps one tuple and each partition's files cover
+    * contiguous z ranges; everything else carries. Content-invariant:
+    * clustering moves rows between files, never changes them. Returns
+    * (filesCarried, filesRewritten). */
+  def zorderWhere(fromVersion: Long, toVersion: Long, pred: Column,
+      zCols: Seq[String], numFiles: Int = 4,
+      commitTs: Option[Long] = None): (Int, Int) = {
+    val pcs = requirePartitioned("zorderWhere")
+    requireRewrite(fromVersion, toVersion)
+    require(zCols.nonEmpty, "zorderWhere: no z columns")
+    val overlap = zCols.filter(pcs.contains)
+    require(overlap.isEmpty,
+      s"zorderWhere: ${overlap.mkString(", ")} are partition columns — constant " +
+        "within every file already; z-order the finer dimensions instead")
+    val entries = fileEntries(fromVersion)
+    val scope = partitionFiles(entries, pcs, pred)
+    if (scope.isEmpty) {
+      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "zorder",
+        SnapshotStore.predSql(pred))
+      return (dataPaths(fromVersion).size, 0)
+    }
+    val schema = storedSchema(fromVersion)
+    val paths = dataPaths(fromVersion)
+    // an evolved schema may hide a derived partition column the range
+    // split needs: derive it (a pure function of its source)
+    val rows = deriveParts(scanRows(fromVersion, named(paths, scope), schema))
+    val zc = ZOrder.zColumn(rows, zCols)
+    val arranged = rows.withColumn("__z", zc)
+      .repartitionByRange(numFiles, (pcs.map(col) :+ col("__z")): _*)
+      .sortWithinPartitions((pcs.map(col) :+ col("__z")): _*)
+      .drop("__z")
+    rewrite(fromVersion, toVersion, entries, paths, scope,
+      Some(SnapshotStore.toPhysical(arranged, schema)), None, schema,
+      evolvedSchema(fromVersion).isDefined, commitTs, "zorder", SnapshotStore.predSql(pred),
+      (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
+        "numRemovedFiles" -> scope.size.toLong))
+  }
+
+  // ---- PARTITION ENTRIES ----
+
+  /** SHOW PARTITIONS, metadata-only: one row per partition tuple with
+    * its file and physical row counts, straight off the version's
+    * entries — no data file opens. (Row counts are physical: masked
+    * rows count until [[foldDv]] or a compaction folds them.) */
+  def partitions(version: Long): DataFrame = {
+    val pcs = requirePartitioned("partitions")
+    val entries = fileEntries(version)
+    requireUniformSpec(entries, "partitions")
+    partitionEntries(entries, pcs)
+      .groupBy(pcs.map(col): _*)
+      .agg(count(lit(1)).as("n_files"), sum(col("n_rows")).as("n_rows"))
+  }
+
+  protected def requirePartitioned(op: String): Seq[String] = {
+    val pcs = storedPartitionBy()
+    require(pcs.nonEmpty,
+      s"$op needs a partitioned store — declare partition columns with writePartitioned")
+    pcs
+  }
+
+  /** `entries` with each file's partition tuple as plain value columns
+    * (min==max per the layout invariant, asserted) — the shared base
+    * of the partition verbs. */
+  protected def partitionEntries(entries: DataFrame, pcs: Seq[String]): DataFrame = {
+    val absent = pcs.filterNot(c => entries.columns.contains(s"min_$c"))
+    require(absent.isEmpty,
+      s"version records no stats for partition column(s) ${absent.mkString(", ")} — " +
+        "it predates the CURRENT partition spec; compact to rewrite under it, " +
+        "or read through readSourceRange")
+    val straddlers = entries.filter(
+        pcs.map(c => !(col(s"min_$c") <=> col(s"max_$c"))).reduce(_ || _))
+      .limit(1).count()
+    require(straddlers == 0L,
+      "partitioned-store invariant violated: a version file spans more than one " +
+        "partition tuple (was data landed outside the store's own write paths?)")
+    entries.select(entries.columns.map(col) ++ pcs.map(c => col(s"min_$c").as(c)): _*)
+  }
+
+  /** Names of the files inside the partitions `pred` selects. */
+  private def partitionFiles(entries: DataFrame, pcs: Seq[String], pred: Column): Set[String] =
+    partitionEntries(entries, pcs).filter(coalesce(pred, lit(false)))
+      .select("file").collect().map(r => fileName(r.getString(0))).toSet
+
   // ---- SIDECARS ----
 
   /** The visible files of a published sidecar directory, or None while
@@ -841,7 +1406,7 @@ trait VersionedStore {
     * are human compliance decisions automation must not override. One
     * `_holds/<version>` marker file, idempotent. */
   def hold(version: Long): Unit = {
-    require(versions().contains(version), s"version $version does not exist")
+    require(hasVersion(version), s"version $version does not exist")
     val p = new Path(s"$basePath/_holds/$version")
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)

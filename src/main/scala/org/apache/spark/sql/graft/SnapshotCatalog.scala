@@ -887,21 +887,19 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val tip = st.versions().max
         lazy val where = org.apache.spark.sql.functions.expr(whereSql)
         st match {
+          case _ if whereSql.nonEmpty =>
+            val before = st.dataPaths(tip).size
+            val (kept, rewritten) = st.compactWhere(tip, tip + 1, where, minBytes, targetFiles)
+            Array(utf8(st.layout), tip + 1, before.toLong, (kept + rewritten).toLong)
           case m: ManifestStore =>
             val before = m.manifest(tip).count()
-            val (kept, rewritten) =
-              if (whereSql.isEmpty) m.compact(tip, tip + 1, minBytes, targetFiles)
-              else m.compactWhere(tip, tip + 1, where, minBytes, targetFiles)
+            val (kept, rewritten) = m.compact(tip, tip + 1, minBytes, targetFiles)
             Array(utf8(st.layout), tip + 1, before, (kept + rewritten).toLong)
-          case s: SnapshotStore if whereSql.isEmpty =>
+          case s: SnapshotStore =>
             val bytes = s.stats(tip)._3
             val targetBytes = math.max(1L, (bytes + targetFiles - 1) / targetFiles)
             val (before, after) = s.compact(tip, targetBytes)
             Array(utf8(st.layout), tip, before.toLong, after.toLong)
-          case s: SnapshotStore =>
-            val before = s.dataFiles(tip).count(_.getName.startsWith("part-"))
-            val (kept, rewritten) = s.compactWhere(tip, tip + 1, where, minBytes)
-            Array(utf8(st.layout), tip + 1, before.toLong, (kept + rewritten).toLong)
         }
       }
       case "drop_partitions" => bound("drop_partitions",
@@ -1021,11 +1019,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val whereSql = in.getUTF8String(2).toString.trim
         lazy val where = org.apache.spark.sql.functions.expr(whereSql)
         val tip = st.versions().max
-        val (_, rewritten, dropped) = st match {
-          case _ if whereSql.isEmpty => st.foldDv(tip, tip + 1, n)
-          case m: ManifestStore => m.foldDvWhere(tip, tip + 1, where, n)
-          case s: SnapshotStore => s.foldDvWhere(tip, tip + 1, where)
-        }
+        val (_, rewritten, dropped) =
+          if (whereSql.isEmpty) st.foldDv(tip, tip + 1, n)
+          else st.foldDvWhere(tip, tip + 1, where, n)
         Array(utf8(st.layout), tip + 1, rewritten.toLong, dropped)
       }
       case "vacuum" => bound("vacuum",

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ManifestStore, SnapshotStore}
+import graft.operators.{ManifestStore, SnapshotStore, VersionedStore}
 
 /** Partition-scoped maintenance (`OPTIMIZE t WHERE part = x`):
   * compactWhere / zorderWhere / foldDvWhere rewrite ONLY the matching
@@ -161,5 +161,32 @@ class ScopedMaintenanceSpec extends SparkSpec {
     assert(ans2.getLong(2) >= 1 && ans2.getLong(3) >= 1, ans2.toString)
     assert(content(spark.sql("SELECT * FROM smcat.t_linked"))
       == before.filter(_._1 % 10 != 5), "delete applies; fold is content-neutral")
+  }
+
+  test("foldDv on a partitioned store keeps one partition tuple per file (both layouts)") {
+    val rows = (1 to 4000).map(i => (i.toLong, Seq("A", "B", "C", "D")(i % 4), i * 1.5))
+      .toDF("k", "region", "v")
+    val root = java.nio.file.Files.createTempDirectory("graft_sm_fold").toString
+    val linked = new ManifestStore(spark, s"$root/l", "k")
+    linked.writePartitioned(rows, 1L, Seq("region"))
+    val snap = new SnapshotStore(spark, s"$root/s", "k")
+    snap.writePartitioned(rows, 1L, Seq("region"))
+    Seq[VersionedStore](linked, snap).foreach { st =>
+      // a sparse delete masks 42 rows spread over all four regions
+      st.deleteWhere(1L, 2L, col("k") % 95 === 0, mode = "dv")
+      assert(st.dvRowCount(2L) == 42L, st.layout)
+      val (_, rewritten, dropped) = st.foldDv(2L, 3L)
+      assert(dropped == 42L && rewritten >= 4 && st.dvFrame(3L).isEmpty, st.layout)
+      // every landed file holds one tuple: the partition verbs still run
+      val parts = st.partitions(3L).select("region", "n_rows").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(parts == content(st.read(2L)).groupBy(_._2).map { case (g, rs) =>
+        g -> rs.size.toLong }, st.layout)
+      st.compactWhere(3L, 4L, col("region") === "A", minBytes = 1L << 30)
+      assert(st.partitions(4L).filter(col("region") === "A").select("n_files")
+        .head().getLong(0) == 1L, st.layout)
+      assert(content(st.read(3L)) == content(st.read(2L)), st.layout)
+      assert(content(st.read(4L)) == content(st.read(2L)), st.layout)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.LongType
 import graft.operators.{ConstraintViolationException, ManifestStore, SnapshotStore, VersionedStore}
 
@@ -180,5 +180,103 @@ class VersionedStoreSpec extends SparkSpec {
     val rekeyed = l.withKeyCol("v")
     assert(rekeyed.layout == "linked" && rekeyed.basePath == linked.basePath &&
       rekeyed.keyCol == "v")
+  }
+
+  /** Rows over a partition column, a value and a tag. */
+  private def regionRows(ks: Range, tag: String) =
+    ks.map(k => (k.toLong, Seq("A", "B", "C")(k % 3), k * 1.5, s"$tag-$k"))
+      .toDF("k", "region", "v", "tag")
+
+  /** Both layouts, partitioned by region, holding v1 and an appending
+    * merge v2 (every partition holds two files). */
+  private def partitionedStores(tag: String): Seq[VersionedStore] = {
+    val linked = new ManifestStore(spark, tmpBase(s"graft-vs-rw-$tag-l"), "k")
+    linked.writePartitioned(regionRows(1 to 60, "a"), 1L, Seq("region"))
+    val snap = new SnapshotStore(spark, tmpBase(s"graft-vs-rw-$tag-s"), "k")
+    snap.writePartitioned(regionRows(1 to 60, "a"), 1L, Seq("region"))
+    Seq(linked, snap).foreach(_.mergeDelta(1L, 2L, regionRows(61 to 90, "b")))
+    Seq(linked, snap)
+  }
+
+  /** The source shapes the rewrite verbs start from: each builds its
+    * source version from v2 and returns it. */
+  private val sources: Seq[(String, VersionedStore => Long)] = Seq(
+    "plain" -> (_ => 2L),
+    "deletion-vectored" -> { st => st.deleteWhere(2L, 3L, col("k") % 7 === 0, mode = "dv"); 3L },
+    "column-mapped" -> { st => st.renameColumn(2L, 3L, "tag", "label"); 3L },
+    "evolved" -> { st =>
+      st.mergeDelta(2L, 3L, regionRows(88 to 92, "c").withColumn("w", lit(2.5)),
+        fill = Map("w" -> 0.5))
+      3L
+    })
+
+  /** Every rewrite verb from `src`, each publishing its own version:
+    * per verb, the row count it returns (if any), the rows it publishes
+    * and its history metrics. */
+  private def rewriteVerbs(st: VersionedStore, src: Long): Seq[(String, Any, Set[Seq[Any]],
+      Map[String, Long])] = {
+    // a delta in the source's own shape: two updates, an insert, a delete
+    val base = st.read(src)
+    val delta = base.filter(col("k").isin(4L, 80L)).withColumn("v", col("v") + 100.0)
+      .unionByName(base.filter(col("k") === 1L).withColumn("k", lit(500L)))
+      .collect()
+    val deltaDf = spark.createDataFrame(java.util.Arrays.asList(delta: _*), base.schema)
+    val dels = Some(Seq(10L).toDF("k"))
+    def rows(v: Long): Set[Seq[Any]] = {
+      val df = st.read(v)
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSet
+    }
+    def metrics(v: Long): Map[String, Long] = st.history().filter($"version" === v)
+      .select("operation_metrics").head().getMap[String, Long](0).toMap
+    Seq[(String, Long, () => Any)](
+      ("mergeDelta", 10L, () => st.mergeDelta(src, 10L, deltaDf, dels): Unit),
+      ("mergeDeltaMor", 11L, () => st.mergeDeltaMor(src, 11L, deltaDf, dels)._2),
+      ("deleteWhere cow", 12L, () => st.deleteWhere(src, 12L, col("v") > 60.0, mode = "cow")._3),
+      ("deleteWhere dv", 13L, () => st.deleteWhere(src, 13L, col("k") === 5L, mode = "dv")._3),
+      ("updateWhere cow", 14L, () => st.updateWhere(src, 14L, col("k") % 5 === 0,
+        Map("v" -> (col("v") + 1.0)), mode = "cow")._3),
+      ("updateWhere mor", 15L, () => st.updateWhere(src, 15L, col("k") === 6L,
+        Map("v" -> lit(0.0)), mode = "mor")._3),
+      ("foldDv", 16L, () => st.foldDv(src, 16L)._3),
+      ("foldDvWhere", 17L, () => st.foldDvWhere(src, 17L, col("region") === "A")._3),
+      ("compactWhere", 18L, () =>
+        st.compactWhere(src, 18L, col("region") === "B", minBytes = 1L << 30): Unit),
+      ("zorderWhere", 19L, () =>
+        st.zorderWhere(src, 19L, col("region") === "C", Seq("k", "v"), 2): Unit))
+      .map { case (name, v, run) => (name, run(), rows(v), metrics(v)) }
+  }
+
+  test("every rewrite verb gives the same rows, metrics and row counts on both layouts") {
+    sources.foreach { case (name, prepare) =>
+      val Seq(linked, snap) = partitionedStores(name)
+      val a = rewriteVerbs(linked, prepare(linked))
+      val b = rewriteVerbs(snap, prepare(snap))
+      a.zip(b).foreach { case (x, y) =>
+        assert(x == y, s"$name source, ${x._1}: linked $x vs snapshot $y")
+      }
+      assert(a.map(_._1) == b.map(_._1) && a.size == 10)
+    }
+  }
+
+  test("deleteWhere's pruneHint restricts the match scan on both layouts") {
+    val df = (1L to 2000L).map(i => (i, if (i % 500 == 0) null else s"row_$i", i * 1.5))
+      .toDF("k", "s", "v")
+    val linked = new ManifestStore(spark, tmpBase("graft-vs-hint-l"), "k", statsCols = Seq("v"))
+    linked.write(df, 1L, numFiles = 10)
+    val snap = new SnapshotStore(spark, tmpBase("graft-vs-hint-s"), "k")
+    snap.writeRangePartitioned(df, 1L, 10, statsCols = Seq("v"))
+    Seq[VersionedStore](linked, snap).foreach { st =>
+      // the stats column's envelopes prune the match scan, result identical
+      val (carried, rewritten, deleted) = st.deleteWhere(1L, 2L, col("v") > 2700.0,
+        pruneHint = Some(("v", 2700.0, Double.MaxValue)))
+      assert(deleted == st.read(1L).filter(col("v") > 2700.0).count(), st.layout)
+      assert(carried >= 8 && carried + rewritten <= 11, s"${st.layout}: ($carried, $rewritten)")
+      assert(st.read(2L).filter(col("v") > 2700.0).count() == 0, st.layout)
+      assert(st.read(2L).count() == 2000L - deleted, st.layout)
+      // a hint that excludes the matching files leaves them unmatched
+      val (_, _, none) = st.deleteWhere(2L, 3L, col("k") === 1L,
+        pruneHint = Some(("v", 2000.0, 2100.0)))
+      assert(none == 0L && st.read(3L).filter(col("k") === 1L).count() == 1L, st.layout)
+    }
   }
 }

@@ -67,4 +67,69 @@ class MergeProbeSpec extends graft.SparkSpec {
     check(LongType, Nil, Seq(1L, 2L), Seq(3L))
     check(LongType, Seq((1L, 10L)), Nil, Nil)
   }
+
+  /** The data files each file scan over `base` reads, from the plans of
+    * the SQL executions `body` runs. A marker job, delivered after
+    * every earlier event on the listener's queue, closes the window. */
+  private def scannedFiles(base: String)(body: => Unit): Seq[Set[String]] = {
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlanInfo]
+    val tag = s"graft-probe-${java.util.UUID.randomUUID()}"
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.sparkPlanInfo): Unit
+        case _ =>
+      }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == tag))
+          marker.countDown()
+    }
+    // the plan metadata lists the scan's paths in full
+    val lenKey = "spark.sql.maxMetadataStringLength"
+    val len = spark.conf.getOption(lenKey)
+    spark.conf.set(lenKey, "1000000")
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.removeSparkListener(listener)
+      len.fold(spark.conf.unset(lenKey))(spark.conf.set(lenKey, _))
+    }
+    def scans(p: org.apache.spark.sql.execution.SparkPlanInfo): Seq[Map[String, String]] =
+      (if (p.metadata.contains("Location")) Seq(p.metadata) else Nil) ++ p.children.flatMap(scans)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(scans).map(_("Location"))
+      .filter(_.contains(base))
+      .map(loc => """[^/\[\], ]+\.parquet""".r.findAllIn(loc).toSet)
+  }
+
+  test("the merge-on-read probe reads only envelope-touched files; the result equals a copy-on-write merge (both layouts)") {
+    import spark.implicits._
+    val rows = (1 to 1000).map(k => (k.toLong, s"v-$k")).toDF("k", "v")
+    // upserts in the first key range (plus one new key beyond every
+    // envelope) and a delete in it: one file of four is touched
+    val delta = Seq((7L, "u7"), (11L, "u11"), (2001L, "n")).toDF("k", "v")
+    val dels = Seq(12L).toDF("k")
+    val root = java.nio.file.Files.createTempDirectory("graft-probe-mor").toString
+    val linked = new ManifestStore(spark, s"$root/l", "k")
+    linked.write(rows, 1L, numFiles = 4)
+    val snap = new SnapshotStore(spark, s"$root/s", "k")
+    snap.writeRangePartitioned(rows, 1L, 4)
+    Seq[VersionedStore](linked, snap).foreach { st =>
+      val first = st.dataPaths(1L).map(p => p.substring(p.lastIndexOf('/') + 1))
+        .filter(n => st.readKeyRange(1L, 7L, 7L).inputFiles.exists(_.endsWith(n))).toSet
+      assert(first.size == 1, st.layout)
+      val scans = scannedFiles(st.basePath)(st.mergeDeltaMor(1L, 2L, delta, Some(dels)): Unit)
+      assert(scans.nonEmpty && scans.forall(_ == first), s"${st.layout}: $scans")
+      st.mergeDelta(1L, 3L, delta, Some(dels))
+      def content(v: Long) = st.read(v).select("k", "v").as[(Long, String)].collect().toSet
+      assert(content(2L) == content(3L), st.layout)
+      assert(content(2L).contains((2001L, "n")) && !content(2L).exists(_._1 == 12L))
+    }
+  }
 }
