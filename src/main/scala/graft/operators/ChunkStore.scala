@@ -40,6 +40,7 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
   private def fs =
     new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def chunksDir = s"$basePath/chunks"
+  private def manifestsRoot = new Path(s"$basePath/manifests")
   private def manifestDir(v: Long) = s"$basePath/manifests/v=$v"
 
   private val chunkSchema = StructType.fromDDL(
@@ -58,6 +59,12 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
 
   def manifest(version: Long): DataFrame =
     spark.read.schema(manifestSchema).parquet(manifestDir(version))
+
+  /** The manifest rows of `vs` in one frame, each tagged with its
+    * version `__v` (one job over all of them, not one per version);
+    * None for no version. */
+  private def manifestsOf(vs: Seq[Long]): Option[DataFrame] =
+    vs.map(v => manifest(v).withColumn("__v", lit(v))).reduceOption(_.unionByName(_))
 
   /** Every stored chunk row (ref_hex, bytes, blob, bucket). Empty
     * frame before the first backup. */
@@ -278,11 +285,8 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
         col("bucket") % n === ((run % n + n) % n)
       case None => lit(true)
     }
-    val manifestRefs = versions() match {
-      case Seq() => None
-      case vs => Some(vs.map(v => manifest(v).select("ref_hex", "bytes"))
-        .reduce(_.unionByName(_)).dropDuplicates("ref_hex"))
-    }
+    val manifestRefs = manifestsOf(versions())
+      .map(_.select("ref_hex", "bytes").dropDuplicates("ref_hex"))
     val missing = manifestRefs.map(
       _.join(refs().select("ref_hex"), Seq("ref_hex"), "left_anti")
         .select(col("ref_hex"), bucketCol.as("bucket"), col("bytes"),
@@ -315,11 +319,7 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     * manifests — same cost shape as the sweep's mark phase, zero
     * mutation. */
   def orphanRefs(): DataFrame = {
-    val live = versions() match {
-      case Seq() => None
-      case vs => Some(vs.map(v => manifest(v).select("ref_hex"))
-        .reduce(_.unionByName(_)).distinct())
-    }
+    val live = manifestsOf(versions()).map(_.select("ref_hex").distinct())
     val all = refs().select("ref_hex", "bucket", "bytes")
     live.fold(all)(l => all.join(l, Seq("ref_hex"), "left_anti"))
   }
@@ -359,8 +359,7 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     val paritySweeps = dataBuckets()
       .flatMap(bdir => fs.listStatus(bdir).toSeq)
       .filter { st =>
-        (st.getPath.getName.startsWith("._parity.tmp-") ||
-          st.getPath.getName.startsWith("._parity.old-")) &&
+        st.getPath.getName.startsWith("._parity.tmp-") &&
           now - st.getModificationTime > ttlMs
       }
       .map { st => fs.delete(st.getPath, true); st.getPath.toString }
@@ -417,26 +416,15 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     * Orthogonal to [[redact]] by design: a hold preserves the
     * VERSION; erasure law still removes the redacted payloads from
     * it — the two compose (hold the corpus, erase the person). */
-  def hold(version: Long): Unit = {
-    require(versions().contains(version), s"version $version does not exist")
-    val p = new Path(s"$basePath/_holds/$version")
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-  }
+  def hold(version: Long): Unit =
+    BlobGroups.hold(fs, basePath, version, versions().contains(version))
 
   /** Release a [[hold]]; idempotent. The version becomes prunable by
     * the next retention pass. */
-  def release(version: Long): Unit =
-    fs.delete(new Path(s"$basePath/_holds/$version"), false): Unit
+  def release(version: Long): Unit = BlobGroups.release(fs, basePath, version)
 
   /** Versions currently under a legal hold. */
-  def holds(): Seq[Long] = {
-    val dir = new Path(s"$basePath/_holds")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
-  }
+  def holds(): Seq[Long] = BlobGroups.holds(fs, basePath)
 
   /** Mark-and-sweep GC — the `prune` every deduplicating backup tool
     * runs weekly: drop every version NOT in `keep`, then delete the
@@ -459,13 +447,9 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     // deleting dropped manifests FIRST makes the sweep restartable:
     // a crash mid-sweep leaves dead chunks the next sweep collects
     drop.foreach(v => fs.delete(new Path(manifestDir(v)), true))
-    val survivors = versions()
-    val live =
-      if (survivors.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType.fromDDL("ref_hex STRING"))
-      else survivors.map(v => manifest(v).select("ref_hex"))
-        .reduce(_.unionByName(_)).distinct()
+    val live = manifestsOf(versions()).fold(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType.fromDDL("ref_hex STRING")))(_.select("ref_hex").distinct())
     val dead = refs().join(live, Seq("ref_hex"), "left_anti")
       .select("ref_hex", "bytes", "bucket").materialize()
     val stats = dead.agg(count(lit(1)), coalesce(sum("bytes"), lit(0L))).head()
@@ -584,15 +568,39 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     (nBad, dirty)
   }
 
+  // Parity groups are the buckets ([[BlobGroups]]). A sweep,
+  // compaction or mirror repair swaps the whole bucket dir and its
+  // `_parity` with it, so a lost indexed file under a live sidecar is damage.
+
   private def parityDir(bucket: Path) = new Path(bucket, "_parity")
+  private def bucketGroup(bdir: Path) = BlobGroups.Group(bdir, parityDir(bdir),
+    new Path(bdir, s"._parity.tmp-${java.util.UUID.randomUUID()}"),
+    new Path(bdir, s"._parity.old-${java.util.UUID.randomUUID()}"))
+  private def bucketId(bdir: Path): Long = bdir.getName.stripPrefix("bucket=").toLong
+
+  private def dataBuckets(): Seq[Path] = {
+    val root = new Path(chunksDir)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(st => st.isDirectory &&
+      st.getPath.getName.startsWith("bucket=")).map(_.getPath)
+  }
+
+  private def dataFileNames(bdir: Path): Set[String] = BlobGroups.fileNames(fs, bdir).toSet
+
+  /** Every bucket holding data files, with their names. */
+  private def dataGroups(): Seq[(Path, Set[String])] =
+    dataBuckets().map(b => b -> dataFileNames(b)).filter(_._2.nonEmpty)
+
+  /** Lands or retires parked sidecars before every parity pass and
+    * before [[vacuum]]'s TTL sweep. */
+  private def recoverParityAsides(): Unit =
+    dataBuckets().foreach(b => BlobGroups.restoreAsides(fs, b, "._parity.old-")(_ => parityDir(b)))
 
   /** Single-file-loss resilience WITHOUT a second repository: one XOR
     * parity sidecar per bucket (the RAID-5 / par2 idea at blob-file
-    * granularity). The sidecar holds the byte-wise XOR of every data
-    * file in the bucket (padded to the longest) plus an index of
-    * (file, bytes, md5); losing ANY ONE indexed file reconstructs
-    * exactly as parity ⊕ surviving files ([[repairFromParity]]),
-    * verified against the indexed md5 before it lands. Parity is
+    * granularity, format in [[BlobGroups]]); losing ANY ONE indexed
+    * file reconstructs exactly as parity ⊕ surviving files
+    * ([[repairFromParity]]), md5-verified before it lands. Parity is
     * ADVISORY state with fail-closed semantics: it publishes via
     * tmp+rename (a crash leaves the previous sidecar or none — repair
     * then refuses rather than guessing), files appended after the
@@ -603,158 +611,29 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     * associative + commutative, so the reduce combines map-side);
     * buckets are independent — on a cluster they pipeline. Returns
     * the number of bucket sidecars (re)built. */
-  /** One pass over the named files (or the whole bucket when `names`
-    * is None): (XOR of contents, index entries). The frame persists
-    * across the two actions so every blob byte is READ ONCE — index
-    * collect and XOR reduce would otherwise each rescan storage. */
-  private def parityXorOf(bdir: Path, names: Option[Seq[String]])
-      : (Array[Byte], Seq[(String, Long, String)]) = {
-    val spark0 = spark
-    import spark0.implicits._
-    val reader = spark.read.format("binaryFile")
-    val df = names.fold(reader.load(bdir.toString))(ns =>
-        reader.load(ns.map(n => new Path(bdir, n).toString): _*))
-      .select(element_at(split(col("path"), "/"), -1).as("name"), col("content"))
-      .as[(String, Array[Byte])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val index = df.map(nc => (nc._1, nc._2.length.toLong, ChunkStore.md5hex(nc._2)))
-        .collect().toSeq
-      (df.map(_._2).reduce(ChunkStore.xorPad _), index)
-    } finally df.unpersist(): Unit
-  }
-
-  /** The ONE sidecar publish (shared by build/update): tmp dir inside
-    * the bucket, xor.bin + index.tsv, rename-old-ASIDE + rename-new-in
-    * + delete-old. A crash BETWEEN the two renames leaves the bucket
-    * with no live `_parity` and the previous complete sidecar parked
-    * as `._parity.old-*`; [[recoverParityAsides]] restores it (or
-    * retires it when the publish did complete) before every parity
-    * read/maintenance pass AND before vacuum's TTL sweep — so the
-    * no-sidecar window is closed by recovery, not merely narrowed.
-    * An unpublished `._parity.tmp-` ages out via [[vacuum]]. */
-  private def publishParity(bdir: Path, parity: Array[Byte],
-      index: Seq[(String, Long, String)]): Unit = {
-    val tmp = new Path(bdir, s"._parity.tmp-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    val out = fs.create(new Path(tmp, "xor.bin"), true)
-    try out.write(parity) finally out.close()
-    val idx = fs.create(new Path(tmp, "index.tsv"), true)
-    try idx.write(index.sortBy(_._1).map { case (n, len, m) => s"$n\t$len\t$m" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally idx.close()
-    val live = parityDir(bdir)
-    val aside = new Path(bdir, s"._parity.old-${java.util.UUID.randomUUID()}")
-    val hadOld = fs.exists(live)
-    if (hadOld && !fs.rename(live, aside))
-      throw new java.io.IOException(s"parity retire failed under $bdir")
-    if (!fs.rename(tmp, live)) {
-      // restore the previous sidecar so the bucket never regresses to
-      // parity-less; the failed tmp ages out via vacuum
-      if (hadOld) fs.rename(aside, live): Unit
-      throw new java.io.IOException(s"parity publish failed under $bdir")
-    }
-    if (hadOld) fs.delete(aside, true): Unit
-  }
-
-  private def dataBuckets(): Seq[Path] = {
-    val root = new Path(chunksDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(st => st.isDirectory &&
-      st.getPath.getName.startsWith("bucket=")).map(_.getPath)
-  }
-
-  private def dataFileNames(bdir: Path): Set[String] =
-    fs.listStatus(bdir).filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-
-  /** Land or retire parked `._parity.old-*` sidecars (the publish
-    * crash window): live `_parity` absent → the aside IS the previous
-    * complete sidecar, restore it; live present → the publish
-    * completed, retire the aside. Idempotent, metadata-only. */
-  private def recoverParityAsides(): Unit =
-    dataBuckets().foreach { bdir =>
-      val live = parityDir(bdir)
-      fs.listStatus(bdir).map(_.getPath)
-        .filter(_.getName.startsWith("._parity.old-")).foreach { aside =>
-          if (!fs.exists(live)) fs.rename(aside, live): Unit
-          else fs.delete(aside, true): Unit
-        }
-    }
-
   def buildParity(): Long = {
     recoverParityAsides()
-    var built = 0L
-    dataBuckets().foreach { bdir =>
-      if (dataFileNames(bdir).nonEmpty) {
-        val (parity, index) = parityXorOf(bdir, None)
-        publishParity(bdir, parity, index)
-        built += 1
-      }
-    }
-    built
+    val groups = dataGroups()
+    groups.foreach { case (b, names) => BlobGroups.build(spark, fs, bucketGroup(b), names.toSeq) }
+    groups.size.toLong
   }
 
-  /** INCREMENTAL parity maintenance — the reason XOR parity suits an
-    * append-only repository: parity is a group sum, so appended files
-    * fold in as `parity' = parity ⊕ (⊕ new files)` without re-reading
-    * the bucket — O(|new files|) I/O per refresh, against
-    * [[buildParity]]'s O(bucket). Applies exactly to buckets whose
-    * staleness is PURE APPEND (every indexed file still present — the
-    * backupDelta / chunkBackupStream steady state); a bucket whose
-    * indexed files vanished (sweep/compaction swap, losses) falls back
-    * to a full [[buildParity]]-shape rebuild of that bucket, and an
-    * uncovered bucket gets a fresh build. Publication is the same
-    * tmp+rename swap; a crash leaves the OLD sidecar, which is merely
-    * stale-but-consistent (index still describes files it XOR'd).
-    * Returns (bucketsIncremental, bucketsRebuilt). */
+  /** INCREMENTAL parity maintenance ([[BlobGroups.maintain]]): a
+    * bucket whose staleness is PURE APPEND (the backupDelta /
+    * chunkBackupStream steady state) folds its new files in at
+    * O(|new files|) I/O, against [[buildParity]]'s O(bucket); an
+    * uncovered bucket, or one whose sidecar is torn, gets a fresh build.
+    * FAIL-CLOSED on damage: a bucket missing an indexed file is
+    * SKIPPED — [[verifyParity]] shows it `stale`; run
+    * [[repairFromParity]] first, then maintain. A crash leaves the OLD
+    * sidecar, stale but consistent. Returns (bucketsIncremental,
+    * bucketsRebuilt). */
   def updateParity(): (Long, Long) = {
     recoverParityAsides()
-    var incr = 0L
-    var rebuilt = 0L
-    def readBytes(p: Path): Array[Byte] = {
-      val in = fs.open(p)
-      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    val done = dataGroups().map { case (b, names) =>
+      BlobGroups.maintain(spark, fs, bucketGroup(b), names.toSeq, _ => true)
     }
-    dataBuckets().foreach { bdir =>
-      val present = dataFileNames(bdir)
-      if (present.nonEmpty) {
-        val indexed = readParityIndex(bdir)
-        val indexedNames = indexed.map(_._1).toSet
-        val fresh = present diff indexedNames
-        val xorBin = new Path(parityDir(bdir), "xor.bin")
-        // the incremental fold needs an INTACT sidecar: index AND
-        // xor.bin (a torn sidecar — crash between writes never
-        // produces one, but a partial copy can — rebuilds instead of
-        // crashing the whole maintenance pass)
-        if (indexed.nonEmpty && indexedNames.subsetOf(present) && fs.exists(xorBin)) {
-          if (fresh.nonEmpty) { // pure append: fold only the new files
-            val (freshXor, freshIdx) = parityXorOf(bdir, Some(fresh.toSeq.sorted))
-            publishParity(bdir,
-              ChunkStore.xorPad(readBytes(xorBin), freshXor), indexed ++ freshIdx)
-            incr += 1
-          } // fully covered already: nothing to do
-        } else { // uncovered, torn, or indexed files vanished: rebuild
-          val (parity, idx) = parityXorOf(bdir, Some(present.toSeq.sorted))
-          publishParity(bdir, parity, idx)
-          rebuilt += 1
-        }
-      }
-    }
-    (incr, rebuilt)
-  }
-
-  /** Parse a bucket's sidecar index; empty when absent. */
-  private def readParityIndex(bdir: Path): Seq[(String, Long, String)] = {
-    val idxPath = new Path(parityDir(bdir), "index.tsv")
-    if (!fs.exists(idxPath)) Seq.empty
-    else {
-      val in = fs.open(idxPath)
-      val raw = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      new String(raw, "UTF-8").split("\n").filter(_.nonEmpty).map { l =>
-        val Array(n, len, m) = l.split("\t"); (n, len.toLong, m)
-      }.toSeq
-    }
+    (done.count(_ == BlobGroups.Folded).toLong, done.count(_ == BlobGroups.Rebuilt).toLong)
   }
 
   /** Parity COVERAGE audit — which buckets [[repairFromParity]] could
@@ -769,92 +648,32 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     val spark0 = spark
     import spark0.implicits._
     val rows = dataBuckets().map { bdir =>
-      val bucketId = bdir.getName.stripPrefix("bucket=").toLong
       val present = dataFileNames(bdir)
-      val indexed = readParityIndex(bdir)
-      if (indexed.isEmpty || !fs.exists(new Path(parityDir(bdir), "xor.bin")))
-        (bucketId, present.size.toLong, 0L, "uncovered")
+      val indexed = BlobGroups.readIndex(fs, parityDir(bdir))
+      if (indexed.isEmpty || !BlobGroups.hasParity(fs, parityDir(bdir)))
+        (bucketId(bdir), present.size.toLong, 0L, "uncovered")
       else {
         val status =
           if (indexed.map(_._1).toSet == present) "covered" else "stale"
-        (bucketId, present.size.toLong, indexed.size.toLong, status)
+        (bucketId(bdir), present.size.toLong, indexed.size.toLong, status)
       }
     }
     rows.sortBy(_._1).toDF("bucket", "n_files", "n_indexed", "status")
   }
 
   /** Reconstruct singly-lost blob files from the [[buildParity]]
-    * sidecars: per bucket, indexed files absent from the directory
-    * are the losses; exactly one loss (with every other indexed file
-    * still present) rebuilds as parity ⊕ survivors, truncated to the
-    * indexed length and VERIFIED against the indexed md5 before the
-    * tmp+rename lands it — a stale or torn sidecar can only produce
-    * an honest refusal, never a corrupt blob (and scrub would catch
-    * one anyway: content addressing makes every repair self-checking
-    * downstream). Returns (repaired file paths, buckets that need a
-    * mirror or deeper recovery: ≥2 losses, or a failed verify).
-    * Losses OUTSIDE the index (files appended after the last build)
-    * are invisible here by design — scrub's missing_blob rows remain
-    * the authority on what the repository still owes. */
+    * sidecars ([[BlobGroups.repair]]): a stale or torn sidecar can only
+    * produce an honest refusal, never a corrupt blob. Returns (repaired
+    * file paths, buckets that need a mirror or deeper recovery: ≥2
+    * losses, or a failed verify). Losses OUTSIDE the index (files
+    * appended after the last build) are invisible here by design —
+    * scrub's missing_blob rows remain the authority. */
   def repairFromParity(): (Seq[String], Seq[Long]) = {
     recoverParityAsides()
-    val spark0 = spark
-    import spark0.implicits._
-    val repaired = Seq.newBuilder[String]
-    val unrepairable = Seq.newBuilder[Long]
-    dataBuckets().foreach { bdir =>
-      val index = readParityIndex(bdir)
-      if (index.nonEmpty) {
-        val bucketId = bdir.getName.stripPrefix("bucket=").toLong
-        val present = fs.listStatus(bdir).filter(_.isFile)
-          .map(_.getPath.getName).toSet
-        val missing = index.filterNot(e => present(e._1))
-        val xorBin = new Path(parityDir(bdir), "xor.bin")
-        if (missing.size == 1 && !fs.exists(xorBin)) {
-          // torn sidecar (index without xor.bin — a partial copy, not
-          // a crash: publish writes both before the rename): an honest
-          // per-bucket refusal, never an exception that aborts the
-          // other buckets' repairs
-          unrepairable += bucketId
-        } else if (missing.size == 1) {
-          val (lostName, lostLen, lostMd5) = missing.head
-          // the whole rebuild-and-verify is a per-bucket honest refusal
-          // zone: an oversized index entry (in-memory XOR assembly is
-          // Array-bounded at 2 GiB), an unreadable survivor, or a
-          // failed publish lands the bucket on the unrepairable list
-          // instead of aborting every other bucket's repair
-          try {
-            if (lostLen > Int.MaxValue.toLong)
-              throw new java.io.IOException(
-                s"$lostName is ${lostLen} bytes — beyond in-memory parity assembly")
-            val survivors = index.map(_._1).filter(present)
-            val survivorXor =
-              if (survivors.isEmpty) Array.empty[Byte]
-              else spark.read.format("binaryFile")
-                .load(survivors.map(n => new Path(bdir, n).toString): _*)
-                .select(col("content")).as[Array[Byte]]
-                .reduce(ChunkStore.xorPad _)
-            val parity = {
-              val in = fs.open(xorBin)
-              try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-            }
-            val rebuilt = java.util.Arrays.copyOf(
-              ChunkStore.xorPad(parity, survivorXor), lostLen.toInt)
-            if (ChunkStore.md5hex(rebuilt) == lostMd5) {
-              val tmp = new Path(bdir, s".${lostName}.tmp-${java.util.UUID.randomUUID()}")
-              val out = fs.create(tmp, true)
-              try out.write(rebuilt) finally out.close()
-              if (!fs.rename(tmp, new Path(bdir, lostName)))
-                throw new java.io.IOException(s"repair publish failed: $lostName")
-              repaired += new Path(bdir, lostName).toString
-            } else unrepairable += bucketId
-          } catch {
-            case scala.util.control.NonFatal(_) => unrepairable += bucketId
-          }
-        } else if (missing.size > 1) unrepairable += bucketId
-      }
-    }
-    (repaired.result(), unrepairable.result())
+    val outcomes = dataBuckets()
+      .map(b => b -> BlobGroups.repair(spark, fs, bucketGroup(b), dataFileNames(b)))
+    (outcomes.collect { case (_, BlobGroups.Repaired(p)) => p },
+      outcomes.collect { case (b, BlobGroups.Unrepairable) => bucketId(b) })
   }
 
   /** Finish every interrupted sweep left under the repository root —
@@ -892,28 +711,20 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     // ONE job finds every version holding a redacted id (a per-version
     // isEmpty probe would be |versions| driver-blocking jobs — a year
     // of daily backups is hundreds)
-    val hitVersions = versions() match {
-      case Seq() => Set.empty[Long]
-      case vs => vs.map(v => manifest(v).select(col("id"), lit(v).as("__v")))
-        .reduce(_.unionByName(_))
-        .filter(col("id").isin(ids: _*))
-        .select("__v").distinct().collect().map(_.getLong(0)).toSet
-    }
+    val hitVersions = manifestsOf(versions()).fold(Set.empty[Long])(
+      _.filter(col("id").isin(ids: _*)).select("__v").distinct().collect()
+        .map(_.getLong(0)).toSet)
     var rewritten = 0
     versions().foreach { v =>
       val m = manifest(v)
       if (hitVersions(v)) {
         val ts = commitTimestamp(v)
-        val tmp = new Path(s"$basePath/manifests/.tmp-redact-v=$v")
-        fs.delete(tmp, true) // leftover from an earlier crashed attempt
-        m.filter(!col("id").isin(ids: _*))
-          .write.mode("overwrite").parquet(tmp.toString)
-        val out = fs.create(new Path(tmp, "_commit_ts"), true)
-        try out.write(ts.toString.getBytes("UTF-8")) finally out.close()
-        val live = new Path(manifestDir(v))
-        fs.delete(live, true)
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"redact publish failed: $tmp -> $live")
+        BlobGroups.landVersion(fs, manifestsRoot, "redact", v) { tmp =>
+          m.filter(!col("id").isin(ids: _*))
+            .write.mode("overwrite").parquet(tmp.toString)
+          val out = fs.create(new Path(tmp, "_commit_ts"), true)
+          try out.write(ts.toString.getBytes("UTF-8")) finally out.close()
+        }
         rewritten += 1
       }
     }
@@ -996,7 +807,7 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     *  1. blobs the mirror lacks — ONE anti-join on the content
     *     address; missing rows append into the mirror's buckets.
     *  2. versions the mirror lacks — manifest dirs copy verbatim
-    *     (commit ts preserved) through a complete `.tmp-repl-v=` dir
+    *     (commit ts preserved) through a complete tmp copy dir
     *     + atomic rename, so a crashed copy either rolls forward
     *     ([[recoverReplications]]) or is discarded, never half-lands.
     *  3. versions BOTH hold are fingerprint-compared — (row count,
@@ -1029,15 +840,13 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     val a = missing.agg(count(lit(1)), coalesce(sum("bytes"), lit(0L))).head()
     if (a.getLong(0) > 0)
       missing.write.mode("append").partitionBy("bucket").parquet(target.chunksDir)
-    // 2. versions the mirror lacks
-    val newVs = versions().diff(target.versions())
-    newVs.foreach(v => target.landManifestCopy(fs, new Path(manifestDir(v)), v))
-    // 3. redaction propagation across common versions (the ones just
-    // copied are verbatim by construction — no need to re-fingerprint)
-    val common = versions().intersect(target.versions()).diff(newVs)
-    val (srcFp, dstFp) = (manifestFingerprints(common), target.manifestFingerprints(common))
-    val stale = common.filter(v => srcFp(v) != dstFp(v))
-    stale.foreach(v => target.landManifestCopy(fs, new Path(manifestDir(v)), v))
+    // 2. versions the mirror lacks, 3. redaction propagation across
+    // common versions (the ones just copied are verbatim by construction)
+    val (newVs, stale) = BlobGroups.syncManifests(spark, fs, manifestsRoot, versions(),
+      target.fs, target.manifestsRoot, target.versions()) { common =>
+      val (srcFp, dstFp) = (manifestFingerprints(common), target.manifestFingerprints(common))
+      common.filter(v => srcFp(v) != dstFp(v))
+    }
     if (stale.nonEmpty) target.pruneChunks(keep = target.versions()): Unit
     (a.getLong(0), a.getLong(1), newVs, stale.size)
   }
@@ -1047,72 +856,26 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
     * repositories. ONE job for all versions (a per-version pass would
     * be |versions| driver-blocking jobs); blobs never read. */
   private def manifestFingerprints(vs: Seq[Long]): Map[Long, (Long, Long)] =
-    if (vs.isEmpty) Map.empty
-    else vs.map(v => manifest(v).select(lit(v).as("__v"),
-        xxhash64(col("id"), col("chunk_idx"), col("ref_hex"), col("bytes")).as("__h")))
-      .reduce(_.unionByName(_))
+    manifestsOf(vs).fold(Map.empty[Long, (Long, Long)])(_.select(col("__v"),
+        xxhash64(col("id"), col("chunk_idx"), col("ref_hex"), col("bytes")).as("__h"))
       .groupBy("__v").agg(count(lit(1)).as("__n"), expr("bit_xor(__h)").as("__fp"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-
-  /** Land a verbatim copy of a source manifest dir as version `v` —
-    * complete tmp, then delete-live + atomic rename (the [[redact]]
-    * roll-forward shape: the tmp is always a COMPLETE manifest, so the
-    * delete→rename crash window recovers by landing it). */
-  private def landManifestCopy(srcFs: org.apache.hadoop.fs.FileSystem,
-      src: Path, v: Long): Unit = {
-    val tmp = new Path(s"$basePath/manifests/.tmp-repl-v=$v")
-    fs.delete(tmp, true) // leftover from an earlier crashed attempt
-    if (!org.apache.hadoop.fs.FileUtil.copy(srcFs, src, fs, tmp, false,
-        spark.sparkContext.hadoopConfiguration))
-      throw new java.io.IOException(s"replicate manifest copy failed: $src -> $tmp")
-    val live = new Path(manifestDir(v))
-    fs.delete(live, true)
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"replicate manifest publish failed: $tmp -> $live")
-  }
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
 
   /** Land (or discard) interrupted [[replicateTo]] manifest copies —
-    * same roll-forward rule as [[recoverRedactions]]: a
-    * `.tmp-repl-v=` dir is always complete, so live-dir-missing rolls
-    * forward, live-dir-present discards the superseded copy (the next
-    * replicate re-derives it from the fingerprint compare). */
-  def recoverReplications(): Unit = {
-    val mdir = new Path(s"$basePath/manifests")
-    if (fs.exists(mdir))
-      fs.listStatus(mdir).toSeq
-        .filter(_.getPath.getName.startsWith(".tmp-repl-v="))
-        .foreach { st =>
-          val v = st.getPath.getName.stripPrefix(".tmp-repl-v=").toLong
-          val live = new Path(manifestDir(v))
-          if (!fs.exists(live)) {
-            if (!fs.rename(st.getPath, live))
-              throw new java.io.IOException(
-                s"replication recovery failed: ${st.getPath} -> $live")
-          } else fs.delete(st.getPath, true): Unit
-        }
-  }
+    * same roll-forward rule as [[recoverRedactions]]: a copy dir is
+    * always complete, so live-dir-missing rolls forward, live-dir-present
+    * discards the superseded copy (the next replicate re-derives it
+    * from the fingerprint compare). */
+  def recoverReplications(): Unit = BlobGroups.rollForward(fs, manifestsRoot, "repl")
 
   /** Land (or discard) interrupted [[redact]] manifest replacements:
     * a `.tmp-redact-v=<v>` dir is always a COMPLETE new manifest, so
     * when the live dir is missing the recovery rolls FORWARD (renames
     * it in); when the live dir exists the tmp is a superseded or
     * unapplied copy and is discarded — the next redact re-derives it.
-    * Called by [[redact]] and [[vacuum]]. */
-  def recoverRedactions(): Unit = {
-    val mdir = new Path(s"$basePath/manifests")
-    if (fs.exists(mdir))
-      fs.listStatus(mdir).toSeq
-        .filter(_.getPath.getName.startsWith(".tmp-redact-v="))
-        .foreach { st =>
-          val v = st.getPath.getName.stripPrefix(".tmp-redact-v=").toLong
-          val live = new Path(manifestDir(v))
-          if (!fs.exists(live)) {
-            if (!fs.rename(st.getPath, live))
-              throw new java.io.IOException(
-                s"redact recovery failed: ${st.getPath} -> $live")
-          } else fs.delete(st.getPath, true): Unit
-        }
-  }
+    * A stray dir naming no version is left alone. Called by [[redact]]
+    * and [[vacuum]]. */
+  def recoverRedactions(): Unit = BlobGroups.rollForward(fs, manifestsRoot, "redact")
 }
 
 /** Serializable helpers for the parity path — companion-object (not

@@ -959,7 +959,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       var copied = 0
       val usedInVersion = scala.collection.mutable.Set.empty[String]
       val names = parts.toIndexedSeq.map { p =>
-        val digest = streamMd5(p)
+        val digest = BlobGroups.streamMd5(fs, p)
         val pooled = seen.get(digest).filterNot(usedInVersion.contains).getOrElse {
           val name = s"${java.util.UUID.randomUUID().toString.take(12)}-adopt.parquet"
           org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(poolDir, name), false, conf)
@@ -974,17 +974,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         opParams = s"from $srcBase")
       v -> ((copied, names.size - copied))
     }.toMap
-  }
-
-  private def streamMd5(p: Path): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = fs.open(p)
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
   }
 
   /** Row-level CDC between two versions, MANIFEST-PRUNED: a pool file
@@ -1365,6 +1354,33 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     (toDrop, prune(vs.filterNot(toDrop.contains)))
   }
 
+  /** Pool files referenced by NO surviving manifest — the ONE
+    * traversal behind both [[orphans]] (report) and [[vacuum]]
+    * (delete), so the audit can never preview a different set than
+    * the sweep reclaims. */
+  private def unreferencedPoolFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val referenced = referencedPoolFiles()
+    if (!fs.exists(poolDir)) Seq.empty
+    else fs.listStatus(poolDir).toSeq
+      .filter(st => st.isFile && !referenced(st.getPath.getName))
+  }
+
+  /** Pool files any manifest references, registered shallow clones'
+    * included (they share this pool; a dropped clone's base is gone
+    * and simply stops contributing). Metadata-sized. */
+  private def referencedPoolFiles(): Set[String] = {
+    val clones = registeredClones(basePath)
+      .filter(b => fs.exists(new Path(b, "_manifests")))
+      .map(b => new ManifestStore(spark, b, ""))
+    (this +: clones).flatMap(s => s.versions()
+      .flatMap(v => s.manifest(v).select("file").collect().map(_.getString(0)))).toSet
+  }
+
+  private def requirePoolOwner(op: String): Unit =
+    require(isPoolOwner,
+      s"$op must run on the pool owner ($poolOwnerBase) — this store is a " +
+        "shallow clone reading a foreign pool, which is not its to reclaim")
+
   /** Orphan audit — [[vacuum]]'s report-only twin: pool files
     * referenced by NO surviving manifest (leaked by a crashed writer,
     * a failed prune, or an out-of-band copy), as (file, bytes) rows.
@@ -1373,33 +1389,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * [[storageReport]] (which counts only REFERENCED bytes). Same
     * cost shape as vacuum: one metadata listing of the pool plus the
     * manifests' `file` column — no data file is opened. */
-  /** Pool files referenced by NO surviving manifest — the ONE
-    * traversal behind both [[orphans]] (report) and [[vacuum]]
-    * (delete), so the audit can never preview a different set than
-    * the sweep reclaims. */
-  private def unreferencedPoolFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-    // registered shallow clones share this pool: their manifests'
-    // references count too (a dropped clone's base is gone and simply
-    // stops contributing). Metadata-sized: |clones| × Σ|manifests|.
-    val cloneRefs: Seq[String] = registeredClones(basePath)
-      .filter(b => fs.exists(new Path(b, "_manifests")))
-      .flatMap { b =>
-        val c = new ManifestStore(spark, b, "")
-        c.versions().flatMap(v => c.manifest(v).select("file").collect().map(_.getString(0)))
-      }
-    val referenced: Set[String] = (versions()
-      .flatMap(v => manifest(v).select("file").collect().map(_.getString(0)))
-      ++ cloneRefs).toSet
-    if (!fs.exists(poolDir)) Seq.empty
-    else fs.listStatus(poolDir).toSeq
-      .filter(st => st.isFile && !referenced(st.getPath.getName))
-  }
-
-  private def requirePoolOwner(op: String): Unit =
-    require(isPoolOwner,
-      s"$op must run on the pool owner ($poolOwnerBase) — this store is a " +
-        "shallow clone reading a foreign pool, which is not its to reclaim")
-
   def orphans(): DataFrame = {
     import spark.implicits._
     requirePoolOwner("orphans")
@@ -1434,17 +1423,34 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   // -------------------------------------------------------------------
   // Durability ladder for the SHARED POOL — [[ChunkStore]]'s discipline
   // (XOR parity sidecars → mirror replicate/repair → rotating sampled
-  // scrub) at pool-file granularity. A lost pool file today breaks
-  // EVERY version whose manifest references it; these rungs restore it
-  // without (parity) or with (mirror) a second repository. Pool files
-  // are IMMUTABLE under stable names, which keeps every rung simple:
-  // a parity index never sees an in-place rewrite (only appends and
-  // vacuum deletions), a mirror sync is complete by name-diff, and a
-  // repair verifies itself against the recorded md5 before landing.
-  // All publication rides the store's tmp+rename/vacuum discipline.
+  // scrub) at pool-file granularity, over [[BlobGroups]]. A lost pool
+  // file today breaks EVERY version whose manifest references it;
+  // these rungs restore it without (parity) or with (mirror) a second
+  // repository. Pool files are IMMUTABLE under stable names, which
+  // keeps every rung simple: a parity index never sees an in-place
+  // rewrite (only appends and vacuum deletions), a mirror sync is
+  // complete by name-diff, and a repair verifies itself against the
+  // recorded md5 before landing. A parked sidecar carries its group in
+  // its name (`.tmp-parityold-g=<prefix>-*`) so recovery knows where
+  // it belongs.
 
   private def parityRoot = new Path(s"$basePath/_pool_parity")
   private def groupDir(g: String) = new Path(parityRoot, s"g=$g")
+  private val asidePrefix = ".tmp-parityold-g="
+  private def poolGroup(g: String) = BlobGroups.Group(poolDir, groupDir(g),
+    new Path(s"$basePath/.tmp-parity-${java.util.UUID.randomUUID()}"),
+    new Path(s"$basePath/$asidePrefix$g-${java.util.UUID.randomUUID()}"))
+
+  /** The groups with a live sidecar. */
+  private def liveGroups(): Seq[String] =
+    if (!fs.exists(parityRoot)) Nil
+    else fs.listStatus(parityRoot).map(_.getPath.getName).filter(_.startsWith("g="))
+      .map(_.drop(2)).toSeq
+
+  /** Every indexed pool file: name -> (group, bytes, md5). */
+  private def parityIndex(): Map[String, (String, Long, String)] =
+    liveGroups().flatMap(g => BlobGroups.readIndex(fs, groupDir(g))
+      .map(e => e._1 -> ((g, e._2, e._3)))).toMap
 
   /** Parity group of a pool file under a `chars`-wide scheme: the
     * first `chars` hex chars of its UUID-derived name — 16^chars
@@ -1456,10 +1462,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * (every sidecar of one scheme shares the `g=<prefix>` width, so no
     * separate metadata file can drift from what is actually on disk);
     * 0 when no parity exists yet. */
-  private def liveParityChars(): Int =
-    if (!fs.exists(parityRoot)) 0
-    else fs.listStatus(parityRoot).map(_.getPath.getName).filter(_.startsWith("g="))
-      .map(_.length - 2).maxOption.getOrElse(0)
+  private def liveParityChars(): Int = liveGroups().map(_.length).maxOption.getOrElse(0)
 
   /** The scheme width a pool of `nFiles` earns: the smallest prefix
     * whose 16^w groups hold ≈`parityFilesPerGroup` files each — the
@@ -1475,103 +1478,24 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     c
   }
 
-  private def poolFileNames(): Seq[String] =
-    if (!fs.exists(poolDir)) Seq.empty
-    else fs.listStatus(poolDir).filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toIndexedSeq
+  private def poolFileNames(): Seq[String] = BlobGroups.fileNames(fs, poolDir)
 
-  /** One pass over the named pool files: (XOR of contents, index of
-    * (name, bytes, md5)). The frame persists across the two actions so
-    * every byte is READ ONCE; the XOR reduce combines map-side. */
-  private def poolXorOf(names: Seq[String]): (Array[Byte], Seq[(String, Long, String)]) = {
-    val spark0 = spark
-    import spark0.implicits._
-    val df = spark.read.format("binaryFile")
-      .load(names.map(n => new Path(poolDir, n).toString): _*)
-      .select(element_at(split(col("path"), "/"), -1).as("name"), col("content"))
-      .as[(String, Array[Byte])]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val index = df.map(nc => (nc._1, nc._2.length.toLong, ChunkStore.md5hex(nc._2)))
-        .collect().toSeq
-      (df.map(_._2).reduce(ChunkStore.xorPad _), index)
-    } finally df.unpersist(): Unit
-  }
-
-  /** Parse a group's sidecar index; empty when absent. */
-  private def readPoolParityIndex(g: String): Seq[(String, Long, String)] = {
-    val idxPath = new Path(groupDir(g), "index.tsv")
-    if (!fs.exists(idxPath)) Seq.empty
-    else {
-      val in = fs.open(idxPath)
-      val raw = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      new String(raw, "UTF-8").split("\n").filter(_.nonEmpty).map { l =>
-        val Array(n, len, m) = l.split("\t"); (n, len.toLong, m)
-      }.toSeq
-    }
-  }
-
-  /** The ONE sidecar publish (build + update): tmp dir under the store
-    * root, xor.bin + index.tsv, rename-old-ASIDE + rename-new-in +
-    * delete-old. A crash BETWEEN the two renames leaves the group with
-    * no live `g=<prefix>` and the previous complete sidecar parked as
-    * `.tmp-parityold-g=<prefix>-<uuid>` (the group rides in the name
-    * so recovery knows where it belongs); [[recoverParityAsides]]
-    * restores or retires it before every parity read/maintenance pass
-    * AND before [[vacuum]]'s TTL sweep — the no-sidecar window is
-    * closed by recovery, not merely narrowed. An unpublished
-    * `.tmp-parity-*` ages out via vacuum. */
-  private def publishPoolParity(g: String, parity: Array[Byte],
-      index: Seq[(String, Long, String)]): Unit = {
-    val tmp = new Path(s"$basePath/.tmp-parity-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(tmp)
-    val out = fs.create(new Path(tmp, "xor.bin"), true)
-    try out.write(parity) finally out.close()
-    val idx = fs.create(new Path(tmp, "index.tsv"), true)
-    try idx.write(index.sortBy(_._1).map { case (n, len, m) => s"$n\t$len\t$m" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally idx.close()
-    fs.mkdirs(parityRoot)
-    val live = groupDir(g)
-    val aside = new Path(s"$basePath/.tmp-parityold-g=$g-${java.util.UUID.randomUUID()}")
-    val hadOld = fs.exists(live)
-    if (hadOld && !fs.rename(live, aside))
-      throw new java.io.IOException(s"pool parity retire failed for group $g")
-    if (!fs.rename(tmp, live)) {
-      if (hadOld) fs.rename(aside, live): Unit
-      throw new java.io.IOException(s"pool parity publish failed for group $g")
-    }
-    if (hadOld) fs.delete(aside, true): Unit
-  }
-
-  /** Land or retire parked previous sidecars (the publish crash
-    * window): live group dir absent → the aside IS the previous
-    * complete sidecar, restore it; present → the publish completed,
-    * retire the aside. Idempotent, metadata-only. Pre-group-tagged
-    * asides (no `g=` in the name) are unplaceable and left to
-    * vacuum's TTL. */
+  /** Lands or retires parked sidecars before every parity pass and
+    * before [[vacuum]]'s TTL sweep; an unpublished `.tmp-parity-*`
+    * ages out via vacuum. */
   private def recoverParityAsides(): Unit =
-    if (fs.exists(new Path(basePath))) {
-      fs.listStatus(new Path(basePath)).map(_.getPath)
-        .filter(_.getName.startsWith(".tmp-parityold-g=")).foreach { aside =>
-          val g = aside.getName.stripPrefix(".tmp-parityold-g=").takeWhile(_ != '-')
-          fs.mkdirs(parityRoot)
-          if (!fs.exists(groupDir(g))) fs.rename(aside, groupDir(g)): Unit
-          else fs.delete(aside, true): Unit
-        }
-    }
+    BlobGroups.restoreAsides(fs, new Path(basePath), asidePrefix)(
+      rest => groupDir(rest.takeWhile(_ != '-')))
 
   /** Build (or rebuild) the XOR parity sidecar of every non-empty pool
     * group — single-file-loss resilience WITHOUT a second repository
-    * (the RAID-5 / par2 idea): each sidecar holds the byte-wise XOR of
-    * its group's files (padded to the longest) plus an index of
-    * (file, bytes, md5); losing ANY ONE indexed file reconstructs
-    * exactly as parity ⊕ survivors ([[repairFromParity]]), verified
-    * against the indexed md5 before it lands. Parity is ADVISORY state
-    * with fail-closed semantics: files appended after the last build
-    * are uncovered until the next [[updateParity]], and a repair can
-    * never resurrect a vacuumed file (md5 verification refuses any
-    * drifted reconstruction). Groups are independent — on a cluster
+    * (the RAID-5 / par2 idea, format in [[BlobGroups]]): losing ANY
+    * ONE indexed file reconstructs exactly as parity ⊕ survivors
+    * ([[repairFromParity]]), md5-verified before it lands. Parity is
+    * ADVISORY state with fail-closed semantics: files appended after
+    * the last build are uncovered until the next [[updateParity]], and
+    * a repair can never resurrect a vacuumed file (md5 verification
+    * refuses any drifted reconstruction). Groups are independent — on a cluster
     * they pipeline. The group width derives from the CURRENT pool size
     * (see [[derivedParityChars]]), so coverage granularity scales with
     * the pool; a width change regroups wholesale, retiring old-scheme
@@ -1581,36 +1505,28 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * detection is [[updateParity]]. Returns sidecars (re)built. */
   def buildParity(): Long = {
     recoverParityAsides()
-    var built = 0L
     val names = poolFileNames()
     val chars = derivedParityChars(names.size)
-    names.groupBy(parityGroupOf(_, chars)).foreach { case (g, ns) =>
-      val (parity, index) = poolXorOf(ns)
-      publishPoolParity(g, parity, index)
-      built += 1
-    }
-    if (fs.exists(parityRoot))
-      fs.listStatus(parityRoot).map(_.getPath.getName)
-        .filter(n => n.startsWith("g=") && n.length - 2 != chars)
-        .foreach(n => fs.delete(new Path(parityRoot, n), true))
-    built
+    val groups = names.groupBy(parityGroupOf(_, chars))
+    groups.foreach { case (g, ns) => BlobGroups.build(spark, fs, poolGroup(g), ns) }
+    liveGroups().filter(_.length != chars).foreach(g => fs.delete(groupDir(g), true))
+    groups.size.toLong
   }
 
-  /** INCREMENTAL parity maintenance — XOR parity is a group sum, so
-    * the append-only steady state (every indexed file still present,
-    * new merge output appended) folds in as parity' = parity ⊕
-    * (⊕ new files) at O(|new files|) I/O. A group whose indexed files
-    * vanished to VACUUM (no surviving manifest references them)
-    * rebuilds from scratch; an uncovered group gets a fresh build.
+  /** INCREMENTAL parity maintenance ([[BlobGroups.maintain]]): the
+    * append-only steady state folds new merge output in at O(|new
+    * files|) I/O; a group whose indexed files vanished to VACUUM (no
+    * surviving manifest references them) rebuilds; an uncovered group
+    * gets a fresh build.
     *
     * FAIL-CLOSED on damage: an indexed file that is missing yet still
-    * MANIFEST-REFERENCED is a loss, not a reclaim — rebuilding that
-    * group would overwrite the only parity able to reconstruct it, so
-    * the group is SKIPPED and surfaced instead; run
-    * [[repairFromParity]] first, then maintain. The retire pass honors
-    * the same rule (a 1-file group whose only file is damage-lost is
-    * exactly parity ⊕ nothing — deleting its sidecar would forfeit
-    * the repair).
+    * MANIFEST-REFERENCED (by this store or a registered shallow clone)
+    * is a loss, not a reclaim — rebuilding that group would overwrite
+    * the only parity able to reconstruct it, so the group is SKIPPED
+    * and surfaced instead; run [[repairFromParity]] first, then
+    * maintain. The retire pass honors the same rule (a 1-file group
+    * whose only file is damage-lost is exactly parity ⊕ nothing —
+    * deleting its sidecar would forfeit the repair).
     *
     * Scheme migration: when the pool has outgrown the live group width
     * ([[derivedParityChars]] > live), maintenance regroups wholesale
@@ -1621,121 +1537,53 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * skipped group names). */
   def updateParity(): (Long, Long, Seq[String]) = {
     recoverParityAsides()
-    var incremental = 0L; var rebuilt = 0L
-    val skipped = Seq.newBuilder[String]
     val names = poolFileNames()
-    val referenced: Set[String] = versions()
-      .flatMap(v => manifest(v).select("file").collect().map(_.getString(0))).toSet
-    val damaged = referenced.filterNot(names.toSet)
+    val referenced = referencedPoolFiles()
     val live = liveParityChars()
-    val derived = derivedParityChars(names.size)
-    if ((live == 0 || derived > live) && damaged.isEmpty)
+    if ((live == 0 || derivedParityChars(names.size) > live) &&
+        referenced.subsetOf(names.toSet))
       return (0L, buildParity(), Nil)
-    val chars = math.max(live, 1)
-    val present = names.groupBy(parityGroupOf(_, chars))
-    present.foreach { case (g, ns) =>
-      val index = readPoolParityIndex(g)
-      val nameSet = ns.toSet
-      val lost = index.map(_._1).filterNot(nameSet)
-      val fresh = ns.filterNot(index.map(_._1).toSet)
-      if (lost.exists(referenced)) skipped += g
-      else if (index.isEmpty || lost.nonEmpty) {
-        val (parity, idx) = poolXorOf(ns)
-        publishPoolParity(g, parity, idx)
-        rebuilt += 1
-      } else if (fresh.nonEmpty) {
-        val old = {
-          val in = fs.open(new Path(groupDir(g), "xor.bin"))
-          try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        }
-        val (freshXor, freshIdx) = poolXorOf(fresh)
-        publishPoolParity(g, ChunkStore.xorPad(old, freshXor), index ++ freshIdx)
-        incremental += 1
-      }
+    val present = names.groupBy(parityGroupOf(_, math.max(live, 1)))
+    val maintained = present.toSeq.map { case (g, ns) =>
+      g -> BlobGroups.maintain(spark, fs, poolGroup(g), ns, referenced)
     }
     // groups whose files ALL vanished: retire the stale sidecar so
     // repair/scrub never chase files vacuum legitimately reclaimed —
     // unless a referenced (damage-lost) file is among them (fail closed)
-    if (fs.exists(parityRoot))
-      fs.listStatus(parityRoot).map(_.getPath.getName)
-        .filter(_.startsWith("g=")).map(_.drop(2))
-        .filterNot(present.contains)
-        .foreach { g =>
-          if (readPoolParityIndex(g).exists(e => referenced(e._1))) skipped += g
-          else { fs.delete(groupDir(g), true); rebuilt += 1 }
-        }
-    (incremental, rebuilt, skipped.result())
+    val retired = liveGroups().filterNot(present.contains).map { g =>
+      if (BlobGroups.readIndex(fs, groupDir(g)).exists(e => referenced(e._1)))
+        g -> BlobGroups.Skipped
+      else { fs.delete(groupDir(g), true); g -> BlobGroups.Rebuilt }
+    }
+    val all = maintained ++ retired
+    (all.count(_._2 == BlobGroups.Folded).toLong, all.count(_._2 == BlobGroups.Rebuilt).toLong,
+      all.collect { case (g, BlobGroups.Skipped) => g })
   }
 
-  /** Reconstruct every single-file loss the parity sidecars cover:
-    * a group missing EXACTLY ONE indexed file rebuilds it as
-    * parity ⊕ surviving files, md5-verified before the tmp+rename
-    * lands — after which every referencing version restores
-    * byte-identical (content-stable names mean no manifest edit is
-    * needed). Multi-loss groups, failed verifies, oversized entries
-    * (in-memory assembly is Array-bounded at 2 GiB) and read errors
-    * land on the unrepairable list — per-group honest refusals that
-    * never abort the other groups' repairs; [[repairFrom]] (mirror)
-    * is the next rung for them. Returns (repaired paths, unrepairable
-    * group names). */
+  /** Reconstruct every single-file loss the parity sidecars cover
+    * ([[BlobGroups.repair]]), after which every referencing version
+    * restores byte-identical (content-stable names mean no manifest
+    * edit is needed). Refused groups go on the unrepairable list;
+    * [[repairFrom]] (mirror) is the next rung for them. Returns
+    * (repaired paths, unrepairable group names). */
   def repairFromParity(): (Seq[String], Seq[String]) = {
     recoverParityAsides()
-    val spark0 = spark
-    import spark0.implicits._
-    val repaired = Seq.newBuilder[String]
-    val unrepairable = Seq.newBuilder[String]
-    if (!fs.exists(parityRoot)) return (Nil, Nil)
     val present = poolFileNames().toSet
-    fs.listStatus(parityRoot).map(_.getPath.getName)
-      .filter(_.startsWith("g=")).map(_.drop(2)).sorted
-      .foreach { g =>
-        val index = readPoolParityIndex(g)
-        val missing = index.filterNot(e => present(e._1))
-        val xorBin = new Path(groupDir(g), "xor.bin")
-        if (missing.size == 1 && !fs.exists(xorBin)) unrepairable += g
-        else if (missing.size == 1) {
-          val (lostName, lostLen, lostMd5) = missing.head
-          try {
-            if (lostLen > Int.MaxValue.toLong)
-              throw new java.io.IOException(
-                s"$lostName is ${lostLen} bytes — beyond in-memory parity assembly")
-            val survivors = index.map(_._1).filter(present)
-            val survivorXor =
-              if (survivors.isEmpty) Array.empty[Byte]
-              else spark.read.format("binaryFile")
-                .load(survivors.map(n => new Path(poolDir, n).toString): _*)
-                .select(col("content")).as[Array[Byte]]
-                .reduce(ChunkStore.xorPad _)
-            val parity = {
-              val in = fs.open(xorBin)
-              try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-            }
-            val rebuiltBytes = java.util.Arrays.copyOf(
-              ChunkStore.xorPad(parity, survivorXor), lostLen.toInt)
-            if (ChunkStore.md5hex(rebuiltBytes) == lostMd5) {
-              val tmp = new Path(poolDir, s".${lostName}.tmp-${java.util.UUID.randomUUID()}")
-              val out = fs.create(tmp, true)
-              try out.write(rebuiltBytes) finally out.close()
-              if (!fs.rename(tmp, new Path(poolDir, lostName)))
-                throw new java.io.IOException(s"repair publish failed: $lostName")
-              repaired += new Path(poolDir, lostName).toString
-            } else unrepairable += g
-          } catch {
-            case scala.util.control.NonFatal(_) => unrepairable += g
-          }
-        } else if (missing.size > 1) unrepairable += g
-      }
-    (repaired.result(), unrepairable.result())
+    val outcomes = liveGroups().sorted
+      .map(g => g -> BlobGroups.repair(spark, fs, poolGroup(g), present))
+    (outcomes.collect { case (_, BlobGroups.Repaired(p)) => p },
+      outcomes.collect { case (g, BlobGroups.Unrepairable) => g })
   }
 
   /** Content scrub of the shared pool — `borg check` at pool-file
     * granularity: every parity-indexed file's bytes must re-derive
     * the indexed md5 (bit-rot, truncation, swapped content all
-    * surface), every MANIFEST-referenced file must exist, and a
-    * referenced file no sidecar indexes reports `uncovered` (appended
-    * since the last parity build — [[updateParity]] is the cure).
-    * One distributed pass over the slice's file bytes; unreferenced
-    * unindexed files are [[orphans]]' jurisdiction, not damage.
+    * surface), every MANIFEST-referenced file (this store's or a
+    * registered shallow clone's) must exist, and a referenced file no
+    * sidecar indexes reports `uncovered` (appended since the last
+    * parity build — [[updateParity]] is the cure). One distributed
+    * pass over the slice's file bytes; unreferenced unindexed files
+    * are [[orphans]]' jurisdiction, not damage.
     *
     * `rotation = (run, runsPerCycle)` makes the scrub SAMPLED and
     * deterministic on the parity groups (16^w for the live scheme
@@ -1759,31 +1607,14 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       case None => true
     }
     val present = poolFileNames().toSet
-    val indexed: Map[String, (String, Long, String)] =
-      (if (!fs.exists(parityRoot)) Nil
-       else fs.listStatus(parityRoot).map(_.getPath.getName)
-         .filter(_.startsWith("g=")).map(_.drop(2)).toSeq
-         .flatMap(g => readPoolParityIndex(g).map(e => e._1 -> ((g, e._2, e._3)))))
-        .toMap
-    val referenced: Set[String] = versions()
-      .flatMap(v => manifest(v).select("file").collect().map(_.getString(0))).toSet
-    val slice = (indexed.keySet ++ referenced)
+    val indexed = parityIndex()
+    val slice = (indexed.keySet ++ referencedPoolFiles())
       .filter(n => inRotation(parityGroup(n)))
     val toScan = slice.filter(n => present(n) && indexed.contains(n)).toSeq.sorted
     val verdicts: Seq[(String, String, Long, String)] =
       (if (toScan.isEmpty) Nil
-       else {
-         val want = toScan.map(n => n -> indexed(n)._3).toMap
-         spark.read.format("binaryFile")
-           .load(toScan.map(n => new Path(poolDir, n).toString): _*)
-           .select(element_at(split(col("path"), "/"), -1).as("name"), col("content"))
-           .as[(String, Array[Byte])]
-           .map { case (n, bytes) => (n, bytes.length.toLong, ChunkStore.md5hex(bytes)) }
-           .collect().toSeq
-           .map { case (n, len, m) =>
-             (n, parityGroup(n), len,
-               if (m == want(n)) "ok" else "bit_rot")
-           }
+       else BlobGroups.entries(spark, toScan.map(new Path(poolDir, _))).map { case (n, len, m) =>
+         (n, parityGroup(n), len, if (m == indexed(n)._3) "ok" else "bit_rot")
        }) ++
       slice.filterNot(present).toSeq.sorted
         .map(n => (n, parityGroup(n), indexed.get(n).map(_._2).getOrElse(0L), "missing_file")) ++
@@ -1832,14 +1663,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       }
       tfs.delete(tmp, true): Unit
     }
-    // 2. manifest versions the mirror lacks
-    val newVs = versions().diff(target.versions())
-    newVs.foreach(v => target.landManifestCopy(fs, manifestDir(v), v))
-    // 3. fingerprint audit of common versions (immutable ⇒ any drift
-    // is mirror-side damage; source is the authority)
-    val common = versions().intersect(target.versions()).diff(newVs)
-    val stale = common.filter(v => manifestFingerprint(v) != target.manifestFingerprint(v))
-    stale.foreach(v => target.landManifestCopy(fs, manifestDir(v), v))
+    // 2. manifest versions the mirror lacks, 3. then a fingerprint audit
+    // of common versions (immutable ⇒ any drift is mirror-side damage;
+    // source is the authority)
+    val (newVs, stale) = BlobGroups.syncManifests(spark, fs, new Path(basePath, "_manifests"),
+      versions(), tfs, new Path(targetBasePath, "_manifests"), target.versions())(
+      _.filter(v => manifestFingerprint(v) != target.manifestFingerprint(v)))
     (missing.size.toLong, bytes, newVs, stale.size)
   }
 
@@ -1852,43 +1681,14 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Land a verbatim copy of a source manifest dir as version `v` —
-    * complete tmp then delete-live + atomic rename; the tmp is always
-    * a COMPLETE manifest, so the crash window rolls forward via
-    * [[recoverReplications]]. */
-  private def landManifestCopy(srcFs: org.apache.hadoop.fs.FileSystem,
-      src: Path, v: Long): Unit = {
-    val tmp = new Path(s"$basePath/_manifests/.tmp-repl-v=$v")
-    fs.delete(tmp, true)
-    if (!org.apache.hadoop.fs.FileUtil.copy(srcFs, src, fs, tmp, false,
-        spark.sparkContext.hadoopConfiguration))
-      throw new java.io.IOException(s"replicate manifest copy failed: $src -> $tmp")
-    val live = manifestDir(v)
-    fs.delete(live, true)
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"replicate manifest publish failed: $tmp -> $live")
-  }
-
   /** Land (or discard) interrupted [[replicateTo]] manifest copies —
-    * a `.tmp-repl-v=` dir is always complete, so live-missing rolls
-    * FORWARD; live-present discards the superseded copy (the next
-    * replicate re-derives it from the fingerprint compare). Called by
-    * [[replicateTo]] (target side) and [[vacuum]]. */
-  def recoverReplications(): Unit = {
-    val mdir = new Path(s"$basePath/_manifests")
-    if (fs.exists(mdir))
-      fs.listStatus(mdir).toSeq
-        .filter(_.getPath.getName.startsWith(".tmp-repl-v="))
-        .foreach { st =>
-          val v = st.getPath.getName.stripPrefix(".tmp-repl-v=").toLong
-          val live = manifestDir(v)
-          if (!fs.exists(live)) {
-            if (!fs.rename(st.getPath, live))
-              throw new java.io.IOException(
-                s"replication recovery failed: ${st.getPath} -> $live")
-          } else fs.delete(st.getPath, true): Unit
-        }
-  }
+    * a copy dir is always complete, so live-missing rolls FORWARD;
+    * live-present discards the superseded copy (the next replicate
+    * re-derives it from the fingerprint compare); a stray copy dir
+    * that names no version is left alone ([[BlobGroups.rollForward]]).
+    * Called by [[replicateTo]] (target side) and [[vacuum]]. */
+  def recoverReplications(): Unit =
+    BlobGroups.rollForward(fs, new Path(basePath, "_manifests"), "repl")
 
   /** DISASTER-RECOVERY REPAIR from a mirror — the rung above parity,
     * for damage parity can't serve (multi-loss groups, bit-rot plus
@@ -1906,14 +1706,10 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     require(mirrorBasePath != basePath, "repair needs a distinct mirror root")
     val mirror = new ManifestStore(spark, mirrorBasePath, keyCol, statsCols)
     val mfs = new Path(mirrorBasePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val indexed: Map[String, String] =
-      (if (!fs.exists(parityRoot)) Nil
-       else fs.listStatus(parityRoot).map(_.getPath.getName)
-         .filter(_.startsWith("g=")).map(_.drop(2)).toSeq
-         .flatMap(g => readPoolParityIndex(g).map(e => e._1 -> e._3))).toMap
     val damaged = scrubPool()
       .filter(col("status") === "bit_rot" || col("status") === "missing_file")
       .select("file").collect().map(_.getString(0)).toSeq.sorted
+    val indexed = parityIndex()
     val repaired = Seq.newBuilder[String]
     val unrepairable = Seq.newBuilder[String]
     damaged.foreach { n =>
@@ -1925,13 +1721,9 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
         if (!org.apache.hadoop.fs.FileUtil.copy(mfs, src, fs, tmp, false,
             spark.sparkContext.hadoopConfiguration))
           throw new java.io.IOException(s"mirror copy failed: $n")
-        val ok = indexed.get(n).forall { wantMd5 =>
-          val in = fs.open(tmp)
-          val raw = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-          ChunkStore.md5hex(raw) == wantMd5
-        }
-        if (!ok) { fs.delete(tmp, false); unrepairable += n }
-        else {
+        if (!indexed.get(n).forall(e => BlobGroups.streamMd5(fs, tmp) == e._3)) {
+          fs.delete(tmp, false); unrepairable += n
+        } else {
           fs.delete(new Path(poolDir, n), false) // bit-rot victim, if present
           if (!fs.rename(tmp, new Path(poolDir, n)))
             throw new java.io.IOException(s"repair publish failed: $n")

@@ -742,6 +742,17 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   protected def storedSchema(version: Long): org.apache.spark.sql.types.StructType =
     evolvedSchema(version).getOrElse(ParquetSchemas.schema(spark, dir(version)))
 
+  /** One listing of the (flat) version dir serves both halves: the
+    * schema is that listing's footer pick, the one [[storedSchema]]'s
+    * own listing makes. */
+  override protected def schemaAndPaths(version: Long)
+      : (org.apache.spark.sql.types.StructType, Seq[String]) = {
+    val listing = fs.listStatus(new Path(dir(version))).toSeq
+    (evolvedSchema(version).orElse(ParquetSchemas.ofFiles(spark, listing))
+      .getOrElse(ParquetSchemas.schema(spark, dir(version))),
+      listing.map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString))
+  }
+
   /** The zone map, or for a version without one its files' footers. */
   protected def fileEntries(version: Long): DataFrame =
     zoneMap(version).getOrElse(landedStats(dataFiles(version), Nil))

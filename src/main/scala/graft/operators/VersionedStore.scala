@@ -57,6 +57,10 @@ trait VersionedStore {
   /** `version`'s stored read schema: its `_schema.json` sidecar when a
     * schema verb recorded one, else one data file's footer. */
   protected def storedSchema(version: Long): StructType
+  /** ([[storedSchema]], [[dataPaths]]) of one version; a layout that
+    * lists a version dir for both lists it once. */
+  protected def schemaAndPaths(version: Long): (StructType, Seq[String]) =
+    (storedSchema(version), dataPaths(version))
 
   /** `files` (a subset of `version`'s data files) read the way a full
     * read of the version reads them: deletion vector applied, evolved
@@ -863,7 +867,7 @@ trait VersionedStore {
       fill: Map[String, Any] = Map.empty): (Int, Int) = {
     requireRewrite(fromVersion, toVersion)
     val entries = fileEntries(fromVersion)
-    val baseSchema = storedSchema(fromVersion)
+    val (baseSchema, paths) = schemaAndPaths(fromVersion)
     val baseNames = baseSchema.fieldNames.toSet
     delta.schema.fields.filter(f => baseNames(f.name)).foreach { f =>
       val bt = baseSchema(f.name).dataType
@@ -893,7 +897,6 @@ trait VersionedStore {
     val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
     val touch = VersionedStore.touchedFiles(touchKeys, entries, keyCol)
     val touched = touch.files.map(fileName)
-    val paths = dataPaths(fromVersion)
     val touchedPaths = named(paths, touched)
     val survivors =
       if (touched.isEmpty) align(delta).limit(0)
@@ -935,7 +938,7 @@ trait VersionedStore {
       deleteKeys: Option[DataFrame] = None, numNewFiles: Int = 2,
       commitTs: Option[Long] = None): (Int, Long) = {
     requireRewrite(fromVersion, toVersion)
-    val schema = storedSchema(fromVersion)
+    val (schema, paths) = schemaAndPaths(fromVersion)
     require(delta.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
       s"mergeDeltaMor is same-schema only (have ${schema.fieldNames.mkString(",")}, " +
         s"delta ${delta.schema.fieldNames.mkString(",")}) — an evolving merge " +
@@ -943,7 +946,6 @@ trait VersionedStore {
     val entries = fileEntries(fromVersion)
     val touchKeys = VersionedStore.mergeKeys(delta, deleteKeys, keyCol)
     val touched = VersionedStore.touchedFiles(touchKeys, entries, keyCol).files.map(fileName)
-    val paths = dataPaths(fromVersion)
     val matchRows =
       if (touched.isEmpty) noPositions
       else positions(scanWithPos(fromVersion, named(paths, touched), schema)
@@ -983,8 +985,7 @@ trait VersionedStore {
       s"deleteWhere mode must be auto|cow|dv, got '$mode'")
     requireRewrite(fromVersion, toVersion)
     val entries = fileEntries(fromVersion)
-    val schema = storedSchema(fromVersion)
-    val paths = dataPaths(fromVersion)
+    val (schema, paths) = schemaAndPaths(fromVersion)
     val candidates = pruneHint.flatMap { case (c, lo, hi) =>
       // entry stats describe the STORED (physical) columns
       val (minC, maxC) =
@@ -1047,11 +1048,10 @@ trait VersionedStore {
       s"updateWhere: SET may not touch the key column '$keyCol' — a key change " +
         "is a delete+insert, route it through mergeDelta")
     requireRewrite(fromVersion, toVersion)
-    val schema = storedSchema(fromVersion)
+    val (schema, paths) = schemaAndPaths(fromVersion)
     val missing = set.keys.filterNot(schema.fieldNames.contains)
     require(missing.isEmpty, s"updateWhere: not in the schema: ${missing.mkString(", ")}")
     val entries = fileEntries(fromVersion)
-    val paths = dataPaths(fromVersion)
     val matched = scanWithPos(fromVersion, paths, schema)
       .filter(coalesce(pred, lit(false))).materialize()
     val matchRows = positions(matched)
@@ -1121,8 +1121,7 @@ trait VersionedStore {
       return (dataPaths(fromVersion).size, 0, 0L)
     }
     val dropped = dv.get.filter(col("file").isin(masked.toSeq: _*)).count()
-    val schema = storedSchema(fromVersion)
-    val paths = dataPaths(fromVersion)
+    val (schema, paths) = schemaAndPaths(fromVersion)
     val (carried, rewritten) = rewrite(fromVersion, toVersion, entries, paths, masked,
       Some(land(scanRows(fromVersion, named(paths, masked), schema), numNewFiles,
         schema)),
@@ -1189,8 +1188,7 @@ trait VersionedStore {
         SnapshotStore.predSql(pred))
       return (dataPaths(fromVersion).size, 0)
     }
-    val schema = storedSchema(fromVersion)
-    val paths = dataPaths(fromVersion)
+    val (schema, paths) = schemaAndPaths(fromVersion)
     // an evolved schema may hide a derived partition column the range
     // split needs: derive it (a pure function of its source)
     val rows = deriveParts(scanRows(fromVersion, named(paths, scope), schema))
@@ -1405,25 +1403,13 @@ trait VersionedStore {
     * policy says, until [[release]]. Retention is automation; holds
     * are human compliance decisions automation must not override. One
     * `_holds/<version>` marker file, idempotent. */
-  def hold(version: Long): Unit = {
-    require(hasVersion(version), s"version $version does not exist")
-    val p = new Path(s"$basePath/_holds/$version")
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(Array.emptyByteArray) finally out.close()
-  }
+  def hold(version: Long): Unit = BlobGroups.hold(fs, basePath, version, hasVersion(version))
 
   /** Release a [[hold]]; idempotent. */
-  def release(version: Long): Unit =
-    fs.delete(new Path(s"$basePath/_holds/$version"), false): Unit
+  def release(version: Long): Unit = BlobGroups.release(fs, basePath, version)
 
   /** Versions currently under a legal hold. */
-  def holds(): Seq[Long] = {
-    val dir0 = new Path(s"$basePath/_holds")
-    if (!fs.exists(dir0)) Seq.empty
-    else fs.listStatus(dir0).map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
-  }
+  def holds(): Seq[Long] = BlobGroups.holds(fs, basePath)
 }
 
 object VersionedStore {

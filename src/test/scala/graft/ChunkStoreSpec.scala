@@ -835,11 +835,25 @@ class ChunkStoreSpec extends SparkSpec {
     assert(repaired.nonEmpty && unrepairable.isEmpty)
     assert(canon(store.restore(2L)) == canon(payloadRows(true, true, true)))
     assert(store.scrub().filter(col("status") =!= "ok").count() == 0)
-    // a swapped/missing indexed file forces that bucket down the rebuild path
+    // a lost indexed file under a live sidecar is damage: maintenance
+    // fails closed (rebuilding would forfeit the only repair), parity
+    // then restores the file byte-identically, and maintenance resumes
     val victim2 = bucketDataFiles(base).values.flatten.head
+    val victim2Bytes = {
+      val in = fs.open(victim2)
+      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    }
     fs.delete(victim2, false)
     val (i2, r2) = store.updateParity()
-    assert(r2 >= 1, s"vanished indexed file must trigger a rebuild, got ($i2, $r2)")
+    assert(r2 == 0, s"a damage-lost indexed file must not rebuild its bucket, got ($i2, $r2)")
+    val (repaired2, unrepairable2) = store.repairFromParity()
+    assert(repaired2 == Seq(victim2.toString) && unrepairable2.isEmpty)
+    val back2 = {
+      val in = fs.open(victim2)
+      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    }
+    assert(java.util.Arrays.equals(back2, victim2Bytes))
+    store.updateParity()
     assert(store.verifyParity().collect()
       .forall(_.getAs[String]("status") == "covered"))
   }

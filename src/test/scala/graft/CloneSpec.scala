@@ -166,4 +166,29 @@ class CloneSpec extends SparkSpec {
     spark.sql("ALTER TABLE vcat.own RENAME TO own2")
     assert(content(spark.sql("SELECT * FROM vcat.own2")) == Set((1L, "a2"), (2L, "b")))
   }
+
+  test("owner parity maintenance honors clone references: a clone-only pool file lost after prune repairs") {
+    val root = tmpBase("par")
+    val src = new ManifestStore(spark, s"$root/src", "k")
+    src.write((1L to 40L).map(k => (k, s"a$k")).toDF("k", "v"), 1L, numFiles = 4)
+    val clone = src.cloneTo(s"$root/dst", 1L)
+    val before = content(clone.read(1L))
+    src.buildParity()
+    // the owner rewrites every row and forgets v1: the v1 files are
+    // now referenced by the clone alone
+    src.mergeDelta(1L, 2L, (1L to 40L).map(k => (k, s"b$k")).toDF("k", "v")): Unit
+    src.prune(keep = Seq(2L)): Unit
+    val victim = clone.manifest(1L).select("file").as[String].collect().sorted.head
+    assert(!src.manifest(2L).select("file").as[String].collect().contains(victim))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$root/src/files/$victim"), false)
+    // a file the clone still references is damage: its group is skipped,
+    // so the parity that can rebuild it survives maintenance
+    val (_, _, skipped) = src.updateParity()
+    assert(skipped == Seq(victim.take(1)), s"expected the victim's group skipped, got $skipped")
+    val (repaired, unrepairable) = src.repairFromParity()
+    assert(repaired.size == 1 && unrepairable.isEmpty)
+    assert(content(clone.read(1L)) == before)
+  }
 }

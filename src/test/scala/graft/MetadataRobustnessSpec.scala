@@ -54,6 +54,43 @@ class MetadataRobustnessSpec extends SparkSpec {
     assert(store.versions() == Seq(1L))
   }
 
+  private def exists(p: String): Boolean = {
+    val path = new Path(p)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+  }
+
+  test("linked layout: a stray .tmp-repl-v=junk dir disables neither vacuum nor replicateTo") {
+    val base = tmpBase("graft-stray-repl-linked")
+    val mirror = tmpBase("graft-stray-repl-mirror")
+    val st = new ManifestStore(spark, base, "k")
+    st.write(rows(1 to 20, "a"), 1L)
+    Seq(base, mirror).foreach(b => mkdirs(s"$b/_manifests/.tmp-repl-v=junk"))
+    st.vacuum(): Unit
+    val (_, _, copied, _) = st.replicateTo(mirror)
+    assert(copied == Seq(1L))
+    assert(new ManifestStore(spark, mirror, "k").read(1L).count() == 20L)
+    // left alone, never guessed into a version
+    assert(exists(s"$base/_manifests/.tmp-repl-v=junk"))
+    assert(st.versions() == Seq(1L))
+  }
+
+  test("chunk repository: stray .tmp-repl-v= / .tmp-redact-v= dirs disable neither vacuum, replicateTo nor redact") {
+    val base = tmpBase("graft-stray-tmp-chunks")
+    val mirror = tmpBase("graft-stray-tmp-chunk-mirror")
+    val store = new ChunkStore(spark, base, Array.fill[Byte](32)(7))
+    store.backup(Seq((1L, "payload one".getBytes("UTF-8")), (2L, "payload two".getBytes("UTF-8")))
+      .toDF("id", "payload"), "id", "payload", 1L)
+    for (b <- Seq(base, mirror); kind <- Seq("repl", "redact"))
+      mkdirs(s"$b/manifests/.tmp-$kind-v=junk")
+    store.vacuum(): Unit
+    val (_, _, copied, _) = store.replicateTo(mirror)
+    assert(copied == Seq(1L))
+    assert(store.redact(Seq(2L))._1 == 1)
+    assert(store.restore(1L).select("id").as[Long].collect().toSeq == Seq(1L))
+    assert(exists(s"$base/manifests/.tmp-redact-v=junk"))
+    assert(store.versions() == Seq(1L))
+  }
+
   /** Runs `body` with the store logger captured at WARN. */
   private def warnings(body: => Unit): Seq[String] = {
     val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
