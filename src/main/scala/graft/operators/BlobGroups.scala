@@ -206,13 +206,20 @@ private[operators] object BlobGroups {
   }
 
   /** Land version `v` under the manifests `root`: `fill` writes the
-    * whole replacement into `.tmp-<kind>-v=<v>`, then the live dir is
-    * deleted and the tmp renamed in, so the delete→rename crash window
-    * rolls forward ([[rollForward]]). */
+    * whole replacement into a staging dir that [[rollForward]] never
+    * takes for a version, which becomes `.tmp-<kind>-v=<v>` only once
+    * complete; then the live dir is deleted and the tmp renamed in, so
+    * the delete→rename crash window rolls forward. A crash mid-fill
+    * leaves only the staging dir, swept by the next attempt. */
   def landVersion(fs: FileSystem, root: Path, kind: String, v: Long)(fill: Path => Unit): Unit = {
     val tmp = new Path(root, s".tmp-$kind-v=$v")
-    fs.delete(tmp, true) // leftover from an earlier crashed attempt
-    fill(tmp)
+    val staging = new Path(root, s".tmp-$kind-v=$v.fill")
+    // leftovers from an earlier crashed attempt
+    fs.delete(staging, true)
+    fs.delete(tmp, true)
+    fill(staging)
+    if (!fs.rename(staging, tmp))
+      throw new java.io.IOException(s"$kind staging failed: $staging -> $tmp")
     val live = new Path(root, s"v=$v")
     fs.delete(live, true)
     if (!fs.rename(tmp, live))

@@ -781,14 +781,23 @@ class ChunkStore(spark: SparkSession, basePath: String, master: Array[Byte],
       .toDF("ref_hex", "bytes", "blob", "bucket")
       .write.mode("errorifexists").partitionBy("bucket")
       .parquet(s"$targetBasePath/chunks")
-    // manifests last = the commit point for the whole rotation
+    // manifests last = the commit point for the whole rotation: every
+    // one stages under one tmp dir, and one rename publishes them all
     val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = new Path(s"$targetBasePath/.tmp-rekey-${java.util.UUID.randomUUID()}")
+    fs.mkdirs(tmp)
     versions().foreach { v =>
       val src = new Path(manifestDir(v))
-      val dst = new Path(s"$targetBasePath/manifests/v=$v")
+      val dst = new Path(tmp, s"v=$v")
       if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf))
         throw new java.io.IOException(s"rekey manifest copy failed: $src -> $dst")
     }
+    // a manifests dir holding no version (a crashed backup's tmp) would
+    // take the rename inside it
+    if (fs.exists(target.manifestsRoot)) fs.delete(target.manifestsRoot, true)
+    if (!fs.rename(tmp, target.manifestsRoot))
+      throw new java.io.IOException(
+        s"rekey manifest publish failed: $tmp -> ${target.manifestsRoot}")
     holds().foreach(target.hold)
     target
   }

@@ -439,7 +439,10 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       op = op, opParams = opParams, statsFrom = Some(fromVersion))
   }
 
-  protected def fileEntries(version: Long): DataFrame = manifest(version)
+  protected def fileStats(version: Long): Option[DataFrame] = Some(manifest(version))
+
+  /** Manifest entries are bare pool file names. */
+  protected def entryPath(file: String): String = new Path(poolDir, file).toString
 
   /** The rewrite commit on this layout: the landing goes into the pool
     * ([[landWithStats]] — footer statistics, zero-row files dropped),
@@ -669,70 +672,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     else readDataFiles(version, files)
   }
 
-  /** SOURCE-column time-range read over an EVOLVED partition spec:
-    * every file prunes through the spec IT was written under — a
-    * `days(ts)` file via its day tuple, a `months(ts)` file via its
-    * month tuple — by translating each derived value to its covered
-    * source interval ([[SnapshotStore.sourceRangeOverlap]]). Files of
-    * a spec that cannot bound `source` (identity spec, different
-    * source) are kept conservatively; the row filter on top is exact
-    * either way. The prune that makes `days→months` evolution FREE:
-    * no rewrite, and a time query still opens only overlapping files
-    * from BOTH eras. */
-  def readSourceRange(version: Long, source: String, lo: Any, hi: Any): DataFrame = {
-    val (hist, _) = specHistory
-    val man = manifest(version)
-    val sid = specIdCol(man)
-    val specs = hist.map(_.map(SnapshotStore.parsePartitionSpec))
-    val conds = specs.zipWithIndex.map { case (sps, id) =>
-      sps.find(sp => sp.transform.isDefined && sp.source == source &&
-          man.columns.contains(s"min_${sp.name}")) match {
-        case Some(sp) => sid === id && SnapshotStore.sourceRangeOverlap(sp,
-          col(s"min_${sp.name}"), col(s"max_${sp.name}"), lo, hi)
-        case None => sid === id // this spec cannot bound the source: keep
-      }
-    }
-    val cond = if (conds.isEmpty) lit(true) else conds.reduce(_ || _)
-    val hit = man.filter(cond).select("file").collect()
-      .map(r => new Path(poolDir, r.getString(0)).toString)
-    val base = if (hit.isEmpty) emptyRead(version) else readDataFiles(version, hit.toIndexedSeq)
-    base.filter(col(source).cast("timestamp") >= lit(lo).cast("timestamp") &&
-      col(source).cast("timestamp") <= lit(hi).cast("timestamp"))
-  }
-
-  /** Key-range read pruned at the MANIFEST level: only files whose
-    * [min_key, max_key] envelope overlaps [lo, hi] are opened. */
-  def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame = {
-    val hit = manifest(version)
-      .filter(col("max_key") >= lit(lo) && col("min_key") <= lit(hi))
-      .select("file").collect().map(r => new Path(poolDir, r.getString(0)).toString)
-    val base =
-      if (hit.isEmpty) emptyRead(version)
-      else readDataFiles(version, hit.toIndexedSeq)
-    base.filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
-  }
-
-
-  /** Secondary-column range read pruned at the MANIFEST level, for a
-    * column named in `statsCols` at construction: only files whose
-    * recorded [min_c, max_c] envelope overlaps [lo, hi] open — the
-    * linked twin of SnapshotStore.readWhere. */
-  def readWhere(version: Long, column: String, lo: Any, hi: Any): DataFrame = {
-    // manifest stats describe the STORED (physical) columns — a
-    // metadata-only rename translates the lookup, not the sidecar
-    val phys = SnapshotStore.physicalOf(evolvedSchema(version), column)
-    require(statsCols.contains(phys) || storedPartitionBy().contains(column),
-      s"readWhere needs '$column' in statsCols or the partition spec " +
-        s"(have: $statsCols ++ ${storedPartitionBy()})")
-    val hit = manifest(version)
-      .filter(col(s"max_$phys") >= lit(lo) && col(s"min_$phys") <= lit(hi))
-      .select("file").collect().map(r => new Path(poolDir, r.getString(0)).toString)
-    val base =
-      if (hit.isEmpty) emptyRead(version)
-      else readDataFiles(version, hit.toIndexedSeq)
-    base.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
   /** Z-ordered publish into the pool — [[SnapshotStore.writeZOrdered]]
     * on the linked layout: files cluster on the Morton interleave of
     * `zCols`, and because per-file min/max stats for every z column
@@ -773,64 +712,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     publish(version, statsFor(names, effectiveStatsCols), commitTs,
       op = "writeZOrdered")
   }
-
-  /** Read under a CONJUNCTION of range predicates with manifest-level
-    * file pruning: a file survives only if its envelope overlaps EVERY
-    * range — on a z-ordered layout each dimension independently
-    * eliminates files, so the conjunction reads the small corner the
-    * predicates carve out. Result always equals the full-scan filter.
-    */
-  def readWhereAll(version: Long, preds: Seq[(String, Any, Any)]): DataFrame = {
-    require(preds.nonEmpty, "readWhereAll needs at least one predicate")
-    val scv = evolvedSchema(version)
-    val physOf = (c: String) => SnapshotStore.physicalOf(scv, c)
-    preds.foreach { case (c, _, _) =>
-      require(c == keyCol || statsCols.contains(physOf(c))
-          || storedPartitionBy().contains(c),
-        s"readWhereAll needs manifest stats for '$c' " +
-          s"(have key + $statsCols ++ ${storedPartitionBy()})") }
-    val survivors = preds.foldLeft(manifest(version)) { case (m, (c, lo, hi)) =>
-      val (loC, hiC) =
-        if (c == keyCol) (col("min_key"), col("max_key"))
-        else (col(s"min_${physOf(c)}"), col(s"max_${physOf(c)}"))
-      m.filter(hiC >= lit(lo) && loC <= lit(hi))
-    }
-    val hit = survivors.select("file").collect()
-      .map(r => new Path(poolDir, r.getString(0)).toString)
-    val base =
-      if (hit.isEmpty) emptyRead(version)
-      else readDataFiles(version, hit.toIndexedSeq)
-    // a DERIVED temporal column (ts__day/…) may be hidden by the
-    // version's evolved read schema even though the files carry it:
-    // recompute it from its source (a pure function) for the residual
-    // filter, then drop the synthesized copy — callers keep the
-    // frame's declared shape
-    val specs = storedPartitionSpecs().filter(_.transform.isDefined)
-    val synth = preds.map(_._1).distinct
-      .filterNot(base.columns.contains)
-      .flatMap(c => specs.find(_.name == c))
-    val derived = synth.foldLeft(base)((d, sp) =>
-      d.withColumn(sp.name, SnapshotStore.deriveColumn(sp)))
-    val filtered = preds.foldLeft(derived) { case (df, (c, lo, hi)) =>
-      df.filter(col(c) >= lit(lo) && col(c) <= lit(hi)) }
-    synth.map(_.name).foldLeft(filtered)(_ drop _)
-  }
-
-  /** Point-read for a key set: manifest key envelopes prune the file
-    * list (one broadcast range probe over |manifest| rows), then one
-    * semi-join restricts to exactly the requested keys. The linked twin of
-    * SnapshotStore.readForKeys' zone-map stage. */
-  def readForKeys(version: Long, keys: DataFrame): DataFrame = {
-    val k = keys.select(keys.columns.head).toDF(keyCol).distinct().materialize()
-    val man = manifest(version)
-    val hit = k.join(broadcast(man),
-        col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
-      .select("file").distinct().collect()
-      .map(r => new Path(poolDir, r.getString(0)).toString)
-    if (hit.isEmpty) emptyRead(version)
-    else readDataFiles(version, hit.toIndexedSeq).join(k, Seq(keyCol), "left_semi")
-  }
-
 
   /** BLOOM FILTER INDEX (Delta's bloom index): one Bloom filter PER
     * POOL FILE over `column`'s values (as strings — type-uniform at
@@ -975,174 +856,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       v -> ((copied, names.size - copied))
     }.toMap
   }
-
-  /** Row-level CDC between two versions, MANIFEST-PRUNED: a pool file
-    * shared by both manifests holds byte-identical rows in both
-    * versions and can never contribute an insert/update/delete, so
-    * only the files EXCLUSIVE to either side are scanned — on a
-    * merge-chained store that is O(|changed files|), not O(snapshot).
-    * Classification: `insert` (key only in `to`), `delete` (key only
-    * in `from`), `update` (key in both exclusive sets, content
-    * fingerprint over the common non-key columns differs). */
-  def diff(fromVersion: Long, toVersion: Long): DataFrame =
-    diffImpl(fromVersion, toVersion, preImages = false)
-
-  /** [[diff]] in Delta's CDF shape: an updated key emits TWO rows —
-    * `update_preimage` (the old values, already in hand on the
-    * from-side) and `update_postimage` (the new values) — while
-    * inserts and deletes are unchanged. The pre-image costs no extra
-    * scan class: within-exclusive updates re-read only the from-side
-    * EXCLUSIVE files, MoR updates reuse the DV-masked rows the plain
-    * diff already materializes. */
-  def diffCdf(fromVersion: Long, toVersion: Long): DataFrame =
-    diffImpl(fromVersion, toVersion, preImages = true)
-
-  /** [[diffCdf]] restricted to keys in [lo, hi] — [[diffKeyRange]]'s
-    * CDF-shaped sibling (same envelope-pruned exclusive-file opens;
-    * preimage/delete-value reads are range-bounded too). */
-  def diffCdfKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame =
-    diffImpl(fromVersion, toVersion, preImages = true, keyRange = Some((lo, hi)))
-
-  /** [[diff]] restricted to keys in [lo, hi] — the change feed's
-    * KEY-PREDICATE PUSHDOWN unit: each side's exclusive files prune
-    * further against their manifest key envelopes BEFORE any open, so
-    * a one-tenant consumer of a 100 TB store's feed pays only the
-    * overlapping exclusive files per commit, and the MoR mask pass
-    * filters to the range after its position-bounded reads.
-    * Semantically identical to `diff(...).filter(key in range)`
-    * (spec-proven): a key outside the range can never pair with one
-    * inside it, so range-filtering both sides preserves every
-    * insert/update/delete classification. */
-  def diffKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame =
-    diffImpl(fromVersion, toVersion, preImages = false, keyRange = Some((lo, hi)))
-
-  private def diffImpl(fromVersion: Long, toVersion: Long,
-      preImages: Boolean, keyRange: Option[(Any, Any)] = None): DataFrame = {
-    val fromFiles = manifest(fromVersion).select("file").collect().map(_.getString(0)).toSet
-    val toFiles = manifest(toVersion).select("file").collect().map(_.getString(0)).toSet
-    val inRange: DataFrame => DataFrame = df => keyRange.fold(df) { case (lo, hi) =>
-      df.filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi)) }
-    def side(version: Long, exclusive: Set[String]): DataFrame = {
-      // key pushdown: only envelope-overlapping exclusive files open
-      val chosen = keyRange.fold(exclusive) { case (lo, hi) =>
-        manifest(version)
-          .filter(col("max_key") >= lit(lo) && col("min_key") <= lit(hi))
-          .select("file").collect().map(_.getString(0)).toSet intersect exclusive
-      }
-      if (chosen.isEmpty) emptyRead(version)
-      else inRange(readDataFiles(version,
-        chosen.toSeq.sorted.map(n => new Path(poolDir, n).toString)))
-    }
-    val a = side(fromVersion, fromFiles diff toFiles)
-    val b = side(toVersion, toFiles diff fromFiles)
-    // fingerprint the COMMON non-key columns so an evolved schema does
-    // not flag every carried row as updated
-    val common = a.columns.toSeq.filter(c => c != keyCol && b.columns.contains(c)).sorted
-    def fp(df: DataFrame) = df.select(col(keyCol),
-      graft.functions.Fx.fastFingerprint(common.map(col): _*).as("__fp"))
-    val af = fp(a).withColumnRenamed("__fp", "__fp_a")
-    val bf = fp(b).withColumnRenamed("__fp", "__fp_b")
-    // materialized ONCE: the (key, change_type) frame is consumed by
-    // the new-side join, the delete-side join, and (CDF mode) the
-    // pre-image join — without the checkpoint each consumer re-reads
-    // both sides' exclusive files and re-runs the fingerprint
-    // full-outer join (2-3 redundant passes per commit step). The
-    // frame is |changed keys|-sized, strictly smaller than the feed
-    // it serves; the sides' content scans below stay visible to
-    // inputFiles-based pruning gates.
-    val changed = af.join(bf, Seq(keyCol), "full_outer")
-      .select(col(keyCol),
-        when(col("__fp_a").isNull, lit("insert"))
-          .when(col("__fp_b").isNull, lit("delete"))
-          .when(col("__fp_a") =!= col("__fp_b"), lit("update"))
-          .as("change_type"))
-      .filter(col("change_type").isNotNull) // both-sides-equal rows drop out
-      // lazy: diff() is a DataFrame FACTORY — an eager pin here fired
-      // Spark jobs at construction even for plan-only consumers
-      // (ExplainDump, multi-commit walks that prune this step); the
-      // first real consumer still materializes it exactly once
-      .materialize(eager = false)
-    val newSide = b.join(changed.filter(col("change_type") =!= "delete"), Seq(keyCol))
-    // MERGE-ON-READ commits move no old files: rows masked between the
-    // two versions' deletion vectors inside SHARED files are invisible
-    // to the file-set diff — read exactly those rows from the older
-    // side's content. A masked key that REAPPEARS in the to-side
-    // exclusive files is one UPDATE (mergeDeltaMor/updateWhere's
-    // mask-and-land), not an insert+delete pair — emitting both would
-    // make the feed self-contradictory at one commit version; only
-    // masked keys absent from the to-side are genuine deletes.
-    val (newFixed, dvDeletes, dvPre) =
-      dvDeletesBetween(fromVersion, toVersion, fromFiles intersect toFiles)
-        .map(inRange) match { // pushdown: masked rows outside the range drop
-        case None => (newSide, None, None)
-        case Some(dv) =>
-          val moved = dv.join(b.select(keyCol), Seq(keyCol), "left_semi")
-          val marker = moved.select(col(keyCol)).withColumn("__mv", lit(1))
-          val fixed = newSide.join(marker, Seq(keyCol), "left_outer")
-            .withColumn("change_type",
-              when(col("__mv").isNotNull && col("change_type") === "insert",
-                lit("update")).otherwise(col("change_type")))
-            .drop("__mv")
-          val deletes = dv.join(b.select(keyCol), Seq(keyCol), "left_anti")
-            .withColumn("change_type", lit("delete"))
-          (fixed, Some(deletes), Some(moved))
-      }
-    if (!preImages) {
-      val delSide = a.join(changed.filter(col("change_type") === "delete"), Seq(keyCol))
-      val base = newFixed.unionByName(delSide, allowMissingColumns = true)
-      dvDeletes.fold(base)(base.unionByName(_, allowMissingColumns = true))
-    } else {
-      // CDF shape: ONE pass over the from-side exclusive files serves
-      // BOTH the delete rows and the update pre-images (diff keys are
-      // unique, so the inner join ≡ the two separate joins it
-      // replaces row-for-row) — the from-side content was scanned
-      // twice here, once per change type.
-      val aOld = a.join(changed.filter(col("change_type") =!= "insert"), Seq(keyCol))
-        .withColumn("change_type",
-          when(col("change_type") === "update", lit("update_preimage"))
-            .otherwise(col("change_type")))
-      val withDv = dvDeletes.fold(newFixed)(
-        newFixed.unionByName(_, allowMissingColumns = true))
-      val post = withDv.withColumn("change_type",
-        when(col("change_type") === "update", lit("update_postimage"))
-          .otherwise(col("change_type")))
-      val preDv = dvPre.map(_.withColumn("change_type", lit("update_preimage")))
-      preDv.foldLeft(post.unionByName(aOld, allowMissingColumns = true))(
-        _.unionByName(_, allowMissingColumns = true))
-    }
-  }
-
-  /** Rows newly masked by `toVersion`'s DV relative to `fromVersion`'s,
-    * within `sharedNames` — served with their OLD content (the diff
-    * delete-row contract). None when no DV grew. */
-  private def dvDeletesBetween(fromVersion: Long, toVersion: Long,
-      sharedNames: Set[String]): Option[DataFrame] =
-    dvFrame(toVersion).flatMap { dvTo =>
-      val grown0 = dvFrame(fromVersion)
-        .fold(dvTo)(dvFrom => dvTo.join(dvFrom, Seq("file", "pos"), "left_anti"))
-      val grown = grown0.filter(col("file").isin(sharedNames.toSeq: _*))
-        .materialize()
-      val files = grown.select("file").distinct().collect().map(_.getString(0))
-      if (files.isEmpty) None
-      else {
-        val sc = evolvedSchema(fromVersion)
-        val paths = files.map(n => new Path(poolDir, n).toString).toIndexedSeq
-        // physical-name scan + logical projection (the column-mapping
-        // read contract): a rename between the versions must not turn
-        // the feed's delete/preimage values NULL — these rows carry the
-        // deleted row's CONTENT by contract
-        val raw = sc.map(x =>
-            spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
-          .getOrElse(ParquetSchemas.readFiles(spark, paths))
-        val withPos0 = raw.select(col("*"),
-          element_at(split(col("_metadata.file_path"), "/"), -1).as("__f"),
-          col("_metadata.row_index").as("__p"))
-        val withPos = sc.map(SnapshotStore.toLogical(withPos0, _)).getOrElse(withPos0)
-        Some(withPos
-          .join(broadcast(grown.toDF("__f", "__p")), Seq("__f", "__p"), "left_semi")
-          .drop("__f", "__p"))
-      }
-    }
 
   /** Integrity audit of one version against the pool: every manifest
     * entry's file must exist and hold exactly its recorded row count

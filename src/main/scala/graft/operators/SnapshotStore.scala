@@ -753,9 +753,10 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       listing.map(_.getPath).filter(_.getName.startsWith("part-")).map(_.toString))
   }
 
-  /** The zone map, or for a version without one its files' footers. */
-  protected def fileEntries(version: Long): DataFrame =
-    zoneMap(version).getOrElse(landedStats(dataFiles(version), Nil))
+  protected def fileStats(version: Long): Option[DataFrame] = zoneMap(version)
+
+  /** Zone-map entries are the data files' own (absolute) paths. */
+  protected def entryPath(file: String): String = file
 
   /** The rewrite commit on this layout: the landing goes into the
     * staged version dir ([[landFlat]], which keeps a zero-row file: it
@@ -997,41 +998,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       Some((zCols ++ pcs).filterNot(_ == keyCol).distinct))
   }
 
-  /** Restore under a CONJUNCTION of range predicates: rows of `version`
-    * satisfying every `(column, lo, hi)`. Files are pruned by the
-    * INTERSECTION of each predicate's zone-map survivor set (a file
-    * must overlap every range to contain a qualifying row) — on a
-    * z-ordered layout each dimension independently eliminates files,
-    * so the conjunction reads the small corner both predicates carve
-    * out. Falls back per-column to "no pruning" when stats are absent;
-    * result always equals the full-scan filter. */
-  def readWhereAll(version: Long, preds: Seq[(String, Any, Any)]): DataFrame = {
-    require(preds.nonEmpty, "readWhereAll needs at least one predicate")
-    val filter = preds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-    // a DERIVED temporal column may be hidden by the version's evolved
-    // read schema even though the files carry it (CREATE TABLE chains
-    // pin the declared columns): recompute it from its source for the
-    // residual filter, then drop the synthesized copy
-    val specs = storedPartitionSpecs().filter(_.transform.isDefined)
-    def filteredOver(df: DataFrame): DataFrame = {
-      val synth = preds.map(_._1).distinct
-        .filterNot(df.columns.contains)
-        .flatMap(c => specs.find(_.name == c))
-      val derived = synth.foldLeft(df)((d, sp) =>
-        d.withColumn(sp.name, SnapshotStore.deriveColumn(sp)))
-      synth.map(_.name).foldLeft(derived.filter(filter))(_ drop _)
-    }
-    val survivorSets = preds.flatMap { case (c, lo, hi) => prunedFilesBy(version, c, lo, hi) }
-    if (survivorSets.isEmpty) filteredOver(read(version))
-    else {
-      val files = survivorSets.map(_.toSet).reduce(_ intersect _)
-      if (files.isEmpty) emptyRead(version)
-      else filteredOver(readDataFiles(version, files.toSeq))
-    }
-  }
-
-
   /** BLOOM FILTER INDEX — [[ManifestStore.buildBloomIndex]]'s
     * dir-per-version twin: one filter per data file over `column`
     * (string-uniform), sized by each file's parquet footer row count,
@@ -1091,7 +1057,8 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * the STORED rows, as every commit's zone map does: a deletion
     * vector masks rows, not the files' counts and bounds. */
   def buildZoneMap(version: Long, statsCols: Seq[String] = Nil): Unit =
-    statsQuery(recomputeDerived(unmasked(Seq(dir(version)), evolvedSchema(version))),
+    statsQuery(recomputeDerived(unmasked(version, fs.listStatus(new Path(dir(version))).toSeq,
+        evolvedSchema(version))),
       statsCols.filterNot(_ == keyCol))
       .coalesce(1).write.mode("overwrite").parquet(zmapDir(version).toString)
 
@@ -1104,49 +1071,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     if (!fs.exists(new Path(d, "_SUCCESS"))) None
     else Some(ManifestCache.read(spark, fs, d.toString, version, d))
   }
-
-  /** Files whose stats range for `column` overlaps [lo, hi] — None
-    * when the version has no zone map or no stats for that column.
-    * The overlap test runs typed through Catalyst (`lit(lo)` adopts
-    * the column's native ordering). A null stats bound (all-null file
-    * column) keeps the file — never prune on missing information. */
-  def prunedFilesBy(version: Long, column: String, lo: Any, hi: Any): Option[Seq[String]] = {
-    // zone-map stats describe the STORED (physical) columns — a
-    // metadata-only rename translates the lookup, not the sidecar
-    val phys = if (column == keyCol) column
-      else SnapshotStore.physicalOf(evolvedSchema(version), column)
-    val (minC, maxC) =
-      if (column == keyCol) ("min_key", "max_key") else (s"min_$phys", s"max_$phys")
-    zoneMap(version)
-      .filter(zm => zm.columns.contains(minC) && zm.columns.contains(maxC))
-      .map(_.filter(!(col(maxC) < lit(lo) || col(minC) > lit(hi)) ||
-          col(minC).isNull || col(maxC).isNull)
-        .select("file").collect().map(_.getString(0)).toSeq)
-  }
-
-  /** Files whose key range overlaps [lo, hi] — see [[prunedFilesBy]]. */
-  def prunedFiles(version: Long, lo: Any, hi: Any): Option[Seq[String]] =
-    prunedFilesBy(version, keyCol, lo, hi)
-
-  /** Restore filtered on ANY stats-mapped column: rows of `version`
-    * with `column` in [lo, hi], reading only zone-map-overlapping
-    * files when stats exist (falls back to a full scan + filter —
-    * same result, no skip). */
-  def readWhere(version: Long, column: String, lo: Any, hi: Any): DataFrame = {
-    val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
-    prunedFilesBy(version, column, lo, hi) match {
-      case Some(files) if files.isEmpty =>
-        // provably no overlapping file: an empty frame, no scan planned
-        emptyRead(version)
-      case Some(files) => readDataFiles(version, files).filter(pred)
-      case None => read(version).filter(pred)
-    }
-  }
-
-  /** Keyed restore: rows of `version` with key in [lo, hi] — see
-    * [[readWhere]]. */
-  def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame =
-    readWhere(version, keyCol, lo, hi)
 
   /** Land `df`'s part files FLAT into `tmp` (the version dir under
     * construction) and return their names. Partitioned stores stage
@@ -1312,33 +1236,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     (survivors.length, droppedNames.size, rowsDropped)
   }
 
-  /** Delta-driven restore read: rows of `version` whose key appears in
-    * `keys` (a one-column frame of key values, e.g. a CDC delta's
-    * keys). Stacks every pruning layer this store has, coarsest
-    * first — the 100 TB read path for "give me these N keys out of a
-    * snapshot":
-    *
-    *  1. FILE level: zone map limits the scan to files overlapping the
-    *     delta's [min, max] key envelope ([[readKeyRange]]);
-    *  2. ROW level: a Bloom filter of the delta keys, applied inside
-    *     the scan's codegen, drops ~all non-matching rows BEFORE the
-    *     join shuffle (BloomPrune — exchange carries ~|matches|, not
-    *     |file subset|);
-    *  3. EXACT: the semi-join removes Bloom false positives.
-    *
-    * Result is identical to `read(version).join(keys, semi)`
-    * (spec-proven); only the cost differs. */
-  def readForKeys(version: Long, keys: DataFrame,
-      expectedItems: Long = 4L * 1000 * 1000, fpp: Double = 0.03): DataFrame = {
-    val keyName = keys.columns.head
-    val bounds = keys.agg(min(col(keyName)).as("lo"), max(col(keyName)).as("hi")).head()
-    if (bounds.isNullAt(0)) return emptyRead(version)
-    val ranged = readKeyRange(version, bounds.get(0), bounds.get(1))
-    val pruned = org.apache.spark.sql.graft.BloomPrune.prune(
-      ranged, col(keyCol), keys, col(keyName), expectedItems, fpp)
-    pruned.join(keys.select(col(keyName).as(keyCol)).distinct(), Seq(keyCol), "left_semi")
-  }
-
   /** Committed versions only: a `v=N` directory counts only if its
     * `_SUCCESS` marker exists (guards against partial dirs created by
     * external writers or pre-atomic layouts). */
@@ -1354,32 +1251,36 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .sorted
   }
 
-  /** `paths` as stored, without the version's DV: read under the
-    * physical names and projected to logical. */
-  private def unmasked(paths: Seq[String],
+  /** `listing` (data files of `version`'s dir) as stored, without the
+    * version's DV: read under the physical names and projected to
+    * logical. */
+  private def unmasked(version: Long, listing: Seq[org.apache.hadoop.fs.FileStatus],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema.fold(physical(paths, None))(x => SnapshotStore.toLogical(physical(paths, schema), x))
+    schema.fold(physical(version, listing, None))(x =>
+      SnapshotStore.toLogical(physical(version, listing, schema), x))
 
-  /** `paths` under their stored names: `schema`'s physical names, or
-    * the files' own schema. */
-  private def physical(paths: Seq[String],
+  /** `listing` under its stored names: `schema`'s physical names, or
+    * the files' own schema (the least one's footer). Spark's file index
+    * is seeded with the listing, so the read lists nothing more. */
+  private def physical(version: Long, listing: Seq[org.apache.hadoop.fs.FileStatus],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    schema.fold(ParquetSchemas.read(spark, paths: _*))(x =>
-      spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
+    ParquetSchemas.readListed(spark, new Path(dir(version)), listing,
+      schema.map(SnapshotStore.physicalSchema))
 
-  /** `paths` read as `version` reads them under its evolved schema:
+  /** `listing` read as `version` reads it under its evolved schema:
     * [[unmasked]] with the recorded fills, or through
     * [[withPositions]]' position mask when the version has a deletion
     * vector. */
-  private def masked(version: Long, paths: Seq[String]): DataFrame = {
+  private def masked(version: Long, listing: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
     val schema = evolvedSchema(version)
     recomputeDerived(dvFrame(version) match {
-      case None => schema.fold(unmasked(paths, None))(sc => applyFills(unmasked(paths, schema), sc))
-      case dv => withPositions(physical(paths, schema), dv, schema).drop("__f", "__p")
+      case None => schema.fold(unmasked(version, listing, None))(sc =>
+        applyFills(unmasked(version, listing, schema), sc))
+      case dv => withPositions(physical(version, listing, schema), dv, schema).drop("__f", "__p")
     })
   }
 
-  def read(version: Long): DataFrame = masked(version, Seq(dir(version)))
+  def read(version: Long): DataFrame = masked(version, fs.listStatus(new Path(dir(version))).toSeq)
 
   /** One version's checkpoint row REBUILT from its dir — the
     * self-heal / publish-time unit: commit ts from the sidecar (or
@@ -1418,8 +1319,11 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   /** Read specific data files of a version through its evolved schema
     * (if any) — the shared reader under every pruned-file path, so a
     * zone-map-pruned restore sees the same columns a full read does. */
-  protected def readDataFiles(version: Long, files: Seq[String]): DataFrame =
-    masked(version, files)
+  protected def readDataFiles(version: Long, files: Seq[String]): DataFrame = {
+    val names = files.map(fileName).toSet
+    masked(version,
+      fs.listStatus(new Path(dir(version))).toSeq.filter(s => names(s.getPath.getName)))
+  }
 
   /** The version's data file paths — a metadata-only listing. File
     * identity is the incremental-maintenance contract: [[mergeDelta]]
@@ -1510,116 +1414,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   }
 
   protected def statsFileName(p: Path): String = p.toUri.toString
-
-  /** SOURCE-column time-range read over an EVOLVED partition spec —
-    * [[ManifestStore.readSourceRange]]'s zone-map twin: every file
-    * prunes through the spec IT was written under, by translating its
-    * derived tuple to the covered source interval. */
-  def readSourceRange(version: Long, source: String, lo: Any, hi: Any): DataFrame = {
-    val (hist, _) = specHistory
-    val zm = zoneMap(version).getOrElse(
-      return read(version).filter(
-        col(source).cast("timestamp") >= lit(lo).cast("timestamp") &&
-        col(source).cast("timestamp") <= lit(hi).cast("timestamp")))
-    val sid = specIdCol(zm)
-    val specs = hist.map(_.map(SnapshotStore.parsePartitionSpec))
-    val conds = specs.zipWithIndex.map { case (sps, id) =>
-      sps.find(sp => sp.transform.isDefined && sp.source == source &&
-          zm.columns.contains(s"min_${sp.name}")) match {
-        case Some(sp) => sid === id && SnapshotStore.sourceRangeOverlap(sp,
-          col(s"min_${sp.name}"), col(s"max_${sp.name}"), lo, hi)
-        case None => sid === id // this spec cannot bound the source: keep
-      }
-    }
-    val cond = if (conds.isEmpty) lit(true) else conds.reduce(_ || _)
-    val hit = zm.filter(cond).select("file").collect().map(_.getString(0))
-    val base = if (hit.isEmpty) emptyRead(version)
-      else readDataFiles(version, hit.toIndexedSeq)
-    base.filter(col(source).cast("timestamp") >= lit(lo).cast("timestamp") &&
-      col(source).cast("timestamp") <= lit(hi).cast("timestamp"))
-  }
-
-  /** Row-level change classification between two versions:
-    * `insert` (key only in `to`), `delete` (key only in `from`),
-    * `update` (key in both, content fingerprint differs).
-    * Unchanged rows are not emitted.
-    *
-    * Schema-evolution aware: fingerprints cover the COMMON non-key
-    * columns of the two versions, so adding or dropping a column does
-    * not flag every row as updated (it would, if each side hashed its
-    * own full row). Column-level changes are reported separately by
-    * [[schemaDiff]]. */
-  def diff(fromVersion: Long, toVersion: Long): DataFrame =
-    diffFrames(read(fromVersion), read(toVersion))
-
-  /** [[diff]] in Delta's CDF shape — [[ManifestStore.diffCdf]]'s
-    * dir-per-version twin: an updated key emits `update_preimage`
-    * (old values) and `update_postimage` (new values) rows; inserts
-    * and deletes are unchanged. The pre-image re-reads the from-side
-    * for the updated keys only — on this layout the diff already
-    * scans both versions in full, so the extra pass is bounded by the
-    * update set, not the snapshot. */
-  def diffCdf(fromVersion: Long, toVersion: Long): DataFrame =
-    diffCdfFrom(diff(fromVersion, toVersion), read(fromVersion))
-
-  /** [[diffCdf]] restricted to keys in [lo, hi] — [[diffKeyRange]]'s
-    * CDF-shaped sibling: the diff AND the preimage/delete-value
-    * re-reads are zone-map-pruned to the range (a key in range has
-    * its old row in a range-overlapping file by definition). */
-  def diffCdfKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame =
-    diffCdfFrom(diffKeyRange(fromVersion, toVersion, lo, hi),
-      readKeyRange(fromVersion, lo, hi))
-
-  private def diffCdfFrom(d0: DataFrame, fromSide: DataFrame): DataFrame = {
-    // the plain diff is consumed three times below (update keys,
-    // delete keys, post-image rows) — materialize it once instead of
-    // re-running the fingerprint full-outer join per consumer; lazy,
-    // so building the frame fires no jobs until a consumer executes
-    val d = d0.materialize(eager = false)
-    // Delta's CDF delete rows carry the DELETED row's values (the
-    // pre-image) — this layout's plain diff emits key-only deletes,
-    // so the old rows re-read keys-bounded from the from-side. ONE
-    // pass serves both the update pre-images and the delete rows
-    // (diff keys are unique, so the inner join ≡ the two semi-joins
-    // it replaces row-for-row): the from-side was scanned twice here.
-    val oldKeys = d.filter(col("change_type").isin("update", "delete"))
-      .select(col(keyCol), col("change_type").as("__ct"))
-    val oldRows = fromSide.join(oldKeys, Seq(keyCol))
-      .withColumn("change_type",
-        when(col("__ct") === "update", lit("update_preimage"))
-          .otherwise(lit("delete")))
-      .drop("__ct")
-    d.filter(col("change_type") =!= "delete")
-      .withColumn("change_type",
-        when(col("change_type") === "update", lit("update_postimage"))
-          .otherwise(col("change_type")))
-      .unionByName(oldRows, allowMissingColumns = true)
-  }
-
-  /** [[diff]] restricted to keys in [lo, hi]: both sides read through
-    * the zone map ([[readKeyRange]]), so diffing one key range of a
-    * 100 TB snapshot pair costs only the overlapping files on each
-    * side. Semantically identical to `diff(...).filter(key in range)`
-    * (spec-proven) because a key outside the range can never pair with
-    * one inside it. */
-  def diffKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame =
-    diffFrames(readKeyRange(fromVersion, lo, hi), readKeyRange(toVersion, lo, hi))
-
-  private def diffFrames(from: DataFrame, to: DataFrame): DataFrame = {
-    val common = (from.columns.toSet intersect to.columns.toSet - keyCol).toSeq.sorted
-    val fp: DataFrame => Column = df => Fx.fastFingerprint(common.map(df(_)): _*)
-    val f = from.select(col(keyCol).as("__k"), fp(from).as("__fp_from"))
-    val t = to.withColumn("__fp_to", fp(to))
-    val joined = t.join(f, t(keyCol) === f("__k"), "full_outer")
-    joined
-      .withColumn("change_type",
-        when(col("__k").isNull, lit("insert"))
-          .when(col(keyCol).isNull, lit("delete"))
-          .when(col("__fp_to") =!= col("__fp_from"), lit("update")))
-      .filter(col("change_type").isNotNull)
-      .withColumn(keyCol, coalesce(col(keyCol), col("__k")))
-      .drop("__k", "__fp_from", "__fp_to")
-  }
 
   /** Column-level schema changes between two versions: columns added,
     * removed, or re-typed. Metadata-only (two parquet footers), no

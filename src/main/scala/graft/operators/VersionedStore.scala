@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetSchemas
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.functions.Fx
+
 /** The one interface over both version layouts: [[SnapshotStore]]
   * (one self-contained directory per version) and [[ManifestStore]]
   * (the "linked" layout: per-version manifests over a shared file
@@ -21,13 +23,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * ([[hasVersion]]), its stored schema ([[storedSchema]]), a masked
   * read of a file subset ([[readDataFiles]]), a carry publish
   * ([[publishCarry]]), a history entry rebuilt from the files
-  * ([[computeHistoryEntry]]), a version's per-file entries
-  * ([[fileEntries]]) and one rewrite commit ([[commitRewrite]]).
-  * Every body here (time travel, the deletion-vector and Bloom
-  * sidecars, the schema verbs, restore, the rewrite verbs,
-  * constraints, holds, column statistics, the history checkpoint, the
-  * optimistic-concurrency merge, partition-spec helpers) is written
-  * once over those. */
+  * ([[computeHistoryEntry]]), a version's per-file statistics
+  * ([[fileStats]]) and the readable path of one of their entries
+  * ([[entryPath]]), and one rewrite commit ([[commitRewrite]]).
+  * Every body here (time travel, the pruned reads, the diff family,
+  * the deletion-vector and Bloom sidecars, the schema verbs, restore,
+  * the rewrite verbs, constraints, holds, column statistics, the
+  * history checkpoint, the optimistic-concurrency merge,
+  * partition-spec helpers) is written once over those. */
 trait VersionedStore {
   val basePath: String
   val keyCol: String
@@ -80,12 +83,21 @@ trait VersionedStore {
     * the unit the checkpoint self-heals with. */
   protected def computeHistoryEntry(version: Long): SnapshotStore.HistoryEntry
 
-  /** `version`'s per-file entries as a local frame: one row per data
-    * file with `file`, `n_rows`, `min_key`/`max_key` and the stats
-    * columns' `min_<c>`/`max_<c>` — the manifest, or the zone map (a
-    * version without one: its files' footers). `file` ends in the data
-    * file's name. */
-  protected def fileEntries(version: Long): DataFrame
+  /** `version`'s per-file statistics as a local frame, when it records
+    * them: one row per data file with `file`, `n_rows`,
+    * `min_key`/`max_key` and the stats columns' `min_<c>`/`max_<c>`
+    * (physical names) — the manifest, or the zone map. `file` ends in
+    * the data file's name. */
+  protected def fileStats(version: Long): Option[DataFrame]
+
+  /** The readable path of a [[fileStats]] row's `file`: the pool file
+    * it names, or the entry itself where it is a path already. */
+  protected def entryPath(file: String): String
+
+  /** `version`'s per-file entries: its [[fileStats]], or (a version
+    * recording none) the same rows from its files' footers. */
+  protected def fileEntries(version: Long): DataFrame =
+    fileStats(version).getOrElse(landedStats(dataPaths(version).map(new Path(_)), Nil))
 
   /** One rewrite commit, the landing half of every rewrite verb:
     * publish `toVersion` holding the `carried` data files of
@@ -103,15 +115,7 @@ trait VersionedStore {
 
   def versions(): Seq[Long]
   def read(version: Long): DataFrame
-  def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame
-  def readSourceRange(version: Long, source: String, lo: Any, hi: Any): DataFrame
-  def readWhereAll(version: Long, preds: Seq[(String, Any, Any)]): DataFrame
   def commitBytes(version: Long): Long
-
-  def diff(fromVersion: Long, toVersion: Long): DataFrame
-  def diffCdf(fromVersion: Long, toVersion: Long): DataFrame
-  def diffKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame
-  def diffCdfKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame
 
   def replaceWhere(fromVersion: Long, toVersion: Long, data: DataFrame,
       filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int)
@@ -179,6 +183,240 @@ trait VersionedStore {
         if (paths.isEmpty) read(version).limit(0)
         else ParquetSchemas.readFiles(spark, paths.take(1)).limit(0)
     }
+
+  // ---- PRUNED READS ----
+  // Every read below prunes over the version's per-file statistics
+  // ([[fileStats]]) and opens the surviving files through
+  // [[readDataFiles]]; a residual row filter keeps the answer exact, so
+  // a column without statistics prunes nothing and still reads right.
+
+  /** The `min_`/`max_` columns recording `column` in `version`'s
+    * per-file statistics: the key envelope, or the column's stored
+    * (physical) name under a metadata-only rename. */
+  private def statBounds(version: Long, column: String): (String, String) =
+    if (column == keyCol) ("min_key", "max_key")
+    else {
+      val p = SnapshotStore.physicalOf(evolvedSchema(version), column)
+      (s"min_$p", s"max_$p")
+    }
+
+  /** The `file`s of `entries` (`version`'s) whose recorded range of
+    * `column` overlaps [lo, hi] — None when they record no statistics
+    * for it. The overlap test runs typed through Catalyst (`lit(lo)`
+    * adopts the column's ordering); a null bound keeps the file: never
+    * prune on missing information. */
+  private def overlapping(entries: DataFrame, version: Long, column: String,
+      lo: Any, hi: Any): Option[Seq[String]] = {
+    val (minC, maxC) = statBounds(version, column)
+    if (!entries.columns.contains(minC) || !entries.columns.contains(maxC)) None
+    else Some(entries.filter(!(col(maxC) < lit(lo) || col(minC) > lit(hi)) ||
+        col(minC).isNull || col(maxC).isNull)
+      .select("file").collect().map(_.getString(0)).toSeq)
+  }
+
+  /** Files of `version` whose statistics for `column` overlap [lo, hi]
+    * — None when the version records no statistics for that column. */
+  def prunedFilesBy(version: Long, column: String, lo: Any, hi: Any): Option[Seq[String]] =
+    fileStats(version).flatMap(overlapping(_, version, column, lo, hi)).map(_.map(entryPath))
+
+  /** Files whose key range overlaps [lo, hi] — see [[prunedFilesBy]]. */
+  def prunedFiles(version: Long, lo: Any, hi: Any): Option[Seq[String]] =
+    prunedFilesBy(version, keyCol, lo, hi)
+
+  /** Rows of `version` with `column` in [lo, hi], opening only the
+    * files whose statistics overlap the range. */
+  def readWhere(version: Long, column: String, lo: Any, hi: Any): DataFrame =
+    readWhereAll(version, Seq((column, lo, hi)))
+
+  /** Keyed restore: rows of `version` with key in [lo, hi] — see
+    * [[readWhere]]. */
+  def readKeyRange(version: Long, lo: Any, hi: Any): DataFrame =
+    readWhere(version, keyCol, lo, hi)
+
+  /** Rows of `version` satisfying every `(column, lo, hi)` range. A
+    * file must overlap every range to hold a qualifying row, so the
+    * survivors are the INTERSECTION of each predicate's — on a
+    * z-ordered layout each dimension eliminates files independently,
+    * and the conjunction reads the corner the ranges carve out. Equals
+    * the full-scan filter. */
+  def readWhereAll(version: Long, preds: Seq[(String, Any, Any)]): DataFrame = {
+    require(preds.nonEmpty, "readWhereAll needs at least one predicate")
+    val stats = fileStats(version)
+    val hits = preds.flatMap { case (c, lo, hi) =>
+      stats.flatMap(overlapping(_, version, c, lo, hi)) }
+    val base =
+      if (hits.isEmpty) read(version)
+      else hits.reduce((a, b) => a.filter(b.toSet)) match {
+        case Seq() => emptyRead(version) // provably no overlapping file: no scan planned
+        case files => readDataFiles(version, files.map(entryPath))
+      }
+    // a DERIVED temporal column (ts__day/…) may be hidden by the
+    // version's evolved read schema even though the files carry it:
+    // recompute it from its source (a pure function) for the residual
+    // filter, then drop the synthesized copy — callers keep the frame's
+    // declared shape
+    val absent = preds.map(_._1).distinct.filterNot(base.columns.contains)
+    val synth =
+      if (absent.isEmpty) Nil
+      else {
+        val specs = storedPartitionSpecs().filter(_.transform.isDefined)
+        absent.flatMap(c => specs.find(_.name == c))
+      }
+    val filtered = preds.foldLeft(synth.foldLeft(base)((d, sp) =>
+        d.withColumn(sp.name, SnapshotStore.deriveColumn(sp)))) { case (df, (c, lo, hi)) =>
+      df.filter(col(c) >= lit(lo) && col(c) <= lit(hi)) }
+    synth.map(_.name).foldLeft(filtered)(_ drop _)
+  }
+
+  /** SOURCE-column time-range read over an EVOLVED partition spec:
+    * every file prunes through the spec IT was written under — a
+    * `days(ts)` file via its day tuple, a `months(ts)` file via its
+    * month tuple — by translating each derived value to its covered
+    * source interval ([[SnapshotStore.sourceRangeOverlap]]). Files of a
+    * spec that cannot bound `source` (identity spec, different source)
+    * are kept; the row filter on top is exact either way. So a
+    * `days→months` evolution needs no rewrite, and a time query still
+    * opens only overlapping files from both eras. */
+  def readSourceRange(version: Long, source: String, lo: Any, hi: Any): DataFrame = {
+    val base = fileStats(version).fold(read(version)) { stats =>
+      val sid = specIdCol(stats)
+      val conds = specHistory._1.map(_.map(SnapshotStore.parsePartitionSpec)).zipWithIndex.map {
+        case (sps, id) =>
+          sps.find(sp => sp.transform.isDefined && sp.source == source &&
+              stats.columns.contains(s"min_${sp.name}")) match {
+            case Some(sp) => sid === id && SnapshotStore.sourceRangeOverlap(sp,
+              col(s"min_${sp.name}"), col(s"max_${sp.name}"), lo, hi)
+            case None => sid === id // this spec cannot bound the source: keep
+          }
+      }
+      stats.filter(conds.reduceOption(_ || _).getOrElse(lit(true))).select("file").collect()
+        .map(r => entryPath(r.getString(0))).toIndexedSeq match {
+        case Seq() => emptyRead(version)
+        case hit => readDataFiles(version, hit)
+      }
+    }
+    base.filter(col(source).cast("timestamp") >= lit(lo).cast("timestamp") &&
+      col(source).cast("timestamp") <= lit(hi).cast("timestamp"))
+  }
+
+  /** Point read for a key set (a one-column frame of key values, e.g. a
+    * CDC delta's keys): the key envelopes prune the file list (one
+    * broadcast range probe over the per-file statistics), then one
+    * semi-join restricts to exactly the requested keys. Equals
+    * `read(version).join(keys, semi)`. */
+  def readForKeys(version: Long, keys: DataFrame): DataFrame = {
+    val k = keys.select(keys.columns.head).toDF(keyCol).distinct().materialize()
+    val hit = fileStats(version).fold(dataPaths(version))(stats =>
+      k.join(broadcast(stats), col(keyCol) >= col("min_key") && col(keyCol) <= col("max_key"))
+        .select("file").distinct().collect().map(r => entryPath(r.getString(0))).toIndexedSeq)
+    if (hit.isEmpty) emptyRead(version)
+    else readDataFiles(version, hit).join(k, Seq(keyCol), "left_semi")
+  }
+
+  // ---- DIFF ----
+  // One row-level change classification for both layouts. A data file
+  // name holds one content in every version that lists it (carries keep
+  // the name, by reference or by byte-copy; every landing writes a fresh
+  // one), so a row both versions serve from a shared file can never be
+  // a change. Each side is then the rows it holds alone: its exclusive
+  // files read masked, plus the rows of shared files that the OTHER
+  // version's deletion vector masks and its own does not.
+
+  /** Row-level changes from `fromVersion` to `toVersion`: `insert` (key
+    * only in `to`), `delete` (key only in `from`, with its values),
+    * `update` (key on both sides, content differs; the new values).
+    * Unchanged rows are not emitted. Content fingerprints cover the
+    * COMMON non-key columns, so adding or dropping a column does not
+    * flag every row (column-level changes are
+    * [[SnapshotStore.schemaDiff]]'s), and a widened column compares its
+    * old values in the new type. */
+  def diff(fromVersion: Long, toVersion: Long): DataFrame =
+    changes(fromVersion, toVersion, cdf = false, None)
+
+  /** [[diff]] in Delta's CDF shape: an updated key emits
+    * `update_preimage` (the old values) and `update_postimage` (the
+    * new values); inserts and deletes are unchanged. The pre-images
+    * come from the same pass over the from-side. */
+  def diffCdf(fromVersion: Long, toVersion: Long): DataFrame =
+    changes(fromVersion, toVersion, cdf = true, None)
+
+  /** [[diff]] restricted to keys in [lo, hi] — the change feed's
+    * key-predicate pushdown: each side's files prune against their key
+    * envelopes before any open. Equals `diff(...).filter(key in range)`:
+    * a key outside the range can never pair with one inside it. */
+  def diffKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame =
+    changes(fromVersion, toVersion, cdf = false, Some((lo, hi)))
+
+  /** [[diffCdf]] restricted to keys in [lo, hi] — see [[diffKeyRange]]. */
+  def diffCdfKeyRange(fromVersion: Long, toVersion: Long, lo: Any, hi: Any): DataFrame =
+    changes(fromVersion, toVersion, cdf = true, Some((lo, hi)))
+
+  private def changes(fromVersion: Long, toVersion: Long, cdf: Boolean,
+      keyRange: Option[(Any, Any)]): DataFrame = {
+    val (fromPaths, toPaths) = (dataPaths(fromVersion), dataPaths(toVersion))
+    val shared = fromPaths.map(fileName).toSet intersect toPaths.map(fileName).toSet
+    def masks(v: Long): Set[(String, Long)] = dvFrame(v).fold(Set.empty[(String, Long)])(
+      _.collect().map(r => (r.getString(0), r.getLong(1))).toSet)
+    val (fromMasks, toMasks) = (masks(fromVersion), masks(toVersion))
+    def side(version: Long, paths: Seq[String], own: Set[(String, Long)],
+        other: Set[(String, Long)]): DataFrame = {
+      val exclusive = paths.filterNot(p => shared(fileName(p)))
+      val opened = keyRange.flatMap { case (lo, hi) => prunedFiles(version, lo, hi) }
+        .fold(exclusive)(hit => named(exclusive, hit.map(fileName).toSet))
+      val revealed = (other -- own).filter(m => shared(m._1))
+      val parts = Seq(opened).filter(_.nonEmpty).map(readDataFiles(version, _)) ++
+        Seq(revealed).filter(_.nonEmpty)
+          .map(at => rowsAt(version, named(paths, at.map(_._1)), at))
+      parts.reduceOption(_ unionByName _).fold(emptyRead(version))(df => keyRange.fold(df) {
+        case (lo, hi) => df.filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi)) })
+    }
+    val a = side(fromVersion, fromPaths, fromMasks, toMasks)
+    val b = side(toVersion, toPaths, toMasks, fromMasks)
+    val common = a.columns.toSeq.filter(c => c != keyCol && b.columns.contains(c)).sorted
+    // xxhash64 hashes an int and a long of equal value differently: a
+    // widened column fingerprints the old value in the new type
+    val fromCommon = common.map { c =>
+      val (ft, tt) = (a.schema(c).dataType, b.schema(c).dataType)
+      if (ft != tt && SnapshotStore.canWiden(ft, tt)) a(c).cast(tt) else a(c)
+    }
+    def fp(cs: Seq[Column]): Column = if (cs.isEmpty) lit(0L) else Fx.fastFingerprint(cs: _*)
+    val from = a.select(col(keyCol).as("__k"), struct(a.columns.toSeq.map(a(_)): _*).as("__a"),
+      fp(fromCommon).as("__fa"))
+    val to = b.select(col("*"), fp(common.map(b(_))).as("__fb"))
+    val joined = from.join(to, from("__k") === to(keyCol), "full_outer")
+      .withColumn("__ct", when(col("__a").isNull, lit("insert"))
+        .when(col("__fb").isNull, lit("delete"))
+        .when(col("__fa") =!= col("__fb"), lit("update")))
+      .filter(col("__ct").isNotNull) // rows equal on both sides drop out
+    val typed =
+      if (!cdf) joined.withColumn("change_type", col("__ct"))
+      else joined.select(col("*"), explode(when(col("__ct") === "update",
+          array(lit("update_preimage"), lit("update_postimage")))
+        .otherwise(array(col("__ct")))).as("change_type"))
+    // deletes and pre-images carry the from-side's values
+    val old = col("change_type").isin("delete", "update_preimage")
+    def value(c: String): Column =
+      if (!a.columns.contains(c)) when(!old, col(c))
+      else if (!b.columns.contains(c)) when(old, col("__a").getField(c))
+      else when(old, col("__a").getField(c)).otherwise(col(c))
+    val toCols = b.columns.toSeq
+    typed.select(((keyCol +: toCols.filterNot(_ == keyCol)).map(c => value(c).as(c)) ++
+      Seq(col("change_type")) ++
+      a.columns.toSeq.filterNot(toCols.contains).map(c => value(c).as(c))): _*)
+  }
+
+  /** The rows of `version`'s `paths` at the (file name, row position)
+    * pairs `at`, read as the version reads them (its deletion vector
+    * aside: the pairs name the rows wanted). */
+  private def rowsAt(version: Long, paths: Seq[String], at: Set[(String, Long)]): DataFrame = {
+    val sc = evolvedSchema(version)
+    val raw = sc.fold(ParquetSchemas.readFiles(spark, paths))(x =>
+      spark.read.schema(SnapshotStore.physicalSchema(x)).parquet(paths: _*))
+    val pos = spark.createDataFrame(java.util.Arrays.asList(at.toSeq.map { case (f, p) =>
+      org.apache.spark.sql.Row(f, p) }: _*), SnapshotStore.dvSchema).toDF("__f", "__p")
+    recomputeDerived(withPositions(raw, None, sc)
+      .join(broadcast(pos), Seq("__f", "__p"), "left_semi").drop("__f", "__p"))
+  }
 
   // ---- SCHEMA VERBS AND RESTORE ----
   // Metadata-only on both layouts: the new version carries the old
@@ -987,16 +1225,7 @@ trait VersionedStore {
     val entries = fileEntries(fromVersion)
     val (schema, paths) = schemaAndPaths(fromVersion)
     val candidates = pruneHint.flatMap { case (c, lo, hi) =>
-      // entry stats describe the STORED (physical) columns
-      val (minC, maxC) =
-        if (c == keyCol) ("min_key", "max_key")
-        else { val p = SnapshotStore.physicalOf(evolvedSchema(fromVersion), c)
-          (s"min_$p", s"max_$p") }
-      // a null bound keeps the file: never prune on missing information
-      if (!entries.columns.contains(minC) || !entries.columns.contains(maxC)) None
-      else Some(entries.filter(!(col(maxC) < lit(lo) || col(minC) > lit(hi)) ||
-          col(minC).isNull || col(maxC).isNull)
-        .select("file").collect().map(r => fileName(r.getString(0))).toSet)
+      overlapping(entries, fromVersion, c, lo, hi).map(_.map(fileName).toSet)
     }.fold(paths)(named(paths, _))
     val matchRows =
       if (candidates.isEmpty) noPositions

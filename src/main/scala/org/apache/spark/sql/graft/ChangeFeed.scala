@@ -168,9 +168,9 @@ private[graft] object ChangeFeed {
 
   /** Align one step's diff frame to the serving schema: data columns
     * in target order (absent → null), non-key columns nulled on
-    * delete rows (the cross-layout contract — the linked diff carries
-    * old values there, the snapshot diff carries nulls), commit
-    * version stamped. */
+    * delete rows (the plain feed's key-only delete contract; the
+    * stores' diffs carry the deleted values there), commit version
+    * stamped. */
   private def align(diff: DataFrame, keyCol: String, target: StructType,
       commitVersion: Long, nullDeletes: Boolean = true): DataFrame = {
     val have = diff.columns.toSet

@@ -313,8 +313,9 @@ class ManifestStoreSpec extends SparkSpec {
       && col("x") >= 1L && col("x") <= 10L)
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[Long]("x"))).toSet
     assert(got == want)
-    // stats missing for a predicate column fails loud, not wrong
-    intercept[IllegalArgumentException](store.readWhereAll(1L, Seq(("v", 1L, 2L))))
+    // a predicate column without stats prunes nothing: the full-scan filter
+    assert(store.readWhereAll(1L, Seq(("v", 10L, 20L))).collect().map(_.toSeq).toSet ==
+      df.filter(col("v") >= 10L && col("v") <= 20L).collect().map(_.toSeq).toSet)
   }
 
   test("readWhere prunes by secondary-column manifest stats") {

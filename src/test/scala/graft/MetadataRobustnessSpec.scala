@@ -166,4 +166,90 @@ class MetadataRobustnessSpec extends SparkSpec {
     assert(served(fitsOne, 1L) == truth(1L))
     assert(fitsOne.cachedVersions(base) == Seq(1L))
   }
+
+  /** `base` behind the fault-injecting scheme ([[FaultyCreateFs]]). */
+  private def faulty(base: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faultycreate.impl", classOf[FaultyCreateFs].getName)
+    s"faultycreate:$base"
+  }
+
+  test("linked layout: a crash mid-copy of a mirror manifest rolls nothing forward; the next replicateTo lands it whole") {
+    val base = tmpBase("graft-repl-crash")
+    val mirror = tmpBase("graft-repl-crash-mirror")
+    val st = new ManifestStore(spark, base, "k")
+    st.write(rows(1 to 20, "a"), 1L)
+    // the manifest copy writes one file, then its next create throws
+    FaultyCreateFs.arm("/_manifests/", allow = 1)
+    try intercept[java.io.IOException](st.replicateTo(faulty(mirror)))
+    finally FaultyCreateFs.disarm()
+    assert(!exists(s"$mirror/_manifests/.tmp-repl-v=1"))
+    val target = new ManifestStore(spark, mirror, "k")
+    target.recoverReplications()
+    assert(target.versions().isEmpty)
+    val (_, _, copied, _) = st.replicateTo(mirror)
+    assert(copied == Seq(1L))
+    assert(target.read(1L).select("k", "v").as[(Long, String)].collect().toSet ==
+      st.read(1L).select("k", "v").as[(Long, String)].collect().toSet)
+    assert(new Path(mirror).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(new Path(s"$mirror/_manifests")).map(_.getPath.getName).toSeq == Seq("v=1"))
+  }
+
+  test("chunk repository: a crash during rekeyTo's manifest copy leaves the target with no version") {
+    val base = tmpBase("graft-rekey-crash")
+    val store = new ChunkStore(spark, faulty(base), Array.fill[Byte](32)(7))
+    store.backup(Seq((1L, "payload one".getBytes("UTF-8"))).toDF("id", "payload"),
+      "id", "payload", 1L)
+    store.backup(Seq((1L, "payload one".getBytes("UTF-8")), (2L, "payload two".getBytes("UTF-8")))
+      .toDF("id", "payload"), "id", "payload", 2L)
+    // version 1's manifest copies whole, then a create of version 2's fails
+    val v1Files = new java.io.File(s"$base/manifests/v=1").listFiles().count(_.isFile)
+    val target = s"$base-rekeyed"
+    FaultyCreateFs.arm(target, allow = v1Files + 1, skip = "/chunks")
+    try intercept[java.io.IOException](store.rekeyTo(faulty(target), Array.fill[Byte](32)(9)))
+    finally FaultyCreateFs.disarm()
+    assert(new ChunkStore(spark, target, Array.fill[Byte](32)(9)).versions().isEmpty)
+  }
+}
+
+/** Test-only local FS whose creates can be armed to fail: once armed,
+  * the creates whose path contains `pathPart` (and not `skip`) succeed
+  * `allow` times, then the next one throws — a crash partway through a
+  * copy, without mocking anything in the code under test. */
+class FaultyCreateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faultycreate:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    FaultyCreateFs.check(f.toString)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    FaultyCreateFs.check(f.toString)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+object FaultyCreateFs {
+  private var armed: Option[(String, String)] = None
+  private var left = 0
+
+  def arm(pathPart: String, allow: Int, skip: String = "\u0000"): Unit = synchronized {
+    armed = Some((pathPart, skip))
+    left = allow
+  }
+
+  def disarm(): Unit = synchronized { armed = None }
+
+  private def check(path: String): Unit = synchronized {
+    armed.filter { case (part, skip) => path.contains(part) && !path.contains(skip) }
+      .foreach { _ =>
+        if (left == 0) {
+          armed = None
+          throw new java.io.IOException(s"injected create failure: $path")
+        }
+        left -= 1
+      }
+  }
 }

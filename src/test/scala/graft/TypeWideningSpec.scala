@@ -101,4 +101,34 @@ class TypeWideningSpec extends SparkSpec {
         || e.getMessage.contains("widening"), s"$t: ${e.getMessage}")
     }
   }
+
+  test("diff across a widening: empty for the widen alone, only the merged keys after a merge, both layouts") {
+    val root = java.nio.file.Files.createTempDirectory("graft_tw_diff").toString
+    val v1 = (1 to 40).map(i => (i.toLong, i, i * 10, s"s$i")).toDF("k", "n", "m", "s")
+    val linked = new ManifestStore(spark, s"$root/lk", "k")
+    linked.write(v1, 1L, 4)
+    val snap = new SnapshotStore(spark, s"$root/sn", "k")
+    snap.writeRangePartitioned(v1, 1L, 4)
+    Seq[graft.operators.VersionedStore](linked, snap).foreach { st =>
+      st.widenColumn(1L, 2L, "n", LongType)
+      st.widenColumn(2L, 3L, "m", DecimalType(12, 0))
+      assert(st.diff(1L, 3L).isEmpty && st.diffCdf(1L, 3L).isEmpty, st.layout)
+      // one key in every file: every file is rewritten
+      val delta = Seq((5L, 500L, 5, "s5"), (15L, 15L, 150, "u15"), (25L, 25L, 250, "s25"),
+          (35L, 35L, 350, "s35"), (41L, 41L, 410, "s41"))
+        .toDF("k", "n", "m", "s").withColumn("m", col("m").cast(DecimalType(12, 0)))
+      st.mergeDelta(3L, 4L, delta)
+      assert(st.dataPaths(4L).map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
+        .intersect(st.dataPaths(3L).map(p => p.substring(p.lastIndexOf('/') + 1)).toSet)
+        .isEmpty, s"${st.layout}: the merge must rewrite every file")
+      val want = Set((5L, "update"), (15L, "update"), (41L, "insert"))
+      Seq(1L, 3L).foreach { from =>
+        assert(st.diff(from, 4L).select("k", "change_type").as[(Long, String)].collect().toSet
+          == want, s"${st.layout} from v$from")
+      }
+      assert(st.diffCdf(1L, 4L).filter(col("k") === 5L).select("n", "change_type")
+        .as[(Long, String)].collect().toSet ==
+        Set((5L, "update_preimage"), (500L, "update_postimage")), st.layout)
+    }
+  }
 }

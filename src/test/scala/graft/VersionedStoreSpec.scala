@@ -279,4 +279,31 @@ class VersionedStoreSpec extends SparkSpec {
       assert(none == 0L && st.read(3L).filter(col("k") === 1L).count() == 1L, st.layout)
     }
   }
+
+  test("a restore that shrinks the deletion vector lists the unmasked rows as inserts on both layouts") {
+    val root = java.nio.file.Files.createTempDirectory("graft-vs-dvrestore").toString
+    spark.conf.set("spark.sql.catalog.vsdv",
+      classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.vsdv.root", root)
+    val linked = new ManifestStore(spark, s"$root/dvr_linked", "k")
+    linked.write(rows(1 to 20, "a"), 1L, numFiles = 2)
+    val snap = new SnapshotStore(spark, s"$root/dvr_snap", "k")
+    snap.writeRangePartitioned(rows(1 to 20, "a"), 1L, 2)
+    def got(df: org.apache.spark.sql.DataFrame): Set[(Long, String, String)] =
+      df.select("k", "v", "change_type").as[(Long, String, String)].collect().toSet
+    Seq[VersionedStore](linked, snap).foreach { st =>
+      st.deleteWhere(1L, 2L, col("k").isin(4L, 13L), mode = "dv")
+      st.restoreVersion(1L, 3L, None)
+      val name = st.basePath.substring(st.basePath.lastIndexOf('/') + 1)
+      val unmasked = Set((4L, "a-4", "insert"), (13L, "a-13", "insert"))
+      assert(got(st.diff(2L, 3L)) == unmasked, st.layout)
+      assert(got(st.diffCdf(2L, 3L)) == unmasked, st.layout)
+      assert(got(spark.sql(s"SELECT * FROM vsdv.$name.changes VERSION AS OF '3..3'")) ==
+        unmasked, st.layout)
+      // the mask growing reads as deletes carrying the deleted values
+      assert(got(st.diff(1L, 2L)) == Set((4L, "a-4", "delete"), (13L, "a-13", "delete")),
+        st.layout)
+      assert(st.diff(1L, 3L).isEmpty, st.layout)
+    }
+  }
 }
