@@ -655,7 +655,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
 
   def dataPaths(version: Long): Seq[String] =
     manifest(version).select("file").collect()
-      .map(r => new Path(poolDir, r.getString(0)).toString).toIndexedSeq
+      .map(r => entryPath(r.getString(0))).toIndexedSeq
 
   def read(version: Long): DataFrame = {
     val files = dataPaths(version)
@@ -781,7 +781,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val rows =
       if (fresh.isEmpty) carried
       else carried.unionByName(bloomsFor(toVersion,
-        fresh.map(n => new Path(poolDir, n).toString), toMan, column, fpp))
+        fresh.map(entryPath), toMan, column, fpp))
     rows.coalesce(1).write.mode("overwrite")
       .parquet(bloomDir(toVersion, column).toString)
   }
@@ -893,7 +893,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // PHYSICAL audit: manifest stats describe the stored file, so the
     // scan must bypass the deletion vector (a masked row still exists)
     val actual = readFilesRaw(version,
-        present.map(r => new Path(poolDir, r.getString(0)).toString).toIndexedSeq)
+        present.map(r => entryPath(r.getString(0))).toIndexedSeq)
       .select(element_at(split(input_file_name(), "/"), -1).as("file"), col(keyCol))
       .groupBy("file")
       .agg(count(lit(1)).as("__n"), min(col(keyCol)).as("__lo"), max(col(keyCol)).as("__hi"))
@@ -987,9 +987,9 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     // compaction FOLDS the deletion vector in: the rewrite reads the
     // masked view, so folded files shed their DV entries for good
     val folded = readDataFiles(fromVersion,
-      small.map(n => new Path(poolDir, n).toString).toIndexedSeq)
+      small.map(entryPath).toIndexedSeq)
     val sc = evolvedSchema(fromVersion).getOrElse(folded.schema)
-    val carried = sizes.map(_._1).filterNot(small.toSet).map(n => new Path(poolDir, n).toString)
+    val carried = sizes.map(_._1).filterNot(small.toSet).map(entryPath)
     val nLanded = commitRewrite(fromVersion, toVersion, man, carried,
       Some(SnapshotStore.toPhysical(arrange(folded, targetFiles), sc)),
       carryDv(fromVersion, small.toSet, carried.nonEmpty), sc,

@@ -6,8 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetSchemas
 
-import graft.functions.Fx
-
 /** Versioned snapshot store — the reference's snapshot/backup workflow
   * end-to-end (SURVEY §2 group 2): write full snapshots, list
   * versions, read/restore any version, classify row-level changes
