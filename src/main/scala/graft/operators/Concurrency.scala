@@ -31,7 +31,7 @@ class ConcurrentWriteConflictException(msg: String) extends RuntimeException(msg
 class ConstraintViolationException(msg: String) extends IllegalArgumentException(msg)
 
 /** Time-based retention met a LEGAL HOLD: the horizon selects a held
-  * version for expiry. Count-based [[SnapshotStore.prune]] silently
+  * version for expiry. Count-based [[VersionedStore.prune]] silently
   * KEEPS held versions (the policy is advisory); a time horizon is a
   * compliance contract ("nothing older than N hours exists") that
   * CANNOT be honored while the hold stands — so it refuses loudly

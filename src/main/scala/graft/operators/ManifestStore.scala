@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetSchemas
 
@@ -56,17 +56,12 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
   protected def versionDir(v: Long): Path = manifestDir(v)
 
   /** File-level stats frame (a local frame) for a set of freshly
-    * written pool files, from their footers ([[landedStats]]). `cols`
-    * defaults to the construction statsCols (first write); the
-    * version-to-version operators pass [[rewriteStatsCols]] instead:
-    * the stats an EXISTING manifest carries, which the union with its
-    * carried entries needs — correct on a store handle reconstructed
-    * without the original statsCols (the SQL catalog's DML hooks know
-    * only the recorded key column). Partition-spec evolution stamps
-    * WHICH spec the files landed under (`spec_id`), so pruning can
-    * consult each file's OWN spec forever; never-evolved stores keep
-    * their exact manifest schema (absent column ≡ spec 0 — the only
-    * spec they have). */
+    * written pool files, from their footers ([[landedStats]]): a
+    * landing passes its stats columns ([[writeVersion]]), a rewrite
+    * the ones the EXISTING manifest carries ([[rewriteStatsCols]]), so
+    * the union with its carried entries lines up on a store handle
+    * reconstructed without the original statsCols (the SQL catalog's
+    * DML hooks know only the recorded key column). */
   private def statsFor(names: Seq[String], cols: Seq[String] = statsCols): DataFrame =
     landedStats(names.map(n => new Path(poolDir, n)), cols)
 
@@ -85,281 +80,47 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     s.substring(s.lastIndexOf('/') + 1)
   }
 
-  /** Write `df` into the pool and publish it as `version`. Files are
-    * range-partitioned and key-sorted so key predicates prune at the
-    * manifest level. */
+  override protected def declaredStatsCols: Seq[String] = statsCols
+
+  /** The range-clustered full write ([[writeClustered]]) into the pool:
+    * files range-partitioned and key-sorted so key predicates prune at
+    * the manifest level. */
   def write(df: DataFrame, version: Long, numFiles: Int = 4,
-      commitTs: Option[Long] = None): Unit = {
-    requireFreeVersion(version)
-    enforceConstraints(df, "write")
-    val names = landInPool(arrange(df, numFiles))
-    require(names.nonEmpty, "write: empty input frame")
-    publish(version, statsFor(names, effectiveStatsCols), commitTs, op = "write",
-      metrics = Map("numFiles" -> names.size.toLong))
-  }
+      commitTs: Option[Long] = None): Unit =
+    writeClustered(df, version, numFiles, Nil, commitTs)
 
-  /** [[write]] with a HASH-BUCKETED layout —
-    * [[SnapshotStore.writeBucketed]]'s linked twin (see there for the
-    * storage-partitioned-join contract): exactly `buckets` pool files,
-    * file `i` holding the rows with `pmod(murmur3(key), buckets) == i`,
-    * key-sorted within, pool names carrying Spark's bucket suffix
-    * (`<uuid>-b_0000i.parquet`) so the catalog's bucketed-relation gate
-    * and `FileSourceScanExec` parse the id straight off the manifest's
-    * file names. Later merges land unsuffixed names and the gate falls
-    * back to the plain route honestly. */
+  /** The bucketed full write ([[writeBucketedVersion]]) into the pool. */
   def writeBucketed(df: DataFrame, version: Long, buckets: Int,
-      commitTs: Option[Long] = None): Unit = {
-    require(buckets > 0, s"writeBucketed: bucket count must be positive, got $buckets")
-    require(storedPartitionBy().isEmpty,
-      "writeBucketed: this store declares partition columns — bucket and " +
-        "partition layouts are exclusive per store")
-    requireFreeVersion(version)
-    ensureStoreMeta()
-    SnapshotStore.writeStoredBucketBy(fs, basePath, keyCol, buckets,
-      canRedeclare = versions().isEmpty)
-    enforceConstraints(df, "writeBucketed")
-    val tmp = new Path(s"$basePath/.tmp-pool-${java.util.UUID.randomUUID()}")
-    df.repartition(buckets, col(keyCol)).sortWithinPartitions(keyCol)
-      .write.mode("overwrite").parquet(tmp.toString)
-    fs.mkdirs(poolDir)
-    val names = fs.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).map { p =>
-        // part-<partitionId>-... : the leading number IS the bucket id
-        val b = p.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
-        require(b < buckets, s"writeBucketed: task id $b >= $buckets in ${p.getName}")
-        val name = f"${java.util.UUID.randomUUID().toString.take(12)}-b_$b%05d.parquet"
-        if (!fs.rename(p, new Path(poolDir, name)))
-          throw new java.io.IOException(s"pool rename failed for $p")
-        name
-      }.toSeq
-    fs.delete(tmp, true)
-    require(names.nonEmpty, "writeBucketed: empty input frame")
-    publish(version, statsFor(names, effectiveStatsCols), commitTs,
-      op = "writeBucketed", opParams = s"$buckets buckets by $keyCol",
-      metrics = Map("numFiles" -> names.size.toLong))
-  }
+      commitTs: Option[Long] = None): Unit =
+    writeBucketedVersion(df, version, buckets, Nil, commitTs)
 
-  /** First write of a PARTITIONED table — Delta/Iceberg's `PARTITIONED
-    * BY (cols…)`: declares `partCols` in the `_partition.json` sidecar
-    * (every later landing on this store clusters by them), lands the
-    * frame one-partition-tuple-per-file (≤ `filesPerPartition` files
-    * each, key-sorted within), and records the tuple in the manifest
-    * as exact per-file min==max stats. Partition predicates then prune
-    * EXACTLY at the manifest level, [[dropPartitions]] is
-    * metadata-only, and [[replaceWhere]] carries untouched partitions
-    * by reference. Partition values should be non-null (a null groups
-    * under a null tuple — it prunes conservatively but reads as an odd
-    * partition); the key column cannot be a partition column (its
-    * envelope is the manifest's primary prune axis already). */
+  /** The partitioned first write ([[writePartitionedVersion]]) into
+    * the pool. */
   def writePartitioned(df: DataFrame, version: Long, partCols: Seq[String],
-      filesPerPartition: Int = 1, commitTs: Option[Long] = None): Unit = {
-    requireFreeVersion(version)
-    require(partCols.nonEmpty, "writePartitioned: no partition columns")
-    require(!partCols.contains(keyCol),
-      s"writePartitioned: '$keyCol' is the store key — key-range pruning already " +
-        "covers it; partition on a coarser dimension")
-    val specs = partCols.map(SnapshotStore.parsePartitionSpec)
-    val missing = specs.map(_.source).filterNot(df.columns.contains)
-    require(missing.isEmpty, s"writePartitioned: not in the frame: ${missing.mkString(", ")}")
-    specs.filter(_.transform.isDefined).map(_.name).filter(df.columns.contains)
-      .foreach(n => throw new IllegalArgumentException(
-        s"writePartitioned: derived partition column name '$n' collides with a " +
-          "data column"))
-    ensureStoreMeta()
-    SnapshotStore.writeStoredPartitionBy(fs, basePath, partCols,
-      canRedeclare = versions().isEmpty)
-    enforceConstraints(df, "writePartitioned")
-    val names = landInPool(arrange(df, filesPerPartition))
-    require(names.nonEmpty, "writePartitioned: empty input frame")
-    publish(version, statsFor(names, effectiveStatsCols), commitTs,
-      op = "writePartitioned")
-  }
+      filesPerPartition: Int = 1, commitTs: Option[Long] = None): Unit =
+    writePartitionedVersion(df, version, partCols, filesPerPartition, Nil, commitTs)
 
-  /** DYNAMIC PARTITION OVERWRITE — Delta's `replaceWhere` / classic
-    * `INSERT OVERWRITE ... PARTITION`: every partition tuple PRESENT in
-    * `data` is replaced wholesale by `data`'s rows for it; untouched
-    * partitions carry by manifest REFERENCE (zero I/O). The idempotent
-    * backfill verb: re-running a day's pipeline overwrites that day
-    * and nothing else. Schema must match the table (an overwrite is
-    * not a schema-evolution verb). Returns (filesCarried,
-    * filesReplaced, filesNew). */
-  def replaceWhere(fromVersion: Long, toVersion: Long, data: DataFrame,
-      filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int) = {
-    val pcs = requirePartitioned("replaceWhere")
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    requireUniformSpec(man, "replaceWhere")
-    enforceConstraints(data, "replaceWhere")
-    val data2 = deriveParts(data)
-    val touched = data2.select(pcs.map(col): _*).distinct().materialize()
-    // NULL-SAFE anti-join (<=>): a null partition tuple in `data` must
-    // replace the existing null-tuple files like any other value — a
-    // plain column-list join never matches nulls, which would KEEP the
-    // old null-partition files AND land the new rows (duplication)
-    val pe = partitionEntries(man, pcs)
-    val sharedFiles = pe.join(touched,
-        pcs.map(c => pe(c) <=> touched(c)).reduce(_ && _), "left_anti")
-      .select("file")
-    val shared = man.join(sharedFiles, Seq("file"), "left_semi").materialize()
-    val stats = landWithStats(arrange(data2, filesPerPartition),
-      rewriteStatsCols(man), evolvedSchema(fromVersion))
-    val nShared = manifestFiles(shared).size
-    publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
-      evolvedSchema(fromVersion),
-      dv = carryDv(fromVersion, manifestFiles(man).toSet -- manifestFiles(shared), nShared > 0),
-      op = "replaceWhere")
-    (nShared, manifestFiles(man).size - nShared, stats.fold(0)(manifestFiles(_).size))
-  }
-
-  /** METADATA-ONLY partition drop — the retention verb a date-
-    * partitioned 100 TB lake runs nightly ("drop everything older than
-    * 90 days"): entries whose partition tuple satisfies `pred` (a
-    * Column over the partition column names) leave the manifest; NOT
-    * ONE DATA BYTE moves, regardless of table size — the layout's
-    * one-tuple-per-file invariant makes the file set of a partition
-    * exact. Bytes reclaim later via ref-count [[vacuum]]. Null
-    * predicate rows are kept ([[deleteWhere]]'s rule). Returns
-    * (filesCarried, filesDropped, physicalRowsDropped). */
-  def dropPartitions(fromVersion: Long, toVersion: Long, pred: Column,
-      commitTs: Option[Long] = None): (Int, Int, Long) = {
-    val pcs = requirePartitioned("dropPartitions")
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    requireUniformSpec(man, "dropPartitions")
-    val dropped = partitionEntries(man, pcs)
-      .filter(coalesce(pred, lit(false)))
-      .select(col("file"), col("n_rows")).materialize()
-    val shared = man.join(dropped, Seq("file"), "left_anti").materialize()
-    val rowsDropped = dropped.agg(coalesce(sum("n_rows"), lit(0L))).head().getLong(0)
-    // dropping every partition legitimately empties the table: record
-    // the schema sidecar so the zero-file version still plans
-    val keepsFiles = shared.limit(1).count() > 0L
-    val schema =
-      if (!keepsFiles)
-        evolvedSchema(fromVersion).orElse(
-          Some(readFilesRaw(fromVersion, dataPaths(fromVersion).take(1)).schema))
-      else evolvedSchema(fromVersion)
-    publish(toVersion, shared, commitTs, schema,
-      dv = carryDv(fromVersion, manifestFiles(dropped).toSet, keepsFiles),
-      op = "dropPartitions", opParams = SnapshotStore.predSql(pred))
-    (manifestFiles(shared).size, dropped.count().toInt, rowsDropped)
-  }
-
-  /** Publish `version` as an EMPTY table of `schema` — zero pool
-    * files, a zero-row manifest (schema-carrying parquet: the forced
-    * single write task emits a footer-only file), and the schema
-    * sidecar that lets every reader (store API and SQL catalog) plan
-    * an empty scan. This is SQL `CREATE TABLE`'s landing: the first
-    * `mergeDelta` (INSERT/CTAS) then rewrites nothing and lands the
-    * initial rows as version+1. The declared schema must carry the
-    * store's key column — every later operation keys on it. */
-  def createEmpty(schema: org.apache.spark.sql.types.StructType, version: Long = 1L,
-      commitTs: Option[Long] = None): Unit = {
-    requireFreeVersion(version)
-    require(schema.fieldNames.contains(keyCol),
-      s"createEmpty: declared schema ${schema.fieldNames.mkString("(", ",", ")")} " +
-        s"lacks the store key column '$keyCol'")
-    val keyType = schema(keyCol).dataType
-    val manSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("min_key", keyType),
-      org.apache.spark.sql.types.StructField("max_key", keyType),
-      org.apache.spark.sql.types.StructField("n_rows",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType)) ++
-      // a PARTITIONED empty table (CREATE TABLE ... PARTITIONED BY
-      // lands the _partition.json before this) declares the partition
-      // stats columns up front, so the first INSERT's mergeDelta
-      // records them (it derives stats from the existing manifest)
-      effectiveStatsCols.flatMap { c =>
-        // a temporal transform's DERIVED column is not in the declared
-        // schema — days/months/years land as DATE, hours as TIMESTAMP
-        val dt =
-          if (schema.fieldNames.contains(c)) schema(c).dataType
-          else storedPartitionSpecs().find(_.name == c).map(_.transform match {
-            case Some("hours") => org.apache.spark.sql.types.TimestampType: org.apache.spark.sql.types.DataType
-            case _ => org.apache.spark.sql.types.DateType: org.apache.spark.sql.types.DataType
-          }).getOrElse(org.apache.spark.sql.types.DateType)
-        Seq(
-          org.apache.spark.sql.types.StructField(s"min_$c", dt),
-          org.apache.spark.sql.types.StructField(s"max_$c", dt))
-      })
-    publish(version,
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        manSchema),
-      commitTs, Some(schema), op = "createEmpty")
-  }
-
-  /** Land rewritten rows in the pool and return their manifest stats.
-    * A part file carrying ZERO rows (the write artifact of an
-    * all-delete rewrite) never enters the manifest — its stats row
-    * doesn't exist (the groupBy sees no rows), so referencing it
-    * would dangle — and is deleted on the spot. None when nothing
-    * with rows landed. */
-  private def landWithStats(df: DataFrame,
-      cols: Seq[String] = statsCols,
-      sc: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] = {
-    // on a column-mapped store, new files land under PHYSICAL names so
-    // the version's file set stays name-uniform with the carried files
-    val names = landInPool(sc.map(SnapshotStore.toPhysical(df, _)).getOrElse(df))
-    if (names.isEmpty) None
-    else {
-      val stats = statsFor(names, cols)
-      val live = manifestFiles(stats).toSet
-      names.filterNot(live).foreach(n => fs.delete(new Path(poolDir, n), false))
-      if (live.isEmpty) None else Some(stats)
-    }
+  /** Land `df` in the pool under fresh unique names (`rename`d),
+    * hive-staged on a partitioned store so every pool file holds
+    * exactly ONE partition tuple ([[landStaged]]; the pool itself stays
+    * flat: relocatable bare names), and return its manifest entries:
+    * footer statistics over `cols`. A part file carrying ZERO rows (the
+    * write artifact of an all-delete rewrite, the schema carrier of an
+    * empty landing) never enters the manifest — it has no stats row, so
+    * referencing it would dangle — and is deleted on the spot. */
+  private def landWithStats(df: DataFrame, cols: Seq[String],
+      rename: String => String = identity): DataFrame = {
+    val names = landStaged(df, storedPartitionBy(), poolDir, n =>
+      rename(s"${java.util.UUID.randomUUID().toString.take(12)}-${n.take(10)}.parquet"))
+    val stats = statsFor(names, cols)
+    val live = manifestFiles(stats).toSet
+    names.filterNot(live).foreach(n => fs.delete(new Path(poolDir, n), false))
+    stats
   }
 
   /** The pool file names a manifest-shaped frame lists. */
   private def manifestFiles(man: DataFrame): Seq[String] =
     man.select("file").collect().map(_.getString(0)).toSeq
-
-  /** Write a frame's part-files into the shared pool under fresh
-    * unique names; returns the pool names.
-    *
-    * On a PARTITIONED store ([[writePartitioned]]) the frame lands
-    * hive-style on DUPLICATED `__gp_<col>` directory columns — the
-    * originals stay IN the data files (pool files remain
-    * self-contained: stats scans, compaction, diff, validate all read
-    * them standalone) while the writer splits on the copies, so every
-    * pool file holds exactly ONE partition tuple. The manifest then
-    * records min==max for each partition column and partition
-    * predicates prune EXACTLY; the pool itself stays flat (relocatable
-    * bare names, no directory coupling). */
-  private def landInPool(df0: DataFrame): Seq[String] = {
-    val tmp = new Path(s"$basePath/.tmp-pool-${java.util.UUID.randomUUID()}")
-    val pcs = storedPartitionBy()
-    if (pcs.isEmpty) df0.write.mode("overwrite").parquet(tmp.toString)
-    else {
-      val df = deriveParts(df0)
-      val dup = pcs.foldLeft(df)((d, c) => d.withColumn(s"__gp_$c", col(c)))
-      dup.write.mode("overwrite")
-        .partitionBy(pcs.map("__gp_" + _): _*).parquet(tmp.toString)
-    }
-    fs.mkdirs(poolDir)
-    // recursive walk: hive landing nests part files one dir per
-    // partition tuple; the flat landing has them at the root
-    val it = fs.listFiles(tmp, true)
-    val parts = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.startsWith("part-")).toIndexedSeq
-    val names = parts.map { p =>
-      val name = s"${java.util.UUID.randomUUID().toString.take(12)}-${p.getName.take(10)}.parquet"
-      if (!fs.rename(p, new Path(poolDir, name)))
-        throw new java.io.IOException(s"pool rename failed for $p")
-      name
-    }
-    fs.delete(tmp, true)
-    names
-  }
-
-  /** Stats columns a FIRST write records: the construction `statsCols`
-    * plus every declared partition column (partition pruning rides the
-    * same manifest min/max machinery — min==max per file by the
-    * [[arrange]]+[[landInPool]] invariant). */
-  private def effectiveStatsCols: Seq[String] =
-    statsCols ++ storedPartitionBy().filterNot(c => c == keyCol || statsCols.contains(c))
 
   /** Publish a manifest frame as `version`: parquet to a tmp dir
     * (written on the driver from the collected rows — a local frame
@@ -458,13 +219,37 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val removed = manifestFiles(entries).filterNot(keep)
     val shared =
       if (removed.isEmpty) entries else entries.filter(!col("file").isin(removed: _*))
-    val stats = landing.flatMap(landWithStats(_, rewriteStatsCols(entries)))
+    val stats = landing.map(landWithStats(_, rewriteStatsCols(entries)))
+      .filter(manifestFiles(_).nonEmpty)
     val nLanded = stats.fold(0)(manifestFiles(_).size)
     publish(toVersion, stats.fold(shared)(unionLocal(shared, _)), commitTs,
       Some(schema).filter(_ => sidecar || keep.size + nLanded == 0), dv = dv,
       op = op, opParams = opParams, metrics = metrics(nLanded, stats.fold(0L)(rowTotal)))
     if (landing.isDefined) autoExtendBloomIndexes(fromVersion, toVersion)
     nLanded
+  }
+
+  /** The landing commit on this layout: the frame lands in the pool
+    * ([[landWithStats]] — footer statistics, zero-row files dropped)
+    * and its entries publish as the version's manifest. */
+  protected def commitLanding(version: Long, landing: DataFrame,
+      statsCols: Option[Seq[String]], schema: org.apache.spark.sql.types.StructType,
+      commitTs: Option[Long], op: String, opParams: String, rename: String => String,
+      metrics: Int => Map[String, Long]): Unit = {
+    val stats = landWithStats(landing, statsCols.getOrElse(Nil), rename)
+    val n = manifestFiles(stats).size
+    publish(version, stats, commitTs, Some(schema).filter(_ => n == 0), op = op,
+      opParams = opParams, metrics = metrics(n))
+  }
+
+  /** Manifests delete FIRST (a crash leaves extra pool files, never a
+    * dangling manifest), then the ref-count sweep ([[vacuum]])
+    * reclaims the pool files no surviving manifest references. A
+    * shallow clone only drops its manifests: the pool is its owner's to
+    * sweep. */
+  protected def dropVersions(vs: Seq[Long]): Long = {
+    vs.foreach(v => fs.delete(manifestDir(v), true))
+    if (isPoolOwner) vacuum() else 0L
   }
 
   protected def storedSchema(version: Long): org.apache.spark.sql.types.StructType =
@@ -499,7 +284,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * dropped clone (base dir deleted) simply stops contributing
     * references — no deregistration step is needed for safety. */
   def cloneTo(dstBase: String, fromVersion: Long,
-      commitTs: Option[Long] = None): ManifestStore = {
+      commitTs: Option[Long]): ManifestStore = {
     require(keyCol.nonEmpty, "cloneTo needs the source's key column")
     require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     val dfs = new Path(dstBase).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -670,47 +455,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
           s"version $version has no files and no schema sidecar")
       }
     else readDataFiles(version, files)
-  }
-
-  /** Z-ordered publish into the pool — [[SnapshotStore.writeZOrdered]]
-    * on the linked layout: files cluster on the Morton interleave of
-    * `zCols`, and because per-file min/max stats for every z column
-    * land in the MANIFEST (the store must be constructed with them in
-    * `statsCols`, or they be the key), multi-dimension pruning costs a
-    * manifest filter — no separate zone-map sidecar to maintain, and
-    * later merges carry the clustered files' stats by reference. */
-  def writeZOrdered(df: DataFrame, version: Long, numFiles: Int,
-      zCols: Seq[String], commitTs: Option[Long] = None): Unit = {
-    requireFreeVersion(version)
-    val pcs = storedPartitionBy()
-    val overlap = zCols.filter(pcs.contains)
-    require(overlap.isEmpty,
-      s"writeZOrdered: ${overlap.mkString(", ")} are partition columns — constant " +
-        "within every file already; z-order the finer dimensions instead")
-    val missing = zCols.filterNot(c => c == keyCol || statsCols.contains(c))
-    require(missing.isEmpty,
-      s"z-order columns need manifest stats — construct the store with statsCols containing $missing")
-    // PARTITIONED store: Delta's OPTIMIZE ZORDER BY semantics — the
-    // range split runs over (partition tuple, z), so [[landInPool]]'s
-    // hive stage keeps one tuple per file while each partition's files
-    // cover contiguous z ranges: partition predicates prune exactly
-    // AND every z dimension skips within the partition
-    enforceConstraints(df, "writeZOrdered")
-    val zc = ZOrder.zColumn(df, zCols)
-    val arranged =
-      if (pcs.isEmpty)
-        df.withColumn("__z", zc)
-          .repartitionByRange(numFiles, col("__z")).sortWithinPartitions("__z")
-          .drop("__z")
-      else
-        df.withColumn("__z", zc)
-          .repartitionByRange(numFiles, (pcs.map(col) :+ col("__z")): _*)
-          .sortWithinPartitions((pcs.map(col) :+ col("__z")): _*)
-          .drop("__z")
-    val names = landInPool(arranged)
-    require(names.nonEmpty, "writeZOrdered: empty input frame")
-    publish(version, statsFor(names, effectiveStatsCols), commitTs,
-      op = "writeZOrdered")
   }
 
   /** BLOOM FILTER INDEX (Delta's bloom index): one Bloom filter PER
@@ -979,9 +723,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       n -> pool.getOrElse(n, fs.getFileStatus(new Path(poolDir, n)).getLen))
     val small = sizes.filter(_._2 < minBytes).map(_._1)
     if (small.length <= 1) { // nothing to fold (0 or 1 fragment)
-      publish(toVersion, man, commitTs, evolvedSchema(fromVersion),
-        dv = dvFrame(fromVersion), op = "compact",
-        statsFrom = Some(fromVersion))
+      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "compact", "")
       return (sizes.length, 0)
     }
     // compaction FOLDS the deletion vector in: the rewrite reads the
@@ -1022,50 +764,17 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
 
   def maybeCompact(maxFiles: Int): Option[Long] = maybeCompact(maxFiles, targetFiles = 4)
 
-  /** AUTO-RETENTION hook (`maxVersionsToKeep`): prune to the newest
-    * `maxVersions` when the chain outgrows them — the streaming sink's
-    * one-version-per-micro-batch growth bound. Returns versions
-    * dropped. */
-  def maybeRetain(maxVersions: Int): Int = {
-    require(maxVersions >= 1, s"maybeRetain: need >= 1, got $maxVersions")
-    val vs = versions()
-    if (vs.size <= maxVersions) 0
-    else { prune(vs.takeRight(maxVersions)): Unit; vs.size - maxVersions }
-  }
+  /** Drop all versions except `keep` and the held ones (count-based
+    * retention, [[retain]]); pool files no longer referenced by ANY
+    * surviving manifest are reclaimed by the sweep. Returns bytes
+    * reclaimed. */
+  def prune(keep: Seq[Long]): Long = retain(_.filterNot(keep.contains))._2
 
-  /** Drop all versions except `keep`. Manifests delete FIRST (a crash
-    * leaves extra pool files, never a dangling manifest); pool files
-    * no longer referenced by ANY surviving manifest are reclaimed by
-    * [[vacuum]]. Returns bytes reclaimed. */
-  def prune(keep: Seq[Long]): Long = {
-    versions().filterNot(keep.contains).foreach(v => fs.delete(manifestDir(v), true))
-    // the first surviving commit now counts "whole" for bytes — its
-    // checkpoint entry is stale; rebuild from truth on next read
-    invalidateHistoryCkpt()
-    vacuum()
-  }
-
-  /** TIME-BASED retention — [[SnapshotStore.pruneOlderThan]]'s linked
-    * twin (see there for the contract: strict-older-than boundary,
-    * tip always survives, held versions REFUSE). Expired manifests
-    * delete first, then the pool's ref-count sweep reclaims the
-    * bytes no surviving manifest references. Returns (dropped
-    * versions, bytes reclaimed). */
-  def pruneOlderThan(horizonMs: Long): (Seq[Long], Long) = {
-    val vs = versions()
-    if (vs.isEmpty) return (Seq.empty, 0L)
-    val ts = historyEntries().toMap
-    val tip = vs.max
-    val toDrop = vs.filter(v => v != tip && ts(v).commitTs < horizonMs)
-    val blocked = holds().filter(toDrop.contains)
-    if (blocked.nonEmpty) throw new RetentionHoldException(
-      s"retention horizon $horizonMs selects held version(s) " +
-        s"${blocked.mkString(", ")} on $basePath — release the hold(s) or " +
-        "raise the horizon; refusing to report an un-honorable retention " +
-        "contract as success")
-    if (toDrop.isEmpty) return (Seq.empty, 0L)
-    (toDrop, prune(vs.filterNot(toDrop.contains)))
-  }
+  /** Time-based retention ([[expireOlderThan]]): expired manifests
+    * delete first, then the pool's ref-count sweep reclaims the bytes
+    * no surviving manifest references. Returns (dropped versions,
+    * bytes reclaimed). */
+  def pruneOlderThan(horizonMs: Long): (Seq[Long], Long) = expireOlderThan(horizonMs)
 
   /** Pool files referenced by NO surviving manifest — the ONE
     * traversal behind both [[orphans]] (report) and [[vacuum]]

@@ -526,8 +526,8 @@ object SnapshotStore {
 }
 
 /** Shared Morton-interleave column builder — the multi-column
-  * clustering key behind [[SnapshotStore.writeZOrdered]] and
-  * [[ManifestStore.writeZOrdered]]. */
+  * clustering key behind [[VersionedStore.writeZOrdered]] and
+  * [[VersionedStore.zorderWhere]]. */
 private[operators] object ZOrder {
   import org.apache.spark.sql.Column
 
@@ -575,45 +575,17 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
 
   def withKeyCol(key: String): SnapshotStore = new SnapshotStore(spark, basePath, key)
 
-  /** Atomic snapshot publish through [[publish]]: the frame lands in a
-    * staging sibling, which one rename makes `v=<version>`. A crash
-    * mid-write leaves only a `.tmp-` dir, which `versions()` never
-    * lists, so readers can never observe a partial snapshot as a valid
-    * version.
-    *
-    * `commitTs` (epoch millis, default now) is recorded in a
-    * `_commit_ts` sidecar inside the staged version, so it publishes
-    * atomically with the data — the timestamp [[readAsOf]] resolves
-    * against. Pass it explicitly to backdate reproducible stores
-    * (tests, replays); production writers take the default. */
+  /** Atomic snapshot publish of `df`'s partitions as given (one tuple
+    * per file on a partitioned store) through [[publish]]: the frame
+    * lands in a staging sibling, which one rename makes `v=<version>`,
+    * so readers never observe a partial snapshot. `commitTs` (epoch
+    * millis, default now) is recorded inside the staged version — the
+    * timestamp [[readAsOf]] resolves against; pass it to backdate
+    * reproducible stores (tests, replays). No zone map is recorded
+    * unless partition columns need one ([[writeRangePartitioned]]
+    * records one). */
   def write(df: DataFrame, version: Long, commitTs: Option[Long] = None): Unit =
-    write(df, version, commitTs, None)
-
-  /** [[write]] that additionally STAGES a zone map over `zmCols`
-    * inside the tmp dir, so version + map publish in one rename —
-    * the landing [[writeRangePartitioned]]/[[writeZOrdered]] use. */
-  private def write(df: DataFrame, version: Long, commitTs: Option[Long],
-      zmCols: Option[Seq[String]]): Unit = {
-    val tmp = stage(version)
-    enforceConstraints(df, "write")
-    // a partitioned store splits ANY landing one-tuple-per-file (the
-    // caller's row arrangement is preserved within each tuple); an
-    // unpartitioned store lands the frame's files verbatim
-    val names = landFlat(df, tmp)
-    // a PARTITIONED store's version must always carry its zone map
-    // (the partition verbs' contract) — a plain full-replace write on
-    // one stages the partition stats even when the caller asked for
-    // no extra zmCols
-    val effectiveZm = zmCols.orElse(
-      Option(storedPartitionBy()).filter(_.nonEmpty))
-    // numOutputRows is the history row's own n_rows (footer-counted
-    // at noteCommit) — recording it again here would be a recompute
-    publish(version, tmp, Some(names),
-      zmCols = effectiveZm.map(cols =>
-        (cols ++ storedPartitionBy()).distinct.filterNot(_ == keyCol)),
-      commitTs = commitTs, op = "write",
-      metrics = Map("numFiles" -> names.size.toLong))
-  }
+    writeVersion(version, df, None, commitTs, "write")(_ => df)
 
   /** A fresh staging directory for `version`, the one [[publish]]
     * turns into `v=<version>`. */
@@ -627,18 +599,16 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * made here), the `carried` files (and a `_dv` directory) of the
     * source version byte-copy in under their basenames. The zone map
     * stages inside: the source's `zm` rows for the carried files (see
-    * [[carriedZoneMap]]) plus fresh stats over the landed files under
-    * `zmCols` (default: `zm`'s stats columns). So do the deletion
-    * vector, the commit timestamp, the evolved schema and the
-    * operation stamp, and one CAS rename makes the whole version live
-    * ([[CommitProtocol]]: exactly one concurrent publisher of
-    * `toVersion` wins; the rest throw [[VersionConflictException]]).
-    * `fresh`: the landed files' stats rows when the caller already
-    * computed them. `statsFrom`: the history entry reuses that
-    * version's statistics; otherwise a version publishing a zone map
-    * over every one of its files takes its file and row counts from
-    * the zone-map rows in hand (zone maps count stored rows, as the
-    * footers do), any other rebuilds from the files.
+    * [[carriedZoneMap]]) plus `fresh`, the landed files' rows from
+    * their footers. So do the deletion vector, the commit timestamp,
+    * the evolved schema and the operation stamp, and one CAS rename
+    * makes the whole version live ([[CommitProtocol]]: exactly one
+    * concurrent publisher of `toVersion` wins; the rest throw
+    * [[VersionConflictException]]). `statsFrom`: the history entry
+    * reuses that version's statistics; otherwise a version publishing a
+    * zone map over every one of its files takes its file and row counts
+    * from the zone-map rows in hand (zone maps count stored rows, as
+    * the footers do), any other rebuilds from the files.
     *
     * `inPlace` (compaction: it rewrites a version's layout, not its
     * identity) swaps `tmp` for the existing `toVersion` instead: move
@@ -647,8 +617,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * (between the two renames) the `.old-` dir intact for manual
     * recovery; `versions()` never lists a partial dir. */
   private def publish(toVersion: Long, tmp: Path, landed: Option[Set[String]],
-      carried: Seq[Path] = Nil, zm: Option[DataFrame] = None,
-      zmCols: Option[Seq[String]] = None, dv: Option[DataFrame] = None,
+      carried: Seq[Path] = Nil, zm: Option[DataFrame] = None, dv: Option[DataFrame] = None,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       commitTs: Option[Long] = None, op: String = "unknown", opParams: String = "",
       statsFrom: Option[Long] = None, metrics: Map[String, Long] = Map.empty,
@@ -658,18 +627,14 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       fs.create(new Path(tmp, "_SUCCESS"), true).close()
     }
     val conf = spark.sparkContext.hadoopConfiguration
-    carried.foreach(p =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false, conf))
+    carried.foreach(p => org.apache.hadoop.fs.FileUtil.copy(p.getFileSystem(conf), p, fs,
+      new Path(tmp, p.getName), false, conf))
     dv.foreach(_.select("file", "pos").coalesce(1).write.mode("overwrite")
       .parquet(new Path(tmp, "_dv").toString))
     val ts = commitTs.getOrElse(System.currentTimeMillis())
     writeCommitTs(tmp, ts)
     schema.foreach(Sidecars.writeSchema(fs, tmp, _))
-    val landedZm = fresh.orElse(for {
-      names <- landed.filter(_.nonEmpty)
-      cols <- zmCols.orElse(zm.map(statsColsOf))
-    } yield zmNewStats(tmp, names, cols))
-    val staged = (zm ++ landedZm).reduceOption(unionLocal)
+    val staged = (zm ++ fresh).reduceOption(unionLocal)
       .map(z => z.schema -> stageZoneMap(tmp, toVersion, z))
     val zmRows = staged.map(_._2)
     // the published zone map's rows seed the cache its reads go through
@@ -782,6 +747,29 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     nLanded
   }
 
+  /** The landing commit on this layout: the frame lands in the staged
+    * version dir ([[landFlat]], which keeps a zero-row file: it carries
+    * the schema) with zone-map rows from its footers, one rename
+    * publishes. */
+  protected def commitLanding(version: Long, landing: DataFrame,
+      statsCols: Option[Seq[String]], schema: org.apache.spark.sql.types.StructType,
+      commitTs: Option[Long], op: String, opParams: String, rename: String => String,
+      metrics: Int => Map[String, Long]): Unit = {
+    val tmp = stage(version)
+    val names = landFlat(landing, tmp, rename)
+    publish(version, tmp, Some(names),
+      schema = Some(schema).filter(_ => names.isEmpty), commitTs = commitTs, op = op,
+      opParams = opParams, metrics = metrics(names.size),
+      fresh = statsCols.filter(_ => names.nonEmpty)
+        .map(landedStats(names.toSeq.sorted.map(new Path(tmp, _)), _)))
+  }
+
+  /** Versions drop with their directories. */
+  protected def dropVersions(vs: Seq[Long]): Long = {
+    vs.foreach(v => fs.delete(new Path(dir(v)), true))
+    0L
+  }
+
   /** The carry publish as a byte-carry: every data file, the deletion
     * vector's directory and the zone map's rows copy into `toVersion`
     * under their own names. */
@@ -802,41 +790,29 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       op = op, opParams = opParams, statsFrom = Some(fromVersion))
   }
 
-  /** DEEP CLONE to a new table at `dstBase`, this layout's way: each
-    * version is a self-contained directory, so the clone's version 1
-    * is a byte-copy of the source version dir — data files, zone map,
-    * schema sidecar carry verbatim under the same basenames, no
-    * parquet decode — plus a fresh `_store.json`. O(version bytes) by
-    * construction; the zero-copy shallow clone is the linked layout's
-    * [[ManifestStore.cloneTo]]. Same tmp+rename publish discipline as
-    * [[write]]: a crash leaves only a `.tmp-` dir at the target. */
+  /** DEEP CLONE to a new table at `dstBase`, this layout's way: the
+    * clone's version 1 commits through its own [[publish]] holding a
+    * byte-copy of the source version's data files and deletion vector
+    * under the same basenames (no parquet decode), its zone-map rows
+    * re-homed onto the clone and written on the driver, its evolved
+    * schema, stamped `clone`. O(version bytes) by construction; the
+    * zero-copy shallow clone is the linked layout's
+    * [[ManifestStore.cloneTo]]. */
   def cloneTo(dstBase: String, fromVersion: Long,
-      commitTs: Option[Long] = None): SnapshotStore = {
+      commitTs: Option[Long]): SnapshotStore = {
     require(keyCol.nonEmpty, "cloneTo needs the source's key column")
     require(hasVersion(fromVersion), s"version $fromVersion does not exist")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dfs = new Path(dstBase).getFileSystem(conf)
     val dst = new SnapshotStore(spark, dstBase, keyCol)
     require(dst.versions().isEmpty, s"clone target $dstBase already has versions")
-    dfs.mkdirs(new Path(dstBase))
-    val tmp = new Path(s"$dstBase/.tmp-v=1-${java.util.UUID.randomUUID()}")
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(dir(fromVersion)), dfs, tmp,
-      false, conf)
-    // the zone map stores ABSOLUTE file URIs (readWhere opens them):
-    // re-home each entry onto the clone's v=1 by basename, or pruned
-    // reads on the clone would open the SOURCE's files
-    zoneMap(fromVersion).foreach(_.withColumn("file",
-        concat(lit(s"$dstBase/v=1/"), element_at(split(col("file"), "/"), -1)))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new Path(tmp, "_zonemap").toString))
-    commitTs.foreach { ts =>
-      val out = dfs.create(new Path(tmp, "_commit_ts"), true)
-      try out.writeUTF(ts.toString) finally out.close()
-    }
-    dst.ensureStoreMeta()
-    val dest = new Path(s"$dstBase/v=1")
-    if (!dfs.rename(tmp, dest))
-      throw new java.io.IOException(s"clone publish failed: rename $tmp -> $dest")
+    val listing = fs.listStatus(new Path(dir(fromVersion))).toSeq.map(_.getPath)
+    // the zone map stores ABSOLUTE file paths (pruned reads open them):
+    // re-home each entry onto the clone's v=1 by basename
+    dst.publish(1L, dst.stage(1L), None,
+      carried = listing.filter(p => p.getName.startsWith("part-") || p.getName == "_dv"),
+      zm = zoneMap(fromVersion).map(_.withColumn("file",
+        concat(lit(s"$dstBase/v=1/"), element_at(split(col("file"), "/"), -1)))),
+      schema = evolvedSchema(fromVersion), commitTs = commitTs, op = "clone",
+      opParams = s"from $basePath v$fromVersion")
     dst
   }
 
@@ -862,139 +838,21 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       partCols: Seq[String], fp: DataFrame => Column): DataFrame =
     restoreAndValidate(readAsOfResolved(ts)._1, targetPath, partCols, fp)
 
-  /** [[write]] with a data-skipping layout: rows range-partitioned by
-    * the business key into ~`numFiles` files, sorted within each, plus
-    * a zone map (per-file key min/max) built after publish. Each file
-    * then owns a disjoint key range, so a keyed restore or diff reads
-    * only the overlapping files ([[readKeyRange]]) instead of scanning
-    * the whole snapshot — at 100 TB the difference between "restore
-    * one partition" costing one file-set and costing the lake.
-    * `repartitionByRange` is one shuffle at write time, paid once per
-    * snapshot; the in-file sort additionally tightens parquet
-    * row-group stats for predicate pushdown within a file. */
+  /** The range-clustered full write ([[writeClustered]]): rows
+    * range-partitioned by the business key into ~`numFiles` files,
+    * sorted within each, plus a zone map (per-file key min/max, and
+    * min/max of `statsCols`). Each file then owns a disjoint key range,
+    * so a keyed restore or diff reads only the overlapping files
+    * ([[readKeyRange]]) instead of scanning the whole snapshot. */
   def writeRangePartitioned(df: DataFrame, version: Long, numFiles: Int,
-      statsCols: Seq[String] = Nil, commitTs: Option[Long] = None): Unit = {
-    write(df.repartitionByRange(numFiles, col(keyCol)).sortWithinPartitions(keyCol),
-      version, commitTs, Some(statsCols))
-  }
+      statsCols: Seq[String] = Nil, commitTs: Option[Long] = None): Unit =
+    writeClustered(df, version, numFiles, statsCols, commitTs)
 
-  /** [[write]] with a HASH-BUCKETED layout — the co-location contract
-    * behind STORAGE-PARTITIONED JOINS: rows land in exactly `buckets`
-    * files, file `i` holding the rows with `pmod(murmur3(key), buckets)
-    * == i` (Spark's own bucket function — `repartition(n, col)` IS
-    * HashPartitioning, the same partitionIdExpression bucketed tables
-    * use), key-sorted within, each file named with Spark's bucketed
-    * suffix (`..._0000i.parquet`). The SQL catalog then serves the
-    * version as a bucketed relation whose scan reports
-    * `HashPartitioning(key, buckets)` — two stores bucketed to the
-    * same count join on the key with ZERO Exchange on either side
-    * (and zero Sort: one file per bucket, pre-sorted), the plan
-    * `ScaleJoins.colocatedJoin` proves outside the catalog. At 100 TB
-    * this is the difference between a store⋈store fact join shuffling
-    * both sides and shuffling neither. The declaration persists in
-    * `_bucket.json`; verbs that land non-bucketed files (mergeDelta,
-    * compact) simply fail the read gate and the version serves through
-    * the plain route — re-bucket with a fresh [[writeBucketed]]. */
+  /** The bucketed full write ([[writeBucketedVersion]]), its zone map
+    * also recording `statsCols`. */
   def writeBucketed(df: DataFrame, version: Long, buckets: Int,
-      statsCols: Seq[String] = Nil, commitTs: Option[Long] = None): Unit = {
-    require(buckets > 0, s"writeBucketed: bucket count must be positive, got $buckets")
-    require(storedPartitionBy().isEmpty,
-      "writeBucketed: this store declares partition columns — bucket and " +
-        "partition layouts are exclusive per store")
-    requireFreeVersion(version)
-    SnapshotStore.writeStoredBucketBy(fs, basePath, keyCol, buckets,
-      canRedeclare = versions().isEmpty)
-    enforceConstraints(df, "writeBucketed")
-    val tmp = stage(version)
-    df.repartition(buckets, col(keyCol)).sortWithinPartitions(keyCol)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // the writer names files part-<partitionId>-<uuid>...: the leading
-    // number IS the bucket id (partition i of an explicit repartition).
-    // Re-name to Spark's bucketed convention so FileSourceScanExec
-    // (and the catalog gate) can parse the id back out of the name.
-    val names = fs.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).map { p =>
-        val b = p.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
-        require(b < buckets, s"writeBucketed: task id $b >= $buckets in ${p.getName}")
-        val (stem, ext) = p.getName.span(_ != '.')
-        val renamed = f"${stem}_$b%05d$ext"
-        if (!fs.rename(p, new Path(tmp, renamed)))
-          throw new java.io.IOException(s"bucketed landing rename failed for $p")
-        renamed
-      }.toSet
-    publish(version, tmp, Some(names),
-      zmCols = Some(statsCols.distinct.filterNot(_ == keyCol)).filter(_ => statsCols.nonEmpty),
-      commitTs = commitTs, op = "writeBucketed", opParams = s"$buckets buckets by $keyCol")
-  }
-
-  /** Publish `version` as an EMPTY table of `schema` — SQL `CREATE
-    * TABLE`'s landing for this layout. The version dir holds one
-    * schema-carrying footer-only parquet file (Spark forces a single
-    * write task for an empty frame, exactly so the schema survives)
-    * plus an empty zone map, so the first [[mergeDelta]]
-    * (INSERT/CTAS) finds the zone map it requires, rewrites nothing,
-    * and lands the initial rows as version+1. The declared schema
-    * must carry the store's key column. */
-  def createEmpty(schema: org.apache.spark.sql.types.StructType, version: Long = 1L,
-      commitTs: Option[Long] = None): Unit = {
-    requireFreeVersion(version)
-    require(schema.fieldNames.contains(keyCol),
-      s"createEmpty: declared schema ${schema.fieldNames.mkString("(", ",", ")")} " +
-        s"lacks the store key column '$keyCol'")
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    // a pre-declared partition spec (CREATE TABLE ... PARTITIONED BY)
-    // seeds the zone map with the partition stats columns, so the
-    // first INSERT's mergeDelta records them for its new files
-    writeRangePartitioned(empty, version, 1,
-      statsCols = storedPartitionBy(), commitTs = commitTs)
-  }
-
-  /** [[write]] with a MULTI-column clustering layout: rows ordered by
-    * the Z-order (Morton) interleave of `zCols`, range-partitioned into
-    * ~`numFiles` files, plus a zone map carrying per-file min/max for
-    * EVERY clustered column. Where [[writeRangePartitioned]] makes one
-    * column's ranges disjoint per file (perfect pruning on the key,
-    * none on anything else), Z-ordering makes every clustered column
-    * LOCALLY narrow in every file — a restore filtered on ANY of the
-    * clustered dimensions skips most files ([[readWhere]] /
-    * [[readWhereAll]]), the hierarchical-zone-map layout Delta/Iceberg
-    * users reach for on 100 TB fact tables queried by more than one
-    * dimension.
-    *
-    * The z-value is LAYOUT ONLY: each column is scaled to a 16-bit
-    * bucket by its global min/max (one tiny aggregate), buckets are
-    * bit-interleaved, and rows sort by the interleave. Pruning
-    * correctness never depends on the z-math — the zone map records the
-    * TRUE per-file min/max of each column, and [[readWhere]] filters
-    * exactly. A degenerate z-value only costs skipping efficiency.
-    * Columns must be numeric/temporal (bucketing needs an order-
-    * preserving cast to double); nulls bucket to 0 and never prune
-    * wrongly (zone-map rule: null bounds keep the file). */
-  def writeZOrdered(df: DataFrame, version: Long, numFiles: Int,
-      zCols: Seq[String], commitTs: Option[Long] = None): Unit = {
-    val pcs = storedPartitionBy()
-    val overlap = zCols.filter(pcs.contains)
-    require(overlap.isEmpty,
-      s"writeZOrdered: ${overlap.mkString(", ")} are partition columns — constant " +
-        "within every file already; z-order the finer dimensions instead")
-    // partitioned: OPTIMIZE ZORDER BY — range split over (tuple, z),
-    // landFlat's hive stage keeps one tuple per file, each partition's
-    // files cover contiguous z ranges (see ManifestStore.writeZOrdered)
-    val zc = ZOrder.zColumn(df, zCols)
-    val arranged =
-      if (pcs.isEmpty)
-        df.withColumn("__z", zc)
-          .repartitionByRange(numFiles, col("__z")).sortWithinPartitions("__z")
-          .drop("__z")
-      else
-        df.withColumn("__z", zc)
-          .repartitionByRange(numFiles, (pcs.map(col) :+ col("__z")): _*)
-          .sortWithinPartitions((pcs.map(col) :+ col("__z")): _*)
-          .drop("__z")
-    write(arranged, version, commitTs,
-      Some((zCols ++ pcs).filterNot(_ == keyCol).distinct))
-  }
+      statsCols: Seq[String] = Nil, commitTs: Option[Long] = None): Unit =
+    writeBucketedVersion(df, version, buckets, statsCols, commitTs)
 
   /** BLOOM FILTER INDEX — [[ManifestStore.buildBloomIndex]]'s
     * dir-per-version twin: one filter per data file over `column`
@@ -1071,168 +929,36 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   }
 
   /** Land `df`'s part files FLAT into `tmp` (the version dir under
-    * construction) and return their names. Partitioned stores stage
-    * hive-style on duplicated `__gp_<col>` directory columns (the
-    * originals stay in the data — files remain self-contained) and the
-    * leaves move flat under fresh `part-…` names, so the version dir
-    * keeps the layout every reader/lister of this store assumes. */
-  private def landFlat(df0: DataFrame, tmp: Path): Set[String] = {
+    * construction), each named `rename(<name>)`, and return their
+    * names. An unpartitioned frame writes straight into `tmp`; a
+    * partitioned one stages hive-style ([[landStaged]]) and its files
+    * move flat under fresh `part-…` names, so the version dir keeps the
+    * layout every reader/lister of this store assumes. */
+  private def landFlat(df: DataFrame, tmp: Path,
+      rename: String => String = identity): Set[String] = {
     val pcs = storedPartitionBy()
     if (pcs.isEmpty) {
-      df0.write.mode("overwrite").parquet(tmp.toString)
-      partNames(tmp)
-    } else {
-      val df = deriveParts(df0)
-      val stage = new Path(s"$basePath/.tmp-stage-${java.util.UUID.randomUUID()}")
-      val dup = pcs.foldLeft(df)((d, c) => d.withColumn(s"__gp_$c", col(c)))
-      dup.write.mode("overwrite")
-        .partitionBy(pcs.map("__gp_" + _): _*).parquet(stage.toString)
-      fs.mkdirs(tmp)
-      val it = fs.listFiles(stage, true)
-      val parts = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-        .filter(_.getName.startsWith("part-")).toIndexedSeq
-      val names = parts.map { p =>
-        val name = s"part-${java.util.UUID.randomUUID().toString.take(12)}-${p.getName.take(10)}.parquet"
-        if (!fs.rename(p, new Path(tmp, name)))
-          throw new java.io.IOException(s"partitioned landing rename failed for $p")
-        name
+      df.write.mode("overwrite").parquet(tmp.toString)
+      partNames(tmp).map { n =>
+        val m = rename(n)
+        if (m != n && !fs.rename(new Path(tmp, n), new Path(tmp, m)))
+          throw new java.io.IOException(s"landing rename failed for $n")
+        m
       }
-      fs.delete(stage, true)
-      // an EMPTY frame writes no partition dirs at all — land its
-      // schema-carrying footer-only file flat instead (createEmpty's
-      // contract: a zero-row version must still declare its schema)
-      val schemaNames =
-        if (names.nonEmpty) Set.empty[String]
-        else {
-          val flat = new Path(s"$basePath/.tmp-stage-${java.util.UUID.randomUUID()}")
-          df.limit(0).write.mode("overwrite").parquet(flat.toString)
-          val moved = fs.listStatus(flat).map(_.getPath)
-            .filter(_.getName.startsWith("part-")).map { p =>
-              if (!fs.rename(p, new Path(tmp, p.getName)))
-                throw new java.io.IOException(s"empty landing rename failed for $p")
-              p.getName
-            }.toSet
-          fs.delete(flat, true)
-          moved
-        }
+    } else {
+      val names = landStaged(df, pcs, tmp, n =>
+        rename(s"part-${java.util.UUID.randomUUID().toString.take(12)}-${n.take(10)}.parquet"))
       fs.create(new Path(tmp, "_SUCCESS"), true).close()
-      names.toSet ++ schemaNames
+      names.toSet
     }
   }
 
-  /** First write of a PARTITIONED table on this layout —
-    * [[ManifestStore.writePartitioned]]'s dir-per-version twin:
-    * declares `partCols`, lands one-partition-tuple-per-file, and
-    * builds a zone map whose partition-column stats are exact
-    * (min==max), so partition predicates prune exactly through the
-    * existing [[readWhere]]/[[prunedFilesBy]] machinery. `statsCols`
-    * adds further zone-mapped columns beyond the partition spec. */
+  /** The partitioned first write ([[writePartitionedVersion]]), its
+    * zone map also recording `statsCols`. */
   def writePartitioned(df: DataFrame, version: Long, partCols: Seq[String],
       filesPerPartition: Int = 1, statsCols: Seq[String] = Nil,
-      commitTs: Option[Long] = None): Unit = {
-    requireFreeVersion(version)
-    require(partCols.nonEmpty, "writePartitioned: no partition columns")
-    require(!partCols.contains(keyCol),
-      s"writePartitioned: '$keyCol' is the store key — zone-map key envelopes " +
-        "already prune it; partition on a coarser dimension")
-    val specs = partCols.map(SnapshotStore.parsePartitionSpec)
-    val missing = specs.map(_.source).filterNot(df.columns.contains)
-    require(missing.isEmpty, s"writePartitioned: not in the frame: ${missing.mkString(", ")}")
-    specs.filter(_.transform.isDefined).map(_.name).filter(df.columns.contains)
-      .foreach(n => throw new IllegalArgumentException(
-        s"writePartitioned: derived partition column name '$n' collides with a " +
-          "data column"))
-    SnapshotStore.writeStoredPartitionBy(fs, basePath, partCols,
-      canRedeclare = versions().isEmpty)
-    enforceConstraints(df, "writePartitioned")
-    val tmp = stage(version)
-    val names = landFlat(arrange(df, filesPerPartition), tmp)
-    require(names.nonEmpty, "writePartitioned: empty input frame")
-    publish(version, tmp, Some(names),
-      zmCols = Some((statsCols ++ specs.map(_.name)).distinct.filterNot(_ == keyCol)),
-      commitTs = commitTs, op = "writePartitioned")
-  }
-
-  private def requirePartitionedZm(op: String, version: Long): (Seq[String], DataFrame) = {
-    val pcs = storedPartitionBy()
-    require(pcs.nonEmpty,
-      s"$op needs a partitioned store — declare partition columns with writePartitioned")
-    val zm = zoneMap(version).getOrElse(throw new IllegalStateException(
-      s"$op needs version $version's zone map (writePartitioned builds it)"))
-    (pcs, zm)
-  }
-
-  /** DYNAMIC PARTITION OVERWRITE — [[ManifestStore.replaceWhere]]'s
-    * twin: partitions present in `data` are replaced wholesale;
-    * untouched partitions carry as byte-copies (this layout's carry
-    * contract — the zero-copy carry is the linked layout's). Returns
-    * (filesCarried, filesReplaced, filesNew). */
-  def replaceWhere(fromVersion: Long, toVersion: Long, data: DataFrame,
-      filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int) = {
-    val (pcs, zm0) = requirePartitionedZm("replaceWhere", fromVersion)
-    requireFreeVersion(toVersion)
-    requireUniformSpec(zm0, "replaceWhere")
-    enforceConstraints(data, "replaceWhere")
-    val zm = zm0.materialize()
-    val data2 = deriveParts(data)
-    val touched = data2.select(pcs.map(col): _*).distinct().materialize()
-    // NULL-SAFE anti-join (<=>): a null partition tuple in `data` must
-    // replace the existing null-tuple files like any other value — a
-    // plain column-list join never matches nulls, which would KEEP the
-    // old null-partition files AND land the new rows (duplication)
-    val pe = partitionEntries(zm, pcs)
-    val sharedNames = pe.join(touched,
-        pcs.map(c => pe(c) <=> touched(c)).reduce(_ && _), "left_anti")
-      .select("file").collect()
-      .map(f => { val p = f.getString(0); p.substring(p.lastIndexOf('/') + 1) }).toSet
-    val allParts = dataFiles(fromVersion)
-    val tmp = stage(toVersion)
-    val sc = evolvedSchema(fromVersion)
-    val newNames = landFlat(arrange(
-      sc.map(SnapshotStore.toPhysical(data2, _)).getOrElse(data2), filesPerPartition), tmp)
-    val carriedParts = allParts.filter(p => sharedNames(p.getName))
-    // zone map: carried entries re-home; only the new files scan
-    publish(toVersion, tmp, Some(newNames), carriedParts,
-      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, sharedNames)),
-      dv = carryDv(fromVersion, allParts.map(_.getName).toSet -- sharedNames,
-        carriedParts.nonEmpty),
-      schema = sc, commitTs = commitTs,
-      op = "replaceWhere")
-    (carriedParts.length, allParts.length - carriedParts.length, newNames.size)
-  }
-
-  /** Partition drop — [[ManifestStore.dropPartitions]]'s twin. On this
-    * layout the survivors byte-copy into the new version dir (the
-    * dir-per-version carry contract); the METADATA-ONLY drop is the
-    * linked layout's. Null predicate rows are kept. Returns
-    * (filesCarried, filesDropped, physicalRowsDropped). */
-  def dropPartitions(fromVersion: Long, toVersion: Long, pred: Column,
-      commitTs: Option[Long] = None): (Int, Int, Long) = {
-    val (pcs, zm0) = requirePartitionedZm("dropPartitions", fromVersion)
-    requireFreeVersion(toVersion)
-    requireUniformSpec(zm0, "dropPartitions")
-    val zm = zm0.materialize()
-    val dropped = partitionEntries(zm, pcs).filter(coalesce(pred, lit(false)))
-      .select(regexp_extract(col("file"), "[^/]+$", 0).as("name"), col("n_rows"))
-      .materialize()
-    val droppedNames = dropped.select("name").collect().map(_.getString(0)).toSet
-    val rowsDropped = dropped.agg(coalesce(sum("n_rows"), lit(0L))).head().getLong(0)
-    val allParts = dataFiles(fromVersion)
-    val survivors = allParts.filterNot(p => droppedNames(p.getName))
-    val kept = survivors.map(_.getName).toSet
-    // dropping every partition legitimately empties the table: record
-    // the schema sidecar so the zero-file version still plans
-    val schema =
-      if (survivors.isEmpty)
-        evolvedSchema(fromVersion).orElse(Some(read(fromVersion).schema))
-      else evolvedSchema(fromVersion)
-    publish(toVersion, stage(toVersion), None, survivors,
-      zm = Some(carriedZoneMap(zm, fromVersion, toVersion, kept)),
-      dv = carryDv(fromVersion, droppedNames, survivors.nonEmpty), schema = schema,
-      commitTs = commitTs,
-      op = "dropPartitions")
-    (survivors.length, droppedNames.size, rowsDropped)
-  }
+      commitTs: Option[Long] = None): Unit =
+    writePartitionedVersion(df, version, partCols, filesPerPartition, statsCols, commitTs)
 
   /** Committed versions only: a `v=N` directory counts only if its
     * `_SUCCESS` marker exists (guards against partial dirs created by
@@ -1382,9 +1108,8 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * re-homing any file path recorded under the tmp dir name to the
     * final `v=N` dir: the version and its zone map then go live in ONE
     * rename, so a crash between publish and map-write can no longer
-    * leave a live partitioned version whose readers
-    * ([[requirePartitionedZm]], pruning) throw until repaired. Returns
-    * the staged rows. */
+    * leave a live version whose pruned reads miss its map. Returns the
+    * staged rows. */
   private def stageZoneMap(tmp: Path, toVersion: Long, zm: DataFrame): Array[org.apache.spark.sql.Row] = {
     val at = zm.schema.fieldIndex("file")
     val (from, to) = (s"/${tmp.getName}/", s"/v=$toVersion/")
@@ -1470,8 +1195,9 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     // it, and the rebuilt zone map scans the rewritten files (the
     // compacted layout folds any DV, so the raw scan is the semantic
     // read)
-    publish(version, tmp, Some(partNames(tmp)), zmCols = zmapStatsCols,
-      commitTs = Some(commitTimestamp(version)), op = "compact", inPlace = true)
+    val names = partNames(tmp)
+    publish(version, tmp, Some(names), commitTs = Some(commitTimestamp(version)),
+      op = "compact", inPlace = true, fresh = zmapStatsCols.map(zmNewStats(tmp, names, _)))
     val after = fs.listStatus(dest).count(_.getPath.getName.startsWith("part-"))
     (dataFiles.length, after)
   }
@@ -1540,58 +1266,8 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   def maybeCompact(maxFiles: Int): Option[Long] =
     maybeCompact(maxFiles, targetBytes = 128L << 20)
 
-  /** AUTO-RETENTION hook — prune to the newest `maxVersions`; the
-    * streaming sink's one-version-per-micro-batch growth bound.
-    * Returns versions dropped. */
-  def maybeRetain(maxVersions: Int): Int = {
-    require(maxVersions >= 1, s"maybeRetain: need >= 1, got $maxVersions")
-    val vs = versions()
-    if (vs.size <= maxVersions) 0 else prune(maxVersions).size
-  }
-
-  /** Delete all but the newest `keepLast` versions. Returns the pruned
-    * version ids. */
-  def prune(keepLast: Int): Seq[Long] = {
-    val held = holds()
-    val vs = versions()
-    val toDrop = vs.dropRight(keepLast).filterNot(held.contains)
-    val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    toDrop.foreach(v => fs.delete(new Path(dir(v)), true))
-    // the first SURVIVING commit now counts "whole" for bytes — its
-    // checkpoint entry is stale; rebuild from truth on next read
-    invalidateHistoryCkpt()
-    toDrop
-  }
-
-  /** TIME-BASED retention — Delta's `RETAIN n HOURS` contract, by
-    * absolute cutoff: expire every version whose commit timestamp is
-    * STRICTLY OLDER than `horizonMs` (a version committed exactly AT
-    * the horizon survives — the boundary an operator's "retain 7
-    * days" mental model expects), except the TIP, which survives
-    * regardless of age. Commit timestamps serve from the version-log
-    * checkpoint — one metadata read, zero data-file opens at any
-    * store size. REFUSES ([[RetentionHoldException]]) when the
-    * horizon selects a held version: a time-retention contract that
-    * cannot be honored must surface, not silently under-delete (the
-    * count-based [[prune]] skips holds instead — an advisory policy,
-    * not a compliance horizon). Returns the dropped versions. */
-  def pruneOlderThan(horizonMs: Long): Seq[Long] = {
-    val vs = versions()
-    if (vs.isEmpty) return Seq.empty
-    val ts = historyEntries().toMap
-    val tip = vs.max
-    val toDrop = vs.filter(v => v != tip && ts(v).commitTs < horizonMs)
-    val blocked = holds().filter(toDrop.contains)
-    if (blocked.nonEmpty) throw new RetentionHoldException(
-      s"retention horizon $horizonMs selects held version(s) " +
-        s"${blocked.mkString(", ")} on $basePath — release the hold(s) or " +
-        "raise the horizon; refusing to report an un-honorable retention " +
-        "contract as success")
-    toDrop.foreach(v => fs.delete(new Path(dir(v)), true))
-    // the first SURVIVING commit now counts "whole" for bytes — its
-    // checkpoint entry is stale; rebuild from truth on next read
-    if (toDrop.nonEmpty) invalidateHistoryCkpt()
-    toDrop
-  }
+  /** Time-based retention ([[expireOlderThan]]). Returns the dropped
+    * versions. */
+  def pruneOlderThan(horizonMs: Long): Seq[Long] = pruneBefore(horizonMs)
 
 }

@@ -13,9 +13,8 @@ import graft.functions.Fx
   * (the "linked" layout: per-version manifests over a shared file
   * pool). The SQL catalog, the change feed and the streaming sinks
   * hold a `VersionedStore` and call through it; where the layouts
-  * genuinely differ (compaction, retention and vacuum, bucketed
-  * writes, clones, the pool durability ladder) callers match on the
-  * store's type.
+  * genuinely differ (compaction, vacuum, the pool durability ladder)
+  * callers match on the store's type.
   *
   * The members declared here without a body are the verbs each layout
   * implements its own way, plus the layout primitives: where a
@@ -25,12 +24,14 @@ import graft.functions.Fx
   * ([[publishCarry]]), a history entry rebuilt from the files
   * ([[computeHistoryEntry]]), a version's per-file statistics
   * ([[fileStats]]) and the readable path of one of their entries
-  * ([[entryPath]]), and one rewrite commit ([[commitRewrite]]).
-  * Every body here (time travel, the pruned reads, the diff family,
-  * the deletion-vector and Bloom sidecars, the schema verbs, restore,
-  * the rewrite verbs, constraints, holds, column statistics, the
-  * history checkpoint, the optimistic-concurrency merge,
-  * partition-spec helpers) is written once over those. */
+  * ([[entryPath]]), one landing commit ([[commitLanding]]), one
+  * rewrite commit ([[commitRewrite]]) and one "drop these versions"
+  * step ([[dropVersions]]). Every body here (time travel, the pruned
+  * reads, the diff family, the deletion-vector and Bloom sidecars, the
+  * schema verbs, restore, the landing verbs, the rewrite verbs, the
+  * partition overwrite and drop, retention, constraints, holds, column
+  * statistics, the history checkpoint, the optimistic-concurrency
+  * merge, partition-spec helpers) is written once over those. */
 trait VersionedStore {
   val basePath: String
   val keyCol: String
@@ -97,7 +98,34 @@ trait VersionedStore {
   /** `version`'s per-file entries: its [[fileStats]], or (a version
     * recording none) the same rows from its files' footers. */
   protected def fileEntries(version: Long): DataFrame =
-    fileStats(version).getOrElse(landedStats(dataPaths(version).map(new Path(_)), Nil))
+    fileStats(version).getOrElse(
+      landedStats(dataPaths(version).map(new Path(_)), storedPartitionBy()))
+
+  /** The stats columns this layout declares for every landing beyond
+    * the key and the partition columns: the linked layout's
+    * construction `statsCols`. */
+  protected def declaredStatsCols: Seq[String] = Nil
+
+  /** One landing commit, the publish half of every landing verb:
+    * publish `version` holding exactly the files `landing` (an arranged
+    * frame) lands the layout's way, each named `rename(<the layout's
+    * name>)`, with their per-file statistics over the key and
+    * `statsCols` taken from their footers. `statsCols` None records no
+    * statistics where the layout can serve a version without them (a
+    * plain snapshot write); the linked layout's version is its
+    * manifest, so it records the key envelope. `schema` (the landed
+    * frame's) is recorded as the schema sidecar when the version would
+    * hold no file. `metrics` receives the number of files landed (as
+    * the layout counts them). */
+  protected def commitLanding(version: Long, landing: DataFrame,
+      statsCols: Option[Seq[String]], schema: StructType, commitTs: Option[Long],
+      op: String, opParams: String, rename: String => String,
+      metrics: Int => Map[String, Long]): Unit
+
+  /** Drop the committed versions `vs` (none of them held), this
+    * layout's way. Returns the bytes a separate sweep reclaimed (0
+    * where the bytes leave with the versions). */
+  protected def dropVersions(vs: Seq[Long]): Long
 
   /** One rewrite commit, the landing half of every rewrite verb:
     * publish `toVersion` holding the `carried` data files of
@@ -117,13 +145,13 @@ trait VersionedStore {
   def read(version: Long): DataFrame
   def commitBytes(version: Long): Long
 
-  def replaceWhere(fromVersion: Long, toVersion: Long, data: DataFrame,
-      filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int)
-  def dropPartitions(fromVersion: Long, toVersion: Long, pred: Column,
-      commitTs: Option[Long] = None): (Int, Int, Long)
   /** `maybeCompact` with the layout's default sizing. */
   def maybeCompact(maxFiles: Int): Option[Long]
-  def maybeRetain(maxVersions: Int): Int
+
+  /** A clone of `fromVersion` as version 1 of a new table at `dstBase`:
+    * a deep copy on the snapshot layout, a shallow one over the shared
+    * pool on the linked layout. */
+  def cloneTo(dstBase: String, fromVersion: Long, commitTs: Option[Long] = None): VersionedStore
 
   protected def fs: FileSystem =
     new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -431,8 +459,7 @@ trait VersionedStore {
     * The key column is the store's identity and cannot drop. */
   def dropColumns(fromVersion: Long, toVersion: Long, cols: Seq[String],
       commitTs: Option[Long] = None): Unit = {
-    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
+    requireRewrite(fromVersion, toVersion)
     require(!cols.contains(keyCol),
       s"dropColumns: '$keyCol' is the store's key column — its identity, not droppable")
     cols.foreach(requireNoConstraintOn(_, "dropColumns"))
@@ -461,8 +488,7 @@ trait VersionedStore {
     * statistics are typed); a non-widening change keeps refusing. */
   def widenColumn(fromVersion: Long, toVersion: Long, column: String,
       newType: DataType, commitTs: Option[Long] = None): Unit = {
-    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
+    requireRewrite(fromVersion, toVersion)
     require(column != keyCol,
       s"widenColumn: '$keyCol' is the store's key column — its key-envelope " +
         "stats are typed; widening the identity is a store-level migration")
@@ -496,8 +522,7 @@ trait VersionedStore {
     * logical columns). `numFiles` is unused: nothing is rewritten. */
   def renameColumn(fromVersion: Long, toVersion: Long, from: String, to: String,
       numFiles: Int = 4, commitTs: Option[Long] = None): Unit = {
-    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
+    requireRewrite(fromVersion, toVersion)
     require(from != keyCol,
       s"renameColumn: '$keyCol' is the store's recorded key column — renaming the " +
         "identity is a store-level migration, not schema evolution")
@@ -533,8 +558,7 @@ trait VersionedStore {
   def restoreVersion(fromVersion: Long, toVersion: Long,
       commitTs: Option[Long] = None, op: String = "restoreVersion",
       opParams: String = ""): Unit = {
-    require(hasVersion(fromVersion), s"version $fromVersion does not exist")
-    requireFreeVersion(toVersion)
+    requireRewrite(fromVersion, toVersion)
     publishCarry(fromVersion, toVersion, None, Nil, commitTs, op,
       if (opParams.isEmpty) s"of v$fromVersion" else opParams)
   }
@@ -697,16 +721,202 @@ trait VersionedStore {
     * within) when partitioned, so the landing keeps one partition
     * tuple per file and the per-file stats record exact (min==max)
     * partition values. */
-  protected def arrange(df: DataFrame, numFiles: Int): DataFrame =
-    storedPartitionBy() match {
-      case Seq() =>
-        df.repartitionByRange(numFiles, col(keyCol)).sortWithinPartitions(keyCol)
-      case pcs =>
-        val d = deriveParts(df) // temporal transforms land derived identity cols
-        val exprs = pcs.map(col) :+ pmod(hash(col(keyCol)), lit(math.max(numFiles, 1)))
-        d.repartition(exprs: _*)
-          .sortWithinPartitions((pcs :+ keyCol).map(col): _*)
+  protected def arrange(df: DataFrame, numFiles: Int,
+      pcs: Seq[String] = storedPartitionBy()): DataFrame =
+    if (pcs.isEmpty)
+      df.repartitionByRange(numFiles, col(keyCol)).sortWithinPartitions(keyCol)
+    else {
+      val d = deriveParts(df) // temporal transforms land derived identity cols
+      val exprs = pcs.map(col) :+ pmod(hash(col(keyCol)), lit(math.max(numFiles, 1)))
+      d.repartition(exprs: _*).sortWithinPartitions((pcs :+ keyCol).map(col): _*)
     }
+
+  // ---- LANDING ----
+  // Every full write — the range-clustered write, the partitioned,
+  // z-ordered and bucketed writes, an empty table — is one body here
+  // over one landing commit per layout ([[commitLanding]]). A landing
+  // records the key envelope, the partition columns, the layout's
+  // declared columns ([[declaredStatsCols]]) and the verb's own (the
+  // caller's `statsCols`, the z columns). An empty frame lands a
+  // zero-row version.
+
+  /** The one landing body: `df`, arranged by `arranged` (given the
+    * store's partition columns), published as `version` after the
+    * constraints pass over it. `statsCols` None: a plain landing that
+    * records statistics only where partition columns need them. */
+  protected def writeVersion(version: Long, df: DataFrame, statsCols: Option[Seq[String]],
+      commitTs: Option[Long], op: String, opParams: String = "",
+      rename: String => String = identity,
+      metrics: Int => Map[String, Long] = n => Map("numFiles" -> n.toLong))(
+      arranged: Seq[String] => DataFrame): Unit = {
+    requireFreeVersion(version)
+    enforceConstraints(df, op)
+    val pcs = storedPartitionBy()
+    val cols = statsCols.orElse(Some(Nil).filter(_ => pcs.nonEmpty))
+      .map(c => (c ++ declaredStatsCols ++ pcs).distinct.filterNot(_ == keyCol))
+    commitLanding(version, arranged(pcs), cols, df.schema, commitTs, op, opParams, rename,
+      metrics)
+  }
+
+  /** The range-clustered full write: [[arrange]]d into ~`numFiles`
+    * key-range files (one partition tuple per file on a partitioned
+    * store), key-sorted within, recording `statsCols` beyond the
+    * landing's own. */
+  protected def writeClustered(df: DataFrame, version: Long, numFiles: Int,
+      statsCols: Seq[String], commitTs: Option[Long]): Unit =
+    writeVersion(version, df, Some(statsCols), commitTs, "write")(arrange(df, numFiles, _))
+
+  /** First write of a PARTITIONED table — Delta/Iceberg's `PARTITIONED
+    * BY (cols…)`: declares `partCols` in the `_partition.json` sidecar
+    * (every later landing on this store clusters by them), lands the
+    * frame one-partition-tuple-per-file (≤ `filesPerPartition` files
+    * each, key-sorted within) and records the tuple as exact per-file
+    * min==max statistics. Partition predicates then prune exactly,
+    * [[dropPartitions]] rewrites nothing and [[replaceWhere]] carries
+    * untouched partitions. A temporal transform (`days(ts)`) lands its
+    * derived identity column; the key column cannot be a partition
+    * column (its envelope is the primary prune axis already). */
+  protected def writePartitionedVersion(df: DataFrame, version: Long, partCols: Seq[String],
+      filesPerPartition: Int, statsCols: Seq[String], commitTs: Option[Long]): Unit = {
+    requireFreeVersion(version)
+    require(partCols.nonEmpty, "writePartitioned: no partition columns")
+    require(!partCols.contains(keyCol),
+      s"writePartitioned: '$keyCol' is the store key — key-range pruning already " +
+        "covers it; partition on a coarser dimension")
+    val specs = partCols.map(SnapshotStore.parsePartitionSpec)
+    val missing = specs.map(_.source).filterNot(df.columns.contains)
+    require(missing.isEmpty, s"writePartitioned: not in the frame: ${missing.mkString(", ")}")
+    specs.filter(_.transform.isDefined).map(_.name).filter(df.columns.contains)
+      .foreach(n => throw new IllegalArgumentException(
+        s"writePartitioned: derived partition column name '$n' collides with a " +
+          "data column"))
+    ensureStoreMeta()
+    SnapshotStore.writeStoredPartitionBy(fs, basePath, partCols,
+      canRedeclare = versions().isEmpty)
+    writeVersion(version, df, Some(statsCols), commitTs, "writePartitioned")(
+      arrange(df, filesPerPartition, _))
+  }
+
+  /** A HASH-BUCKETED full write — the co-location contract behind
+    * STORAGE-PARTITIONED JOINS: rows land in exactly `buckets` files,
+    * file `i` holding the rows with `pmod(murmur3(key), buckets) == i`
+    * (Spark's own bucket function — `repartition(n, col)` IS
+    * HashPartitioning), key-sorted within, each file named with
+    * Spark's bucketed suffix (`…_0000i.parquet`). The SQL catalog then
+    * serves the version as a bucketed relation whose scan reports
+    * `HashPartitioning(key, buckets)`, so two stores bucketed to the
+    * same count join on the key with no Exchange on either side. The
+    * declaration persists in `_bucket.json`; verbs that land
+    * non-bucketed files (mergeDelta, compact) fail the read gate and
+    * the version serves through the plain route — re-bucket with a
+    * fresh bucketed write. Bucket and partition layouts are exclusive
+    * per store. */
+  protected def writeBucketedVersion(df: DataFrame, version: Long, buckets: Int,
+      statsCols: Seq[String], commitTs: Option[Long]): Unit = {
+    require(buckets > 0, s"writeBucketed: bucket count must be positive, got $buckets")
+    require(storedPartitionBy().isEmpty,
+      "writeBucketed: this store declares partition columns — bucket and " +
+        "partition layouts are exclusive per store")
+    requireFreeVersion(version)
+    ensureStoreMeta()
+    SnapshotStore.writeStoredBucketBy(fs, basePath, keyCol, buckets,
+      canRedeclare = versions().isEmpty)
+    writeVersion(version, df, Some(statsCols), commitTs, "writeBucketed",
+      s"$buckets buckets by $keyCol", bucketName(buckets))(_ =>
+      df.repartition(buckets, col(keyCol)).sortWithinPartitions(keyCol))
+  }
+
+  /** A landed file's `name` under Spark's bucketed file-name convention
+    * (`_<bucket id>` before its extension), the id being the writer's
+    * task number the name embeds (`part-<task>`): a bucketed landing
+    * writes one task per bucket. */
+  private def bucketName(buckets: Int)(name: String): String = {
+    val b = name.substring(name.indexOf("part-") + 5).takeWhile(_.isDigit).toInt
+    require(b < buckets, s"writeBucketed: task id $b >= $buckets in $name")
+    val (stem, ext) = name.span(_ != '.')
+    f"${stem}_$b%05d$ext"
+  }
+
+  /** A full write with a MULTI-column clustering layout: rows ordered
+    * by the Z-order (Morton) interleave of `zCols`, range-partitioned
+    * into ~`numFiles` files, every z column recorded in the per-file
+    * statistics. Where the range-clustered write makes one column's
+    * ranges disjoint per file, Z-ordering makes every clustered column
+    * LOCALLY narrow in every file, so a read filtered on ANY of them
+    * skips most files ([[readWhere]] / [[readWhereAll]]). On a
+    * partitioned store this is Delta's OPTIMIZE ZORDER BY: the range
+    * split runs over (partition tuple, z), so every file keeps one
+    * tuple and each partition's files cover contiguous z ranges.
+    *
+    * The z-value is LAYOUT ONLY ([[ZOrder.zColumn]]): pruning
+    * correctness never depends on it — the statistics record the TRUE
+    * per-file min/max and the reads filter exactly. Columns must be
+    * numeric/temporal; nulls bucket to 0 and never prune wrongly. */
+  def writeZOrdered(df: DataFrame, version: Long, numFiles: Int,
+      zCols: Seq[String], commitTs: Option[Long] = None): Unit = {
+    val overlap = zCols.filter(storedPartitionBy().contains)
+    require(overlap.isEmpty,
+      s"writeZOrdered: ${overlap.mkString(", ")} are partition columns — constant " +
+        "within every file already; z-order the finer dimensions instead")
+    writeVersion(version, df, Some(zCols), commitTs, "writeZOrdered") { pcs =>
+      val order = pcs.map(col) :+ col("__z")
+      df.withColumn("__z", ZOrder.zColumn(df, zCols))
+        .repartitionByRange(numFiles, order: _*).sortWithinPartitions(order: _*)
+        .drop("__z")
+    }
+  }
+
+  /** Publish `version` as an EMPTY table of `schema` — SQL `CREATE
+    * TABLE`'s landing: a zero-row landing whose per-file statistics
+    * declare the partition columns of a pre-declared spec (`CREATE
+    * TABLE ... PARTITIONED BY` records it first), so the first
+    * [[mergeDelta]] (INSERT/CTAS) rewrites nothing, records them for
+    * its new files and lands the initial rows as version+1. The
+    * declared schema must carry the store's key column — every later
+    * operation keys on it. */
+  def createEmpty(schema: StructType, version: Long = 1L,
+      commitTs: Option[Long] = None): Unit = {
+    require(schema.fieldNames.contains(keyCol),
+      s"createEmpty: declared schema ${schema.fieldNames.mkString("(", ",", ")")} " +
+        s"lacks the store key column '$keyCol'")
+    val empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    writeVersion(version, empty, Some(Nil), commitTs, "createEmpty",
+      metrics = _ => Map.empty)(arrange(empty, 1, _))
+  }
+
+  /** Land `df`'s part files flat into `dest`, each under
+    * `name(<the writer's part-file name>)`, and return those names. A
+    * store partitioned by `pcs` stages hive-style on duplicated
+    * `__gp_<col>` directory columns (the originals stay in the data:
+    * every file stays self-contained and holds one partition tuple);
+    * either way the staging dir sits beside the versions and goes once
+    * its files moved. An empty frame splits into no partition dir: its
+    * schema-carrying footer-only file lands instead. */
+  protected def landStaged(df0: DataFrame, pcs: Seq[String], dest: Path,
+      name: String => String): Seq[String] = {
+    def move(write: String => Unit): Seq[String] = {
+      val stage = new Path(s"$basePath/.tmp-stage-${java.util.UUID.randomUUID()}")
+      write(stage.toString)
+      fs.mkdirs(dest)
+      val it = fs.listFiles(stage, true)
+      val names = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(_.getName.startsWith("part-")).toIndexedSeq.map { p =>
+          val n = name(p.getName)
+          if (!fs.rename(p, new Path(dest, n)))
+            throw new java.io.IOException(s"landing rename failed for $p")
+          n
+        }
+      fs.delete(stage, true)
+      names
+    }
+    if (pcs.isEmpty) move(df0.write.mode("overwrite").parquet(_))
+    else {
+      val df = deriveParts(df0)
+      val landed = move(pcs.foldLeft(df)((d, c) => d.withColumn(s"__gp_$c", col(c)))
+        .write.mode("overwrite").partitionBy(pcs.map("__gp_" + _): _*).parquet(_))
+      if (landed.nonEmpty) landed else move(df.limit(0).write.mode("overwrite").parquet(_))
+    }
+  }
 
   // ---- CHECK CONSTRAINTS ----
 
@@ -1064,8 +1274,8 @@ trait VersionedStore {
     add.fold(kept)(a => Some(kept.fold(a)(_.unionByName(a))))
   }
 
-  /** A rewrite's pre-checks: `fromVersion` exists and `toVersion` does
-    * not ([[requireFreeVersion]]). */
+  /** A new version's pre-checks: `fromVersion` exists and `toVersion`
+    * does not ([[requireFreeVersion]]). */
   private def requireRewrite(fromVersion: Long, toVersion: Long): Unit = {
     require(hasVersion(fromVersion), s"version $fromVersion does not exist")
     requireFreeVersion(toVersion)
@@ -1433,6 +1643,64 @@ trait VersionedStore {
         "numRemovedFiles" -> scope.size.toLong))
   }
 
+  /** DYNAMIC PARTITION OVERWRITE — Delta's `replaceWhere` / classic
+    * `INSERT OVERWRITE ... PARTITION`: every partition tuple PRESENT in
+    * `data` is replaced wholesale by `data`'s rows for it; untouched
+    * partitions carry (by reference on the linked layout, by byte-copy
+    * on the snapshot layout). The idempotent backfill verb: re-running
+    * a day's pipeline overwrites that day and nothing else. Schema must
+    * match the table (an overwrite is not a schema-evolution verb).
+    * Returns (filesCarried, filesReplaced, filesNew). */
+  def replaceWhere(fromVersion: Long, toVersion: Long, data: DataFrame,
+      filesPerPartition: Int = 1, commitTs: Option[Long] = None): (Int, Int, Int) = {
+    val pcs = requirePartitioned("replaceWhere")
+    requireRewrite(fromVersion, toVersion)
+    val entries = fileEntries(fromVersion)
+    requireUniformSpec(entries, "replaceWhere")
+    enforceConstraints(data, "replaceWhere")
+    val rows = deriveParts(data)
+    val touched = rows.select(pcs.map(col): _*).distinct().materialize()
+    // NULL-SAFE join (<=>): a null partition tuple in `data` must
+    // replace the existing null-tuple files like any other value — a
+    // plain column-list join never matches nulls, which would KEEP the
+    // old null-partition files AND land the new rows (duplication)
+    val pe = partitionEntries(entries, pcs)
+    val replaced = pe.join(touched, pcs.map(c => pe(c) <=> touched(c)).reduce(_ && _),
+        "left_semi")
+      .select("file").collect().map(r => fileName(r.getString(0))).toSet
+    val (schema, paths) = schemaAndPaths(fromVersion)
+    val (carried, landed) = rewrite(fromVersion, toVersion, entries, paths, replaced,
+      Some(land(rows, filesPerPartition, schema)), None, schema,
+      evolvedSchema(fromVersion).isDefined, commitTs, "replaceWhere", "", (_, _) => Map.empty)
+    (carried, paths.size - carried, landed)
+  }
+
+  /** PARTITION DROP — the retention verb a date-partitioned 100 TB
+    * lake runs nightly ("drop everything older than 90 days"): the
+    * files whose partition tuple satisfies `pred` (a Column over the
+    * partition column names) leave the version, every other file
+    * carries — not one data byte is rewritten, the layout's
+    * one-tuple-per-file invariant makes a partition's file set exact.
+    * On the linked layout the drop is metadata-only and the bytes
+    * reclaim later via the ref-count vacuum. Null predicate rows are
+    * kept ([[deleteWhere]]'s rule). Returns (filesCarried,
+    * filesDropped, physicalRowsDropped). */
+  def dropPartitions(fromVersion: Long, toVersion: Long, pred: Column,
+      commitTs: Option[Long] = None): (Int, Int, Long) = {
+    val pcs = requirePartitioned("dropPartitions")
+    requireRewrite(fromVersion, toVersion)
+    val entries = fileEntries(fromVersion)
+    requireUniformSpec(entries, "dropPartitions")
+    val dropped = partitionEntries(entries, pcs).filter(coalesce(pred, lit(false)))
+      .select("file", "n_rows").collect()
+    val names = dropped.map(r => fileName(r.getString(0))).toSet
+    val (schema, paths) = schemaAndPaths(fromVersion)
+    val (carried, _) = rewrite(fromVersion, toVersion, entries, paths, names, None, None,
+      schema, evolvedSchema(fromVersion).isDefined, commitTs, "dropPartitions",
+      SnapshotStore.predSql(pred), (_, _) => Map.empty)
+    (carried, names.size, dropped.map(_.getLong(1)).sum)
+  }
+
   // ---- PARTITION ENTRIES ----
 
   /** SHOW PARTITIONS, metadata-only: one row per partition tuple with
@@ -1625,6 +1893,71 @@ trait VersionedStore {
       SnapshotStore.log.warn(s"${getClass.getSimpleName} $basePath: history " +
         s"checkpoint invalidation failed ($e); it may serve stale statistics " +
         "until the next successful rewrite", e) }
+
+  // ---- RETENTION ----
+  // One policy over one layout step ([[dropVersions]]): count-based
+  // retention keeps the newest versions and skips held ones (an
+  // advisory policy); time-based retention drops the versions
+  // committed strictly before a horizon, the tip always surviving, and
+  // a held version refuses the whole call (a compliance horizon). The
+  // history checkpoint is invalidated once per drop: the first
+  // surviving commit now counts whole for bytes.
+
+  /** Drop `expired` (when any); returns (dropped, bytes reclaimed). */
+  private def expire(expired: Seq[Long]): (Seq[Long], Long) =
+    if (expired.isEmpty) (Nil, 0L)
+    else {
+      val reclaimed = dropVersions(expired)
+      invalidateHistoryCkpt()
+      (expired, reclaimed)
+    }
+
+  /** Count-based retention: drop the versions `expired` picks from the
+    * committed ones (ascending), except those under a legal hold.
+    * Returns (dropped, bytes reclaimed). */
+  protected def retain(expired: Seq[Long] => Seq[Long]): (Seq[Long], Long) = {
+    val held = holds().toSet
+    expire(expired(versions()).filterNot(held))
+  }
+
+  /** Delete all but the newest `keepLast` versions; a held version
+    * survives regardless. Returns the dropped versions. */
+  def prune(keepLast: Int): Seq[Long] = retain(_.dropRight(keepLast))._1
+
+  /** AUTO-RETENTION hook — prune to the newest `maxVersions` when the
+    * chain outgrows them; the streaming sink's one-version-per-micro-
+    * batch growth bound. Returns the number of versions dropped. */
+  def maybeRetain(maxVersions: Int): Int = {
+    require(maxVersions >= 1, s"maybeRetain: need >= 1, got $maxVersions")
+    if (versions().size <= maxVersions) 0 else prune(maxVersions).size
+  }
+
+  /** TIME-BASED retention — Delta's `RETAIN n HOURS` contract, by
+    * absolute cutoff: expire every version whose commit timestamp is
+    * STRICTLY OLDER than `horizonMs` (a version committed exactly AT
+    * the horizon survives), except the TIP, which survives regardless
+    * of age. Commit timestamps serve from the version-log checkpoint.
+    * REFUSES ([[RetentionHoldException]]) when the horizon selects a
+    * held version: a time-retention contract that cannot be honored
+    * must surface, not silently under-delete. Returns (dropped, bytes
+    * reclaimed). */
+  protected def expireOlderThan(horizonMs: Long): (Seq[Long], Long) = {
+    val vs = versions()
+    if (vs.isEmpty) return (Nil, 0L)
+    val ts = historyEntries().toMap
+    val expired = vs.filter(v => v != vs.last && ts(v).commitTs < horizonMs)
+    val blocked = holds().filter(expired.contains)
+    if (blocked.nonEmpty) throw new RetentionHoldException(
+      s"retention horizon $horizonMs selects held version(s) " +
+        s"${blocked.mkString(", ")} on $basePath — release the hold(s) or " +
+        "raise the horizon; refusing to report an un-honorable retention " +
+        "contract as success")
+    expire(expired)
+  }
+
+  /** [[expireOlderThan]]'s dropped versions — time-based retention
+    * through the trait. */
+  def pruneBefore(horizonMs: Long): Seq[Long] = expireOlderThan(horizonMs)._1
 
   // ---- LEGAL HOLDS ----
 

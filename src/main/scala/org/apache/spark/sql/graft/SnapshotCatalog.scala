@@ -329,7 +329,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     }
 
   /** STORAGE-PARTITIONED JOIN route — the catalog half of
-    * [[graft.operators.SnapshotStore.writeBucketed]]'s contract: when
+    * [[graft.operators.VersionedStore.writeBucketedVersion]]'s contract: when
     * the store declares a bucket layout AND every data file of
     * `version` carries Spark's bucket-id name (only the bucketed write
     * paths produce those), the version serves as a V1 bucketed
@@ -1057,16 +1057,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val t = tableIdentOf(in.getUTF8String(0).toString)
         val keepLast = in.getInt(1)
         require(keepLast >= 1, s"retention: keep_last must be >= 1, got $keepLast")
+        // held versions survive; n_pruned counts what was dropped
         val st = storeFor(t)
-        val n = st match {
-          case m: ManifestStore =>
-            val vs = m.versions()
-            val keep = vs.takeRight(keepLast)
-            m.prune(keep): Unit
-            vs.size - keep.size
-          case s: SnapshotStore => s.prune(keepLast).size
-        }
-        Array(utf8(st.layout), n.toLong)
+        Array(utf8(st.layout), st.prune(keepLast).size.toLong)
       }
       // Iceberg's partition spec evolution as ONE metadata write:
       // `CALL set_partition_spec('t', 'months(ts)')` appends the new
@@ -1109,11 +1102,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val asOf = if (asOf0 <= 0) System.currentTimeMillis() else asOf0
         val horizon = asOf - hours.toLong * 3600L * 1000L
         val st = storeFor(t)
-        val dropped = st match {
-          case m: ManifestStore => m.pruneOlderThan(horizon)._1
-          case s: SnapshotStore => s.pruneOlderThan(horizon)
-        }
-        Array(utf8(st.layout), dropped.size.toLong, horizon)
+        Array(utf8(st.layout), st.pruneBefore(horizon).size.toLong, horizon)
       }
       case "zorder" => bound("zorder",
         Array(tableParam,
@@ -1133,23 +1122,17 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         require(numFiles >= 1, s"zorder: num_files must be >= 1, got $numFiles")
         val st = keyedStore(t)
         val tip = st.versions().max
-        val nFiles: Long = st match {
-          // PARTITION-SCOPED re-cluster: only the matching partitions'
-          // files rewrite; n_files reports the NEW files
-          case _ if whereSql.nonEmpty => st.zorderWhere(tip, tip + 1,
+        // PARTITION-SCOPED re-cluster: only the matching partitions'
+        // files rewrite; n_files reports the NEW files. A whole-table
+        // re-cluster records the z columns' per-file statistics, which
+        // later catalog DML derives back from the version itself.
+        val nFiles: Long =
+          if (whereSql.nonEmpty) st.zorderWhere(tip, tip + 1,
             org.apache.spark.sql.functions.expr(whereSql), zc, numFiles)._2.toLong
-          case m: ManifestStore =>
-            // construction statsCols drive the new manifest's per-file
-            // envelopes; later catalog DML derives them back from the
-            // manifest itself, so the CALL is self-contained
-            val z = new ManifestStore(spark, m.basePath, m.keyCol,
-              statsCols = zc.filterNot(_ == m.keyCol))
-            z.writeZOrdered(z.read(tip), tip + 1, numFiles, zc)
-            z.manifest(tip + 1).count()
-          case s: SnapshotStore =>
-            s.writeZOrdered(s.read(tip), tip + 1, numFiles, zc)
-            s.stats(tip + 1)._1
-        }
+          else {
+            st.writeZOrdered(st.read(tip), tip + 1, numFiles, zc)
+            st.dataPaths(tip + 1).size.toLong
+          }
         Array(utf8(st.layout), tip + 1, nFiles, utf8(zc.mkString(",")))
       }
       case "clone" => bound("clone",
@@ -1163,15 +1146,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         val dstBase = storePath(tableIdentOf(in.getUTF8String(1).toString))
         val cts = if (in.getLong(2) == 0L) None else Some(in.getLong(2))
         val tip = st.versions().max
-        val (mode, n) = st match {
-          case m: ManifestStore =>
-            // metadata-only row total off the cloned manifest
-            ("shallow", m.cloneTo(dstBase, tip, cts).manifest(1L).agg(
-              org.apache.spark.sql.functions.coalesce(
-                org.apache.spark.sql.functions.sum("n_rows"),
-                org.apache.spark.sql.functions.lit(0L))).head().getLong(0))
-          case s: SnapshotStore => ("deep", s.cloneTo(dstBase, tip, cts).stats(1L)._2)
-        }
+        // metadata-only row total off the clone's history checkpoint
+        val n = st.cloneTo(dstBase, tip, cts).rowCountOf(1L)
+        val mode = if (st.layout == "linked") "shallow" else "deep"
         Array(utf8(st.layout), utf8(mode), tip, n)
       }
       case "replicate" => bound("replicate",

@@ -191,4 +191,38 @@ class CloneSpec extends SparkSpec {
     assert(repaired.size == 1 && unrepairable.isEmpty)
     assert(content(clone.read(1L)) == before)
   }
+
+  test("a clone's v1 history says clone on both layouts; a plain-write snapshot source counts its rows") {
+    val root = tmpBase("hist")
+    val snap = new SnapshotStore(spark, s"$root/s", "k")
+    snap.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), 1L) // no zone map
+    snap.mergeDelta(1L, 2L, Seq((4L, "d")).toDF("k", "v")): Unit
+    val linked = new ManifestStore(spark, s"$root/l", "k")
+    linked.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), 1L, numFiles = 2)
+    linked.mergeDelta(1L, 2L, Seq((4L, "d")).toDF("k", "v")): Unit
+    for ((st, dst) <- Seq[(graft.operators.VersionedStore, String)](
+        snap -> s"$root/sc", linked -> s"$root/lc")) {
+      val c = st.cloneTo(dst, 2L)
+      val h = c.history().select("version", "operation", "operation_params").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+      assert(h == Seq((1L, "clone", s"from ${st.basePath} v2")), s"${st.layout}: $h")
+      assert(c.rowCountOf(1L) == 4L && content(c.read(1L)) == content(st.read(2L)), st.layout)
+    }
+    spark.conf.set("spark.sql.catalog.clonehcat",
+      classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.clonehcat.root", root)
+    val r = spark.sql("CALL clonehcat.clone('s', 's2')").collect().head
+    assert(r.getString(1) == "deep" && r.getLong(2) == 2L && r.getLong(3) == 4L, r.toString)
+  }
+
+  test("count retention on a shallow clone drops its own manifests and leaves the pool to the owner") {
+    val root = tmpBase("cret")
+    val src = new ManifestStore(spark, s"$root/src", "k")
+    src.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 1L, numFiles = 1)
+    val clone = src.cloneTo(s"$root/dst", 1L)
+    clone.mergeDelta(1L, 2L, Seq((1L, "a2"), (2L, "b2")).toDF("k", "v")): Unit
+    assert(clone.prune(Seq(2L)) == 0L && clone.versions() == Seq(2L))
+    assert(content(clone.read(2L)) == Set((1L, "a2"), (2L, "b2")))
+    assert(content(src.read(1L)) == Set((1L, "a"), (2L, "b")))
+  }
 }

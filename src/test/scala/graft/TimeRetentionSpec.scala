@@ -99,4 +99,37 @@ class TimeRetentionSpec extends SparkSpec {
       assert(spark.sql(s"SELECT COUNT(*) FROM $cat.$t").head().getLong(0) == 6L, t)
     }
   }
+
+  test("count retention keeps a held version on both layouts: maybeRetain, prune, CALL retention") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rt_count").toString
+    val cat = s"rtccat${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", base)
+    for (layout <- Seq("snapshot", "linked")) {
+      val name = s"rc_$layout"
+      val (sn, lk) = (new SnapshotStore(spark, s"$base/$name", "k"),
+        new ManifestStore(spark, s"$base/$name", "k"))
+      val st = if (layout == "linked") lk else sn
+      def commit(v: Long): Unit =
+        if (v > 1L) st.mergeDelta(v - 1L, v, Seq((v, v * 1.5)).toDF("k", "v")): Unit
+        else if (layout == "linked") lk.write(rows(8), 1L, 2)
+        else sn.writeRangePartitioned(rows(8), 1L, 2)
+      (1L to 3L).foreach(commit)
+      st.hold(1L)
+      assert(st.maybeRetain(1) == 1, layout)
+      assert(st.versions() == Seq(1L, 3L) && st.holds() == Seq(1L), layout)
+      assert(st.read(1L).count() == 8L, layout)
+      commit(4L)
+      if (layout == "linked") lk.prune(Seq(4L)): Unit else assert(sn.prune(1) == Seq(3L))
+      assert(st.versions() == Seq(1L, 4L), layout)
+      commit(5L)
+      def retention() = spark.sql(s"CALL $cat.retention('$name', 1)").collect().head.getLong(1)
+      assert(retention() == 1L, s"$layout: n_pruned must count the dropped v4 only")
+      assert(st.versions() == Seq(1L, 5L) && st.read(1L).count() == 8L, layout)
+      st.release(1L)
+      assert(retention() == 1L && st.versions() == Seq(5L), layout)
+      assert(st.read(5L).count() == 8L, layout)
+    }
+  }
 }
