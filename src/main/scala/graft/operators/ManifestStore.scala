@@ -357,27 +357,8 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       op: String, params: String, metrics: Map[String, Long]): SnapshotStore.HistoryEntry =
     SnapshotStore.HistoryEntry(ts, rows.length.toLong,
       rows.map(r => Option(r.getAs[java.lang.Long]("n_rows")).fold(0L)(_.longValue)).sum,
-      commitBytesOf(v, rows.map(_.getAs[String]("file")).toSet), op, params, metrics)
-
-  /** Physical read — every stored row, INCLUDING rows the version's
-    * deletion vector marks deleted. Integrity audits ([[validate]])
-    * check file physics, so they read here; everything semantic goes
-    * through [[readFiles]]. */
-  private def readFilesRaw(version: Long, paths: Seq[String]): DataFrame =
-    evolvedSchema(version) match {
-      case Some(sc) =>
-        // fills recorded by an evolving mergeDelta apply uniformly at
-        // read time (SnapshotStore.applyFills' contract): shared files
-        // that predate the column read the default, not null. The scan
-        // asks for PHYSICAL names (what the bytes answer to under a
-        // metadata-only rename) and projects to logical — the
-        // column-mapping read contract, a zero-cost alias projection.
-        val fills = SnapshotStore.fillValues(sc)
-        val df = SnapshotStore.toLogical(
-          spark.read.schema(SnapshotStore.physicalSchema(sc)).parquet(paths: _*), sc)
-        if (fills.isEmpty) df else df.na.fill(fills)
-      case None => ParquetSchemas.readFiles(spark, paths)
-    }
+      addedBytes(v, rows.toSeq.map(r => entryPath(r.getAs[String]("file")))), op, params,
+      metrics)
 
   /** Semantic read: physical rows minus the deletion vector
     * ([[withPositions]]' broadcast anti-join on the row position — the
@@ -385,7 +366,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * version without one pays nothing). */
   protected def readDataFiles(version: Long, paths: Seq[String]): DataFrame =
     recomputeDerived(dvFrame(version) match {
-      case None => readFilesRaw(version, paths)
+      case None => rawRead(version, paths)
       case dv =>
         val sc = evolvedSchema(version)
         withPositions(sc.fold(ParquetSchemas.readFiles(spark, paths))(x =>
@@ -393,14 +374,15 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
           .drop("__f", "__p")
     })
 
-  def manifest(version: Long): DataFrame = {
-    require(hasVersion(version), s"version $version does not exist")
+  def manifest(version: Long): DataFrame =
     // served from the fingerprint-validated metadata cache: one
     // directory listing per access instead of a parquet read + footer
     // parse + one-task collect per consumer (guide §6 metadata costs);
-    // retention/vacuum/replicate invalidate by changing the listing
-    ManifestCache.read(spark, fs, basePath, version, manifestDir(version))
-  }
+    // retention/vacuum/replicate invalidate by changing the listing,
+    // which also answers whether the version exists
+    try ManifestCache.read(spark, fs, basePath, version, manifestDir(version))
+    catch { case _: java.io.FileNotFoundException =>
+      throw new IllegalArgumentException(s"requirement failed: version $version does not exist") }
 
   protected def hasVersion(version: Long): Boolean = fs.exists(manifestDir(version))
 
@@ -417,25 +399,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     val in = fs.open(p)
     try in.readFully(buf) finally in.close()
     new String(buf, "UTF-8").trim.toLong
-  }
-
-  /** Bytes a commit ADDED: pool sizes of the files exclusive to
-    * `version` vs its retained predecessor (the first retained commit
-    * counts whole). Metadata-only — two manifest reads + FS stats; the
-    * change feed's byte-based admission control paces on it. */
-  def commitBytes(version: Long): Long =
-    SnapshotStore.readHistoryCkpt(fs, basePath).get(version).map(_.bytes)
-      .getOrElse(commitBytesOf(version, manifestFiles(manifest(version)).toSet))
-
-  /** Pool bytes of the files in `cur` (version `version`'s manifest)
-    * that its retained predecessor does not reference. */
-  private def commitBytesOf(version: Long, cur: Set[String]): Long = {
-    val prev = versions().filter(_ < version).lastOption
-    val old = prev.map(p => manifestFiles(manifest(p)).toSet).getOrElse(Set.empty[String])
-    (cur diff old).toSeq.map { n =>
-      try fs.getFileStatus(new Path(poolDir, n)).getLen
-      catch { case _: java.io.FileNotFoundException => 0L }
-    }.sum
   }
 
   def dataPaths(version: Long): Seq[String] =
@@ -455,53 +418,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
           s"version $version has no files and no schema sidecar")
       }
     else readDataFiles(version, files)
-  }
-
-  /** BLOOM FILTER INDEX (Delta's bloom index): one Bloom filter PER
-    * POOL FILE over `column`'s values (as strings — type-uniform at
-    * build and probe), persisted as a version sidecar. Point lookups
-    * on a NON-clustered column then skip every file whose filter says
-    * "definitely absent" — the lookup the key envelope and zone maps
-    * can't serve (a customer id scattered across a key-ordered 100 TB
-    * table). Built in ONE pass: values shuffle grouped by file, each
-    * group folds into a filter sized by the file's own manifest row
-    * count; |files| tiny rows land. False positives only cost an
-    * extra file open — never a wrong result ([[readWhereEquals]]
-    * re-filters exactly). */
-  def buildBloomIndex(version: Long, column: String, fpp: Double = 0.01): Unit = {
-    val man = manifest(version)
-    val expected = man.select("file", "n_rows").collect()
-      .map(r => r.getString(0) -> math.max(r.getLong(1), 1L)).toMap
-    val paths = dataPaths(version)
-    require(paths.nonEmpty, s"buildBloomIndex: version $version has no files")
-    bloomsFor(version, paths, expected, column, fpp)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(bloomDir(version, column).toString)
-  }
-
-  /** Per-file Bloom rows for a FILE SUBSET — the shared build pass
-    * under [[buildBloomIndex]] (full) and [[extendBloomIndex]] (new
-    * files only). */
-  private def bloomsFor(version: Long, paths: Seq[String],
-      expected: Map[String, Long], column: String, fpp: Double): DataFrame = {
-    val raw = readFilesRaw(version, paths)
-    require(raw.columns.contains(column), s"bloom index: no column '$column'")
-    import org.apache.spark.sql.Encoders
-    val pairs = raw.select(
-        element_at(split(input_file_name(), "/"), -1).as("__f"),
-        col(column).cast("string").as("__v"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
-    val fppLocal = fpp
-    pairs.groupByKey(_._1)(Encoders.STRING)
-      .mapGroups { (f, it) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(
-          expected.getOrElse(f, 1000L), fppLocal)
-        it.foreach { case (_, v) => if (v != null) bf.putString(v) }
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (f, bos.toByteArray)
-      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .toDF("file", "bloom")
   }
 
   /** INCREMENTAL Bloom extension — the maintenance half Delta's bloom
@@ -636,7 +552,7 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     if (present.isEmpty) return missingDf
     // PHYSICAL audit: manifest stats describe the stored file, so the
     // scan must bypass the deletion vector (a masked row still exists)
-    val actual = readFilesRaw(version,
+    val actual = rawRead(version,
         present.map(r => entryPath(r.getString(0))).toIndexedSeq)
       .select(element_at(split(input_file_name(), "/"), -1).as("file"), col(keyCol))
       .groupBy("file")
@@ -706,63 +622,21 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     }.toDF("version", "n_files", "logical_bytes", "shared_bytes", "exclusive_bytes")
   }
 
-  /** Small-file compaction: every merge appends `numNewFiles` fresh
-    * pool files, so a long merge chain accumulates small files and
-    * read amplification. Fold every pool file under `minBytes` into
-    * ~`targetFiles` consolidated files, published as `toVersion`;
-    * files already at healthy size carry by reference. O(|small
-    * files|) I/O — the 100 TB nightly compaction touches only what
-    * the day's merges fragmented. Returns (filesShared,
-    * filesRewritten). */
+  /** Small-file compaction into `toVersion` ([[compactInto]]): every
+    * merge appends fresh pool files, and the fold rewrites only the
+    * fragments, every healthy-size file carrying by reference. */
   def compact(fromVersion: Long, toVersion: Long, minBytes: Long = 8L << 20,
-      targetFiles: Int = 4, commitTs: Option[Long] = None): (Int, Int) = {
-    requireFreeVersion(toVersion)
-    val man = manifest(fromVersion).materialize()
-    val pool = poolSizes()
-    val sizes = man.select("file").collect().map(_.getString(0)).map(n =>
-      n -> pool.getOrElse(n, fs.getFileStatus(new Path(poolDir, n)).getLen))
-    val small = sizes.filter(_._2 < minBytes).map(_._1)
-    if (small.length <= 1) { // nothing to fold (0 or 1 fragment)
-      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "compact", "")
-      return (sizes.length, 0)
-    }
-    // compaction FOLDS the deletion vector in: the rewrite reads the
-    // masked view, so folded files shed their DV entries for good
-    val folded = readDataFiles(fromVersion,
-      small.map(entryPath).toIndexedSeq)
-    val sc = evolvedSchema(fromVersion).getOrElse(folded.schema)
-    val carried = sizes.map(_._1).filterNot(small.toSet).map(entryPath)
-    val nLanded = commitRewrite(fromVersion, toVersion, man, carried,
-      Some(SnapshotStore.toPhysical(arrange(folded, targetFiles), sc)),
-      carryDv(fromVersion, small.toSet, carried.nonEmpty), sc,
-      evolvedSchema(fromVersion).isDefined, commitTs, "compact", "",
-      (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
-        "numRemovedFiles" -> small.length.toLong))
-    (carried.size, nLanded)
-  }
+      targetFiles: Int = 4, commitTs: Option[Long] = None): (Int, Int) =
+    compactInto(fromVersion, toVersion, minBytes, targetFiles, commitTs)
 
-  /** AUTO-MAINTENANCE hook — the per-micro-batch guard the streaming
-    * sink wires in (`maxFilesPerCommit`): when the tip references more
-    * than `maxFiles` pool files AND at least two are sub-`minBytes`
-    * fragments, fold them ([[compact]]) into a fresh version. The
-    * two-fragment guard keeps a large-file tip from publishing useless
-    * no-op versions every batch. Returns the compacted version when it
-    * ran. */
-  def maybeCompact(maxFiles: Int, minBytes: Long = 8L << 20,
-      targetFiles: Int = 4): Option[Long] = {
-    val vs = versions()
-    if (vs.isEmpty) return None
-    val tip = vs.max
-    val files = manifest(tip).select("file").collect().map(_.getString(0))
-    if (files.length <= maxFiles) return None
-    val pool = poolSizes()
-    val fragments = files.count(n =>
-      pool.getOrElse(n, fs.getFileStatus(new Path(poolDir, n)).getLen) < minBytes)
-    if (fragments <= 1) None
-    else { compact(tip, tip + 1, minBytes, targetFiles); Some(tip + 1) }
-  }
+  protected def fileSizes(version: Long): Map[String, Long] = poolSizes()
 
-  def maybeCompact(maxFiles: Int): Option[Long] = maybeCompact(maxFiles, targetFiles = 4)
+  /** The tip compaction on this layout: a new version. */
+  protected def foldTip(tip: Long, targetFiles: Int, minBytes: Long): (Long, Int, Int) = {
+    val before = dataPaths(tip).size
+    val (carried, rewritten) = compactInto(tip, tip + 1, minBytes, targetFiles)
+    (tip + 1, before, carried + rewritten)
+  }
 
   /** Drop all versions except `keep` and the held ones (count-based
     * retention, [[retain]]); pool files no longer referenced by ANY
@@ -775,17 +649,6 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
     * no surviving manifest references. Returns (dropped versions,
     * bytes reclaimed). */
   def pruneOlderThan(horizonMs: Long): (Seq[Long], Long) = expireOlderThan(horizonMs)
-
-  /** Pool files referenced by NO surviving manifest — the ONE
-    * traversal behind both [[orphans]] (report) and [[vacuum]]
-    * (delete), so the audit can never preview a different set than
-    * the sweep reclaims. */
-  private def unreferencedPoolFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val referenced = referencedPoolFiles()
-    if (!fs.exists(poolDir)) Seq.empty
-    else fs.listStatus(poolDir).toSeq
-      .filter(st => st.isFile && !referenced(st.getPath.getName))
-  }
 
   /** Pool files any manifest references, registered shallow clones'
     * included (they share this pool; a dropped clone's base is gone
@@ -803,44 +666,45 @@ class ManifestStore(protected val spark: SparkSession, val basePath: String,
       s"$op must run on the pool owner ($poolOwnerBase) — this store is a " +
         "shallow clone reading a foreign pool, which is not its to reclaim")
 
+  /** This layout's reclaimable set: the pool files referenced by NO
+    * surviving manifest — the ONE traversal behind both [[orphans]]
+    * (report) and [[vacuum]] (delete), so the audit can never preview a
+    * different set than the sweep reclaims. Interrupted [[replicateTo]]
+    * manifest copies and parked parity sidecars are transactional
+    * state, not garbage: they land or discard FIRST
+    * ([[recoverReplications]]), so the TTL pass can never delete the
+    * only complete copy of a mirrored manifest. One metadata listing of
+    * the pool plus the manifests' `file` column. */
+  override protected def reclaimable(): Seq[org.apache.hadoop.fs.FileStatus] = {
+    requirePoolOwner("vacuum")
+    recoverReplications()
+    recoverParityAsides()
+    val referenced = referencedPoolFiles()
+    if (!fs.exists(poolDir)) Seq.empty
+    else fs.listStatus(poolDir).toSeq
+      .filter(st => st.isFile && !referenced(st.getPath.getName))
+  }
+
+  override protected def vacuumUnit: String = "bytes"
+
   /** Orphan audit — [[vacuum]]'s report-only twin: pool files
     * referenced by NO surviving manifest (leaked by a crashed writer,
     * a failed prune, or an out-of-band copy), as (file, bytes) rows.
     * The pre-delete review an operator runs before letting vacuum
     * loose, and the storage-accounting complement to
-    * [[storageReport]] (which counts only REFERENCED bytes). Same
-    * cost shape as vacuum: one metadata listing of the pool plus the
-    * manifests' `file` column — no data file is opened. */
+    * [[storageReport]] (which counts only REFERENCED bytes). */
   def orphans(): DataFrame = {
     import spark.implicits._
     requirePoolOwner("orphans")
-    unreferencedPoolFiles().map(st => (st.getPath.getName, st.getLen))
-      .toDF("file", "bytes")
+    reclaimable().map(st => (st.getPath.getName, st.getLen)).toDF("file", "bytes")
   }
 
-  /** Ref-count sweep: delete pool files referenced by NO surviving
-    * manifest, plus aged crash leftovers (`.tmp-` dirs older than
-    * `tmpTtlMs`). One metadata pass over |pool| + Σ|manifests| rows —
-    * restartable at any point. Interrupted [[replicateTo]] manifest
-    * copies are transactional state, not garbage: they land or
-    * discard FIRST ([[recoverReplications]]), so the TTL pass can
-    * never delete the only complete copy of a mirrored manifest. */
-  def vacuum(tmpTtlMs: Long = 24L * 3600 * 1000): Long = {
-    requirePoolOwner("vacuum")
-    recoverReplications()
-    recoverParityAsides() // a parked previous sidecar is state, not garbage
-    var reclaimed = 0L
-    unreferencedPoolFiles().foreach { st =>
-      reclaimed += st.getLen
-      fs.delete(st.getPath, false)
-    }
-    val now = System.currentTimeMillis()
-    fs.listStatus(new Path(basePath)).foreach { st =>
-      if (st.getPath.getName.startsWith(".tmp-") && now - st.getModificationTime > tmpTtlMs)
-        fs.delete(st.getPath, true)
-    }
-    reclaimed
-  }
+  /** Ref-count vacuum ([[sweep]]): delete the unreferenced pool files
+    * ([[reclaimable]]) and the aged crash leftovers (older than
+    * `tmpTtlMs`) — restartable at any point. Returns the pool bytes
+    * reclaimed. */
+  def vacuum(tmpTtlMs: Long = 24L * 3600 * 1000): Long =
+    sweep(tmpTtlMs, dryRun = false)._1.map(_.getLen).sum
 
   // -------------------------------------------------------------------
   // Durability ladder for the SHARED POOL — [[ChunkStore]]'s discipline

@@ -1589,10 +1589,9 @@ object Snapshot {
           st.mergeDelta(1L, 2L, delta, commitTs = Some(2000L)): Unit
         if (!st.versions().contains(3L))
           st.deleteWhere(2L, 3L, k % 14 === 0, commitTs = Some(3000L)): Unit
-        if (!st.versions().contains(4L)) st match {
-          case sn: SnapshotStore => sn.restoreVersion(3L, 4L, commitTs = Some(4000L))
-          case lk: ManifestStore =>
-            lk.compact(3L, 4L, minBytes = 1L << 30, commitTs = Some(4000L)): Unit
+        if (!st.versions().contains(4L)) {
+          if (layout == "ho_snap") st.restoreVersion(3L, 4L, commitTs = Some(4000L))
+          else st.compactInto(3L, 4L, minBytes = 1L << 30, commitTs = Some(4000L)): Unit
         }
       }
       val cat = s"snapho_$fp"

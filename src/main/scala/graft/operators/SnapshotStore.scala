@@ -643,13 +643,16 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       ManifestCache.seed(d.toString, toVersion, fs.listStatus(d).toSeq, sc, rows)
     }
     val dest = new Path(dir(toVersion))
+    // the operation stamp lands atomically WITH the version —
+    // DESCRIBE HISTORY's verb and the verb's own row/file counts
+    SnapshotStore.writeOpSidecar(fs, tmp, op, opParams, metrics)
     if (inPlace) {
       val old = new Path(s"$basePath/.old-v=$toVersion-${java.util.UUID.randomUUID()}")
       if (!fs.rename(dest, old))
-        throw new java.io.IOException(s"$op: move-aside failed: $dest -> $old")
+        throw new java.io.IOException(s"compact: move-aside failed: $dest -> $old")
       if (!fs.rename(tmp, dest)) {
         fs.rename(old, dest) // roll back to the original version
-        throw new java.io.IOException(s"$op: publish failed: $tmp -> $dest")
+        throw new java.io.IOException(s"compact: publish failed: $tmp -> $dest")
       }
       fs.delete(old, true)
       seedZoneMap()
@@ -658,9 +661,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       invalidateHistoryCkpt()
     } else {
       ensureStoreMeta()
-      // the operation stamp lands atomically WITH the version —
-      // DESCRIBE HISTORY's verb and the verb's own row/file counts
-      SnapshotStore.writeOpSidecar(fs, tmp, op, opParams, metrics)
       val token = CommitProtocol.writeToken(fs, tmp)
       CommitProtocol.publish(fs, tmp, dest, token, s"$op to v$toVersion on $basePath")
       seedZoneMap()
@@ -671,8 +671,9 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       // lands its files again; rename/widen keep the basenames, 0)
       val files = landed.getOrElse(Set.empty[String]) ++
         carried.map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+      def bytes = addedBytes(toVersion, files.toSeq.map(n => s"$dest/$n"))
       noteCommit(toVersion, statsFrom,
-        _.copy(commitTs = ts, bytes = commitBytesRaw(toVersion), op = op,
+        _.copy(commitTs = ts, bytes = bytes, op = op,
           opParams = opParams, metrics = metrics),
         zmRows.filter(rows => rows.length == files.size && rows.map { r =>
             val f = r.getAs[String]("file")
@@ -680,7 +681,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
           }.toSet == files)
           .fold(computeHistoryEntry(toVersion))(rows => SnapshotStore.HistoryEntry(ts,
             files.size.toLong, rows.map(_.getAs[Long]("n_rows")).sum,
-            commitBytesRaw(toVersion), op, opParams, metrics)))
+            bytes, op, opParams, metrics)))
     }
   }
 
@@ -748,20 +749,39 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   }
 
   /** The landing commit on this layout: the frame lands in the staged
-    * version dir ([[landFlat]], which keeps a zero-row file: it carries
-    * the schema) with zone-map rows from its footers, one rename
+    * version dir ([[landFlat]]; a file holding no rows is dropped,
+    * [[dropEmpty]], so an empty frame lands no file and records its
+    * schema sidecar) with zone-map rows from its footers, one rename
     * publishes. */
   protected def commitLanding(version: Long, landing: DataFrame,
       statsCols: Option[Seq[String]], schema: org.apache.spark.sql.types.StructType,
       commitTs: Option[Long], op: String, opParams: String, rename: String => String,
       metrics: Int => Map[String, Long]): Unit = {
     val tmp = stage(version)
-    val names = landFlat(landing, tmp, rename)
+    val written = landFlat(landing, tmp, rename)
+    val stats = statsCols.map(landedStats(written.toSeq.sorted.map(new Path(tmp, _)), _))
+    val names = dropEmpty(tmp, written, stats)
     publish(version, tmp, Some(names),
       schema = Some(schema).filter(_ => names.isEmpty), commitTs = commitTs, op = op,
-      opParams = opParams, metrics = metrics(names.size),
-      fresh = statsCols.filter(_ => names.nonEmpty)
-        .map(landedStats(names.toSeq.sorted.map(new Path(tmp, _)), _)))
+      opParams = opParams, metrics = metrics(names.size), fresh = stats)
+  }
+
+  /** Delete the files a landing wrote into `tmp` (`written`) that hold
+    * no rows — the footer-only schema carrier Spark writes for an empty
+    * frame, which the linked layout never lands either — and return the
+    * names kept.
+    * `stats` (the landing's per-file rows, when it records them; a file
+    * holding no rows has none) answers which; without them a lone
+    * landed file's footer does (only an empty frame writes a file
+    * without rows, and then exactly one). */
+  private def dropEmpty(tmp: Path, written: Set[String], stats: Option[DataFrame]): Set[String] = {
+    val live = stats.fold(
+      if (written.size != 1) written
+      else written.filter(n => ParquetSchemas.footerStats(spark, Seq(new Path(tmp, n)), Nil)
+        .forall(_.rows > 0)))(
+      _.select("file").collect().map(r => fileName(r.getString(0))).toSet)
+    (written -- live).foreach(n => fs.delete(new Path(tmp, n), false))
+    live
   }
 
   /** Versions drop with their directories. */
@@ -853,50 +873,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
   def writeBucketed(df: DataFrame, version: Long, buckets: Int,
       statsCols: Seq[String] = Nil, commitTs: Option[Long] = None): Unit =
     writeBucketedVersion(df, version, buckets, statsCols, commitTs)
-
-  /** BLOOM FILTER INDEX — [[ManifestStore.buildBloomIndex]]'s
-    * dir-per-version twin: one filter per data file over `column`
-    * (string-uniform), sized by each file's parquet footer row count,
-    * persisted as a `_bloom_<col>` sidecar inside the version dir. */
-  def buildBloomIndex(version: Long, column: String, fpp: Double = 0.01): Unit = {
-    val parts = fs.listStatus(new Path(dir(version))).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).toSeq
-    require(parts.nonEmpty, s"buildBloomIndex: version $version has no files")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val expected = parts.map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try p.getName -> math.max(r.getRecordCount, 1L) finally r.close()
-    }.toMap
-    // RAW scan, deliberately unmasked: a DV-masked row left in the
-    // filter is only a possible false positive (the probe re-filters
-    // on the MASKED read), and input_file_name() needs a single-source
-    // plan the masked anti-join cannot provide
-    val sc0 = evolvedSchema(version)
-    val raw0 = sc0.map(x => spark.read.schema(SnapshotStore.physicalSchema(x))
-        .parquet(parts.map(_.toString): _*))
-      .getOrElse(ParquetSchemas.readFiles(spark, parts.map(_.toString).toSeq))
-    val raw = sc0.map(SnapshotStore.toLogical(raw0, _)).getOrElse(raw0)
-    require(raw.columns.contains(column), s"buildBloomIndex: no column '$column'")
-    import org.apache.spark.sql.Encoders
-    val pairs = raw.select(
-        element_at(split(input_file_name(), "/"), -1).as("__f"),
-        col(column).cast("string").as("__v"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
-    val fppLocal = fpp
-    val blooms = pairs.groupByKey(_._1)(Encoders.STRING)
-      .mapGroups { (f, it) =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(
-          expected.getOrElse(f, 1000L), fppLocal)
-        it.foreach { case (_, v) => if (v != null) bf.putString(v) }
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (f, bos.toByteArray)
-      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-      .toDF("file", "bloom")
-    blooms.coalesce(1).write.mode("overwrite")
-      .parquet(bloomDir(version, column).toString)
-  }
 
   /** `_zonemap` starts with '_' so Spark's file listing hides it from
     * plain `read(version)` scans — the zone map rides inside the
@@ -1023,7 +999,7 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     }.sum
     val (op, params, metrics) = SnapshotStore.readOpSidecar(fs, new Path(dir(v)))
     SnapshotStore.HistoryEntry(commitTimestampRaw(v), files.length.toLong, rows,
-      commitBytesRaw(v), op, params, metrics)
+      addedBytes(v, files.toSeq.map(_.getPath.toString)), op, params, metrics)
   }
 
   /** Fill defaults recorded in an evolved schema's field metadata,
@@ -1060,22 +1036,6 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
       .filter(_.getName.startsWith("part-"))
 
   def dataPaths(version: Long): Seq[String] = dataFiles(version).map(_.toString)
-
-  /** Bytes a commit ADDED: sizes of the part files whose basename is
-    * NEW vs the retained predecessor (byte-carried files share their
-    * basename — [[mergeDelta]]'s identity contract). Metadata-only;
-    * the change feed's byte-based admission control paces on it. */
-  def commitBytes(version: Long): Long =
-    SnapshotStore.readHistoryCkpt(fs, basePath).get(version).map(_.bytes)
-      .getOrElse(commitBytesRaw(version))
-
-  private def commitBytesRaw(version: Long): Long = {
-    val prev = versions().filter(_ < version).lastOption
-    val old = prev.map(p => dataFiles(p).map(_.getName).toSet)
-      .getOrElse(Set.empty[String])
-    dataFiles(version).filterNot(p => old(p.getName))
-      .map(p => fs.getFileStatus(p).getLen).sum
-  }
 
   def latest(): DataFrame = latestVersion() match {
     case Some(v) => read(v)
@@ -1173,9 +1133,11 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     * filesAfter); a no-op when the version is already compact. */
   def compact(version: Long, targetBytes: Long = 128L << 20): (Int, Int) = {
     val dest = new Path(dir(version))
-    require(fs.exists(new Path(dest, "_SUCCESS")),
+    val listing =
+      try fs.listStatus(dest).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    require(listing.exists(_.getPath.getName == "_SUCCESS"),
       s"compact: version $version is not a committed snapshot")
-    val dataFiles = fs.listStatus(dest).filter(_.getPath.getName.startsWith("part-"))
+    val dataFiles = listing.filter(_.getPath.getName.startsWith("part-"))
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     if (nOut >= dataFiles.length) return (dataFiles.length, dataFiles.length)
@@ -1196,10 +1158,15 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     // compacted layout folds any DV, so the raw scan is the semantic
     // read)
     val names = partNames(tmp)
-    publish(version, tmp, Some(names), commitTs = Some(commitTimestamp(version)),
-      op = "compact", inPlace = true, fresh = zmapStatsCols.map(zmNewStats(tmp, names, _)))
-    val after = fs.listStatus(dest).count(_.getPath.getName.startsWith("part-"))
-    (dataFiles.length, after)
+    // ... and its commit's operation stamp carries too
+    val entry = SnapshotStore.readHistoryCkpt(fs, basePath).get(version)
+    val (op, opParams, metrics) = entry.fold(SnapshotStore.readOpSidecar(fs, dest))(e =>
+      (e.op, e.opParams, e.metrics))
+    publish(version, tmp, Some(names),
+      commitTs = Some(entry.fold(commitTimestampRaw(version))(_.commitTs)), op = op,
+      opParams = opParams, metrics = metrics, inPlace = true,
+      fresh = zmapStatsCols.map(zmNewStats(tmp, names, _)))
+    (dataFiles.length, names.size)
   }
 
   /** Store-level size/row report from METADATA ONLY — zone-map rows
@@ -1220,51 +1187,34 @@ class SnapshotStore(protected val spark: SparkSession, val basePath: String,
     }
   }
 
-  /** Garbage-collect crash leftovers: `.tmp-` dirs (writes/merges/
-    * compactions that never published) and `.old-` dirs (compact
-    * move-asides whose final delete didn't run), once they are older
-    * than `ttlMs` — the TTL keeps an IN-FLIGHT writer's tmp dir safe.
-    * Committed `v=` dirs are never touched; this is the routine
-    * maintenance that keeps a long-running store's listing cost flat.
-    * Returns the deleted paths. */
+  /** Garbage-collect crash leftovers ([[sweep]]; this layout reclaims
+    * nothing else — a version's bytes leave with its directory): `.tmp-`
+    * dirs of writes, merges and compactions that never published and
+    * `.old-` compaction move-asides, once older than `ttlMs`. Returns
+    * the deleted paths. */
   def vacuum(ttlMs: Long = 24L * 3600 * 1000): Seq[String] =
-    vacuumCandidates(ttlMs).map { p => fs.delete(p, true); p.toString }
+    sweep(ttlMs, dryRun = false)._2.map(_.getPath.toString)
 
   /** [[vacuum]]'s DRY RUN: the paths a vacuum would delete right now,
     * nothing touched — what an operator checks before trusting a TTL. */
   def vacuumDryRun(ttlMs: Long = 24L * 3600 * 1000): Seq[String] =
-    vacuumCandidates(ttlMs).map(_.toString)
+    sweep(ttlMs, dryRun = true)._2.map(_.getPath.toString)
 
-  private def vacuumCandidates(ttlMs: Long): Seq[Path] = {
-    val base = new Path(basePath)
-    if (!fs.exists(base)) return Seq.empty
-    val now = System.currentTimeMillis()
-    fs.listStatus(base).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        (n.startsWith(".tmp-") || n.startsWith(".old-")) &&
-          now - st.getModificationTime > ttlMs
-      }
-      .map(_.getPath)
+  protected def fileSizes(version: Long): Map[String, Long] =
+    fs.listStatus(new Path(dir(version))).filter(_.getPath.getName.startsWith("part-"))
+      .map(st => st.getPath.getName -> st.getLen).toMap
+
+  /** The tip compaction on this layout: [[compact]] in place, each
+    * output ~1/`targetFiles` of the version's bytes. */
+  protected def foldTip(tip: Long, targetFiles: Int, minBytes: Long): (Long, Int, Int) = {
+    val bytes = fileSizes(tip).values.sum
+    val (before, after) = compact(tip, math.max(1L, (bytes + targetFiles - 1) / targetFiles))
+    (tip, before, after)
   }
 
-  /** AUTO-MAINTENANCE hook — [[ManifestStore.maybeCompact]]'s twin on
-    * this layout: when the tip holds more than `maxFiles` data files,
-    * fold it IN PLACE ([[compact]] — this layout's maintenance verb
-    * rewrites the version dir, identity preserved). Returns the tip
-    * when it ran. */
-  def maybeCompact(maxFiles: Int,
-      targetBytes: Long = 128L << 20): Option[Long] = {
-    val vs = versions()
-    if (vs.isEmpty) return None
-    val tip = vs.max
-    val n = dataFiles(tip).count(_.getName.startsWith("part-"))
-    if (n <= maxFiles) None
-    else { compact(tip, targetBytes): Unit; Some(tip) }
-  }
-
-  def maybeCompact(maxFiles: Int): Option[Long] =
-    maybeCompact(maxFiles, targetBytes = 128L << 20)
+  /** A SQL scan plans over the version directory: the scan's own file
+    * index lists it once. */
+  override def scanPaths(version: Long): Seq[String] = Seq(dir(version))
 
   /** Time-based retention ([[expireOlderThan]]). Returns the dropped
     * versions. */

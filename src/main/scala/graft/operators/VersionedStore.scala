@@ -12,9 +12,9 @@ import graft.functions.Fx
   * (one self-contained directory per version) and [[ManifestStore]]
   * (the "linked" layout: per-version manifests over a shared file
   * pool). The SQL catalog, the change feed and the streaming sinks
-  * hold a `VersionedStore` and call through it; where the layouts
-  * genuinely differ (compaction, vacuum, the pool durability ladder)
-  * callers match on the store's type.
+  * hold a `VersionedStore` and call through it; only the pool
+  * durability ladder (parity, replication, repair) is the linked
+  * layout's alone.
   *
   * The members declared here without a body are the verbs each layout
   * implements its own way, plus the layout primitives: where a
@@ -23,13 +23,15 @@ import graft.functions.Fx
   * read of a file subset ([[readDataFiles]]), a carry publish
   * ([[publishCarry]]), a history entry rebuilt from the files
   * ([[computeHistoryEntry]]), a version's per-file statistics
-  * ([[fileStats]]) and the readable path of one of their entries
-  * ([[entryPath]]), one landing commit ([[commitLanding]]), one
-  * rewrite commit ([[commitRewrite]]) and one "drop these versions"
-  * step ([[dropVersions]]). Every body here (time travel, the pruned
-  * reads, the diff family, the deletion-vector and Bloom sidecars, the
-  * schema verbs, restore, the landing verbs, the rewrite verbs, the
-  * partition overwrite and drop, retention, constraints, holds, column
+  * ([[fileStats]]), the readable path of one of their entries
+  * ([[entryPath]]) and their sizes ([[fileSizes]]), one landing commit
+  * ([[commitLanding]]), one rewrite commit ([[commitRewrite]]), one
+  * "drop these versions" step ([[dropVersions]]), the tip compaction
+  * ([[foldTip]]) and the files a vacuum reclaims ([[reclaimable]]).
+  * Every body here (time travel, the pruned reads, the diff family,
+  * the deletion-vector and Bloom sidecars, the schema verbs, restore,
+  * the landing verbs, the rewrite verbs, the partition overwrite and
+  * drop, compaction, vacuum, retention, constraints, holds, column
   * statistics, the history checkpoint, the optimistic-concurrency
   * merge, partition-spec helpers) is written once over those. */
 trait VersionedStore {
@@ -141,12 +143,26 @@ trait VersionedStore {
       schema: StructType, sidecar: Boolean, commitTs: Option[Long], op: String,
       opParams: String, metrics: (Int, Long) => Map[String, Long]): Int
 
+  /** Each of `version`'s data files' size by file name, from one
+    * listing (which may name more files than the version's). */
+  protected def fileSizes(version: Long): Map[String, Long]
+
+  /** Compact the tip `tip` into ~`targetFiles` files this layout's way:
+    * in place on the snapshot layout (the version keeps its identity
+    * and commit timestamp), as version `tip + 1` folding the files
+    * under `minBytes` on the linked one ([[compactInto]]). Returns (the
+    * version now serving the tip's rows, files before, files after). */
+  protected def foldTip(tip: Long, targetFiles: Int, minBytes: Long): (Long, Int, Int)
+
+  /** The files a vacuum reclaims beyond the aged crash leftovers: none
+    * where a version's bytes leave with the version. */
+  protected def reclaimable(): Seq[FileStatus] = Nil
+
+  /** The paths a SQL scan of `version` plans over: its data files. */
+  def scanPaths(version: Long): Seq[String] = dataPaths(version)
+
   def versions(): Seq[Long]
   def read(version: Long): DataFrame
-  def commitBytes(version: Long): Long
-
-  /** `maybeCompact` with the layout's default sizing. */
-  def maybeCompact(maxFiles: Int): Option[Long]
 
   /** A clone of `fromVersion` as version 1 of a new table at `dstBase`:
     * a deep copy on the snapshot layout, a shallow one over the shared
@@ -1571,37 +1587,16 @@ trait VersionedStore {
   }
 
   /** PARTITION-SCOPED compaction — Delta's `OPTIMIZE t WHERE part=x`:
-    * fold the sub-`minBytes` files ONLY inside the partitions `pred`
-    * selects into ~`targetFiles` files per partition tuple (read
-    * masked: their deletion-vector entries retire); every other file
-    * carries. At 100 TB you never OPTIMIZE a whole table: the nightly
-    * maintenance of one hot day costs O(that day's fragments), and the
-    * untouched partitions' files are bit-identical across the commit.
-    * Published as a NEW version. Returns (filesCarried,
+    * [[compactInto]] over the partitions `pred` selects only, into
+    * ~`targetFiles` files per partition tuple. At 100 TB you never
+    * OPTIMIZE a whole table: the nightly maintenance of one hot day
+    * costs O(that day's fragments), and the untouched partitions' files
+    * are bit-identical across the commit. Returns (filesCarried,
     * filesRewritten). */
   def compactWhere(fromVersion: Long, toVersion: Long, pred: Column,
       minBytes: Long = 8L << 20, targetFiles: Int = 1,
-      commitTs: Option[Long] = None): (Int, Int) = {
-    val pcs = requirePartitioned("compactWhere")
-    requireRewrite(fromVersion, toVersion)
-    val entries = fileEntries(fromVersion)
-    val paths = dataPaths(fromVersion)
-    val scope = partitionFiles(entries, pcs, pred)
-    val small = paths.filter(p => scope(fileName(p)) &&
-      fs.getFileStatus(new Path(p)).getLen < minBytes)
-    if (small.size <= 1) { // nothing to fold inside the scope
-      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "compact",
-        SnapshotStore.predSql(pred))
-      return (paths.size, 0)
-    }
-    val schema = storedSchema(fromVersion)
-    val names = small.map(fileName).toSet
-    rewrite(fromVersion, toVersion, entries, paths, names,
-      Some(land(scanRows(fromVersion, small, schema), targetFiles, schema)), None, schema,
-      evolvedSchema(fromVersion).isDefined, commitTs, "compact", SnapshotStore.predSql(pred),
-      (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
-        "numRemovedFiles" -> names.size.toLong))
-  }
+      commitTs: Option[Long] = None): (Int, Int) =
+    compactInto(fromVersion, toVersion, minBytes, targetFiles, commitTs, Some(pred))
 
   /** PARTITION-SCOPED Z-ORDER — Iceberg's rewrite_data_files with a row
     * filter: re-cluster ONLY the partitions `pred` selects on `zCols`'
@@ -1746,6 +1741,129 @@ trait VersionedStore {
     partitionEntries(entries, pcs).filter(coalesce(pred, lit(false)))
       .select("file").collect().map(r => fileName(r.getString(0))).toSet
 
+  // ---- MAINTENANCE ----
+  // Compaction, the tip-compaction hook, vacuum and the `files` report
+  // are one body each over the layout primitives: a new-version fold of
+  // small files over [[commitRewrite]], the layout's tip compaction
+  // ([[foldTip]]), its file sizes ([[fileSizes]]) and its reclaimable
+  // set ([[reclaimable]]).
+
+  /** Small-file compaction published as a NEW version: a long merge
+    * chain accumulates small files and read amplification, so every
+    * file of `fromVersion` under `minBytes` (inside the partitions
+    * `where` selects, when given) folds into ~`targetFiles` files per
+    * partition tuple, read masked (their deletion-vector entries
+    * retire); every other file carries. O(|small files|) I/O. With
+    * fewer than two small files there is nothing to fold and the
+    * version publishes as a carry. Returns (filesCarried,
+    * filesRewritten). */
+  def compactInto(fromVersion: Long, toVersion: Long, minBytes: Long = 8L << 20,
+      targetFiles: Int = 4, commitTs: Option[Long] = None,
+      where: Option[Column] = None): (Int, Int) = {
+    val pcs = where.map(_ => requirePartitioned("compactWhere"))
+    requireRewrite(fromVersion, toVersion)
+    val opParams = where.fold("")(SnapshotStore.predSql)
+    val entries = fileEntries(fromVersion)
+    val paths = dataPaths(fromVersion)
+    val inScope = where.fold((_: String) => true)(partitionFiles(entries, pcs.get, _))
+    val sizes = fileSizes(fromVersion)
+    val small = paths.filter(p =>
+      inScope(fileName(p)) && sizes.getOrElse(fileName(p), 0L) < minBytes)
+    if (small.size <= 1) {
+      publishCarry(fromVersion, toVersion, None, Nil, commitTs, "compact", opParams)
+      return (paths.size, 0)
+    }
+    val rows = readDataFiles(fromVersion, small)
+    val evolved = evolvedSchema(fromVersion)
+    val schema = evolved.getOrElse(rows.schema)
+    val names = small.map(fileName).toSet
+    rewrite(fromVersion, toVersion, entries, paths, names,
+      Some(land(rows, targetFiles, schema)), None, schema, evolved.isDefined, commitTs,
+      "compact", opParams, (nLanded, _) => Map("numAddedFiles" -> nLanded.toLong,
+        "numRemovedFiles" -> names.size.toLong))
+  }
+
+  /** CALL compact: the tip compacted this layout's way ([[foldTip]]),
+    * or, with `where`, [[compactWhere]] into a new version on either
+    * layout. Returns (the version now serving the tip's rows, files
+    * before, files after). */
+  def compactTip(targetFiles: Int, minBytes: Long, where: Option[Column] = None)
+      : (Long, Int, Int) = {
+    val tip = versions().max
+    where.fold(foldTip(tip, targetFiles, minBytes)) { pred =>
+      val before = dataPaths(tip).size
+      val (carried, rewritten) =
+        compactInto(tip, tip + 1, minBytes, targetFiles, None, Some(pred))
+      (tip + 1, before, carried + rewritten)
+    }
+  }
+
+  /** AUTO-MAINTENANCE hook — the per-micro-batch guard the streaming
+    * sink wires in (`maxFilesPerCommit`): when the tip holds more than
+    * `maxFiles` data files and at least two of them are sub-8 MiB
+    * fragments, compact it ([[foldTip]], into ~4 files). The
+    * two-fragment guard keeps a large-file tip from compacting every
+    * batch. Returns the version serving the compacted tip when it ran. */
+  def maybeCompact(maxFiles: Int): Option[Long] = latestVersion().flatMap { tip =>
+    val minBytes = 8L << 20
+    val paths = dataPaths(tip)
+    lazy val sizes = fileSizes(tip)
+    if (paths.size <= maxFiles ||
+        paths.count(p => sizes.getOrElse(fileName(p), 0L) < minBytes) <= 1) None
+    else Some(foldTip(tip, 4, minBytes)._1)
+  }
+
+  /** The one vacuum sweep: the layout's [[reclaimable]] files, then the
+    * crash leftovers at the base (`.tmp-` staging of writes and merges
+    * that never published, `.old-` move-asides of an in-place compaction
+    * whose last step did not run) at least `ttlMs` old — the TTL keeps
+    * an in-flight writer's staging safe; 0 sweeps every leftover.
+    * Committed versions are never touched. `dryRun` deletes nothing:
+    * the same sets, previewed. Returns (reclaimable, leftovers). */
+  protected def sweep(ttlMs: Long, dryRun: Boolean): (Seq[FileStatus], Seq[FileStatus]) = {
+    val pool = reclaimable()
+    val now = System.currentTimeMillis()
+    val listing =
+      try fs.listStatus(new Path(basePath)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val aged = listing.filter { st =>
+      val n = st.getPath.getName
+      (n.startsWith(".tmp-") || n.startsWith(".old-")) && now - st.getModificationTime >= ttlMs
+    }
+    if (!dryRun) (pool ++ aged).foreach(st => fs.delete(st.getPath, true))
+    (pool, aged)
+  }
+
+  /** What CALL vacuum reports in: `bytes` of reclaimed files on a
+    * layout with a [[reclaimable]] set, else `paths` swept. */
+  protected def vacuumUnit: String = "paths"
+
+  /** CALL vacuum: [[sweep]], reported as (amount, unit) — the bytes of
+    * the reclaimed files, or the number of paths swept ([[vacuumUnit]];
+    * `_dry` on a dry run). */
+  def vacuumReport(ttlMs: Long, dryRun: Boolean): (Long, String) = {
+    val (pool, aged) = sweep(ttlMs, dryRun)
+    val n = if (vacuumUnit == "bytes") pool.map(_.getLen).sum else (pool ++ aged).size.toLong
+    (n, if (dryRun) s"${vacuumUnit}_dry" else vacuumUnit)
+  }
+
+  /** The `files` metadata table: `version`'s per-file statistics
+    * (`file` as a bare name, key envelope, row count) beside each file's
+    * byte size; a version recording no statistics lists names and bytes
+    * with the statistics null, honestly unknown. */
+  def filesReport(version: Long): DataFrame = {
+    val sizes = spark.createDataFrame(fileSizes(version).toSeq).toDF("file", "bytes")
+    fileStats(version) match {
+      case Some(st) =>
+        st.select(element_at(split(col("file"), "/"), -1).as("file"), col("min_key"),
+            col("max_key"), col("n_rows"))
+          .join(sizes, Seq("file"), "left").orderBy("file")
+      case None =>
+        sizes.select(col("file"), lit(null).as("min_key"), lit(null).as("max_key"),
+          lit(null).cast("long").as("n_rows"), col("bytes")).orderBy("file")
+    }
+  }
+
   // ---- SIDECARS ----
 
   /** The visible files of a published sidecar directory, or None while
@@ -1791,6 +1909,75 @@ trait VersionedStore {
       r.getString(0) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
     }.toMap)
+
+  /** BLOOM FILTER INDEX (Delta's bloom index): one Bloom filter PER
+    * DATA FILE over `column`'s values (as strings — type-uniform at
+    * build and probe), persisted as a `_bloom_<column>` sidecar of the
+    * version. Point lookups on a NON-clustered column then skip every
+    * file whose filter says "definitely absent" — the lookup the key
+    * envelope and zone maps can't serve (a customer id scattered across
+    * a key-ordered 100 TB table). Built in ONE pass: values shuffle
+    * grouped by file, each group folds into a filter sized by the
+    * file's stored row count (its [[fileStats]] row, else its footer);
+    * |files| tiny rows land. False positives only cost an extra file
+    * open — never a wrong result ([[readWhereEquals]] re-filters
+    * exactly). */
+  def buildBloomIndex(version: Long, column: String, fpp: Double = 0.01): Unit = {
+    val paths = dataPaths(version)
+    require(paths.nonEmpty, s"buildBloomIndex: version $version has no files")
+    val expected = fileStats(version).fold(
+        ParquetSchemas.footerStats(spark, paths.map(new Path(_)), Nil)
+          .map(f => f.path.getName -> f.rows))(
+        _.select("file", "n_rows").collect().toSeq
+          .map(r => fileName(r.getString(0)) -> r.getLong(1)))
+      .map { case (f, n) => f -> math.max(n, 1L) }.toMap
+    bloomsFor(version, paths, expected, column, fpp)
+      .coalesce(1).write.mode("overwrite").parquet(bloomDir(version, column).toString)
+  }
+
+  /** Per-file Bloom rows over `paths` (files of `version`), each filter
+    * sized by `expected` (file name -> rows). The scan is RAW
+    * ([[rawRead]]), deliberately unmasked: a DV-masked row left in a
+    * filter is only a possible false positive (the probe re-filters on
+    * the masked read), and `input_file_name()` needs the single-source
+    * plan the masked anti-join cannot provide. */
+  protected def bloomsFor(version: Long, paths: Seq[String], expected: Map[String, Long],
+      column: String, fpp: Double): DataFrame = {
+    val raw = rawRead(version, paths)
+    require(raw.columns.contains(column), s"bloom index: no column '$column'")
+    import org.apache.spark.sql.Encoders
+    val pairs = raw.select(
+        element_at(split(input_file_name(), "/"), -1).as("__f"),
+        col(column).cast("string").as("__v"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    pairs.groupByKey(_._1)(Encoders.STRING)
+      .mapGroups { (f, it) =>
+        val bf = org.apache.spark.util.sketch.BloomFilter.create(
+          expected.getOrElse(f, 1000L), fpp)
+        it.foreach { case (_, v) => if (v != null) bf.putString(v) }
+        val bos = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bos)
+        (f, bos.toByteArray)
+      }(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+      .toDF("file", "bloom")
+  }
+
+  /** Physical read of `paths` (files of `version`): every stored row,
+    * INCLUDING rows the version's deletion vector masks, under the
+    * version's evolved schema — the stored (physical) names projected
+    * to logical ones, the recorded fills applied, so a file that
+    * predates a column reads its default. Audits of file physics and
+    * the Bloom build read here; everything semantic goes through
+    * [[readDataFiles]]. */
+  protected def rawRead(version: Long, paths: Seq[String]): DataFrame =
+    evolvedSchema(version) match {
+      case Some(sc) =>
+        val fills = SnapshotStore.fillValues(sc)
+        val df = SnapshotStore.toLogical(
+          spark.read.schema(SnapshotStore.physicalSchema(sc)).parquet(paths: _*), sc)
+        if (fills.isEmpty) df else df.na.fill(fills)
+      case None => ParquetSchemas.readFiles(spark, paths)
+    }
 
   /** Point lookup on a Bloom-indexed column: open ONLY the files whose
     * filter might contain the value (a file ABSENT from the index —
@@ -1868,6 +2055,27 @@ trait VersionedStore {
     * re-read the checkpoint |versions| times). */
   def commitStats(): Seq[(Long, Long, Long, String)] =
     historyEntries().map { case (v, e) => (v, e.bytes, e.nRows, e.op) }
+
+  /** Bytes a commit ADDED: the sizes of the data files whose name is
+    * new against the retained predecessor (carried files keep their
+    * names; the first retained commit counts whole). Served from the
+    * version-log checkpoint; the change feed's byte-based admission
+    * control paces on it. */
+  def commitBytes(version: Long): Long =
+    SnapshotStore.readHistoryCkpt(fs, basePath).get(version).map(_.bytes)
+      .getOrElse(addedBytes(version, dataPaths(version)))
+
+  /** [[commitBytes]] of `version` holding the data files `paths`,
+    * rebuilt from the files: one [[dataPaths]] of the retained
+    * predecessor and one status per new file (a vanished file counts 0). */
+  protected def addedBytes(version: Long, paths: Seq[String]): Long = {
+    val old = versions().filter(_ < version).lastOption
+      .fold(Set.empty[String])(dataPaths(_).map(fileName).toSet)
+    paths.filterNot(p => old(fileName(p))).map { p =>
+      try fs.getFileStatus(new Path(p)).getLen
+      catch { case _: java.io.FileNotFoundException => 0L }
+    }.sum
+  }
 
   /** Rows `version` SERVES after its deletion-vector mask — the
     * PLANNING statistic behind the masked-route relation's

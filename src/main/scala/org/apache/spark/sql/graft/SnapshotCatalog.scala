@@ -136,10 +136,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     // sidecar when present (with fills projected as existence defaults
     // — old pool files then yield the FILL for columns they predate,
     // null absent a policy), else mergeSchema infers across footers.
-    val paths = st match {
-      case _: SnapshotStore => Seq(s"$base/v=$version")
-      case _ => st.dataPaths(version)
-    }
+    val paths = st.scanPaths(version)
     val evolved0 = st.evolvedSchema(version).map(projectFills)
     // temporal partition transforms land a DERIVED identity column in
     // the files — HIDDEN from SQL (SELECT * serves the declared
@@ -509,7 +506,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           // opens; only a PARTITIONED BY table has one
           if (st.storedPartitionSpecs().isEmpty) return None
           st.partitions(vs.max)
-        case _ => filesDf(st, vs.max)
+        case _ => st.filesReport(vs.max)
       }
       Some(new HistoryTable(
         (parent.namespace() :+ parent.name()).mkString(".") + s".$kind", df))
@@ -529,41 +526,6 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       val nm = (parent.namespace() :+ parent.name()).mkString(".") +
         range.fold(s".$kindNm") { case (a, b) => s".$kindNm@$a..$b" }
       new ChangesTable(nm, spark, st.withKeyCol(key), range, preImages)
-    }
-  }
-
-  /** The `files` metadata frame: tip per-file stats + FS byte sizes.
-    * The size frame is |files| rows built from one directory listing
-    * and joined by name — broadcast-tiny next to any data scan. */
-  private def filesDf(st: VersionedStore, tip: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, lit, split}
-    def sizesOf(dir: org.apache.hadoop.fs.Path): org.apache.spark.sql.DataFrame = {
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rows =
-        if (!fs.exists(dir)) Seq.empty[(String, Long)]
-        else fs.listStatus(dir).toSeq.filter(_.isFile)
-          .map(st => (st.getPath.getName, st.getLen))
-      spark.createDataFrame(rows).toDF("file", "bytes")
-    }
-    st match {
-      case m: ManifestStore =>
-        m.manifest(tip)
-          .select("file", "min_key", "max_key", "n_rows")
-          .join(sizesOf(m.poolDir), Seq("file"), "left")
-          .orderBy("file")
-      case s: SnapshotStore =>
-        val sizes = sizesOf(new org.apache.hadoop.fs.Path(s"${s.basePath}/v=$tip"))
-          .filter(col("file").startsWith("part-"))
-        s.zoneMap(tip) match {
-          case Some(zm) =>
-            zm.withColumn("file", element_at(split(col("file"), "/"), -1))
-              .select("file", "min_key", "max_key", "n_rows")
-              .join(sizes, Seq("file"), "left").orderBy("file")
-          case None => // no zone map: names+bytes, stats honestly unknown
-            sizes.select(col("file"), lit(null).as("min_key"),
-              lit(null).as("max_key"), lit(null).cast("long").as("n_rows"),
-              col("bytes")).orderBy("file")
-        }
     }
   }
 
@@ -884,23 +846,9 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         // predicate selects — everything else carries untouched
         val whereSql = in.getUTF8String(3).toString.trim
         val st = keyedStore(t)
-        val tip = st.versions().max
-        lazy val where = org.apache.spark.sql.functions.expr(whereSql)
-        st match {
-          case _ if whereSql.nonEmpty =>
-            val before = st.dataPaths(tip).size
-            val (kept, rewritten) = st.compactWhere(tip, tip + 1, where, minBytes, targetFiles)
-            Array(utf8(st.layout), tip + 1, before.toLong, (kept + rewritten).toLong)
-          case m: ManifestStore =>
-            val before = m.manifest(tip).count()
-            val (kept, rewritten) = m.compact(tip, tip + 1, minBytes, targetFiles)
-            Array(utf8(st.layout), tip + 1, before, (kept + rewritten).toLong)
-          case s: SnapshotStore =>
-            val bytes = s.stats(tip)._3
-            val targetBytes = math.max(1L, (bytes + targetFiles - 1) / targetFiles)
-            val (before, after) = s.compact(tip, targetBytes)
-            Array(utf8(st.layout), tip, before.toLong, after.toLong)
-        }
+        val (version, before, after) = st.compactTip(targetFiles, minBytes,
+          Some(whereSql).filter(_.nonEmpty).map(org.apache.spark.sql.functions.expr))
+        Array(utf8(st.layout), version, before.toLong, after.toLong)
       }
       case "drop_partitions" => bound("drop_partitions",
         Array(tableParam,
@@ -1031,24 +979,10 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         StructType(Seq(StructField("layout", StringType),
           StructField("reclaimed", LongType), StructField("unit", StringType)))) { in =>
         val st = storeFor(tableIdentOf(in.getUTF8String(0).toString))
-        val ttlMs = in.getInt(1).toLong * 3600L * 1000L
-        val dry = in.getBoolean(2)
-        st match {
-          case m: ManifestStore =>
-            // dry run: the ref-count audit's answer WITHOUT deleting —
-            // what an operator runs before trusting a retention policy
-            val bytes =
-              if (dry) m.orphans().agg(org.apache.spark.sql.functions
-                  .coalesce(org.apache.spark.sql.functions.sum("bytes"),
-                    org.apache.spark.sql.functions.lit(0L)))
-                .head().getLong(0)
-              else m.vacuum(ttlMs)
-            Array(utf8(st.layout), bytes, utf8(if (dry) "bytes_dry" else "bytes"))
-          case s: SnapshotStore =>
-            val n = if (dry) s.vacuumDryRun(ttlMs).size.toLong
-              else s.vacuum(ttlMs).size.toLong
-            Array(utf8(st.layout), n, utf8(if (dry) "paths_dry" else "paths"))
-        }
+        // dry run: the sweep's answer WITHOUT deleting — what an
+        // operator runs before trusting a retention policy
+        val (n, unit) = st.vacuumReport(in.getInt(1).toLong * 3600L * 1000L, in.getBoolean(2))
+        Array(utf8(st.layout), n, utf8(unit))
       }
       case "retention" => bound("retention",
         Array(tableParam, ProcedureParameter.in("keep_last", IntegerType).build()),

@@ -62,4 +62,24 @@ class BloomIndexSpec extends SparkSpec {
     assert(df2.select("k").collect().map(_.getLong(0)).toSet == want - victim,
       "a DV-masked row must not resurrect through a bloom lookup")
   }
+
+  test("both layouts: a value a fill default supplies is found through the index") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bl-fill").toString
+    val base = (1L to 40L).map(k => (k, k * 2.0)).toDF("k", "x")
+    val (l, s) = (new ManifestStore(spark, s"$root/linked", "k"),
+      new SnapshotStore(spark, s"$root/snap", "k"))
+    for (st <- Seq(l, s)) {
+      st.writeZOrdered(base, 1L, 4, Seq("x"))
+      // the carried files predate `c`: every one of their rows reads the fill
+      st.mergeDelta(1L, 2L, Seq((41L, 82.0, "Y")).toDF("k", "x", "c"), fill = Map("c" -> "X"))
+    }
+    l.buildBloomIndex(2L, "c")
+    s.buildBloomIndex(2L, "c")
+    for (st <- Seq(l, s)) {
+      val (filled, opened) = st.readWhereEquals(2L, "c", "X")
+      assert(filled.count() == 40L, s"${st.layout}: fill rows missed, opened $opened")
+      assert(st.readWhereEquals(2L, "c", "Y")._1.select("k").as[Long].collect().toSeq ==
+        Seq(41L), st.layout)
+    }
+  }
 }

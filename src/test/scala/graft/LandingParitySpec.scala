@@ -114,6 +114,38 @@ class LandingParitySpec extends SparkSpec {
     assert(l.read(1L).count() == 0L && s.read(1L).count() == 0L)
   }
 
+  test("createEmpty lands no data file on either layout; later commits hold equal file counts") {
+    val (l, s) = pair("empty-files")
+    Seq(l, s).foreach { st =>
+      st.createEmpty(rows(1 to 1, "a").schema)
+      st.mergeDelta(1L, 2L, rows(1 to 30, "b")): Unit
+      st.mergeDelta(2L, 3L, rows(31 to 31, "c")): Unit
+    }
+    for (v <- 1L to 3L) {
+      assert(l.dataPaths(v).size == s.dataPaths(v).size,
+        s"v$v: linked ${l.dataPaths(v)} vs snapshot ${s.dataPaths(v)}")
+      def nFiles(st: VersionedStore) =
+        st.history().filter(col("version") === v).select("n_files").head().getLong(0)
+      assert(nFiles(l) == nFiles(s), s"v$v: history n_files differ")
+    }
+    assert(s.dataPaths(1L).isEmpty)
+    // the zero-file version still reads as an empty frame of its
+    // schema, through the store and through SQL
+    val root = new java.io.File(s.basePath).getParent
+    val cat = s"lpempty${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[org.apache.spark.sql.graft.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    for (st <- Seq[VersionedStore](l, s)) {
+      assert(st.read(1L).count() == 0L &&
+        st.read(1L).columns.toSeq == rows(1 to 1, "a").columns.toSeq)
+      val t = new java.io.File(st.basePath).getName
+      val sql = spark.sql(s"SELECT * FROM $cat.$t VERSION AS OF 1")
+      assert(sql.count() == 0L && sql.columns.toSeq == rows(1 to 1, "a").columns.toSeq, t)
+      assert(spark.sql(s"SELECT * FROM $cat.$t").count() == 31L, t)
+    }
+  }
+
   /** A partitioned v1 whose `cat` is null on every 10th key. */
   private def withNulls(ks: Range, tag: String): DataFrame =
     rows(ks, tag).withColumn("cat", when(col("k") % 10 === 0, lit(null).cast(StringType))
